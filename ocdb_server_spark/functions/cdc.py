@@ -1,6 +1,6 @@
 """CDC apply-changes: merge a keyed change feed into a base snapshot.
 
-The library form of op264 (operators/pipeline_r12.py) — the MERGE INTO /
+The library form of op264 (operators/lakehouse.py) — the MERGE INTO /
 APPLY CHANGES INTO semantics of a lakehouse upsert sink, exposed as a
 reusable DataFrame combinator so a pipeline can merge ANY feed into ANY
 snapshot, not just the registered op's tables:

@@ -3,7 +3,7 @@
 Everything here is a pure JVM expression over a text/tokens column —
 no Python UDFs, no shuffles — so each runs inside whole-stage codegen
 at scan speed. Shuffling ops built on these (near-dup joins etc.) live
-in operators/pipeline_ext.py.
+in operators/dedup.py.
 """
 
 from __future__ import annotations

@@ -1,4 +1,5 @@
-"""Projection / filter / predicates — SURVEY.md §2.2 (op06–op15).
+"""Projection / filter / predicates — SURVEY.md §2.2 (op06–op15), and
+the full `find_datasets` search surface with GeoJSON output (op267).
 
 These re-express the reference's query language: the Lucene-like AST
 (`ocdb/core/query/query.py` [U]: PhraseQuery, FieldValueQuery,
@@ -18,7 +19,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ocdb_server_spark.io import load_table
+from ocdb_server_spark.plans.expr_compiler import compile_expr
 from ocdb_server_spark.registry import register
+from ocdb_server_spark.search import (
+    DatasetQuery,
+    SearchColumns,
+    _keyset_after,
+    _predicate,
+    find_datasets,
+)
 
 
 @register(
@@ -205,3 +214,78 @@ def op15_filter_time_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         >= F.lit("1996-01-01 00:00:00").cast("timestamp")
     )
     return o.filter(cond).select("o_orderkey", "o_orderdate")
+
+
+_OP267_SQL = """
+WITH c AS (
+  SELECT c_custkey,
+         c_mktsegment,
+         c_custkey % 360 - 180 AS x,
+         (c_custkey * 7) % 180 - 90 AS y
+  FROM customer
+),
+hits AS (
+  SELECT * FROM c
+  WHERE c_mktsegment = 'BUILDING'
+    AND x BETWEEN -120 AND 120
+    AND y BETWEEN -60 AND 60
+)
+SELECT c_custkey, c_mktsegment, x, y,
+       CAST(json_object('type', 'Point',
+                        'coordinates', json_array(x, y)) AS VARCHAR)
+         AS geojson,
+       CAST((SELECT COUNT(*) FROM hits) AS BIGINT) AS total_count
+FROM hits
+ORDER BY c_custkey
+LIMIT 50
+"""
+
+
+@register(
+    "op267_find_datasets_geojson",
+    oracle=_OP267_SQL,
+    # the registered plan IS the serving surface: the request compiler,
+    # the predicate composer, the cursor builder and the page+geojson
+    # assembly all live in search.py / plans.expr_compiler — a rewrite
+    # there must re-front this op exactly like an oracle edit.
+    deps=(find_datasets, _predicate, _keyset_after, compile_expr),
+)
+def op267_find_datasets_geojson(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """GET /datasets?geojson=true, end to end (ref: find_datasets [U]
+    attaching per-dataset lon/lat points — SURVEY.md §3.1 step 7):
+    customer rows with derived integer lon/lat, queried through the
+    REAL serving entry point — a Lucene-ish expr (exact segment
+    equality), a bbox region, deterministic order_key paging — with
+    geojson=True adding each hit's `{"type":"Point","coordinates":
+    [x,y]}` string, and the envelope's total_count stamped on every
+    page row. The DuckDB oracle restates the whole request INCLUDING
+    the JSON serialization (json_object/json_array produce the same
+    compact, insertion-ordered text to_json emits), so the hash gate
+    certifies the result's bytes, not just the filtered row set.
+
+    100 TB shape: the expr+bbox predicate compiles into ONE Catalyst
+    conjunction pushed to the parquet scan (test_pipeline_r14 asserts
+    PushedFilters carries all three columns); total_count is one
+    partial-agg count over the pushed-predicate scan; the page plans
+    as TakeOrderedAndProject (partial top-50 per partition — no global
+    sort materializes) and the GeoJSON string is built by to_json
+    INSIDE whole-stage codegen on the 50 surviving rows — serialization
+    cost scales with the page, never the corpus. Keyset-cursor paging
+    (q.after) composes unchanged for deep pagination."""
+    c = load_table(spark, sf_dir, "customer").select(
+        "c_custkey",
+        "c_mktsegment",
+        (F.col("c_custkey") % 360 - 180).alias("x"),
+        ((F.col("c_custkey") * 7) % 180 - 90).alias("y"),
+    )
+    cols = SearchColumns(x="x", y="y", order_key="c_custkey")
+    q = DatasetQuery(
+        expr="c_mktsegment:BUILDING",
+        region=(-120, -60, 120, 60),
+        count=50,
+        geojson=True,
+    )
+    res = find_datasets(c, q, cols)
+    return res.datasets.withColumn(
+        "total_count", F.lit(res.total_count).cast("bigint")
+    )

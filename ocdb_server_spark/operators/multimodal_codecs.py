@@ -1,4 +1,5 @@
-"""op195–op200 — REAL multimodal decode + DSP, hash-certified.
+"""Multimodal decode + DSP, hash-certified: op195–op205, op222, op251,
+and the multimodal payload ops op104/op130 they build on.
 
 These ops retire the "decode kernel is stubbed" caveat for the
 two classic uncompressed formats: standards-conformant PCM WAV and
@@ -31,14 +32,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from ocdb_server_spark.registry import register
 
-# Codec KERNELS declared as register deps (round-14, the last
-# invisible-rewrite hole the r12 fingerprint machinery left): each
-# op's certification is built on these parsers, so a kernel rewrite
-# must re-front the op in the driver sweep exactly as an oracle edit
-# does. Whole modules are declared — any edit to the kernel file
-# demotes every op built on it (deps fold inspect.getsource, which
-# accepts modules).
+# Codec KERNELS declared as register deps: each op's certification is
+# built on these parsers, so a kernel rewrite must re-front the op in
+# the driver sweep exactly as an oracle edit does. Whole modules are
+# declared — any edit to the kernel file demotes every op built on it
+# (deps fold inspect.getsource, which accepts modules).
 from ocdb_server_spark.sources import codecs as _codecs_kernel
+from ocdb_server_spark.sources import flac as _flac_kernel
 from ocdb_server_spark.sources import gif as _gif_kernel
 from ocdb_server_spark.sources import jpeg as _jpeg_kernel
 from ocdb_server_spark.sources import png as _png_kernel
@@ -938,4 +938,377 @@ def op222_gif_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         _decode_gif_stats,
         "asset_id long, width long, height long, pixel_sum long,"
         " min_px long, max_px long",
+    )
+
+
+# --------------------------------------------------------------------------
+# op251: FLAC decode features — lossless compressed audio, closed-form oracle
+# --------------------------------------------------------------------------
+
+_FLAC_N = 120
+_FLAC_RATE = 8000
+# signal: v(i, k, c) = ((i*17 + k*13 + c*29) % 1601) - 800 for channel
+# c, n = 300 + (i%4)*150 per channel (int16-safe; sawtooth-ish so
+# predictors genuinely compress). Assets with i%4==3 are STEREO
+# (channels 0/1), the rest mono; the encoder path varies per asset —
+# predictor lpc/fixed by i%3 (i%3==0 spans both parities, so STEREO
+# assets get LPC too: each of the four stereo layouts pairs with LPC
+# somewhere in the corpus — i=3,51,99 independent, 39,87 left/side,
+# 27,75 right/side, 15,63,111 mid/side), stereo decorrelation mode
+# cycling through all four layouts by i//4 — so the oracle hash
+# certifies every subframe and channel-reconstruction path the
+# decoder has, including LPC on the 17-bit side channel.
+
+_OP251_SQL = f"""
+WITH a AS (SELECT range AS i FROM range(0, {_FLAC_N})),
+ch AS (
+  SELECT a.i, c.c
+  FROM a, UNNEST(range(0, 1 + CASE WHEN a.i % 4 = 3 THEN 1 ELSE 0 END)) c(c)
+),
+s AS (
+  SELECT ch.i, ch.c, u.k,
+         ((ch.i * 17 + u.k * 13 + ch.c * 29) % 1601) - 800 AS v
+  FROM ch, UNNEST(range(0, 300 + (ch.i % 4) * 150)) AS u(k)
+)
+SELECT CAST(i AS BIGINT) AS asset_id,
+       CAST({_FLAC_RATE} AS BIGINT) AS sample_rate,
+       CAST(MAX(c) + 1 AS BIGINT) AS channels,
+       CAST(COUNT(*) AS BIGINT) AS n_samples,
+       CAST((300 + (i % 4) * 150) * 1000 // {_FLAC_RATE} AS BIGINT)
+         AS duration_ms,
+       CAST(SUM(v * v) AS BIGINT) AS sum_sq,
+       CAST(MAX(ABS(v)) AS BIGINT) AS peak,
+       CAST(MIN(CASE WHEN c = 0 AND k = 0 THEN v END) AS BIGINT) AS first_s,
+       CAST(MIN(CASE WHEN c = CASE WHEN i % 4 = 3 THEN 1 ELSE 0 END
+                     AND k = 300 + (i % 4) * 150 - 1 THEN v END) AS BIGINT)
+         AS last_s
+FROM s GROUP BY i
+"""
+
+_FLAC_MODES = ("independent", "left_side", "right_side", "mid_side")
+
+
+def _gen_flac(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    import numpy as np
+
+    from ocdb_server_spark.sources.flac import encode_flac
+
+    for pdf in it:
+        ids, payloads = [], []
+        for i in pdf["id"]:
+            i = int(i)
+            n = 300 + (i % 4) * 150
+            k = np.arange(n, dtype=np.int64)
+            chans = [((i * 17 + k * 13 + c * 29) % 1601 - 800)
+                     for c in range(1 + (i % 4 == 3))]
+            if len(chans) == 2:
+                s = np.stack(chans, axis=1).astype(np.int16)
+            else:
+                s = chans[0].astype(np.int16)
+            ids.append(i)
+            payloads.append(encode_flac(
+                s, _FLAC_RATE, blocksize=256,
+                predictor="lpc" if i % 3 == 0 else "fixed",
+                stereo_mode=_FLAC_MODES[(i // 4) % 4],
+            ))
+        yield pd.DataFrame({"asset_id": ids, "payload": payloads})
+
+
+def _decode_flac_features(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    import numpy as np
+
+    from ocdb_server_spark.sources.flac import decode_flac
+
+    for pdf in it:
+        out = {k: [] for k in
+               ("asset_id", "sample_rate", "channels", "n_samples",
+                "duration_ms", "sum_sq", "peak", "first_s", "last_s")}
+        for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
+            rate, s = decode_flac(bytes(payload))
+            # interleaved flatten: mono is identity; stereo gives
+            # L0 R0 L1 R1 ... so first = left[0], last = right[-1]
+            s64 = np.asarray(s, dtype=np.int64).reshape(-1)
+            n_per_ch = s.shape[0]
+            out["asset_id"].append(int(aid))
+            out["sample_rate"].append(rate)
+            out["channels"].append(1 if s.ndim == 1 else s.shape[1])
+            out["n_samples"].append(s64.size)
+            out["duration_ms"].append(n_per_ch * 1000 // rate)
+            out["sum_sq"].append(int(np.sum(s64 * s64)))
+            out["peak"].append(int(np.max(np.abs(s64))))
+            out["first_s"].append(int(s64[0]))
+            out["last_s"].append(int(s64[-1]))
+        yield pd.DataFrame(out)
+
+
+@register(
+    "op251_flac_decode_features",
+    oracle=_OP251_SQL,
+    # certification rides the FLAC kernel: a rewrite of the parser
+    # must re-front this op (round-14 — codec kernels as deps)
+    deps=(_gen_flac, _decode_flac_features, _flac_kernel),
+)
+def op251_flac_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """FLAC audio decode, for real — the compressed-audio gap closed:
+    120 conformant 16-bit FLAC streams (90 mono + 30 STEREO,
+    multi-frame) are encoded from a closed-form integer formula and
+    then DECODED by sources/flac.py's spec parser — CRC-8/CRC-16
+    verified per frame and the STREAMINFO MD5 recomputed over the
+    decoded (interleaved) samples, so every asset that reaches the
+    feature row is bit-certified lossless by the format's own
+    integrity machinery.
+
+    The corpus deliberately spans the decoder's whole surface: the
+    encoder alternates LPC (Levinson-Durbin, quantized-coefficient
+    integer prediction) and FIXED predictors per asset, Rice partition
+    orders 0/1 per frame, keeps the raw-escape path reachable, and
+    cycles the stereo assets through all four channel layouts
+    (independent, left/side, right/side, mid/side — the side channel's
+    17th bit included), so the oracle hash certifies every subframe
+    type and channel-reconstruction rule, not just one happy path.
+
+    The oracle recomputes channels / n_samples / duration / energy /
+    peak / first / last from the generation formula alone (op205's
+    closed-form pattern: for a LOSSLESS codec the decode output is
+    exactly the generation formula, so a hash match certifies the
+    whole encode→Rice-bits→decode path, not the plumbing).
+
+    Scale shape: generation and decode are both mapInPandas stages —
+    payload bytes live and die inside one task (never shuffled); only
+    fixed-width integer feature rows continue (op195's contract).
+    sf_dir unused: self-generated corpus (op152's stance)."""
+    gen = spark.range(_FLAC_N).repartition(8).mapInPandas(
+        _gen_flac, "asset_id long, payload binary"
+    )
+    return gen.mapInPandas(
+        _decode_flac_features,
+        "asset_id long, sample_rate long, channels long, n_samples long,"
+        " duration_ms long, sum_sq long, peak long, first_s long, last_s long",
+    )
+
+
+# op104 corpus: 40 PNG images + 40 FLAC clips, all from closed-form
+# integer formulas, restated by the oracle without seeing a byte.
+_OP104_N = 40
+
+_OP104_SQL = f"""
+WITH img AS (SELECT range AS i,
+                    16 + (range % 5) * 8 AS w,
+                    12 + (range % 4) * 6 AS h
+             FROM range(0, {_OP104_N})),
+imgpx AS (SELECT img.i, img.w, img.h,
+                 (img.i * 13 + r.r * 7 + c.c * 3) % 256 AS v
+          FROM img, UNNEST(range(0, img.h)) r(r), UNNEST(range(0, img.w)) c(c)),
+imgrow AS (SELECT CAST(i AS BIGINT) AS asset_id,
+                  'image' AS modality,
+                  CAST(ANY_VALUE(w) AS BIGINT) AS dim_a,
+                  CAST(ANY_VALUE(h) AS BIGINT) AS dim_b,
+                  CAST(SUM(v) AS BIGINT) AS checksum
+           FROM imgpx GROUP BY i),
+aud AS (SELECT {_OP104_N} + range AS i,
+               200 + (({_OP104_N} + range) % 4) * 100 AS n
+        FROM range(0, {_OP104_N})),
+auds AS (SELECT aud.i, aud.n,
+                ((aud.i * 17 + k.k * 13) % 1601) - 800 AS v
+         FROM aud, UNNEST(range(0, aud.n)) k(k)),
+audrow AS (SELECT CAST(i AS BIGINT) AS asset_id,
+                  'audio' AS modality,
+                  CAST(ANY_VALUE(n) AS BIGINT) AS dim_a,
+                  CAST(8000 AS BIGINT) AS dim_b,
+                  CAST(SUM(v) AS BIGINT) AS checksum
+           FROM auds GROUP BY i)
+SELECT * FROM imgrow UNION ALL SELECT * FROM audrow
+"""
+
+
+@register(
+    "op104_multimodal_decode",
+    oracle=_OP104_SQL,
+    deps=(_flac_kernel, _png_kernel),
+)
+def op104_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multimodal binary-column pipeline end-to-end, on REAL codecs
+    (round-7 verdict item 3 — this op ran the stubbed kernel until six
+    real decoders existed): ONE asset table carries mixed modalities
+    in a single opaque `binary` column beside typed metadata
+    (modality, mime), and one Arrow-batched mapInPandas decode stage
+    DISPATCHES per payload — image/png through sources/png.py's chunk
+    walk + CRC32 + inflate + filter reconstruction, audio/flac through
+    sources/flac.py's frame parser + LPC/fixed predictors + CRC/MD5
+    verify — emitting one unified fixed-width feature row per asset
+    (dim_a/dim_b/checksum = width/height/pixel-sum for images,
+    n_samples/rate/sample-sum for audio). Both formats are lossless,
+    so the DuckDB oracle recomputes every feature from the generation
+    formulas without ever seeing a byte: the hash certifies the
+    dispatch AND both codecs end to end.
+
+    Scale shape: encode and decode live inside one mapInPandas task
+    each — payload bytes never shuffle, never hit the driver; only
+    80 fixed-width rows continue. At 100 TB the same plan reads a
+    (modality, date)-partitioned media lake where metadata-only
+    queries never touch the binary column."""
+    import pandas as pd
+
+    def gen_assets(it):
+        import numpy as np
+
+        from ocdb_server_spark.sources.flac import encode_flac
+        from ocdb_server_spark.sources.png import encode_png_gray
+
+        for pdf in it:
+            rows = []
+            for i in pdf["id"]:
+                i = int(i)
+                if i < _OP104_N:  # PNG image
+                    w, h = 16 + (i % 5) * 8, 12 + (i % 4) * 6
+                    r = np.arange(h, dtype=np.int64)[:, None]
+                    c = np.arange(w, dtype=np.int64)[None, :]
+                    px = ((i * 13 + r * 7 + c * 3) % 256).astype(np.uint8)
+                    rows.append((i, "image", "image/png", encode_png_gray(px)))
+                else:  # FLAC mono clip
+                    n = 200 + (i % 4) * 100
+                    k = np.arange(n, dtype=np.int64)
+                    s = ((i * 17 + k * 13) % 1601 - 800).astype(np.int16)
+                    rows.append((i, "audio", "audio/flac",
+                                 encode_flac(s, 8000, blocksize=256)))
+            yield pd.DataFrame(
+                rows, columns=["asset_id", "modality", "mime", "payload"]
+            )
+
+    def decode_dispatch(it):
+        import numpy as np
+
+        from ocdb_server_spark.sources.flac import decode_flac
+        from ocdb_server_spark.sources.png import decode_png_gray
+
+        for pdf in it:
+            out = {k: [] for k in
+                   ("asset_id", "modality", "dim_a", "dim_b", "checksum")}
+            for aid, modality, mime, payload in zip(
+                pdf["asset_id"], pdf["modality"], pdf["mime"], pdf["payload"]
+            ):
+                payload = bytes(payload)
+                if mime == "image/png":
+                    w, h, px = decode_png_gray(payload)
+                    a, b, chk = w, h, int(px.astype(np.int64).sum())
+                elif mime == "audio/flac":
+                    rate, s = decode_flac(payload)
+                    s64 = np.asarray(s, dtype=np.int64).reshape(-1)
+                    a, b, chk = s64.size, rate, int(s64.sum())
+                else:
+                    raise ValueError(f"undecodable mime {mime!r}")
+                out["asset_id"].append(int(aid))
+                out["modality"].append(str(modality))
+                out["dim_a"].append(a)
+                out["dim_b"].append(b)
+                out["checksum"].append(chk)
+            yield pd.DataFrame(out)
+
+    assets = spark.range(2 * _OP104_N).repartition(8).mapInPandas(
+        gen_assets,
+        "asset_id long, modality string, mime string, payload binary",
+    )
+    return assets.mapInPandas(
+        decode_dispatch,
+        "asset_id long, modality string, dim_a long, dim_b long,"
+        " checksum long",
+    )
+
+
+# op130 corpus: 24 animated GIFs, 2-8 full-size frames each, pixels
+# from a closed-form formula; the sampler keeps every 4th frame.
+_OP130_N = 24
+_OP130_EVERY = 4
+
+_OP130_SQL = f"""
+WITH a AS (SELECT range AS i,
+                  2 + (range % 7) AS nf,
+                  10 + (range % 5) * 4 AS w,
+                  8 + (range % 4) * 4 AS h
+           FROM range(0, {_OP130_N})),
+f AS (SELECT a.i, a.nf, a.w, a.h, k.k
+      FROM a, UNNEST(range(0, a.nf)) k(k)
+      WHERE k.k % {_OP130_EVERY} = 0),
+px AS (SELECT f.i, f.nf, f.k,
+              (f.i * 13 + f.k * 29 + r.r * 7 + c.c * 3) % 256 AS v
+       FROM f, UNNEST(range(0, f.h)) r(r), UNNEST(range(0, f.w)) c(c))
+SELECT CAST(i AS BIGINT) AS asset_id,
+       CAST(ANY_VALUE(nf) AS BIGINT) AS n_frames,
+       CAST(COUNT(DISTINCT k) AS BIGINT) AS n_sampled,
+       CAST(SUM(v) AS BIGINT) AS px_sum
+FROM px GROUP BY i
+"""
+
+
+@register(
+    "op130_multimodal_frame_sample",
+    oracle=_OP130_SQL,
+    deps=(_gif_kernel,),
+)
+def op130_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Video-style frame sampling on a REAL container (round-7 verdict
+    item 3 — synthetic payloads until the GIF codec existed): 24
+    multi-frame animated GIF89a streams (sources/gif.py
+    encode_gif_anim — NETSCAPE loop block, per-frame Graphic Control
+    Extensions, full LZW per frame) are decoded frame-by-frame and
+    SAMPLED — every 4th frame's exact pixel sum survives, the rest are
+    dropped inside the task. Output per asset: total frame count,
+    sampled count, summed sampled pixels. GIF is lossless, so the
+    DuckDB oracle regenerates the kept frames' pixels from the
+    closed-form formula — the hash certifies the multi-frame container
+    walk (extension skipping between frames included), the per-frame
+    LZW decode, AND the sampling arithmetic.
+
+    Scale shape: identical to op104 — payload bytes live and die
+    inside one mapInPandas task, only (asset_id, 3 counters) rows
+    continue; a production frame-sampler over H.264 swaps the codec
+    kernel, not the plan."""
+    import pandas as pd
+
+    def gen_gifs(it):
+        import numpy as np
+
+        from ocdb_server_spark.sources.gif import encode_gif_anim
+
+        for pdf in it:
+            ids, payloads = [], []
+            for i in pdf["id"]:
+                i = int(i)
+                nf = 2 + i % 7
+                w, h = 10 + (i % 5) * 4, 8 + (i % 4) * 4
+                r = np.arange(h, dtype=np.int64)[:, None]
+                c = np.arange(w, dtype=np.int64)[None, :]
+                frames = [
+                    ((i * 13 + k * 29 + r * 7 + c * 3) % 256).astype(np.uint8)
+                    for k in range(nf)
+                ]
+                ids.append(i)
+                payloads.append(encode_gif_anim(frames))
+            yield pd.DataFrame({"asset_id": ids, "payload": payloads})
+
+    def sample_frames(it):
+        import numpy as np
+
+        from ocdb_server_spark.sources.gif import decode_gif_frames
+
+        for pdf in it:
+            out = {k: [] for k in
+                   ("asset_id", "n_frames", "n_sampled", "px_sum")}
+            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
+                frames = decode_gif_frames(bytes(payload))
+                kept = frames[::_OP130_EVERY]
+                out["asset_id"].append(int(aid))
+                out["n_frames"].append(len(frames))
+                out["n_sampled"].append(len(kept))
+                out["px_sum"].append(
+                    int(sum(px.astype(np.int64).sum() for _w, _h, px in kept))
+                )
+            yield pd.DataFrame(out)
+
+    gifs = spark.range(_OP130_N).repartition(8).mapInPandas(
+        gen_gifs, "asset_id long, payload binary"
+    )
+    return gifs.mapInPandas(
+        sample_frames,
+        "asset_id long, n_frames long, n_sampled long, px_sum long",
     )

@@ -1,4 +1,7 @@
-"""Scans / sources / sinks — SURVEY.md §2.1 (op01–op05).
+"""Scans / sources / sinks — SURVEY.md §2.1 (op01–op05), and the file
+formats built on them: CSV, JSON lines, ORC, XML, Avro OCF, compressed
+and splittable ingest (gzip, bzip2, BGZF, seekable zstd) and Python
+data sources with filter pushdown.
 
 Reference analog: the MongoDB full-collection fetch with optional
 projection (`ocdb/db/mongo_db_driver.py::MongoDbDriver.find_datasets`
@@ -12,20 +15,26 @@ from __future__ import annotations
 
 import os
 import tempfile
+from collections.abc import Iterator
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ocdb_server_spark.io import load_table
 from ocdb_server_spark.registry import register
+from ocdb_server_spark.scratch import scratch_dir
 
-# Codec kernels declared as register deps (round-14, the last
-# invisible-rewrite hole): op03/op204 are certified through the
-# SeaBASS parser, op260 through the BGZF kernel and the shared
-# line-batching kernel it builds on (deps are shallow by design,
-# so the linebatch link is declared explicitly).
+# Codec kernels declared as register deps: each op is certified through
+# the parsers it runs (op03/op204/op258 through SeaBASS, op252/op258
+# through Avro OCF, op260 through BGZF, op261 through seekable zstd),
+# so a kernel rewrite re-fronts those ops in the driver sweep exactly
+# like an oracle edit. Deps are shallow by design, so the shared
+# line-batching kernel under BGZF and zstd is declared explicitly.
+from ocdb_server_spark.sources import avro_ocf as _avro_kernel
 from ocdb_server_spark.sources import bgzf as _bgzf_kernel
 from ocdb_server_spark.sources import linebatch as _linebatch_kernel
 from ocdb_server_spark.sources import seabass as _seabass_kernel
+from ocdb_server_spark.sources import zstd_seekable as _zstd_kernel
 
 
 @register(
@@ -893,3 +902,739 @@ def op260_bgzf_splittable_gzip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     assert len(manifest) == 1 and manifest[0].n_members > 1
     return bgzf_read_lang_agg(spark, [path])
+
+
+# --------------------------------------------------------------------------
+# op152: custom Python DataSource (Spark 4 connector extension point)
+# --------------------------------------------------------------------------
+
+# 2048 rows / 2 partitions: the sweep cost of this op is ~all Python
+# worker spin-up per partition (11.2 s at 8 parts in round 3 —
+# op_costs.json); the oracle is a closed-form formula, so ANY N proves
+# the connector. 2 partitions still exercises multi-partition planning.
+_SYNTH_ROWS = 2048
+_SYNTH_PARTS = 2
+
+_OP152_SQL = f"""
+SELECT CAST((i * 2654435761) % 10000 // 1000 AS BIGINT) AS bucket,
+       CAST(COUNT(*) AS BIGINT) AS n,
+       CAST(SUM((i * 2654435761) % 10000) AS BIGINT) AS checksum
+FROM range(0, {_SYNTH_ROWS}) t(i)
+GROUP BY bucket
+"""
+
+
+@register("op152_python_datasource", oracle=_OP152_SQL)
+def op152_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Custom connector via the Spark 4 Python DataSource API: a
+    deterministic synthetic-events source (`partitions()` → one task
+    per partition, `read()` → generator rows), registered and consumed
+    like any built-in format. This is the engine's extension point for
+    the reference's pluggable file readers — a new wire format becomes
+    a DataSource class, not a driver-side loop.
+
+    The stream is a Knuth multiplicative hash of the row id, so the
+    DuckDB oracle reproduces it from range() exactly. The aggregate
+    proves the rows flow through normal Catalyst plans (hash agg with
+    partials over the Python scan)."""
+    from ocdb_server_spark.sources import pyds
+
+    pyds.register(spark)
+    src = (
+        spark.read.format("synth_events")
+        .option("rows", _SYNTH_ROWS)
+        .option("partitions", _SYNTH_PARTS)
+        .load()
+    )
+    return src.groupBy(
+        (F.col("hval") / 1000).cast("bigint").alias("bucket")
+    ).agg(
+        F.count("*").alias("n"),
+        F.sum("hval").alias("checksum"),
+    )
+
+
+# --------------------------------------------------------------------------
+# op236: python-datasource FILTER PUSHDOWN — predicate → partition pruning
+# --------------------------------------------------------------------------
+
+_PDS_ROWS = 2048
+_PDS_PARTS = 8
+_PDS_LO, _PDS_HI = 600, 1500  # pushed range: prunes 8 chunks down to 4
+
+_OP236_SQL = f"""
+SELECT CAST((i * 2654435761) % 10000 // 1000 AS BIGINT) AS bucket,
+       CAST(COUNT(*) AS BIGINT) AS n,
+       CAST(SUM((i * 2654435761) % 10000) AS BIGINT) AS checksum,
+       CAST(MIN(i) AS BIGINT) AS min_id,
+       CAST(MAX(i) AS BIGINT) AS max_id
+FROM range(0, {_PDS_ROWS}) t(i)
+WHERE i >= {_PDS_LO} AND i < {_PDS_HI}
+GROUP BY bucket
+"""
+
+
+@register("op236_pyds_filter_pushdown", oracle=_OP236_SQL)
+def op236_pyds_filter_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """FILTER PUSHDOWN through the Python DataSource API (Spark 4.1's
+    `pushFilters` — op152's connector upgraded from "rows flow" to
+    "predicates flow"): range predicates on `id` are absorbed by the
+    reader and become PARTITION PRUNING — `partitions()` emits only
+    chunks overlapping [lo, hi), so the filtered scan schedules 4 of
+    8 tasks and never generates the pruned rows (asserted by task
+    count in tests/test_pipeline_r6.py). Unsupported filters are
+    yielded back per the API's remainder contract, so absorbing can
+    narrow but never change results — the oracle applies the SAME
+    predicate to the closed-form stream and must hash-match.
+
+    Conf hygiene (op182's rule): the gate
+    `spark.sql.python.filterPushdown.enabled` is flipped on only for
+    this plan's construction and restored after."""
+    from ocdb_server_spark.sources import pyds
+
+    prev = spark.conf.get("spark.sql.python.filterPushdown.enabled", None)
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    try:
+        pyds.register_pushdown(spark)
+        src = (
+            spark.read.format("synth_events_pushdown")
+            .option("rows", _PDS_ROWS)
+            .option("partitions", _PDS_PARTS)
+            .load()
+            .filter((F.col("id") >= _PDS_LO) & (F.col("id") < _PDS_HI))
+        )
+        out = src.groupBy(
+            (F.col("hval") / 1000).cast("bigint").alias("bucket")
+        ).agg(
+            F.count("*").cast("bigint").alias("n"),
+            F.sum("hval").cast("bigint").alias("checksum"),
+            F.min("id").cast("bigint").alias("min_id"),
+            F.max("id").cast("bigint").alias("max_id"),
+        )
+        # materialize the plan while the gate is on (construction is
+        # what consults the conf; the driver may execute later)
+        out = out.localCheckpoint(eager=True)
+    finally:
+        if prev is None:
+            spark.conf.unset("spark.sql.python.filterPushdown.enabled")
+        else:
+            spark.conf.set("spark.sql.python.filterPushdown.enabled", prev)
+    return out
+
+
+# --------------------------------------------------------------------------
+# op252: Avro OCF source/sink round-trip with schema evolution
+# --------------------------------------------------------------------------
+
+_AVRO_WRITER_SCHEMA = {
+    "type": "record",
+    "name": "Document",
+    "fields": [
+        {"name": "doc_id", "type": "long"},
+        {"name": "text", "type": "string"},
+        {"name": "meta", "type": {
+            "type": "record", "name": "DocMeta",
+            "fields": [
+                {"name": "lang", "type": "string"},
+                {"name": "source", "type": "string"},
+            ]}},
+        {"name": "n_chars", "type": "long"},
+        # derived columns exercising every complex encoding:
+        # tokens = [n_chars, n_chars%97, doc_id%31] as Avro INTs
+        {"name": "tokens", "type": {"type": "array", "items": "int"}},
+        # attrs = {"n2": 2*n_chars+1}
+        {"name": "attrs", "type": {"type": "map", "values": "long"}},
+        # null when doc_id%5==0 else 2*n_chars (a real 3-branch union)
+        {"name": "maybe_score", "type": ["null", "long", "string"]},
+    ],
+}
+# evolved reader — every spec resolution rule, including RECURSIVELY
+# inside the nested record: top-level fields reordered; nested
+# writer-only 'source' dropped; nested reader-only 'quality'
+# defaulted; array items promoted int→long; the union re-read as the
+# same 3-branch union
+_AVRO_READER_SCHEMA = {
+    "type": "record",
+    "name": "Document",
+    "fields": [
+        {"name": "tokens", "type": {"type": "array", "items": "long"}},
+        {"name": "meta", "type": {
+            "type": "record", "name": "DocMeta",
+            "fields": [
+                {"name": "quality", "type": "long", "default": -1},
+                {"name": "lang", "type": "string"},
+            ]}},
+        {"name": "doc_id", "type": "long"},
+        {"name": "attrs", "type": {"type": "map", "values": "long"}},
+        {"name": "maybe_score", "type": ["null", "long", "string"]},
+        {"name": "n_chars", "type": "long"},
+        {"name": "text", "type": "string"},
+    ],
+}
+
+_OP252_SQL = """
+SELECT lang,
+       CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(SUM(doc_id) AS BIGINT) AS sum_doc_id,
+       CAST(SUM(n_chars) AS BIGINT) AS sum_n_chars,
+       CAST(SUM(LENGTH(text)) AS BIGINT) AS sum_text_chars,
+       CAST(SUM(n_chars + n_chars % 97 + doc_id % 31) AS BIGINT)
+         AS sum_tokens,
+       CAST(SUM(2 * n_chars + 1) AS BIGINT) AS sum_attr_n2,
+       CAST(SUM(CASE WHEN doc_id % 5 = 0 THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_null_scores,
+       CAST(SUM(CASE WHEN doc_id % 5 <> 0 THEN 2 * n_chars ELSE 0 END)
+         AS BIGINT) AS sum_scores,
+       CAST(SUM(-1) AS BIGINT) AS sum_quality
+FROM documents
+GROUP BY lang
+"""
+
+
+def _avro_write_parts(out_dir: str):
+    def write(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from pyspark import TaskContext
+
+        from ocdb_server_spark.sources.avro_ocf import write_ocf
+
+        pid = TaskContext.get().partitionId()
+        rows = []
+        for pdf in it:
+            for r in pdf.to_dict("records"):
+                did, nch = int(r["doc_id"]), int(r["n_chars"])
+                rows.append({
+                    "doc_id": did,
+                    "text": r["text"],
+                    "meta": {"lang": r["lang"], "source": r["source"]},
+                    "n_chars": nch,
+                    "tokens": [nch, nch % 97, did % 31],
+                    "attrs": {"n2": 2 * nch + 1},
+                    "maybe_score": None if did % 5 == 0 else 2 * nch,
+                })
+        # codec alternates per partition so every run exercises both
+        # the null and the deflate block path
+        codec = "deflate" if pid % 2 else "null"
+        path = os.path.join(out_dir, f"part-{pid:05d}.avro")
+        tmp = path + ".tmp"
+        with open(tmp, "wb") as f:
+            f.write(write_ocf(_AVRO_WRITER_SCHEMA, rows, codec=codec,
+                              rows_per_block=500))
+        os.replace(tmp, path)  # atomic publish (op03's fixture rule)
+        yield pd.DataFrame({"path": [path], "n_rows": [len(rows)]})
+
+    return write
+
+
+def _avro_read_parts(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    from ocdb_server_spark.sources.avro_ocf import read_ocf
+
+    for pdf in it:
+        for content in pdf["content"]:
+            rows = read_ocf(bytes(content), reader_schema=_AVRO_READER_SCHEMA)
+            # flatten the reader-shaped values into feature columns:
+            # nested record access (incl. the nested default), array
+            # sum over promoted longs, map lookup, union branch check
+            yield pd.DataFrame({
+                "lang": [r["meta"]["lang"] for r in rows],
+                "doc_id": [r["doc_id"] for r in rows],
+                "quality": [r["meta"]["quality"] for r in rows],
+                "n_chars": [r["n_chars"] for r in rows],
+                "text_chars": [len(r["text"]) for r in rows],
+                "tok_sum": [sum(r["tokens"]) for r in rows],
+                "attr_n2": [r["attrs"]["n2"] for r in rows],
+                "score_is_null": [r["maybe_score"] is None for r in rows],
+                "score": [r["maybe_score"] or 0 for r in rows],
+            })
+
+
+@register(
+    "op252_avro_roundtrip",
+    oracle=_OP252_SQL,
+    deps=(_avro_write_parts, _avro_read_parts, _avro_kernel),
+)
+def op252_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """AVRO Object Container File round-trip with SCHEMA EVOLUTION —
+    the interchange-format gap (round-6 verdict item 5) closed in
+    pure Python: documents is exported executor-side as one OCF file
+    per partition (codec alternating null/deflate so both block paths
+    run), with the full COMPLEX-TYPE surface in the writer schema — a
+    NESTED record (meta{lang,source}), an array<int> of derived token
+    counts, a map<string,long>, and a genuine 3-branch union
+    [null,long,string] — then re-read through the binaryFile source +
+    the spec's schema-resolution rules with an EVOLVED reader schema:
+    top-level fields reordered, the nested writer-only 'meta.source'
+    skipped, the nested reader-only 'meta.quality' defaulted to -1
+    (resolution applied RECURSIVELY inside the record), and the array
+    items promoted int→long. The per-lang aggregate over the re-read
+    frame (sum_quality = -n_docs proves the nested default fired on
+    every row; sum_tokens/sum_attr_n2/n_null_scores/sum_scores prove
+    array, map, and union values survived byte-exact) must hash-match
+    the oracle computed on the ORIGINAL parquet — value fidelity
+    through encode→OCF bytes→resolve→decode.
+
+    Two-way interop with the JVM avro-1.12 library on Spark's own
+    classpath (DataFileReader reads our bytes; our reader parses
+    DataFileWriter's) is pinned in tests/test_codecs.py.
+
+    Scale shape: encode and decode are mapInPandas stages — payload
+    bytes live and die inside one task; the shuffle after decode
+    carries (lang, counters) only. One file per partition is exactly
+    gzip-JSONL's parallelism story (op207): per-file work
+    parallelizes across files; a production writer streams blocks
+    instead of buffering the partition. The tiny ≤8-row manifest
+    collect() forces the write before the read plan is returned —
+    bounded, same class as sinks.py:38."""
+    # Per-process dir (concurrent sessions must not unlink files
+    # another session's lazy binaryFile plan is about to read) with
+    # dead-PID reaping so repeated runs don't accumulate table copies
+    # in /tmp — both halves of the policy live in scratch.scratch_dir.
+    out_dir = scratch_dir("avro_docs", sf_dir)
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", "lang", "source", "n_chars"
+    )
+    manifest = (
+        docs.repartition(8)
+        .mapInPandas(_avro_write_parts(out_dir), "path string, n_rows long")
+        .collect()
+    )
+    assert sum(r.n_rows for r in manifest) > 0
+    back = (
+        spark.read.format("binaryFile")
+        .load(out_dir)
+        .select("content")
+        .mapInPandas(
+            _avro_read_parts,
+            "lang string, doc_id long, quality long, n_chars long,"
+            " text_chars long, tok_sum long, attr_n2 long,"
+            " score_is_null boolean, score long",
+        )
+    )
+    return back.groupBy("lang").agg(
+        F.count("*").cast("bigint").alias("n_docs"),
+        F.sum("doc_id").cast("bigint").alias("sum_doc_id"),
+        F.sum("n_chars").cast("bigint").alias("sum_n_chars"),
+        F.sum("text_chars").cast("bigint").alias("sum_text_chars"),
+        F.sum("tok_sum").cast("bigint").alias("sum_tokens"),
+        F.sum("attr_n2").cast("bigint").alias("sum_attr_n2"),
+        F.sum(F.col("score_is_null").cast("bigint")).cast("bigint")
+         .alias("n_null_scores"),
+        F.sum("score").cast("bigint").alias("sum_scores"),
+        F.sum("quality").cast("bigint").alias("sum_quality"),
+    )
+
+
+# --------------------------------------------------------------------------
+# op258: Avro OCF sink pairing for the open-schema records table
+# --------------------------------------------------------------------------
+
+# The obs VALUES are the same hand transcription of the three SeaBASS
+# fixtures that certifies op204 (operators/scans.py::_OP204_SQL) —
+# re-aggregated without the group dim: the sink pairing certifies the
+# TRANSPORT (long records → OCF bytes → back), not the resolution.
+_OP258_SQL = """
+WITH obs(dataset_id, field, value) AS (VALUES
+  ('ds1','depth',1.0),('ds1','chl',0.52),('ds1','wt',12.3),('ds1','sal',35.1),
+  ('ds1','depth',2.5),('ds1','wt',12.1),('ds1','sal',35.0),
+  ('ds1','depth',5.0),('ds1','chl',0.31),('ds1','sal',34.9),
+  ('ds1','depth',7.5),('ds1','chl',0.22),('ds1','wt',11.8),
+  ('ds1','depth',10.0),('ds1','wt',11.5),('ds1','sal',34.7),
+  ('ds2','depth',1.0),('ds2','lu412',1.11),('ds2','lu443',2.22),('ds2','es412',3.33),
+  ('ds2','depth',5.0),('ds2','lu443',2.10),('ds2','es412',3.20),
+  ('ds2','depth',10.0),('ds2','lu412',0.95),('ds2','lu443',1.98),
+  ('ds2','depth',20.0),('ds2','lu412',0.80),('ds2','es412',3.05),
+  ('ds3','depth',2.0),('ds3','chl',0.50),('ds3','kd490',0.061),('ds3','sal',35.2),
+  ('ds3','depth',4.0),('ds3','kd490',0.055),('ds3','sal',35.1),
+  ('ds3','depth',8.0),('ds3','chl',0.42),('ds3','sal',35.0)
+)
+SELECT dataset_id, field,
+       CAST(COUNT(*) AS BIGINT) AS n_obs,
+       CAST(SUM(CAST(ROUND(value * 1000) AS BIGINT)) AS BIGINT) AS sum_q
+FROM obs
+GROUP BY dataset_id, field
+"""
+
+_OBS_AVRO_SCHEMA = {
+    "type": "record",
+    "name": "Obs",
+    "fields": [
+        {"name": "dataset_id", "type": "string"},
+        {"name": "field", "type": "string"},
+        {"name": "value", "type": "double"},
+    ],
+}
+
+
+def _obs_avro_write(out_dir: str):
+    def write(it):
+        import pandas as pd
+        from pyspark import TaskContext
+
+        from ocdb_server_spark.sources.avro_ocf import write_ocf
+
+        pid = TaskContext.get().partitionId()
+        rows = []
+        for pdf in it:
+            for r in pdf.to_dict("records"):
+                rows.append(
+                    {
+                        "dataset_id": r["dataset_id"],
+                        "field": r["field"],
+                        "value": float(r["value"]),
+                    }
+                )
+        if not rows:  # empty partition: no file, not an empty OCF
+            return
+        codec = "deflate" if pid % 2 else "null"
+        path = os.path.join(out_dir, f"obs-{pid:05d}.avro")
+        # PID-discriminated tmp name: a speculative/zombie first
+        # attempt writing the same partition must not interleave
+        # bytes with the retry's stream (same pattern as the BGZF
+        # and fixture writers); last os.replace wins atomically.
+        tmp = f"{path}.{os.getpid()}.tmp"
+        with open(tmp, "wb") as f:
+            f.write(write_ocf(_OBS_AVRO_SCHEMA, rows, codec=codec,
+                              rows_per_block=8))
+        os.replace(tmp, path)
+        yield pd.DataFrame({"path": [path], "n_rows": [len(rows)]})
+
+    return write
+
+
+def _obs_avro_read(it):
+    import pandas as pd
+
+    from ocdb_server_spark.sources.avro_ocf import read_ocf
+
+    for pdf in it:
+        for content in pdf["content"]:
+            rows = read_ocf(bytes(content))
+            if rows:
+                yield pd.DataFrame(
+                    {
+                        "dataset_id": [r["dataset_id"] for r in rows],
+                        "field": [r["field"] for r in rows],
+                        "value": [r["value"] for r in rows],
+                    }
+                )
+
+
+@register(
+    "op258_avro_records_sink",
+    oracle=_OP258_SQL,
+    deps=(_obs_avro_write, _obs_avro_read, seabass_fixture_corpus,
+          _avro_kernel, _seabass_kernel),
+)
+def op258_avro_records_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """OCF Avro SINK pairing for the open-schema records table — the
+    op204 ↔ op252 gap named in SURVEY §7.8 (the writer existed, only
+    the pairing was missing): the long `(dataset_id, field, value)`
+    frame from the SeaBASS fixture corpus (scans.seabass_fixture_corpus
+    — one text scan per header signature) is exported executor-side as
+    Avro Object Container Files — the record-oriented interchange
+    format an archive consumer actually takes for open-schema records
+    (a fixed parquet schema can't hold per-file field sets; the long
+    triple CAN, and Avro carries it with the schema in the container
+    header) — then re-read through binaryFile + read_ocf and
+    re-aggregated. The per-(dataset_id, field) count + quantized sum
+    must hash-match the fixtures' hand transcription: a value corrupted
+    anywhere in parse → long → OCF double bits → decode breaks the
+    hash. Codec alternates null/deflate per partition; 8-row blocks
+    force multi-block files (every fixture dataset exceeds one block) so block framing is exercised, not just
+    one-block containers.
+
+    Scale shape: op252's exactly — encode and decode are mapInPandas
+    stages, payload bytes live and die inside one task, the shuffle
+    after decode carries the (dataset_id, field) aggregate only; the
+    partitionBy-style repartition on dataset_id bounds each OCF file's
+    writer state. The ≤4-row manifest collect() forces the write
+    before the read plan is returned (bounded, op252's rule)."""
+    from ocdb_server_spark.operators.scans import seabass_fixture_corpus
+
+    out_dir = scratch_dir("avro_records", sf_dir)
+    long_tbl = seabass_fixture_corpus(spark)
+    manifest = (
+        long_tbl.repartition(3, F.col("dataset_id"))
+        .mapInPandas(_obs_avro_write(out_dir), "path string, n_rows long")
+        .collect()
+    )
+    assert sum(r.n_rows for r in manifest) > 0
+    back = (
+        spark.read.format("binaryFile")
+        .load(out_dir)
+        .select("content")
+        .mapInPandas(
+            _obs_avro_read, "dataset_id string, field string, value double"
+        )
+    )
+    return back.groupBy("dataset_id", "field").agg(
+        F.count("*").cast("bigint").alias("n_obs"),
+        F.sum(F.round(F.col("value") * 1000).cast("bigint"))
+        .cast("bigint")
+        .alias("sum_q"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# op261: seekable-zstd splittable ingest (op260's story for zstd)
+# ---------------------------------------------------------------------------
+
+_OP261_SQL = """
+SELECT lang,
+       CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(SUM(doc_id) AS BIGINT) AS sum_doc_id,
+       CAST(SUM(LENGTH(text)) AS BIGINT) AS sum_text_chars,
+       CAST(SUM(n_chars) AS BIGINT) AS sum_n_chars
+FROM documents
+GROUP BY lang
+"""
+
+
+def _write_docs_zstd_file(path: str, it) -> int:
+    """ONE writer kernel for the single-file demo AND the parallel
+    exporter (op260's _write_docs_bgzf_file rule: record
+    serialization — field set + sort_keys — and the tmp + os.replace
+    atomic-publish protocol live in exactly one place): stream the
+    pandas batches as JSONL through iter_seekable_zstd into `path`,
+    append the seek-table skippable frame, return the frame count.
+    An empty partition writes a valid 0-frame file (bare seek table)
+    that read_seek_table accepts as an empty manifest."""
+    import json
+    import os
+
+    from ocdb_server_spark.sources.zstd_seekable import (
+        iter_seekable_zstd,
+        seek_table_frame,
+    )
+
+    def lines():
+        for pdf in it:
+            for r in pdf.to_dict("records"):
+                yield json.dumps(
+                    {
+                        "doc_id": int(r["doc_id"]),
+                        "text": r["text"],
+                        "lang": r["lang"],
+                        "n_chars": int(r["n_chars"]),
+                    },
+                    sort_keys=True,
+                )
+
+    sizes = []
+    tmp = f"{path}.{os.getpid()}.tmp"
+    with open(tmp, "wb") as f:
+        for frame, usize in iter_seekable_zstd(lines()):
+            f.write(frame)
+            sizes.append((len(frame), usize))
+        f.write(seek_table_frame(sizes))
+    os.replace(tmp, path)
+    return len(sizes)
+
+
+def _zstd_write_docs(path: str):
+    """Single-file writer task over _write_docs_zstd_file; yields
+    (path, n_frames)."""
+
+    def write(it):
+        import pandas as pd
+
+        n = _write_docs_zstd_file(path, it)
+        yield pd.DataFrame({"path": [path], "n_frames": [n]})
+
+    return write
+
+
+def _zstd_write_docs_part(out_dir: str):
+    """Per-PARTITION variant (op260's bgzf_export_docs_parallel
+    shape): each task streams ITS partition through the same kernel
+    into its own seekable-zstd file named by TaskContext partition
+    id. N tasks write N files concurrently; the same seek-table
+    manifest split-read consumes the whole corpus across files."""
+
+    def write(it):
+        import os
+
+        import pandas as pd
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId()
+        path = os.path.join(out_dir, f"part-{pid:05d}.jsonl.zst")
+        n = _write_docs_zstd_file(path, it)
+        yield pd.DataFrame({"path": [path], "n_frames": [n]})
+
+    return write
+
+
+def zstd_export_docs_parallel(
+    spark: SparkSession, sf_dir: str, out_dir: str, partitions: int = 8
+) -> list[str]:
+    """Export the documents table as `partitions` seekable-zstd files
+    in parallel and return their paths (write forced). The read side
+    is file-count-agnostic: _zstd_manifest seek-tables every file, so
+    the same split-read plan consumes 1 or N files — op260's
+    production writer story, same economics (BASELINE.md measured the
+    BGZF variant at −88% writer wall at 100× corpus; this writer is
+    the identical shape over the zstd kernel)."""
+    import os
+
+    os.makedirs(out_dir, exist_ok=True)  # tasks die opaquely otherwise
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", "lang", "n_chars"
+    )
+    manifest = (
+        d.repartition(partitions)
+        .mapInPandas(_zstd_write_docs_part(out_dir), "path string, n_frames long")
+        .collect()
+    )
+    # every task yields exactly one row; an empty partition still
+    # writes a valid 0-frame seek-table file the manifest accepts
+    assert len(manifest) == partitions
+    return sorted(r.path for r in manifest)
+
+
+def _zstd_manifest(it):
+    import pandas as pd
+
+    from ocdb_server_spark.sources.zstd_seekable import read_seek_table
+
+    for pdf in it:
+        for p in pdf["path"]:
+            blocks = read_seek_table(p)
+            yield pd.DataFrame(
+                {
+                    "path": [p] * len(blocks),
+                    "offset": [b[0] for b in blocks],
+                    "csize": [b[1] for b in blocks],
+                    "usize": [b[2] for b in blocks],
+                }
+            )
+
+
+def _zstd_decode(it):
+    import json
+
+    import pandas as pd
+
+    from ocdb_server_spark.sources.zstd_seekable import read_frame
+
+    for pdf in it:
+        for p, o, c, u in zip(
+            pdf["path"], pdf["offset"], pdf["csize"], pdf["usize"]
+        ):
+            recs = [
+                json.loads(x)
+                for x in read_frame(p, int(o), int(c), int(u))
+                .decode("utf-8")
+                .splitlines()
+            ]
+            if recs:
+                yield pd.DataFrame(
+                    {
+                        "doc_id": [r["doc_id"] for r in recs],
+                        "text": [r["text"] for r in recs],
+                        "lang": [r["lang"] for r in recs],
+                        "n_chars": [r["n_chars"] for r in recs],
+                    }
+                )
+
+
+def zstd_read_lang_agg(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """File-count-agnostic seekable-zstd split-read (op260's
+    bgzf_read_lang_agg shape): one seek-table read per file fans the
+    frame manifest out; each task range-reads and decompresses its
+    own frames; payload bytes never shuffle."""
+    blocks = spark.createDataFrame(
+        [(p,) for p in paths], "path string"
+    ).mapInPandas(
+        _zstd_manifest, "path string, offset long, csize long, usize long"
+    )
+    back = blocks.repartition(8).mapInPandas(
+        _zstd_decode, "doc_id long, text string, lang string, n_chars long"
+    )
+    return back.groupBy("lang").agg(
+        F.count("*").cast("bigint").alias("n_docs"),
+        F.sum("doc_id").cast("bigint").alias("sum_doc_id"),
+        F.sum(F.length("text")).cast("bigint").alias("sum_text_chars"),
+        F.sum("n_chars").cast("bigint").alias("sum_n_chars"),
+    )
+
+
+def zstd_single_file_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The single-FILE seekable-zstd demo (op261's original registered
+    shape, kept as a test fixture per the round-10 verdict item 3):
+    ONE coalesce(1) task streams the corpus into one archive, then the
+    split-read fans ITS frames across >1 task — the proof that a
+    single seekable-zstd file is splittable. Not the production write
+    path (that's op261's registered zstd_export_docs_parallel plan);
+    pinned in tests/test_zstd_seekable.py."""
+    import os
+
+    from ocdb_server_spark.scratch import scratch_dir
+
+    path = os.path.join(
+        scratch_dir("zstd_jsonl", sf_dir), "documents.jsonl.zst"
+    )
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", "lang", "n_chars"
+    )
+    manifest = (
+        d.coalesce(1)
+        .mapInPandas(_zstd_write_docs(path), "path string, n_frames long")
+        .collect()
+    )
+    assert len(manifest) == 1 and manifest[0].n_frames > 1
+    return zstd_read_lang_agg(spark, [path])
+
+
+@register(
+    "op261_zstd_seekable_ingest",
+    oracle=_OP261_SQL,
+    deps=(_write_docs_zstd_file, _zstd_write_docs_part,
+          zstd_export_docs_parallel, _zstd_manifest, _zstd_decode,
+          zstd_read_lang_agg, _zstd_kernel, _linebatch_kernel),
+)
+def op261_zstd_seekable_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SPLITTABLE ZSTD — op260's BGZF story for the codec large
+    corpora actually ship (round-9 verdict item 4): the documents
+    table exported as seekable-zstd (sources/zstd_seekable.py —
+    standard zstd frames + the public seekable format's seek-table
+    skippable frame), then split-read.
+
+    WRITE (round-10 verdict item 3 — the parallel writer IS the
+    registered plan): zstd_export_docs_parallel fans the corpus over
+    8 concurrent tasks, each streaming ITS partition through
+    iter_seekable_zstd (one ≤48 KiB batch in memory, frames flushed
+    at record boundaries — a split can never tear a record) into its
+    own archive + seek table. Measured −79% writer wall at 100×
+    corpus vs the single-task form (BASELINE.md round 10); the
+    single-file demo survives as zstd_single_file_demo, certified
+    equal in tests/test_zstd_seekable.py.
+
+    READ — same three-stage, all-executor split path as op260, with
+    BETTER metadata economics: (1) the manifest costs ONE 9-byte
+    footer read + one table read per file (read_seek_table) — op260's
+    BGZF walk pays a header hop per 64 KiB member, the seek table is
+    a single parquet-footer-style read regardless of frame count;
+    (2) manifest ROWS (never payload bytes) shuffle to a
+    repartition(8) fan-out; (3) each task range-reads and one-shot
+    decompresses its frames with libzstd, output size verified
+    against the table. The read is file-count-agnostic: the same plan
+    consumes 1 or N archives. At 100 TB the table is ~8 bytes/frame
+    and the frame reads fan out to maxPartitionBytes-sized task
+    groups.
+
+    COMPATIBLE: skippable frames are core zstd (RFC 8878 §3.1.2) —
+    every file is a valid multi-frame zstd stream any stock decoder
+    reads end-to-end, table silently skipped (pinned against
+    pyarrow's libzstd one-shot decoder in tests/test_zstd_seekable.py,
+    the same interop discipline as test_bgzf's stdlib-gzip pin).
+
+    The per-lang aggregate over the re-read frames hash-matching the
+    original-parquet oracle certifies JSON→zstd→seek-table-split→
+    decompress loses nothing; zstd_export_docs_parallel's manifest
+    collect() forces the write before the read plan is returned
+    (op252's rule)."""
+    from ocdb_server_spark.scratch import scratch_dir
+
+    out_dir = scratch_dir("zstd_jsonl_par", sf_dir)
+    paths = zstd_export_docs_parallel(spark, sf_dir, out_dir, partitions=8)
+    return zstd_read_lang_agg(spark, paths)

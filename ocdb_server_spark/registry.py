@@ -26,20 +26,18 @@ class Op:
     fn: QueryFn
     oracle: str | None  # DuckDB SQL, or None → rows-only check
     doc: str = ""
-    # sha256[:16] of inspect.getsource(fn) at registration — the
-    # REGISTERED PLAN's fingerprint. Closes the round-11 verdict's
-    # "invisible demotion" case: a plan rewrite under an unchanged
-    # oracle/snapshot (op261's r11 parallel-writer move) used to reach
-    # the driver only via a hand-bumped since_round; now ANY edit to
-    # the op function's source re-fronts the sweep automatically
-    # (refresh_oracle_fps). "" when the source is unavailable
-    # (REPL-defined fn) — such ops simply keep checker-only tracking.
+    # sha256[:16] of inspect.getsource(fn) (plus declared deps) at
+    # registration — the REGISTERED PLAN's fingerprint. Any edit to the
+    # op's source re-fronts it in the driver sweep even when its oracle
+    # or snapshot is unchanged (see evidence.heal_fp_book). ""
+    # when the source is unavailable (REPL-defined fn) — such ops keep
+    # checker-only tracking.
     src_fp: str = ""
 
 
 REGISTRY: dict[str, Op] = {}
 
-# --- op-scoped cache pool (round-6 ADVICE) -------------------------------
+# --- op-scoped cache pool ------------------------------------------------
 # Several iterative ops persist() intermediates (k-means quantized form,
 # BFS edges + per-hop frontiers, triangle edge lists, theta sketches)
 # whose lifetime must cover the CALLER's terminal action — so the op
@@ -80,12 +78,11 @@ def register(
 ) -> Callable[[QueryFn], QueryFn]:
     """Register an operator implementation under a stable SURVEY.md §2 key.
 
-    deps: helper functions/classes the registered plan lives in (the
-    round-12 review's blind spot: src_fp hashes only the op FUNCTION,
-    so a plan rewrite inside a shared helper — op264's apply_changes,
-    op95's IVF builders — stayed invisibly certified). Each dep's
-    source is folded into src_fp, so editing the helper demotes every
-    op that declared it. Opt-in and shallow by design: a dep's own
+    deps: helper functions/classes the registered plan lives in. The op
+    body is often a thin wrapper around a shared helper (op264's
+    apply_changes, op95's IVF builders), so each dep's source is folded
+    into src_fp and editing the helper demotes every op that declared
+    it. Opt-in and shallow by design: a dep's own
     callees are NOT traversed (transitive hashing would demote whole
     modules on any edit); helpers not declared anywhere still need
     the op261-style hand-bump when rewritten — declare them instead.
@@ -109,9 +106,7 @@ def register(
         if src:
             # deps fold in best-effort: ONE unhashable dep (a C
             # extension, a builtin) must not zero the whole op's
-            # fingerprint — that silently disabled plan-rewrite
-            # demotion, the exact hole the mechanism closes
-            # (round-13 review)
+            # fingerprint, which would disable plan-rewrite demotion
             for dep in deps:
                 try:
                     src += inspect.getsource(dep)
@@ -123,9 +118,9 @@ def register(
         def wrapped(
             spark: SparkSession, sf_dir: str, *args, **kwargs
         ) -> DataFrame:
-            # pass-through for optional op parameters (op90's threaded
-            # `plant` flag, r18-verdict item 7) — the registry contract
-            # stays (spark, sf_dir); extras are the op's own business
+            # pass-through for optional op parameters (op90's `plant`
+            # flag) — the registry contract stays (spark, sf_dir);
+            # extras are the op's own business
             release_pool()
             return fn(spark, sf_dir, *args, **kwargs)
 
@@ -141,346 +136,9 @@ def register(
     return deco
 
 
-def _row_is_green(row: object) -> bool:
-    """True iff a driver CORRECTNESS row records a PASS.
-
-    Two green shapes exist (observed r1-r3):
-      - SQL-checked op:   err == None, rows/schema/hash_match all true
-      - ROWS-by-design:   err == "no_oracle", spark_rows recorded
-        (the designed weaker check — counts as its kind of green)
-    Anything else — a traceback in err, a false match flag, a
-    no_oracle row that never produced a row count — is NOT green and
-    must sort into the re-sweep-first group.
-    """
-    if not isinstance(row, dict):
-        return False
-    err = row.get("err")
-    if err is None:
-        return bool(
-            row.get("rows_match")
-            and row.get("schema_match")
-            and row.get("hash_match")
-        )
-    if err == "no_oracle":
-        return row.get("spark_rows") is not None
-    return False
-
-
-def iter_correctness_rounds(root: str):
-    """Yield (round, rows_dict) for every CORRECTNESS_r*.json under
-    `root`, in PARSED round order — lexicographic filename order would
-    put an unpadded r10 before r2 and let an older round's row
-    override a newer one (round-7 ADVICE). Malformed files are
-    skipped, never raised. SHARED by _sweep_order and
-    scripts/evidence_age (round-8 review: the fold lived in two
-    copies that could silently diverge)."""
-    import json
-    import os
-
-    import re
-
-    rounds: list[tuple[int, str]] = []
-    for fname in os.listdir(root):
-        if fname.startswith("CORRECTNESS_r") and fname.endswith(".json"):
-            # FULLY-numeric tails only: concatenating ALL digits made
-            # a stray CORRECTNESS_r1_v2.json backup parse as round 12
-            # and override genuine round-12 rows in the certified fold
-            # (round-13 review). A suffixed/renamed file is not the
-            # driver's round record — skip it entirely rather than
-            # fold a backup's rows as evidence.
-            m = re.fullmatch(r"\d+", fname[len("CORRECTNESS_r"):-len(".json")])
-            if m:
-                rounds.append((int(m.group(0)), fname))
-    for rnd, fname in sorted(rounds):
-        try:
-            with open(os.path.join(root, fname)) as f:
-                rows = json.load(f)
-        except Exception:
-            continue  # a malformed file must never break the registry
-        if isinstance(rows, dict):
-            yield rnd, rows
-
-
-def _oracle_fp(sql: str) -> str:
-    """Stable 16-hex fingerprint of an oracle's SQL text."""
-    import hashlib
-
-    return hashlib.sha256(sql.encode()).hexdigest()[:16]
-
-
-def _rows_snapshot_fps(root: str) -> dict[str, str] | None:
-    """{op: fingerprint of its golden-snapshot entry} for ROWS-only ops
-    (round-10 verdict item 4). A ROWS op's "oracle" is its entry in
-    tests/rows_snapshot_sf0.001.json — {n_rows, columns, hash} — so a
-    rewritten snapshot must demote the op exactly as a rewritten SQL
-    oracle does: the new checker has never gated a driver row. Returns
-    None when the snapshot file is absent (a tests-less deploy), in
-    which case the book keeps its on-disk entries and no ROWS demotion
-    fires — same degrade-gracefully rule as the rest of the fold."""
-    import hashlib
-    import json
-    import os
-
-    path = os.path.join(root, "tests", "rows_snapshot_sf0.001.json")
-    try:
-        with open(path) as f:
-            snap = json.load(f)
-    except Exception:
-        return None
-    if not isinstance(snap, dict):
-        return None
-    return {
-        key: hashlib.sha256(
-            json.dumps(ent, sort_keys=True).encode()
-        ).hexdigest()[:16]
-        for key, ent in snap.items()
-    }
-
-
-def _load_fp_book(root: str) -> dict[str, dict]:
-    import json
-    import os
-
-    try:
-        with open(os.path.join(root, "ocdb_server_spark", "oracle_fp.json")) as f:
-            book = json.load(f)
-        return book if isinstance(book, dict) else {}
-    except Exception:
-        return {}
-
-
-def refresh_oracle_fps(root: str, latest: int) -> dict[str, dict]:
-    """Maintain oracle_fp.json: {op: {"fp", "since_round"}} where
-    since_round is the round at which the CURRENT oracle text first
-    became live (= `latest` recorded CORRECTNESS round + 1 when the
-    change is detected, i.e. "certifiable from the next sweep on";
-    the caller passes latest from its own fold — round-10 review:
-    re-folding every CORRECTNESS file here doubled the per-call I/O).
-    Called from certified_rounds so the book can never silently lag
-    an oracle edit; the write is atomic and best-effort (a read-only
-    checkout just keeps the on-disk book).
-
-    PLAN FINGERPRINT (round-11 verdict item 3): each entry also
-    carries "src_fp" — the hash of the op FUNCTION's source at
-    registration (Op.src_fp), plus the sources of any helpers the op
-    declared via register(deps=...) (round-12 review: the op body is
-    often a thin wrapper and the plan lives in a helper). An edit to
-    the op's body or a DECLARED dep bumps since_round automatically
-    and the stale green demotes exactly like a checker rewrite; a
-    rewrite inside an UNdeclared helper remains the one hole — either
-    declare it or hand-bump since_round in the same commit (op261
-    precedent). Migration: an entry without "src_fp" (pre-r12 book)
-    ADOPTS the current source without a bump — the grandfathered
-    state is the r11-certified one, and only edits made after
-    adoption re-front. Comment/docstring-only edits bump too: one
-    safe-side re-check beats parsing intent."""
-    import json
-    import os
-    import tempfile
-
-    book = _load_fp_book(root)
-    rows_fps = _rows_snapshot_fps(root)
-    changed = False
-    for key, op in REGISTRY.items():
-        if op.oracle is not None:
-            fp = _oracle_fp(op.oracle)
-        elif rows_fps is not None and key in rows_fps:
-            # ROWS-only op: fingerprint its golden-snapshot entry
-            # (round-10 verdict item 4 — a snapshot rewrite re-fronts
-            # the sweep like an oracle rewrite).
-            fp = rows_fps[key]
-        else:
-            # ROWS op with no snapshot entry yet (brand-new — it has
-            # no green row to protect) or no snapshot file on disk:
-            # nothing to fingerprint, keep any on-disk entry as-is.
-            continue
-        ent = book.get(key)
-        # Heal BOTH divergence shapes (round-10 review): a changed fp,
-        # and a malformed entry (non-dict, or a since_round that isn't
-        # an int — a hand-edit/merge-mangle must demote-and-heal, never
-        # crash the registry; same rule iter_correctness_rounds states).
-        if (
-            not isinstance(ent, dict)
-            or ent.get("fp") != fp
-            or not isinstance(ent.get("since_round"), int)
-        ):
-            book[key] = {
-                "fp": fp,
-                "since_round": latest + 1,
-                "src_fp": op.src_fp,
-            }
-            changed = True
-        elif op.src_fp and "src_fp" not in ent:
-            # one-time migration: adopt the current plan source
-            # WITHOUT a bump — grandfathering, not a rewrite.
-            book[key] = {**ent, "src_fp": op.src_fp}
-            changed = True
-        elif op.src_fp and ent.get("src_fp") != op.src_fp:
-            # registered plan rewritten under an unchanged checker —
-            # the green row certified a DIFFERENT plan; re-front it.
-            book[key] = {
-                "fp": fp,
-                "since_round": latest + 1,
-                "src_fp": op.src_fp,
-            }
-            changed = True
-    if changed:
-        try:
-            path = os.path.join(root, "ocdb_server_spark", "oracle_fp.json")
-            fd, tmp = tempfile.mkstemp(
-                dir=os.path.dirname(path), suffix=".tmp"
-            )
-            with os.fdopen(fd, "w") as f:
-                json.dump(book, f, indent=1, sort_keys=True)
-                f.write("\n")
-            os.replace(tmp, path)
-        except Exception:
-            pass  # read-only checkout — in-memory book still applies
-    return book
-
-
-def certified_rounds(root: str) -> dict[str, int]:
-    """{op: round of its latest green driver row}, with two demotion
-    rules on top:
-
-    1. ORACLE UPGRADES INVALIDATE ROWS-ONLY CERTIFICATION. When an op
-       that used to register oracle=None gains a SQL oracle (op03/
-       op05/op106 in r7, op96/op221 in r9), its old green rows prove
-       only the weaker ran-clean check — the new hash gate has never
-       run — so it drops out of `certified` and the next driver sweep
-       re-checks it first.
-    2. ORACLE REWRITES INVALIDATE SQL CERTIFICATION (round-9 ADVICE).
-       An op whose SQL oracle text is semantically rewritten later
-       (op96/op221's edge relation in r9) would otherwise keep its
-       stale green — the new text never ran. oracle_fp.json records
-       each oracle's fingerprint and the round its current text became
-       live (maintained by refresh_oracle_fps on every fold); a green
-       row older than since_round certified a DIFFERENT oracle and is
-       demoted.
-
-    Shared by _sweep_order and scripts/evidence_age.py so the sweep
-    and the report can't disagree about who needs evidence (round-8
-    review lesson applied to the r9 demotion rule)."""
-    if not REGISTRY:
-        # The demotion rule below consults each op's CURRENT oracle —
-        # a caller that imports registry directly (the way
-        # scripts/evidence_age.py does) must not silently get the
-        # un-demoted fold just because no one called load_all() yet.
-        # No recursion: load_all() fills REGISTRY before its own
-        # _sweep_order → certified_rounds call, which then takes the
-        # populated branch. (round-9 review)
-        load_all()
-    certified: dict[str, int] = {}
-    green_kind: dict[str, str] = {}
-    latest = 0
-    for rnd, rows in iter_correctness_rounds(root):
-        latest = max(latest, rnd)
-        for key, row in rows.items():
-            if _row_is_green(row):
-                certified[key] = rnd
-                green_kind[key] = (
-                    "rows" if row.get("err") == "no_oracle" else "sql"
-                )
-            else:
-                certified.pop(key, None)
-                green_kind.pop(key, None)
-    fp_book = refresh_oracle_fps(root, latest)
-    for key in list(certified):
-        op = REGISTRY.get(key)
-        if op is None:
-            continue
-        if op.oracle is not None and green_kind.get(key) == "rows":
-            certified.pop(key, None)  # rule 1: oracle upgrade
-            continue
-        # Rule 2 applies to BOTH oracle kinds (round-10 verdict item 4):
-        # for SQL ops the book fingerprints the oracle text; for ROWS
-        # ops it fingerprints the golden-snapshot entry. Either way a
-        # green row older than since_round certified a different
-        # checker. ROWS ops without a book entry (no snapshot file on
-        # disk) fall through with since=0 → never demoted here.
-        ent = fp_book.get(key)
-        # refresh_oracle_fps guarantees every registered SQL op has a
-        # well-formed entry (malformed ones are healed in-memory even
-        # when the disk write fails), so since_round is always an int
-        since = ent.get("since_round", 0) if isinstance(ent, dict) else 0
-        if isinstance(since, int) and certified[key] < since:
-            certified.pop(key, None)  # rule 2: oracle rewrite
-    return certified
-
-
-def _sweep_order(keys: list[str], root: str | None = None) -> list[str]:
-    """Order the registry for the driver's budgeted correctness sweep.
-
-    Empirics from rounds 1-2: the sweep recorded EXACTLY 50 entries both
-    times (different 50s — it follows queries() insertion order), so the
-    budget is either a ~50-query cap or a wall-clock limit that lands
-    near 50. Either way the winning order is the same:
-
-      1. ops with no GREEN row in any CORRECTNESS_r*.json yet —
-         never swept, OR swept but errored/mismatched (a fixed op
-         whose only row is an old failure is exactly the one to
-         re-check first) — cheapest first, then
-      2. already-certified ops, STALEST driver evidence first
-         (round of the latest green row, ascending), then cheapest
-         first within a round. Once everything is certified (true
-         since round 5), the budget's ~50 slots should refresh the
-         ops whose evidence predates the most shared-helper churn
-         (op22-op41's latest green rows are r1-era), not re-check
-         the same cheapest scans every round — round-5 verdict #1.
-
-    "Certified" means the op's LATEST row actually passed: err is
-    null (or the designed ``no_oracle`` rows-only check) and no
-    recorded check is false. Merely *appearing* in a CORRECTNESS
-    file does not count — round 1-3 taught us that an op whose only
-    row is a crash would otherwise sort behind every never-swept op
-    and, under the ~50-entry budget, never get re-swept.
-
-    Cost = measured sf0.01 wall seconds from op_costs.json (generated
-    by scripts/sweep_sim.py --dump-costs); ops without a measurement
-    sort after measured ones within their group, in registration order.
-    This makes the ordering self-maintaining: each round's CORRECTNESS
-    file automatically rotates the not-yet-covered ops to the front.
-    """
-    import json
-    import os
-
-    if root is None:
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    # certified[op] = round number of the op's LATEST green row.
-    # Later rounds override earlier ones (sorted() gives r01 < r02 < ...):
-    # an op that failed in r1 but passed in r3 is certified; one that
-    # passed in r1 but erred in r3 is NOT.
-    certified = certified_rounds(root)
-    costs: dict[str, float] = {}
-    try:
-        with open(os.path.join(root, "ocdb_server_spark", "op_costs.json")) as f:
-            raw = json.load(f)
-        # shape-check like every other book this module reads ("a
-        # malformed file must never break the registry"): a mangled
-        # list or string-valued cost used to crash load_all() — and
-        # with it entry()/queries()/oracle_sql(), the whole round
-        # (round-13 review)
-        if isinstance(raw, dict):
-            costs = {
-                k: float(v)
-                for k, v in raw.items()
-                if isinstance(v, (int, float))
-            }
-    except Exception:
-        pass
-    pos = {k: i for i, k in enumerate(keys)}
-
-    def key_fn(k: str):
-        # Uncertified first (certified.get → 0 sorts before any round);
-        # among certified, oldest evidence round first, then cheapest.
-        return (certified.get(k, 0), costs.get(k, float("inf")), pos[k])
-
-    return sorted(keys, key=key_fn)
-
-
 def load_all() -> dict[str, Op]:
-    """Import every operator module (side effect: fills REGISTRY),
-    then order it for the driver's budgeted sweep (see _sweep_order)."""
+    """Import every operator module (side effect: fills REGISTRY) and
+    return REGISTRY in registration order."""
     from ocdb_server_spark.operators import (  # noqa: F401
         filters,
         sorting,
@@ -491,28 +149,15 @@ def load_all() -> dict[str, Op]:
         aggregates,
         joins,
         relational_ext,
-        pipeline_r2,
-        pipeline_r3,
-        pipeline_r4,
-        pipeline_r4b,
-        pipeline_r5,
-        pipeline_r5b,
-        pipeline_r6,
-        pipeline_r7,
-        pipeline_r8,
-        pipeline_r10,
-        pipeline_r12,
-        pipeline_r13,
-        pipeline_r14,
         multimodal_codecs,
         udfs,
-        northstar,
-        pipeline_ext,
-        components,
         streaming_batch,
+        text,
+        dedup,
+        similarity,
+        graph,
+        stats,
+        lakehouse,
     )
 
-    ordered = {k: REGISTRY[k] for k in _sweep_order(list(REGISTRY))}
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
     return REGISTRY

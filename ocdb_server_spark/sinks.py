@@ -27,10 +27,6 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from pyspark.sql.utils import AnalysisException
 
 
-def write_partitioned(df: DataFrame, path: str, partition_col: str) -> None:
-    df.write.partitionBy(partition_col).mode("overwrite").parquet(path)
-
-
 def upsert_partitioned(
     spark: SparkSession,
     path: str,

@@ -30,7 +30,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -50,28 +50,6 @@ MEDIA_SCHEMA = StructType(
     ]
 )
 
-DECODED_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("n_bytes", LongType(), True),
-    ]
-)
-
-
-def make_synthetic_assets(spark: SparkSession, n: int = 64) -> DataFrame:
-    """Deterministic fake media table: payload = 8-byte header
-    (width:int32, height:int32) + filler — stands in for real encoded
-    bytes so the pipeline is end-to-end testable without codecs."""
-    rows = []
-    for i in range(n):
-        w, h = 64 + (i % 8) * 16, 48 + (i % 6) * 16
-        payload = struct.pack("<ii", w, h) + bytes((i % 251,)) * 128
-        rows.append((i, "image", "image/fake", payload, len(payload)))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
 def decode_image_stub(payload: bytes, fake: bool = False) -> tuple[int, int]:
     """Decode kernel stub. Real implementation would call PIL/libvips —
     not present in this container."""
@@ -82,28 +60,6 @@ def decode_image_stub(payload: bytes, fake: bool = False) -> tuple[int, int]:
         )
     w, h = struct.unpack_from("<ii", payload)
     return w, h
-
-
-def decode_images(df: DataFrame, fake: bool = True) -> DataFrame:
-    """mapInPandas decode stage: Arrow batches in, decoded metadata out.
-
-    The batch loop is the real plumbing a production decoder plugs
-    into; only the per-payload kernel is stubbed.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            dims = [decode_image_stub(p, fake=fake) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "width": [d[0] for d in dims],
-                    "height": [d[1] for d in dims],
-                    "n_bytes": pdf["n_bytes"],
-                }
-            )
-
-    return df.mapInPandas(batches, schema=DECODED_SCHEMA)
 
 
 FRAME_SCHEMA = StructType(

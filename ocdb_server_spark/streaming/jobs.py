@@ -5,8 +5,10 @@ The batch-equivalent DataFrames live in
 checks); this module runs the SAME logic as real streaming queries —
 ``readStream`` file source → transformation → memory sink, driven to
 completion with ``Trigger.AvailableNow`` — so tests can assert that
-streaming execution matches batch (and that watermarks actually drop
-late rows, which batch can't express).
+streaming execution matches batch. Several registered ops (the stream
+joins, the transformWithState ops, the exactly-once sink and the
+streaming CDC apply) run their streaming query here and return its
+result.
 
 Scale notes: file-source streaming here stands in for Kafka; the
 operator graphs are identical. Watermarks bound all state (window and
@@ -216,42 +218,6 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(agg, mode="complete")
 
 
-def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """op70 as a streaming query: 1h windows sliding every 30min."""
-    ev = _stream_events(spark, sf_dir)
-    agg = (
-        ev.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour", "30 minutes"))
-        .agg(F.count("*").alias("n"))
-        .select(F.col("window.start").alias("window_start"), "n")
-    )
-    return _run_to_memory(agg, mode="complete")
-
-
-def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """op71 as a streaming query: session windows, 30min gap."""
-    ev = _stream_events(spark, sf_dir)
-    agg = (
-        ev.withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", "30 minutes"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_events",
-        )
-    )
-    return _run_to_memory(agg, mode="complete")
-
-
-def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """op73 as a streaming query: dropDuplicatesWithinWatermark."""
-    ev = _stream_events(spark, sf_dir)
-    dd = ev.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(["event_id"])
-    return _run_to_memory(dd.select("event_id", "user_id"), mode="append")
-
-
 def stream_upsert_state(
     spark: SparkSession,
     sf_dir: str,
@@ -392,114 +358,6 @@ def stream_upsert_state(
     return spark.read.parquet(path)
 
 
-def run_watermark_drop_demo(spark: SparkSession, tmp_dir: str) -> tuple[int, int]:
-    """op72's streaming proof: a late row arriving after the watermark
-    passed its window must NOT extend that window. Returns
-    (rows_in_result_for_late_window, total_result_rows).
-
-    Batch layout (one file per micro-batch via maxFilesPerTrigger=1):
-      b1: 00:10 + 03:00 → watermark advances to 02:00 after b1
-      b2: 03:10         → spacer. Spark's LATE-ROW FILTER for batch N
-                          uses the watermark computed after batch N-2 —
-                          the filter lags state eviction by one batch
-                          (measured on 4.1: a late row in b2 is still
-                          merged, then evicted with its window) — so
-                          the drop only takes effect from b3 on.
-      b3: 00:20         → late: its window [00:00, 01:00) ends before
-                          the 02:00 filter watermark → dropped.
-    The 00:00 window therefore finalizes with exactly 1 row (00:10).
-    """
-    import os
-    import time as _time
-
-    from pyspark.sql import Row
-
-    os.makedirs(tmp_dir, exist_ok=True)
-    batches = [
-        ["2024-01-01 00:10:00", "2024-01-01 03:00:00"],
-        ["2024-01-01 03:10:00"],
-        ["2024-01-01 00:20:00"],  # late
-    ]
-    now = _time.time()
-    schema = None
-    for i, ts_list in enumerate(batches, start=1):
-        df = spark.createDataFrame([Row(ts=t, k="a") for t in ts_list]).select(
-            F.col("ts").cast("timestamp").alias("ts"), "k"
-        )
-        schema = df.schema
-        # exactly ONE part file per batch dir (a multi-part write would
-        # split the micro-batch under maxFilesPerTrigger=1), with pinned
-        # mtimes so same-tick writes can't flip the processing order
-        df.coalesce(1).write.mode("overwrite").parquet(f"{tmp_dir}/f{i}")
-        mtime = now - 60 * (len(batches) - i + 1)
-        base = os.path.join(tmp_dir, f"f{i}")
-        for fname in os.listdir(base):
-            if fname.endswith(".parquet"):
-                os.utime(os.path.join(base, fname), (mtime, mtime))
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{tmp_dir}/f*")
-    )
-    agg = (
-        src.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour"), "k")
-        .agg(F.count("*").alias("n"))
-        .select(F.col("window.start").alias("ws"), "n")
-    )
-    # through _run_to_memory: the inline copy of its sink block skipped
-    # the _MEMORY_TABLES enrollment, exempting this one sink from the
-    # drop-at-next-call lifetime rule (round-13 review)
-    out = _run_to_memory(agg, mode="append").collect()
-    late_window = [r for r in out if str(r["ws"]).startswith("2024-01-01 00:")]
-    # n for the 00:00 window must count only the on-time 00:10 row
-    n_late_window = late_window[0]["n"] if late_window else -1
-    return n_late_window, len(out)
-
-
-def stream_stateful_running_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful operator via applyInPandasWithState: per-user
-    running event count with explicit GroupState — the extension point
-    for stateful logic Spark's built-ins can't express (custom session
-    semantics, decaying counters, model state).
-
-    State is one integer per user (bounded by the key cardinality;
-    production code adds state timeouts for unbounded key spaces).
-    Emits the final count per user — must equal the batch groupBy
-    count (tests/test_streaming.py)."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    ev = _stream_events(spark, sf_dir)
-
-    def update(key, pdfs, state: GroupState):
-        n = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            n += len(pdf)
-        state.update((n,))
-        yield pd.DataFrame({"user_id": [key[0]], "n_events": [n]})
-
-    out = ev.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id bigint, n_events bigint",
-        stateStructType="n bigint",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    # update-mode memory sink keeps every emission; the LAST per user is
-    # the final state
-    sunk = _run_to_memory(out, mode="update")
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        sunk.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n_events")
-    )
-
-
 def stream_ingest_resumable(
     spark: SparkSession,
     in_dir: str,
@@ -595,56 +453,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "purchase_value",
     )
     return _run_to_memory(joined, mode="append")
-
-
-def stream_stateful_running_count_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same per-user running count on Spark 4's arbitrary-state
-    API: transformWithStateInPandas with an explicit StatefulProcessor
-    — the successor to applyInPandasWithState above (schema'd value
-    state via a handle, timers, TTL support; requires the RocksDB
-    state store). Kept as the modern twin so both stateful surfaces
-    stay covered; must emit exactly what the GroupState version and
-    the batch groupBy count emit (tests/test_streaming.py — skipped
-    where google.protobuf is missing: TWS's state-server protocol
-    depends on it and this container does not ship it)."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningCount(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._n = handle.getValueState("n", "n bigint")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n = self._n.get()[0] if self._n.exists() else 0
-            for pdf in rows:
-                n += len(pdf)
-            self._n.update((n,))
-            yield pd.DataFrame({"user_id": [key[0]], "n_events": [n]})
-
-        def close(self) -> None:
-            pass
-
-    with _tws_session(spark):
-        ev = _stream_events(spark, sf_dir)
-        out = ev.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=RunningCount(),
-            outputStructType="user_id bigint, n_events bigint",
-            outputMode="Update",
-            timeMode="None",
-        )
-        sunk = _run_to_memory(out, mode="update")
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        sunk.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n_events")
-    )
 
 
 def stream_tws_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1257,7 +1065,7 @@ def stream_cdc_apply_changes(
     # through load_table, so the events ts normalization the shared
     # oracle assumes applies here too); lazy import — operators import
     # this module at load time.
-    from ocdb_server_spark.operators.pipeline_r12 import (
+    from ocdb_server_spark.operators.lakehouse import (
         cdc_base_snapshot,
         cdc_changes_feed,
     )

@@ -7,9 +7,7 @@ Spark-first re-expression: a rule is a named Column *violation
 predicate* plus severity and message; `validate` evaluates every rule
 as one projection — the issues land in an `array<struct>` column and
 the status is a `when` rollup. No Python in the loop: a million-row
-file validates at scan speed inside whole-stage codegen, and the same
-rule list drives both per-record issues and the per-file (per-group)
-status rollup the reference's submission workflow needs.
+file validates at scan speed inside whole-stage codegen.
 
 Scale notes: validation is embarrassingly parallel (per-row), so the
 only design requirement is staying in the JVM — which rules-as-Columns
@@ -67,16 +65,6 @@ def value_range(col: str, lo: float, hi: float, severity: str = ERROR) -> Rule:
     )
 
 
-def regex_match(col: str, pattern: str, severity: str = WARNING) -> Rule:
-    """String must match the pattern (reference: format rules)."""
-    return Rule(
-        name=f"format_{col}",
-        severity=severity,
-        violated=F.col(col).isNotNull() & ~F.col(col).rlike(pattern),
-        message=f"{col} does not match {pattern}",
-    )
-
-
 def custom(name: str, violated: Column, message: str, severity: str = WARNING) -> Rule:
     return Rule(name=name, severity=severity, violated=violated, message=message)
 
@@ -129,17 +117,3 @@ def validate(df: DataFrame, rules: list[Rule]) -> DataFrame:
         F.when(has_error, ERROR).when(has_warning, WARNING).otherwise(OK),
     )
 
-
-def status_rollup(validated: DataFrame, group_cols: list[str]) -> DataFrame:
-    """Per-file/per-submission status (reference: a file's status is
-    the worst of its records'): one map-side-partial aggregation."""
-    worst = (
-        F.when(F.max((F.col("status") == ERROR).cast("int")) == 1, ERROR)
-        .when(F.max((F.col("status") == WARNING).cast("int")) == 1, WARNING)
-        .otherwise(OK)
-    )
-    return validated.groupBy(*group_cols).agg(
-        F.count("*").alias("n_records"),
-        F.sum(F.size("issues")).alias("n_issues"),
-        worst.alias("status"),
-    )

@@ -299,7 +299,7 @@ def run_fixpoint_case(reliable: bool, reference: tuple) -> dict:
 
 def chain_reference() -> tuple:
     """Single-JVM local[16] fixpoint fingerprint for the chain graph."""
-    from ocdb_server_spark.operators.components import connected_components
+    from ocdb_server_spark.operators.graph import connected_components
     from ocdb_server_spark.session import get_spark
 
     spark = get_spark(

@@ -1,11 +1,9 @@
 #!/usr/bin/env python3
 """Generate EVIDENCE_AGE.md: per-op latest-green driver-evidence round.
 
-Round-6 verdict item 7: the judge and the builder kept re-deriving
-"which ops carry stale driver evidence" from six CORRECTNESS_r*.json
-files. This table states it once per round: for every registered op,
-the round of its LATEST green driver row (same green semantics as
-registry._row_is_green — the sweep-order source of truth), its oracle
+States once per round which ops carry stale driver evidence: for every
+registered op, the round of its LATEST green driver row (the same fold
+as evidence.sweep_order, via evidence.certified_rounds), its oracle
 kind, and the age histogram on top.
 
 Usage: python scripts/evidence_age.py > EVIDENCE_AGE.md
@@ -19,26 +17,13 @@ from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from ocdb_server_spark.registry import (  # noqa: E402
-    certified_rounds,
-    load_all,
-)
-
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def latest_green() -> dict[str, int]:
-    """{op: round of latest green row}. The fold (incl. the r9
-    oracle-upgrade demotion: a SQL-oracled op whose latest green was
-    a rows-only row counts as r0 — the hash gate never ran) lives in
-    registry.certified_rounds, SHARED with _sweep_order so the sweep
-    and this report can't disagree (round-8 review)."""
-    return certified_rounds(ROOT)
+from ocdb_server_spark.evidence import ROOT, certified_rounds  # noqa: E402
+from ocdb_server_spark.registry import load_all  # noqa: E402
 
 
 def main() -> None:
     ops = load_all()
-    certified = latest_green()
+    certified = certified_rounds(ROOT, ops)
     hist = Counter(certified.get(name, 0) for name in ops)
     print("# EVIDENCE_AGE — per-op latest-green driver round")
     print()
@@ -46,9 +31,9 @@ def main() -> None:
     print("(green = latest row passed: hash-match for SQL-oracled ops, the")
     print("designed rows-ran check for ROWS ops). `r0` = no green driver row")
     print("yet: new this round, latest row failed, or the op's oracle was")
-    print("upgraded since its last rows-only green (the r9 demotion rule —")
-    print("the hash gate has never run for it). The sweep order")
-    print("(registry._sweep_order) certifies r0 first, then stalest round.")
+    print("upgraded since its last rows-only green (the hash gate has never")
+    print("run for it), or its checker or plan changed since. The sweep")
+    print("order (evidence.sweep_order) certifies r0 first, then stalest round.")
     print()
     print("Histogram (round → ops whose latest green evidence is that round):")
     parts = [f"r{r}: {n}" for r, n in sorted(hist.items())]

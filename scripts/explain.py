@@ -1,8 +1,8 @@
 #!/usr/bin/env python
-"""Capture `.explain("formatted")` for named ops into plans/r19/.
+"""Capture `.explain("formatted")` for named ops into plans/<round>/.
 
-Usage: python scripts/explain_r19.py <suffix> op17_agg_groupby [op42_...]
-Writes plans/r19/<op>_<suffix>.txt for each op (suffix: before/after).
+Usage: python scripts/explain.py <round> <suffix> op17_agg_groupby [op42_...]
+Writes plans/<round>/<op>_<suffix>.txt for each op (suffix: before/after).
 Captured on the bench session (interactive profile, warm sf0.1 cache)
 so the plans match what bench.py actually executes.
 """
@@ -16,21 +16,21 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    rnd, suffix = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from ocdb_server_spark.io import warm_cache
     from ocdb_server_spark.registry import load_all
     from ocdb_server_spark.session import get_spark
 
-    spark = get_spark(app_name="explain_r19", profile="interactive")
+    spark = get_spark(app_name=f"explain_{rnd}", profile="interactive")
     spark.sparkContext.setLogLevel("ERROR")
     ops = load_all()
     warm_cache(spark, sf_dir)
 
     dest_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r19"
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", rnd
     )
     os.makedirs(dest_dir, exist_ok=True)
     for name in names:

@@ -1,17 +1,21 @@
 #!/usr/bin/env python
-"""Round-18 optimization baseline: wall-time every registered operator
-at sf0.1 under the bench methodology (warm cache, interactive profile,
-noop sink per the optimization guide §1.4 — times the computation of
-every column of every row, not the sink).
+"""Optimization sweep: wall-time every registered operator at sf0.1
+under the bench methodology (warm cache, interactive profile, noop
+sink per the optimization guide §1.4 — times the computation of every
+column of every row, not the sink).
+
+Ops whose warm-up run exceeds 0.3 s get best-of-5 instead of
+best-of-3, so loaded draws on the expensive ops do not masquerade as
+regressions that need a manual spot-check pass.
 
 Each rep builds a FRESH DataFrame (new shuffle deps — re-executing one
-instance skips finished map stages, the round-8 bench correction) and
-times one noop write. best/median of N reps plus the build time are
-emitted as JSON so before/after comparisons in OPTIMIZATION_r18.md are
-reproducible.
+instance skips finished map stages) and times one noop write.
+best/median of N reps plus the build time are emitted as JSON so
+before/after comparisons (OPTIMIZATION_r<N>.md) are reproducible.
 
-Usage: python scripts/op_sweep_r18.py [sf_dir] [reps] [--only=opA,opB]
-Writes: plans/r18/op_sweep_<tag>.json (tag from argv, default 'base')
+Usage: python scripts/op_sweep.py <round> [sf_dir] [reps] [--only=opA,opB] [--tag=T]
+Writes: plans/<round>/op_sweep_<tag>.json (default tag 'base'), e.g.
+round r19 → plans/r19/op_sweep_base.json
 """
 
 from __future__ import annotations
@@ -23,9 +27,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+SLOW_OP_SEC = 0.3  # warm-up wall above this buys extra reps
+SLOW_OP_REPS = 5
+
 
 def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
+    rnd = args.pop(0)
     sf_dir = args[0] if args else "/root/testdata/sf0.1"
     reps = int(args[1]) if len(args) > 1 else 3
     tag = next((a.split("=", 1)[1] for a in sys.argv if a.startswith("--tag=")), "base")
@@ -38,7 +46,7 @@ def main() -> None:
     from ocdb_server_spark.registry import load_all
     from ocdb_server_spark.session import get_spark
 
-    spark = get_spark(app_name="op_sweep_r18", profile="interactive")
+    spark = get_spark(app_name=f"op_sweep_{rnd}", profile="interactive")
     spark.sparkContext.setLogLevel("ERROR")
     ops = load_all()
     warm_cache(spark, sf_dir)
@@ -50,10 +58,13 @@ def main() -> None:
         rec: dict[str, object] = {}
         try:
             # warm-up build+run (codegen/JIT/Arrow caches out of the numbers)
+            t0 = time.perf_counter()
             df = ops[name].fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
+            warm_wall = time.perf_counter() - t0
+            n_reps = max(reps, SLOW_OP_REPS) if warm_wall > SLOW_OP_SEC else reps
             builds, runs = [], []
-            for _ in range(reps):
+            for _ in range(n_reps):
                 t0 = time.perf_counter()
                 df = ops[name].fn(spark, sf_dir)  # fresh shuffle deps
                 t1 = time.perf_counter()
@@ -66,6 +77,7 @@ def main() -> None:
             rec["best"] = round(runs[0], 4)
             rec["median"] = round(runs[len(runs) // 2], 4)
             rec["build"] = round(builds[0], 4)
+            rec["reps"] = n_reps
         except Exception as e:  # noqa: BLE001 — record, keep sweeping
             rec["err"] = f"{type(e).__name__}: {e}"[:200]
         out[name] = rec
@@ -75,7 +87,7 @@ def main() -> None:
     dest = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r18",
+        rnd,
         f"op_sweep_{tag}.json",
     )
     os.makedirs(os.path.dirname(dest), exist_ok=True)

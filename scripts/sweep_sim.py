@@ -19,7 +19,7 @@ outliers can be fixed before the real gate runs.
 Usage: python scripts/sweep_sim.py [sf_dir] [--dump-costs]
 
 --dump-costs writes the measured per-op seconds to
-ocdb_server_spark/op_costs.json, which registry._sweep_order uses to
+ocdb_server_spark/op_costs.json, which evidence.sweep_order uses to
 run never-certified ops cheapest-first inside the driver's budget.
 """
 

@@ -26,8 +26,7 @@ from ocdb_server_spark.functions.ann_index import (
     index_path,
 )
 from ocdb_server_spark.io import load_table
-from ocdb_server_spark.operators.pipeline_ext import ivf_topk
-from ocdb_server_spark.operators.pipeline_r5 import _PQ_K, pq_topk
+from ocdb_server_spark.operators.similarity import _PQ_K, ivf_topk, pq_topk
 
 
 def _rows(df):

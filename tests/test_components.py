@@ -8,7 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from ocdb_server_spark.operators.components import connected_components
+from ocdb_server_spark.operators.graph import connected_components
 from ocdb_server_spark.registry import load_all
 
 OPS = load_all()
@@ -59,7 +59,7 @@ def test_minhash_lsh_to_components_composition(spark):
     directly. Planted duplicate groups must collapse into single
     min-labeled clusters; the singleton must not appear (vertices
     only exist via edges)."""
-    from ocdb_server_spark.operators.northstar import minhash_neardup_pairs
+    from ocdb_server_spark.operators.dedup import minhash_neardup_pairs
 
     texts = (
         ["alpha beta gamma delta epsilon zeta eta theta iota kappa"] * 3
@@ -122,7 +122,7 @@ def test_jaccard_pairs_random_differential_vs_sql_template(spark):
 
     import duckdb
 
-    from ocdb_server_spark.operators.pipeline_ext import (
+    from ocdb_server_spark.operators.dedup import (
         ngram_jaccard_pairs,
         ngram_jaccard_pairs_ctes,
     )
@@ -228,8 +228,10 @@ def _composed_neardups(spark, sf_dir, docs):
     """The measured 100 TB path for edit-distance near-dup detection:
     op79 MinHash ∪ op88 SimHash candidates → op132's Levenshtein
     verify stage (editdist_verify_pairs)."""
-    from ocdb_server_spark.operators.northstar import minhash_neardup_pairs
-    from ocdb_server_spark.operators.pipeline_r2 import editdist_verify_pairs
+    from ocdb_server_spark.operators.dedup import (
+        editdist_verify_pairs,
+        minhash_neardup_pairs,
+    )
 
     mh = minhash_neardup_pairs(docs).selectExpr(
         "doc_a AS id_a", "doc_b AS id_b"

@@ -43,7 +43,7 @@ def test_row_is_green_predicate():
     ERRORED must not count as certified — else a fixed op sorts behind
     every never-swept op and, under the ~50-entry budget, is never
     re-checked (op96/op107 sat on stale r1 crash rows for two rounds)."""
-    from ocdb_server_spark.registry import _row_is_green
+    from ocdb_server_spark.evidence import _row_is_green
 
     green_sql = {
         "rows_match": True, "schema_match": True, "hash_match": True,
@@ -78,7 +78,7 @@ def test_sweep_order_fronts_errored_ops(tmp_path):
     """
     import json
 
-    from ocdb_server_spark.registry import _sweep_order
+    from ocdb_server_spark.evidence import sweep_order
 
     green_sql = {
         "rows_match": True, "schema_match": True, "hash_match": True,
@@ -103,20 +103,20 @@ def test_sweep_order_fronts_errored_ops(tmp_path):
         "op_fresh": green_sql,         # re-certified in r2 (fresh evidence)
     }))
 
-    # op_fresh registers FIRST but has the freshest evidence (r2) — the
-    # round-5 verdict's staleness rule must sort it behind the r1-era
-    # certified ops despite registration order.
+    # op_fresh comes FIRST but has the freshest evidence (r2) — the
+    # staleness rule must sort it behind the r1-era certified ops
+    # despite input order.
     keys = ["op_fresh", "op_green", "op_rows", "op_crash", "op_flip",
             "op_virgin", "op_late"]
-    ordered = _sweep_order(keys, root=str(tmp_path))
+    ordered = sweep_order(keys, str(tmp_path), {})
 
     front = {"op_crash", "op_flip", "op_virgin"}
     back = {"op_green", "op_rows", "op_late", "op_fresh"}
     assert set(ordered[:3]) == front, f"uncertified ops must front: {ordered}"
     assert set(ordered[3:]) == back, f"certified ops must trail: {ordered}"
-    # within the uncertified group, no costs file → registration order
+    # within the uncertified group, no costs file → op key order
     assert ordered[:3] == ["op_crash", "op_flip", "op_virgin"]
-    # certified: STALEST round first (r1 before r2), registration order
+    # certified: STALEST round first (r1 before r2), op key order
     # within a round — op_fresh's r2 evidence sorts it behind r1 ops.
     assert ordered[3:] == ["op_green", "op_rows", "op_fresh", "op_late"]
 
@@ -130,9 +130,10 @@ def test_sweep_order_demotes_oracle_upgraded_ops(tmp_path):
     because the rule consults the live REGISTRY's oracle field."""
     import json
 
-    from ocdb_server_spark.registry import REGISTRY, _sweep_order, load_all
+    from ocdb_server_spark.evidence import sweep_order
+    from ocdb_server_spark.registry import REGISTRY, load_all
 
-    load_all()
+    ops = load_all()
     sql_op = "op17_agg_groupby"          # has an oracle today
     rows_op = "op20_agg_approx_count_distinct"  # oracle=None by design
     assert REGISTRY[sql_op].oracle is not None
@@ -151,7 +152,7 @@ def test_sweep_order_demotes_oracle_upgraded_ops(tmp_path):
         rows_op: green_rows,  # green under its designed check
         "op_other": green_sql,
     }))
-    ordered = _sweep_order([rows_op, "op_other", sql_op], root=str(tmp_path))
+    ordered = sweep_order([rows_op, "op_other", sql_op], str(tmp_path), ops)
     assert ordered[0] == sql_op, (
         f"oracle-upgraded op must re-certify first: {ordered}"
     )
@@ -168,14 +169,15 @@ def test_sweep_order_demotes_rewritten_oracles(tmp_path):
     recorded round + 1) before the demotion check."""
     import json
 
-    from ocdb_server_spark.registry import (
-        REGISTRY,
+    from ocdb_server_spark.evidence import (
         _oracle_fp,
-        _sweep_order,
-        load_all,
+        certified_rounds,
+        sweep_order,
+        write_fp_book,
     )
+    from ocdb_server_spark.registry import REGISTRY, load_all
 
-    load_all()
+    ops = load_all()
     sql_op = "op17_agg_groupby"
     green_sql = {
         "rows_match": True, "schema_match": True, "hash_match": True,
@@ -187,45 +189,45 @@ def test_sweep_order_demotes_rewritten_oracles(tmp_path):
     fpdir = tmp_path / "ocdb_server_spark"
     fpdir.mkdir()
     cur_fp = _oracle_fp(REGISTRY[sql_op].oracle)
+    cur_src = REGISTRY[sql_op].src_fp
 
     # Case 1: book says the current text went live AFTER the green row
     # → demoted to the front.
     (fpdir / "oracle_fp.json").write_text(
         json.dumps({sql_op: {"fp": cur_fp, "since_round": 4}})
     )
-    ordered = _sweep_order(["op_other", sql_op], root=str(tmp_path))
+    ordered = sweep_order(["op_other", sql_op], str(tmp_path), ops)
     assert ordered[0] == sql_op, f"rewritten oracle must re-certify first: {ordered}"
 
     # Case 2: same book but the green row postdates the rewrite → stays
     # certified (sorts by staleness like any other certified op).
-    (fpdir / "oracle_fp.json").write_text(
-        json.dumps({sql_op: {"fp": cur_fp, "since_round": 3}})
-    )
-    ordered = _sweep_order(["op_other", sql_op], root=str(tmp_path))
-    from ocdb_server_spark.registry import certified_rounds
+    (fpdir / "oracle_fp.json").write_text(json.dumps(
+        {sql_op: {"fp": cur_fp, "since_round": 3, "src_fp": cur_src}}
+    ))
+    assert sql_op in certified_rounds(str(tmp_path), ops)
 
-    assert sql_op in certified_rounds(str(tmp_path))
-
-    # Case 3: the book's fp is STALE (oracle edited, updater never ran)
-    # — refresh_oracle_fps must self-heal: rewrite the entry with
-    # since_round = latest+1 (=4) and the demotion then fires.
+    # Case 3: the book's fp is STALE (oracle edited, refresh never ran)
+    # — the fold heals the entry in memory (since_round = latest+1 = 4)
+    # so the demotion fires; the explicit refresh writes the same entry.
     (fpdir / "oracle_fp.json").write_text(
         json.dumps({sql_op: {"fp": "0" * 16, "since_round": 1}})
     )
-    ordered = _sweep_order(["op_other", sql_op], root=str(tmp_path))
+    ordered = sweep_order(["op_other", sql_op], str(tmp_path), ops)
     assert ordered[0] == sql_op, f"stale-fp op must re-certify first: {ordered}"
+    write_fp_book(str(tmp_path), ops)
     healed = json.loads((fpdir / "oracle_fp.json").read_text())
     assert healed[sql_op]["fp"] == cur_fp
     assert healed[sql_op]["since_round"] == 4
 
-    # Case 4 (round-10 review): a MALFORMED entry — fp correct but
-    # since_round null (hand-edit / merge mangle) — must be healed,
-    # never crash the registry (iter_correctness_rounds' own rule).
+    # Case 4: a MALFORMED entry — fp correct but since_round null
+    # (hand-edit / merge mangle) — must be healed, never crash the
+    # fold (iter_correctness_rounds' own rule).
     (fpdir / "oracle_fp.json").write_text(
         json.dumps({sql_op: {"fp": cur_fp, "since_round": None}})
     )
-    ordered = _sweep_order(["op_other", sql_op], root=str(tmp_path))
+    ordered = sweep_order(["op_other", sql_op], str(tmp_path), ops)
     assert ordered[0] == sql_op, f"healed op must re-certify first: {ordered}"
+    write_fp_book(str(tmp_path), ops)
     healed = json.loads((fpdir / "oracle_fp.json").read_text())
     assert healed[sql_op]["since_round"] == 4
 
@@ -239,11 +241,12 @@ def test_sweep_order_demotes_rewritten_rows_snapshots(tmp_path):
     as the fingerprinted text."""
     import json
 
-    from ocdb_server_spark.registry import (
-        _sweep_order,
+    from ocdb_server_spark.evidence import (
         certified_rounds,
-        load_all,
+        sweep_order,
+        write_fp_book,
     )
+    from ocdb_server_spark.registry import load_all
 
     ops = load_all()
     rows_op = "op194_minhash_rollup"
@@ -275,33 +278,36 @@ def test_sweep_order_demotes_rewritten_rows_snapshots(tmp_path):
 
     # Case 1: book fp matches the snapshot, green postdates since_round
     # → stays certified.
-    (fpdir / "oracle_fp.json").write_text(
-        json.dumps({rows_op: {"fp": cur_fp, "since_round": 2}})
-    )
-    assert rows_op in certified_rounds(str(tmp_path))
+    cur_src = ops[rows_op].src_fp
+    (fpdir / "oracle_fp.json").write_text(json.dumps(
+        {rows_op: {"fp": cur_fp, "since_round": 2, "src_fp": cur_src}}
+    ))
+    assert rows_op in certified_rounds(str(tmp_path), ops)
 
     # Case 2: the snapshot entry is REWRITTEN (regenerated after a
-    # semantics change) — refresh must heal the book (since_round =
+    # semantics change) — the fold heals the book (since_round =
     # latest recorded round + 1 = 4) and the demotion fires.
     (tdir / "rows_snapshot_sf0.001.json").write_text(
         json.dumps({rows_op: {**snap_entry, "hash": "deadbeef"}})
     )
-    ordered = _sweep_order(["op_other", rows_op], root=str(tmp_path))
+    ordered = sweep_order(["op_other", rows_op], str(tmp_path), ops)
     assert ordered[0] == rows_op, (
         f"rewritten-snapshot op must re-certify first: {ordered}"
     )
+    write_fp_book(str(tmp_path), ops)
     healed = json.loads((fpdir / "oracle_fp.json").read_text())
     assert healed[rows_op]["since_round"] == 4
     assert healed[rows_op]["fp"] != cur_fp
 
     # Case 3: no snapshot file on disk (tests-less deploy) — nothing to
-    # fingerprint: the on-disk book is kept as-is and no ROWS demotion
+    # fingerprint: the book's entry is kept as-is and no ROWS demotion
     # fires (degrade-gracefully, never crash or spuriously demote).
     (tdir / "rows_snapshot_sf0.001.json").unlink()
     (fpdir / "oracle_fp.json").write_text(
         json.dumps({rows_op: {"fp": cur_fp, "since_round": 2}})
     )
-    assert rows_op in certified_rounds(str(tmp_path))
+    assert rows_op in certified_rounds(str(tmp_path), ops)
+    write_fp_book(str(tmp_path), ops)
     kept = json.loads((fpdir / "oracle_fp.json").read_text())
     assert kept[rows_op] == {"fp": cur_fp, "since_round": 2}
 
@@ -327,27 +333,24 @@ def test_output_schema_is_canonicalizer_safe(name, spark, sf_dir):
 
 
 def test_sweep_order_demotes_rewritten_plan_source(tmp_path):
-    """Round-11 verdict item 3: a PLAN rewrite under an unchanged
-    checker (op261's r11 parallel-writer precedent) used to be
-    invisible to the book and relied on a hand-bumped since_round.
-    Each entry now carries src_fp = hash of the op function's source
-    at registration. Pins: (1) a pre-r12 entry without src_fp ADOPTS
-    the current source with no bump (grandfathering — certification
-    survives the migration); (2) an entry whose src_fp no longer
-    matches the registered plan demotes to the front and heals with
-    since_round = latest+1, no hand-bump; (3) a matching src_fp is a
-    no-op."""
+    """A PLAN rewrite under an unchanged checker (op261's
+    parallel-writer precedent) must re-front the op without a
+    hand-bumped since_round. Each entry carries src_fp = hash of the op
+    function's source at registration. Pins: (1) an entry whose src_fp
+    no longer matches the registered plan demotes to the front and
+    heals with since_round = latest+1, no hand-bump; (2) a matching
+    src_fp is a no-op."""
     import json
 
-    from ocdb_server_spark.registry import (
-        REGISTRY,
+    from ocdb_server_spark.evidence import (
         _oracle_fp,
-        _sweep_order,
         certified_rounds,
-        load_all,
+        sweep_order,
+        write_fp_book,
     )
+    from ocdb_server_spark.registry import REGISTRY, load_all
 
-    load_all()
+    ops = load_all()
     sql_op = "op17_agg_groupby"
     assert REGISTRY[sql_op].src_fp, "registration must fingerprint the source"
     green_sql = {
@@ -362,36 +365,28 @@ def test_sweep_order_demotes_rewritten_plan_source(tmp_path):
     cur_fp = _oracle_fp(REGISTRY[sql_op].oracle)
     cur_src = REGISTRY[sql_op].src_fp
 
-    # Case 1: legacy entry (no src_fp) — adopted in place, NOT demoted.
-    (fpdir / "oracle_fp.json").write_text(
-        json.dumps({sql_op: {"fp": cur_fp, "since_round": 2}})
-    )
-    assert sql_op in certified_rounds(str(tmp_path))
-    migrated = json.loads((fpdir / "oracle_fp.json").read_text())
-    assert migrated[sql_op] == {
-        "fp": cur_fp, "since_round": 2, "src_fp": cur_src,
-    }
-
-    # Case 2: the registered plan was rewritten (src_fp differs) under
+    # Case 1: the registered plan was rewritten (src_fp differs) under
     # an UNCHANGED oracle — the green row certified a different plan:
     # demote to the front, heal since_round to latest+1 = 4.
     (fpdir / "oracle_fp.json").write_text(json.dumps(
         {sql_op: {"fp": cur_fp, "since_round": 2, "src_fp": "0" * 16}}
     ))
-    ordered = _sweep_order(["op_other", sql_op], root=str(tmp_path))
+    ordered = sweep_order(["op_other", sql_op], str(tmp_path), ops)
     assert ordered[0] == sql_op, (
         f"plan-rewritten op must re-certify first: {ordered}"
     )
+    write_fp_book(str(tmp_path), ops)
     healed = json.loads((fpdir / "oracle_fp.json").read_text())
     assert healed[sql_op] == {
         "fp": cur_fp, "since_round": 4, "src_fp": cur_src,
     }
 
-    # Case 3: everything matches — entry untouched, still certified.
+    # Case 2: everything matches — entry untouched, still certified.
     (fpdir / "oracle_fp.json").write_text(json.dumps(
         {sql_op: {"fp": cur_fp, "since_round": 2, "src_fp": cur_src}}
     ))
-    assert sql_op in certified_rounds(str(tmp_path))
+    assert sql_op in certified_rounds(str(tmp_path), ops)
+    write_fp_book(str(tmp_path), ops)
     kept = json.loads((fpdir / "oracle_fp.json").read_text())
     assert kept[sql_op]["since_round"] == 2
 
@@ -408,7 +403,7 @@ def test_register_deps_fold_into_src_fp():
     import inspect
 
     from ocdb_server_spark.functions.cdc import apply_changes, collapse_feed
-    from ocdb_server_spark.operators.pipeline_r12 import (
+    from ocdb_server_spark.operators.lakehouse import (
         cdc_base_snapshot,
         cdc_changes_feed,
         op264_cdc_apply_changes,
@@ -433,7 +428,7 @@ def test_register_deps_fold_into_src_fp():
     ).hexdigest()[:16]
     assert bare != expected
 
-    from ocdb_server_spark.operators.pipeline_r5 import (
+    from ocdb_server_spark.operators.similarity import (
         bm25_scored_docs,
         op183_bm25_topk,
     )
@@ -452,7 +447,7 @@ def test_backup_correctness_files_are_skipped(tmp_path):
     is a backup/rename and must not fold as evidence."""
     import json
 
-    from ocdb_server_spark.registry import iter_correctness_rounds
+    from ocdb_server_spark.evidence import iter_correctness_rounds
 
     green = {
         "rows_match": True, "schema_match": True, "hash_match": True,
@@ -468,12 +463,12 @@ def test_backup_correctness_files_are_skipped(tmp_path):
 
 
 def test_sweep_order_survives_malformed_op_costs(tmp_path):
-    """Round-13 review: a list-shaped or string-valued op_costs.json
-    crashed load_all() — and with it every driver entry point. The
-    registry's own rule: a malformed book never breaks the registry."""
+    """A list-shaped or string-valued op_costs.json must not crash the
+    sweep order — and with it every driver entry point. A malformed
+    book never breaks the fold."""
     import json
 
-    from ocdb_server_spark.registry import _sweep_order
+    from ocdb_server_spark.evidence import sweep_order
 
     green = {
         "rows_match": True, "schema_match": True, "hash_match": True,
@@ -483,11 +478,11 @@ def test_sweep_order_survives_malformed_op_costs(tmp_path):
     pkg = tmp_path / "ocdb_server_spark"
     pkg.mkdir()
     (pkg / "op_costs.json").write_text(json.dumps(["not", "a", "dict"]))
-    assert _sweep_order(["op_a", "op_b"], root=str(tmp_path))  # no crash
+    assert sweep_order(["op_a", "op_b"], str(tmp_path), {})  # no crash
     (pkg / "op_costs.json").write_text(
         json.dumps({"op_a": "NaN-ish string", "op_b": 0.5})
     )
-    ordered = _sweep_order(["op_a", "op_b"], root=str(tmp_path))
+    ordered = sweep_order(["op_a", "op_b"], str(tmp_path), {})
     assert set(ordered) == {"op_a", "op_b"}
 
 
@@ -506,3 +501,91 @@ def test_unhashable_dep_does_not_zero_plan_fingerprint():
         assert REGISTRY[name].src_fp != ""
     finally:
         REGISTRY.pop(name, None)
+
+
+# Runs load_all() in a fresh interpreter with open() and os.replace()
+# refusing writes under the repository root, and reports which files
+# were opened.
+_NO_WRITE_PROBE = r"""
+import builtins, io, json, os, sys
+
+root = os.path.realpath(sys.argv[1])
+opened = []
+real_open, real_replace = builtins.open, os.replace
+
+
+def under_root(path):
+    return os.path.realpath(os.fspath(path)).startswith(root + os.sep)
+
+
+def guarded_open(file, mode="r", *args, **kwargs):
+    if not isinstance(file, int):
+        opened.append(os.fspath(file))
+        if any(c in mode for c in "wax+") and under_root(file):
+            raise PermissionError(f"write under the repository root: {file}")
+    return real_open(file, mode, *args, **kwargs)
+
+
+def guarded_replace(src, dst, *args, **kwargs):
+    if under_root(dst):
+        raise PermissionError(f"write under the repository root: {dst}")
+    return real_replace(src, dst, *args, **kwargs)
+
+
+builtins.open = io.open = guarded_open
+os.replace = guarded_replace
+
+from ocdb_server_spark.registry import load_all
+
+ops = load_all()
+print(json.dumps({"ops": sorted(ops), "opened": opened}))
+"""
+
+
+def test_load_all_writes_nothing():
+    """load_all() only registers: it writes no file under the repository
+    and reads no driver evidence (CORRECTNESS_r*.json) or cost book."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from ocdb_server_spark.evidence import ROOT
+
+    path = os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
+    env = dict(os.environ, PYTHONPATH=path, PYTHONDONTWRITEBYTECODE="1")
+    proc = subprocess.run(
+        [sys.executable, "-c", _NO_WRITE_PROBE, ROOT],
+        cwd=ROOT, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert len(out["ops"]) == 267
+    assert out["ops"] == sorted(OPS)
+    evidence_reads = [
+        p for p in out["opened"]
+        if os.path.basename(p).startswith("CORRECTNESS_r")
+        or os.path.basename(p) == "op_costs.json"
+    ]
+    assert not evidence_reads, f"load_all() read driver evidence: {evidence_reads}"
+
+
+def test_fp_book_is_fresh():
+    """The committed fingerprint book equals what the explicit refresh
+    would write: every oracle, snapshot or plan edit lands together
+    with its since_round bump."""
+    import json
+    import os
+
+    from ocdb_server_spark.evidence import BOOK, ROOT, fresh_fp_book
+
+    want = fresh_fp_book(ROOT, OPS)
+    with open(os.path.join(ROOT, BOOK)) as f:
+        have = f.read()
+    if have != want:
+        old, new = json.loads(have), json.loads(want)
+        stale = sorted(k for k in old.keys() | new.keys() if old.get(k) != new.get(k))
+        raise AssertionError(
+            f"{BOOK} is stale for {stale}; run "
+            "`python -m ocdb_server_spark.evidence` and commit the result"
+        )

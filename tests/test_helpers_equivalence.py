@@ -151,7 +151,7 @@ def test_mulmod32_matches_bigint_and_never_overflows(spark, ids):
     hash constants, in both engines."""
     import duckdb as _duck
 
-    from ocdb_server_spark.operators.pipeline_r4b import (
+    from ocdb_server_spark.operators.stats import (
         _KNUTH,
         _SPLIT_MULT,
         _mulmod32,
@@ -297,14 +297,14 @@ def test_upsert_movable_full_rewrite_under_dynamic_session(spark, tmp_path):
     """Round-13 review: the movable-partitions branch relied on the
     session's partitionOverwriteMode being static; a session configured
     dynamic silently kept the vacated partition's stale copy."""
-    from ocdb_server_spark.sinks import upsert_partitioned, write_partitioned
+    from ocdb_server_spark.sinks import upsert_partitioned
 
     table = str(tmp_path / "movable_dyn")
     base = spark.createDataFrame(
         [(1, 1, "old", "a"), (2, 1, "keep", "b")],
         "id int, version int, val string, part string",
     )
-    write_partitioned(base, table, "part")
+    base.write.partitionBy("part").mode("overwrite").parquet(table)
     moved = spark.createDataFrame(
         [(1, 2, "moved", "b")], "id int, version int, val string, part string"
     )

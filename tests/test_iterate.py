@@ -13,7 +13,7 @@ from ocdb_server_spark.functions.iterate import (
     any_row_differs,
     iterate_to_fixpoint,
 )
-from ocdb_server_spark.operators.components import connected_components
+from ocdb_server_spark.operators.graph import connected_components
 
 
 def _chain_edges(spark, n):

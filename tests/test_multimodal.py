@@ -5,15 +5,23 @@ schema, Arrow batch iteration, metadata-only pruning — is real."""
 
 from __future__ import annotations
 
+import struct
+
 import pytest
 
-from ocdb_server_spark.sources.multimodal import (
-    DECODED_SCHEMA,
-    MEDIA_SCHEMA,
-    decode_image_stub,
-    decode_images,
-    make_synthetic_assets,
-)
+from ocdb_server_spark.sources.multimodal import MEDIA_SCHEMA, decode_image_stub
+
+
+def make_synthetic_assets(spark, n: int = 64):
+    """Deterministic fake media table: payload = 8-byte header
+    (width:int32, height:int32) + filler — stands in for real encoded
+    bytes so the pipeline is end-to-end testable without codecs."""
+    rows = []
+    for i in range(n):
+        w, h = 64 + (i % 8) * 16, 48 + (i % 6) * 16
+        payload = struct.pack("<ii", w, h) + bytes((i % 251,)) * 128
+        rows.append((i, "image", "image/fake", payload, len(payload)))
+    return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
 def test_stub_raises_without_fake():
@@ -22,8 +30,6 @@ def test_stub_raises_without_fake():
 
 
 def test_stub_fake_decodes_header():
-    import struct
-
     payload = struct.pack("<ii", 320, 240) + b"\x01" * 8
     assert decode_image_stub(payload, fake=True) == (320, 240)
 
@@ -36,18 +42,6 @@ def assets(spark):
 def test_media_schema(assets):
     assert assets.schema == MEDIA_SCHEMA
     assert assets.count() == 64
-
-
-def test_decode_images_mapinpandas(assets):
-    decoded = decode_images(assets, fake=True)
-    assert decoded.schema == DECODED_SCHEMA
-    rows = {r["asset_id"]: r for r in decoded.collect()}
-    assert len(rows) == 64
-    # dims must match the deterministic generator formula
-    for i in (0, 7, 13, 63):
-        assert rows[i]["width"] == 64 + (i % 8) * 16
-        assert rows[i]["height"] == 48 + (i % 6) * 16
-        assert rows[i]["n_bytes"] == 8 + 128
 
 
 def test_metadata_query_prunes_payload(assets, tmp_path):

@@ -8,7 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from ocdb_server_spark.operators.northstar import minhash_neardup_pairs
+from ocdb_server_spark.operators.dedup import minhash_neardup_pairs
 from ocdb_server_spark.registry import load_all
 
 OPS = load_all()

@@ -48,7 +48,7 @@ def test_simhash_identical_and_near(crafted_docs):
 def test_simhash_agg_matches_expression(crafted_docs):
     """op88's codegen explode+agg signature path must be bit-identical
     to the reference expression in functions/text.simhash64."""
-    from ocdb_server_spark.operators.pipeline_ext import simhash_signatures
+    from ocdb_server_spark.operators.dedup import simhash_signatures
 
     via_agg = {
         r["doc_id"]: r["sh"] for r in simhash_signatures(crafted_docs).collect()
@@ -120,12 +120,28 @@ def test_winnow_shared_substring_guarantee(spark):
     assert fps[1] & fps[2]
 
 
+def test_op94_evaluates_winnow_chain_once_per_row(spark, sf_dir):
+    """op94 reads n_fingerprints, fp_min and fp_max out of ONE
+    let-bound evaluation of the winnow_fingerprints array: the optimized
+    and executed plans carry the gram-hash chain once, and the three
+    struct fields read the lambda variable instead of re-evaluating the
+    chain. An optimizer that inlined the binding (or an op that
+    referenced the array three times) would show three hash chains."""
+    qe = OPS["op94_doc_fingerprint"].fn(spark, sf_dir)._jdf.queryExecution()
+    optimized = qe.optimizedPlan().toString()
+    executed = qe.executedPlan().toString()
+    assert optimized.count("xxhash64(") == 1, optimized
+    assert executed.count("xxhash64(") == 1, executed
+    for field in ("size(lambda ", "array_min(lambda ", "array_max(lambda "):
+        assert field in optimized, f"struct field not read from the binding: {field}"
+
+
 # ------------------------------------------------------------ LSH / IVF
 
 
 def test_op90_pairs_are_high_similarity(spark, sf_dir):
     # gate surface: the planted pairs must all clear the 0.8 bar
-    from ocdb_server_spark.operators.pipeline_ext import op90_gate_planted
+    from ocdb_server_spark.operators.dedup import op90_gate_planted
 
     out = op90_gate_planted(spark, sf_dir).collect()
     assert out  # the gate path is never empty — it recovers the plant
@@ -183,7 +199,7 @@ def test_op90_default_is_faithful_corpus_answer(spark, sf_dir, monkeypatch):
     import __spark_entry__ as entry
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.pipeline_ext import lsh_neardup_pairs
+    from ocdb_server_spark.operators.dedup import lsh_neardup_pairs
 
     faithful = lsh_neardup_pairs(
         load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -204,7 +220,7 @@ def test_lsh_recovers_planted_neardups(spark):
     perturbation → cosine ≈ 1) and exclude random pairs."""
     import numpy as np
 
-    from ocdb_server_spark.operators.pipeline_ext import lsh_neardup_pairs
+    from ocdb_server_spark.operators.dedup import lsh_neardup_pairs
 
     rng = np.random.default_rng(11)
     base = rng.standard_normal((20, 64))
@@ -237,7 +253,7 @@ def test_lsh_scaled_copies_recall_is_total(spark):
     (different hashing, reordered fold, lossy cast) fails here."""
     import numpy as np
 
-    from ocdb_server_spark.operators.pipeline_ext import lsh_neardup_pairs
+    from ocdb_server_spark.operators.dedup import lsh_neardup_pairs
 
     rows = []
     expected = set()
@@ -292,7 +308,7 @@ def test_ivf_recall_on_planted_clusters(spark):
     pruning keep the right list(s)."""
     import numpy as np
 
-    from ocdb_server_spark.operators.pipeline_ext import ivf_topk
+    from ocdb_server_spark.operators.similarity import ivf_topk
 
     rng = np.random.default_rng(7)
     n_clusters, per, dim = 20, 100, 16
@@ -323,7 +339,7 @@ def test_ivf_lloyd_training_does_not_hurt_recall(spark):
     sit at cluster means instead of on sampled points."""
     import numpy as np
 
-    from ocdb_server_spark.operators.pipeline_ext import ivf_topk
+    from ocdb_server_spark.operators.similarity import ivf_topk
 
     rng = np.random.default_rng(7)
     n_clusters, per, dim = 20, 100, 16

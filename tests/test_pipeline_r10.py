@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import math
 
-from ocdb_server_spark.operators.pipeline_r10 import (
+from ocdb_server_spark.operators.stats import (
     op262_demand_classification,
 )
 

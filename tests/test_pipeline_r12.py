@@ -12,13 +12,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocdb_server_spark.io import load_table
-from ocdb_server_spark.operators.pipeline_r12 import (
+from ocdb_server_spark.operators.lakehouse import (
     _CDC_BASE_MIN_KEY,
+    op264_cdc_apply_changes,
+)
+from ocdb_server_spark.operators.similarity import (
     _RRF_DEPTH,
     _RRF_K,
     _RRF_TOPK,
     op263_rrf_hybrid_topk,
-    op264_cdc_apply_changes,
 )
 
 

@@ -205,10 +205,8 @@ def test_op265_streaming_matches_op264_batch(spark, sf_dir):
     replay-hardened op265 ends EXACTLY where op264's one-shot batch
     MERGE ends on the same feed (the in-op asserts additionally prove
     a duplicated batch commits nothing — they run inside this call)."""
-    from ocdb_server_spark.operators.pipeline_r12 import (
+    from ocdb_server_spark.operators.lakehouse import (
         op264_cdc_apply_changes,
-    )
-    from ocdb_server_spark.operators.pipeline_r13 import (
         op265_stream_cdc_apply_changes,
     )
 
@@ -228,7 +226,7 @@ def test_op265_streaming_matches_op264_batch(spark, sf_dir):
 
 @pytest.fixture(scope="module")
 def served_rows(spark, sf_dir):
-    from ocdb_server_spark.operators.pipeline_r13 import (
+    from ocdb_server_spark.operators.similarity import (
         op266_rrf_hybrid_serving,
     )
 
@@ -242,10 +240,7 @@ def test_op266_no_training_in_query_plan(spark, sf_dir):
     import os
 
     from ocdb_server_spark.functions.ann_index import index_path
-    from ocdb_server_spark.operators.pipeline_r13 import (
-        op266_rrf_hybrid_serving,
-    )
-    from ocdb_server_spark.operators.pipeline_r5 import _PQ_K
+    from ocdb_server_spark.operators.similarity import _PQ_K, op266_rrf_hybrid_serving
 
     plan = (
         op266_rrf_hybrid_serving(spark, sf_dir)
@@ -260,7 +255,7 @@ def test_op266_no_training_in_query_plan(spark, sf_dir):
 def test_op266_scores_reproduce_from_ranks(served_rows):
     """Same fusion arithmetic as op263: rrf_score is exactly
     Σ 1/(60+rank) over the non-null legs."""
-    from ocdb_server_spark.operators.pipeline_r12 import _RRF_K, _RRF_TOPK
+    from ocdb_server_spark.operators.similarity import _RRF_K, _RRF_TOPK
 
     assert len(served_rows) == _RRF_TOPK
     for r in served_rows:
@@ -277,7 +272,7 @@ def test_op266_lexical_leg_identical_to_op263(spark, sf_dir, served_rows):
     """Swapping the DENSE ranker must not touch the lexical leg: the
     (doc_id, lex_rank) pairs are identical across the twins — only
     dense_rank (and hence fusion order membership) may move."""
-    from ocdb_server_spark.operators.pipeline_r12 import op263_rrf_hybrid_topk
+    from ocdb_server_spark.operators.similarity import op263_rrf_hybrid_topk
 
     exact = {
         r.doc_id: r.lex_rank
@@ -293,7 +288,7 @@ def test_op266_high_overlap_with_exact_twin(spark, sf_dir, served_rows):
     """The PQ-served top-20 must stay close to the exact twin's: ≥ 70%
     doc overlap (the dense leg's own recall@10 ≥ 0.9 gate lives with
     op180; fusion dampens residual rank noise further)."""
-    from ocdb_server_spark.operators.pipeline_r12 import op263_rrf_hybrid_topk
+    from ocdb_server_spark.operators.similarity import op263_rrf_hybrid_topk
 
     exact_ids = {r.doc_id for r in op263_rrf_hybrid_topk(spark, sf_dir).collect()}
     served_ids = {r.doc_id for r in served_rows}

@@ -11,7 +11,7 @@ OPS = load_all()
 
 
 def _prefix_groups(df):
-    from ocdb_server_spark.operators.pipeline_r4 import op154_prefix_dedup  # noqa: F401
+    from ocdb_server_spark.operators.dedup import op154_prefix_dedup  # noqa: F401
     # run op154's logic on a crafted frame via the same expressions
     return (
         df.filter(F.length("text") >= 64)

@@ -34,7 +34,7 @@ def test_zorder_blocks_partition_the_plane(spark, sf_dir):
 
 def test_morton_bit_interleave_exact(spark):
     """Spot-check the Morton code against a Python reference."""
-    from ocdb_server_spark.operators.pipeline_r4b import _morton
+    from ocdb_server_spark.operators.lakehouse import _morton
 
     def py_morton(x, y):
         z = 0

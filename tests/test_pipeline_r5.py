@@ -20,7 +20,7 @@ def test_compaction_bins_respect_target(spark, sf_dir):
     its cumulative start offset is below the next target boundary, so
     every bin's total is < target + its largest file (only the file
     that straddles the boundary can overshoot)."""
-    from ocdb_server_spark.operators.pipeline_r5 import _COMPACT_TARGET
+    from ocdb_server_spark.operators.lakehouse import _COMPACT_TARGET
 
     rows = OPS["op178_compaction_plan"].fn(spark, sf_dir).collect()
     assert rows, "planner must emit at least one bin"
@@ -43,7 +43,7 @@ def test_sorted_export_files_really_are_sorted(spark, sf_dir, tmp_path):
     import pyarrow.parquet as pq
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.pipeline_r5 import (
+    from ocdb_server_spark.operators.lakehouse import (
         _N_SHARDS,
         sorted_export_frame,
     )
@@ -69,7 +69,7 @@ def test_pq_recall_on_planted_clusters(spark):
     (same fixture family as the op95 IVF gate, at the real 64-dim)."""
     import numpy as np
 
-    from ocdb_server_spark.operators.pipeline_r5 import pq_topk
+    from ocdb_server_spark.operators.similarity import pq_topk
 
     rng = np.random.default_rng(7)
     n_clusters, per, dim = 20, 100, 64
@@ -151,7 +151,7 @@ def test_mg_sketch_superset_guarantee_on_zipf():
 
     import pandas as pd
 
-    from ocdb_server_spark.operators.pipeline_r5 import (
+    from ocdb_server_spark.operators.stats import (
         _MG_K,
         _mg_sketch_batches,
     )
@@ -188,14 +188,14 @@ def test_heavy_hitters_output_is_layout_independent(spark, sf_dir):
     base = OPS["op185_heavy_hitters_mg"].fn(spark, sf_dir)
     want = sorted((r["word"], r["n"]) for r in base.collect())
     # rebuild the op's pipeline over a repartitioned source
-    from ocdb_server_spark.operators import pipeline_r5 as r5
+    from ocdb_server_spark.operators import stats
 
     d = load_table(spark, sf_dir, "documents").repartition(7)
     words = d.select(F.explode(F.split("text", " ")).alias("word")).filter(
         F.col("word") != ""
     )
     cands = (
-        words.mapInPandas(r5._mg_sketch_batches, "word string, lb long")
+        words.mapInPandas(stats._mg_sketch_batches, "word string, lb long")
         .groupBy("word")
         .agg(F.sum("lb").alias("lb"))
         .select("word")
@@ -208,7 +208,7 @@ def test_heavy_hitters_output_is_layout_independent(spark, sf_dir):
     )
     got = (
         exact.crossJoin(F.broadcast(total))
-        .filter(F.col("n") > F.col("total") / r5._MG_PHI_DEN)
+        .filter(F.col("n") > F.col("total") / stats._MG_PHI_DEN)
         .select("word", "n")
     )
     assert sorted((r["word"], r["n"]) for r in got.collect()) == want

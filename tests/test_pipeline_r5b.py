@@ -33,7 +33,7 @@ def test_pagerank_matches_python_reference_on_crafted_graph(spark):
     """Spark's 5-iteration loop must reproduce the pure-Python integer
     recurrence bit-for-bit on a small asymmetric graph (star + chain:
     ranks genuinely differ per node)."""
-    from ocdb_server_spark.operators import pipeline_r5b as r5b
+    from ocdb_server_spark.operators import graph
 
     # part 0 links suppliers 0,1,2; part 1 links supplier 0; part 2
     # links supplier 2 → node ids via the op's 2p / 2s+1 encoding
@@ -41,7 +41,7 @@ def test_pagerank_matches_python_reference_on_crafted_graph(spark):
     edges = [(2 * p, 2 * s + 1) for p, s in pairs] + [
         (2 * s + 1, 2 * p) for p, s in pairs
     ]
-    want = _py_pagerank(edges, r5b._PR_ITERS, r5b._PR_SCALE)
+    want = _py_pagerank(edges, graph._PR_ITERS, graph._PR_SCALE)
 
     li = spark.createDataFrame(
         [(p, s) for p, s in pairs], "l_partkey long, l_suppkey long"
@@ -64,12 +64,12 @@ def test_pagerank_matches_python_reference_on_crafted_graph(spark):
     )
     params = nodes.agg(
         F.count("*").cast("bigint").alias("n"),
-        F.expr(f"(15 * {r5b._PR_SCALE}L) div (100 * count(*))").alias("base_u"),
+        F.expr(f"(15 * {graph._PR_SCALE}L) div (100 * count(*))").alias("base_u"),
     )
     ranks = nodes.crossJoin(F.broadcast(params)).select(
-        "node", F.expr(f"{r5b._PR_SCALE}L div n").alias("u")
+        "node", F.expr(f"{graph._PR_SCALE}L div n").alias("u")
     )
-    for _ in range(r5b._PR_ITERS):
+    for _ in range(graph._PR_ITERS):
         contrib = ranks.join(outdeg, "node").select(
             "node", F.expr("u div outdeg").alias("contrib")
         )
@@ -197,7 +197,7 @@ def test_substring_spans_cover_planted_duplicates(spark):
     windows fused into one maximal span), and spans never exceed doc
     length. Also: a crafted corpus where only a 10-token quote is
     shared must yield exactly that quote's span in both docs."""
-    from ocdb_server_spark.operators import pipeline_r5b as r5b
+    from ocdb_server_spark.operators import dedup
 
     quote = " ".join(f"q{i}" for i in range(10))
     rows = [
@@ -208,15 +208,15 @@ def test_substring_spans_cover_planted_duplicates(spark):
     d = spark.createDataFrame(rows, "doc_id long, text string")
 
     # run the op body against the crafted frame via a shim loader
-    orig = r5b.load_table
+    orig = dedup.load_table
     try:
-        r5b.load_table = lambda s, sf, name: d
+        dedup.load_table = lambda s, sf, name: d
         got = {
             (r["doc_id"], r["span_start"], r["span_len"])
-            for r in r5b.op190_substring_dup_spans(spark, "crafted").collect()
+            for r in dedup.op190_substring_dup_spans(spark, "crafted").collect()
         }
     finally:
-        r5b.load_table = orig
+        dedup.load_table = orig
     # doc1: quote occupies tokens 9..18 → windows 9..11 (L=8) → span (9, 10)
     # doc2: tokens 1..10 → windows 1..3 → span (1, 10)
     assert got == {(1, 9, 10), (2, 1, 10)}, got
@@ -258,7 +258,7 @@ def test_bigram_backoff_fires_on_unseen_language(spark):
     the en training slice: every one of its transitions must take the
     backoff path, and its avg_neglogp must exceed the in-model doc's
     (the filter's discriminating direction)."""
-    from ocdb_server_spark.operators import pipeline_r5b as r5b
+    from ocdb_server_spark.operators import text
 
     rows = [
         (1, "en", "a b c a b c a b"),
@@ -266,15 +266,15 @@ def test_bigram_backoff_fires_on_unseen_language(spark):
         (3, "zh", "x y z x y z x y"),
     ]
     d = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    orig = r5b.load_table
+    orig = text.load_table
     try:
-        r5b.load_table = lambda s, sf, name: d
+        text.load_table = lambda s, sf, name: d
         got = {
             r["doc_id"]: (r["n_transitions"], r["n_backoff"], r["avg_neglogp"])
-            for r in r5b.op191_bigram_logprob(spark, "crafted").collect()
+            for r in text.op191_bigram_logprob(spark, "crafted").collect()
         }
     finally:
-        r5b.load_table = orig
+        text.load_table = orig
     assert got[3][0] == got[3][1] == 7, "all zh transitions must back off"
     assert got[1][1] == 0 and got[2][1] == 0
     assert got[3][2] > got[1][2] and got[3][2] > got[2][2]
@@ -288,7 +288,7 @@ def test_containment_catches_planted_dups_and_quote_inclusion(spark):
     from pyspark.sql import functions as F
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators import pipeline_r5b as r5b
+    from ocdb_server_spark.operators import dedup
 
     rows = OPS["op192_shingle_containment"].fn(
         spark, "/root/testdata/sf0.1"
@@ -311,12 +311,12 @@ def test_containment_catches_planted_dups_and_quote_inclusion(spark):
         ],
         "doc_id long, text string",
     )
-    orig = r5b.load_table
+    orig = dedup.load_table
     try:
-        r5b.load_table = lambda s, sf, name: crafted
-        got = r5b.op192_shingle_containment(spark, "crafted").collect()
+        dedup.load_table = lambda s, sf, name: crafted
+        got = dedup.op192_shingle_containment(spark, "crafted").collect()
     finally:
-        r5b.load_table = orig
+        dedup.load_table = orig
     assert len(got) == 1
     r = got[0]
     assert r["doc_a"] == 1 and r["containment_a"] == 1.0
@@ -328,23 +328,23 @@ def test_keyset_page_equals_offset_page(spark, sf_dir):
     that starts right after R in the same total order — the semantic
     contract that lets an API migrate from offset to keyset tokens."""
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators import pipeline_r5b as r5b
+    from ocdb_server_spark.operators import relational_ext
 
     o = load_table(spark, sf_dir, "orders")
     ordered = o.select("o_orderkey", "o_orderdate", "o_totalprice").orderBy(
         "o_orderdate", "o_orderkey"
     )
     allrows = ordered.collect()
-    cur_d = r5b._KS_CURSOR_DATE
+    cur_d = relational_ext._KS_CURSOR_DATE
     import datetime
 
     cd = datetime.datetime.fromisoformat(cur_d)
     idx = sum(
         1
         for r in allrows
-        if (r["o_orderdate"], r["o_orderkey"]) <= (cd, r5b._KS_CURSOR_KEY)
+        if (r["o_orderdate"], r["o_orderkey"]) <= (cd, relational_ext._KS_CURSOR_KEY)
     )
-    want = [tuple(r) for r in allrows[idx : idx + r5b._KS_PAGE]]
+    want = [tuple(r) for r in allrows[idx : idx + relational_ext._KS_PAGE]]
     got = [
         tuple(r)
         for r in OPS["op193_keyset_pagination"].fn(spark, sf_dir).collect()
@@ -360,16 +360,16 @@ def test_minhash_rollup_law_and_duplicate_sources(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators import pipeline_r5b as r5b
+    from ocdb_server_spark.operators import dedup
 
     rows = OPS["op194_minhash_rollup"].fn(spark, sf_dir).collect()
     sig = {
-        (r["level"], r["key"]): tuple(r[f"mh{i}"] for i in range(r5b._MH_K))
+        (r["level"], r["key"]): tuple(r[f"mh{i}"] for i in range(dedup._MH_K))
         for r in rows
     }
     corpus = sig[("corpus", "*")]
     srcs = [v for (lvl, _), v in sig.items() if lvl == "source"]
-    assert corpus == tuple(min(s[i] for s in srcs) for i in range(r5b._MH_K))
+    assert corpus == tuple(min(s[i] for s in srcs) for i in range(dedup._MH_K))
 
     # direct computation from all shingles, bypassing the rollup
     d = load_table(spark, sf_dir, "documents")
@@ -384,10 +384,10 @@ def test_minhash_rollup_law_and_duplicate_sources(spark, sf_dir):
     direct = sh.agg(
         *[
             F.expr(f"min(xxhash64({i}, shingle)) AS mh{i}")
-            for i in range(r5b._MH_K)
+            for i in range(dedup._MH_K)
         ]
     ).collect()[0]
-    assert corpus == tuple(direct[f"mh{i}"] for i in range(r5b._MH_K))
+    assert corpus == tuple(direct[f"mh{i}"] for i in range(dedup._MH_K))
 
     crafted = spark.createDataFrame(
         [
@@ -397,15 +397,15 @@ def test_minhash_rollup_law_and_duplicate_sources(spark, sf_dir):
         ],
         "doc_id long, text string, source string",
     )
-    orig = r5b.load_table
+    orig = dedup.load_table
     try:
-        r5b.load_table = lambda s, sf, name: crafted
+        dedup.load_table = lambda s, sf, name: crafted
         got = {
-            r["key"]: tuple(r[f"mh{i}"] for i in range(r5b._MH_K))
-            for r in r5b.op194_minhash_rollup(spark, "crafted").collect()
+            r["key"]: tuple(r[f"mh{i}"] for i in range(dedup._MH_K))
+            for r in dedup.op194_minhash_rollup(spark, "crafted").collect()
         }
     finally:
-        r5b.load_table = orig
+        dedup.load_table = orig
     assert got["s1"] == got["s2"], "identical sources must share a signature"
     assert got["s1"] != got["s3"]
 
@@ -418,18 +418,18 @@ def test_bottomk_sketch_merge_algebra_and_accuracy(spark, sf_dir):
     from pyspark.sql import Window as W, functions as F
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators import pipeline_r5b as r5b
+    from ocdb_server_spark.operators import stats
 
     rows = OPS["op201_bottomk_quantile_sketch"].fn(spark, sf_dir).collect()
     overall = next(r for r in rows if r["level"] == "all")
-    assert overall["k"] == r5b._BK_K
+    assert overall["k"] == stats._BK_K
 
     e = load_table(spark, sf_dir, "events").select(
         "value", F.xxhash64("event_id").alias("tag")
     )
     direct = (
         e.withColumn("rn", F.row_number().over(W.orderBy("tag")))
-        .filter(F.col("rn") <= r5b._BK_K)
+        .filter(F.col("rn") <= stats._BK_K)
         .agg(F.expr("round(percentile(value, 0.5), 6)").alias("p50"))
         .collect()[0]["p50"]
     )

@@ -7,7 +7,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from ocdb_server_spark.operators import pipeline_r6 as r6
+from ocdb_server_spark.operators import graph, similarity, stats, text
 
 
 @pytest.fixture(scope="module")
@@ -24,11 +24,11 @@ def emb(spark, sf_dir):
 
 def test_gram_matrix_matches_numpy(spark, sf_dir, emb):
     _, x = emb
-    q = np.round(x * r6._GRAM_SCALE).astype(np.int64)
+    q = np.round(x * similarity._GRAM_SCALE).astype(np.int64)
     expect = q.T @ q
     got = {
         (r.i, r.j): r.g
-        for r in r6.op211_gram_matrix(spark, sf_dir).collect()
+        for r in similarity.op211_gram_matrix(spark, sf_dir).collect()
     }
     d = q.shape[1]
     assert len(got) == d * (d + 1) // 2
@@ -46,7 +46,7 @@ def test_gram_partials_are_per_partition(spark, sf_dir):
 
     e = load_table(spark, sf_dir, "embeddings")
     nparts = e.rdd.getNumPartitions()
-    out = r6.op211_gram_matrix(spark, sf_dir)
+    out = similarity.op211_gram_matrix(spark, sf_dir)
     # the final agg input is bounded by partitions × triangle size
     assert out.count() == 64 * 65 // 2
     assert nparts * 2080 < e.count() * 64 or e.count() < 2080, (
@@ -56,7 +56,7 @@ def test_gram_partials_are_per_partition(spark, sf_dir):
 
 
 def _kmeans_reference(ids, x, k, iters):
-    q = np.round(x * 1000).astype(np.int64) + r6._KM_OFF
+    q = np.round(x * 1000).astype(np.int64) + similarity._KM_OFF
     order = np.argsort(ids)
     ids, q = ids[order], q[order]
     cents = {cid: q[list(ids).index(cid)] for cid in range(k)}
@@ -78,8 +78,8 @@ def _kmeans_reference(ids, x, k, iters):
 
 def test_kmeans_matches_python_reference(spark, sf_dir, emb):
     ids, x = emb
-    assign, cents = _kmeans_reference(ids, x, r6._KM_K, 2)
-    got = {r.cluster_id: r for r in r6.op212_kmeans_lloyd(spark, sf_dir).collect()}
+    assign, cents = _kmeans_reference(ids, x, similarity._KM_K, 2)
+    got = {r.cluster_id: r for r in similarity.op212_kmeans_lloyd(spark, sf_dir).collect()}
     # every vector assigned exactly once
     assert sum(r.n_members for r in got.values()) == len(ids)
     from collections import Counter
@@ -103,10 +103,10 @@ def test_bfs_distances_match_python(spark, sf_dir):
         adj.setdefault(p, set()).add(s)
         adj.setdefault(s, set()).add(p)
     sup = load_table(spark, sf_dir, "supplier").select("s_suppkey").collect()
-    seeds = {2 * r.s_suppkey + 1 for r in sup if r.s_suppkey <= r6._BFS_SEEDS}
+    seeds = {2 * r.s_suppkey + 1 for r in sup if r.s_suppkey <= graph._BFS_SEEDS}
     dist = {n: 0 for n in seeds}
     frontier = set(seeds)
-    for hop in range(1, r6._BFS_HOPS + 1):
+    for hop in range(1, graph._BFS_HOPS + 1):
         nxt = set()
         for n in frontier:
             for m in adj.get(n, ()):
@@ -121,7 +121,7 @@ def test_bfs_distances_match_python(spark, sf_dir):
     )
     got = {
         (r.dist, r.node_type): r.n_nodes
-        for r in r6.op213_bfs_reachability(spark, sf_dir).collect()
+        for r in graph.op213_bfs_reachability(spark, sf_dir).collect()
     }
     assert got == dict(expect)
 
@@ -137,15 +137,15 @@ def test_auc_matches_bruteforce_pairs(spark, sf_dir):
     wins = sum(1 for p in pos for n in neg if p > n)
     ties = sum(1 for p in pos for n in neg if p == n)
     expect = (wins + 0.5 * ties) / (len(pos) * len(neg))
-    out = r6.op214_auc_ranksum(spark, sf_dir).collect()[0]
+    out = stats.op214_auc_ranksum(spark, sf_dir).collect()[0]
     assert out.n_pos == len(pos) and out.n_neg == len(neg)
     assert out.auc == pytest.approx(expect, abs=1e-12)
     assert 0.0 <= out.auc <= 1.0
 
 
 def test_cms_overestimate_guarantee(spark, sf_dir):
-    rows = r6.op215_cms_pointquery(spark, sf_dir).collect()
-    assert {r.word for r in rows} == set(r6._CMS_PROBES)
+    rows = stats.op215_cms_pointquery(spark, sf_dir).collect()
+    assert {r.word for r in rows} == set(stats._CMS_PROBES)
     for r in rows:
         # CMS never undercounts; the absent probe has exact 0
         assert r.overcount >= 0, r
@@ -195,11 +195,11 @@ def word_freqs(spark, sf_dir):
 
 
 def test_bpe_train_matches_python_reference(spark, sf_dir, word_freqs):
-    merges, _ = _bpe_reference(word_freqs, r6._BPE_ROUNDS)
+    merges, _ = _bpe_reference(word_freqs, text._BPE_ROUNDS)
     got = sorted(
-        r6.op216_bpe_train(spark, sf_dir).collect(), key=lambda r: r.merge_rank
+        text.op216_bpe_train(spark, sf_dir).collect(), key=lambda r: r.merge_rank
     )
-    assert len(got) == r6._BPE_ROUNDS
+    assert len(got) == text._BPE_ROUNDS
     for row, (l, r, merged, cnt) in zip(got, merges):
         assert (row.lhs, row.rhs, row.merged, row.pair_count) == (l, r, merged, cnt)
 
@@ -209,7 +209,7 @@ def test_bpe_apply_costs_match_reference(spark, sf_dir, word_freqs):
 
     from ocdb_server_spark.io import load_table
 
-    _, seqs = _bpe_reference(word_freqs, r6._BPE_ROUNDS)
+    _, seqs = _bpe_reference(word_freqs, text._BPE_ROUNDS)
     rows = load_table(spark, sf_dir, "documents").select("lang", "text").collect()
     exp = defaultdict(lambda: [0, 0, 0])  # n_words, char, bpe
     for r in rows:
@@ -219,7 +219,7 @@ def test_bpe_apply_costs_match_reference(spark, sf_dir, word_freqs):
             exp[r.lang][0] += 1
             exp[r.lang][1] += len(w)
             exp[r.lang][2] += len(seqs[w])
-    got = {r.lang: r for r in r6.op217_bpe_apply(spark, sf_dir).collect()}
+    got = {r.lang: r for r in text.op217_bpe_apply(spark, sf_dir).collect()}
     assert set(got) == set(exp)
     for lang, (n, ch, bp) in exp.items():
         row = got[lang]
@@ -249,7 +249,7 @@ def test_neardup_canonicalize_planted_clusters(spark):
     docs = spark.createDataFrame(
         [(i, t, len(t)) for i, t, _ in rows], "doc_id long, text string, n_chars long"
     )
-    from ocdb_server_spark.operators.pipeline_r6 import neardup_canonicalize
+    from ocdb_server_spark.operators.graph import neardup_canonicalize
 
     out = {r.component: r for r in neardup_canonicalize(docs).collect()}
     assert len(out) == 2, out
@@ -272,7 +272,7 @@ def test_skyline_matches_bruteforce_and_keeps_ties(spark, sf_dir):
     from datetime import datetime
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.pipeline_r6 import (
+    from ocdb_server_spark.operators.relational_ext import (
         _skyline_kernel,
         op223_skyline,
     )
@@ -326,7 +326,7 @@ def test_feature_hashing_fixed_width_and_unbiased_shape(spark, sf_dir):
     bucket is in [0, B), and |value| <= n_tokens (signed ±1 pooling)."""
     from collections import Counter
 
-    from ocdb_server_spark.operators.pipeline_r6 import (
+    from ocdb_server_spark.operators.stats import (
         _FH_BUCKETS,
         op224_feature_hashing,
     )
@@ -344,7 +344,7 @@ def test_temporal_split_partitions_and_cold_start(spark, sf_dir):
     """op225: train+test == all rows; cold-start rows are exactly the
     test rows of users absent from the train window."""
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.pipeline_r6 import (
+    from ocdb_server_spark.operators.stats import (
         _TSPLIT_CUT,
         op225_temporal_split,
     )
@@ -372,7 +372,7 @@ def test_calibration_bins_cover_all_rows(spark, sf_dir):
     ids are in range, rates in [0,1], and the extremes land where the
     integer binning says they must."""
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.pipeline_r6 import (
+    from ocdb_server_spark.operators.stats import (
         _CAL_BINS,
         op227_calibration_bins,
     )
@@ -407,7 +407,7 @@ def test_mor_deletes_are_positional_and_exact(spark, sf_dir):
     import tempfile
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.pipeline_r6 import op228_mor_position_deletes
+    from ocdb_server_spark.operators.lakehouse import op228_mor_position_deletes
 
     out = {r.o_orderpriority: r for r in op228_mor_position_deletes(spark, sf_dir).collect()}
     o = load_table(spark, sf_dir, "orders")
@@ -437,7 +437,7 @@ def test_negative_sampling_reproducible_no_self_pairs(spark, sf_dir):
     """op229: the pair set is a pure function of ids — identical
     across partitionings; no doc draws itself; exactly k negatives
     per doc."""
-    from ocdb_server_spark.operators.pipeline_r6 import (
+    from ocdb_server_spark.operators.stats import (
         _NEG_K,
         op229_negative_sampling,
     )
@@ -459,7 +459,7 @@ def test_hilbert_recurrence_is_true_hilbert_curve():
     the two properties that define a Hilbert-class curve. Also checks
     the locality win over Z-order: every one of the 256 curve chunks
     is a contiguous connected region (Z-order chunks can seam-jump)."""
-    from ocdb_server_spark.operators.pipeline_r6 import _HIL_N, _hilbert_steps
+    from ocdb_server_spark.operators.lakehouse import _HIL_N, _hilbert_steps
 
     steps = _hilbert_steps("//")
 
@@ -494,7 +494,7 @@ def test_hilbert_chunks_have_tight_boxes(spark, sf_dir):
     box must be at most 32x32 cells (a perfect square chunk is 16x16;
     Hilbert guarantees small constant-factor boxes — a linear or
     row-major layout would span the full 256-wide dimension)."""
-    from ocdb_server_spark.operators.pipeline_r6 import op230_hilbert_layout
+    from ocdb_server_spark.operators.lakehouse import op230_hilbert_layout
 
     rows = op230_hilbert_layout(spark, sf_dir).collect()
     assert len(rows) <= 256
@@ -510,7 +510,7 @@ def test_holt_forecast_matches_python_recurrence(spark, sf_dir):
     from collections import Counter
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.pipeline_r6 import (
+    from ocdb_server_spark.operators.stats import (
         _HW_H,
         _HW_OFF,
         op231_holt_forecast,
@@ -548,7 +548,7 @@ def test_day_bitmaps_match_set_semantics(spark, sf_dir):
     from collections import defaultdict
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.pipeline_r6 import op232_day_bitmaps
+    from ocdb_server_spark.operators.stats import op232_day_bitmaps
 
     ev = load_table(spark, sf_dir, "events").selectExpr(
         "user_id", "event_type", "cast(ts as date) as d"
@@ -578,14 +578,13 @@ def test_interval_coverage_swallowed_span_case(spark):
     merge with a third span overlapping the LONG one's end."""
     from datetime import datetime
 
-    from ocdb_server_spark.operators.pipeline_r6 import (
+    from ocdb_server_spark.operators.relational_ext import (
         _COV_SPAN_US,
         op233_interval_coverage,
     )
 
     # craft via a temp view the op's shape reads? — call the kernel
     # directly on a hand-built frame instead
-    import ocdb_server_spark.operators.pipeline_r6 as r6mod
     from pyspark.sql import Window, functions as F
 
     base = 1_700_000_000_000_000
@@ -631,7 +630,7 @@ def test_holt_winters_seasonal_matches_python(spark, sf_dir):
     from collections import Counter
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.pipeline_r6 import (
+    from ocdb_server_spark.operators.stats import (
         _HW_OFF,
         _HWS_H,
         _HWS_M,
@@ -718,7 +717,7 @@ def test_theta_sketch_estimates_within_band(spark, sf_dir):
     within ±15% of the exact values (k=256 → ~6% standard error),
     and the exact columns must equal a python set computation."""
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.pipeline_r6 import op237_theta_set_ops
+    from ocdb_server_spark.operators.stats import op237_theta_set_ops
 
     rows = load_table(spark, sf_dir, "documents").select("lang", "text").collect()
 
@@ -752,7 +751,7 @@ def test_wilson_ci_properties(spark, sf_dir):
     n (checked against an independent python Wilson)."""
     import math
 
-    from ocdb_server_spark.operators.pipeline_r6 import _WILSON_Z, op238_wilson_ci
+    from ocdb_server_spark.operators.stats import _WILSON_Z, op238_wilson_ci
 
     rows = op238_wilson_ci(spark, sf_dir).collect()
     assert rows
@@ -770,7 +769,7 @@ def test_group_kfold_is_leakage_free_partition(spark, sf_dir):
     """op239: every user in exactly one fold; folds partition the
     events exactly; assignment reproducible."""
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.pipeline_r6 import _KFOLD, op239_group_kfold
+    from ocdb_server_spark.operators.stats import _KFOLD, op239_group_kfold
 
     ev = load_table(spark, sf_dir, "events")
     out = op239_group_kfold(spark, sf_dir).collect()
@@ -783,7 +782,7 @@ def test_group_kfold_is_leakage_free_partition(spark, sf_dir):
 
 def test_ks_two_sample_matches_python(spark, sf_dir):
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.pipeline_r6 import op240_ks_two_sample
+    from ocdb_server_spark.operators.stats import op240_ks_two_sample
 
     rows = load_table(spark, sf_dir, "documents").select("lang", "n_chars").collect()
     a = sorted(r.n_chars for r in rows if r.lang == "en")
@@ -808,7 +807,7 @@ def test_chi2_matches_python(spark, sf_dir):
     from collections import Counter
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.pipeline_r6 import op241_chi2_independence
+    from ocdb_server_spark.operators.stats import op241_chi2_independence
 
     rows = load_table(spark, sf_dir, "documents").select("lang", "source").collect()
     obs = Counter((r.lang, r.source) for r in rows)
@@ -837,7 +836,7 @@ def test_markov_transitions_match_python(spark, sf_dir):
     from collections import Counter, defaultdict
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.pipeline_r6 import op242_markov_transitions
+    from ocdb_server_spark.operators.stats import op242_markov_transitions
 
     ev = load_table(spark, sf_dir, "events").selectExpr(
         "user_id", "event_type", "unix_micros(ts) as us", "event_id"
@@ -864,7 +863,7 @@ def test_last_touch_attribution_matches_python(spark, sf_dir):
     from collections import Counter, defaultdict
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.pipeline_r6 import (
+    from ocdb_server_spark.operators.relational_ext import (
         _ATTR_WINDOW_US,
         op243_last_touch_attribution,
     )
@@ -899,7 +898,7 @@ def test_quantile_normalize_uniform_and_exact(spark, sf_dir):
     from collections import defaultdict
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.pipeline_r6 import op244_quantile_normalize
+    from ocdb_server_spark.operators.stats import op244_quantile_normalize
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "value").collect()
     groups = defaultdict(list)
@@ -935,7 +934,7 @@ def test_dataset_card_consistency(spark, sf_dir):
     """op245: datasheet numbers must agree with the dedicated ops'
     views of the same corpus (tokens, dedup, profile)."""
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.pipeline_r6 import op245_dataset_card
+    from ocdb_server_spark.operators.text import op245_dataset_card
 
     d = load_table(spark, sf_dir, "documents")
     card = op245_dataset_card(spark, sf_dir).collect()[0]
@@ -953,7 +952,7 @@ def test_temperature_mix_upweights_low_resource(spark, sf_dir):
     """op246: weights sum to 1; the sqrt temperature strictly
     upweights below-average languages and downweights the dominant
     one (when shares differ)."""
-    from ocdb_server_spark.operators.pipeline_r6 import op246_temperature_mix
+    from ocdb_server_spark.operators.text import op246_temperature_mix
 
     rows = op246_temperature_mix(spark, sf_dir).collect()
     assert abs(sum(r.mix_weight for r in rows) - 1.0) < 1e-5
@@ -974,7 +973,7 @@ def test_rolling_slope_matches_numpy_lstsq(spark, sf_dir):
     from collections import Counter
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.pipeline_r6 import _SLOPE_W, op247_rolling_slope
+    from ocdb_server_spark.operators.stats import _SLOPE_W, op247_rolling_slope
 
     ev = load_table(spark, sf_dir, "events").selectExpr(
         "event_type", "cast(ts as date) as d"
@@ -998,7 +997,7 @@ def test_median_of_means_is_robust_bucket_median(spark, sf_dir):
     from collections import defaultdict
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.pipeline_r6 import _MOM_B, op248_median_of_means
+    from ocdb_server_spark.operators.stats import _MOM_B, op248_median_of_means
 
     MULT, U32 = 2654435761, 4294967296
     ev = load_table(spark, sf_dir, "events").selectExpr(
@@ -1036,7 +1035,7 @@ def test_footer_stats_never_read_data_pages(spark, sf_dir):
     from collections import Counter
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.pipeline_r6 import op249_footer_stats_read
+    from ocdb_server_spark.operators.lakehouse import op249_footer_stats_read
 
     out = op249_footer_stats_read(spark, sf_dir).collect()
     months = [r.month for r in out]
@@ -1068,7 +1067,7 @@ def test_corpus_build_stage_invariants(spark, sf_dir):
     from collections import defaultdict
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.pipeline_r6 import (
+    from ocdb_server_spark.operators.text import (
         _CB_MAX_CHARS,
         _CB_MIN_CHARS,
         op250_corpus_build_pipeline,
@@ -1118,7 +1117,7 @@ def test_triangle_shuffle_fallback_matches_broadcast_on_hub_graph(spark):
 
     bcast = {
         (r.s_suppkey, r.n_triangles)
-        for r in r6._triangle_counts(edges, broadcast_adj=True).collect()
+        for r in graph._triangle_counts(edges, broadcast_adj=True).collect()
     }
     # broadcast_adj=False drops the hint; the PLANNER would still
     # auto-broadcast a relation this tiny, so pin the threshold off to
@@ -1127,7 +1126,7 @@ def test_triangle_shuffle_fallback_matches_broadcast_on_hub_graph(spark):
     saved = spark.conf.get(key)
     try:
         spark.conf.set(key, "-1")
-        fallback_df = r6._triangle_counts(edges, broadcast_adj=False)
+        fallback_df = graph._triangle_counts(edges, broadcast_adj=False)
         fallback = {
             (r.s_suppkey, r.n_triangles) for r in fallback_df.collect()
         }
@@ -1180,16 +1179,16 @@ def test_triangle_broadcast_guard_tiers(spark, sf_dir):
     saved = spark.conf.get(key)
     try:
         # tier 1: the suppliers² worst case fits the session budget
-        assert r6._adjacency_fits_broadcast(spark, sf_dir, edges) is True
+        assert graph._adjacency_fits_broadcast(spark, sf_dir, edges) is True
         # disabled budget: never broadcast
         spark.conf.set(key, "-1")
-        assert r6._adjacency_fits_broadcast(spark, sf_dir, edges) is False
+        assert graph._adjacency_fits_broadcast(spark, sf_dir, edges) is False
         # budget too small even for the exact tier-2 payload
         spark.conf.set(key, "16")
-        assert r6._adjacency_fits_broadcast(spark, sf_dir, edges) is False
+        assert graph._adjacency_fits_broadcast(spark, sf_dir, edges) is False
     finally:
         spark.conf.set(key, saved)
-    assert r6._parse_size_bytes("10MB") == 10 * 1024**2
-    assert r6._parse_size_bytes("64m") == 64 * 1024**2
-    assert r6._parse_size_bytes("67108864") == 67108864
-    assert r6._parse_size_bytes("1g") == 1024**3
+    assert graph._parse_size_bytes("10MB") == 10 * 1024**2
+    assert graph._parse_size_bytes("64m") == 64 * 1024**2
+    assert graph._parse_size_bytes("67108864") == 67108864
+    assert graph._parse_size_bytes("1g") == 1024**3

@@ -20,7 +20,7 @@ def _plan(df) -> str:
 def test_flac_features_match_direct_decode(spark):
     """The op's feature rows must equal features computed by decoding
     each payload directly in-process (no Spark in the check path)."""
-    from ocdb_server_spark.operators.pipeline_r7 import (
+    from ocdb_server_spark.operators.multimodal_codecs import (
         _FLAC_RATE,
         op251_flac_decode_features,
     )
@@ -54,7 +54,7 @@ def test_flac_op_payloads_never_shuffle(spark):
     """Plan gate: two MapInPandas stages (generate, decode) with NO
     exchange between them — payload bytes live and die inside one
     task (the op195/op202 contract)."""
-    from ocdb_server_spark.operators.pipeline_r7 import (
+    from ocdb_server_spark.operators.multimodal_codecs import (
         op251_flac_decode_features,
     )
 
@@ -74,7 +74,7 @@ def test_flac_op_payloads_never_shuffle(spark):
 def test_avro_roundtrip_quality_default_fires_everywhere(spark, sf_dir):
     """sum_quality must be exactly -n_docs per lang: the reader-only
     defaulted field proves schema resolution ran on every row."""
-    from ocdb_server_spark.operators.pipeline_r7 import op252_avro_roundtrip
+    from ocdb_server_spark.operators.scans import op252_avro_roundtrip
 
     rows = op252_avro_roundtrip(spark, sf_dir).collect()
     assert rows
@@ -89,7 +89,7 @@ def test_avro_files_use_both_codecs(spark, sf_dir):
     import os
     import tempfile
 
-    from ocdb_server_spark.operators.pipeline_r7 import op252_avro_roundtrip
+    from ocdb_server_spark.operators.scans import op252_avro_roundtrip
 
     from ocdb_server_spark.scratch import scratch_path
 
@@ -112,7 +112,7 @@ def test_avro_roundtrip_matches_source_counts(spark, sf_dir):
     parquet source's (value fidelity is the oracle's job; this is the
     cheap no-row-lost/no-row-duplicated sanity in the suite)."""
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.pipeline_r7 import op252_avro_roundtrip
+    from ocdb_server_spark.operators.scans import op252_avro_roundtrip
 
     got = {r.lang: r.n_docs for r in op252_avro_roundtrip(spark, sf_dir).collect()}
     want = {
@@ -136,11 +136,7 @@ def test_holt_damped_matches_python_recurrence(spark, sf_dir):
     from collections import Counter
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.pipeline_r6 import _HW_OFF
-    from ocdb_server_spark.operators.pipeline_r7 import (
-        _HD_H,
-        op253_holt_damped,
-    )
+    from ocdb_server_spark.operators.stats import _HD_H, _HW_OFF, op253_holt_damped
 
     ev = load_table(spark, sf_dir, "events").selectExpr(
         "event_type", "cast(ts as date) as d"
@@ -179,7 +175,7 @@ def test_holt_damped_flattens_vs_linear(spark, sf_dir):
     """The damping property itself: op253's forecast increments must
     shrink with the horizon (|fc_{h+1} - fc_h| <= |fc_h - fc_{h-1}|),
     whereas op231's are constant — the reason damped trend exists."""
-    from ocdb_server_spark.operators.pipeline_r7 import (
+    from ocdb_server_spark.operators.stats import (
         _HD_H,
         op253_holt_damped,
     )
@@ -205,11 +201,11 @@ def test_holt_winters_multiplicative_matches_python(spark, sf_dir):
     from collections import Counter
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.pipeline_r6 import _HW_OFF
-    from ocdb_server_spark.operators.pipeline_r7 import (
+    from ocdb_server_spark.operators.stats import (
         _HWM_H,
         _HWM_M,
         _HWM_S,
+        _HW_OFF,
         op254_holt_winters_multiplicative,
     )
 
@@ -262,7 +258,7 @@ def test_holt_winters_multiplicative_seasonality_is_ratio(spark, sf_dir):
     the same weekday one season apart differs only by the trend term
     (fc_{h+7} - fc_h uses the SAME seasonal slot: difference is
     exactly 7·b·s_slot // S up to flooring, bounded here)."""
-    from ocdb_server_spark.operators.pipeline_r7 import (
+    from ocdb_server_spark.operators.stats import (
         _HWM_S,
         op254_holt_winters_multiplicative,
     )

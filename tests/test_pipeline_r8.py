@@ -13,14 +13,29 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocdb_server_spark.io import load_table
-from ocdb_server_spark.operators.pipeline_r8 import (
+from ocdb_server_spark.operators.lakehouse import (
     _parquet_files,
     build_table_log,
-    latest_version,
     log_commit,
+    log_dir,
     read_log,
     read_snapshot,
 )
+
+
+def latest_version(root: str) -> int:
+    """Highest committed version (0 = empty table), read from the log
+    directory alone."""
+    try:
+        names = os.listdir(log_dir(root))
+    except FileNotFoundError:
+        return 0
+    vs = [
+        int(n[1:-5])
+        for n in names
+        if n.startswith("v") and n.endswith(".json") and n[1:-5].isdigit()
+    ]
+    return max(vs, default=0)
 
 
 @pytest.fixture()
@@ -118,7 +133,7 @@ def test_hw_damped_mult_short_span_fails_loudly(spark, tmp_path):
     import pytest
     from pyspark.errors import PythonException
 
-    from ocdb_server_spark.operators.pipeline_r8 import (
+    from ocdb_server_spark.operators.stats import (
         _op257_sql,
         op257_holt_winters_damped_multiplicative,
     )
@@ -157,9 +172,11 @@ def test_hw_damped_mult_matches_python_recurrence(spark, sf_dir):
     from collections import Counter
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.pipeline_r6 import _HW_OFF
-    from ocdb_server_spark.operators.pipeline_r7 import _HWM_H, _HWM_M, _HWM_S
-    from ocdb_server_spark.operators.pipeline_r8 import (
+    from ocdb_server_spark.operators.stats import (
+        _HWM_H,
+        _HWM_M,
+        _HWM_S,
+        _HW_OFF,
         op257_holt_winters_damped_multiplicative,
     )
 
@@ -215,11 +232,9 @@ def test_hw_damped_mult_trend_is_damped_vs_op254(spark, sf_dir):
     The exactness gate is the recurrence-match test above; this test
     exists to flag testdata regenerations that change the damping
     story."""
-    from ocdb_server_spark.operators.pipeline_r7 import (
+    from ocdb_server_spark.operators.stats import (
         _HWM_H,
         op254_holt_winters_multiplicative,
-    )
-    from ocdb_server_spark.operators.pipeline_r8 import (
         op257_holt_winters_damped_multiplicative,
     )
 
@@ -252,7 +267,7 @@ def test_op258_ocf_files_are_multiblock_and_jvm_readable(spark, sf_dir):
     the interop gate op252 established, applied to the records sink."""
     import glob
 
-    from ocdb_server_spark.operators.pipeline_r8 import (
+    from ocdb_server_spark.operators.scans import (
         op258_avro_records_sink,
     )
     from ocdb_server_spark.sources.avro_ocf import read_ocf
@@ -315,7 +330,7 @@ def test_op259_croston_hand_computed_and_sba_bound(spark, sf_dir):
       t=6 (gap q=1):    z=(1+2)//2=1, p=(1+1+2)//2=2
       nd=3, fc = 1000//2 = 500, sba = 3000//(4*2) = 375
     """
-    from ocdb_server_spark.operators.pipeline_r8 import op259_croston_sba
+    from ocdb_server_spark.operators.stats import op259_croston_sba
 
     # pin the hand series with a local loop that restates the kernel's
     # statements in the same order (the kernel itself is certified

@@ -10,7 +10,11 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from ocdb_server_spark.sinks import upsert_partitioned, write_partitioned
+from ocdb_server_spark.sinks import upsert_partitioned
+
+
+def write_partitioned(df, path: str, partition_col: str) -> None:
+    df.write.partitionBy(partition_col).mode("overwrite").parquet(path)
 
 
 @pytest.fixture()

@@ -14,13 +14,37 @@ from ocdb_server_spark.validation import (
     ERROR,
     OK,
     WARNING,
+    Rule,
     custom,
-    regex_match,
     required,
-    status_rollup,
     validate,
     value_range,
 )
+
+
+def regex_match(col: str, pattern: str, severity: str = WARNING) -> Rule:
+    """String must match the pattern (reference: format rules)."""
+    return Rule(
+        name=f"format_{col}",
+        severity=severity,
+        violated=F.col(col).isNotNull() & ~F.col(col).rlike(pattern),
+        message=f"{col} does not match {pattern}",
+    )
+
+
+def status_rollup(validated, group_cols: list[str]):
+    """Per-file/per-submission status (reference: a file's status is
+    the worst of its records'): one map-side-partial aggregation."""
+    worst = (
+        F.when(F.max((F.col("status") == ERROR).cast("int")) == 1, ERROR)
+        .when(F.max((F.col("status") == WARNING).cast("int")) == 1, WARNING)
+        .otherwise(OK)
+    )
+    return validated.groupBy(*group_cols).agg(
+        F.count("*").alias("n_records"),
+        F.sum(F.size("issues")).alias("n_issues"),
+        worst.alias("status"),
+    )
 
 
 @pytest.fixture(scope="module")

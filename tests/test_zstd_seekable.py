@@ -146,7 +146,7 @@ def test_op261_splits_across_tasks_and_matches_table(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.pipeline_r10 import (
+    from ocdb_server_spark.operators.scans import (
         zstd_single_file_demo,
     )
     from ocdb_server_spark.scratch import scratch_path
@@ -191,7 +191,7 @@ def test_parallel_writer_multi_file_roundtrip(spark, sf_dir, tmp_path):
     valid stock multi-frame zstd stream + seekable file, and the SAME
     seek-table-manifest split-read consumes the multi-file corpus to
     the identical per-lang aggregate as the single-file demo."""
-    from ocdb_server_spark.operators.pipeline_r10 import (
+    from ocdb_server_spark.operators.scans import (
         zstd_export_docs_parallel,
         zstd_read_lang_agg,
         zstd_single_file_demo,
@@ -226,7 +226,7 @@ def test_op261_registered_plan_writes_parallel(spark, sf_dir):
     writes via the parallel exporter — ≥4 concurrent write tasks, one
     seekable-zstd file each — and its per-lang aggregate still equals
     the single-file demo's (same corpus, file-count-agnostic read)."""
-    from ocdb_server_spark.operators.pipeline_r10 import (
+    from ocdb_server_spark.operators.scans import (
         op261_zstd_seekable_ingest,
         zstd_single_file_demo,
     )
@@ -256,7 +256,7 @@ def test_parallel_writer_empty_partitions_write_valid_tables(
     a valid 0-frame file (bare seek table — read_seek_table returns an
     empty manifest, a stock decoder reads it as 0 bytes), and the
     split-read over the mixed file set reassembles the corpus."""
-    from ocdb_server_spark.operators.pipeline_r10 import (
+    from ocdb_server_spark.operators.scans import (
         zstd_export_docs_parallel,
         zstd_read_lang_agg,
     )
