@@ -161,10 +161,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # Serve the warm frame only to ITS OWN session: a frame bound
         # to a stopped/previous session would fail on first use, and
         # createOrReplaceTempView on it would register into the OLD
-        # session's catalog (round-12 review — the stop-and-rebuild
-        # pattern scripts/cluster_throughput.py runs). Fall through to
-        # a cold read for a different session; its own cache entries
-        # stay intact for the owner.
+        # session's catalog. A process that stops its session and
+        # builds a new one without clear_cache() gets a cold read
+        # here; the old session's cache entries stay intact for their
+        # owner.
         try:
             if cached.sparkSession is spark:
                 return cached
@@ -262,14 +262,11 @@ def warm_cache(
     spark: SparkSession,
     sf_dir: str,
     names: tuple[str, ...] = TABLES,
-    partitions: int | str | None = "auto",
 ) -> None:
-    """Cache the given tables in memory, repartitioned for parallelism,
-    and serve them from load_table until clear_cache().
+    """Cache the given tables in memory, repartitioned for parallelism
+    by row count, and serve them from load_table until clear_cache().
 
-    partitions: an int for a fixed slice count, None to keep the scan's
-    layout, or "auto" (default) to size each table by row count.
-    The auto sizing was RE-DERIVED round 9 under the fresh-instance
+    The sizing was RE-DERIVED round 9 under the fresh-instance
     protocol (the old 10k-rows/slice [8, cores] clamp was tuned with
     repeat-mode timings, which hide the map-stage wave each fresh
     execution actually pays), then SMOOTHED round 10 (round-9 ADVICE —
@@ -296,16 +293,6 @@ def warm_cache(
 
     Compute-heavy text/vector tables keep their 16-slice floor (the
     per-row work dominates scheduling there)."""
-    if partitions is not None and partitions != "auto":
-        # a stray string reaches repartition() as a COLUMN name and a
-        # 0/negative silently keeps the scan layout — both caller
-        # errors, surfaced at the boundary (round-13 review)
-        if not isinstance(partitions, int) or isinstance(partitions, bool):
-            raise ValueError(
-                f"partitions must be an int, None or 'auto'; got {partitions!r}"
-            )
-        if partitions <= 0:
-            raise ValueError(f"partitions must be positive; got {partitions}")
     cores = spark.sparkContext.defaultParallelism
     for name in names:
         # Re-warming without clear_cache() must not leak: the frame
@@ -327,21 +314,18 @@ def warm_cache(
                 except Exception:
                     pass  # stopped session — nothing to free
         df = load_table(spark, sf_dir, name)
-        if partitions == "auto":
-            n = df.count()
-            # One smooth curve, ~18k rows/slice clamped to [1, 4×cores]
-            # (round-9 ADVICE: the old `n<=20k → 1 else max(4, …)` form
-            # was a 1→4 step discontinuity at an unmeasured boundary).
-            # Same values at every measured point: tiny dims (<18k) → 1
-            # slice (broadcast builds stop paying multi-task waves),
-            # events 100k → 5, orders 150k → 8, lineitem 600k → 33 —
-            # all inside their r9 interleaved-ABAB plateaus.
-            p = min(4 * cores, max(1, n // 18_000))
-            if name in _COMPUTE_HEAVY:
-                p = max(p, min(cores, 16))
-            df = df.repartition(int(p))
-        elif partitions:
-            df = df.repartition(partitions)
+        n = df.count()
+        # One smooth curve, ~18k rows/slice clamped to [1, 4×cores]
+        # (round-9 ADVICE: the old `n<=20k → 1 else max(4, …)` form
+        # was a 1→4 step discontinuity at an unmeasured boundary).
+        # Same values at every measured point: tiny dims (<18k) → 1
+        # slice (broadcast builds stop paying multi-task waves),
+        # events 100k → 5, orders 150k → 8, lineitem 600k → 33 —
+        # all inside their r9 interleaved-ABAB plateaus.
+        p = min(4 * cores, max(1, n // 18_000))
+        if name in _COMPUTE_HEAVY:
+            p = max(p, min(cores, 16))
+        df = df.repartition(int(p))
         df = df.cache()
         df.count()  # materialize now so queries measure compute, not fill
         _CACHE[(sf_dir, name)] = df

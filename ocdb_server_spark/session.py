@@ -39,9 +39,10 @@ def get_spark(
       AQE-on was >half of the star join's cluster-vs-local premium
       at 30x data (BASELINE.md Round 11e).
     extra_conf: overrides applied last (only effective at session
-    creation — getOrCreate ignores confs on an existing session);
-    used by scripts/skew_stress.py to re-enable the UI REST API for
-    task-duration quantiles.
+    creation — getOrCreate ignores confs on an existing session).
+    perfbench sets its fixed heap and scratch dirs through it, and
+    both perfbench and scripts/op_profile.py keep every job and stage
+    in the status store their counters read.
     """
     if profile not in ("batch", "interactive"):
         raise ValueError(f"unknown profile {profile!r}")

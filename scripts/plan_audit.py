@@ -13,7 +13,13 @@ parquet scans are visible) and summarize the executed plan:
 - pyudf        : # Python-eval nodes (Batch/ArrowEvalPython, FlatMapsInPandas)
 - pushed       : does at least one scan carry PushedFilters beyond []
 - flags        : scale-hostile shapes — CartesianProduct, a global Sort
-                 that is not a TakeOrderedAndProject, >4 shuffles
+                 that is not a TakeOrderedAndProject, >4 shuffles,
+                 keyed-sketch (an aggregate with grouping keys whose
+                 functions carry an approx_count_distinct / percentile /
+                 HLL sketch: one wide sketch buffer per key, the shape
+                 that cost op20 4.2 s), expand-distinct (the Expand of
+                 Catalyst's multi-distinct rewrite, which multiplies
+                 input rows by the number of distinct groups)
 
 The point: "designed for 100 TB" should be checkable per operator, not
 an essay claim. tests/test_plans.py asserts the load-bearing shapes;
@@ -29,6 +35,44 @@ import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+_EXCH = re.compile(r"Exchange (hash|range|Single)")
+# one aggregate node line of executedPlan().toString():
+#   HashAggregate(keys=[k#1], functions=[partial_count(1), ...], output=[...])
+_AGG_NODE = re.compile(
+    r"(?:Hash|ObjectHash|Sort)Aggregate\(keys?=\[(.*?)\], functions=\[(.*?)\], output="
+)
+_SKETCH_FN = re.compile(
+    r"\b(?:partial_)?(?:approx_count_distinct|approx_percentile|percentile_approx"
+    r"|percentile|hll_sketch_agg)\("
+)
+# RewriteDistinctAggregates tags the rows it expands with a `gid`
+# column; ROLLUP/CUBE expands carry `spark_grouping_id` instead
+_DISTINCT_EXPAND = re.compile(r"\bExpand \[.*\bgid#\d+")
+
+
+def flags(plan: str) -> list[str]:
+    """Scale-hostile shapes in an executed plan's text, one match per
+    node line so a finding never spans two nodes."""
+    out = []
+    if "CartesianProduct" in plan:
+        out.append("cartesian")
+    # a truly global sort materializes `Sort [...] true` outside
+    # TakeOrderedAndProject
+    if re.search(r"Sort \[[^\]]*\], true", plan) and "TakeOrderedAndProject" not in plan:
+        out.append("global-sort")
+    exch = len(_EXCH.findall(plan))
+    if exch > 4:
+        out.append(f"{exch}-shuffles")
+    lines = plan.splitlines()
+    for line in lines:
+        m = _AGG_NODE.search(line)
+        if m and m.group(1) and _SKETCH_FN.search(m.group(2)):
+            out.append("keyed-sketch")
+            break
+    if any(_DISTINCT_EXPAND.search(line) for line in lines):
+        out.append("expand-distinct")
+    return out
 
 
 def main() -> None:
@@ -62,6 +106,8 @@ def main() -> None:
         "op05_sink_parquet_roundtrip": "orderBy on the <=4-row per-partition count result",
         "op89_ngram_jaccard": "documented gram-blocked join pipeline (each shuffle carries grams/ids, never text)",
         "op120_tfidf_terms": "tf + df + N + top-k window; df/N sides are tiny and broadcast after their aggs",
+        "op19_agg_count_distinct": "three exact COUNT(DISTINCT) over different columns IS the op; Catalyst's standard multi-distinct Expand",
+        "op26_agg_percentile_exact": "exact per-key percentile IS the op: one buffer per return flag (3 keys)",
         "op34_join_cross": "cross join IS the op (broadcast nested loop)",
         "op35_join_theta_range": "theta join: broadcast nested loop by design",
         "op50_sort_multikey_nulls": "global sort IS the op",
@@ -71,12 +117,14 @@ def main() -> None:
         "op85_udf_pandas_vectorized": "UDF surface op",
         "op86_udaf_group_zscore": "UDF surface op",
         "op87_udtf_expand": "UDF surface op",
+        "op97_profile_columns": "exact COUNT(DISTINCT) on different columns in one scan: the standard Expand x4 of narrow projected rows",
         "op104_multimodal_decode": "mapInPandas decode op",
         "op162_drift_psi": "5 aggs (source×bin, source, bin, total, final); all post-scan sides are #sources×12 rows max, 3 broadcast back",
+        "op166_hll_sketch_rollup": "a per-event-type HLL sketch IS the op (a handful of event types)",
         "op183_bm25_topk": "tf + df + corpus-stats aggs + per-doc score agg; every shuffle is pruned to the query-term subset before it moves (at most n_terms rows/doc), df/stats broadcast back",
         "op186_pagerank": "5 unrolled message-passing iterations x (ranks-edges join + dst agg); the loop-invariant graph (edges/nodes/outdeg) is persist()ed and computes ONCE at runtime — the textual count re-prints the cached build subtree under every InMemoryTableScan reference",
         "op191_bigram_logprob": "3 deliberate shuffle-merge model joins (op120's no-vocab-broadcast rule) + bigram/unigram training aggs + the per-doc score agg; every shuffle carries gram keys + int64 counts, O(tokens)",
-        "op201_bottomk_quantile_sketch": "the merge cut is a window over the UNION OF SKETCHES (#groups x 64 rows — metadata-sized by construction), not over data; per-type cut is hash-partitioned",
+        "op201_bottomk_quantile_sketch": "per-type percentile buffers over a handful of event types; the merge cut is a window over the UNION OF SKETCHES (#groups x 64 rows — metadata-sized by construction), not over data; per-type cut is hash-partitioned",
         "op192_shingle_containment": "distinct-shingle agg + df-cap + semi-join + pair agg + size manifest joins; every shuffle carries (md5, doc_id) pairs, candidate pairs confined to shared-shingle buckets with df<=100 fanout cap",
         "op175_pmi_collocations": "unigram + bigram counts then 4 vocab-sized aggs; the PMI join itself is broadcast, corpus rows shuffle only into the two counts",
         "op212_kmeans_lloyd": "2 unrolled Lloyd iterations — per iter: one (vec,cid) partial agg, one per-vec window, one (cid,d) update agg; centroids broadcast, the quantized long form is persist()ed so the textual repeats read cache",
@@ -87,7 +135,7 @@ def main() -> None:
         "op231_holt_forecast": "spine fill (distinct types × day range broadcast) + counts agg + one keyed applyInPandas; the recurrence runs inside the per-series task",
         "op235_holt_winters_seasonal": "op231's spine/counts shape with the 9-int vector state inside the per-series task",
         "op237_theta_set_ops": "two per-slice distinct+bottom-k cuts feed k-row set math — every shuffle after the cuts carries <=2k signature rows plus the one exact-truth distinct agg the op emits alongside",
-        "op241_chi2_independence": "contingency agg + row/col/total marginal aggs (tiny sides broadcast back) + the final <=25-row coalesced sum; cold plan recomputes the persisted contingency per marginal textually",
+        "op241_chi2_independence": "contingency agg + row/col/total marginal aggs (tiny sides broadcast back) + the final <=25-row coalesced sum; cold plan recomputes the persisted contingency per marginal textually; the distinct rewrite is the final dof count over <=25 rows",
         "op245_dataset_card": "four independent 1-row aggregate branches (base stats, token explode, dedup md5, top-lang) each fold to a single row before their broadcast cross-joins; a production datasheet computes multi-branch aggs over one cached scan",
         "op263_rrf_hybrid_topk": "two retrieval legs: BM25's tf/df/stats aggs (op183's pruned-before-shuffle shape) + the dense single-partition rank cut over its TakeOrdered 50 rows; every leg ends <=DEPTH rows before the 50x50 fusion join",
         "op266_rrf_hybrid_serving": "op263's lexical-leg shuffles (BM25 tf/df/stats aggs) + the two 50-row rank cuts; the dense leg itself is shuffle-FREE (broadcast codebook ADC over codes) — the persisted-index swap removes op80's agg, the remaining shuffles all carry <=DEPTH rows",
@@ -101,7 +149,7 @@ def main() -> None:
             print(f"| {name} | - | - | - | - | - | - | - | BUILD ERROR: {type(exc).__name__} |")
             continue
         scans = plan.count("Scan parquet")
-        exch = len(re.findall(r"Exchange (hash|range|Single)", plan))
+        exch = len(_EXCH.findall(plan))
         bcast = plan.count("BroadcastExchange")
         wscg = len(set(re.findall(r"\*\((\d+)\)", plan)))
         win = len(re.findall(r"\bWindow\b", plan))
@@ -109,18 +157,10 @@ def main() -> None:
             re.findall(r"BatchEvalPython|ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas", plan)
         )
         pushed = bool(re.search(r"PushedFilters: \[[^\]]", plan))
-        flags = []
-        if "CartesianProduct" in plan:
-            flags.append("cartesian")
-        # a truly global sort materializes `Sort [...] true` outside
-        # TakeOrderedAndProject
-        if re.search(r"Sort \[[^\]]*\], true", plan) and "TakeOrderedAndProject" not in plan:
-            flags.append("global-sort")
-        if exch > 4:
-            flags.append(f"{exch}-shuffles")
+        found = flags(plan)
         note = expected.get(name)
-        flag_s = ", ".join(flags)
-        if flags and note:
+        flag_s = ", ".join(found)
+        if found and note:
             flag_s += f" — expected: {note}"
         print(
             f"| {name} | {scans} | {exch} | {bcast} | {wscg} | {win} | "

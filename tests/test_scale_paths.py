@@ -130,104 +130,3 @@ def test_bucketed_join_avoids_shuffle(spark, sf_dir, tmp_path):
         assert j.count() == expected
     finally:
         spark.sql(f"DROP DATABASE {db} CASCADE")
-
-
-def test_stress_build_reap_and_atomic_publish(tmp_path):
-    """Interrupted stress-dataset builds must never poison later
-    measurements (round-8 verdict item 6): a dead builder's
-    `.building.<pid>` dir is reaped, a live builder's is not, and
-    publish is atomic — the out_dir either doesn't exist or is the
-    complete build (os.replace), with the loser of a concurrent
-    publish race adopting the winner's dataset."""
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
-    from stress_scale import publish_build, reap_stale_builds
-
-    base = str(tmp_path)
-    dead = tmp_path / "ocdb_stress_sf1_rep10.building.99999999"
-    live = tmp_path / f"ocdb_stress_sf1_rep10.building.{os.getpid()}"
-    other = tmp_path / "ocdb_stress_sf1_rep3.building.99999999"  # other REP
-    for d in (dead, live, other):
-        d.mkdir()
-        (d / "partial.parquet").write_text("x")
-    reaped = reap_stale_builds(base, "ocdb_stress_sf1_rep10")
-    assert reaped == [dead.name]
-    assert not dead.exists() and live.exists() and other.exists()
-
-    # happy-path publish: rename is atomic, build dir gone
-    out = tmp_path / "ocdb_stress_sf1_rep10"
-    got = publish_build(str(live), str(out))
-    assert got == str(out) and out.is_dir() and not live.exists()
-    assert (out / "partial.parquet").read_text() == "x"
-
-    # publish race: a second finished build finds out_dir taken,
-    # adopts it, and its own build dir is dropped
-    loser = tmp_path / "ocdb_stress_sf1_rep10.building.424242"
-    loser.mkdir()
-    (loser / "partial.parquet").write_text("y")
-    got2 = publish_build(str(loser), str(out))
-    assert got2 == str(out) and not loser.exists()
-    assert (out / "partial.parquet").read_text() == "x"  # winner's data
-
-
-def test_cluster_throughput_summary_derivation():
-    """The throughput report's derivation is pure code over the two
-    suites' raw measurements — pin its edge rules: the control's delta
-    is the fixed overhead; only ops shuffling >=10 MiB bound the
-    per-MiB transport price (small movers divide a fixed-overhead
-    delta by near-zero bytes); parity is judged on plan-determined
-    WRITE bytes so a legitimate cluster-side re-read (op79's
-    reproducible read>write) doesn't fail it, while a real write
-    divergence (different plan) does."""
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
-    from cluster_throughput import CONTROL, summarize
-
-    mib = 2**20
-
-    def m(sec, wr, rd=None):
-        return {"sec": sec, "shuf_read": rd if rd is not None else wr,
-                "shuf_write": wr}
-
-    queries = (CONTROL, "op_big", "op_small", "op_rereader")
-    local = {
-        CONTROL: m(0.50, 60_000),
-        "op_big": m(1.00, 100 * mib),
-        "op_small": m(0.20, 1 * mib),
-        "op_rereader": m(0.60, 6 * mib),
-    }
-    cluster = {
-        CONTROL: m(0.60, 60_000),
-        "op_big": m(1.20, 100 * mib),       # +200 ms over 100 MiB
-        "op_small": m(0.50, 1 * mib),       # +300 ms over 1 MiB: unpriced
-        # write parity holds; cluster re-reads an extra MiB (op79 shape)
-        "op_rereader": m(0.65, 6 * mib, rd=7 * mib),
-    }
-    s = summarize(queries, cluster, local)
-    assert s["fixed"] == pytest.approx(0.10)
-    # only op_big is >=10 MiB -> it sets the bound: 200 ms / 100 MiB
-    assert s["bound_op"] == "op_big"
-    assert s["bound"] == pytest.approx(2.0)
-    assert s["byte_parity_ok"] is True
-    assert len(s["rows"]) == 4 and all(r.startswith("| op") for r in s["rows"])
-
-    # a WRITE-side divergence >1% and >64 KiB means a different plan
-    cluster_bad = dict(cluster)
-    cluster_bad["op_big"] = m(1.20, 110 * mib)
-    assert summarize(queries, cluster_bad, local)["byte_parity_ok"] is False
-
-    # no big mover at all -> no bound op, bound stays inf
-    small_only = (CONTROL, "op_small")
-    s2 = summarize(small_only, cluster, local)
-    assert s2["bound_op"] is None and s2["bound"] == float("inf")
-
-    # --only without the control op: fixed is None ("not measured"),
-    # never a fabricated 0.0 printed as a measured +0 ms (r11 ADVICE)
-    no_control = ("op_big",)
-    s3 = summarize(no_control, cluster, local)
-    assert s3["fixed"] is None
-    assert s3["bound_op"] == "op_big"  # pricing still works without it
