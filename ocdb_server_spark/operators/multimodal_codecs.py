@@ -1,33 +1,28 @@
 """Multimodal decode + DSP, hash-certified: op195–op205, op222, op251,
-and the multimodal payload ops op104/op130 they build on.
+and the multimodal payload ops op104/op130.
 
-These ops retire the "decode kernel is stubbed" caveat for the
-two classic uncompressed formats: standards-conformant PCM WAV and
-24-bit BMP files are synthesized from closed-form integer formulas,
-decoded back through Arrow-batched mapInPandas with the REAL parsers
-in sources/codecs.py (chunk walker, padding, bottom-up rows — proven
-interoperable with the stdlib `wave` module in tests/test_codecs.py),
-and reduced to exact integer features. The DuckDB oracle recomputes
-the SAME features from the generation formulas without ever seeing a
-byte — so a hash match certifies the whole encode→bytes→decode→
-feature path, not just the plumbing. Compressed codecs followed in
-later rounds: JPEG (op202/op203, sources/jpeg.py), PNG (op205),
-GIF (op222), FLAC (op251, sources/flac.py) — all real from-scratch
-decoders. Only MP3 and H.264 remain honestly stubbed in
-sources/multimodal.py: those need real libraries this container
-lacks.
+Every op synthesizes its assets from closed-form integer formulas,
+encodes them with a from-scratch codec — PCM WAV and 24-bit BMP
+(sources/codecs.py), JPEG (sources/jpeg.py), PNG (sources/png.py),
+GIF (sources/gif.py), FLAC (sources/flac.py) — decodes the bytes back
+with the REAL parser of the same module, and reduces them to exact
+features. The DuckDB oracle recomputes the SAME features from the
+generation formulas without ever seeing a byte — so a hash match
+certifies the whole encode→bytes→decode→feature path, not just the
+plumbing. tests/test_codecs.py proves interop with the stdlib `wave`
+module and javax.imageio. MP3 and H.264 are out of scope: they need
+codec libraries the project does not ship.
 
-Scale shape: generation and decode are both mapInPandas stages —
-payload bytes live and die inside one task (never shuffled); only
-fixed-width integer feature rows continue. That is exactly the 100 TB
-contract of op104/op130, now with a working kernel.
+Scale shape (`_codec_frame`): the asset ids repartition 8 ways, then a
+generate stage and a decode stage run as chained mapInArrow stages in
+the same task — payload bytes live and die inside one task (never
+shuffled); only fixed-width feature rows continue. Each op supplies
+only its per-asset kernels.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
+import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 from ocdb_server_spark.registry import register
@@ -42,6 +37,81 @@ from ocdb_server_spark.sources import flac as _flac_kernel
 from ocdb_server_spark.sources import gif as _gif_kernel
 from ocdb_server_spark.sources import jpeg as _jpeg_kernel
 from ocdb_server_spark.sources import png as _png_kernel
+from ocdb_server_spark.sources.codecs import (
+    decode_bmp,
+    decode_wav,
+    encode_bmp,
+    encode_wav,
+)
+from ocdb_server_spark.sources.flac import decode_flac, encode_flac
+from ocdb_server_spark.sources.gif import (
+    decode_gif_frames,
+    decode_gif_gray,
+    encode_gif_anim,
+    encode_gif_gray,
+)
+from ocdb_server_spark.sources.jpeg import (
+    QTABLE_ZZ,
+    decode_jpeg_gray,
+    encode_jpeg_gray,
+)
+from ocdb_server_spark.sources.png import decode_png_gray, encode_png_gray
+
+_PAYLOAD_DDL = "asset_id long, payload binary"
+
+
+def _codec_frame(spark: SparkSession, n: int, encode, decode, ddl: str,
+                 gen_ddl: str = _PAYLOAD_DDL) -> DataFrame:
+    """Assets 0..n-1 through a generate stage and a decode stage.
+
+    The ids repartition 8 ways; then, in the same task, one mapInArrow
+    stage writes each asset's row ``(i, *encode(i))`` (``encode``
+    returns the bare payload under the default ``gen_ddl``) and a
+    second one turns each generated row into the rows
+    ``decode(*row)``. Payload bytes never cross an exchange; only the
+    fixed-width ``ddl`` rows continue. Each stage builds its batches
+    against an Arrow schema derived from its DDL when the plan is
+    built, so no output type rests on Python value inference."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    def stage(fn, ddl, name):
+        struct = DataType.fromDDL(ddl)
+        schema = to_arrow_schema(struct)
+
+        def run(batches):
+            import pyarrow as pa
+
+            for batch in batches:
+                rows = [out
+                        for row in zip(*(c.to_pylist() for c in batch.columns))
+                        for out in fn(*row)]
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array([r[k] for r in rows], f.type)
+                     for k, f in enumerate(schema)],
+                    schema=schema,
+                )
+
+        run.__name__ = name  # the stage's label in the plan
+        return run, struct
+
+    def gen_row(i):
+        cols = encode(i)
+        return [(i, *cols) if isinstance(cols, tuple) else (i, cols)]
+
+    return (
+        spark.range(n).repartition(8)
+        .mapInArrow(*stage(gen_row, gen_ddl, encode.__name__))
+        .mapInArrow(*stage(decode, ddl, decode.__name__))
+    )
+
+
+def _gray_stats(aid: int, w: int, h: int, px: np.ndarray) -> list[tuple]:
+    """(asset_id, width, height, pixel_sum, min_px, max_px) of a
+    decoded grayscale image."""
+    p64 = px.astype(np.int64)
+    return [(aid, w, h, int(p64.sum()), int(p64.min()), int(p64.max()))]
+
 
 # ------------------------------------------------------------------ WAV
 
@@ -64,49 +134,32 @@ SELECT CAST(i AS BIGINT) AS asset_id,
 FROM s GROUP BY i
 """
 
-
-def _gen_wav(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    from ocdb_server_spark.sources.codecs import encode_wav
-
-    for pdf in it:
-        ids, payloads = [], []
-        for i in pdf["id"]:
-            n = 400 + (int(i) % 5) * 100
-            k = np.arange(n, dtype=np.int64)
-            s = ((int(i) * 31 + k * 7) % 2001 - 1000).astype(np.int16)
-            ids.append(int(i))
-            payloads.append(encode_wav(s, _WAV_RATE))
-        yield pd.DataFrame({"asset_id": ids, "payload": payloads})
+_WAV_FEATURES_DDL = (
+    "asset_id long, sample_rate long, n_samples long,"
+    " duration_ms long, sum_sq long, peak long"
+)
 
 
-def _decode_wav_features(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
+def _wav_asset(i: int) -> bytes:
+    n = 400 + (i % 5) * 100
+    k = np.arange(n, dtype=np.int64)
+    s = ((i * 31 + k * 7) % 2001 - 1000).astype(np.int16)
+    return encode_wav(s, _WAV_RATE)
 
-    from ocdb_server_spark.sources.codecs import decode_wav
 
-    for pdf in it:
-        out = {k: [] for k in
-               ("asset_id", "sample_rate", "n_samples", "duration_ms",
-                "sum_sq", "peak")}
-        for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-            rate, _ch, n, s = decode_wav(bytes(payload))
-            s64 = s.astype(np.int64)
-            out["asset_id"].append(int(aid))
-            out["sample_rate"].append(rate)
-            out["n_samples"].append(n)
-            out["duration_ms"].append(n * 1000 // rate)
-            out["sum_sq"].append(int(np.sum(s64 * s64)))
-            out["peak"].append(int(np.max(np.abs(s64))))
-        yield pd.DataFrame(out)
+def _wav_features(aid: int, payload: bytes) -> list[tuple]:
+    rate, _ch, n, s = decode_wav(payload)
+    s64 = s.astype(np.int64)
+    return [(aid, rate, n, n * 1000 // rate,
+             int(np.sum(s64 * s64)), int(np.max(np.abs(s64))))]
 
 
 @register(
     "op195_wav_decode_features",
     oracle=_OP195_SQL,
-    # plan + certification live in the helpers and the WAV kernel
-    deps=(_gen_wav, _decode_wav_features, _codecs_kernel),
+    # plan + certification live in the shared frame, the kernels and
+    # the WAV codec
+    deps=(_codec_frame, _wav_asset, _wav_features, _codecs_kernel),
 )
 def op195_wav_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio decode, for real: 200 standards-conformant mono PCM16 WAV
@@ -117,14 +170,8 @@ def op195_wav_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     formula alone — a hash match certifies the decoder end to end.
     sf_dir is unused: the corpus is self-generated (same stance as
     op152's Python data source)."""
-    gen = spark.range(_WAV_N).repartition(8).mapInPandas(
-        _gen_wav, "asset_id long, payload binary"
-    )
-    return gen.mapInPandas(
-        _decode_wav_features,
-        "asset_id long, sample_rate long, n_samples long,"
-        " duration_ms long, sum_sq long, peak long",
-    )
+    return _codec_frame(spark, _WAV_N, _wav_asset, _wav_features,
+                        _WAV_FEATURES_DDL)
 
 
 # ------------------------------------------------------------------ BMP
@@ -155,56 +202,37 @@ SELECT CAST(i AS BIGINT) AS asset_id,
 FROM px GROUP BY i, w, h
 """
 
-
-def _gen_bmp(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    from ocdb_server_spark.sources.codecs import encode_bmp
-
-    for pdf in it:
-        ids, payloads = [], []
-        for i in pdf["id"]:
-            i = int(i)
-            w, h = 16 + (i % 4) * 8, 8 + (i % 3) * 8
-            rr = np.arange(h, dtype=np.int64)[:, None]
-            cc = np.arange(w, dtype=np.int64)[None, :]
-            px = np.stack(
-                [
-                    (i + 3 * rr + 7 * cc) % 256,
-                    (2 * i + 5 * rr + cc) % 256,
-                    (3 * i + rr + 2 * cc) % 256,
-                ],
-                axis=-1,
-            ).astype(np.uint8)
-            ids.append(i)
-            payloads.append(encode_bmp(px))
-        yield pd.DataFrame({"asset_id": ids, "payload": payloads})
+_BMP_STATS_DDL = (
+    "asset_id long, width long, height long,"
+    " sum_r long, sum_g long, sum_b long"
+)
 
 
-def _decode_bmp_stats(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
+def _bmp_asset(i: int) -> bytes:
+    w, h = 16 + (i % 4) * 8, 8 + (i % 3) * 8
+    rr = np.arange(h, dtype=np.int64)[:, None]
+    cc = np.arange(w, dtype=np.int64)[None, :]
+    px = np.stack(
+        [
+            (i + 3 * rr + 7 * cc) % 256,
+            (2 * i + 5 * rr + cc) % 256,
+            (3 * i + rr + 2 * cc) % 256,
+        ],
+        axis=-1,
+    ).astype(np.uint8)
+    return encode_bmp(px)
 
-    from ocdb_server_spark.sources.codecs import decode_bmp
 
-    for pdf in it:
-        out = {k: [] for k in
-               ("asset_id", "width", "height", "sum_r", "sum_g", "sum_b")}
-        for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-            w, h, px = decode_bmp(bytes(payload))
-            sums = px.astype(np.int64).sum(axis=(0, 1))
-            out["asset_id"].append(int(aid))
-            out["width"].append(w)
-            out["height"].append(h)
-            out["sum_r"].append(int(sums[0]))
-            out["sum_g"].append(int(sums[1]))
-            out["sum_b"].append(int(sums[2]))
-        yield pd.DataFrame(out)
+def _bmp_stats(aid: int, payload: bytes) -> list[tuple]:
+    w, h, px = decode_bmp(payload)
+    sums = px.astype(np.int64).sum(axis=(0, 1))
+    return [(aid, w, h, int(sums[0]), int(sums[1]), int(sums[2]))]
 
 
 @register(
     "op196_bmp_decode_stats",
     oracle=_OP196_SQL,
-    deps=(_gen_bmp, _decode_bmp_stats, _codecs_kernel),
+    deps=(_codec_frame, _bmp_asset, _bmp_stats, _codecs_kernel),
 )
 def op196_bmp_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image decode, for real: 60 conformant 24-bit BMPs (pixel values
@@ -214,14 +242,8 @@ def op196_bmp_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimensions + exact per-channel int64 sums. The oracle recomputes
     the features from the formula alone — a hash match certifies the
     decoder end to end. sf_dir unused (self-generated corpus)."""
-    gen = spark.range(_BMP_N).repartition(8).mapInPandas(
-        _gen_bmp, "asset_id long, payload binary"
-    )
-    return gen.mapInPandas(
-        _decode_bmp_stats,
-        "asset_id long, width long, height long,"
-        " sum_r long, sum_g long, sum_b long",
-    )
+    return _codec_frame(spark, _BMP_N, _bmp_asset, _bmp_stats,
+                        _BMP_STATS_DDL)
 
 
 # ------------------------------------------------------- WAV + FFT
@@ -242,48 +264,26 @@ FROM a
 """
 
 
-def _gen_sine_wav(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    from ocdb_server_spark.sources.codecs import encode_wav
-
-    for pdf in it:
-        ids, payloads = [], []
-        for i in pdf["id"]:
-            i = int(i)
-            m = 3 + (i % 40) * 2  # exact FFT bin
-            k = np.arange(_FFT_SAMPLES)
-            s = np.rint(
-                _FFT_AMP * np.sin(2.0 * np.pi * m * k / _FFT_SAMPLES)
-            ).astype(np.int16)
-            ids.append(i)
-            payloads.append(encode_wav(s, _WAV_RATE))
-        yield pd.DataFrame({"asset_id": ids, "payload": payloads})
+def _sine_asset(i: int) -> bytes:
+    m = 3 + (i % 40) * 2  # exact FFT bin
+    k = np.arange(_FFT_SAMPLES)
+    s = np.rint(
+        _FFT_AMP * np.sin(2.0 * np.pi * m * k / _FFT_SAMPLES)
+    ).astype(np.int16)
+    return encode_wav(s, _WAV_RATE)
 
 
-def _dominant_freq(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    from ocdb_server_spark.sources.codecs import decode_wav
-
-    for pdf in it:
-        out = {k: [] for k in
-               ("asset_id", "n_samples", "dominant_bin", "dominant_freq_hz")}
-        for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-            rate, _ch, n, s = decode_wav(bytes(payload))
-            spec = np.abs(np.fft.rfft(s.astype(np.float64)))
-            bin_ = int(np.argmax(spec[1:])) + 1  # skip DC
-            out["asset_id"].append(int(aid))
-            out["n_samples"].append(n)
-            out["dominant_bin"].append(bin_)
-            out["dominant_freq_hz"].append(bin_ * rate / n)
-        yield pd.DataFrame(out)
+def _dominant_freq(aid: int, payload: bytes) -> list[tuple]:
+    rate, _ch, n, s = decode_wav(payload)
+    spec = np.abs(np.fft.rfft(s.astype(np.float64)))
+    bin_ = int(np.argmax(spec[1:])) + 1  # skip DC
+    return [(aid, n, bin_, bin_ * rate / n)]
 
 
 @register(
     "op197_audio_dominant_freq",
     oracle=_OP197_SQL,
-    deps=(_gen_sine_wav, _dominant_freq, _codecs_kernel),
+    deps=(_codec_frame, _sine_asset, _dominant_freq, _codecs_kernel),
 )
 def op197_audio_dominant_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSP feature extraction, certified: pure sine tones planted
@@ -296,11 +296,8 @@ def op197_audio_dominant_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle states it in closed form: a hash match certifies
     decode + FFT + peak-pick end to end. sf_dir unused
     (self-generated corpus); payloads never shuffle."""
-    gen = spark.range(_FFT_N).repartition(8).mapInPandas(
-        _gen_sine_wav, "asset_id long, payload binary"
-    )
-    return gen.mapInPandas(
-        _dominant_freq,
+    return _codec_frame(
+        spark, _FFT_N, _sine_asset, _dominant_freq,
         "asset_id long, n_samples long, dominant_bin long,"
         " dominant_freq_hz double",
     )
@@ -342,40 +339,25 @@ FROM small GROUP BY i, w, h
 """
 
 
-def _resize_bmp_stats(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    from ocdb_server_spark.sources.codecs import decode_bmp
-
+def _bmp_resize_stats(aid: int, payload: bytes) -> list[tuple]:
     f = _RS_FACTOR
-    for pdf in it:
-        out = {k: [] for k in
-               ("asset_id", "out_width", "out_height", "sum_r", "sum_g", "sum_b")}
-        for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-            w, h, px = decode_bmp(bytes(payload))
-            p = px.astype(np.int64)
-            ow, oh = w // f, h // f
-            # 2x2 box average with floor division — integer-exact
-            small = (
-                p[: oh * f, : ow * f]
-                .reshape(oh, f, ow, f, 3)
-                .sum(axis=(1, 3))
-                // (f * f)
-            )
-            sums = small.sum(axis=(0, 1))
-            out["asset_id"].append(int(aid))
-            out["out_width"].append(ow)
-            out["out_height"].append(oh)
-            out["sum_r"].append(int(sums[0]))
-            out["sum_g"].append(int(sums[1]))
-            out["sum_b"].append(int(sums[2]))
-        yield pd.DataFrame(out)
+    w, h, px = decode_bmp(payload)
+    ow, oh = w // f, h // f
+    # 2x2 box average with floor division — integer-exact
+    small = (
+        px.astype(np.int64)[: oh * f, : ow * f]
+        .reshape(oh, f, ow, f, 3)
+        .sum(axis=(1, 3))
+        // (f * f)
+    )
+    sums = small.sum(axis=(0, 1))
+    return [(aid, ow, oh, int(sums[0]), int(sums[1]), int(sums[2]))]
 
 
 @register(
     "op198_bmp_resize",
     oracle=_OP198_SQL,
-    deps=(_gen_bmp, _resize_bmp_stats, _codecs_kernel),
+    deps=(_codec_frame, _bmp_asset, _bmp_resize_stats, _codecs_kernel),
 )
 def op198_bmp_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image RESIZE, for real: the decoded BMPs downscale 2× by
@@ -386,11 +368,8 @@ def op198_bmp_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     north-star multimodal family promises, with a working kernel.
     Payloads and pixel arrays never leave their task; only the
     resized-image summary rows continue."""
-    gen = spark.range(_BMP_N).repartition(8).mapInPandas(
-        _gen_bmp, "asset_id long, payload binary"
-    )
-    return gen.mapInPandas(
-        _resize_bmp_stats,
+    return _codec_frame(
+        spark, _BMP_N, _bmp_asset, _bmp_resize_stats,
         "asset_id long, out_width long, out_height long,"
         " sum_r long, sum_g long, sum_b long",
     )
@@ -429,35 +408,20 @@ FROM r WHERE rnk <= {_FR_TOPK}
 """
 
 
-def _loudest_frames(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    from ocdb_server_spark.sources.codecs import decode_wav
-
-    for pdf in it:
-        out = {k: [] for k in ("asset_id", "frame_idx", "energy", "rnk")}
-        for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-            _rate, _ch, n, s = decode_wav(bytes(payload))
-            nf = n // _FR_LEN  # complete frames only (matches oracle)
-            e = (
-                s[: nf * _FR_LEN]
-                .astype(np.int64)
-                .reshape(nf, _FR_LEN)
-            )
-            energy = (e * e).sum(axis=1)
-            order = sorted(range(nf), key=lambda j: (-energy[j], j))
-            for rnk, j in enumerate(order[:_FR_TOPK], start=1):
-                out["asset_id"].append(int(aid))
-                out["frame_idx"].append(j)
-                out["energy"].append(int(energy[j]))
-                out["rnk"].append(rnk)
-        yield pd.DataFrame(out)
+def _loudest_frames(aid: int, payload: bytes) -> list[tuple]:
+    _rate, _ch, n, s = decode_wav(payload)
+    nf = n // _FR_LEN  # complete frames only (matches oracle)
+    e = s[: nf * _FR_LEN].astype(np.int64).reshape(nf, _FR_LEN)
+    energy = (e * e).sum(axis=1)
+    order = sorted(range(nf), key=lambda j: (-energy[j], j))
+    return [(aid, j, int(energy[j]), rnk)
+            for rnk, j in enumerate(order[:_FR_TOPK], start=1)]
 
 
 @register(
     "op199_audio_loudest_frames",
     oracle=_OP199_SQL,
-    deps=(_gen_wav, _loudest_frames, _codecs_kernel),
+    deps=(_codec_frame, _wav_asset, _loudest_frames, _codecs_kernel),
 )
 def op199_audio_loudest_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio FRAME-SAMPLING, for real: decoded PCM splits into
@@ -468,11 +432,8 @@ def op199_audio_loudest_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     silence). The oracle restates frame bucketing and top-k from the
     generation formula. Payloads never shuffle; the per-asset top-k
     runs inside the decode task."""
-    gen = spark.range(_WAV_N).repartition(8).mapInPandas(
-        _gen_wav, "asset_id long, payload binary"
-    )
-    return gen.mapInPandas(
-        _loudest_frames,
+    return _codec_frame(
+        spark, _WAV_N, _wav_asset, _loudest_frames,
         "asset_id long, frame_idx long, energy long, rnk long",
     )
 
@@ -505,33 +466,23 @@ FROM wav w JOIN bmp b ON w.asset_id = b.asset_id
 @register(
     "op200_multimodal_fuse",
     oracle=_OP200_SQL,
-    deps=(_gen_wav, _decode_wav_features, _gen_bmp, _decode_bmp_stats,
+    deps=(_codec_frame, _wav_asset, _wav_features, _bmp_asset, _bmp_stats,
           _codecs_kernel),
 )
 def op200_multimodal_fuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-modal fusion: decoded AUDIO features join decoded IMAGE
     features on asset_id — the end-to-end multimodal pipeline (two
     independent decode stages, each confined to its own tasks, meeting
-    in one equi-join of fixed-width feature rows). op82 proved
+    in one equi-join of fixed-width feature rows). op82 covers
     text⋈vector; this is its decoded-media sibling, and the join input
-    on each side is the certified output of op195/op196 — bytes were
+    on each side is the certified output of op195/op196 — bytes are
     decoded for real upstream, but only integer features ever reach
     the shuffle. The oracle recomputes both sides from the generation
     formulas and joins them itself."""
-    wav = spark.range(_WAV_N).repartition(8).mapInPandas(
-        _gen_wav, "asset_id long, payload binary"
-    ).mapInPandas(
-        _decode_wav_features,
-        "asset_id long, sample_rate long, n_samples long,"
-        " duration_ms long, sum_sq long, peak long",
-    ).select("asset_id", "sum_sq")
-    bmp = spark.range(_BMP_N).repartition(8).mapInPandas(
-        _gen_bmp, "asset_id long, payload binary"
-    ).mapInPandas(
-        _decode_bmp_stats,
-        "asset_id long, width long, height long,"
-        " sum_r long, sum_g long, sum_b long",
-    ).select("asset_id", "sum_r")
+    wav = _codec_frame(spark, _WAV_N, _wav_asset, _wav_features,
+                       _WAV_FEATURES_DDL).select("asset_id", "sum_sq")
+    bmp = _codec_frame(spark, _BMP_N, _bmp_asset, _bmp_stats,
+                       _BMP_STATS_DDL).select("asset_id", "sum_r")
     return wav.join(bmp, "asset_id")
 
 
@@ -540,65 +491,34 @@ def op200_multimodal_fuse(spark: SparkSession, sf_dir: str) -> DataFrame:
 _JPEG_N = 80       # op202 AC-rich corpus
 _JPEG_DC_N = 60    # op203 DC-only corpus
 
-# Annex K luminance quant table in ZIGZAG order, inlined for the
-# oracle (the dequantizer multiplies coefficient k by this, so the
-# coefficient-domain features are exact-integer recomputable in SQL).
-_QZZ_SQL = None  # filled below from sources.jpeg to keep one source of truth
-
 
 def _qzz_literal() -> str:
-    from ocdb_server_spark.sources.jpeg import QTABLE_ZZ
-
+    """Annex K luminance quant table in ZIGZAG order, inlined for the
+    oracle from sources.jpeg (one source of truth): the dequantizer
+    multiplies coefficient k by this, so the coefficient-domain
+    features are exact-integer recomputable in SQL."""
     return "[" + ", ".join(str(int(q)) for q in QTABLE_ZZ) + "]"
 
 
-_OP202_SQL = None  # assigned after _qzz_literal is usable at import time
+def _jpeg_ac_asset(i: int) -> bytes:
+    w = 16 + (i % 3) * 8
+    h = 8 + (i % 2) * 8
+    nb = (w // 8) * (h // 8)
+    qc = np.zeros((nb, 64), dtype=np.int64)
+    for b in range(nb):
+        qc[b, 0] = (i * 7 + b * 13) % 127 - 63
+        for k in range(4):
+            p = 1 + ((i * 5 + b * 11 + k * 17) % 63)
+            qc[b, p] = (i * 3 + b * 5 + k * 7) % 19 - 9
+    return encode_jpeg_gray(qc, w, h)
 
 
-def _gen_jpeg_ac(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    from ocdb_server_spark.sources.jpeg import encode_jpeg_gray
-
-    for pdf in it:
-        ids, payloads = [], []
-        for i in pdf["id"]:
-            i = int(i)
-            w = 16 + (i % 3) * 8
-            h = 8 + (i % 2) * 8
-            nb = (w // 8) * (h // 8)
-            qc = np.zeros((nb, 64), dtype=np.int64)
-            for b in range(nb):
-                qc[b, 0] = (i * 7 + b * 13) % 127 - 63
-                for k in range(4):
-                    p = 1 + ((i * 5 + b * 11 + k * 17) % 63)
-                    qc[b, p] = (i * 3 + b * 5 + k * 7) % 19 - 9
-            ids.append(i)
-            payloads.append(encode_jpeg_gray(qc, w, h))
-        yield pd.DataFrame({"asset_id": ids, "payload": payloads})
-
-
-def _decode_jpeg_coef_stats(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    from ocdb_server_spark.sources.jpeg import QTABLE_ZZ, decode_jpeg_gray
-
-    for pdf in it:
-        out = {k: [] for k in
-               ("asset_id", "width", "height", "n_blocks",
-                "dc_sum_deq", "ac_nonzero", "ac_abs_deq")}
-        for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-            w, h, qc, _px = decode_jpeg_gray(bytes(payload))
-            out["asset_id"].append(int(aid))
-            out["width"].append(w)
-            out["height"].append(h)
-            out["n_blocks"].append(qc.shape[0])
-            out["dc_sum_deq"].append(int(qc[:, 0].sum()) * int(QTABLE_ZZ[0]))
-            out["ac_nonzero"].append(int(np.count_nonzero(qc[:, 1:])))
-            out["ac_abs_deq"].append(
-                int((np.abs(qc[:, 1:]) * QTABLE_ZZ[1:]).sum())
-            )
-        yield pd.DataFrame(out)
+def _jpeg_coef_stats(aid: int, payload: bytes) -> list[tuple]:
+    w, h, qc, _px = decode_jpeg_gray(payload)
+    return [(aid, w, h, qc.shape[0],
+             int(qc[:, 0].sum()) * int(QTABLE_ZZ[0]),
+             int(np.count_nonzero(qc[:, 1:])),
+             int((np.abs(qc[:, 1:]) * QTABLE_ZZ[1:]).sum()))]
 
 
 def _op202_sql() -> str:
@@ -635,14 +555,14 @@ FROM dcs d JOIN acs a ON d.i = a.i
 @register(
     "op202_jpeg_decode_stats",
     oracle=_op202_sql(),
-    deps=(_gen_jpeg_ac, _decode_jpeg_coef_stats, _jpeg_kernel),
+    deps=(_codec_frame, _jpeg_ac_asset, _jpeg_coef_stats, _jpeg_kernel),
 )
 def op202_jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COMPRESSED-format decode, for real (round-5 verdict item 4): 80
-    baseline JPEGs are built by the known-coefficient writer (quantized
-    zigzag coefficients from closed-form formulas — 4 scattered AC
-    positions per block exercise run-lengths, ZRL, EOB, negative
-    amplitudes; per-block DC exercises the differential predictor) and
+    """COMPRESSED-format decode, for real: 80 baseline JPEGs are built
+    by the known-coefficient writer (quantized zigzag coefficients from
+    closed-form formulas — 4 scattered AC positions per block exercise
+    run-lengths, ZRL, EOB, negative amplitudes; per-block DC exercises
+    the differential predictor) and
     DECODED by the real parser in sources/jpeg.py: marker walk, DQT,
     canonical Huffman build from DHT, bit-reader with 0xFF00 stuffing,
     entropy decode, dequantize. Features are coefficient-domain exact
@@ -652,56 +572,27 @@ def op202_jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     match certifies the entire entropy-decode + dequantization path.
     The IDCT/pixel path is certified by op203's hash and by the
     javax.imageio interop tests in tests/test_codecs.py. Payload bytes
-    never shuffle (mapInPandas stages, same contract as op195)."""
-    gen = spark.range(_JPEG_N).repartition(8).mapInPandas(
-        _gen_jpeg_ac, "asset_id long, payload binary"
-    )
-    return gen.mapInPandas(
-        _decode_jpeg_coef_stats,
+    never shuffle (`_codec_frame`, the family's shared plan)."""
+    return _codec_frame(
+        spark, _JPEG_N, _jpeg_ac_asset, _jpeg_coef_stats,
         "asset_id long, width long, height long, n_blocks long,"
         " dc_sum_deq long, ac_nonzero long, ac_abs_deq long",
     )
 
 
-def _gen_jpeg_dc(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    from ocdb_server_spark.sources.jpeg import encode_jpeg_gray
-
-    for pdf in it:
-        ids, payloads = [], []
-        for i in pdf["id"]:
-            i = int(i)
-            w = 16 + (i % 4) * 8
-            h = 8 + (i % 3) * 8
-            nb = (w // 8) * (h // 8)
-            qc = np.zeros((nb, 64), dtype=np.int64)
-            for b in range(nb):
-                qc[b, 0] = (i * 11 + b * 7) % 127 - 63
-            ids.append(i)
-            payloads.append(encode_jpeg_gray(qc, w, h))
-        yield pd.DataFrame({"asset_id": ids, "payload": payloads})
+def _jpeg_dc_asset(i: int) -> bytes:
+    w = 16 + (i % 4) * 8
+    h = 8 + (i % 3) * 8
+    nb = (w // 8) * (h // 8)
+    qc = np.zeros((nb, 64), dtype=np.int64)
+    for b in range(nb):
+        qc[b, 0] = (i * 11 + b * 7) % 127 - 63
+    return encode_jpeg_gray(qc, w, h)
 
 
-def _decode_jpeg_pixel_stats(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    from ocdb_server_spark.sources.jpeg import decode_jpeg_gray
-
-    for pdf in it:
-        out = {k: [] for k in
-               ("asset_id", "width", "height", "pixel_sum",
-                "min_px", "max_px")}
-        for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-            w, h, _qc, px = decode_jpeg_gray(bytes(payload))
-            p64 = px.astype(np.int64)
-            out["asset_id"].append(int(aid))
-            out["width"].append(w)
-            out["height"].append(h)
-            out["pixel_sum"].append(int(p64.sum()))
-            out["min_px"].append(int(p64.min()))
-            out["max_px"].append(int(p64.max()))
-        yield pd.DataFrame(out)
+def _jpeg_pixel_stats(aid: int, payload: bytes) -> list[tuple]:
+    w, h, _qc, px = decode_jpeg_gray(payload)
+    return _gray_stats(aid, w, h, px)
 
 
 _OP203_SQL = f"""
@@ -721,11 +612,17 @@ SELECT CAST(i AS BIGINT) AS asset_id,
 FROM blk GROUP BY i
 """
 
+_GRAY_STATS_DDL = (
+    "asset_id long, width long, height long, pixel_sum long,"
+    " min_px long, max_px long"
+)
+
 
 @register(
     "op203_jpeg_pixel_decode",
     oracle=_OP203_SQL,
-    deps=(_gen_jpeg_dc, _decode_jpeg_pixel_stats, _jpeg_kernel),
+    deps=(_codec_frame, _jpeg_dc_asset, _jpeg_pixel_stats, _gray_stats,
+          _jpeg_kernel),
 )
 def op203_jpeg_pixel_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JPEG PIXEL path, hash-certified: DC-only baseline JPEGs decode
@@ -739,14 +636,8 @@ def op203_jpeg_pixel_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     features cannot see. AC-rich pixel output (where IDCT rounding is
     implementation-defined ±1, per T.81's accuracy clause) is covered
     by the javax.imageio cross-implementation tests instead."""
-    gen = spark.range(_JPEG_DC_N).repartition(8).mapInPandas(
-        _gen_jpeg_dc, "asset_id long, payload binary"
-    )
-    return gen.mapInPandas(
-        _decode_jpeg_pixel_stats,
-        "asset_id long, width long, height long, pixel_sum long,"
-        " min_px long, max_px long",
-    )
+    return _codec_frame(spark, _JPEG_DC_N, _jpeg_dc_asset,
+                        _jpeg_pixel_stats, _GRAY_STATS_DDL)
 
 
 # ------------------------------------------------------------------- PNG
@@ -754,45 +645,19 @@ def op203_jpeg_pixel_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PNG_N = 60
 
 
-def _gen_png(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    from ocdb_server_spark.sources.png import encode_png_gray
-
-    for pdf in it:
-        ids, payloads = [], []
-        for i in pdf["id"]:
-            i = int(i)
-            w = 20 + (i % 5) * 7
-            h = 10 + (i % 4) * 5
-            r = np.arange(h, dtype=np.int64)[:, None]
-            c = np.arange(w, dtype=np.int64)[None, :]
-            px = ((i * 13 + r * 7 + c * 3) % 256).astype(np.uint8)
-            ids.append(i)
-            # default filter schedule cycles 0..4: every PNG filter's
-            # RECONSTRUCTION is load-bearing in the certified hash
-            payloads.append(encode_png_gray(px))
-        yield pd.DataFrame({"asset_id": ids, "payload": payloads})
+def _png_asset(i: int) -> bytes:
+    w = 20 + (i % 5) * 7
+    h = 10 + (i % 4) * 5
+    r = np.arange(h, dtype=np.int64)[:, None]
+    c = np.arange(w, dtype=np.int64)[None, :]
+    px = ((i * 13 + r * 7 + c * 3) % 256).astype(np.uint8)
+    # default filter schedule cycles 0..4: every PNG filter's
+    # RECONSTRUCTION is load-bearing in the certified hash
+    return encode_png_gray(px)
 
 
-def _decode_png_stats(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    from ocdb_server_spark.sources.png import decode_png_gray
-
-    for pdf in it:
-        out = {k: [] for k in
-               ("asset_id", "width", "height", "pixel_sum", "min_px", "max_px")}
-        for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-            w, h, px = decode_png_gray(bytes(payload))
-            p64 = px.astype(np.int64)
-            out["asset_id"].append(int(aid))
-            out["width"].append(w)
-            out["height"].append(h)
-            out["pixel_sum"].append(int(p64.sum()))
-            out["min_px"].append(int(p64.min()))
-            out["max_px"].append(int(p64.max()))
-        yield pd.DataFrame(out)
+def _png_stats(aid: int, payload: bytes) -> list[tuple]:
+    return _gray_stats(aid, *decode_png_gray(payload))
 
 
 _OP205_SQL = f"""
@@ -815,7 +680,7 @@ FROM px GROUP BY i
 @register(
     "op205_png_decode_stats",
     oracle=_OP205_SQL,
-    deps=(_gen_png, _decode_png_stats, _png_kernel),
+    deps=(_codec_frame, _png_asset, _png_stats, _gray_stats, _png_kernel),
 )
 def op205_png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PNG decode, for real and LOSSLESS: 60 grayscale PNGs (pixels
@@ -830,14 +695,8 @@ def op205_png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     interop (our bytes there, its bytes here, both pixel-exact) is in
     tests/test_codecs.py. Same no-payload-shuffle contract as the
     whole codec family."""
-    gen = spark.range(_PNG_N).repartition(8).mapInPandas(
-        _gen_png, "asset_id long, payload binary"
-    )
-    return gen.mapInPandas(
-        _decode_png_stats,
-        "asset_id long, width long, height long, pixel_sum long,"
-        " min_px long, max_px long",
-    )
+    return _codec_frame(spark, _PNG_N, _png_asset, _png_stats,
+                        _GRAY_STATS_DDL)
 
 
 # ------------------------------------------------------------------- GIF
@@ -845,50 +704,24 @@ def op205_png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _GIF_N = 60
 
 
-def _gen_gif(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    from ocdb_server_spark.sources.gif import encode_gif_gray
-
-    for pdf in it:
-        ids, payloads = [], []
-        for i in pdf["id"]:
-            i = int(i)
-            w = 18 + (i % 6) * 9
-            h = 12 + (i % 5) * 6
-            r = np.arange(h, dtype=np.int64)[:, None]
-            c = np.arange(w, dtype=np.int64)[None, :]
-            if i % 3 == 2:
-                # low-entropy stripes: long runs exercise deep LZW
-                # prefixes and the KwKwK reconstruction path
-                px = np.broadcast_to(
-                    (((r // 3) * 17 + i * 5) % 256).astype(np.uint8), (h, w)
-                )
-            else:
-                px = ((i * 13 + r * 7 + c * 3) % 256).astype(np.uint8)
-            ids.append(i)
-            payloads.append(encode_gif_gray(px))
-        yield pd.DataFrame({"asset_id": ids, "payload": payloads})
+def _gif_asset(i: int) -> bytes:
+    w = 18 + (i % 6) * 9
+    h = 12 + (i % 5) * 6
+    r = np.arange(h, dtype=np.int64)[:, None]
+    c = np.arange(w, dtype=np.int64)[None, :]
+    if i % 3 == 2:
+        # low-entropy stripes: long runs exercise deep LZW
+        # prefixes and the KwKwK reconstruction path
+        px = np.broadcast_to(
+            (((r // 3) * 17 + i * 5) % 256).astype(np.uint8), (h, w)
+        )
+    else:
+        px = ((i * 13 + r * 7 + c * 3) % 256).astype(np.uint8)
+    return encode_gif_gray(px)
 
 
-def _decode_gif_stats(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    from ocdb_server_spark.sources.gif import decode_gif_gray
-
-    for pdf in it:
-        out = {k: [] for k in
-               ("asset_id", "width", "height", "pixel_sum", "min_px", "max_px")}
-        for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-            w, h, px = decode_gif_gray(bytes(payload))
-            p64 = px.astype(np.int64)
-            out["asset_id"].append(int(aid))
-            out["width"].append(w)
-            out["height"].append(h)
-            out["pixel_sum"].append(int(p64.sum()))
-            out["min_px"].append(int(p64.min()))
-            out["max_px"].append(int(p64.max()))
-        yield pd.DataFrame(out)
+def _gif_stats(aid: int, payload: bytes) -> list[tuple]:
+    return _gray_stats(aid, *decode_gif_gray(payload))
 
 
 _OP222_SQL = f"""
@@ -914,12 +747,12 @@ FROM px GROUP BY i
 @register(
     "op222_gif_decode_stats",
     oracle=_OP222_SQL,
-    deps=(_gen_gif, _decode_gif_stats, _gif_kernel),
+    deps=(_codec_frame, _gif_asset, _gif_stats, _gray_stats, _gif_kernel),
 )
 def op222_gif_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GIF decode for real — the THIRD compressed image format and the
     remaining classic compression family: LZW with variable-width
-    codes (JPEG covered lossy DCT+Huffman, PNG covered DEFLATE). 60
+    codes (JPEG covers lossy DCT+Huffman, PNG covers DEFLATE). 60
     grayscale-palette GIFs from a closed-form formula (one corpus
     slice is low-entropy stripes so deep LZW prefixes and the KwKwK
     self-referential code path are load-bearing) are encoded by
@@ -929,16 +762,10 @@ def op222_gif_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     support. Lossless ⇒ the oracle restates exact pixel sums from
     the generation formula — the hash certifies the entire codec.
     Two-way javax.imageio interop (incl. its INTERLACED output) in
-    tests/test_codecs.py. No payload ever shuffles (mapInPandas both
-    stages, codec-family contract)."""
-    gen = spark.range(_GIF_N).repartition(8).mapInPandas(
-        _gen_gif, "asset_id long, payload binary"
-    )
-    return gen.mapInPandas(
-        _decode_gif_stats,
-        "asset_id long, width long, height long, pixel_sum long,"
-        " min_px long, max_px long",
-    )
+    tests/test_codecs.py. No payload ever shuffles (`_codec_frame`,
+    the family's shared plan)."""
+    return _codec_frame(spark, _GIF_N, _gif_asset, _gif_stats,
+                        _GRAY_STATS_DDL)
 
 
 # --------------------------------------------------------------------------
@@ -988,68 +815,42 @@ FROM s GROUP BY i
 _FLAC_MODES = ("independent", "left_side", "right_side", "mid_side")
 
 
-def _gen_flac(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    from ocdb_server_spark.sources.flac import encode_flac
-
-    for pdf in it:
-        ids, payloads = [], []
-        for i in pdf["id"]:
-            i = int(i)
-            n = 300 + (i % 4) * 150
-            k = np.arange(n, dtype=np.int64)
-            chans = [((i * 17 + k * 13 + c * 29) % 1601 - 800)
-                     for c in range(1 + (i % 4 == 3))]
-            if len(chans) == 2:
-                s = np.stack(chans, axis=1).astype(np.int16)
-            else:
-                s = chans[0].astype(np.int16)
-            ids.append(i)
-            payloads.append(encode_flac(
-                s, _FLAC_RATE, blocksize=256,
-                predictor="lpc" if i % 3 == 0 else "fixed",
-                stereo_mode=_FLAC_MODES[(i // 4) % 4],
-            ))
-        yield pd.DataFrame({"asset_id": ids, "payload": payloads})
+def _flac_asset(i: int) -> bytes:
+    n = 300 + (i % 4) * 150
+    k = np.arange(n, dtype=np.int64)
+    chans = [((i * 17 + k * 13 + c * 29) % 1601 - 800)
+             for c in range(1 + (i % 4 == 3))]
+    if len(chans) == 2:
+        s = np.stack(chans, axis=1).astype(np.int16)
+    else:
+        s = chans[0].astype(np.int16)
+    return encode_flac(
+        s, _FLAC_RATE, blocksize=256,
+        predictor="lpc" if i % 3 == 0 else "fixed",
+        stereo_mode=_FLAC_MODES[(i // 4) % 4],
+    )
 
 
-def _decode_flac_features(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    from ocdb_server_spark.sources.flac import decode_flac
-
-    for pdf in it:
-        out = {k: [] for k in
-               ("asset_id", "sample_rate", "channels", "n_samples",
-                "duration_ms", "sum_sq", "peak", "first_s", "last_s")}
-        for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-            rate, s = decode_flac(bytes(payload))
-            # interleaved flatten: mono is identity; stereo gives
-            # L0 R0 L1 R1 ... so first = left[0], last = right[-1]
-            s64 = np.asarray(s, dtype=np.int64).reshape(-1)
-            n_per_ch = s.shape[0]
-            out["asset_id"].append(int(aid))
-            out["sample_rate"].append(rate)
-            out["channels"].append(1 if s.ndim == 1 else s.shape[1])
-            out["n_samples"].append(s64.size)
-            out["duration_ms"].append(n_per_ch * 1000 // rate)
-            out["sum_sq"].append(int(np.sum(s64 * s64)))
-            out["peak"].append(int(np.max(np.abs(s64))))
-            out["first_s"].append(int(s64[0]))
-            out["last_s"].append(int(s64[-1]))
-        yield pd.DataFrame(out)
+def _flac_features(aid: int, payload: bytes) -> list[tuple]:
+    rate, s = decode_flac(payload)
+    # interleaved flatten: mono is identity; stereo gives
+    # L0 R0 L1 R1 ... so first = left[0], last = right[-1]
+    s64 = np.asarray(s, dtype=np.int64).reshape(-1)
+    n_per_ch = s.shape[0]
+    return [(aid, rate, 1 if s.ndim == 1 else s.shape[1], s64.size,
+             n_per_ch * 1000 // rate, int(np.sum(s64 * s64)),
+             int(np.max(np.abs(s64))), int(s64[0]), int(s64[-1]))]
 
 
 @register(
     "op251_flac_decode_features",
     oracle=_OP251_SQL,
     # certification rides the FLAC kernel: a rewrite of the parser
-    # must re-front this op (round-14 — codec kernels as deps)
-    deps=(_gen_flac, _decode_flac_features, _flac_kernel),
+    # re-fronts this op
+    deps=(_codec_frame, _flac_asset, _flac_features, _flac_kernel),
 )
 def op251_flac_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FLAC audio decode, for real — the compressed-audio gap closed:
+    """FLAC audio decode, for real — compressed lossless audio:
     120 conformant 16-bit FLAC streams (90 mono + 30 STEREO,
     multi-frame) are encoded from a closed-form integer formula and
     then DECODED by sources/flac.py's spec parser — CRC-8/CRC-16
@@ -1073,15 +874,12 @@ def op251_flac_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the generation formula, so a hash match certifies the
     whole encode→Rice-bits→decode path, not the plumbing).
 
-    Scale shape: generation and decode are both mapInPandas stages —
-    payload bytes live and die inside one task (never shuffled); only
-    fixed-width integer feature rows continue (op195's contract).
+    Scale shape: generation and decode are chained mapInArrow stages
+    in one task — payload bytes never shuffle; only fixed-width
+    integer feature rows continue (op195's contract).
     sf_dir unused: self-generated corpus (op152's stance)."""
-    gen = spark.range(_FLAC_N).repartition(8).mapInPandas(
-        _gen_flac, "asset_id long, payload binary"
-    )
-    return gen.mapInPandas(
-        _decode_flac_features,
+    return _codec_frame(
+        spark, _FLAC_N, _flac_asset, _flac_features,
         "asset_id long, sample_rate long, channels long, n_samples long,"
         " duration_ms long, sum_sq long, peak long, first_s long, last_s long",
     )
@@ -1121,18 +919,45 @@ SELECT * FROM imgrow UNION ALL SELECT * FROM audrow
 """
 
 
+def _op104_asset(i: int) -> tuple:
+    """(modality, mime, payload): ids below _OP104_N are PNG images,
+    the rest FLAC mono clips."""
+    if i < _OP104_N:
+        w, h = 16 + (i % 5) * 8, 12 + (i % 4) * 6
+        r = np.arange(h, dtype=np.int64)[:, None]
+        c = np.arange(w, dtype=np.int64)[None, :]
+        px = ((i * 13 + r * 7 + c * 3) % 256).astype(np.uint8)
+        return "image", "image/png", encode_png_gray(px)
+    n = 200 + (i % 4) * 100
+    k = np.arange(n, dtype=np.int64)
+    s = ((i * 17 + k * 13) % 1601 - 800).astype(np.int16)
+    return "audio", "audio/flac", encode_flac(s, 8000, blocksize=256)
+
+
+def _op104_decode(aid: int, modality: str, mime: str,
+                  payload: bytes) -> list[tuple]:
+    if mime == "image/png":
+        w, h, px = decode_png_gray(payload)
+        return [(aid, modality, w, h, int(px.astype(np.int64).sum()))]
+    if mime == "audio/flac":
+        rate, s = decode_flac(payload)
+        s64 = np.asarray(s, dtype=np.int64).reshape(-1)
+        return [(aid, modality, s64.size, rate, int(s64.sum()))]
+    raise ValueError(f"undecodable mime {mime!r}")
+
+
 @register(
     "op104_multimodal_decode",
     oracle=_OP104_SQL,
-    deps=(_flac_kernel, _png_kernel),
+    deps=(_codec_frame, _op104_asset, _op104_decode, _flac_kernel,
+          _png_kernel),
 )
 def op104_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal binary-column pipeline end-to-end, on REAL codecs
-    (round-7 verdict item 3 — this op ran the stubbed kernel until six
-    real decoders existed): ONE asset table carries mixed modalities
-    in a single opaque `binary` column beside typed metadata
-    (modality, mime), and one Arrow-batched mapInPandas decode stage
-    DISPATCHES per payload — image/png through sources/png.py's chunk
+    """Multimodal binary-column pipeline end-to-end, on REAL codecs:
+    ONE asset table carries mixed modalities in a single opaque
+    `binary` column beside typed metadata (modality, mime), and one
+    mapInArrow decode stage DISPATCHES per payload — image/png through
+    sources/png.py's chunk
     walk + CRC32 + inflate + filter reconstruction, audio/flac through
     sources/flac.py's frame parser + LPC/fixed predictors + CRC/MD5
     verify — emitting one unified fixed-width feature row per asset
@@ -1142,76 +967,16 @@ def op104_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulas without ever seeing a byte: the hash certifies the
     dispatch AND both codecs end to end.
 
-    Scale shape: encode and decode live inside one mapInPandas task
-    each — payload bytes never shuffle, never hit the driver; only
+    Scale shape: encode and decode are chained mapInArrow stages in
+    one task — payload bytes never shuffle, never leave the executors; only
     80 fixed-width rows continue. At 100 TB the same plan reads a
     (modality, date)-partitioned media lake where metadata-only
     queries never touch the binary column."""
-    import pandas as pd
-
-    def gen_assets(it):
-        import numpy as np
-
-        from ocdb_server_spark.sources.flac import encode_flac
-        from ocdb_server_spark.sources.png import encode_png_gray
-
-        for pdf in it:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                if i < _OP104_N:  # PNG image
-                    w, h = 16 + (i % 5) * 8, 12 + (i % 4) * 6
-                    r = np.arange(h, dtype=np.int64)[:, None]
-                    c = np.arange(w, dtype=np.int64)[None, :]
-                    px = ((i * 13 + r * 7 + c * 3) % 256).astype(np.uint8)
-                    rows.append((i, "image", "image/png", encode_png_gray(px)))
-                else:  # FLAC mono clip
-                    n = 200 + (i % 4) * 100
-                    k = np.arange(n, dtype=np.int64)
-                    s = ((i * 17 + k * 13) % 1601 - 800).astype(np.int16)
-                    rows.append((i, "audio", "audio/flac",
-                                 encode_flac(s, 8000, blocksize=256)))
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "modality", "mime", "payload"]
-            )
-
-    def decode_dispatch(it):
-        import numpy as np
-
-        from ocdb_server_spark.sources.flac import decode_flac
-        from ocdb_server_spark.sources.png import decode_png_gray
-
-        for pdf in it:
-            out = {k: [] for k in
-                   ("asset_id", "modality", "dim_a", "dim_b", "checksum")}
-            for aid, modality, mime, payload in zip(
-                pdf["asset_id"], pdf["modality"], pdf["mime"], pdf["payload"]
-            ):
-                payload = bytes(payload)
-                if mime == "image/png":
-                    w, h, px = decode_png_gray(payload)
-                    a, b, chk = w, h, int(px.astype(np.int64).sum())
-                elif mime == "audio/flac":
-                    rate, s = decode_flac(payload)
-                    s64 = np.asarray(s, dtype=np.int64).reshape(-1)
-                    a, b, chk = s64.size, rate, int(s64.sum())
-                else:
-                    raise ValueError(f"undecodable mime {mime!r}")
-                out["asset_id"].append(int(aid))
-                out["modality"].append(str(modality))
-                out["dim_a"].append(a)
-                out["dim_b"].append(b)
-                out["checksum"].append(chk)
-            yield pd.DataFrame(out)
-
-    assets = spark.range(2 * _OP104_N).repartition(8).mapInPandas(
-        gen_assets,
-        "asset_id long, modality string, mime string, payload binary",
-    )
-    return assets.mapInPandas(
-        decode_dispatch,
+    return _codec_frame(
+        spark, 2 * _OP104_N, _op104_asset, _op104_decode,
         "asset_id long, modality string, dim_a long, dim_b long,"
         " checksum long",
+        gen_ddl="asset_id long, modality string, mime string, payload binary",
     )
 
 
@@ -1240,15 +1005,32 @@ FROM px GROUP BY i
 """
 
 
+def _anim_gif_asset(i: int) -> bytes:
+    nf = 2 + i % 7
+    w, h = 10 + (i % 5) * 4, 8 + (i % 4) * 4
+    r = np.arange(h, dtype=np.int64)[:, None]
+    c = np.arange(w, dtype=np.int64)[None, :]
+    return encode_gif_anim([
+        ((i * 13 + k * 29 + r * 7 + c * 3) % 256).astype(np.uint8)
+        for k in range(nf)
+    ])
+
+
+def _sampled_frames(aid: int, payload: bytes) -> list[tuple]:
+    frames = decode_gif_frames(payload)
+    kept = frames[::_OP130_EVERY]
+    return [(aid, len(frames), len(kept),
+             int(sum(px.astype(np.int64).sum() for _w, _h, px in kept)))]
+
+
 @register(
     "op130_multimodal_frame_sample",
     oracle=_OP130_SQL,
-    deps=(_gif_kernel,),
+    deps=(_codec_frame, _anim_gif_asset, _sampled_frames, _gif_kernel),
 )
 def op130_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video-style frame sampling on a REAL container (round-7 verdict
-    item 3 — synthetic payloads until the GIF codec existed): 24
-    multi-frame animated GIF89a streams (sources/gif.py
+    """Video-style frame sampling on a REAL container: 24 multi-frame
+    animated GIF89a streams (sources/gif.py
     encode_gif_anim — NETSCAPE loop block, per-frame Graphic Control
     Extensions, full LZW per frame) are decoded frame-by-frame and
     SAMPLED — every 4th frame's exact pixel sum survives, the rest are
@@ -1260,55 +1042,10 @@ def op130_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame
     LZW decode, AND the sampling arithmetic.
 
     Scale shape: identical to op104 — payload bytes live and die
-    inside one mapInPandas task, only (asset_id, 3 counters) rows
-    continue; a production frame-sampler over H.264 swaps the codec
-    kernel, not the plan."""
-    import pandas as pd
-
-    def gen_gifs(it):
-        import numpy as np
-
-        from ocdb_server_spark.sources.gif import encode_gif_anim
-
-        for pdf in it:
-            ids, payloads = [], []
-            for i in pdf["id"]:
-                i = int(i)
-                nf = 2 + i % 7
-                w, h = 10 + (i % 5) * 4, 8 + (i % 4) * 4
-                r = np.arange(h, dtype=np.int64)[:, None]
-                c = np.arange(w, dtype=np.int64)[None, :]
-                frames = [
-                    ((i * 13 + k * 29 + r * 7 + c * 3) % 256).astype(np.uint8)
-                    for k in range(nf)
-                ]
-                ids.append(i)
-                payloads.append(encode_gif_anim(frames))
-            yield pd.DataFrame({"asset_id": ids, "payload": payloads})
-
-    def sample_frames(it):
-        import numpy as np
-
-        from ocdb_server_spark.sources.gif import decode_gif_frames
-
-        for pdf in it:
-            out = {k: [] for k in
-                   ("asset_id", "n_frames", "n_sampled", "px_sum")}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                frames = decode_gif_frames(bytes(payload))
-                kept = frames[::_OP130_EVERY]
-                out["asset_id"].append(int(aid))
-                out["n_frames"].append(len(frames))
-                out["n_sampled"].append(len(kept))
-                out["px_sum"].append(
-                    int(sum(px.astype(np.int64).sum() for _w, _h, px in kept))
-                )
-            yield pd.DataFrame(out)
-
-    gifs = spark.range(_OP130_N).repartition(8).mapInPandas(
-        gen_gifs, "asset_id long, payload binary"
-    )
-    return gifs.mapInPandas(
-        sample_frames,
+    inside one task, only (asset_id, 3 counters) rows continue; a
+    production frame-sampler over H.264 swaps the codec kernel, not
+    the plan."""
+    return _codec_frame(
+        spark, _OP130_N, _anim_gif_asset, _sampled_frames,
         "asset_id long, n_frames long, n_sampled long, px_sum long",
     )

@@ -1,2 +1,2 @@
-"""Sources: ingest readers (SeaBASS-style delimited text, multimodal
-binary columns)."""
+"""Sources: ingest readers (SeaBASS-style delimited text) and the
+from-scratch media codecs of the multimodal decode family."""

@@ -1,15 +1,12 @@
 """Real binary codecs for the multimodal family: PCM WAV and 24-bit
 uncompressed BMP, implemented with struct+numpy only (both formats are
-public specifications simple enough to not need codec libraries —
-which this container lacks; compressed formats stay stubbed in
-sources/multimodal.py).
+public specifications simple enough to need no codec library; the
+compressed formats live in jpeg.py, png.py, gif.py and flac.py).
 
-This upgrades the multimodal story from "plumbing real, kernel
-stubbed" to "kernel REAL for the two classic uncompressed formats":
-op195/op196 synthesize standards-conformant files, decode them back
-through Arrow-batched mapInPandas, and reduce to integer features that
-a closed-form DuckDB oracle recomputes from the generation formulas —
-so the decode path itself is hash-certified.
+op195–op200 synthesize standards-conformant files, decode them back
+in the codec family's mapInArrow decode stage, and reduce them to
+integer features that a closed-form DuckDB oracle recomputes from the
+generation formulas — so the decode path itself is hash-certified.
 `tests/test_codecs.py` additionally proves WAV interop BOTH ways
 against the stdlib `wave` module (our bytes parse there; its bytes
 parse here).
@@ -129,7 +126,7 @@ def decode_bmp(payload: bytes) -> tuple[int, int, np.ndarray]:
     # data_offset locates the pixel data and was trusted blindly: a
     # corrupt offset pointing INTO the header silently decoded header
     # bytes as pixels, and one past the buffer leaked numpy's generic
-    # error instead of this module's taxonomy (round-13 review)
+    # error instead of this module's taxonomy
     if data_offset < 54 or data_offset + row_len * h > len(payload):
         raise ValueError(
             f"bmp: data offset {data_offset} out of bounds for "

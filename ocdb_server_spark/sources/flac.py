@@ -32,10 +32,9 @@ own integrity machinery, not just by our tests. LPC prediction is
 float only at ANALYSIS time (choosing coefficients); the written
 stream carries quantized integer coefficients and the residual is
 computed and inverted in exact integer arithmetic, so ANY
-quantization is still lossless. No external codec exists in this
-container (no flac/ffmpeg/sox), so cross-implementation interop is
-covered by round-trip + property tests (tests/test_codecs.py) the way
-the round-6 verdict item 4 allowed.
+quantization is still lossless. The project ships no external FLAC
+codec (flac/ffmpeg/sox), so cross-implementation interop is covered
+by round-trip + property tests (tests/test_codecs.py).
 
 Reference analog: none — the reference serves files it never decodes
 (`ocdb/ws/handlers` streams stored bytes [U]); this is the multimodal
@@ -510,7 +509,7 @@ def encode_flac(samples: np.ndarray, sample_rate: int, blocksize: int = 256,
 
     samples: shape (n,) mono or (n, 2) stereo (column 0 = left).
     predictor: 'auto' (cheapest of fixed/LPC), 'fixed' (orders 0-4
-    only — the round-7 original), or 'lpc' (pin the LPC path).
+    only), or 'lpc' (pin the LPC path).
     stereo_mode: 'auto' (cheapest by residual estimate) or one of
     'independent', 'left_side', 'right_side', 'mid_side' to pin a
     decorrelation layout (coverage knob). Partition order alternates
@@ -524,8 +523,7 @@ def encode_flac(samples: np.ndarray, sample_rate: int, blocksize: int = 256,
         # used to emit a CORRUPT stream (wrong frame boundaries) that
         # failed only later with a confusing CRC error — the one
         # unguarded knob while rate/predictor/stereo_mode/dtype all
-        # reject loudly (round-13 review; spec max 65535, streaming
-        # min 16)
+        # reject loudly (spec max 65535, streaming min 16)
         raise ValueError(
             f"flac: blocksize must be in [16, 65535], got {blocksize}"
         )

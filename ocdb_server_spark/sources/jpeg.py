@@ -1,7 +1,6 @@
 """Baseline JPEG (ITU-T T.81) codec for single-component (grayscale)
-images, implemented with numpy only — no codec libraries, which this
-container lacks (round-5 verdict item 4: retire the last honest stub in
-the multimodal story with a compressed format).
+images, implemented with numpy only — no codec library: the
+multimodal family's compressed-format decoder.
 
 Everything here is from the PUBLIC specification: Annex K quantization
 and Huffman tables, canonical-Huffman code construction (C.2), entropy
@@ -114,8 +113,7 @@ def _build_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]
 def _build_decode_map(bits: list[int], vals: list[int]) -> dict[tuple[int, int], int]:
     """Canonical Huffman for decoding: (length, code) -> symbol —
     derived from _build_codes so the C.2 walk exists ONCE and the
-    encoder and decoder can never silently diverge (round-13 review:
-    the walk was duplicated verbatim with the key/value swapped)."""
+    encoder and decoder can never silently diverge."""
     return {
         (length, code): sym
         for sym, (code, length) in _build_codes(bits, vals).items()
@@ -199,7 +197,7 @@ def encode_jpeg_gray(qcoeffs: np.ndarray, width: int, height: int) -> bytes:
         if s > 11:
             # |diff| >= 2048 has no baseline DC category — a bare
             # KeyError leaked with no context while the decoder side
-            # guards the same bound loudly (round-13 review)
+            # guards the same bound loudly
             raise ValueError(
                 f"jpeg: DC difference {diff} outside baseline range "
                 "(category > 11)"

@@ -118,7 +118,7 @@ def main() -> None:
         "op86_udaf_group_zscore": "UDF surface op",
         "op87_udtf_expand": "UDF surface op",
         "op97_profile_columns": "exact COUNT(DISTINCT) on different columns in one scan: the standard Expand x4 of narrow projected rows",
-        "op104_multimodal_decode": "mapInPandas decode op",
+        "op104_multimodal_decode": "mapInArrow decode op",
         "op162_drift_psi": "5 aggs (source×bin, source, bin, total, final); all post-scan sides are #sources×12 rows max, 3 broadcast back",
         "op166_hll_sketch_rollup": "a per-event-type HLL sketch IS the op (a handful of event types)",
         "op183_bm25_topk": "tf + df + corpus-stats aggs + per-doc score agg; every shuffle is pruned to the query-term subset before it moves (at most n_terms rows/doc), df/stats broadcast back",
@@ -154,7 +154,7 @@ def main() -> None:
         wscg = len(set(re.findall(r"\*\((\d+)\)", plan)))
         win = len(re.findall(r"\bWindow\b", plan))
         pyudf = len(
-            re.findall(r"BatchEvalPython|ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas", plan)
+            re.findall(r"BatchEvalPython|ArrowEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas", plan)
         )
         pushed = bool(re.search(r"PushedFilters: \[[^\]]", plan))
         found = flags(plan)

@@ -1,7 +1,7 @@
-"""Multimodal binary-column plumbing tests (north-star; SURVEY.md
-§2.10 design notes in sources/multimodal.py). The decode kernel is
-stubbed (no codec libs in this container); the Spark-side contract —
-schema, Arrow batch iteration, metadata-only pruning — is real."""
+"""Multimodal binary-column plumbing tests: opaque media payloads
+travel in a `binary` column beside typed metadata, and metadata-only
+queries prune the payload column. The real decode kernels are
+certified by the codec family in operators/multimodal_codecs.py."""
 
 from __future__ import annotations
 
@@ -9,7 +9,23 @@ import struct
 
 import pytest
 
-from ocdb_server_spark.sources.multimodal import MEDIA_SCHEMA, decode_image_stub
+from pyspark.sql.types import (
+    BinaryType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+MEDIA_SCHEMA = StructType(
+    [
+        StructField("asset_id", LongType(), False),
+        StructField("modality", StringType(), False),  # image | audio | video
+        StructField("mime", StringType(), True),
+        StructField("payload", BinaryType(), True),  # opaque bytes
+        StructField("n_bytes", LongType(), True),
+    ]
+)
 
 
 def make_synthetic_assets(spark, n: int = 64):
@@ -22,16 +38,6 @@ def make_synthetic_assets(spark, n: int = 64):
         payload = struct.pack("<ii", w, h) + bytes((i % 251,)) * 128
         rows.append((i, "image", "image/fake", payload, len(payload)))
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def test_stub_raises_without_fake():
-    with pytest.raises(NotImplementedError):
-        decode_image_stub(b"\x00" * 16)
-
-
-def test_stub_fake_decodes_header():
-    payload = struct.pack("<ii", 320, 240) + b"\x01" * 8
-    assert decode_image_stub(payload, fake=True) == (320, 240)
 
 
 @pytest.fixture(scope="module")

@@ -51,7 +51,7 @@ def test_flac_features_match_direct_decode(spark):
 
 
 def test_flac_op_payloads_never_shuffle(spark):
-    """Plan gate: two MapInPandas stages (generate, decode) with NO
+    """Plan gate: two MapInArrow stages (generate, decode) with NO
     exchange between them — payload bytes live and die inside one
     task (the op195/op202 contract)."""
     from ocdb_server_spark.operators.multimodal_codecs import (
@@ -61,9 +61,9 @@ def test_flac_op_payloads_never_shuffle(spark):
     plan = _plan(op251_flac_decode_features(spark, "unused"))
     import re
 
-    assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 2, plan
+    assert len(re.findall(r"\(\d+\) MapInArrow", plan)) == 2, plan
     # the only exchange is range -> repartition(8), BEFORE generation;
-    # nothing between or after the two MapInPandas stages shuffles
+    # nothing between or after the two MapInArrow stages shuffles
     assert len(re.findall(r"\(\d+\) Exchange", plan)) <= 1, plan
     assert "RoundRobin" in plan  # and it is the repartition, not a hash
 

@@ -601,23 +601,74 @@ def test_lateral_topk_decorrelates_to_windowgrouplimit(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
-def test_jpeg_ops_payload_never_shuffles(spark, sf_dir):
-    """op202/op203 (same contract as the op195-op200 codec family):
-    the ONLY exchange is the repartition of tiny generator-id rows —
-    encoded payload bytes are produced and decoded inside one task and
-    must never cross an exchange (at 100 TB the payloads are the
-    data; shuffling them is the scale-killer)."""
-    for name in (
-        "op202_jpeg_decode_stats",
-        "op203_jpeg_pixel_decode",
-        "op205_png_decode_stats",
-    ):
+_CODEC_OPS = (
+    "op104_multimodal_decode",
+    "op130_multimodal_frame_sample",
+    "op195_wav_decode_features",
+    "op196_bmp_decode_stats",
+    "op197_audio_dominant_freq",
+    "op198_bmp_resize",
+    "op199_audio_loudest_frames",
+    "op200_multimodal_fuse",
+    "op202_jpeg_decode_stats",
+    "op203_jpeg_pixel_decode",
+    "op205_png_decode_stats",
+    "op222_gif_decode_stats",
+    "op251_flac_decode_features",
+)
+
+
+def _plan_tree(plan: str) -> list[tuple[str, int | None]]:
+    """(node name, parent index) for each node line of a physical plan
+    tree as printed by executedPlan().toString()."""
+    nodes: list[tuple[str, int | None]] = []
+    stack: list[tuple[int, int]] = []  # (depth, node index)
+    for line in plan.splitlines():
+        m = re.match(r"([\s:|+-]*)(?:\*\(\d+\) )?(\w+)", line)
+        if not m:
+            continue
+        depth = len(m.group(1))
+        while stack and stack[-1][0] >= depth:
+            stack.pop()
+        nodes.append((m.group(2), stack[-1][1] if stack else None))
+        stack.append((depth, len(nodes) - 1))
+    return nodes
+
+
+def test_codec_ops_payload_never_shuffles(spark, sf_dir):
+    """The codec family (op104, op130, op195-op205, op222, op251): each
+    decode chain is generate -> decode, two MapInArrow stages in one
+    task, and the ONLY exchange below them is the repartition of the
+    tiny id Range — encoded payload bytes are produced and decoded
+    inside one task and must never cross an exchange (at 100 TB the
+    payloads are the data; shuffling them is the scale-killer).
+    op200 runs two chains and joins their feature rows."""
+    for name in _CODEC_OPS:
         plan = _plan(OPS[name].fn(spark, sf_dir))
-        assert plan.count("Exchange") == 1, f"{name}: expected 1 exchange:\n{plan}"
-        # the exchange's child is the 1-column Range generator, so the
-        # payload column cannot exist below it
-        after = plan.split("Exchange")[1]
-        assert "Range" in after, f"{name}: exchange must sit on the id Range"
+        nodes = _plan_tree(plan)
+        names = [n for n, _p in nodes]
+        chains = 2 if name == "op200_multimodal_fuse" else 1
+        assert "MapInPandas" not in names, f"{name}:\n{plan}"
+        assert names.count("MapInArrow") == 2 * chains, f"{name}:\n{plan}"
+        # an exchange above a MapInArrow carries decoded feature rows
+        # (op200's join); the ones below must be the id repartitions
+        above = set()
+        for i, n in enumerate(names):
+            p = nodes[i][1] if n == "MapInArrow" else None
+            while p is not None:
+                above.add(p)
+                p = nodes[p][1]
+        exchanges = [i for i, n in enumerate(names) if n.endswith("Exchange")]
+        pre = [e for e in exchanges if e not in above]
+        assert len(pre) == chains, f"{name}:\n{plan}"
+        if chains == 1:
+            assert exchanges == pre, f"{name}: exchange after decode\n{plan}"
+        for e in pre:
+            child = [n for n, p in nodes if p == e]
+            gen = nodes[e][1]
+            assert child == ["Range"], f"{name}: exchange must sit on the id Range"
+            assert names[gen] == "MapInArrow", f"{name}:\n{plan}"
+            assert names[nodes[gen][1]] == "MapInArrow", f"{name}:\n{plan}"
 
 
 def test_gram_matrix_partials_before_exchange(spark, sf_dir):
