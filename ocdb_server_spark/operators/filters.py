@@ -23,8 +23,10 @@ from ocdb_server_spark.plans.expr_compiler import compile_expr
 from ocdb_server_spark.registry import register
 from ocdb_server_spark.search import (
     DatasetQuery,
+    DatasetQueryResult,
     SearchColumns,
     _keyset_after,
+    _members,
     _predicate,
     find_datasets,
 )
@@ -245,10 +247,18 @@ LIMIT 50
     "op267_find_datasets_geojson",
     oracle=_OP267_SQL,
     # the registered plan IS the serving surface: the request compiler,
-    # the predicate composer, the cursor builder and the page+geojson
-    # assembly all live in search.py / plans.expr_compiler — a rewrite
-    # there must re-front this op exactly like an oracle edit.
-    deps=(find_datasets, _predicate, _keyset_after, compile_expr),
+    # the predicate composer, the cursor builder, the page+geojson
+    # assembly and the total_count read all live in search.py /
+    # plans.expr_compiler — a rewrite there must re-front this op
+    # exactly like an oracle edit.
+    deps=(
+        find_datasets,
+        DatasetQueryResult,
+        _predicate,
+        _members,
+        _keyset_after,
+        compile_expr,
+    ),
 )
 def op267_find_datasets_geojson(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GET /datasets?geojson=true, end to end (ref: find_datasets [U]
@@ -265,8 +275,10 @@ def op267_find_datasets_geojson(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB shape: the expr+bbox predicate compiles into ONE Catalyst
     conjunction pushed to the parquet scan (test_pipeline_r14 asserts
-    PushedFilters carries all three columns); total_count is one
-    partial-agg count over the pushed-predicate scan; the page plans
+    PushedFilters carries all three columns); total_count is read
+    here before the page is fetched, so it is one count() over the
+    pushed-predicate scan (a caller that fetches the page first gets
+    the count observed on the page query instead); the page plans
     as TakeOrderedAndProject (partial top-50 per partition — no global
     sort materializes) and the GeoJSON string is built by to_json
     INSIDE whole-stage codegen on the 50 surviving rows — serialization

@@ -12,20 +12,22 @@ execution is a parquet scan with every predicate pushed down — the
 Spark analog of "compile the whole query into the Mongo filter so the
 database does the work".
 
-Scale notes: `total_count` and the page both derive from ONE filtered
-frame; pagination is ORDER BY a unique key + LIMIT/OFFSET, which
-Spark plans as a partial top-(offset+count) per partition — no global
-sort materializes. Deep paging (offset ≫) degrades the same way it
-does in any engine; cursor-style paging (filter key > last_seen) is
-the 100 TB idiom and falls out of the same API (pass the cursor
-predicate as `expr`).
+Scale notes: one request is one Spark job. The page query carries an
+`Observation` that counts the filtered rows as they flow into the
+page's sort, so `total_count` comes back with the page instead of from
+a second scan. Pagination is ORDER BY a unique key + LIMIT/OFFSET,
+which Spark plans as a partial top-(offset+count) per partition — no
+global sort materializes. Deep paging (offset ≫) degrades the same way
+it does in any engine; cursor-style paging (`DatasetQuery.after`) costs
+the same for every page.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import cached_property
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 from ocdb_server_spark.plans.expr_compiler import compile_expr
 
@@ -75,8 +77,8 @@ class DatasetQuery:
     # the previous page's LAST row's values for SearchColumns.order_by,
     # as a tuple of the same length. When set, `offset` is ignored and
     # the page is WHERE (order_by tuple) > after ORDER BY order_by
-    # LIMIT count — a pushed-down predicate + TakeOrderedAndProject,
-    # instead of offset's scan-and-discard (linear in page depth).
+    # LIMIT count — a filter + TakeOrderedAndProject, instead of
+    # offset's scan-and-discard (linear in page depth).
     after: tuple | None = None
 
 
@@ -112,11 +114,39 @@ class SearchColumns:
 @dataclass(frozen=True)
 class DatasetQueryResult:
     """Reference: DatasetQueryResult [U] — total hit count + one page,
-    echoing the query."""
+    echoing the query.
 
-    total_count: int
+    `total_count` is the whole query's hit count (a keyset cursor pages
+    through the hits, it does not redefine them). It is read lazily
+    from the count `_observation` attached below the page's sort and
+    cursor filter, so fetching `datasets` yields the count at no extra
+    job. Read before the page is fetched, or when Catalyst pruned the
+    observed node, it costs one `count()` over `_hits`. `_observation`
+    is None when the request matches nothing by construction (a
+    membership filter whose groups resolve to no members): the count
+    is 0 and no job runs."""
+
     datasets: DataFrame
     query: DatasetQuery
+    _hits: DataFrame = field(repr=False, compare=False)
+    _observation: Observation | None = field(repr=False, compare=False)
+
+    @cached_property
+    def total_count(self) -> int:
+        if self._observation is None:
+            return 0
+        done = self._observation._jo.future().isCompleted
+        if not done():
+            # Spark completes observations from a QueryExecutionListener
+            # after the action returns: drain the bus before deciding.
+            sc = self._hits.sparkSession.sparkContext._jsc.sc()
+            sc.listenerBus().waitUntilEmpty()
+        if done():
+            # an empty Row when Catalyst pruned the observed node
+            row = self._observation._jo.getRow()
+            if row.length() == 1:
+                return row.getLong(0)
+        return self._hits.count()
 
 
 def _predicate(q: DatasetQuery, cols: SearchColumns) -> Column:
@@ -171,6 +201,27 @@ def _predicate(q: DatasetQuery, cols: SearchColumns) -> Column:
         if cols.status is None:
             raise ValueError("status filter needs SearchColumns.status binding")
         pred = pred & (F.col(cols.status) == q.status)
+    members = _members(q, cols)
+    if members is not None:
+        if cols.group is None:
+            raise ValueError("pgroup/pname filter needs SearchColumns.group binding")
+        # A requested filter whose groups all resolved empty matches
+        # NOTHING (not everything) — dropping the predicate would leak
+        # the whole table to a typo'd group name.
+        pred = pred & (F.col(cols.group).isin(members) if members else F.lit(False))
+    return pred
+
+
+def _members(q: DatasetQuery, cols: SearchColumns) -> list[str] | None:
+    """The member names the pgroup/pname filter keeps, deduplicated in
+    stable order (a deterministic IN-list in the pushed filter); None
+    when the request applies no membership filter."""
+    if q.pmode not in ("contains", "dont_apply"):
+        # same loud-enum rule as wlmode/shallow: a typo like
+        # 'dont-apply' must not silently apply the filter.
+        raise ValueError(f"invalid pmode {q.pmode!r}")
+    if not (q.pgroup or q.pname) or q.pmode == "dont_apply":
+        return None
     members = list(q.pname)
     for g in q.pgroup:
         # Expand groups through the mapping (reference semantics:
@@ -178,21 +229,7 @@ def _predicate(q: DatasetQuery, cols: SearchColumns) -> Column:
         # named like a literal member still matches itself when no
         # mapping is configured.
         members.extend(cols.pgroup_map.get(g, () if cols.pgroup_map else (g,)))
-    if q.pmode not in ("contains", "dont_apply"):
-        # same loud-enum rule as wlmode/shallow (round-12 review: a
-        # typo like 'dont-apply' silently APPLIED the filter and
-        # narrowed the result set).
-        raise ValueError(f"invalid pmode {q.pmode!r}")
-    if (q.pgroup or q.pname) and q.pmode != "dont_apply":
-        if cols.group is None:
-            raise ValueError("pgroup/pname filter needs SearchColumns.group binding")
-        # A requested filter whose groups all resolved empty matches
-        # NOTHING (not everything) — dropping the predicate would leak
-        # the whole table to a typo'd group name.
-        # dedup, stable order → deterministic IN-list in the pushed filter
-        seen = dict.fromkeys(members)
-        pred = pred & (F.col(cols.group).isin(list(seen)) if seen else F.lit(False))
-    return pred
+    return list(dict.fromkeys(members))
 
 
 def _keyset_after(order_by: tuple[str, ...], after: tuple) -> Column:
@@ -213,9 +250,9 @@ def _keyset_after(order_by: tuple[str, ...], after: tuple) -> Column:
             # Spark's asc default sorts NULLS FIRST, so NULL is the
             # SMALLEST value in the walk order): 'col > NULL' must
             # mean 'any non-null', and the equality link must be a
-            # null test — plain >/== evaluate to NULL and used to
-            # make every later page empty (round-12 review). With
-            # this, cursor-walk visits exactly offset-walk's rows.
+            # null test — plain >/== evaluate to NULL and would make
+            # every later page empty. With this, cursor-walk visits
+            # exactly offset-walk's rows.
             gt = F.col(c).isNotNull()
             eqc = F.col(c).isNull()
         else:
@@ -230,29 +267,27 @@ def find_datasets(
     df: DataFrame, q: DatasetQuery, cols: SearchColumns
 ) -> DatasetQueryResult:
     """One call = the reference's whole request lifecycle: compile every
-    param into a single Catalyst predicate, count the hits, return the
-    deterministic page.
+    param into a single Catalyst predicate and return the deterministic
+    page with the hit count observed on it — one Spark job when the
+    caller fetches the page and then reads `total_count`.
 
     Paging: `q.after` (keyset cursor) beats `q.offset` — the cursor
-    tuple compiles into one more pushed predicate and the page plans as
+    tuple compiles into one more filter and the page plans as
     TakeOrderedAndProject, so page N costs the same as page 1.
-    total_count is for the WHOLE query either way (the cursor pages
-    through it, it doesn't redefine it)."""
+    total_count is for the WHOLE query either way: the count is
+    observed below the cursor filter, so the cursor pages through the
+    hits without redefining them."""
     hits = df.filter(_predicate(q, cols))
-    # count() and the page are two actions over the same filtered set —
-    # uncached, the predicate scan would run twice per request
-    # (round-12 review). Persist through both. A serving workload that
-    # only ever calls find_datasets never reaches the registry's
-    # per-operator release point, so draining the pool HERE bounds the
-    # resident caches at one (this request's) instead of one per
-    # request forever (round-12 ADVICE); the previous request's page
-    # has long been materialized by its caller, and unpersist is
-    # always correctness-safe — a late reader recomputes.
-    from ocdb_server_spark.registry import pool_persist, release_pool
-
-    release_pool()
-    hits = pool_persist(hits)
-    total = hits.count()
+    observation = None
+    if _members(q, cols) != []:
+        # The count rides on the page query: a CollectMetrics node over
+        # the filtered rows, below the cursor filter and the top-k, so
+        # the page's own scan yields it and nothing is persisted. A
+        # membership filter that resolved to no members makes the
+        # predicate a literal false: Catalyst prunes the scan and the
+        # count is 0 by construction.
+        observation = Observation()
+        hits = hits.observe(observation, F.count(F.lit(1)))
     order_by = cols.order_by or (cols.order_key,)
     if q.after is not None:
         page = (
@@ -279,4 +314,4 @@ def find_datasets(
                 )
             ),
         )
-    return DatasetQueryResult(total_count=total, datasets=page, query=q)
+    return DatasetQueryResult(page, q, _hits=hits, _observation=observation)

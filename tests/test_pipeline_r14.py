@@ -35,9 +35,9 @@ def test_geojson_is_valid_point_of_the_row_coords(page):
 def test_envelope_total_count_is_the_full_hit_count(page, duck):
     """total_count is the WHOLE query's hit count (the page merely
     windows it): constant across rows and equal to an independent
-    DuckDB count of the same predicate. Reuses the module fixture —
-    find_datasets runs a persist+count+collect per call (round-14
-    review)."""
+    DuckDB count of the same predicate. Reuses the module fixture:
+    each op267 build runs a count job, and collecting the page runs
+    another."""
     rows = page
     totals = {r.total_count for r in rows}
     assert len(totals) == 1

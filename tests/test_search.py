@@ -16,6 +16,19 @@ from ocdb_server_spark.search import (
     find_datasets,
 )
 
+
+def _jobs_mark(spark) -> int:
+    """One past the newest job id in the status store, read once the
+    listener bus is drained (as perfbench.counters reads the store).
+    Job ids are consecutive, so the difference of two marks is the
+    number of jobs started in between, however many old jobs the store
+    has already evicted (it keeps spark.ui.retainedJobs)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return jobs.apply(0).jobId() + 1 if jobs.size() else 0
+
+
 PART_COLS = SearchColumns(
     x="p_size",
     y="p_retailprice",
@@ -103,6 +116,52 @@ def test_result_echoes_query(part):
     q = DatasetQuery(expr="p_size:7")
     res = find_datasets(part, q, PART_COLS)
     assert res.query is q
+
+
+def test_page_then_total_count_is_one_job(spark, part):
+    """The count rides on the page query: fetching the page and then
+    reading total_count runs exactly one Spark job (read from the
+    status store, as the benchmark reads it) and the count is exact."""
+    q = DatasetQuery(expr="p_size:[1 TO 10]", count=7)
+    mark = _jobs_mark(spark)
+    res = find_datasets(part, q, PART_COLS)
+    page = res.datasets.toArrow()
+    total = res.total_count
+    assert _jobs_mark(spark) - mark == 1
+    assert total == part.filter(F.col("p_size").between(1, 10)).count()
+    assert page.num_rows == min(total, 7)
+    assert res.total_count == total  # memoized: no second read
+
+
+def test_total_count_before_page(part):
+    """Reading total_count before the page is fetched counts the hits
+    with its own job; the page fetched afterwards is still right."""
+    q = DatasetQuery(expr="p_size:[1 TO 10]", offset=3, count=5)
+    res = find_datasets(part, q, PART_COLS)
+    hits = part.filter(F.col("p_size").between(1, 10))
+    assert res.total_count == hits.count()
+    keys = sorted(r.p_partkey for r in hits.select("p_partkey").collect())
+    assert [r.p_partkey for r in res.datasets.collect()] == keys[3:8]
+
+
+def test_resolved_empty_group_runs_no_count_job(spark, orders):
+    """A membership filter that resolves to no members matches nothing
+    by construction: total_count is 0 without a job, read before or
+    after the (empty) page."""
+    cols = SearchColumns(
+        group="o_orderpriority",
+        order_key="o_orderkey",
+        pgroup_map={"none": ()},
+    )
+    q = DatasetQuery(pgroup=["none"], count=10)
+    mark = _jobs_mark(spark)
+    assert find_datasets(orders, q, cols).total_count == 0
+    assert _jobs_mark(spark) == mark
+    res = find_datasets(orders, q, cols)
+    assert res.datasets.toArrow().num_rows == 0
+    mark = _jobs_mark(spark)
+    assert res.total_count == 0
+    assert _jobs_mark(spark) == mark
 
 
 def test_missing_binding_raises(part):
@@ -285,22 +344,36 @@ def test_keyset_cursor_walk_equals_offset_walk(orders):
     assert seen == expected
 
 
-def test_keyset_cursor_predicate_pushes_down(orders):
-    """The cursor tuple must land in PushedFilters (the leading
-    strict-> component is a plain range predicate) and the page must
-    plan as TakeOrderedAndProject — the op193 shape, now in the
-    flagship search path."""
+def test_keyset_cursor_filters_above_observed_count(spark, orders):
+    """With a keyset cursor the page plans as TakeOrderedAndProject
+    over the cursor Filter, and the count's CollectMetrics node sits
+    BELOW that Filter: fetching the page and then reading total_count
+    runs one job, and the count is the whole query's, not the rest of
+    the walk after the cursor."""
     import datetime
 
     cols = SearchColumns(
         order_key="o_orderkey", order_by=("o_orderdate", "o_orderkey")
     )
-    cur = (datetime.datetime(1995, 6, 1), 42)
-    res = find_datasets(orders, DatasetQuery(count=20, after=cur), cols)
+    q = DatasetQuery(
+        expr="o_totalprice:[100000 TO 200000]",
+        count=20,
+        after=(datetime.datetime(1995, 6, 1), 42),
+    )
+    mark = _jobs_mark(spark)
+    res = find_datasets(orders, q, cols)
+    page = res.datasets.collect()
+    total = res.total_count
+    assert _jobs_mark(spark) - mark == 1
+    assert total == orders.filter(F.col("o_totalprice").between(100000, 200000)).count()
+    assert 0 < len(page) <= 20
+
     plan = res.datasets._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
-    pushed = plan.split("PushedFilters:")[1][:500]
-    assert "o_orderdate" in pushed, f"cursor must push to scan: {pushed}"
+    lines = plan.splitlines()
+    cursor = next(i for i, ln in enumerate(lines) if "Filter" in ln and "1995-06-01" in ln)
+    metrics = next(i for i, ln in enumerate(lines) if "CollectMetrics" in ln)
+    assert cursor < metrics, plan  # tree order: a parent prints first
 
 
 def test_keyset_cursor_arity_mismatch_raises(orders):
