@@ -1,0 +1,1091 @@
+"""Forecasting operators: Holt (op231), additive seasonal Holt-Winters
+(op235), rolling OLS slope (op247), damped Holt (op253), multiplicative
+and damped multiplicative Holt-Winters (op254, op257), Croston/SBA for
+intermittent demand (op259) and the ADI/CV² demand classifier that
+routes a series to one of them (op262).
+
+Shape: the event-type series ops read one zero-filled daily spine
+(`_daily_series`); op259 builds its own spine per order-customer
+bucket. The six recurrence ops run through one grouped Arrow stage
+(`_series_stage`): one shuffle on the series key, each series sorted
+by day inside its task, and a pure per-series kernel with integer
+state, so series parallelize freely. The DuckDB oracles step the same
+integer recurrence with WITH RECURSIVE over the same spine text
+(`_DAILY_SQL`), so every level, trend and forecast is bit-identical.
+
+Package rules: DataFrame/Catalyst only, Python only inside
+Arrow-batched kernels, shuffles carry ids and counters (never payload
+text), cross-engine integer halving through one offset rule (`_hw_f2`,
+`_f2`), and outputs canonicalizer-safe (scalars only, no DECIMAL —
+tests/test_gate_shape.py).
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ocdb_server_spark.io import load_table
+from ocdb_server_spark.registry import register
+
+_HW_OFF = 1 << 41  # halving with possibly-negative operands: f2(x) =
+# (x + 2^41) div 2 − 2^40 equals floor(x/2) in Spark (`div` truncates,
+# but x + 2^41 ≥ 0 makes trunc == floor), DuckDB (`//`) and python —
+# the op186 portability rule extended to signed recurrences.
+
+
+def _hw_f2(x: str, int_div: str) -> str:
+    return f"((({x}) + {_HW_OFF}) {int_div} 2 - {_HW_OFF // 2})"
+
+
+def _f2(x: int) -> int:
+    """`_hw_f2` in Python: floor(x / 2) for every int64-range x."""
+    return (x + _HW_OFF) // 2 - _HW_OFF // 2
+
+
+# The oracles' zero-filled daily spine: (event_type, t, y) in `daily`,
+# t = days since the first event day, plus the last day in `maxt`.
+_DAILY_SQL = """
+WITH RECURSIVE bounds AS (
+  SELECT MIN(CAST(ts AS DATE)) AS d0, MAX(CAST(ts AS DATE)) AS d1 FROM events),
+spine AS (
+  SELECT et.event_type, CAST(t.i AS BIGINT) AS t
+  FROM (SELECT DISTINCT event_type FROM events) et,
+       bounds b, UNNEST(range(0, CAST(b.d1 - b.d0 AS BIGINT) + 1)) t(i)),
+counts AS (
+  SELECT event_type, CAST(CAST(ts AS DATE) - b.d0 AS BIGINT) AS t,
+         CAST(COUNT(*) AS BIGINT) AS y
+  FROM events CROSS JOIN bounds b
+  GROUP BY event_type, t),
+daily AS (
+  SELECT s.event_type, s.t, COALESCE(c.y, 0) AS y
+  FROM spine s LEFT JOIN counts c
+    ON s.event_type = c.event_type AND s.t = c.t),
+maxt AS (SELECT MAX(t) AS m FROM daily),"""
+
+
+def _daily_series(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, t, y): daily event counts per event_type, t = days
+    since the first event day, over a zero-filled day spine — a missing
+    day IS a 0 observation, as in `_DAILY_SQL`. The 1-row day bounds
+    are broadcast into the counts and into the spine."""
+    ev = load_table(spark, sf_dir, "events")
+    b = ev.agg(
+        F.min(F.col("ts").cast("date")).alias("d0"),
+        F.max(F.col("ts").cast("date")).alias("d1"),
+    )
+    counts = (
+        ev.crossJoin(F.broadcast(b))
+        .groupBy(
+            "event_type",
+            F.datediff(F.col("ts").cast("date"), F.col("d0")).cast("bigint").alias("t"),
+        )
+        .agg(F.count("*").cast("bigint").alias("y"))
+    )
+    spine = (
+        ev.select("event_type")
+        .distinct()
+        .crossJoin(F.broadcast(b))
+        .select(
+            "event_type",
+            F.explode(
+                F.expr("sequence(cast(0 as bigint), cast(datediff(d1, d0) as bigint))")
+            ).alias("t"),
+        )
+    )
+    return spine.join(counts, ["event_type", "t"], "left").select(
+        "event_type", "t", F.coalesce(F.col("y"), F.lit(0)).cast("bigint").alias("y")
+    )
+
+
+def _series_stage(daily: DataFrame, key: str, kernel, ddl: str) -> DataFrame:
+    """At most one row per series of ``daily`` (columns ``key``, ``t``,
+    ``y``): the rows are clustered on ``key`` (one shuffle, unless the
+    input is already partitioned on it), then, inside each series'
+    task, sorted by ``t`` and passed to ``kernel(key_value, ys, ts)``, which
+    returns the output row as a tuple, or None for no row. The rows are
+    built against an Arrow schema derived from ``ddl`` when the plan is
+    built, so no output type rests on Python value inference."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    struct = DataType.fromDDL(ddl)
+    schema = to_arrow_schema(struct)
+
+    def run(k, table):
+        import pyarrow as pa
+
+        table = table.sort_by("t")
+        row = kernel(
+            k[0].as_py(), table.column("y").to_pylist(), table.column("t").to_pylist()
+        )
+        rows = [] if row is None else [row]
+        return pa.Table.from_arrays(
+            [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(schema)],
+            schema=schema,
+        )
+
+    run.__name__ = kernel.__name__  # the stage's label in the plan
+    return daily.groupBy(key).applyInArrow(run, struct)
+
+
+def _seasonal_init(
+    ys: list[int], m: int, ratio: bool, op: str, model: str
+) -> tuple[int, int, list[int]]:
+    """(level, trend, seasonals) of a weekly Holt-Winters kernel after
+    its first season: level = integer mean of y_0..y_{m-1} (counts are
+    non-negative), trend = 0, s_i = y_i − level, or for seasonal
+    ratios s_i = y_i·S // max(level, 1). A span shorter than one season
+    fails loudly, as the oracles' week1 guard does."""
+    if len(ys) < m:
+        raise ValueError(
+            f"{op}: events span {len(ys)} < {m} days — "
+            f"{model} needs one full seasonal period (m={m})"
+        )
+    l = sum(ys[:m]) // m
+    if ratio:
+        return l, 0, [(y * _HWM_S) // max(l, 1) for y in ys[:m]]
+    return l, 0, [y - l for y in ys[:m]]
+
+
+def _forecast_ddl(horizon: int) -> str:
+    """Output DDL of the Holt-family ops: one row per event_type with
+    its final level and trend and the forecasts fc_1..fc_horizon."""
+    return "event_type string, level long, trend long, " + ", ".join(
+        f"fc_{h} long" for h in range(1, horizon + 1)
+    )
+
+
+# --------------------------------------------------------------------------
+# op231: Holt linear forecasting — grouped sequential recurrence,
+#        one Arrow grouped stage vs WITH RECURSIVE, integer-exact
+# --------------------------------------------------------------------------
+
+_HW_H = 3  # forecast horizon (days)
+
+
+def _op231_sql() -> str:
+    f2 = lambda x: _hw_f2(x, "//")  # noqa: E731
+    l2 = f2("d.y + h.l + h.b")
+    return f"""{_DAILY_SQL}
+init AS (
+  SELECT d0.event_type, d0.y AS y0, d1.y AS y1
+  FROM daily d0 JOIN daily d1
+    ON d0.event_type = d1.event_type AND d0.t = 0 AND d1.t = 1),
+hw AS (
+  SELECT event_type, CAST(0 AS BIGINT) AS t,
+         y0 AS l, y1 - y0 AS b
+  FROM init
+  UNION ALL
+  SELECT h.event_type, h.t + 1,
+         {l2} AS l,
+         {f2(f"h.b + ({l2}) - h.l")} AS b
+  FROM hw h
+  JOIN daily d ON d.event_type = h.event_type AND d.t = h.t + 1
+  CROSS JOIN maxt m
+  WHERE h.t + 1 <= m.m
+)
+SELECT h.event_type, h.l AS level, h.b AS trend,
+       h.l + 1 * h.b AS fc_1,
+       h.l + 2 * h.b AS fc_2,
+       h.l + 3 * h.b AS fc_3
+FROM hw h CROSS JOIN maxt m WHERE h.t = m.m
+"""
+
+
+def _holt(et: str, ys: list[int], ts: list[int]) -> tuple:
+    l, bt = ys[0], ys[1] - ys[0]
+    for y in ys[1:]:
+        l_new = _f2(y + l + bt)
+        bt = _f2(bt + l_new - l)
+        l = l_new
+    return (et, l, bt, *(l + h * bt for h in range(1, _HW_H + 1)))
+
+
+@register(
+    "op231_holt_forecast",
+    oracle=_op231_sql(),
+    deps=(_daily_series, _series_stage, _forecast_ddl, _f2, _holt),
+)
+def op231_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HOLT LINEAR (double-exponential) forecasting of daily event
+    volumes per event_type, α=β=1/2 — the grouped SEQUENTIAL
+    RECURRENCE family: each day's (level, trend) depends on the
+    previous day's, so unlike every aggregate in this package the
+    computation is inherently ordered WITHIN a key. The shape for that
+    is one grouped Arrow stage: each key's task runs the tiny ordered
+    loop over its ~30 daily rows (the same per-key-sequential argument
+    as sessionization), while keys parallelize freely — at 10^6 series
+    this is one shuffle on the series key and a 30-step python loop
+    per series.
+
+    The oracle is DuckDB's actual WITH RECURSIVE stepping the SAME
+    integer recurrence (op213's independent-recursion pairing, now
+    over ordered rows): α=1/2 halving is f2(x) = (x+2^41) div 2 −
+    2^40, which equals floor(x/2) in Spark/DuckDB/python even for
+    negative trends — so level, trend and the h=1..3 forecasts are
+    bit-identical. Day spine is zero-filled (a missing day IS a 0
+    observation; alignment bug on either side breaks the hash)."""
+    return _series_stage(
+        _daily_series(spark, sf_dir), "event_type", _holt, _forecast_ddl(_HW_H)
+    )
+
+
+# --------------------------------------------------------------------------
+# op235: seasonal Holt-Winters (additive, m=7) — recurrence with a
+#        seasonal-state vector, one Arrow grouped stage vs WITH RECURSIVE
+# --------------------------------------------------------------------------
+
+_HWS_M = 7  # weekly seasonality
+_HWS_H = 7  # forecast a full season ahead
+
+
+def _op235_sql() -> str:
+    f2 = lambda x: _hw_f2(x, "//")  # noqa: E731
+    # seasonal slot of step t+1: CASE (t+1) % 7 over the s columns
+    slot = (
+        "CASE CAST((h.t + 1) % 7 AS INTEGER) "
+        + " ".join(f"WHEN {i} THEN h.s{i}" for i in range(_HWS_M))
+        + " END"
+    )
+    l2 = f2(f"d.y - ({slot}) + h.l + h.b")
+    s_updates = ", ".join(
+        f"CASE WHEN (h.t + 1) % 7 = {i} "
+        f"THEN {f2(f'd.y - ({l2}) + h.s{i}')} ELSE h.s{i} END AS s{i}"
+        for i in range(_HWS_M)
+    )
+    s_inits = ", ".join(
+        f"y{i} - l_init AS s{i}" for i in range(_HWS_M)
+    )
+    y_cols = ", ".join(
+        f"MAX(CASE WHEN t = {i} THEN y END) AS y{i}" for i in range(_HWS_M)
+    )
+    fc = ", ".join(
+        f"h.l + {h} * h.b + (CASE CAST((h.t + {h}) % 7 AS INTEGER) "
+        + " ".join(f"WHEN {i} THEN h.s{i}" for i in range(_HWS_M))
+        + f" END) AS fc_{h}"
+        for h in range(1, _HWS_H + 1)
+    )
+    return f"""{_DAILY_SQL}
+week1 AS (
+  SELECT event_type, {y_cols},
+         -- CAST: DuckDB SUM(BIGINT) is HUGEINT, which would propagate
+         -- int128 through the whole recurrence and repr-diverge
+         CAST((SUM(CASE WHEN t < 7 THEN y ELSE 0 END)) // 7 AS BIGINT)
+           AS l_init
+  FROM daily WHERE t < 7 GROUP BY event_type),
+hw AS (
+  SELECT event_type, CAST(6 AS BIGINT) AS t, l_init AS l,
+         CAST(0 AS BIGINT) AS b, {s_inits}
+  FROM week1
+  UNION ALL
+  SELECT h.event_type, h.t + 1,
+         {l2} AS l,
+         {f2(f"h.b + ({l2}) - h.l")} AS b,
+         {s_updates}
+  FROM hw h
+  JOIN daily d ON d.event_type = h.event_type AND d.t = h.t + 1
+  CROSS JOIN maxt m
+  WHERE h.t + 1 <= m.m
+)
+SELECT h.event_type, h.l AS level, h.b AS trend, {fc}
+FROM hw h CROSS JOIN maxt m WHERE h.t = m.m
+"""
+
+
+def _hw_additive(et: str, ys: list[int], ts: list[int]) -> tuple:
+    l, bt, s = _seasonal_init(ys, _HWS_M, False, "op235", "seasonal Holt-Winters")
+    for t in range(_HWS_M, len(ys)):
+        y = ys[t]
+        slot = t % _HWS_M
+        l_new = _f2(y - s[slot] + l + bt)
+        bt = _f2(bt + l_new - l)
+        s[slot] = _f2(y - l_new + s[slot])
+        l = l_new
+    t_last = len(ys) - 1
+    return (
+        et, l, bt,
+        *(l + h * bt + s[(t_last + h) % _HWS_M] for h in range(1, _HWS_H + 1)),
+    )
+
+
+@register(
+    "op235_holt_winters_seasonal",
+    oracle=_op235_sql(),
+    deps=(_daily_series, _series_stage, _forecast_ddl, _f2, _seasonal_init,
+          _hw_additive),
+)
+def op235_holt_winters_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SEASONAL Holt-Winters (additive, weekly m=7, α=β=γ=1/2) —
+    op231's recurrence upgraded with a seasonal-state VECTOR: the
+    per-step state is (level, trend, s[0..6]) and only one seasonal
+    slot updates per day, so the oracle's WITH RECURSIVE carries the
+    seven s-columns and CASE-selects the active slot — the integer
+    recurrence discipline extended from scalar state (op186) through
+    2-tuple state (op231) to vector state.
+
+    Init, documented and identical both sides: level = week-1 mean
+    (integer div — counts are non-negative), trend = 0, s_i =
+    y_i − level; recurrence runs t = 7..T; forecasts h = 1..7 are
+    l + h·b + s[(T+h) mod 7] — a full season ahead, bit-exact. The
+    signed halving is op231's f2 (floor(x/2) in all three engines). A
+    span under 7 days raises a ValueError naming the minimum span.
+
+    Same scale shape as op231: the grouped Arrow stage runs the ordered
+    loop once per series (state is 9 ints, loop is ~30 steps); series
+    parallelize across one keyed shuffle."""
+    return _series_stage(
+        _daily_series(spark, sf_dir), "event_type", _hw_additive,
+        _forecast_ddl(_HWS_H),
+    )
+
+
+# --------------------------------------------------------------------------
+# op247: rolling OLS slope — trailing-window trend, integer-exact core
+# --------------------------------------------------------------------------
+
+_SLOPE_W = 7  # trailing window (days)
+
+_OP247_SQL = f"""
+WITH bounds AS (
+  SELECT MIN(CAST(ts AS DATE)) AS d0, MAX(CAST(ts AS DATE)) AS d1 FROM events),
+spine AS (
+  SELECT et.event_type, CAST(t.i AS BIGINT) AS t
+  FROM (SELECT DISTINCT event_type FROM events) et,
+       bounds b, UNNEST(range(0, CAST(b.d1 - b.d0 AS BIGINT) + 1)) t(i)),
+counts AS (
+  SELECT event_type, CAST(CAST(ts AS DATE) - b.d0 AS BIGINT) AS t,
+         CAST(COUNT(*) AS BIGINT) AS y
+  FROM events CROSS JOIN bounds b GROUP BY event_type, t),
+daily AS (
+  SELECT s.event_type, s.t, COALESCE(c.y, 0) AS y
+  FROM spine s LEFT JOIN counts c
+    ON s.event_type = c.event_type AND s.t = c.t),
+w AS (
+  SELECT event_type, t, y,
+         CAST(COUNT(*) OVER tw AS BIGINT) AS n,
+         CAST(SUM(t) OVER tw AS BIGINT) AS sx,
+         CAST(SUM(y) OVER tw AS BIGINT) AS sy,
+         CAST(SUM(t * y) OVER tw AS BIGINT) AS sxy,
+         CAST(SUM(t * t) OVER tw AS BIGINT) AS sxx
+  FROM daily
+  WINDOW tw AS (PARTITION BY event_type ORDER BY t
+                ROWS BETWEEN {_SLOPE_W - 1} PRECEDING AND CURRENT ROW))
+SELECT event_type, t, y,
+       ROUND(CAST(n * sxy - sx * sy AS DOUBLE)
+             / (n * sxx - sx * sx), 6) AS slope
+FROM w WHERE n = {_SLOPE_W}
+"""
+
+
+@register("op247_rolling_slope", oracle=_OP247_SQL, deps=(_daily_series,))
+def op247_rolling_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ROLLING OLS SLOPE: per-series trailing-7-day least-squares
+    trend of daily event volume — the "is this growing and how fast"
+    feature behind every trend alert, computed from WINDOWED SUFFICIENT
+    STATISTICS (n, Σx, Σy, Σxy, Σx²) so the regression is one pass of
+    rolling int64 sums (x is the small day index, so every product is
+    exact; the µs-epoch formulation would overflow squares — the
+    recentring rule documented here) and one final exact-int IEEE
+    division, round(6). op108's global regression made rolling; only
+    full windows emit. Scale: one keyed ordered window over the day
+    spine — series-parallel, constant state per step."""
+    from pyspark.sql import Window
+
+    daily = _daily_series(spark, sf_dir)
+    tw = (
+        Window.partitionBy("event_type")
+        .orderBy("t")
+        .rowsBetween(-(_SLOPE_W - 1), 0)
+    )
+    w = daily.select(
+        "event_type",
+        "t",
+        "y",
+        F.count("*").over(tw).cast("bigint").alias("n"),
+        F.sum("t").over(tw).cast("bigint").alias("sx"),
+        F.sum("y").over(tw).cast("bigint").alias("sy"),
+        F.sum(F.col("t") * F.col("y")).over(tw).cast("bigint").alias("sxy"),
+        F.sum(F.col("t") * F.col("t")).over(tw).cast("bigint").alias("sxx"),
+    )
+    return w.filter(F.col("n") == _SLOPE_W).select(
+        "event_type",
+        "t",
+        "y",
+        F.round(
+            (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
+            / (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")),
+            6,
+        ).alias("slope"),
+    )
+
+
+# --------------------------------------------------------------------------
+# op253: damped-trend Holt — op231 + phi=1/2 damping, integer-exact
+# --------------------------------------------------------------------------
+
+_HD_H = 5  # forecast horizon
+
+
+def _op253_sql() -> str:
+    f2 = lambda x: _hw_f2(x, "//")  # noqa: E731
+    # damped level: l' = f2(y + l + phi*b) with phi*b = f2(b)
+    pb = f2("h.b")
+    l2 = f2(f"d.y + h.l + {pb}")
+    # damped trend: b' = f2((l' - l) + phi*b)
+    b2 = f2(f"({l2}) - h.l + {pb}")
+    # forecast: fc_h = l + sum_{i=1..h} phi^i b  (repeated halving)
+    p = ["h.b"]
+    for _ in range(_HD_H):
+        p.append(f2(p[-1]))
+    fcs = ", ".join(
+        "h.l + " + " + ".join(p[1:i + 1]) + f" AS fc_{i}"
+        for i in range(1, _HD_H + 1)
+    )
+    return f"""{_DAILY_SQL}
+init AS (
+  SELECT d0.event_type, d0.y AS y0, d1.y AS y1
+  FROM daily d0 JOIN daily d1
+    ON d0.event_type = d1.event_type AND d0.t = 0 AND d1.t = 1),
+hw AS (
+  SELECT event_type, CAST(0 AS BIGINT) AS t,
+         y0 AS l, y1 - y0 AS b
+  FROM init
+  UNION ALL
+  SELECT h.event_type, h.t + 1,
+         {l2} AS l,
+         {b2} AS b
+  FROM hw h
+  JOIN daily d ON d.event_type = h.event_type AND d.t = h.t + 1
+  CROSS JOIN maxt m
+  WHERE h.t + 1 <= m.m
+)
+SELECT h.event_type, h.l AS level, h.b AS trend, {fcs}
+FROM hw h CROSS JOIN maxt m WHERE h.t = m.m
+"""
+
+
+def _holt_damped(et: str, ys: list[int], ts: list[int]) -> tuple:
+    l, bt = ys[0], ys[1] - ys[0]
+    for y in ys[1:]:
+        pb = _f2(bt)
+        l_new = _f2(y + l + pb)
+        bt = _f2(l_new - l + pb)
+        l = l_new
+    fcs, acc, p = [], l, bt
+    for _ in range(_HD_H):
+        p = _f2(p)
+        acc += p
+        fcs.append(acc)
+    return (et, l, bt, *fcs)
+
+
+@register(
+    "op253_holt_damped",
+    oracle=_op253_sql(),
+    deps=(_daily_series, _series_stage, _forecast_ddl, _f2, _holt_damped),
+)
+def op253_holt_damped(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DAMPED-TREND Holt forecasting of daily event volumes per
+    event_type, α=β=1/2, φ=1/2 — the member that completes op231 and
+    op235: damping multiplies the carried trend by φ in both the level
+    update and the forecast path, which with φ=1/2 is ONE MORE integer
+    halving (f2) per term, so the recurrence and the h=1..5 forecasts
+    stay bit-identical between the grouped Arrow stage and DuckDB's
+    WITH RECURSIVE:
+
+        l_t = f2(y_t + l + f2(b))          (α-average of y and l+φb)
+        b_t = f2((l_t − l) + f2(b))        (β-average, damped carry)
+        fc_h = l + Σ_{i=1..h} p_i, p_1 = f2(b), p_{i+1} = f2(p_i)
+
+    The damped forecast flattens toward l + b (φ/(1−φ) = 1) instead
+    of op231's unbounded linear ramp — the production default for
+    horizons past a few periods (damped trend generally beats linear
+    on long horizons; the flattening IS the feature).
+
+    Scale: identical to op231 — one shuffle on the series key, a
+    ~30-step ordered loop per series inside one task; keys
+    parallelize freely (10^6 series = 10^6 independent tasks)."""
+    return _series_stage(
+        _daily_series(spark, sf_dir), "event_type", _holt_damped,
+        _forecast_ddl(_HD_H),
+    )
+
+
+# --------------------------------------------------------------------------
+# op254: multiplicative Holt-Winters — scaled-integer seasonal RATIOS
+# --------------------------------------------------------------------------
+
+_HWM_M = 7           # weekly seasonality
+_HWM_H = 7           # forecast a full season
+_HWM_S = 1 << 20     # fixed-point scale for seasonal ratios (s ≈ ratio·S)
+
+
+def _op254_sql() -> str:
+    f2 = lambda x: _hw_f2(x, "//")  # noqa: E731
+    S = _HWM_S
+    slot = (
+        "CASE CAST((h.t + 1) % 7 AS INTEGER) "
+        + " ".join(f"WHEN {i} THEN h.s{i}" for i in range(_HWM_M))
+        + " END"
+    )
+    # deseasonalize with the PRE-update slot value (guarded >= 1):
+    # x = y·S // s_prev — operands non-negative, // floors identically
+    # in DuckDB and python
+    x = f"((d.y * {S}) // GREATEST({slot}, 1))"
+    l2 = f2(f"{x} + h.l + h.b")
+    s_updates = ", ".join(
+        f"CASE WHEN (h.t + 1) % 7 = {i} "
+        f"THEN {f2(f'(d.y * {S}) // GREATEST({l2}, 1) + h.s{i}')} "
+        f"ELSE h.s{i} END AS s{i}"
+        for i in range(_HWM_M)
+    )
+    y_cols = ", ".join(
+        f"MAX(CASE WHEN t = {i} THEN y END) AS y{i}" for i in range(_HWM_M)
+    )
+    s_inits = ", ".join(
+        f"(y{i} * {S}) // GREATEST(l_init, 1) AS s{i}" for i in range(_HWM_M)
+    )
+    # forecast numerator (l + h·b)·s can be NEGATIVE, and DuckDB's //
+    # truncates toward zero there while python floors (-3//2: -1 vs
+    # -2) — the same dialect trap _hw_f2's offset already handles for
+    # the halvings. Same cure: shift by OFF·S so the numerator is
+    # positive (floor == truncate), divide, shift back. |x| ≲ 10¹³ and
+    # OFF·S = 2⁶⁰ keeps the sum far inside int64.
+    OFF = 1 << 40
+    fc = ", ".join(
+        f"(((h.l + {h} * h.b) * (CASE CAST((h.t + {h}) % 7 AS INTEGER) "
+        + " ".join(f"WHEN {i} THEN h.s{i}" for i in range(_HWM_M))
+        + f" END) + {OFF * S}) // {S}) - {OFF} AS fc_{h}"
+        for h in range(1, _HWM_H + 1)
+    )
+    return f"""{_DAILY_SQL}
+week1 AS (
+  SELECT event_type, {y_cols},
+         CAST((SUM(CASE WHEN t < 7 THEN y ELSE 0 END)) // 7 AS BIGINT)
+           AS l_init
+  FROM daily WHERE t < 7 GROUP BY event_type),
+hw AS (
+  SELECT event_type, CAST(6 AS BIGINT) AS t, l_init AS l,
+         CAST(0 AS BIGINT) AS b, {s_inits}
+  FROM week1
+  UNION ALL
+  SELECT h.event_type, h.t + 1,
+         {l2} AS l,
+         {f2(f"h.b + ({l2}) - h.l")} AS b,
+         {s_updates}
+  FROM hw h
+  JOIN daily d ON d.event_type = h.event_type AND d.t = h.t + 1
+  CROSS JOIN maxt m
+  WHERE h.t + 1 <= m.m
+)
+SELECT h.event_type, h.l AS level, h.b AS trend, {fc}
+FROM hw h CROSS JOIN maxt m WHERE h.t = m.m
+"""
+
+
+def _hw_multiplicative(et: str, ys: list[int], ts: list[int]) -> tuple:
+    S = _HWM_S
+    l, bt, s = _seasonal_init(
+        ys, _HWM_M, True, "op254", "multiplicative Holt-Winters"
+    )
+    for t in range(_HWM_M, len(ys)):
+        y = ys[t]
+        slot = t % _HWM_M
+        sp = s[slot]
+        x = (y * S) // max(sp, 1)
+        l_new = _f2(x + l + bt)
+        bt = _f2(bt + l_new - l)
+        s[slot] = _f2((y * S) // max(l_new, 1) + sp)
+        l = l_new
+    t_last = len(ys) - 1
+    return (
+        et, l, bt,
+        *(((l + h * bt) * s[(t_last + h) % _HWM_M]) // S
+          for h in range(1, _HWM_H + 1)),
+    )
+
+
+@register(
+    "op254_holt_winters_multiplicative",
+    oracle=_op254_sql(),
+    deps=(_daily_series, _series_stage, _forecast_ddl, _f2, _seasonal_init,
+          _hw_multiplicative),
+)
+def op254_holt_winters_multiplicative(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """MULTIPLICATIVE Holt-Winters (weekly m=7, α=β=γ=1/2) — the
+    forecasting family's seasonality-as-RATIOS variant, the right
+    model when the weekly pattern scales with the level (weekend dips
+    are -30%, not -300 events). The integer-exact discipline survives
+    the ratios by FIXED-POINT scaling: seasonal state s ≈ ratio·2^20,
+    and every division in the recurrence has a non-negative numerator
+    and a GREATEST(·,1)-guarded positive divisor, so `//` floors
+    identically in DuckDB's WITH RECURSIVE and the Python kernel of the
+    grouped Arrow stage:
+
+        x   = y·S // s_prev          (deseasonalize, pre-update slot)
+        l_t = f2(x + l + b)          b_t = f2(b + l_t − l)
+        s'  = f2(y·S // max(l_t,1) + s_prev)       (γ-average, scaled)
+        fc_h = ((l + h·b) · s[(T+h) mod 7]) // S
+
+    Init: l = week-1 integer mean, b = 0, s_i = y_i·S // max(l,1); a
+    span under 7 days raises a ValueError naming the minimum span.
+    Bounds: with day counts ≤ ~10⁶ the largest intermediate is
+    (l + h·b)·s ≲ 10⁶·2²⁰·ratio ≈ 10¹³ — five orders inside int64.
+
+    Same scale shape as op235: state is 9 ints/series, one keyed
+    shuffle, ~30-step loop per series inside one task."""
+    return _series_stage(
+        _daily_series(spark, sf_dir), "event_type", _hw_multiplicative,
+        _forecast_ddl(_HWM_H),
+    )
+
+
+# --------------------------------------------------------------------------
+# op257: DAMPED multiplicative Holt-Winters — op253's φ-damping composed
+# with op254's fixed-point seasonal ratios
+# --------------------------------------------------------------------------
+
+
+def _op257_sql() -> str:
+    f2 = lambda x: _hw_f2(x, "//")  # noqa: E731
+    S = _HWM_S
+    slot = (
+        "CASE CAST((h.t + 1) % 7 AS INTEGER) "
+        + " ".join(f"WHEN {i} THEN h.s{i}" for i in range(_HWM_M))
+        + " END"
+    )
+    # deseasonalize with the PRE-update slot value (op254's guard rule)
+    x = f"((d.y * {S}) // GREATEST({slot}, 1))"
+    # damping: the carried trend enters level and trend as φb = f2(b)
+    pb = f2("h.b")
+    l2 = f2(f"{x} + h.l + {pb}")
+    b2 = f2(f"{pb} + ({l2}) - h.l")
+    s_updates = ", ".join(
+        f"CASE WHEN (h.t + 1) % 7 = {i} "
+        f"THEN {f2(f'(d.y * {S}) // GREATEST({l2}, 1) + h.s{i}')} "
+        f"ELSE h.s{i} END AS s{i}"
+        for i in range(_HWM_M)
+    )
+    y_cols = ", ".join(
+        f"MAX(CASE WHEN t = {i} THEN y END) AS y{i}" for i in range(_HWM_M)
+    )
+    s_inits = ", ".join(
+        f"(y{i} * {S}) // GREATEST(l_init, 1) AS s{i}" for i in range(_HWM_M)
+    )
+    # forecast: damped partial sums p_1 = f2(b), p_{i+1} = f2(p_i);
+    # the seasonal product's numerator can be negative, so the op254
+    # OFF-shift makes DuckDB's truncating // agree with python's floor
+    p = ["h.b"]
+    for _ in range(_HWM_H):
+        p.append(f2(p[-1]))
+    OFF = 1 << 40
+    fc = ", ".join(
+        f"(((h.l + {' + '.join(p[1:h + 1])}) * "
+        f"(CASE CAST((h.t + {h}) % 7 AS INTEGER) "
+        + " ".join(f"WHEN {i} THEN h.s{i}" for i in range(_HWM_M))
+        + f" END) + {OFF * S}) // {S}) - {OFF} AS fc_{h}"
+        for h in range(1, _HWM_H + 1)
+    )
+    return f"""{_DAILY_SQL}
+week1 AS (
+  -- degenerate-span guard (round-8 ADVICE): a corpus spanning < 7
+  -- days must fail LOUDLY on both engines, not NULL-propagate the
+  -- missing y_i seasonals here while the Python side IndexErrors
+  SELECT event_type, {y_cols},
+         CASE WHEN COUNT(*) < 7 THEN CAST(error(
+             'op257: events span < 7 days — damped multiplicative '
+             'Holt-Winters needs one full seasonal period (m=7)')
+           AS BIGINT)
+         ELSE CAST((SUM(CASE WHEN t < 7 THEN y ELSE 0 END)) // 7
+           AS BIGINT) END AS l_init
+  FROM daily WHERE t < 7 GROUP BY event_type),
+hw AS (
+  SELECT event_type, CAST(6 AS BIGINT) AS t, l_init AS l,
+         CAST(0 AS BIGINT) AS b, {s_inits}
+  FROM week1
+  UNION ALL
+  SELECT h.event_type, h.t + 1,
+         {l2} AS l,
+         {b2} AS b,
+         {s_updates}
+  FROM hw h
+  JOIN daily d ON d.event_type = h.event_type AND d.t = h.t + 1
+  CROSS JOIN maxt m
+  WHERE h.t + 1 <= m.m
+)
+SELECT h.event_type, h.l AS level, h.b AS trend, {fc}
+FROM hw h CROSS JOIN maxt m WHERE h.t = m.m
+"""
+
+
+def _hw_damped_multiplicative(et: str, ys: list[int], ts: list[int]) -> tuple:
+    S = _HWM_S
+    # the same loud short-span failure as the oracle's week1 error()
+    l, bt, s = _seasonal_init(
+        ys, _HWM_M, True, "op257", "damped multiplicative Holt-Winters"
+    )
+    for t in range(_HWM_M, len(ys)):
+        y = ys[t]
+        slot = t % _HWM_M
+        sp = s[slot]
+        x = (y * S) // max(sp, 1)
+        pb = _f2(bt)
+        l_new = _f2(x + l + pb)
+        bt = _f2(pb + l_new - l)
+        s[slot] = _f2((y * S) // max(l_new, 1) + sp)
+        l = l_new
+    t_last = len(ys) - 1
+    fcs, acc, p = [], l, bt
+    for h in range(1, _HWM_H + 1):
+        p = _f2(p)
+        acc += p
+        fcs.append((acc * s[(t_last + h) % _HWM_M]) // S)
+    return (et, l, bt, *fcs)
+
+
+@register(
+    "op257_holt_winters_damped_multiplicative",
+    oracle=_op257_sql(),
+    deps=(_daily_series, _series_stage, _forecast_ddl, _f2, _seasonal_init,
+          _hw_damped_multiplicative),
+)
+def op257_holt_winters_damped_multiplicative(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """DAMPED MULTIPLICATIVE Holt-Winters (m=7, α=β=γ=φ=1/2) — the
+    composition of the two: op253's φ-damping (one extra integer
+    halving wherever the carried trend is used) grafted onto op254's
+    fixed-point seasonal ratios. This is the forecasting family's
+    production workhorse — Hyndman & Athanasopoulos (fpp3 §8.3) note
+    damped multiplicative HW is often the single best default for
+    seasonal business series, because the trend flattens toward
+    l + b·φ/(1−φ) instead of ramping forever while the seasonal
+    profile still scales with the level:
+
+        x    = y·S // max(s_prev, 1)       (deseasonalize, pre-update)
+        l_t  = f2(x + l + f2(b))           (damped trend in the level)
+        b_t  = f2(f2(b) + l_t − l)         (damped carry)
+        s'   = f2(y·S // max(l_t, 1) + s_prev)
+        fc_h = ((l + Σ_{i≤h} φⁱb) · s[(T+h) mod 7]) // S
+               (φⁱb by repeated halving; OFF-shifted in SQL so
+                truncation == floor on negative numerators)
+
+    Init and bounds are op254's: l = week-1 integer mean, b = 0,
+    s_i = y_i·S // max(l,1); largest intermediate ≲ 10¹³ ≪ 2⁶³. Every
+    division keeps op254's non-negative-numerator / guarded-divisor
+    discipline, and the damping halvings use _hw_f2's offset, so the
+    Python kernel and DuckDB's WITH RECURSIVE stay bit-identical. A
+    span under 7 days fails loudly on both engines: a ValueError in
+    the kernel, an error() in the oracle's week1 CTE.
+
+    Scale shape: unchanged from op253/op254 — state is 9 ints per
+    series, one keyed shuffle of the zero-filled daily spine, a
+    ~30-step ordered loop per series inside its task; a 10⁶-series
+    hypertable is 10⁶ independent tasks."""
+    return _series_stage(
+        _daily_series(spark, sf_dir), "event_type", _hw_damped_multiplicative,
+        _forecast_ddl(_HWM_H),
+    )
+
+
+# --------------------------------------------------------------------------
+# op259: Croston / SBA intermittent-demand forecasting
+# --------------------------------------------------------------------------
+
+_CR_K = 32  # demand series = o_custkey % 32; with the 13-month window
+# below, ≈18% of (series, day) cells have demand: genuinely intermittent
+_CR_FROM = "2000-07-01 00:00:00"  # bound the recursion to ~400 daily steps
+# (the full 6.5-year span costs the DuckDB side a 2400-step recursive
+# join — 21 s of sweep budget for no extra certification power)
+
+# Croston 1972 / Syntetos-Boylan 2005 (SBA), α = 1/2, integer-exact.
+# State per series: z (smoothed demand size), p (smoothed inter-demand
+# interval), q (periods since last demand), nd (demands seen). Updates
+# happen ONLY at nonzero-demand periods:
+#     z' = (y + z) // 2          (α-average, nonneg → // is exact f2)
+#     p' = (q + 1 + p) // 2      (interval = gap since last demand)
+# Init at the FIRST demand: z = y, p = t + 1 (1-based interval from
+# series start). Point forecasts, quantized ×1000 (all operands nonneg
+# so // floors identically in python and DuckDB):
+#     fc_croston_q = z·1000 // p
+#     fc_sba_q     = z·3000 // (4p)      (SBA bias factor 1 − α/2 = 3/4)
+_OP259_SQL = f"""
+WITH RECURSIVE o AS (
+  SELECT * FROM orders
+  WHERE o_orderdate >= TIMESTAMP '{_CR_FROM}'),
+bounds AS (
+  SELECT MIN(CAST(o_orderdate AS DATE)) AS d0,
+         MAX(CAST(o_orderdate AS DATE)) AS d1 FROM o),
+maxt AS (SELECT CAST(d1 - d0 AS BIGINT) AS m FROM bounds),
+counts AS (
+  SELECT o_custkey % {_CR_K} AS k,
+         CAST(CAST(o_orderdate AS DATE) - b.d0 AS BIGINT) AS t,
+         CAST(COUNT(*) AS BIGINT) AS y
+  FROM o CROSS JOIN bounds b
+  GROUP BY 1, 2),
+spine AS (
+  SELECT CAST(s.i AS BIGINT) AS k, CAST(t.i AS BIGINT) AS t
+  FROM UNNEST(range(0, {_CR_K})) s(i), maxt m,
+       UNNEST(range(0, m.m + 1)) t(i)),
+daily AS (
+  SELECT s.k, s.t, COALESCE(c.y, CAST(0 AS BIGINT)) AS y
+  FROM spine s LEFT JOIN counts c ON s.k = c.k AND s.t = c.t),
+cr AS (
+  SELECT k, CAST(0 AS BIGINT) AS t,
+         CASE WHEN y > 0 THEN y ELSE CAST(0 AS BIGINT) END AS z,
+         CASE WHEN y > 0 THEN CAST(1 AS BIGINT)
+              ELSE CAST(0 AS BIGINT) END AS p,
+         CAST(0 AS BIGINT) AS q,
+         CASE WHEN y > 0 THEN CAST(1 AS BIGINT)
+              ELSE CAST(0 AS BIGINT) END AS nd
+  FROM daily WHERE t = 0
+  UNION ALL
+  SELECT h.k, h.t + 1,
+         CASE WHEN h.nd = 0 THEN
+                CASE WHEN d.y > 0 THEN d.y ELSE CAST(0 AS BIGINT) END
+              WHEN d.y > 0 THEN (d.y + h.z) // 2
+              ELSE h.z END AS z,
+         CASE WHEN h.nd = 0 THEN
+                CASE WHEN d.y > 0 THEN h.t + 2 ELSE CAST(0 AS BIGINT) END
+              WHEN d.y > 0 THEN (h.q + 1 + h.p) // 2
+              ELSE h.p END AS p,
+         CASE WHEN d.y > 0 OR h.nd = 0 THEN CAST(0 AS BIGINT)
+              ELSE h.q + 1 END AS q,
+         h.nd + CASE WHEN d.y > 0 THEN CAST(1 AS BIGINT)
+                     ELSE CAST(0 AS BIGINT) END AS nd
+  FROM cr h
+  JOIN daily d ON d.k = h.k AND d.t = h.t + 1
+  CROSS JOIN maxt m
+  WHERE h.t + 1 <= m.m
+)
+SELECT h.k AS series_k,
+       h.nd AS n_demands,
+       h.z AS z_size,
+       h.p AS p_interval,
+       h.z * 1000 // h.p AS fc_croston_q,
+       h.z * 3000 // (h.p * 4) AS fc_sba_q
+FROM cr h CROSS JOIN maxt m
+WHERE h.t = m.m AND h.nd > 0
+"""
+
+
+def _croston(k: int, ys: list[int], ts: list[int]) -> tuple | None:
+    z = p = q = nd = 0
+    for y, t in zip(ys, ts):
+        if nd == 0:
+            if y > 0:
+                z, p, q, nd = y, t + 1, 0, 1
+        elif y > 0:
+            z = (y + z) // 2
+            p = (q + 1 + p) // 2
+            q = 0
+            nd += 1
+        else:
+            q += 1
+    if nd == 0:  # series with no demand at all: no forecast row
+        return None
+    return (k, nd, z, p, z * 1000 // p, z * 3000 // (4 * p))
+
+
+@register(
+    "op259_croston_sba", oracle=_OP259_SQL, deps=(_series_stage, _croston)
+)
+def op259_croston_sba(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CROSTON / SBA intermittent-demand forecasting — the forecasting
+    family's sparse-series member: op231/op253/op254/op257 smooth EVERY
+    period, which is known-biased when most periods have zero demand
+    (spare parts, long-tail SKUs, rare event types). Croston's method
+    decomposes the series into demand SIZE and inter-demand INTERVAL,
+    each SES-smoothed only at demand points; the point forecast is
+    their ratio, and SBA (Syntetos-Boylan 2005) multiplies by 1 − α/2
+    to correct Croston's convexity bias — the standard pairing in
+    intermittent-demand practice (M5-competition baseline set).
+
+    Demand series: daily order counts per o_custkey % 32 (≈18%
+    nonzero days at sf0.01 — genuinely intermittent). α = 1/2 keeps
+    every update one integer halving on nonneg operands, so the
+    state loop and both quantized forecasts are bit-identical
+    between the grouped Arrow stage's kernel and DuckDB's WITH
+    RECURSIVE (op253's certification pattern; no _HW_OFF shift
+    needed — every operand here is provably nonnegative, noted per
+    value in _OP259_SQL).
+
+    Scale: one shuffle on the series key; a ~400-step ordered loop
+    per series inside one task; series parallelize freely (10^6 SKUs
+    = 10^6 independent tasks). The daily spine is built per-series
+    by sequence() explode — no driver loop, no cross-series state."""
+    ords = load_table(spark, sf_dir, "orders").where(
+        F.col("o_orderdate") >= F.lit(_CR_FROM).cast("timestamp")
+    )
+    b = ords.agg(
+        F.min(F.col("o_orderdate").cast("date")).alias("d0"),
+        F.max(F.col("o_orderdate").cast("date")).alias("d1"),
+    )
+    counts = (
+        ords.crossJoin(F.broadcast(b))
+        .groupBy(
+            (F.col("o_custkey") % _CR_K).cast("bigint").alias("k"),
+            F.datediff(F.col("o_orderdate").cast("date"), F.col("d0"))
+            .cast("bigint")
+            .alias("t"),
+        )
+        .agg(F.count("*").cast("bigint").alias("y"))
+    )
+    spine = (
+        spark.range(_CR_K)
+        .select(F.col("id").cast("bigint").alias("k"))
+        .crossJoin(F.broadcast(b))
+        .select(
+            "k",
+            F.explode(
+                F.expr(
+                    "sequence(cast(0 as bigint),"
+                    " cast(datediff(d1, d0) as bigint))"
+                )
+            ).alias("t"),
+        )
+    )
+    daily = spine.join(counts, ["k", "t"], "left").select(
+        "k", "t", F.coalesce(F.col("y"), F.lit(0)).cast("bigint").alias("y")
+    )
+    return _series_stage(
+        daily,
+        "k",
+        _croston,
+        "series_k long, n_demands long, z_size long, p_interval long, "
+        "fc_croston_q long, fc_sba_q long",
+    )
+
+
+# ---------------------------------------------------------------------------
+# op262: ADI / CV² demand-pattern classification (Syntetos-Boylan)
+# ---------------------------------------------------------------------------
+
+_ADI_K = 128  # series key cardinality: o_custkey % 128 gives 3 of the
+# 4 classes at sf0.01 (smooth 71 / intermittent 56 / erratic 1) — the
+# only cardinality among {32,64,128,256} whose monthly series straddle
+# BOTH thresholds in this data (measured; 32/64 are all-smooth, 256
+# all-intermittent).
+
+_OP262_SQL = f"""
+WITH m AS (
+  SELECT o_custkey % {_ADI_K} AS k,
+         (EXTRACT(year FROM o_orderdate) * 12
+          + EXTRACT(month FROM o_orderdate)) AS mo,
+         CAST(COUNT(*) AS BIGINT) AS y
+  FROM orders GROUP BY 1, 2),
+bounds AS (SELECT CAST(MAX(mo) - MIN(mo) + 1 AS BIGINT) AS n_periods FROM m),
+s AS (
+  SELECT CAST(k AS BIGINT) AS series_k,
+         CAST(COUNT(*) AS BIGINT) AS n_demand_periods,
+         CAST(SUM(y) AS BIGINT) AS sx,
+         CAST(SUM(y * y) AS BIGINT) AS sx2
+  FROM m GROUP BY k)
+SELECT series_k,
+       b.n_periods,
+       n_demand_periods,
+       ROUND(CAST(b.n_periods AS DOUBLE) / n_demand_periods, 6) AS adi,
+       ROUND(CAST(n_demand_periods * sx2 - sx * sx AS DOUBLE)
+             / (sx * sx), 6) AS cv2,
+       CASE WHEN 100 * b.n_periods < 132 * n_demand_periods THEN
+              CASE WHEN 100 * (n_demand_periods * sx2 - sx * sx)
+                        < 49 * sx * sx
+                   THEN 'smooth' ELSE 'erratic' END
+            ELSE
+              CASE WHEN 100 * (n_demand_periods * sx2 - sx * sx)
+                        < 49 * sx * sx
+                   THEN 'intermittent' ELSE 'lumpy' END
+       END AS demand_class,
+       CASE WHEN 100 * b.n_periods < 132 * n_demand_periods THEN
+              CASE WHEN 100 * (n_demand_periods * sx2 - sx * sx)
+                        < 49 * sx * sx
+                   THEN 'op231_holt_forecast' ELSE 'op253_holt_damped' END
+            ELSE 'op259_croston_sba'
+       END AS route
+FROM s CROSS JOIN bounds b
+"""
+
+
+@register("op262_demand_classification", oracle=_OP262_SQL)
+def op262_demand_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Syntetos-Boylan demand-pattern categorization — the dispatcher
+    that completes the forecasting family (round-9 §7.9 / verdict item
+    5): given each series' ADI (average inter-demand interval =
+    periods / demand-periods) and CV² (squared coefficient of
+    variation of nonzero demand sizes), route it to the right
+    forecaster:
+
+        ADI < 1.32, CV² < 0.49  → smooth       → op231 (SES/Holt)
+        ADI < 1.32, CV² ≥ 0.49  → erratic      → op253 (damped Holt)
+        ADI ≥ 1.32, any CV²     → intermittent / lumpy → op259
+                                  (Croston/SBA — SBA is the standard
+                                  recommendation for BOTH sparse
+                                  classes; Syntetos-Boylan 2005)
+
+    op254/op257's seasonal variants need a seasonality test (e.g.
+    autocorrelation at the season lag), which is outside ADI/CV²'s
+    scope — the docstring of record for why they are not routes here.
+
+    Series: monthly order counts per o_custkey % 128 — the same
+    demand construction op259 forecasts daily, at the grain and
+    cardinality where this data straddles both thresholds (see
+    _ADI_K). INTEGER-EXACT THRESHOLDS (the round-9 verdict's
+    requirement): ADI ≥ 1.32 is evaluated as 100·n_periods <
+    132·n_demand_periods and CV² ≥ 0.49 as 100·(nd·Σy² − (Σy)²) <
+    49·(Σy)² — all operands exact BIGINTs on both engines, so the
+    class boundary can never flip on a float ulp; the reported
+    adi/cv2 doubles are display values derived from the same exact
+    integers (CV² = nd·Σy²/(Σy)² − 1, the population-variance
+    identity). Pure two-level aggregation, no recursion, no UDF.
+
+    Scale: groupBy(series, month) with map-side partial counts, then
+    groupBy(series) over ≤ one row per (series, month) — at 10^6 SKUs
+    × 10 years that second stage is 1.2×10^8 tiny rows, trivially
+    shuffled; the global period count is a 1-row broadcast. The
+    classifier output (one row per series) is exactly the work list a
+    production pipeline feeds to op231/op253/op259 batch runs."""
+    o = load_table(spark, sf_dir, "orders")
+    m = (
+        o.groupBy(
+            (F.col("o_custkey") % _ADI_K).cast("bigint").alias("series_k"),
+            (F.year("o_orderdate") * 12 + F.month("o_orderdate")).alias("mo"),
+        )
+        .agg(F.count("*").cast("bigint").alias("y"))
+    )
+    bounds = m.agg(
+        (F.max("mo") - F.min("mo") + F.lit(1))
+        .cast("bigint")
+        .alias("n_periods")
+    )
+    s = m.groupBy("series_k").agg(
+        F.count("*").cast("bigint").alias("n_demand_periods"),
+        F.sum("y").cast("bigint").alias("sx"),
+        F.sum(F.col("y") * F.col("y")).cast("bigint").alias("sx2"),
+    )
+    nd, sx, sx2 = F.col("n_demand_periods"), F.col("sx"), F.col("sx2")
+    npd = F.col("n_periods")
+    sparse = 100 * npd >= 132 * nd  # ADI ≥ 1.32, integer-exact
+    high_cv = 100 * (nd * sx2 - sx * sx) >= 49 * sx * sx  # CV² ≥ 0.49
+    return s.crossJoin(F.broadcast(bounds)).select(
+        "series_k",
+        "n_periods",
+        "n_demand_periods",
+        F.round(npd.cast("double") / nd, 6).alias("adi"),
+        F.round((nd * sx2 - sx * sx).cast("double") / (sx * sx), 6).alias(
+            "cv2"
+        ),
+        F.when(
+            sparse, F.when(high_cv, F.lit("lumpy")).otherwise("intermittent")
+        )
+        .otherwise(F.when(high_cv, F.lit("erratic")).otherwise("smooth"))
+        .alias("demand_class"),
+        F.when(sparse, F.lit("op259_croston_sba"))
+        .otherwise(
+            F.when(high_cv, F.lit("op253_holt_damped")).otherwise(
+                "op231_holt_forecast"
+            )
+        )
+        .alias("route"),
+    )

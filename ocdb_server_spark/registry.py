@@ -157,6 +157,7 @@ def load_all() -> dict[str, Op]:
         similarity,
         graph,
         stats,
+        forecast,
         lakehouse,
     )
 

@@ -10,7 +10,8 @@ parquet scans are visible) and summarize the executed plan:
 - bcast        : # BroadcastExchanges (small sides shipped, not shuffled)
 - wscg         : # WholeStageCodegen spans (JVM-compiled pipelines)
 - win          : # Window operators
-- pyudf        : # Python-eval nodes (Batch/ArrowEvalPython, FlatMapsInPandas)
+- pyudf        : # Python-eval nodes (Batch/ArrowEvalPython, MapIn* and
+                 FlatMapGroupsIn* stages, pandas or Arrow)
 - pushed       : does at least one scan carry PushedFilters beyond []
 - flags        : scale-hostile shapes — CartesianProduct, a global Sort
                  that is not a TakeOrderedAndProject, >4 shuffles,
@@ -49,6 +50,16 @@ _SKETCH_FN = re.compile(
 # RewriteDistinctAggregates tags the rows it expands with a `gid`
 # column; ROLLUP/CUBE expands carry `spark_grouping_id` instead
 _DISTINCT_EXPAND = re.compile(r"\bExpand \[.*\bgid#\d+")
+# Python-eval nodes: row-at-a-time and Arrow UDFs, map and grouped-map stages
+_PY_NODE = re.compile(
+    r"BatchEvalPython|ArrowEvalPython|MapInPandas|MapInArrow"
+    r"|FlatMapGroupsInPandas|FlatMapGroupsInArrow"
+)
+
+
+def py_nodes(plan: str) -> int:
+    """Number of Python-eval nodes in an executed plan's text."""
+    return len(_PY_NODE.findall(plan))
 
 
 def flags(plan: str) -> list[str]:
@@ -132,8 +143,8 @@ def main() -> None:
         "op216_bpe_train": "3 unrolled merge rounds, each a vocab-sized pair agg + 1-row argmax broadcast — corpus rows shuffle once into the word-frequency table; everything after is ~|vocab| rows",
         "op217_bpe_apply": "op216's 3 unrolled rounds + the vocab-cost broadcast join back to the corpus — same vocab-sized economics",
         "op220_triangle_count": "edge-iterator (r18): broadcast-adjacency array_intersect per edge over the persist()ed edge cache; cold plan repeats the projection textually under each cache reference, executed plan reads InMemoryRelation",
-        "op231_holt_forecast": "spine fill (distinct types × day range broadcast) + counts agg + one keyed applyInPandas; the recurrence runs inside the per-series task",
-        "op235_holt_winters_seasonal": "op231's spine/counts shape with the 9-int vector state inside the per-series task",
+        "op231_holt_forecast": "spine fill (distinct types × day range broadcast) + counts agg + one grouped Arrow stage keyed on event_type; the recurrence runs inside the per-series task",
+        "op235_holt_winters_seasonal": "op231's spine/counts shape and grouped Arrow stage, with the 9-int vector state inside the per-series task",
         "op237_theta_set_ops": "two per-slice distinct+bottom-k cuts feed k-row set math — every shuffle after the cuts carries <=2k signature rows plus the one exact-truth distinct agg the op emits alongside",
         "op241_chi2_independence": "contingency agg + row/col/total marginal aggs (tiny sides broadcast back) + the final <=25-row coalesced sum; cold plan recomputes the persisted contingency per marginal textually; the distinct rewrite is the final dof count over <=25 rows",
         "op245_dataset_card": "four independent 1-row aggregate branches (base stats, token explode, dedup md5, top-lang) each fold to a single row before their broadcast cross-joins; a production datasheet computes multi-branch aggs over one cached scan",
@@ -153,9 +164,7 @@ def main() -> None:
         bcast = plan.count("BroadcastExchange")
         wscg = len(set(re.findall(r"\*\((\d+)\)", plan)))
         win = len(re.findall(r"\bWindow\b", plan))
-        pyudf = len(
-            re.findall(r"BatchEvalPython|ArrowEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas", plan)
-        )
+        pyudf = py_nodes(plan)
         pushed = bool(re.search(r"PushedFilters: \[[^\]]", plan))
         found = flags(plan)
         note = expected.get(name)

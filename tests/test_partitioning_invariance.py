@@ -117,6 +117,11 @@ FULL_TABLE_OPS = [
     "op212_kmeans_lloyd",
     "op223_skyline",
     "op231_holt_forecast",
+    # the other daily-spine ops: the grouped stage sorts each series by
+    # day and the slope window orders by day, so neither may care how
+    # the events scan was split or how wide the shuffle runs
+    "op235_holt_winters_seasonal",
+    "op247_rolling_slope",
     # round-7: the damped recurrence and the OCF round-trip must be
     # independent of scan splits and shuffle width (op252 re-shards
     # its export by partition count — the aggregate must not care)

@@ -504,13 +504,13 @@ def test_hilbert_chunks_have_tight_boxes(spark, sf_dir):
 
 
 def test_holt_forecast_matches_python_recurrence(spark, sf_dir):
-    """op231: the applyInPandas recurrence must equal an independent
+    """op231: the grouped Arrow stage's recurrence must equal an independent
     python Holt over the zero-filled day spine, and forecasts must be
     the linear extrapolation l + h·b exactly."""
     from collections import Counter
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.stats import (
+    from ocdb_server_spark.operators.forecast import (
         _HW_H,
         _HW_OFF,
         op231_holt_forecast,
@@ -630,7 +630,7 @@ def test_holt_winters_seasonal_matches_python(spark, sf_dir):
     from collections import Counter
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.stats import (
+    from ocdb_server_spark.operators.forecast import (
         _HW_OFF,
         _HWS_H,
         _HWS_M,
@@ -973,7 +973,7 @@ def test_rolling_slope_matches_numpy_lstsq(spark, sf_dir):
     from collections import Counter
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.stats import _SLOPE_W, op247_rolling_slope
+    from ocdb_server_spark.operators.forecast import _SLOPE_W, op247_rolling_slope
 
     ev = load_table(spark, sf_dir, "events").selectExpr(
         "event_type", "cast(ts as date) as d"

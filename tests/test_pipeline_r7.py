@@ -130,13 +130,13 @@ def test_avro_roundtrip_matches_source_counts(spark, sf_dir):
 
 
 def test_holt_damped_matches_python_recurrence(spark, sf_dir):
-    """op253: the applyInPandas damped recurrence must equal an
+    """op253: the grouped Arrow stage's damped recurrence must equal an
     independent python implementation over the zero-filled spine, and
     the forecast path must be the repeated-halving partial sums."""
     from collections import Counter
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.stats import _HD_H, _HW_OFF, op253_holt_damped
+    from ocdb_server_spark.operators.forecast import _HD_H, _HW_OFF, op253_holt_damped
 
     ev = load_table(spark, sf_dir, "events").selectExpr(
         "event_type", "cast(ts as date) as d"
@@ -175,7 +175,7 @@ def test_holt_damped_flattens_vs_linear(spark, sf_dir):
     """The damping property itself: op253's forecast increments must
     shrink with the horizon (|fc_{h+1} - fc_h| <= |fc_h - fc_{h-1}|),
     whereas op231's are constant — the reason damped trend exists."""
-    from ocdb_server_spark.operators.stats import (
+    from ocdb_server_spark.operators.forecast import (
         _HD_H,
         op253_holt_damped,
     )
@@ -201,7 +201,7 @@ def test_holt_winters_multiplicative_matches_python(spark, sf_dir):
     from collections import Counter
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.stats import (
+    from ocdb_server_spark.operators.forecast import (
         _HWM_H,
         _HWM_M,
         _HWM_S,
@@ -258,7 +258,7 @@ def test_holt_winters_multiplicative_seasonality_is_ratio(spark, sf_dir):
     the same weekday one season apart differs only by the trend term
     (fc_{h+7} - fc_h uses the SAME seasonal slot: difference is
     exactly 7·b·s_slot // S up to flooring, bounded here)."""
-    from ocdb_server_spark.operators.stats import (
+    from ocdb_server_spark.operators.forecast import (
         _HWM_S,
         op254_holt_winters_multiplicative,
     )

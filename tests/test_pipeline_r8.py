@@ -123,20 +123,27 @@ def test_snapshot_isolation_and_compaction_equivalence(spark, sf_dir, root):
 # ------------------------------------------------------------------ op257
 
 
-def test_hw_damped_mult_short_span_fails_loudly(spark, tmp_path):
+@pytest.mark.parametrize(
+    "name",
+    [
+        "op235_holt_winters_seasonal",
+        "op254_holt_winters_multiplicative",
+        "op257_holt_winters_damped_multiplicative",
+    ],
+    ids=lambda name: name[:5],
+)
+def test_seasonal_hw_short_span_fails_loudly(name, spark, tmp_path):
     """A corpus spanning < 7 days must raise ONE loud error naming the
-    minimum-span requirement on BOTH engines (round-8 ADVICE): the
-    applyInPandas side a ValueError (not an executor IndexError), the
-    DuckDB oracle an error() from the week1 CTE (not NULL-propagated
-    seasonals)."""
+    minimum-span requirement: every seasonal kernel a ValueError from
+    the shared seasonal init (not an executor IndexError). op257's
+    DuckDB oracle raises too, an error() from the week1 CTE (not
+    NULL-propagated seasonals); op235's and op254's oracles have no
+    such guard and propagate NULLs."""
     import duckdb
-    import pytest
     from pyspark.errors import PythonException
 
-    from ocdb_server_spark.operators.stats import (
-        _op257_sql,
-        op257_holt_winters_damped_multiplicative,
-    )
+    from ocdb_server_spark.operators import forecast
+    from ocdb_server_spark.operators.forecast import _op257_sql
 
     sf = str(tmp_path)
     spark.createDataFrame(
@@ -151,9 +158,11 @@ def test_hw_damped_mult_short_span_fails_loudly(spark, tmp_path):
         "event_type", "value", "props",
     ).write.parquet(f"{sf}/events.parquet")
 
-    with pytest.raises(PythonException, match="span.*< 7 days"):
-        op257_holt_winters_damped_multiplicative(spark, sf).collect()
+    with pytest.raises(PythonException, match=rf"{name[:5]}: events span 3 < 7 days"):
+        getattr(forecast, name)(spark, sf).collect()
 
+    if name != "op257_holt_winters_damped_multiplicative":
+        return
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW events AS SELECT * FROM "
@@ -164,7 +173,7 @@ def test_hw_damped_mult_short_span_fails_loudly(spark, tmp_path):
 
 
 def test_hw_damped_mult_matches_python_recurrence(spark, sf_dir):
-    """op257: the applyInPandas damped multiplicative recurrence must
+    """op257: the grouped Arrow stage's damped multiplicative recurrence must
     equal an independent python implementation over the zero-filled
     spine — level, trend, seasonal state, and all seven damped
     forecasts (repeated-halving partial sums times the seasonal
@@ -172,7 +181,7 @@ def test_hw_damped_mult_matches_python_recurrence(spark, sf_dir):
     from collections import Counter
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.stats import (
+    from ocdb_server_spark.operators.forecast import (
         _HWM_H,
         _HWM_M,
         _HWM_S,
@@ -232,7 +241,7 @@ def test_hw_damped_mult_trend_is_damped_vs_op254(spark, sf_dir):
     The exactness gate is the recurrence-match test above; this test
     exists to flag testdata regenerations that change the damping
     story."""
-    from ocdb_server_spark.operators.stats import (
+    from ocdb_server_spark.operators.forecast import (
         _HWM_H,
         op254_holt_winters_multiplicative,
         op257_holt_winters_damped_multiplicative,
@@ -330,7 +339,7 @@ def test_op259_croston_hand_computed_and_sba_bound(spark, sf_dir):
       t=6 (gap q=1):    z=(1+2)//2=1, p=(1+1+2)//2=2
       nd=3, fc = 1000//2 = 500, sba = 3000//(4*2) = 375
     """
-    from ocdb_server_spark.operators.stats import op259_croston_sba
+    from ocdb_server_spark.operators.forecast import op259_croston_sba
 
     # pin the hand series with a local loop that restates the kernel's
     # statements in the same order (the kernel itself is certified

@@ -8,7 +8,7 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "scripts"))
 
-from plan_audit import flags  # noqa: E402
+from plan_audit import flags, py_nodes  # noqa: E402
 
 from ocdb_server_spark.registry import load_all  # noqa: E402
 
@@ -41,6 +41,20 @@ HashAggregate(keys=[a#1, b#2, spark_grouping_id#9L], functions=[count(1)], outpu
 +- Expand [[a#5, b#6, 0], [a#5, null, 1], [null, null, 3]], [a#1, b#2, spark_grouping_id#9L]
    +- InMemoryTableScan [a#5, b#6]
 """
+
+# a grouped Arrow stage over a keyed shuffle (applyInArrow)
+GROUPED_ARROW_STAGE = """\
+FlatMapGroupsInArrow [event_type#3], _holt(event_type#3, t#46L, y#57L)#58, [event_type#59, level#60L, trend#61L]
++- Sort [event_type#3 ASC NULLS FIRST], false, 0
+   +- Exchange hashpartitioning(event_type#3, 8), ENSURE_REQUIREMENTS, [plan_id=80]
+      +- MapInPandas f(t#1L)#4, [t#1L], false
+         +- InMemoryTableScan [event_type#3, t#1L]
+"""
+
+
+def test_python_nodes_include_grouped_arrow_stages():
+    assert py_nodes(GROUPED_ARROW_STAGE) == 2
+    assert py_nodes(KEYED_SKETCH) == 0
 
 
 def test_keyless_sketch_does_not_blame_the_next_aggregate():

@@ -14,11 +14,17 @@ scan is visible in the plan.
 
 from __future__ import annotations
 
+import os
 import re
+import sys
 
 import pytest
 
-from ocdb_server_spark.registry import load_all
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "scripts"))
+
+from plan_audit import py_nodes  # noqa: E402
+
+from ocdb_server_spark.registry import load_all  # noqa: E402
 
 OPS = load_all()
 
@@ -828,16 +834,36 @@ def test_table_log_snapshot_reads_are_broadcast_anti_no_base_shuffle(
     )
 
 
-def test_hw_damped_mult_single_keyed_shuffle_into_recurrence(spark, sf_dir):
-    """op257: the zero-filled daily spine must reach the applyInPandas
-    recurrence through ONE exchange keyed on the series key; the
-    bounds row is broadcast, never shuffled."""
-    plan = _plan(
-        OPS["op257_holt_winters_damped_multiplicative"].fn(spark, sf_dir)
-    )
-    assert "FlatMapGroupsInPandas" in plan or "FlatMapGroupsIn" in plan
-    assert len(re.findall(r"Exchange hashpartitioning\(event_type", plan)) >= 1
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
+_SERIES_OPS = [
+    ("op231_holt_forecast", "event_type"),
+    ("op235_holt_winters_seasonal", "event_type"),
+    ("op253_holt_damped", "event_type"),
+    ("op254_holt_winters_multiplicative", "event_type"),
+    ("op257_holt_winters_damped_multiplicative", "event_type"),
+    ("op259_croston_sba", "k"),
+]
+
+
+@pytest.mark.parametrize("name,key", _SERIES_OPS, ids=[n[:5] for n, _ in _SERIES_OPS])
+def test_series_ops_one_keyed_arrow_stage(name, key, spark, sf_dir):
+    """The forecasting recurrences run in one grouped Arrow stage
+    (forecast._series_stage): the plan's only Python node is a
+    FlatMapGroupsInArrow grouped on the series column alone, which adds
+    no exchange of its own between it and the spine join, and every
+    1-row day-bounds aggregate reaches the spine through a broadcast,
+    never through a shuffle."""
+    plan = _plan(OPS[name].fn(spark, sf_dir))
+    assert py_nodes(plan) == 1 and "FlatMapGroupsInArrow" in plan, plan[:800]
+    assert re.search(rf"FlatMapGroupsInArrow \[{key}#\d+L?\],", plan), plan[:800]
+    lines = plan.splitlines()
+    stage = next(i for i, line in enumerate(lines) if "FlatMapGroupsInArrow" in line)
+    join = next(i for i in range(stage, len(lines)) if "Join" in lines[i])
+    assert not any("Exchange" in line for line in lines[stage:join]), lines[stage:join]
+    bounds = [i for i, line in enumerate(lines)
+              if re.search(r"HashAggregate\(keys=\[\], functions=\[min\(", line)]
+    assert bounds, plan
+    for i in bounds:
+        assert "+- BroadcastExchange " in lines[i - 1], lines[i - 1]
 
 
 def test_rrf_legs_cut_to_depth_before_rank_window(spark, sf_dir):

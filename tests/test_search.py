@@ -169,20 +169,41 @@ def test_missing_binding_raises(part):
         find_datasets(part, DatasetQuery(region=(0, 0, 1, 1)), SearchColumns(order_key="p_partkey"))
 
 
+def _pushed_filters(df) -> set[str]:
+    """The pushed filters of the one parquet scan in df's executed plan,
+    read from the FileSourceScanExec node itself: the plan text cuts
+    the list short with `...`."""
+    stack, scans = [df._jdf.queryExecution().executedPlan()], []
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.inputPlan())
+            continue
+        if name == "FileSourceScanExec":
+            scans.append(node)
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    (scan,) = scans
+    filters = scan.pushedDownFilters()
+    return {filters.apply(i).toString() for i in range(filters.size())}
+
+
 def test_search_predicate_pushes_down(part):
     """The whole composed query must reach the scan as pushed filters —
-    the design point of compiling params into one Catalyst predicate."""
+    the design point of compiling params into one Catalyst predicate:
+    the text match and both bbox bounds on both columns."""
     q = DatasetQuery(expr="p_brand:*Brand*", region=(1, 0.0, 25, 2000.0))
     from ocdb_server_spark.search import _predicate
 
-    plan = (
-        part.filter(_predicate(q, PART_COLS))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    pushed = plan.split("PushedFilters:")[1][:400]
-    assert "p_size" in pushed and "p_retailprice" in pushed
+    pushed = _pushed_filters(part.filter(_predicate(q, PART_COLS)))
+    assert {
+        "StringContains(p_brand,Brand)",
+        "GreaterThanOrEqual(p_size,1)",
+        "LessThanOrEqual(p_size,25)",
+        "GreaterThanOrEqual(p_retailprice,0.0)",
+        "LessThanOrEqual(p_retailprice,2000.0)",
+    } <= pushed, pushed
 
 
 def test_pgroup_map_expansion(orders):
