@@ -17,6 +17,4 @@ Design principles (SURVEY.md §4, §7):
   correctness gate covers it.
 """
 
-from ocdb_server_spark.registry import REGISTRY, register  # noqa: F401
-
 __version__ = "0.1.0"

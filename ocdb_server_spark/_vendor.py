@@ -24,7 +24,10 @@ import importlib.util
 import os
 import sys
 
-VENDOR_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "vendor")
+# The directory that holds the package; workers need it on their path
+# whatever the driver's working directory (`session.get_spark`).
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+VENDOR_DIR = os.path.join(PACKAGE_ROOT, "vendor")
 
 
 def ensure_protobuf() -> bool:
@@ -39,17 +42,7 @@ def ensure_protobuf() -> bool:
         return False
     if VENDOR_DIR not in sys.path:
         sys.path.append(VENDOR_DIR)  # append: a real install always wins
-    pp = os.environ.get("PYTHONPATH", "")
-    if VENDOR_DIR not in pp.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (pp + os.pathsep + VENDOR_DIR) if pp else VENDOR_DIR
-    # A session built BEFORE this ran (the driver's bare session: it
-    # creates its SparkSession first, then imports __spark_entry__)
-    # has already captured its env — but Python workers and the TWS
-    # state server take their env from `sc.environment` at worker
-    # LAUNCH, which is mutable post-hoc. Verified end-to-end: setting
-    # it here makes transformWithStateInPandas work in a session that
-    # existed before the vendor path did.
-    _wire_active_context()
+    add_worker_path(VENDOR_DIR)
     # Invalidate caches so the just-added path is honored, then confirm.
     importlib.invalidate_caches()
     try:
@@ -58,8 +51,21 @@ def ensure_protobuf() -> bool:
         return False
 
 
-def _wire_active_context() -> None:
-    """Append the vendor dir to a LIVE SparkContext's worker env."""
+def add_worker_path(entry: str) -> None:
+    """Append `entry` to the Python workers' $PYTHONPATH.
+
+    `os.environ` reaches workers of a JVM launched after this call. A
+    session built BEFORE it (the driver's bare session: it creates its
+    SparkSession first, then imports __spark_entry__) has already
+    captured its env, but Python workers and the TWS state server take
+    their env from `sc.environment` at worker LAUNCH, which is mutable
+    post-hoc. Verified end-to-end: setting it makes
+    transformWithStateInPandas work in a session that existed before
+    the vendor path did."""
+    pp = os.environ.get("PYTHONPATH", "")
+    if entry in pp.split(os.pathsep):
+        return
+    os.environ["PYTHONPATH"] = (pp + os.pathsep + entry) if pp else entry
     try:
         from pyspark import SparkContext
 
@@ -69,7 +75,5 @@ def _wire_active_context() -> None:
     if sc is None:
         return
     pp = sc.environment.get("PYTHONPATH", "")
-    if VENDOR_DIR not in pp.split(os.pathsep):
-        sc.environment["PYTHONPATH"] = (
-            (pp + os.pathsep + VENDOR_DIR) if pp else VENDOR_DIR
-        )
+    if entry not in pp.split(os.pathsep):
+        sc.environment["PYTHONPATH"] = (pp + os.pathsep + entry) if pp else entry

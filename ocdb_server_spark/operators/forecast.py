@@ -192,7 +192,9 @@ FROM hw h CROSS JOIN maxt m WHERE h.t = m.m
 """
 
 
-def _holt(et: str, ys: list[int], ts: list[int]) -> tuple:
+def _holt(et: str, ys: list[int], ts: list[int]) -> tuple | None:
+    if len(ys) < 2:  # no initial trend; the oracle's init join is empty
+        return None
     l, bt = ys[0], ys[1] - ys[0]
     for y in ys[1:]:
         l_new = _f2(y + l + bt)
@@ -464,7 +466,9 @@ FROM hw h CROSS JOIN maxt m WHERE h.t = m.m
 """
 
 
-def _holt_damped(et: str, ys: list[int], ts: list[int]) -> tuple:
+def _holt_damped(et: str, ys: list[int], ts: list[int]) -> tuple | None:
+    if len(ys) < 2:  # no initial trend; the oracle's init join is empty
+        return None
     l, bt = ys[0], ys[1] - ys[0]
     for y in ys[1:]:
         pb = _f2(bt)

@@ -49,9 +49,12 @@ def get_spark(
     # Vendored-protobuf fallback must be wired BEFORE the session
     # exists: transformWithStateInPandas' state server runs in Python
     # WORKERS, which inherit $PYTHONPATH at daemon launch (_vendor.py).
-    from ocdb_server_spark._vendor import ensure_protobuf
+    # Workers also import this package (the daemon below, and every
+    # module-level kernel) whatever the driver's working directory.
+    from ocdb_server_spark._vendor import PACKAGE_ROOT, add_worker_path, ensure_protobuf
 
     ensure_protobuf()
+    add_worker_path(PACKAGE_ROOT)
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
         master = f"local[{cpus}]"
@@ -75,6 +78,9 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", adaptive)
         .config("spark.sql.adaptive.skewJoin.enabled", adaptive)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Workers import pyspark from its directory install, not from
+        # Spark's zip archives, which every task re-reads (daemon.py).
+        .config("spark.python.daemon.module", "ocdb_server_spark.daemon")
         .config("spark.sql.session.timeZone", "UTC")
         # events.parquet carries TIMESTAMP(NANOS) which Spark 4 rejects by
         # default; read as long and normalize to µs timestamps in io.py.

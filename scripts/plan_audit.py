@@ -86,6 +86,15 @@ def flags(plan: str) -> list[str]:
     return out
 
 
+def flags_cell(found: list[str], note: str | None) -> str:
+    """The flags column: the flags found, then the op's expected-shape
+    note, which shows whether or not a flag fires."""
+    cell = ", ".join(found)
+    if note:
+        cell = f"{cell} — expected: {note}" if cell else f"expected: {note}"
+    return cell
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
@@ -106,7 +115,7 @@ def main() -> None:
     print("scans, shuffle exchanges, broadcast exchanges, WholeStageCodegen")
     print("spans, window operators, Python-eval nodes, filter pushdown")
     print("reached a scan, and scale flags (empty = no scale-hostile shape;")
-    print("expected flags are annotated inline).")
+    print("an op's expected-shape note follows its flags).")
     print()
     print("| op | scans | exch | bcast | wscg | win | pyudf | pushed | flags |")
     print("|---|---|---|---|---|---|---|---|---|")
@@ -122,7 +131,6 @@ def main() -> None:
         "op34_join_cross": "cross join IS the op (broadcast nested loop)",
         "op35_join_theta_range": "theta join: broadcast nested loop by design",
         "op50_sort_multikey_nulls": "global sort IS the op",
-        "op51_topk_global": "",
         "op52_limit_offset_page": "deterministic paging needs the global order",
         "op84_udf_scalar": "UDF surface op",
         "op85_udf_pandas_vectorized": "UDF surface op",
@@ -167,13 +175,9 @@ def main() -> None:
         pyudf = py_nodes(plan)
         pushed = bool(re.search(r"PushedFilters: \[[^\]]", plan))
         found = flags(plan)
-        note = expected.get(name)
-        flag_s = ", ".join(found)
-        if found and note:
-            flag_s += f" — expected: {note}"
         print(
             f"| {name} | {scans} | {exch} | {bcast} | {wscg} | {win} | "
-            f"{pyudf} | {'y' if pushed else '-'} | {flag_s} |"
+            f"{pyudf} | {'y' if pushed else '-'} | {flags_cell(found, expected.get(name))} |"
         )
 
     print()

@@ -172,6 +172,40 @@ def test_seasonal_hw_short_span_fails_loudly(name, spark, tmp_path):
         con.execute(_op257_sql()).fetchall()
 
 
+@pytest.mark.parametrize(
+    "name", ["op231_holt_forecast", "op253_holt_damped"], ids=lambda name: name[:5]
+)
+def test_holt_single_day_span_returns_no_rows(name, spark, tmp_path):
+    """Events that all fall on one day give no initial trend (y_1 − y_0
+    needs a second day): the Spark kernel returns no row, as the
+    oracle's day-0 × day-1 init join does, instead of failing in the
+    executor."""
+    import duckdb
+
+    from ocdb_server_spark.operators import forecast
+
+    sf = str(tmp_path)
+    spark.createDataFrame(
+        [
+            (i, f"2024-01-01 0{i}:00:00", i, ("click", "view")[i % 2], 1.0, "{}")
+            for i in range(4)
+        ],
+        "event_id long, ts string, user_id long, event_type string,"
+        " value double, props string",
+    ).selectExpr(
+        "event_id", "cast(ts as timestamp) as ts", "user_id",
+        "event_type", "value", "props",
+    ).write.parquet(f"{sf}/events.parquet")
+
+    assert getattr(forecast, name)(spark, sf).collect() == []
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM "
+        f"'{sf}/events.parquet/*.parquet'"
+    )
+    assert con.execute(getattr(forecast, f"_{name[:5]}_sql")()).fetchall() == []
+
+
 def test_hw_damped_mult_matches_python_recurrence(spark, sf_dir):
     """op257: the grouped Arrow stage's damped multiplicative recurrence must
     equal an independent python implementation over the zero-filled

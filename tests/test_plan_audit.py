@@ -8,7 +8,7 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "scripts"))
 
-from plan_audit import flags, py_nodes  # noqa: E402
+from plan_audit import flags, flags_cell, py_nodes  # noqa: E402
 
 from ocdb_server_spark.registry import load_all  # noqa: E402
 
@@ -68,6 +68,13 @@ def test_keyed_sketch_is_flagged():
 def test_only_the_distinct_rewrite_expand_is_flagged():
     assert flags(DISTINCT_EXPAND) == ["expand-distinct"]
     assert flags(ROLLUP_EXPAND) == []
+
+
+def test_expected_note_prints_with_or_without_flags():
+    assert flags_cell([], "one grouped stage") == "expected: one grouped stage"
+    assert flags_cell(["cartesian"], "K_n") == "cartesian — expected: K_n"
+    assert flags_cell(["5-shuffles", "global-sort"], None) == "5-shuffles, global-sort"
+    assert flags_cell([], None) == ""
 
 
 def test_flags_on_real_plans(spark, sf_dir):
