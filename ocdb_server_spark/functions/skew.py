@@ -17,9 +17,6 @@ What still needs explicit handling at 100 TB:
   `salted_topk_per_key` is the two-phase fix: per-(key, salt) partial
   top-k bounds each task at k·salts rows per key, then a final top-k
   over the tiny partial set.
-- Joins where AQE is unavailable (static plans, some streaming joins):
-  `explode_salt_broadcast` replicates the small side per salt so the
-  fact's hot key spreads over n_salts tasks.
 """
 
 from __future__ import annotations
@@ -50,9 +47,8 @@ def salted_topk_per_key(
     if clash:
         # select('*', salt) would mint a DUPLICATE column name and the
         # window's partitionBy would fail with AMBIGUOUS_REFERENCE —
-        # e.g. a frame already salted by explode_salt_broadcast
-        # (round-12 review). Loud contract error beats a mid-plan
-        # analysis stack.
+        # e.g. a frame already salted for a salted join. Loud contract
+        # error beats a mid-plan analysis stack.
         raise ValueError(
             f"salted_topk_per_key: input already has {sorted(clash)} — "
             "rename or drop them first (internal working columns)"
@@ -71,16 +67,6 @@ def salted_topk_per_key(
         .filter(F.col("_rn") <= k)
         .drop("_rn")
     )
-
-
-def explode_salt_broadcast(dim: DataFrame, n_salts: int) -> DataFrame:
-    """Replicate each dimension row n_salts times with a `_salt`
-    column; join the fact on (key, fact_salt == _salt) where fact_salt
-    is `pmod(xxhash64(<any varying col>), n_salts)` — the hot fact key
-    then spreads over n_salts tasks. Rarely needed with AQE skew-join
-    on; kept for static plans and stream-static joins."""
-    salts = F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))).alias("_salt")
-    return dim.select("*", salts)
 
 
 def hybrid_selfjoin_pairs(

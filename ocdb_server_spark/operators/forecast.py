@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ocdb_server_spark.functions import arrow_rows as _arrow_rows
+from ocdb_server_spark.functions.arrow_rows import record_batch, row_schema
 from ocdb_server_spark.io import load_table
 from ocdb_server_spark.registry import register
 
@@ -103,13 +105,9 @@ def _series_stage(daily: DataFrame, key: str, kernel, ddl: str) -> DataFrame:
     input is already partitioned on it), then, inside each series'
     task, sorted by ``t`` and passed to ``kernel(key_value, ys, ts)``, which
     returns the output row as a tuple, or None for no row. The rows are
-    built against an Arrow schema derived from ``ddl`` when the plan is
-    built, so no output type rests on Python value inference."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import DataType
-
-    struct = DataType.fromDDL(ddl)
-    schema = to_arrow_schema(struct)
+    built by ``arrow_rows`` against the schema of ``ddl``, derived when
+    the plan is built."""
+    struct, schema = row_schema(ddl)
 
     def run(k, table):
         import pyarrow as pa
@@ -119,10 +117,7 @@ def _series_stage(daily: DataFrame, key: str, kernel, ddl: str) -> DataFrame:
             k[0].as_py(), table.column("y").to_pylist(), table.column("t").to_pylist()
         )
         rows = [] if row is None else [row]
-        return pa.Table.from_arrays(
-            [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(schema)],
-            schema=schema,
-        )
+        return pa.Table.from_batches([record_batch(rows, schema)])
 
     run.__name__ = kernel.__name__  # the stage's label in the plan
     return daily.groupBy(key).applyInArrow(run, struct)
@@ -206,7 +201,7 @@ def _holt(et: str, ys: list[int], ts: list[int]) -> tuple | None:
 @register(
     "op231_holt_forecast",
     oracle=_op231_sql(),
-    deps=(_daily_series, _series_stage, _forecast_ddl, _f2, _holt),
+    deps=(_daily_series, _series_stage, _arrow_rows, _forecast_ddl, _f2, _holt),
 )
 def op231_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HOLT LINEAR (double-exponential) forecasting of daily event
@@ -313,8 +308,8 @@ def _hw_additive(et: str, ys: list[int], ts: list[int]) -> tuple:
 @register(
     "op235_holt_winters_seasonal",
     oracle=_op235_sql(),
-    deps=(_daily_series, _series_stage, _forecast_ddl, _f2, _seasonal_init,
-          _hw_additive),
+    deps=(_daily_series, _series_stage, _arrow_rows, _forecast_ddl, _f2,
+          _seasonal_init, _hw_additive),
 )
 def op235_holt_winters_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SEASONAL Holt-Winters (additive, weekly m=7, α=β=γ=1/2) —
@@ -486,7 +481,8 @@ def _holt_damped(et: str, ys: list[int], ts: list[int]) -> tuple | None:
 @register(
     "op253_holt_damped",
     oracle=_op253_sql(),
-    deps=(_daily_series, _series_stage, _forecast_ddl, _f2, _holt_damped),
+    deps=(_daily_series, _series_stage, _arrow_rows, _forecast_ddl, _f2,
+          _holt_damped),
 )
 def op253_holt_damped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DAMPED-TREND Holt forecasting of daily event volumes per
@@ -612,8 +608,8 @@ def _hw_multiplicative(et: str, ys: list[int], ts: list[int]) -> tuple:
 @register(
     "op254_holt_winters_multiplicative",
     oracle=_op254_sql(),
-    deps=(_daily_series, _series_stage, _forecast_ddl, _f2, _seasonal_init,
-          _hw_multiplicative),
+    deps=(_daily_series, _series_stage, _arrow_rows, _forecast_ddl, _f2,
+          _seasonal_init, _hw_multiplicative),
 )
 def op254_holt_winters_multiplicative(
     spark: SparkSession, sf_dir: str
@@ -752,8 +748,8 @@ def _hw_damped_multiplicative(et: str, ys: list[int], ts: list[int]) -> tuple:
 @register(
     "op257_holt_winters_damped_multiplicative",
     oracle=_op257_sql(),
-    deps=(_daily_series, _series_stage, _forecast_ddl, _f2, _seasonal_init,
-          _hw_damped_multiplicative),
+    deps=(_daily_series, _series_stage, _arrow_rows, _forecast_ddl, _f2,
+          _seasonal_init, _hw_damped_multiplicative),
 )
 def op257_holt_winters_damped_multiplicative(
     spark: SparkSession, sf_dir: str
@@ -894,7 +890,7 @@ def _croston(k: int, ys: list[int], ts: list[int]) -> tuple | None:
 
 
 @register(
-    "op259_croston_sba", oracle=_OP259_SQL, deps=(_series_stage, _croston)
+    "op259_croston_sba", oracle=_OP259_SQL, deps=(_series_stage, _arrow_rows, _croston)
 )
 def op259_croston_sba(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CROSTON / SBA intermittent-demand forecasting — the forecasting

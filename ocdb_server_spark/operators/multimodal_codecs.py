@@ -25,6 +25,8 @@ from __future__ import annotations
 import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
+from ocdb_server_spark.functions import arrow_rows as _arrow_rows
+from ocdb_server_spark.functions.arrow_rows import map_rows
 from ocdb_server_spark.registry import register
 
 # Codec KERNELS declared as register deps: each op's certification is
@@ -69,41 +71,16 @@ def _codec_frame(spark: SparkSession, n: int, encode, decode, ddl: str,
     returns the bare payload under the default ``gen_ddl``) and a
     second one turns each generated row into the rows
     ``decode(*row)``. Payload bytes never cross an exchange; only the
-    fixed-width ``ddl`` rows continue. Each stage builds its batches
-    against an Arrow schema derived from its DDL when the plan is
-    built, so no output type rests on Python value inference."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import DataType
-
-    def stage(fn, ddl, name):
-        struct = DataType.fromDDL(ddl)
-        schema = to_arrow_schema(struct)
-
-        def run(batches):
-            import pyarrow as pa
-
-            for batch in batches:
-                rows = [out
-                        for row in zip(*(c.to_pylist() for c in batch.columns))
-                        for out in fn(*row)]
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([r[k] for r in rows], f.type)
-                     for k, f in enumerate(schema)],
-                    schema=schema,
-                )
-
-        run.__name__ = name  # the stage's label in the plan
-        return run, struct
+    fixed-width ``ddl`` rows continue. Both are ``arrow_rows.map_rows``
+    stages, typed from their DDLs when the plan is built."""
 
     def gen_row(i):
         cols = encode(i)
         return [(i, *cols) if isinstance(cols, tuple) else (i, cols)]
 
-    return (
-        spark.range(n).repartition(8)
-        .mapInArrow(*stage(gen_row, gen_ddl, encode.__name__))
-        .mapInArrow(*stage(decode, ddl, decode.__name__))
-    )
+    ids = spark.range(n).repartition(8)
+    gen = map_rows(ids, gen_row, gen_ddl, encode.__name__)
+    return map_rows(gen, decode, ddl, decode.__name__)
 
 
 def _gray_stats(aid: int, w: int, h: int, px: np.ndarray) -> list[tuple]:
@@ -159,7 +136,7 @@ def _wav_features(aid: int, payload: bytes) -> list[tuple]:
     oracle=_OP195_SQL,
     # plan + certification live in the shared frame, the kernels and
     # the WAV codec
-    deps=(_codec_frame, _wav_asset, _wav_features, _codecs_kernel),
+    deps=(_codec_frame, _arrow_rows, _wav_asset, _wav_features, _codecs_kernel),
 )
 def op195_wav_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio decode, for real: 200 standards-conformant mono PCM16 WAV
@@ -232,7 +209,7 @@ def _bmp_stats(aid: int, payload: bytes) -> list[tuple]:
 @register(
     "op196_bmp_decode_stats",
     oracle=_OP196_SQL,
-    deps=(_codec_frame, _bmp_asset, _bmp_stats, _codecs_kernel),
+    deps=(_codec_frame, _arrow_rows, _bmp_asset, _bmp_stats, _codecs_kernel),
 )
 def op196_bmp_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image decode, for real: 60 conformant 24-bit BMPs (pixel values
@@ -283,7 +260,7 @@ def _dominant_freq(aid: int, payload: bytes) -> list[tuple]:
 @register(
     "op197_audio_dominant_freq",
     oracle=_OP197_SQL,
-    deps=(_codec_frame, _sine_asset, _dominant_freq, _codecs_kernel),
+    deps=(_codec_frame, _arrow_rows, _sine_asset, _dominant_freq, _codecs_kernel),
 )
 def op197_audio_dominant_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSP feature extraction, certified: pure sine tones planted
@@ -357,7 +334,7 @@ def _bmp_resize_stats(aid: int, payload: bytes) -> list[tuple]:
 @register(
     "op198_bmp_resize",
     oracle=_OP198_SQL,
-    deps=(_codec_frame, _bmp_asset, _bmp_resize_stats, _codecs_kernel),
+    deps=(_codec_frame, _arrow_rows, _bmp_asset, _bmp_resize_stats, _codecs_kernel),
 )
 def op198_bmp_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image RESIZE, for real: the decoded BMPs downscale 2× by
@@ -421,7 +398,7 @@ def _loudest_frames(aid: int, payload: bytes) -> list[tuple]:
 @register(
     "op199_audio_loudest_frames",
     oracle=_OP199_SQL,
-    deps=(_codec_frame, _wav_asset, _loudest_frames, _codecs_kernel),
+    deps=(_codec_frame, _arrow_rows, _wav_asset, _loudest_frames, _codecs_kernel),
 )
 def op199_audio_loudest_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio FRAME-SAMPLING, for real: decoded PCM splits into
@@ -466,7 +443,7 @@ FROM wav w JOIN bmp b ON w.asset_id = b.asset_id
 @register(
     "op200_multimodal_fuse",
     oracle=_OP200_SQL,
-    deps=(_codec_frame, _wav_asset, _wav_features, _bmp_asset, _bmp_stats,
+    deps=(_codec_frame, _arrow_rows, _wav_asset, _wav_features, _bmp_asset, _bmp_stats,
           _codecs_kernel),
 )
 def op200_multimodal_fuse(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -555,7 +532,7 @@ FROM dcs d JOIN acs a ON d.i = a.i
 @register(
     "op202_jpeg_decode_stats",
     oracle=_op202_sql(),
-    deps=(_codec_frame, _jpeg_ac_asset, _jpeg_coef_stats, _jpeg_kernel),
+    deps=(_codec_frame, _arrow_rows, _jpeg_ac_asset, _jpeg_coef_stats, _jpeg_kernel),
 )
 def op202_jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COMPRESSED-format decode, for real: 80 baseline JPEGs are built
@@ -621,7 +598,7 @@ _GRAY_STATS_DDL = (
 @register(
     "op203_jpeg_pixel_decode",
     oracle=_OP203_SQL,
-    deps=(_codec_frame, _jpeg_dc_asset, _jpeg_pixel_stats, _gray_stats,
+    deps=(_codec_frame, _arrow_rows, _jpeg_dc_asset, _jpeg_pixel_stats, _gray_stats,
           _jpeg_kernel),
 )
 def op203_jpeg_pixel_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -680,7 +657,7 @@ FROM px GROUP BY i
 @register(
     "op205_png_decode_stats",
     oracle=_OP205_SQL,
-    deps=(_codec_frame, _png_asset, _png_stats, _gray_stats, _png_kernel),
+    deps=(_codec_frame, _arrow_rows, _png_asset, _png_stats, _gray_stats, _png_kernel),
 )
 def op205_png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PNG decode, for real and LOSSLESS: 60 grayscale PNGs (pixels
@@ -747,7 +724,7 @@ FROM px GROUP BY i
 @register(
     "op222_gif_decode_stats",
     oracle=_OP222_SQL,
-    deps=(_codec_frame, _gif_asset, _gif_stats, _gray_stats, _gif_kernel),
+    deps=(_codec_frame, _arrow_rows, _gif_asset, _gif_stats, _gray_stats, _gif_kernel),
 )
 def op222_gif_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GIF decode for real — the THIRD compressed image format and the
@@ -847,7 +824,7 @@ def _flac_features(aid: int, payload: bytes) -> list[tuple]:
     oracle=_OP251_SQL,
     # certification rides the FLAC kernel: a rewrite of the parser
     # re-fronts this op
-    deps=(_codec_frame, _flac_asset, _flac_features, _flac_kernel),
+    deps=(_codec_frame, _arrow_rows, _flac_asset, _flac_features, _flac_kernel),
 )
 def op251_flac_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FLAC audio decode, for real — compressed lossless audio:
@@ -949,7 +926,7 @@ def _op104_decode(aid: int, modality: str, mime: str,
 @register(
     "op104_multimodal_decode",
     oracle=_OP104_SQL,
-    deps=(_codec_frame, _op104_asset, _op104_decode, _flac_kernel,
+    deps=(_codec_frame, _arrow_rows, _op104_asset, _op104_decode, _flac_kernel,
           _png_kernel),
 )
 def op104_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1026,7 +1003,7 @@ def _sampled_frames(aid: int, payload: bytes) -> list[tuple]:
 @register(
     "op130_multimodal_frame_sample",
     oracle=_OP130_SQL,
-    deps=(_codec_frame, _anim_gif_asset, _sampled_frames, _gif_kernel),
+    deps=(_codec_frame, _arrow_rows, _anim_gif_asset, _sampled_frames, _gif_kernel),
 )
 def op130_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video-style frame sampling on a REAL container: 24 multi-frame

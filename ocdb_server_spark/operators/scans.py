@@ -13,13 +13,16 @@ with Catalyst predicate pushdown + column pruning (verify with
 
 from __future__ import annotations
 
+import json
 import os
 import tempfile
 from collections.abc import Iterator
 
-import pandas as pd
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ocdb_server_spark.functions import arrow_rows as _arrow_rows
+from ocdb_server_spark.functions.arrow_rows import map_partitions, map_rows
 from ocdb_server_spark.io import load_table
 from ocdb_server_spark.registry import register
 from ocdb_server_spark.scratch import scratch_dir
@@ -694,214 +697,232 @@ def op210_xml_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------- op260: BGZF blocked-gzip SPLITTABLE gzip source
+# ---------------- op260/op261: splittable archives (BGZF, seekable zstd)
+# One path serves both codecs. The exporter writes the documents table
+# as JSONL blocks, one archive per partition; the split-read manifests
+# every archive's blocks, fans the manifest rows (never the payload) out
+# over 8 tasks and decodes each block inside its own task, ending in the
+# certification aggregate. An archive record (`BgzfArchive`,
+# `ZstdArchive`) holds all that differs: how blocks are written, how a
+# file's block manifest is read, how one block is read, and the
+# manifest's block columns.
 
-def _write_docs_bgzf_file(path: str, it) -> int:
-    """ONE writer kernel for both the single-file demo and the
-    parallel exporter (round-9 review: the record serialization —
-    field set + sort_keys — and the tmp + os.replace atomic-publish
-    protocol must live in exactly one place): stream the pandas
-    batches as JSONL through iter_bgzf_members into `path`, return
-    the member count."""
-    import json
 
-    from ocdb_server_spark.sources.bgzf import iter_bgzf_members
+class BgzfArchive:
+    """BGZF (sources/bgzf.py): ≤64 KiB gzip members, each carrying its
+    compressed length in-band; the manifest walks the member headers.
+    An empty partition writes an EOF-marker-only file, which walks to
+    an empty manifest."""
 
-    def lines():
-        for pdf in it:
-            for r in pdf.to_dict("records"):
-                yield json.dumps(
-                    {
-                        "doc_id": int(r["doc_id"]),
-                        "text": r["text"],
-                        "lang": r["lang"],
-                        "n_chars": int(r["n_chars"]),
-                    },
-                    sort_keys=True,
-                )
+    suffix = ".jsonl.gz"
+    block_ddl = "offset long, length long"
+    blocks = staticmethod(_bgzf_kernel.walk_blocks)
+    read = staticmethod(_bgzf_kernel.read_block)
 
-    n = 0
-    tmp = f"{path}.{os.getpid()}.tmp"
-    with open(tmp, "wb") as f:
-        for member in iter_bgzf_members(lines()):
+    @staticmethod
+    def write(lines: Iterator[str], f) -> int:
+        n = 0
+        for member in _bgzf_kernel.iter_bgzf_members(lines):
             f.write(member)
             n += 1
-    os.replace(tmp, path)  # atomic publish (op03's rule)
+        return n
+
+
+class ZstdArchive:
+    """Seekable zstd (sources/zstd_seekable.py): zstd frames followed by
+    the seek-table skippable frame; the manifest is one footer read and
+    one table read per file. An empty partition writes a bare seek
+    table, which reads as an empty manifest."""
+
+    suffix = ".jsonl.zst"
+    block_ddl = "offset long, csize long, usize long"
+    blocks = staticmethod(_zstd_kernel.read_seek_table)
+    read = staticmethod(_zstd_kernel.read_frame)
+
+    @staticmethod
+    def write(lines: Iterator[str], f) -> int:
+        sizes = []
+        for frame, usize in _zstd_kernel.iter_seekable_zstd(lines):
+            f.write(frame)
+            sizes.append((len(frame), usize))
+        f.write(_zstd_kernel.seek_table_frame(sizes))
+        return len(sizes)
+
+
+def _publish(path: str, write):
+    """``write(f)`` into a tmp file, then ``os.replace`` it onto ``path``
+    (op03's atomic-publish rule); returns what ``write`` returns. The
+    tmp name carries the PID: a speculative or zombie attempt at the
+    same partition must not interleave bytes with the retry's stream,
+    and the last replace wins whole."""
+    tmp = f"{path}.{os.getpid()}.tmp"
+    with open(tmp, "wb") as f:
+        n = write(f)
+    os.replace(tmp, path)
     return n
 
 
-def _bgzf_write_docs(path: str):
-    def write(it):
-        import pandas as pd
-
-        n = _write_docs_bgzf_file(path, it)
-        yield pd.DataFrame({"path": [path], "n_members": [n]})
-
-    return write
-
-
-def _bgzf_write_docs_part(out_dir: str):
-    """Per-PARTITION variant of _bgzf_write_docs (round-8 verdict
-    item 3 — the parallel writer shape op260's single-file demo
-    deliberately bottlenecks): each task streams ITS partition
-    through the same iter_bgzf_members kernel into its own
-    member-blocked BGZF file, named by TaskContext partition id,
-    tmp-written + os.replace (op03's atomic-publish rule). N tasks
-    write N files concurrently — writer wall drops with partitions
-    while every file stays a valid stock-gzip stream and the same
-    walk_blocks manifest split-reads the whole corpus across files."""
-
-    def write(it):
-        import pandas as pd
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        path = os.path.join(out_dir, f"part-{pid:05d}.jsonl.gz")
-        n = _write_docs_bgzf_file(path, it)
-        yield pd.DataFrame({"path": [path], "n_members": [n]})
-
-    return write
+def _docs_jsonl(rows: Iterator[tuple]) -> Iterator[str]:
+    """The archives' record serialization: one sorted-key JSON object
+    per (doc_id, text, lang, n_chars) row."""
+    for doc_id, text, lang, n_chars in rows:
+        yield json.dumps(
+            {"doc_id": doc_id, "text": text, "lang": lang, "n_chars": n_chars},
+            sort_keys=True,
+        )
 
 
-def bgzf_export_docs_parallel(
-    spark: SparkSession, sf_dir: str, out_dir: str, partitions: int = 8
-) -> list[str]:
-    """Export the documents table as `partitions` BGZF files in
-    parallel and return their paths (write forced). The read side is
-    file-count-agnostic: _bgzf_walk manifests every file, so the
-    exact same split-read plan consumes 1 or N files."""
+def export_docs_archive(
+    spark: SparkSession, sf_dir: str, out_dir: str, archive, partitions: int
+) -> list[tuple[str, int]]:
+    """Write the documents table as ``partitions`` archives, one per
+    task, and return their sorted (path, n_blocks); the write is forced.
+    One partition is a coalesce(1), the single-file shape with no
+    shuffle; more are a repartition. Every task writes its file,
+    ``part-<partition id><suffix>``, even from an empty partition, so
+    the manifest has one row per task."""
     os.makedirs(out_dir, exist_ok=True)  # tasks die opaquely otherwise
-    d = load_table(spark, sf_dir, "documents").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "n_chars"
     )
-    manifest = (
-        d.repartition(partitions)
-        .mapInPandas(_bgzf_write_docs_part(out_dir), "path string, n_members long")
-        .collect()
-    )
-    # every task yields exactly one row; an empty partition still
-    # writes a valid EOF-marker-only file walk_blocks accepts
+    docs = docs.coalesce(1) if partitions == 1 else docs.repartition(partitions)
+
+    def write(rows):
+        pid = TaskContext.get().partitionId()
+        path = os.path.join(out_dir, f"part-{pid:05d}{archive.suffix}")
+        return [(path, _publish(path, lambda f: archive.write(_docs_jsonl(rows), f)))]
+
+    manifest = map_partitions(
+        docs, write, "path string, n_blocks long", f"{archive.__name__}_write"
+    ).collect()
     assert len(manifest) == partitions
-    return sorted(r.path for r in manifest)
+    return sorted((r.path, r.n_blocks) for r in manifest)
 
 
-def _bgzf_walk(it):
-    import pandas as pd
+def read_archive_lang_agg(spark: SparkSession, paths: list[str], archive) -> DataFrame:
+    """The split-read of ``export_docs_archive``'s files: the manifest
+    stage turns each path into one row per block, the manifest rows
+    (never payload bytes) repartition 8 ways, and each task reads and
+    decodes its own blocks; the certification aggregate follows. The
+    plan does not depend on the file count: it reads 1 or N archives."""
 
-    from ocdb_server_spark.sources.bgzf import walk_blocks
+    def manifest(path):
+        return [(path, *block) for block in archive.blocks(path)]
 
-    for pdf in it:
-        for p in pdf["path"]:
-            blocks = walk_blocks(p)
-            yield pd.DataFrame(
-                {
-                    "path": [p] * len(blocks),
-                    "offset": [b[0] for b in blocks],
-                    "length": [b[1] for b in blocks],
-                }
-            )
+    def decode(path, *block):
+        text = archive.read(path, *block).decode("utf-8")
+        return [
+            (r["doc_id"], r["text"], r["lang"], r["n_chars"])
+            for r in map(json.loads, text.splitlines())
+        ]
 
-
-def _bgzf_decode(it):
-    import json
-
-    import pandas as pd
-
-    from ocdb_server_spark.sources.bgzf import read_block
-
-    for pdf in it:
-        for p, o, ln in zip(pdf["path"], pdf["offset"], pdf["length"]):
-            recs = [
-                json.loads(x)
-                for x in read_block(p, int(o), int(ln)).decode("utf-8").splitlines()
-            ]
-            if recs:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": [r["doc_id"] for r in recs],
-                        "text": [r["text"] for r in recs],
-                        "lang": [r["lang"] for r in recs],
-                        "n_chars": [r["n_chars"] for r in recs],
-                    }
-                )
-
-
-def bgzf_read_lang_agg(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """File-count-agnostic BGZF split-read: manifest every file via
-    walk_blocks (distributed — one row in, many block rows out), fan
-    the block reads out, inflate+CRC-verify per member, and compute
-    the op260 per-lang certification aggregate. The SAME plan serves
-    op260's single-file demo and the parallel N-file export
-    (bgzf_export_docs_parallel) — at 100 TB the writer runs one task
-    per partition and this reader one manifest row per file."""
-    blocks = spark.createDataFrame(
-        [(p,) for p in paths], "path string"
-    ).mapInPandas(_bgzf_walk, "path string, offset long, length long")
-    back = blocks.repartition(8).mapInPandas(
-        _bgzf_decode, _DOCS_JSONL_SCHEMA
+    files = spark.createDataFrame([(p,) for p in paths], "path string")
+    blocks = map_rows(
+        files, manifest, "path string, " + archive.block_ddl,
+        f"{archive.__name__}_manifest",
+    )
+    back = map_rows(
+        blocks.repartition(8), decode, _DOCS_JSONL_SCHEMA,
+        f"{archive.__name__}_decode",
     )
     return _docs_lang_agg(back)
+
+
+_ARCHIVE_DEPS = (_docs_lang_agg, _publish, _docs_jsonl, export_docs_archive,
+                 read_archive_lang_agg, _arrow_rows, _linebatch_kernel)
 
 
 @register(
     "op260_bgzf_splittable_gzip",
     oracle=_DOCS_LANG_AGG_SQL,
-    deps=(_docs_lang_agg, bgzf_read_lang_agg, _write_docs_bgzf_file,
-          _bgzf_write_docs_part, bgzf_export_docs_parallel, _bgzf_walk,
-          _bgzf_decode, _bgzf_kernel, _linebatch_kernel),
+    deps=(*_ARCHIVE_DEPS, BgzfArchive, _bgzf_kernel),
 )
 def op260_bgzf_splittable_gzip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPLITTABLE GZIP — the op207/op256 story completed for gzip
-    itself (SURVEY §7.8 round-9 candidate 3): the documents table
-    exported as ONE BGZF file (sources/bgzf.py — the SAM-spec §4.1
-    blocked-gzip framing: ≤64 KiB independent gzip members, each
-    member's compressed length carried in-band in a gzip FEXTRA 'BC'
-    subfield). op207 proved a plain .gz condemns Spark to one task
-    per file; op256 showed bzip2's block magic makes splitting free;
-    BGZF shows gzip can join them WITHOUT losing gzip compatibility —
+    """SPLITTABLE GZIP, completing the op207/op256 story for gzip
+    itself: the documents table exported as ONE BGZF file
+    (sources/bgzf.py, the SAM-spec §4.1 blocked-gzip framing: ≤64 KiB
+    independent gzip members, each member's compressed length carried
+    in-band in a gzip FEXTRA 'BC' subfield). A plain .gz condemns Spark
+    to one task per file (op207); bzip2's block magic makes splitting
+    free (op256); BGZF splits gzip WITHOUT losing gzip compatibility —
     the file remains a valid multi-member gzip stream any stock
     consumer reads end-to-end (pinned vs stdlib gzip in
     tests/test_bgzf.py).
 
     The split path is index-free and three-stage, all executor-side:
-    (1) one task streams the corpus through iter_bgzf_members (one
-    ≤48 KiB batch in memory, members flushed at record boundaries —
-    a split can never tear a record); (2) walk_blocks builds the
-    block manifest from the in-band BSIZE fields alone, reading ~18
-    bytes per 64 KiB member — parquet-footer economics, distributed
-    per file via mapInPandas; (3) the manifest rows (NOT the bytes)
+    (1) one coalesce(1) task streams the corpus through
+    iter_bgzf_members (one ≤48 KiB batch in memory, members flushed at
+    record boundaries — a split can never tear a record); (2)
+    walk_blocks builds the block manifest from the in-band BSIZE
+    fields alone, reading ~18 bytes per 64 KiB member —
+    parquet-footer economics; (3) the manifest rows (NOT the bytes)
     shuffle to a repartition(8) fan-out where each task range-reads
     and inflates its own members, CRC-verified. Payload bytes never
     shuffle; at 100 TB the manifest is ~1/4000th of the data and the
-    block reads fan out to maxPartitionBytes-sized task groups —
-    the exact economics Spark's native bzip2 split gives op256.
-    The per-lang aggregate over the re-read frame hash-matching the
+    block reads fan out to maxPartitionBytes-sized task groups — the
+    exact economics Spark's native bzip2 split gives op256. The
+    per-lang aggregate over the re-read frame hash-matching the
     original-parquet oracle certifies the JSON→BGZF→manifest-split→
-    inflate path loses nothing; the ≤1-row manifest collect() forces
+    inflate path loses nothing; the 1-row manifest collect() forces
     the write before the read plan is returned (op252's rule).
 
-    The coalesce(1) writer is the single-file DEMO semantics (one
-    downloadable artifact). The production writer shape is
-    bgzf_export_docs_parallel below (round-8 verdict item 3): one
-    member-blocked file per partition through the same kernel, same
-    manifest split-read over N files — certified equal in
-    tests/test_bgzf.py and measured in BASELINE.md's writer-scaling
-    row."""
-    from ocdb_server_spark.scratch import scratch_dir
+    One file is the single-downloadable-artifact shape. The same
+    exporter writes one archive per partition for op261, and the same
+    split-read consumes either (certified equal in tests/test_bgzf.py,
+    writer scaling measured in BASELINE.md)."""
+    out_dir = scratch_dir("bgzf_jsonl", sf_dir)
+    [(path, n_members)] = export_docs_archive(
+        spark, sf_dir, out_dir, BgzfArchive, partitions=1
+    )
+    assert n_members > 1
+    return read_archive_lang_agg(spark, [path], BgzfArchive)
 
-    path = os.path.join(
-        scratch_dir("bgzf_jsonl", sf_dir), "documents.jsonl.gz"
+
+@register(
+    "op261_zstd_seekable_ingest",
+    oracle=_DOCS_LANG_AGG_SQL,
+    deps=(*_ARCHIVE_DEPS, ZstdArchive, _zstd_kernel),
+)
+def op261_zstd_seekable_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SPLITTABLE ZSTD — op260's path for the codec large corpora
+    actually ship: the documents table exported as seekable zstd
+    (sources/zstd_seekable.py — standard zstd frames + the public
+    seekable format's seek-table skippable frame), then split-read.
+
+    WRITE: the exporter fans the corpus over 8 concurrent tasks, each
+    streaming ITS partition through iter_seekable_zstd (one ≤48 KiB
+    batch in memory, frames flushed at record boundaries — a split
+    can never tear a record) into its own archive + seek table.
+    BASELINE.md measured −79% writer wall at 100× corpus against the
+    single-task shape op260 keeps; both shapes read back equal
+    (tests/test_zstd_seekable.py).
+
+    READ — op260's three-stage, all-executor split path, with BETTER
+    metadata economics: (1) the manifest costs ONE 9-byte footer read
+    + one table read per file (read_seek_table) — op260's BGZF walk
+    pays a header hop per 64 KiB member, the seek table is a single
+    parquet-footer-style read regardless of frame count; (2) manifest
+    ROWS (never payload bytes) shuffle to a repartition(8) fan-out;
+    (3) each task range-reads and one-shot decompresses its frames
+    with libzstd, output size verified against the table. At 100 TB
+    the table is ~8 bytes/frame and the frame reads fan out to
+    maxPartitionBytes-sized task groups.
+
+    COMPATIBLE: skippable frames are core zstd (RFC 8878 §3.1.2) —
+    every file is a valid multi-frame zstd stream any stock decoder
+    reads end-to-end, table silently skipped (pinned against
+    pyarrow's libzstd one-shot decoder in tests/test_zstd_seekable.py,
+    the same interop discipline as test_bgzf's stdlib-gzip pin).
+
+    The per-lang aggregate over the re-read frames hash-matching the
+    original-parquet oracle certifies JSON→zstd→seek-table-split→
+    decompress loses nothing; the exporter's manifest collect() forces
+    the write before the read plan is returned (op252's rule)."""
+    out_dir = scratch_dir("zstd_jsonl_par", sf_dir)
+    archives = export_docs_archive(
+        spark, sf_dir, out_dir, ZstdArchive, partitions=8
     )
-    d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang", "n_chars"
-    )
-    manifest = (
-        d.coalesce(1)
-        .mapInPandas(_bgzf_write_docs(path), "path string, n_members long")
-        .collect()
-    )
-    assert len(manifest) == 1 and manifest[0].n_members > 1
-    return bgzf_read_lang_agg(spark, [path])
+    return read_archive_lang_agg(spark, [p for p, _ in archives], ZstdArchive)
 
 
 # --------------------------------------------------------------------------
@@ -1092,69 +1113,61 @@ GROUP BY lang
 
 
 def _avro_write_parts(out_dir: str):
-    def write(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
+    """op252's writer: each task's documents as one OCF file, empty or
+    not, with the codec alternating per partition so every run
+    exercises both the null and the deflate block path."""
 
-        from ocdb_server_spark.sources.avro_ocf import write_ocf
-
+    def write(rows):
         pid = TaskContext.get().partitionId()
-        rows = []
-        for pdf in it:
-            for r in pdf.to_dict("records"):
-                did, nch = int(r["doc_id"]), int(r["n_chars"])
-                rows.append({
-                    "doc_id": did,
-                    "text": r["text"],
-                    "meta": {"lang": r["lang"], "source": r["source"]},
-                    "n_chars": nch,
-                    "tokens": [nch, nch % 97, did % 31],
-                    "attrs": {"n2": 2 * nch + 1},
-                    "maybe_score": None if did % 5 == 0 else 2 * nch,
-                })
-        # codec alternates per partition so every run exercises both
-        # the null and the deflate block path
+        docs = [
+            {
+                "doc_id": did,
+                "text": text,
+                "meta": {"lang": lang, "source": source},
+                "n_chars": nch,
+                "tokens": [nch, nch % 97, did % 31],
+                "attrs": {"n2": 2 * nch + 1},
+                "maybe_score": None if did % 5 == 0 else 2 * nch,
+            }
+            for did, text, lang, source, nch in rows
+        ]
         codec = "deflate" if pid % 2 else "null"
         path = os.path.join(out_dir, f"part-{pid:05d}.avro")
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(write_ocf(_AVRO_WRITER_SCHEMA, rows, codec=codec,
-                              rows_per_block=500))
-        os.replace(tmp, path)  # atomic publish (op03's fixture rule)
-        yield pd.DataFrame({"path": [path], "n_rows": [len(rows)]})
+        _publish(path, lambda f: f.write(_avro_kernel.write_ocf(
+            _AVRO_WRITER_SCHEMA, docs, codec=codec, rows_per_block=500)))
+        return [(path, len(docs))]
 
     return write
 
 
-def _avro_read_parts(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ocdb_server_spark.sources.avro_ocf import read_ocf
-
-    for pdf in it:
-        for content in pdf["content"]:
-            rows = read_ocf(bytes(content), reader_schema=_AVRO_READER_SCHEMA)
-            # flatten the reader-shaped values into feature columns:
-            # nested record access (incl. the nested default), array
-            # sum over promoted longs, map lookup, union branch check
-            yield pd.DataFrame({
-                "lang": [r["meta"]["lang"] for r in rows],
-                "doc_id": [r["doc_id"] for r in rows],
-                "quality": [r["meta"]["quality"] for r in rows],
-                "n_chars": [r["n_chars"] for r in rows],
-                "text_chars": [len(r["text"]) for r in rows],
-                "tok_sum": [sum(r["tokens"]) for r in rows],
-                "attr_n2": [r["attrs"]["n2"] for r in rows],
-                "score_is_null": [r["maybe_score"] is None for r in rows],
-                "score": [r["maybe_score"] or 0 for r in rows],
-            })
+def _avro_read_parts(content: bytes) -> list[tuple]:
+    """One OCF file read with the evolved reader schema, flattened into
+    feature columns: nested record access (incl. the nested default),
+    array sum over promoted longs, map lookup, union branch check."""
+    return [
+        (
+            r["meta"]["lang"],
+            r["doc_id"],
+            r["meta"]["quality"],
+            r["n_chars"],
+            len(r["text"]),
+            sum(r["tokens"]),
+            r["attrs"]["n2"],
+            r["maybe_score"] is None,
+            r["maybe_score"] or 0,
+        )
+        for r in _avro_kernel.read_ocf(content, reader_schema=_AVRO_READER_SCHEMA)
+    ]
 
 
 @register(
     "op252_avro_roundtrip",
     oracle=_OP252_SQL,
-    deps=(_avro_write_parts, _avro_read_parts, _avro_kernel),
+    deps=(_avro_write_parts, _avro_read_parts, _publish, _arrow_rows,
+          _avro_kernel),
 )
 def op252_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AVRO Object Container File round-trip with SCHEMA EVOLUTION —
-    the interchange-format gap (round-6 verdict item 5) closed in
+    """AVRO Object Container File round-trip with SCHEMA EVOLUTION, in
     pure Python: documents is exported executor-side as one OCF file
     per partition (codec alternating null/deflate so both block paths
     run), with the full COMPLEX-TYPE surface in the writer schema — a
@@ -1176,7 +1189,7 @@ def op252_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     classpath (DataFileReader reads our bytes; our reader parses
     DataFileWriter's) is pinned in tests/test_codecs.py.
 
-    Scale shape: encode and decode are mapInPandas stages — payload
+    Scale shape: encode and decode are mapInArrow stages — payload
     bytes live and die inside one task; the shuffle after decode
     carries (lang, counters) only. One file per partition is exactly
     gzip-JSONL's parallelism story (op207): per-file work
@@ -1192,22 +1205,18 @@ def op252_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    manifest = (
-        docs.repartition(8)
-        .mapInPandas(_avro_write_parts(out_dir), "path string, n_rows long")
-        .collect()
-    )
+    manifest = map_partitions(
+        docs.repartition(8), _avro_write_parts(out_dir),
+        "path string, n_rows long", "_avro_write_parts",
+    ).collect()
     assert sum(r.n_rows for r in manifest) > 0
-    back = (
-        spark.read.format("binaryFile")
-        .load(out_dir)
-        .select("content")
-        .mapInPandas(
-            _avro_read_parts,
-            "lang string, doc_id long, quality long, n_chars long,"
-            " text_chars long, tok_sum long, attr_n2 long,"
-            " score_is_null boolean, score long",
-        )
+    back = map_rows(
+        spark.read.format("binaryFile").load(out_dir).select("content"),
+        _avro_read_parts,
+        "lang string, doc_id long, quality long, n_chars long,"
+        " text_chars long, tok_sum long, attr_n2 long,"
+        " score_is_null boolean, score long",
+        "_avro_read_parts",
     )
     return back.groupBy("lang").agg(
         F.count("*").cast("bigint").alias("n_docs"),
@@ -1265,64 +1274,39 @@ _OBS_AVRO_SCHEMA = {
 
 
 def _obs_avro_write(out_dir: str):
-    def write(it):
-        import pandas as pd
-        from pyspark import TaskContext
+    """op258's writer: each task's observations as one OCF file with
+    8-row blocks, the codec alternating per partition; an empty
+    partition writes no file, not an empty OCF."""
 
-        from ocdb_server_spark.sources.avro_ocf import write_ocf
-
+    def write(rows):
+        obs = [
+            {"dataset_id": ds, "field": field, "value": float(value)}
+            for ds, field, value in rows
+        ]
+        if not obs:
+            return []
         pid = TaskContext.get().partitionId()
-        rows = []
-        for pdf in it:
-            for r in pdf.to_dict("records"):
-                rows.append(
-                    {
-                        "dataset_id": r["dataset_id"],
-                        "field": r["field"],
-                        "value": float(r["value"]),
-                    }
-                )
-        if not rows:  # empty partition: no file, not an empty OCF
-            return
         codec = "deflate" if pid % 2 else "null"
         path = os.path.join(out_dir, f"obs-{pid:05d}.avro")
-        # PID-discriminated tmp name: a speculative/zombie first
-        # attempt writing the same partition must not interleave
-        # bytes with the retry's stream (same pattern as the BGZF
-        # and fixture writers); last os.replace wins atomically.
-        tmp = f"{path}.{os.getpid()}.tmp"
-        with open(tmp, "wb") as f:
-            f.write(write_ocf(_OBS_AVRO_SCHEMA, rows, codec=codec,
-                              rows_per_block=8))
-        os.replace(tmp, path)
-        yield pd.DataFrame({"path": [path], "n_rows": [len(rows)]})
+        _publish(path, lambda f: f.write(_avro_kernel.write_ocf(
+            _OBS_AVRO_SCHEMA, obs, codec=codec, rows_per_block=8)))
+        return [(path, len(obs))]
 
     return write
 
 
-def _obs_avro_read(it):
-    import pandas as pd
-
-    from ocdb_server_spark.sources.avro_ocf import read_ocf
-
-    for pdf in it:
-        for content in pdf["content"]:
-            rows = read_ocf(bytes(content))
-            if rows:
-                yield pd.DataFrame(
-                    {
-                        "dataset_id": [r["dataset_id"] for r in rows],
-                        "field": [r["field"] for r in rows],
-                        "value": [r["value"] for r in rows],
-                    }
-                )
+def _obs_avro_read(content: bytes) -> list[tuple]:
+    return [
+        (r["dataset_id"], r["field"], r["value"])
+        for r in _avro_kernel.read_ocf(content)
+    ]
 
 
 @register(
     "op258_avro_records_sink",
     oracle=_OP258_SQL,
-    deps=(_obs_avro_write, _obs_avro_read, seabass_fixture_corpus,
-          _avro_kernel, _seabass_kernel),
+    deps=(_obs_avro_write, _obs_avro_read, _publish, _arrow_rows,
+          seabass_fixture_corpus, _avro_kernel, _seabass_kernel),
 )
 def op258_avro_records_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OCF Avro SINK pairing for the open-schema records table — the
@@ -1342,7 +1326,7 @@ def op258_avro_records_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     force multi-block files (every fixture dataset exceeds one block) so block framing is exercised, not just
     one-block containers.
 
-    Scale shape: op252's exactly — encode and decode are mapInPandas
+    Scale shape: op252's exactly — encode and decode are mapInArrow
     stages, payload bytes live and die inside one task, the shuffle
     after decode carries the (dataset_id, field) aggregate only; the
     partitionBy-style repartition on dataset_id bounds each OCF file's
@@ -1352,19 +1336,15 @@ def op258_avro_records_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out_dir = scratch_dir("avro_records", sf_dir)
     long_tbl = seabass_fixture_corpus(spark)
-    manifest = (
-        long_tbl.repartition(3, F.col("dataset_id"))
-        .mapInPandas(_obs_avro_write(out_dir), "path string, n_rows long")
-        .collect()
-    )
+    manifest = map_partitions(
+        long_tbl.repartition(3, F.col("dataset_id")), _obs_avro_write(out_dir),
+        "path string, n_rows long", "_obs_avro_write",
+    ).collect()
     assert sum(r.n_rows for r in manifest) > 0
-    back = (
-        spark.read.format("binaryFile")
-        .load(out_dir)
-        .select("content")
-        .mapInPandas(
-            _obs_avro_read, "dataset_id string, field string, value double"
-        )
+    back = map_rows(
+        spark.read.format("binaryFile").load(out_dir).select("content"),
+        _obs_avro_read, "dataset_id string, field string, value double",
+        "_obs_avro_read",
     )
     return back.groupBy("dataset_id", "field").agg(
         F.count("*").cast("bigint").alias("n_obs"),
@@ -1372,269 +1352,3 @@ def op258_avro_records_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("sum_q"),
     )
-
-
-# ---------------------------------------------------------------------------
-# op261: seekable-zstd splittable ingest (op260's story for zstd)
-# ---------------------------------------------------------------------------
-
-_OP261_SQL = """
-SELECT lang,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(doc_id) AS BIGINT) AS sum_doc_id,
-       CAST(SUM(LENGTH(text)) AS BIGINT) AS sum_text_chars,
-       CAST(SUM(n_chars) AS BIGINT) AS sum_n_chars
-FROM documents
-GROUP BY lang
-"""
-
-
-def _write_docs_zstd_file(path: str, it) -> int:
-    """ONE writer kernel for the single-file demo AND the parallel
-    exporter (op260's _write_docs_bgzf_file rule: record
-    serialization — field set + sort_keys — and the tmp + os.replace
-    atomic-publish protocol live in exactly one place): stream the
-    pandas batches as JSONL through iter_seekable_zstd into `path`,
-    append the seek-table skippable frame, return the frame count.
-    An empty partition writes a valid 0-frame file (bare seek table)
-    that read_seek_table accepts as an empty manifest."""
-    import json
-    import os
-
-    from ocdb_server_spark.sources.zstd_seekable import (
-        iter_seekable_zstd,
-        seek_table_frame,
-    )
-
-    def lines():
-        for pdf in it:
-            for r in pdf.to_dict("records"):
-                yield json.dumps(
-                    {
-                        "doc_id": int(r["doc_id"]),
-                        "text": r["text"],
-                        "lang": r["lang"],
-                        "n_chars": int(r["n_chars"]),
-                    },
-                    sort_keys=True,
-                )
-
-    sizes = []
-    tmp = f"{path}.{os.getpid()}.tmp"
-    with open(tmp, "wb") as f:
-        for frame, usize in iter_seekable_zstd(lines()):
-            f.write(frame)
-            sizes.append((len(frame), usize))
-        f.write(seek_table_frame(sizes))
-    os.replace(tmp, path)
-    return len(sizes)
-
-
-def _zstd_write_docs(path: str):
-    """Single-file writer task over _write_docs_zstd_file; yields
-    (path, n_frames)."""
-
-    def write(it):
-        import pandas as pd
-
-        n = _write_docs_zstd_file(path, it)
-        yield pd.DataFrame({"path": [path], "n_frames": [n]})
-
-    return write
-
-
-def _zstd_write_docs_part(out_dir: str):
-    """Per-PARTITION variant (op260's bgzf_export_docs_parallel
-    shape): each task streams ITS partition through the same kernel
-    into its own seekable-zstd file named by TaskContext partition
-    id. N tasks write N files concurrently; the same seek-table
-    manifest split-read consumes the whole corpus across files."""
-
-    def write(it):
-        import os
-
-        import pandas as pd
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        path = os.path.join(out_dir, f"part-{pid:05d}.jsonl.zst")
-        n = _write_docs_zstd_file(path, it)
-        yield pd.DataFrame({"path": [path], "n_frames": [n]})
-
-    return write
-
-
-def zstd_export_docs_parallel(
-    spark: SparkSession, sf_dir: str, out_dir: str, partitions: int = 8
-) -> list[str]:
-    """Export the documents table as `partitions` seekable-zstd files
-    in parallel and return their paths (write forced). The read side
-    is file-count-agnostic: _zstd_manifest seek-tables every file, so
-    the same split-read plan consumes 1 or N files — op260's
-    production writer story, same economics (BASELINE.md measured the
-    BGZF variant at −88% writer wall at 100× corpus; this writer is
-    the identical shape over the zstd kernel)."""
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)  # tasks die opaquely otherwise
-    d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang", "n_chars"
-    )
-    manifest = (
-        d.repartition(partitions)
-        .mapInPandas(_zstd_write_docs_part(out_dir), "path string, n_frames long")
-        .collect()
-    )
-    # every task yields exactly one row; an empty partition still
-    # writes a valid 0-frame seek-table file the manifest accepts
-    assert len(manifest) == partitions
-    return sorted(r.path for r in manifest)
-
-
-def _zstd_manifest(it):
-    import pandas as pd
-
-    from ocdb_server_spark.sources.zstd_seekable import read_seek_table
-
-    for pdf in it:
-        for p in pdf["path"]:
-            blocks = read_seek_table(p)
-            yield pd.DataFrame(
-                {
-                    "path": [p] * len(blocks),
-                    "offset": [b[0] for b in blocks],
-                    "csize": [b[1] for b in blocks],
-                    "usize": [b[2] for b in blocks],
-                }
-            )
-
-
-def _zstd_decode(it):
-    import json
-
-    import pandas as pd
-
-    from ocdb_server_spark.sources.zstd_seekable import read_frame
-
-    for pdf in it:
-        for p, o, c, u in zip(
-            pdf["path"], pdf["offset"], pdf["csize"], pdf["usize"]
-        ):
-            recs = [
-                json.loads(x)
-                for x in read_frame(p, int(o), int(c), int(u))
-                .decode("utf-8")
-                .splitlines()
-            ]
-            if recs:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": [r["doc_id"] for r in recs],
-                        "text": [r["text"] for r in recs],
-                        "lang": [r["lang"] for r in recs],
-                        "n_chars": [r["n_chars"] for r in recs],
-                    }
-                )
-
-
-def zstd_read_lang_agg(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """File-count-agnostic seekable-zstd split-read (op260's
-    bgzf_read_lang_agg shape): one seek-table read per file fans the
-    frame manifest out; each task range-reads and decompresses its
-    own frames; payload bytes never shuffle."""
-    blocks = spark.createDataFrame(
-        [(p,) for p in paths], "path string"
-    ).mapInPandas(
-        _zstd_manifest, "path string, offset long, csize long, usize long"
-    )
-    back = blocks.repartition(8).mapInPandas(
-        _zstd_decode, "doc_id long, text string, lang string, n_chars long"
-    )
-    return back.groupBy("lang").agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.sum("doc_id").cast("bigint").alias("sum_doc_id"),
-        F.sum(F.length("text")).cast("bigint").alias("sum_text_chars"),
-        F.sum("n_chars").cast("bigint").alias("sum_n_chars"),
-    )
-
-
-def zstd_single_file_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The single-FILE seekable-zstd demo (op261's original registered
-    shape, kept as a test fixture per the round-10 verdict item 3):
-    ONE coalesce(1) task streams the corpus into one archive, then the
-    split-read fans ITS frames across >1 task — the proof that a
-    single seekable-zstd file is splittable. Not the production write
-    path (that's op261's registered zstd_export_docs_parallel plan);
-    pinned in tests/test_zstd_seekable.py."""
-    import os
-
-    from ocdb_server_spark.scratch import scratch_dir
-
-    path = os.path.join(
-        scratch_dir("zstd_jsonl", sf_dir), "documents.jsonl.zst"
-    )
-    d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang", "n_chars"
-    )
-    manifest = (
-        d.coalesce(1)
-        .mapInPandas(_zstd_write_docs(path), "path string, n_frames long")
-        .collect()
-    )
-    assert len(manifest) == 1 and manifest[0].n_frames > 1
-    return zstd_read_lang_agg(spark, [path])
-
-
-@register(
-    "op261_zstd_seekable_ingest",
-    oracle=_OP261_SQL,
-    deps=(_write_docs_zstd_file, _zstd_write_docs_part,
-          zstd_export_docs_parallel, _zstd_manifest, _zstd_decode,
-          zstd_read_lang_agg, _zstd_kernel, _linebatch_kernel),
-)
-def op261_zstd_seekable_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPLITTABLE ZSTD — op260's BGZF story for the codec large
-    corpora actually ship (round-9 verdict item 4): the documents
-    table exported as seekable-zstd (sources/zstd_seekable.py —
-    standard zstd frames + the public seekable format's seek-table
-    skippable frame), then split-read.
-
-    WRITE (round-10 verdict item 3 — the parallel writer IS the
-    registered plan): zstd_export_docs_parallel fans the corpus over
-    8 concurrent tasks, each streaming ITS partition through
-    iter_seekable_zstd (one ≤48 KiB batch in memory, frames flushed
-    at record boundaries — a split can never tear a record) into its
-    own archive + seek table. Measured −79% writer wall at 100×
-    corpus vs the single-task form (BASELINE.md round 10); the
-    single-file demo survives as zstd_single_file_demo, certified
-    equal in tests/test_zstd_seekable.py.
-
-    READ — same three-stage, all-executor split path as op260, with
-    BETTER metadata economics: (1) the manifest costs ONE 9-byte
-    footer read + one table read per file (read_seek_table) — op260's
-    BGZF walk pays a header hop per 64 KiB member, the seek table is
-    a single parquet-footer-style read regardless of frame count;
-    (2) manifest ROWS (never payload bytes) shuffle to a
-    repartition(8) fan-out; (3) each task range-reads and one-shot
-    decompresses its frames with libzstd, output size verified
-    against the table. The read is file-count-agnostic: the same plan
-    consumes 1 or N archives. At 100 TB the table is ~8 bytes/frame
-    and the frame reads fan out to maxPartitionBytes-sized task
-    groups.
-
-    COMPATIBLE: skippable frames are core zstd (RFC 8878 §3.1.2) —
-    every file is a valid multi-frame zstd stream any stock decoder
-    reads end-to-end, table silently skipped (pinned against
-    pyarrow's libzstd one-shot decoder in tests/test_zstd_seekable.py,
-    the same interop discipline as test_bgzf's stdlib-gzip pin).
-
-    The per-lang aggregate over the re-read frames hash-matching the
-    original-parquet oracle certifies JSON→zstd→seek-table-split→
-    decompress loses nothing; zstd_export_docs_parallel's manifest
-    collect() forces the write before the read plan is returned
-    (op252's rule)."""
-    from ocdb_server_spark.scratch import scratch_dir
-
-    out_dir = scratch_dir("zstd_jsonl_par", sf_dir)
-    paths = zstd_export_docs_parallel(spark, sf_dir, out_dir, partitions=8)
-    return zstd_read_lang_agg(spark, paths)

@@ -1025,7 +1025,8 @@ def op82_multimodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal columns: text + vector + label in one frame
     (documents ⋈ embeddings on doc_id = vec_id), per-cluster stats.
     The pattern that carries image/audio binary columns too — opaque
-    payload travels beside typed metadata (see sources/multimodal.py)."""
+    payload travels beside typed metadata (see
+    operators/multimodal_codecs.py)."""
     t = load_tables(spark, sf_dir, ("documents", "embeddings"))
     j = t["documents"].join(
         t["embeddings"], F.col("doc_id") == F.col("vec_id"), "inner"

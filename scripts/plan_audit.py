@@ -200,13 +200,12 @@ def main() -> None:
     print()
     print("## Eager-side shapes (not visible in the returned plan)")
     print()
-    print("- **op261_zstd_seekable_ingest** (round-11): the registered")
-    print("  entry first runs zstd_export_docs_parallel — repartition(8)")
-    print("  + mapInPandas, i.e. **8 concurrent seekable-zstd write")
-    print("  tasks** — as an eager action, then returns the read plan")
-    print("  the table row describes (manifest fan-out, payload bytes")
-    print("  never shuffle). Write-side parallelism is pinned by")
-    print("  tests/test_zstd_seekable.py::")
+    print("- **op261_zstd_seekable_ingest**: the registered entry first")
+    print("  runs export_docs_archive — repartition(8) + mapInArrow, i.e.")
+    print("  **8 concurrent seekable-zstd write tasks** — as an eager")
+    print("  action, then returns the read plan the table row describes")
+    print("  (manifest fan-out, payload bytes never shuffle). Write-side")
+    print("  parallelism is pinned by tests/test_zstd_seekable.py::")
     print("  test_op261_registered_plan_writes_parallel (>=4 files).")
     print()
     print("- **op265_stream_cdc_apply_changes** (round-13): the table")

@@ -124,27 +124,28 @@ def test_op260_splits_across_tasks_and_matches_table(spark, sf_dir):
     mine = os.path.join(
         tempfile.gettempdir(), f"ocdb_spark_bgzf_jsonl_{tag}_{os.getpid()}"
     )
-    files = glob.glob(f"{mine}/documents.jsonl.gz")
+    files = glob.glob(f"{mine}/part-00000.jsonl.gz")
     assert files, "scratch BGZF file missing"
     assert len(walk_blocks(files[0])) > 1
 
 
 def test_parallel_writer_multi_file_roundtrip(spark, sf_dir, tmp_path):
-    """The PARALLEL writer shape (round-8 verdict item 3): N tasks
-    write N member-blocked BGZF files through the same
-    iter_bgzf_members kernel, every file is independently a valid
-    stock gzip + BGZF stream, and the SAME walk_blocks-manifest
-    split-read consumes the multi-file corpus to the identical
-    per-lang aggregate as op260's single-file demo (and as the
-    parquet truth it is certified against)."""
+    """The PARALLEL writer shape: N tasks write N member-blocked BGZF
+    files through the same iter_bgzf_members kernel, every file is
+    independently a valid stock gzip + BGZF stream, and the SAME
+    walk_blocks-manifest split-read consumes the multi-file corpus to
+    the identical per-lang aggregate as op260's single file (and as
+    the parquet truth it is certified against)."""
     from ocdb_server_spark.operators.scans import (
-        bgzf_export_docs_parallel,
-        bgzf_read_lang_agg,
+        BgzfArchive,
+        export_docs_archive,
         op260_bgzf_splittable_gzip,
+        read_archive_lang_agg,
     )
 
     parts = 4
-    paths = bgzf_export_docs_parallel(spark, sf_dir, str(tmp_path), parts)
+    paths = [p for p, _ in export_docs_archive(
+        spark, sf_dir, str(tmp_path), BgzfArchive, parts)]
     assert len(paths) == parts and len(set(paths)) == parts
     total_members = 0
     for p in paths:
@@ -156,7 +157,7 @@ def test_parallel_writer_multi_file_roundtrip(spark, sf_dir, tmp_path):
 
     multi = {
         r.lang: (r.n_docs, r.sum_doc_id, r.sum_text_chars, r.sum_n_chars)
-        for r in bgzf_read_lang_agg(spark, paths).collect()
+        for r in read_archive_lang_agg(spark, paths, BgzfArchive).collect()
     }
     single = {
         r.lang: (r.n_docs, r.sum_doc_id, r.sum_text_chars, r.sum_n_chars)
@@ -168,16 +169,17 @@ def test_parallel_writer_multi_file_roundtrip(spark, sf_dir, tmp_path):
 def test_parallel_writer_empty_partitions_write_valid_eof_files(
     spark, tmp_path
 ):
-    """bgzf_export_docs_parallel's `len(manifest) == partitions`
-    contract rests on mapInPandas invoking the kernel for EMPTY
-    partitions too — pin it with a 3-row corpus fanned to 8 tasks:
+    """export_docs_archive's `len(manifest) == partitions` contract
+    rests on mapInArrow invoking the writer for EMPTY partitions
+    too — pin it with a 3-row corpus fanned to 8 tasks:
     every task yields a manifest row, empty partitions write a valid
     EOF-marker-only file (stdlib-gzip readable, walk_blocks → no
     blocks), and the split-read over the mixed file set still
     reassembles the corpus exactly."""
     from ocdb_server_spark.operators.scans import (
-        bgzf_export_docs_parallel,
-        bgzf_read_lang_agg,
+        BgzfArchive,
+        export_docs_archive,
+        read_archive_lang_agg,
     )
 
     sf = str(tmp_path / "sf")
@@ -187,7 +189,8 @@ def test_parallel_writer_empty_partitions_write_valid_eof_files(
         "doc_id long, text string, lang string, n_chars long",
     ).write.parquet(f"{sf}/documents.parquet")
     out = tmp_path / "out"
-    paths = bgzf_export_docs_parallel(spark, sf, str(out), 8)
+    paths = [p for p, _ in export_docs_archive(
+        spark, sf, str(out), BgzfArchive, 8)]
     assert len(paths) == 8
     n_empty = 0
     for p in paths:
@@ -198,7 +201,7 @@ def test_parallel_writer_empty_partitions_write_valid_eof_files(
     assert n_empty >= 5  # 3 rows cannot fill 8 partitions
     got = {
         r.lang: (r.n_docs, r.sum_doc_id)
-        for r in bgzf_read_lang_agg(spark, paths).collect()
+        for r in read_archive_lang_agg(spark, paths, BgzfArchive).collect()
     }
     assert got == {"en": (2, 4), "fr": (1, 2)}
 

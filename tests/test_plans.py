@@ -677,6 +677,49 @@ def test_codec_ops_payload_never_shuffles(spark, sf_dir):
             assert names[nodes[gen][1]] == "MapInArrow", f"{name}:\n{plan}"
 
 
+@pytest.mark.parametrize(
+    "name",
+    [
+        "op260_bgzf_splittable_gzip",
+        "op261_zstd_seekable_ingest",
+        "op252_avro_roundtrip",
+        "op258_avro_records_sink",
+    ],
+)
+def test_archive_ops_payload_never_shuffles(spark, sf_dir, name):
+    """The archive read paths decode payload bytes in the task that
+    reads them. op260/op261: manifest stage -> repartition(8) ->
+    decode stage, so the ONLY exchange below the decode carries
+    manifest rows (path, offset, sizes). op252/op258: the decode
+    stage sits directly on the binaryFile scan with no exchange below
+    it. Either way only decoded rows reach the aggregate's shuffle."""
+    plan = _plan(OPS[name].fn(spark, sf_dir))
+    nodes = _plan_tree(plan)
+    names = [n for n, _p in nodes]
+    assert "MapInPandas" not in names, f"{name}:\n{plan}"
+    decode = min(i for i, n in enumerate(names) if n == "MapInArrow")
+    below = []
+    todo = [decode]
+    while todo:
+        parent = todo.pop()
+        kids = [i for i, (_n, p) in enumerate(nodes) if p == parent]
+        below += kids
+        todo += kids
+    exchanges = [i for i in below if names[i].endswith("Exchange")]
+    children = [i for i, (_n, p) in enumerate(nodes) if p == decode]
+    if name.startswith(("op260", "op261")):
+        assert len(exchanges) == 1, f"{name}:\n{plan}"
+        assert children == exchanges, f"{name}: decode must sit on the exchange"
+        manifest = [i for i, (_n, p) in enumerate(nodes) if p == exchanges[0]]
+        assert [names[i] for i in manifest] == ["MapInArrow"], f"{name}:\n{plan}"
+        assert names.count("MapInArrow") == 2, f"{name}:\n{plan}"
+    else:
+        assert exchanges == [], f"{name}:\n{plan}"
+        assert [names[i] for i in children] == ["FileScan"], f"{name}:\n{plan}"
+        assert "Format: BINARYFILE" in plan, plan
+        assert names.count("MapInArrow") == 1, f"{name}:\n{plan}"
+
+
 def test_gram_matrix_partials_before_exchange(spark, sf_dir):
     """op211: the mapInPandas partial must sit BELOW the (i,j)
     exchange — the shuffle carries d(d+1)/2 partial rows per

@@ -137,26 +137,37 @@ def test_any_truncation_point_raises_valueerror(tmp_path):
             read_seek_table(path)
 
 
-def test_op261_splits_across_tasks_and_matches_table(spark, sf_dir):
-    """The round-9 verdict's done-criterion, now pinned on the
-    single-file DEMO shape (round-10 item 3 moved the registered op261
-    to the parallel writer): a >1-partition read of ONE file (multiple
-    manifest frames fanning out), and the per-lang aggregate equals
-    the same aggregate straight off parquet."""
+def _lang_agg(df):
+    return {
+        r.lang: (r.n_docs, r.sum_doc_id, r.sum_text_chars, r.sum_n_chars)
+        for r in df.collect()
+    }
+
+
+def _single_file(spark, sf_dir, out_dir):
+    """The single-file shape: the exporter over one partition, one
+    archive, read back through the split-read; (path, aggregate)."""
+    from ocdb_server_spark.operators.scans import (
+        ZstdArchive,
+        export_docs_archive,
+        read_archive_lang_agg,
+    )
+
+    [(path, _)] = export_docs_archive(spark, sf_dir, out_dir, ZstdArchive, 1)
+    return path, _lang_agg(read_archive_lang_agg(spark, [path], ZstdArchive))
+
+
+def test_op261_splits_across_tasks_and_matches_table(spark, sf_dir, tmp_path):
+    """op261's codec on ONE file is splittable: its manifest has >1 frame
+    for the repartition(8) read to fan out, and the per-lang aggregate
+    equals the same aggregate straight off parquet."""
     from pyspark.sql import functions as F
 
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.scans import (
-        zstd_single_file_demo,
-    )
-    from ocdb_server_spark.scratch import scratch_path
 
-    out = zstd_single_file_demo(spark, sf_dir)
-    got = {r.lang: (r.n_docs, r.sum_doc_id, r.sum_text_chars, r.sum_n_chars)
-           for r in out.collect()}
-    exp = {
-        r.lang: (r.n_docs, r.sum_doc_id, r.sum_text_chars, r.sum_n_chars)
-        for r in load_table(spark, sf_dir, "documents")
+    path, got = _single_file(spark, sf_dir, str(tmp_path))
+    exp = _lang_agg(
+        load_table(spark, sf_dir, "documents")
         .groupBy("lang")
         .agg(
             F.count("*").alias("n_docs"),
@@ -164,16 +175,12 @@ def test_op261_splits_across_tasks_and_matches_table(spark, sf_dir):
             F.sum(F.length("text")).alias("sum_text_chars"),
             F.sum("n_chars").alias("sum_n_chars"),
         )
-        .collect()
-    }
+    )
     assert got == exp and got
 
     # the single file really is split: >1 frame in the manifest, and
     # the stock end-to-end decode agrees with the frame-wise corpus
-    path = os.path.join(
-        scratch_path("zstd_jsonl", sf_dir), "documents.jsonl.zst"
-    )
-    assert os.path.exists(path), "scratch seekable-zstd file missing"
+    assert path.endswith("part-00000.jsonl.zst"), path
     blocks = read_seek_table(path)
     assert len(blocks) > 1, "single-file read must fan out to >1 frame"
     frame_wise = b"".join(
@@ -185,20 +192,20 @@ def test_op261_splits_across_tasks_and_matches_table(spark, sf_dir):
 
 
 def test_parallel_writer_multi_file_roundtrip(spark, sf_dir, tmp_path):
-    """The PARALLEL writer shape (op260's production story on the
-    zstd kernel): N tasks write N seekable-zstd files through the
-    same _write_docs_zstd_file kernel, every file is independently a
-    valid stock multi-frame zstd stream + seekable file, and the SAME
+    """The PARALLEL writer shape: N tasks write N seekable-zstd files
+    through the same writer, every file is independently a valid
+    stock multi-frame zstd stream + seekable file, and the SAME
     seek-table-manifest split-read consumes the multi-file corpus to
-    the identical per-lang aggregate as the single-file demo."""
+    the identical per-lang aggregate as the single file."""
     from ocdb_server_spark.operators.scans import (
-        zstd_export_docs_parallel,
-        zstd_read_lang_agg,
-        zstd_single_file_demo,
+        ZstdArchive,
+        export_docs_archive,
+        read_archive_lang_agg,
     )
 
     parts = 4
-    paths = zstd_export_docs_parallel(spark, sf_dir, str(tmp_path), parts)
+    paths = [p for p, _ in export_docs_archive(
+        spark, sf_dir, str(tmp_path / "multi"), ZstdArchive, parts)]
     assert len(paths) == parts and len(set(paths)) == parts
     total_frames = 0
     for p in paths:
@@ -210,55 +217,41 @@ def test_parallel_writer_multi_file_roundtrip(spark, sf_dir, tmp_path):
         assert _stock_decompress(whole, len(raw)) == raw
     assert total_frames >= parts  # real data spread across files
 
-    multi = {
-        r.lang: (r.n_docs, r.sum_doc_id, r.sum_text_chars, r.sum_n_chars)
-        for r in zstd_read_lang_agg(spark, paths).collect()
-    }
-    single = {
-        r.lang: (r.n_docs, r.sum_doc_id, r.sum_text_chars, r.sum_n_chars)
-        for r in zstd_single_file_demo(spark, sf_dir).collect()
-    }
+    multi = _lang_agg(read_archive_lang_agg(spark, paths, ZstdArchive))
+    _, single = _single_file(spark, sf_dir, str(tmp_path / "single"))
     assert multi == single and multi
 
 
-def test_op261_registered_plan_writes_parallel(spark, sf_dir):
-    """Round-10 verdict item 3's done-criterion: the REGISTERED op261
-    writes via the parallel exporter — ≥4 concurrent write tasks, one
-    seekable-zstd file each — and its per-lang aggregate still equals
-    the single-file demo's (same corpus, file-count-agnostic read)."""
-    from ocdb_server_spark.operators.scans import (
-        op261_zstd_seekable_ingest,
-        zstd_single_file_demo,
-    )
+def test_op261_registered_plan_writes_parallel(spark, sf_dir, tmp_path):
+    """The REGISTERED op261 writes via the parallel exporter — ≥4
+    concurrent write tasks, one seekable-zstd file each — and its
+    per-lang aggregate still equals the single file's (same corpus,
+    file-count-agnostic read)."""
+    from ocdb_server_spark.operators.scans import op261_zstd_seekable_ingest
     from ocdb_server_spark.scratch import scratch_path
 
-    reg = {
-        r.lang: (r.n_docs, r.sum_doc_id, r.sum_text_chars, r.sum_n_chars)
-        for r in op261_zstd_seekable_ingest(spark, sf_dir).collect()
-    }
+    reg = _lang_agg(op261_zstd_seekable_ingest(spark, sf_dir))
     out_dir = scratch_path("zstd_jsonl_par", sf_dir)
     files = sorted(
         f for f in os.listdir(out_dir) if f.endswith(".jsonl.zst")
     )
     assert len(files) >= 4, f"expected >=4 parallel write tasks: {files}"
-    demo = {
-        r.lang: (r.n_docs, r.sum_doc_id, r.sum_text_chars, r.sum_n_chars)
-        for r in zstd_single_file_demo(spark, sf_dir).collect()
-    }
-    assert reg == demo and reg
+    _, single = _single_file(spark, sf_dir, str(tmp_path))
+    assert reg == single and reg
 
 
 def test_parallel_writer_empty_partitions_write_valid_tables(
     spark, tmp_path
 ):
-    """zstd_export_docs_parallel's `len(manifest) == partitions`
-    contract: every task yields a manifest row, empty partitions write
-    a valid 0-frame file (bare seek table — read_seek_table returns an
-    empty manifest, a stock decoder reads it as 0 bytes), and the
+    """export_docs_archive's `len(manifest) == partitions` contract:
+    every task yields a manifest row, empty partitions write a valid
+    0-frame file (bare seek table — read_seek_table returns an empty
+    manifest, a stock decoder reads it as 0 bytes), and the
     split-read over the mixed file set reassembles the corpus."""
     from ocdb_server_spark.operators.scans import (
-        zstd_export_docs_parallel,
-        zstd_read_lang_agg,
+        ZstdArchive,
+        export_docs_archive,
+        read_archive_lang_agg,
     )
 
     sf = str(tmp_path / "sf")
@@ -268,7 +261,8 @@ def test_parallel_writer_empty_partitions_write_valid_tables(
         "doc_id long, text string, lang string, n_chars long",
     ).write.parquet(f"{sf}/documents.parquet")
     out = tmp_path / "out"
-    paths = zstd_export_docs_parallel(spark, sf, str(out), 8)
+    paths = [p for p, _ in export_docs_archive(
+        spark, sf, str(out), ZstdArchive, 8)]
     assert len(paths) == 8
     n_empty = 0
     for p in paths:
@@ -281,7 +275,7 @@ def test_parallel_writer_empty_partitions_write_valid_tables(
     assert n_empty >= 5  # 3 rows cannot fill 8 partitions
     got = {
         r.lang: (r.n_docs, r.sum_doc_id)
-        for r in zstd_read_lang_agg(spark, paths).collect()
+        for r in read_archive_lang_agg(spark, paths, ZstdArchive).collect()
     }
     assert got == {"en": (2, 4), "fr": (1, 2)}
 
