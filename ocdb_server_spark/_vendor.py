@@ -1,9 +1,9 @@
 """Fallback wiring for the vendored pure-Python protobuf runtime.
 
-This container ships no `protobuf` wheel and has no network (install
-attempts documented in BASELINE.md "Round 6"), but PySpark 4.1.2's
-`transformWithStateInPandas` needs `google.protobuf` for its
-state-server wire protocol. `vendor/google/protobuf` is the BSD-3
+PySpark 4.1's `transformWithState` (like `transformWithStateInPandas`)
+needs `google.protobuf` for its state-server wire protocol, and the
+image this project runs in ships no `protobuf` wheel (BASELINE.md
+"Round 6"). `vendor/google/protobuf` is the BSD-3
 pure-Python 4.23.2 runtime bundled with the locally installed Google
 Cloud SDK, with its import prefix restored and a `runtime_version`
 shim (see vendor/google/protobuf/runtime_version.py for the
@@ -59,9 +59,9 @@ def add_worker_path(entry: str) -> None:
     SparkSession first, then imports __spark_entry__) has already
     captured its env, but Python workers and the TWS state server take
     their env from `sc.environment` at worker LAUNCH, which is mutable
-    post-hoc. Verified end-to-end: setting it makes
-    transformWithStateInPandas work in a session that existed before
-    the vendor path did."""
+    post-hoc. Setting it makes transformWithState work in a session
+    that existed before the vendor path did: op206 runs in a bare
+    session built before this package was imported."""
     pp = os.environ.get("PYTHONPATH", "")
     if entry in pp.split(os.pathsep):
         return

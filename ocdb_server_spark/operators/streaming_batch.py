@@ -6,9 +6,10 @@ Mongo queries); streaming is a north-star addition. Per SURVEY.md
 §2.9's implementation rule, the `queries()` entry computes the
 batch-equivalent DataFrame (so the DuckDB oracle applies); the same
 logic executed as a real Structured Streaming query (readStream +
-availableNow trigger + memory sink) lives in
-`ocdb_server_spark.streaming.jobs` and is exercised by
-`tests/test_streaming.py`.
+availableNow trigger + memory sink) lives in `tests/test_streaming.py`,
+which checks it against the batch op. op206, op208, op218, op219,
+op226 and op234 instead run their real streaming query
+(`ocdb_server_spark.streaming.jobs`) and return its result.
 
 Scale notes: tumbling/sliding windows are pure groupBy shuffles on
 (window, key); session windows and dedup are stateful — state is
@@ -75,8 +76,8 @@ def op69_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain timestamp — measured ~15% faster at sf0.1 with a bit-identical
     result (tests/test_streaming.py pins the equivalence). The true
     streaming surface (readStream + watermark over `window()`) is
-    exercised by streaming/jobs.py; op70 keeps the sliding-window
-    `window()` expression."""
+    exercised by tests/test_streaming.py's stream_tumbling; op70 keeps
+    the sliding-window `window()` expression."""
     ev = _events(spark, sf_dir)
     return ev.groupBy(
         F.date_trunc("hour", "ts").alias("window_start"), "event_type"
@@ -195,8 +196,9 @@ def op73_stream_dedup_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("op74_stream_foreach_batch_upsert", oracle=None)  # ROWS
 def op74_stream_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyed upsert end-state: latest value per user (the foreachBatch
-    merge sink's final table; streamed for real in tests). Batch
-    equivalent: row_number over arrival order desc = 1."""
+    merge sink's final table; streamed for real by
+    tests/test_streaming.py's stream_upsert_state). Batch equivalent:
+    row_number over arrival order desc = 1."""
     ev = _events(spark, sf_dir)
     w = W.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
     return (
@@ -315,11 +317,11 @@ def op146_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def op206_stream_tws_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FIRST hash-certified arbitrary-state streaming op: unlike
     op69-op74 (whose queries() entries are batch-equivalents, per the
-    §2.9 convention), this entry RUNS the real Spark-4
-    transformWithStateInPandas pipeline — RocksDB state store,
+    §2.9 convention), this entry RUNS the real Spark 4.1
+    transformWithState pipeline (Row API) — RocksDB state store,
     schema'd value state, Update-mode emissions, availableNow trigger
-    (streaming/jobs.stream_tws_user_stats; enabled in this container
-    by the vendored-protobuf fallback, _vendor.py) — and its final
+    (streaming/jobs.stream_tws_user_stats; runs without an installed
+    protobuf through the vendored fallback, _vendor.py) — and its final
     per-user (n_events, sum_q, max_q) hash-matches the plain SQL
     aggregate. That works because the state transition is
     order-insensitive integer algebra: value is quantized JVM-side
@@ -355,7 +357,7 @@ def op208_stream_centroid_maintenance(spark: SparkSession, sf_dir: str) -> DataF
     """Streaming centroid maintenance, hash-certified (§7.5's deferred
     design, unblocked by the vendored protobuf): embedding vectors
     arrive as a stream, explode JVM-side to quantized (label, dim, q)
-    rows, and a transformWithStateInPandas processor keyed by the
+    rows, and a transformWithState processor keyed by the
     COMPOSITE (label, dim) key maintains exact integer (n, sum_q)
     accumulators — the incremental twin of op145's batch centroids
     (centroid component = sum_q/n/1e6 downstream, kept integral here
@@ -386,8 +388,8 @@ def op208_stream_centroid_maintenance(spark: SparkSession, sf_dir: str) -> DataF
     """,
 )
 def op218_stream_tws_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming per-user TOP-3 via transformWithStateInPandas LIST
-    STATE — the third TWS state primitive run for real (ValueState:
+    """Streaming per-user TOP-3 via transformWithState LIST STATE —
+    the third TWS state primitive run for real (ValueState:
     op206; composite-key ValueState: op208), hash-certified against
     the batch window top-k because the kept list is a pure function
     of the input set: (q, event_id) is unique, the order

@@ -47,7 +47,7 @@ def get_spark(
     if profile not in ("batch", "interactive"):
         raise ValueError(f"unknown profile {profile!r}")
     # Vendored-protobuf fallback must be wired BEFORE the session
-    # exists: transformWithStateInPandas' state server runs in Python
+    # exists: transformWithState's state server runs in Python
     # WORKERS, which inherit $PYTHONPATH at daemon launch (_vendor.py).
     # Workers also import this package (the daemon below, and every
     # module-level kernel) whatever the driver's working directory.

@@ -12,8 +12,8 @@ footprint, not the table size.
 
 PARTITION-IMMUTABILITY CONTRACT (round-12 review): the pruned merge is
 only correct when a key's partition value never changes — derive
-partition_col from the key (a hash bucket, as streaming/jobs.py's
-upsert store does) or from an immutable attribute. If an update moved
+partition_col from the key (a hash bucket, as the streaming upsert
+store in tests/test_streaming.py does) or from an immutable attribute. If an update moved
 key K from partition A to B, A is never read, so K's stale copy in A
 would survive beside the new one. Callers whose partition CAN move
 must pass immutable_partitions=False, which merges against the whole

@@ -1,14 +1,19 @@
-"""Structured Streaming jobs for SURVEY.md §2.9 (op69–op74).
+"""Structured Streaming jobs: the registered ops that run a real stream.
 
-The batch-equivalent DataFrames live in
-``operators/streaming_batch.py`` (those are what the DuckDB oracle
-checks); this module runs the SAME logic as real streaming queries —
-``readStream`` file source → transformation → memory sink, driven to
-completion with ``Trigger.AvailableNow`` — so tests can assert that
-streaming execution matches batch. Several registered ops (the stream
-joins, the transformWithState ops, the exactly-once sink and the
-streaming CDC apply) run their streaming query here and return its
-result.
+The stream joins (op127, op146), the transformWithState ops (op206,
+op208, op218, op219, op226), the exactly-once sink (op234) and the
+streaming CDC apply (op265) run their streaming query here —
+``readStream`` file source → transformation → sink, driven to
+completion with ``Trigger.AvailableNow`` — and return its result.
+op69–op74 register batch-equivalent DataFrames
+(``operators/streaming_batch.py``); their streaming twins live in
+``tests/test_streaming.py``, which checks each against its batch op.
+
+Shared pieces: one file-stream source (``_stream_source``), one
+memory-sink run (``_run_to_memory``), one transformWithState stage on
+the Row API (``_tws_run``) with one last-emission cut
+(``_final_emission``), and one manifest commit log for the
+foreachBatch sinks (``_CommitLog``).
 
 Scale notes: file-source streaming here stands in for Kafka; the
 operator graphs are identical. Watermarks bound all state (window and
@@ -17,18 +22,21 @@ dedup state eviction), which is the requirement for unbounded input.
 
 from __future__ import annotations
 
+import json
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Row, SparkSession, Window as W, functions as F
+from pyspark.sql.streaming.stateful_processor import (
+    StatefulProcessor,
+    StatefulProcessorHandle,
+)
 
 from ocdb_server_spark.io import table_path
 
-# Single-fold contract constants (round-10 review): the op226 session
-# gap + watermark delay and the value-quantization expression are
-# certified on BOTH engines — operators/streaming_batch.py's oracle
-# SQL interpolates THESE same constants (the op96/op221 one-template
-# lesson applied here; never re-encode them by hand in an oracle).
+# Constants certified on both engines: operators/streaming_batch.py's
+# oracle SQL interpolates these same values, so an oracle never
+# re-encodes them by hand.
 SESS_GAP_MS = 1_800_000   # 30-minute inactivity gap (op226)
 SESS_WM_DELAY_MS = 1_000  # op226's watermark delay
 SQL_QUANT_VALUE = "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)"
@@ -43,25 +51,16 @@ def _stream_source(spark: SparkSession, sf_dir: str, name: str):
     production/stress layout makes `<name>.parquet` a DIRECTORY of
     part-files, which the source reads directly. The glob branch must
     never be used for the directory layout: pathGlobFilter matches
-    LEAF file names, so it matches nothing there and the stream
-    silently processes 0 rows (round-17 finding — every TWS op "ran
-    clean" on the 30× stress dataset while streaming an empty source;
-    op234's no-batches guard was the one that surfaced it, and the
-    embeddings stream in stream_centroid_maintenance had the same
-    bug). Result-neutral for the certified gate layout: single-file
-    dirs take the exact branch the code always had.
+    LEAF file names, so it would match nothing there and the stream
+    would silently process 0 rows.
 
-    The layout probe goes through the HADOOP FileSystem API, never
-    os.path.isdir (round-17 ADVICE medium): a remote or
-    scheme-qualified sf_dir (hdfs://, s3a://, even file:) is
-    invisible to the LOCAL filesystem probe, so isdir returned False
-    for every remote directory-layout table and the glob branch —
-    whose filter matches no leaf files there — silently streamed 0
-    rows, the exact bug this helper exists to close. Same probe
-    pattern as the op190 store-existence check (jobs.py round-12
-    ADVICE, further down this file). The getFileStatus call cannot
-    raise FileNotFoundException in practice: the batch schema probe
-    on the line above already failed loudly if the table is absent."""
+    The layout probe goes through the Hadoop FileSystem API, never
+    os.path.isdir: a remote or scheme-qualified sf_dir (hdfs://,
+    s3a://, even file:) is invisible to a local filesystem probe,
+    which would send every remote directory-layout table down the glob
+    branch. The getFileStatus call cannot raise FileNotFoundException
+    in practice: the batch schema probe on the line above already
+    failed loudly if the table is absent."""
     path = table_path(sf_dir, name)
     schema = spark.read.parquet(path).schema
     sc = spark.sparkContext
@@ -77,13 +76,12 @@ def _stream_source(spark: SparkSession, sf_dir: str, name: str):
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Route the conf side effects through load_table (nanosAsLong —
-    # without which the legacy layout CRASHES the schema probe — plus
-    # the scoped UTC pin and bare-session tuning): a raw read here
-    # meant a session whose FIRST op was streaming missed the batch
-    # path's defensive confs entirely (round-13 review). The returned
-    # frame is discarded; the stream source needs the RAW file schema,
-    # which load_table's normalization would have rewritten.
+    # load_table applies the session confs the events read needs
+    # (nanosAsLong, without which the legacy layout crashes the schema
+    # probe, plus the UTC pin and bare-session tuning), so a session
+    # whose first op is a streaming one gets them too. The returned
+    # frame is discarded: the stream source needs the RAW file schema,
+    # which load_table's normalization rewrites.
     from ocdb_server_spark.io import load_table
 
     load_table(spark, sf_dir, "events")
@@ -100,24 +98,26 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Memory-sink tables created by _run_to_memory, dropped at the NEXT
 # call: the memory sink materializes its full result on the driver and
-# nothing else ever drops it, so a suite running every streaming op
-# would otherwise pin every op's complete output simultaneously
-# (round-12 review). Ops run strictly sequentially (driver sweep,
-# pytest), so by the next call the previous table's consumer is done —
-# same lifetime argument as registry._POOLED_CACHES.
+# nothing else drops it, so a suite running every streaming op would
+# otherwise pin every op's complete output at once. Ops run strictly
+# sequentially (correctness sweep, pytest), so by the next call the previous
+# table's consumer is done — same lifetime as registry._POOLED_CACHES.
 _MEMORY_TABLES: list[tuple[SparkSession, str]] = []
 
 
 def _await(q, what: str, timeout: int = 300) -> None:
-    """awaitTermination with the timeout made LOUD: the bool return was
-    ignored at every call site, so a stuck stream used to be stopped in
-    finally and its PARTIAL sink contents returned as if complete
-    (round-12 review)."""
-    if not q.awaitTermination(timeout=timeout):
-        raise TimeoutError(
-            f"{what}: streaming query still running after {timeout}s — "
-            "refusing to return a partial result"
-        )
+    """Wait for an availableNow query to finish and stop it on the way
+    out. A query still running after `timeout` seconds raises: its sink
+    holds a partial result, which must never be returned as complete."""
+    try:
+        if not q.awaitTermination(timeout=timeout):
+            raise TimeoutError(
+                f"{what}: streaming query still running after {timeout}s — "
+                "refusing to return a partial result"
+            )
+    finally:
+        if q.isActive:
+            q.stop()
 
 
 def _run_to_memory(df: DataFrame, mode: str = "append") -> DataFrame:
@@ -138,27 +138,30 @@ def _run_to_memory(df: DataFrame, mode: str = "append") -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    # enroll BEFORE awaiting: a timed-out/failed stream used to leak
-    # its partially-filled sink (and temp view) forever — the exact
-    # pinned-driver-memory case the drop-at-next-call rule exists for
-    # (round-13 review)
+    # enrolled before awaiting, so a timed-out or failed stream's
+    # partially filled sink is dropped at the next call too
     _MEMORY_TABLES.append((spark, name))
-    try:
-        _await(q, "_run_to_memory")
-    finally:
-        if q.isActive:
-            q.stop()
+    _await(q, "_run_to_memory")
     return spark.sql(f"SELECT * FROM {name}")
 
 
-from contextlib import contextmanager
+_STATE_STORE = "spark.sql.streaming.stateStore.providerClass"
 
 
-@contextmanager
-def _tws_session(spark: SparkSession):
-    """Session state for a transformWithStateInPandas run, restored on
-    exit — ONE copy of what six TWS jobs used to repeat inline
-    (round-12 review):
+def _tws_run(
+    ev: DataFrame,
+    keys: list[str],
+    processor: StatefulProcessor,
+    out_ddl: str,
+    output_mode: str,
+    time_mode: str = "None",
+) -> DataFrame:
+    """One transformWithState stage run to completion: `ev` grouped by
+    `keys` through `processor` (Row API: handleInputRows reads and
+    yields Rows), its emissions collected in a memory sink.
+
+    Session confs for the run, restored on exit (set inside the
+    restoring try, so a failure between set and run leaks nothing):
 
     - ensure_protobuf(): driver sessions are built BEFORE this package
       imports, so the vendored protobuf is wired into the LIVE
@@ -169,231 +172,43 @@ def _tws_session(spark: SparkSession):
       is fixed at first checkpoint, and these jobs always start fresh
       checkpoints — a bare session's default 200 means 200 RocksDB
       instances per batch for this keyspace (measured: ~2x op wall).
-      Result-invariant: the state algebra is order/partitioning-free.
-
-    Confs are set INSIDE the restoring try, so a failure between set
-    and run cannot leak session state (the stream_upsert_state lesson
-    applied here too)."""
+      Result-invariant: the state algebra is order/partitioning-free."""
     from ocdb_server_spark._vendor import ensure_protobuf
 
+    spark = ev.sparkSession
     ensure_protobuf()
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
+    prev = spark.conf.get(_STATE_STORE, None)
     prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
+            _STATE_STORE,
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider",
         )
         spark.conf.set("spark.sql.shuffle.partitions", "16")
-        yield
+        out = ev.groupBy(*keys).transformWithState(
+            statefulProcessor=processor,
+            outputStructType=out_ddl,
+            outputMode=output_mode,
+            timeMode=time_mode,
+        )
+        return _run_to_memory(out, mode=output_mode.lower())
     finally:
         if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+            spark.conf.unset(_STATE_STORE)
         else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+            spark.conf.set(_STATE_STORE, prev)
         spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
 
 
-def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """op69 as a streaming query: watermark + 1h tumbling windows."""
-    from ocdb_server_spark.operators._helpers import dsum
-
-    ev = _stream_events(spark, sf_dir)
-    agg = (
-        ev.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour"), "event_type")
-        # sum_value included: the batch twin certifies it, and decimal
-        # partial sums being order-independent ACROSS MICRO-BATCHES is
-        # the one dimension batch certification can't cover
-        # (round-13 review)
-        .agg(F.count("*").alias("n"), dsum("value", 18, 6).alias("sum_value"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
-    return _run_to_memory(agg, mode="complete")
-
-
-def stream_upsert_state(
-    spark: SparkSession,
-    sf_dir: str,
-    store_dir: str | None = None,
-    n_buckets: int = 16,
-) -> DataFrame:
-    """op74 as a streaming query: foreachBatch MERGE into a
-    bucket-partitioned parquet keyed store — a real file-backed sink,
-    fully distributed (no driver-side state, no collect of data rows).
-
-    MERGE mechanics per micro-batch:
-      1. reduce the batch to latest-per-user (max of (ts, event_id,
-         value) structs — same tie-break as op74's batch twin);
-      2. bucket = pmod(xxhash64(user_id), n_buckets) — the store is
-         partitioned by it, so the merge reads ONLY the buckets the
-         batch touches (partition pruning) and dynamic partition
-         overwrite rewrites only those directories;
-      3. union store-side affected buckets with the batch, keep the
-         max struct per user, localCheckpoint (so the overwrite never
-         reads the files it is replacing), write.
-    At scale this is exactly the Delta/Iceberg MERGE INTO access
-    pattern minus the transaction log; state is bounded by #users,
-    per-batch IO by #touched buckets. Returns the final store as a
-    DataFrame."""
-    # default store under scratch_dir (per-PID isolation + dead-PID
-    # reaping): a raw mkdtemp left one full per-user state table per
-    # call that nothing ever deleted — the exact LITTER hazard
-    # scratch.py exists to close (round-13 review)
-    if store_dir is None:
-        from ocdb_server_spark.scratch import scratch_dir
-
-        # Default store placement is SCHEME-AWARE (round-14 ADVICE +
-        # round-14 review, which corrected the first fix):
-        # - local defaultFS (local[...] and single-node tests): pin the
-        #   scratch path with file:// so the probe below, the writes,
-        #   the final read AND scratch.py's create/reap all name the
-        #   same directory even if defaultFS is later reconfigured.
-        # - REMOTE defaultFS (hdfs/s3a cluster): file:// would be
-        #   executor-LOCAL — each task writing its shard to its own
-        #   machine's disk while the driver probes its own (empty) one:
-        #   silent state loss. Keep the scheme-less path instead: probe,
-        #   writer and reader all resolve it against the SAME defaultFS
-        #   (Path.getFileSystem and DataFrameWriter use one resolution),
-        #   so the store is consistent — it merely lives outside
-        #   scratch.py's local reaping, which the warning says out loud
-        #   (pass store_dir explicitly to choose the location).
-        base = scratch_dir("upsert_store", sf_dir)
-        default_fs = spark.sparkContext._jsc.hadoopConfiguration().get(
-            "fs.defaultFS", "file:///"
-        )
-        if default_fs.startswith("file:"):
-            store_dir = "file://" + base
-        else:
-            import warnings
-
-            warnings.warn(
-                f"stream_upsert_state default store {base!r} resolves "
-                f"against remote defaultFS {default_fs!r}; it is shared "
-                f"and consistent but outside local scratch reaping — "
-                f"pass store_dir to place it deliberately",
-                stacklevel=2,
-            )
-            store_dir = base
-            # Fresh-per-call contract on the REMOTE side too (round-14
-            # review): scratch_dir wipes only the LOCAL dir, so a second
-            # call in this process — or a recycled PID — would find the
-            # previous call's remote store existing and silently merge
-            # stale state into this run's result. Mirror the wipe on
-            # the filesystem the path actually resolves to.
-            sc0 = spark.sparkContext
-            jp = sc0._jvm.org.apache.hadoop.fs.Path(store_dir)
-            rfs = jp.getFileSystem(sc0._jsc.hadoopConfiguration())
-            if rfs.exists(jp):
-                rfs.delete(jp, True)
-    path = store_dir + "/state"
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        latest = (
-            batch_df.groupBy("user_id")
-            .agg(F.max(F.struct("ts", "event_id", "value")).alias("m"))
-            .select(
-                "user_id",
-                F.col("m.ts").alias("last_ts"),
-                F.col("m.event_id").alias("last_event_id"),
-                F.col("m.value").alias("last_value"),
-            )
-            .withColumn("bucket", F.pmod(F.xxhash64("user_id"), F.lit(n_buckets)))
-        )
-        # "First batch" means the store DOESN'T EXIST — probe that
-        # fact, never infer it from a failed read: a bare
-        # except-Exception here turned any transient read error on
-        # batch N>1 into cur=None, and the dynamic-partition overwrite
-        # then rewrote every touched bucket from the batch alone —
-        # silently deleting previously stored users (round-12 review).
-        # A real read failure on an existing store must propagate.
-        # Probe through the Hadoop FileSystem API, not os.path.isdir:
-        # a remote store_dir (hdfs://, s3a://) is invisible to the
-        # local filesystem, so the local probe would declare EVERY
-        # batch "first" and reintroduce the exact loss mode above
-        # (round-12 ADVICE).
-        sc = spark.sparkContext
-        jpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
-        cur = spark.read.parquet(path) if fs.exists(jpath) else None
-        if cur is not None:
-            touched = [
-                r["bucket"] for r in latest.select("bucket").distinct().collect()
-            ]  # ≤ n_buckets partition VALUES — metadata, not data
-            merged = cur.filter(F.col("bucket").isin(touched)).unionByName(latest)
-        else:
-            merged = latest
-        out = (
-            merged.groupBy("user_id", "bucket")
-            .agg(F.max(F.struct("last_ts", "last_event_id", "last_value")).alias("m"))
-            .select("user_id", "m.last_ts", "m.last_event_id", "m.last_value", "bucket")
-            # break the read->overwrite file dependency before rewriting
-            .localCheckpoint(eager=True)
-        )
-        out.write.mode("overwrite").partitionBy("bucket").parquet(path)
-
-    # conf set INSIDE the restoring try: _stream_events does a batch
-    # schema read and start() can throw — a failure between a set
-    # placed before the try and the finally used to leak session-wide
-    # dynamic-overwrite mode into unrelated later writes (round-12
-    # review).
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        ev = _stream_events(spark, sf_dir)
-        q = ev.writeStream.foreachBatch(upsert).trigger(availableNow=True).start()
-        try:
-            _await(q, "stream_upsert_state")
-        finally:
-            if q.isActive:
-                q.stop()
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-    return spark.read.parquet(path)
-
-
-def stream_ingest_resumable(
-    spark: SparkSession,
-    in_dir: str,
-    checkpoint_dir: str,
-    out_dir: str,
-    schema=None,
-) -> None:
-    """Checkpointed, resumable file ingest: read whatever parquet files
-    exist under `in_dir` beyond those the checkpoint already recorded,
-    append them to `out_dir`, stop (Trigger.AvailableNow).
-
-    This is the reference's submission-ingest workflow (SURVEY.md §3.2:
-    upload → parse → publish) made restartable: the checkpoint's source
-    offsets make re-runs EXACTLY-ONCE over input files — a crashed or
-    repeated run never re-publishes rows — with no bookkeeping table.
-    The same query shape against a Kafka source is the production
-    ingest at cluster scale; file-source offsets here are the
-    file-list positions.
-    """
-    if schema is None:
-        schema = spark.read.parquet(in_dir).schema
-    q = (
-        spark.readStream.schema(schema)
-        .parquet(in_dir)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await(q, "stream_ingest_resumable")
-    finally:
-        if q.isActive:
-            q.stop()
+def _final_emission(sunk: DataFrame, keys: list[str], counter: str) -> DataFrame:
+    """The rows of each key's last Update emission: those whose
+    `counter` equals the key's max. Every emission carries the key's
+    running input count, which strictly increases from one emission to
+    the next, so the max picks exactly the last one — all its rows
+    (op218 and op219 emit several rows per key)."""
+    last = F.max(counter).over(W.partitionBy(*keys))
+    return sunk.withColumn("_last", last).filter(F.col(counter) == F.col("_last"))
 
 
 def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -410,8 +225,8 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = (
         ev.join(F.broadcast(c), ev.user_id == c.c_custkey)
         .groupBy("c_mktsegment", "event_type")
-        # sum_value: see stream_tumbling — the cross-micro-batch sum is
-        # the claim the batch twin can't certify (round-13 review)
+        # sum_value: exact decimal partial sums being order-independent
+        # across micro-batches is the claim the batch twin can't certify
         .agg(F.count("*").alias("n"), dsum("value", 18, 6).alias("sum_value"))
     )
     return _run_to_memory(agg, mode="complete")
@@ -457,9 +272,9 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stream_tws_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """op206's REAL streaming pipeline: per-user running
-    (n_events, sum_q, max_q) via transformWithStateInPandas —
-    arbitrary schema'd state (a 3-field tuple), RocksDB state store,
-    availableNow trigger, memory sink.
+    (n_events, sum_q, max_q) via transformWithState — arbitrary
+    schema'd state (a 3-field tuple), RocksDB state store, availableNow
+    trigger, memory sink.
 
     Exactness contract: `q` is quantized JVM-SIDE before the stateful
     operator (CAST(value AS DECIMAL(18,6)) * 1e6 AS BIGINT — the same
@@ -469,12 +284,6 @@ def stream_tws_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only. The final per-user row is the last Update emission
     (n_events is strictly increasing, so max(n_events) picks it
     deterministically)."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
 
     class UserStats(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -483,50 +292,24 @@ def stream_tws_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         def handleInputRows(self, key, rows, timerValues):
-            if self._s.exists():
-                n, sum_q, max_q = self._s.get()
-            else:
-                n, sum_q, max_q = 0, 0, None
-            for pdf in rows:
-                n += len(pdf)
-                sum_q += int(pdf["q"].sum())
-                m = int(pdf["q"].max())
-                max_q = m if max_q is None else max(max_q, m)
+            n, sum_q, max_q = self._s.get() if self._s.exists() else (0, 0, None)
+            for r in rows:
+                n += 1
+                sum_q += r.q
+                max_q = r.q if max_q is None else max(max_q, r.q)
             self._s.update((n, sum_q, max_q))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "sum_q": [sum_q],
-                    "max_q": [max_q],
-                }
-            )
+            yield Row(user_id=key[0], n_events=n, sum_q=sum_q, max_q=max_q)
 
-        def close(self) -> None:
-            pass
-
-    with _tws_session(spark):
-        ev = _stream_events(spark, sf_dir).select(
-            "user_id",
-            F.expr(
-                SQL_QUANT_VALUE
-            ).alias("q"),
-        )
-        out = ev.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=UserStats(),
-            outputStructType="user_id bigint, n_events bigint,"
-            " sum_q bigint, max_q bigint",
-            outputMode="Update",
-            timeMode="None",
-        )
-        sunk = _run_to_memory(out, mode="update")
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        sunk.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n_events", "sum_q", "max_q")
+    ev = _stream_events(spark, sf_dir).select(
+        "user_id", F.expr(SQL_QUANT_VALUE).alias("q")
+    )
+    sunk = _tws_run(
+        ev, ["user_id"], UserStats(),
+        "user_id bigint, n_events bigint, sum_q bigint, max_q bigint",
+        "Update",
+    )
+    return _final_emission(sunk, ["user_id"], "n_events").select(
+        "user_id", "n_events", "sum_q", "max_q"
     )
 
 
@@ -545,37 +328,18 @@ def stream_tws_centroid_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
     single-key path). Final centroid component = sum_q / n / 1e6,
     derivable downstream; this job emits the exact integer
     accumulators so the oracle stays integral."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
 
     class DimAccum(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
             self._s = handle.getValueState("s", "n bigint, sum_q bigint")
 
         def handleInputRows(self, key, rows, timerValues):
-            if self._s.exists():
-                n, sum_q = self._s.get()
-            else:
-                n, sum_q = 0, 0
-            for pdf in rows:
-                n += len(pdf)
-                sum_q += int(pdf["q"].sum())
+            n, sum_q = self._s.get() if self._s.exists() else (0, 0)
+            for r in rows:
+                n += 1
+                sum_q += r.q
             self._s.update((n, sum_q))
-            yield pd.DataFrame(
-                {
-                    "label": [key[0]],
-                    "dim": [key[1]],
-                    "n": [n],
-                    "sum_q": [sum_q],
-                }
-            )
-
-        def close(self) -> None:
-            pass
+            yield Row(label=key[0], dim=key[1], n=n, sum_q=sum_q)
 
     stream = _stream_source(spark, sf_dir, "embeddings")
     exploded = stream.select(
@@ -585,30 +349,22 @@ def stream_tws_centroid_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
         "dim",
         F.expr("cast(round(cast(x as double) * 1000000) as bigint)").alias("q"),
     )
-    with _tws_session(spark):
-        out = exploded.groupBy("label", "dim").transformWithStateInPandas(
-            statefulProcessor=DimAccum(),
-            outputStructType="label bigint, dim int, n bigint, sum_q bigint",
-            outputMode="Update",
-            timeMode="None",
-        )
-        sunk = _run_to_memory(out, mode="update")
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("label", "dim").orderBy(F.col("n").desc())
-    return (
-        sunk.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("label", F.col("dim").cast("bigint").alias("dim"), "n", "sum_q")
+    sunk = _tws_run(
+        exploded, ["label", "dim"], DimAccum(),
+        "label bigint, dim int, n bigint, sum_q bigint",
+        "Update",
+    )
+    return _final_emission(sunk, ["label", "dim"], "n").select(
+        "label", F.col("dim").cast("bigint").alias("dim"), "n", "sum_q"
     )
 
 
 def stream_tws_topk_liststate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """op218's pipeline: per-user TOP-3 events by quantized value via
-    transformWithStateInPandas with LIST STATE — the third TWS state
-    kind exercised for real (op206 ValueState scalar tuple, op208
-    ValueState composite key, here ListState holding a bounded
-    ranked list).
+    transformWithState with LIST STATE — the third TWS state kind
+    exercised for real (op206 ValueState scalar tuple, op208
+    ValueState composite key, here ListState holding a bounded ranked
+    list).
 
     Exactness contract (why a full SQL oracle holds for a stateful
     top-k): (q, event_id) is UNIQUE per event, so the top-3 under the
@@ -624,13 +380,6 @@ def stream_tws_topk_liststate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is ≤3 rows per key by construction — bounded-memory
     streaming top-k, the pattern that replaces 'sort the history' at
     any volume."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
     k = 3
 
     class TopK(StatefulProcessor):
@@ -641,74 +390,43 @@ def stream_tws_topk_liststate(spark: SparkSession, sf_dir: str) -> DataFrame:
         def handleInputRows(self, key, rows, timerValues):
             kept = [tuple(t) for t in self._top.get()] if self._top.exists() else []
             n = self._n.get()[0] if self._n.exists() else 0
-            for pdf in rows:
-                n += len(pdf)
-                kept.extend(
-                    zip(pdf["q"].astype(int), pdf["event_id"].astype(int))
-                )
+            for r in rows:
+                n += 1
+                kept.append((r.q, r.event_id))
             kept.sort(key=lambda t: (-t[0], t[1]))
             kept = kept[:k]
             self._top.put(kept)
             self._n.update((n,))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(kept),
-                    "n_seen": [n] * len(kept),
-                    "rank": list(range(1, len(kept) + 1)),
-                    "q": [t[0] for t in kept],
-                    "event_id": [t[1] for t in kept],
-                }
-            )
+            for rank, (q, event_id) in enumerate(kept, 1):
+                yield Row(user_id=key[0], n_seen=n, rank=rank, q=q, event_id=event_id)
 
-        def close(self) -> None:
-            pass
-
-    with _tws_session(spark):
-        ev = _stream_events(spark, sf_dir).select(
-            "user_id",
-            "event_id",
-            F.expr(
-                SQL_QUANT_VALUE
-            ).alias("q"),
-        )
-        out = ev.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=TopK(),
-            outputStructType="user_id bigint, n_seen bigint, rank int,"
-            " q bigint, event_id bigint",
-            outputMode="Update",
-            timeMode="None",
-        )
-        sunk = _run_to_memory(out, mode="update")
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("user_id")
-    return (
-        sunk.withColumn("max_seen", F.max("n_seen").over(w))
-        .filter(F.col("n_seen") == F.col("max_seen"))
-        .select("user_id", "rank", "q", "event_id")
+    ev = _stream_events(spark, sf_dir).select(
+        "user_id", "event_id", F.expr(SQL_QUANT_VALUE).alias("q")
+    )
+    sunk = _tws_run(
+        ev, ["user_id"], TopK(),
+        "user_id bigint, n_seen bigint, rank int, q bigint, event_id bigint",
+        "Update",
+    )
+    return _final_emission(sunk, ["user_id"], "n_seen").select(
+        "user_id", "rank", "q", "event_id"
     )
 
 
 def stream_tws_mapstate_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """op219's pipeline: per-user, per-event-type running (n, sum_q)
-    via transformWithStateInPandas MAP STATE — with op206 (ValueState)
-    and op218 (ListState) this exercises every TWS state primitive
-    for real. The map key is the event_type (sub-key WITHIN the
-    stream key: user_id), so state reads/writes are point lookups
-    into RocksDB rather than a whole-blob rewrite — the reason
-    MapState exists and the shape per-entity-per-category serving
-    state takes at scale.
+    via transformWithState MAP STATE — with op206 (ValueState) and
+    op218 (ListState) this exercises every TWS state primitive for
+    real. The map key is the event_type (sub-key WITHIN the stream
+    key: user_id), so state reads/writes are point lookups into
+    RocksDB rather than a whole-blob rewrite — the reason MapState
+    exists and the shape per-entity-per-category serving state takes
+    at scale.
 
     Same exactness contract as op206: q quantized JVM-side with the
     oracle's decimal-cast expression, map values are (int64 count,
     int64 sum) — order-insensitive algebra, so the final emission
     hash-matches the batch groupBy(user_id, event_type) oracle."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
 
     class TypeStats(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -719,59 +437,28 @@ def stream_tws_mapstate_type_stats(spark: SparkSession, sf_dir: str) -> DataFram
 
         def handleInputRows(self, key, rows, timerValues):
             n_seen = self._n.get()[0] if self._n.exists() else 0
-            for pdf in rows:
-                n_seen += len(pdf)
-                g = pdf.groupby("event_type")["q"].agg(["count", "sum"])
-                for et, row in g.iterrows():
-                    if self._m.containsKey((et,)):
-                        n0, s0 = self._m.getValue((et,))
-                    else:
-                        n0, s0 = 0, 0
-                    self._m.updateValue(
-                        (et,), (n0 + int(row["count"]), s0 + int(row["sum"]))
-                    )
+            batch: dict[str, tuple[int, int]] = {}
+            for r in rows:
+                n_seen += 1
+                n, s = batch.get(r.event_type, (0, 0))
+                batch[r.event_type] = (n + 1, s + r.q)
+            for et, (n, s) in batch.items():
+                n0, s0 = self._m.getValue((et,)) if self._m.containsKey((et,)) else (0, 0)
+                self._m.updateValue((et,), (n0 + n, s0 + s))
             self._n.update((n_seen,))
-            ets, ns, sums = [], [], []
             for (et,), (n, s) in self._m.iterator():
-                ets.append(et)
-                ns.append(n)
-                sums.append(s)
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(ets),
-                    "n_seen": [n_seen] * len(ets),
-                    "event_type": ets,
-                    "n": ns,
-                    "sum_q": sums,
-                }
-            )
+                yield Row(user_id=key[0], n_seen=n_seen, event_type=et, n=n, sum_q=s)
 
-        def close(self) -> None:
-            pass
-
-    with _tws_session(spark):
-        ev = _stream_events(spark, sf_dir).select(
-            "user_id",
-            "event_type",
-            F.expr(
-                SQL_QUANT_VALUE
-            ).alias("q"),
-        )
-        out = ev.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=TypeStats(),
-            outputStructType="user_id bigint, n_seen bigint,"
-            " event_type string, n bigint, sum_q bigint",
-            outputMode="Update",
-            timeMode="None",
-        )
-        sunk = _run_to_memory(out, mode="update")
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("user_id")
-    return (
-        sunk.withColumn("max_seen", F.max("n_seen").over(w))
-        .filter(F.col("n_seen") == F.col("max_seen"))
-        .select("user_id", "event_type", "n", "sum_q")
+    ev = _stream_events(spark, sf_dir).select(
+        "user_id", "event_type", F.expr(SQL_QUANT_VALUE).alias("q")
+    )
+    sunk = _tws_run(
+        ev, ["user_id"], TypeStats(),
+        "user_id bigint, n_seen bigint, event_type string, n bigint, sum_q bigint",
+        "Update",
+    )
+    return _final_emission(sunk, ["user_id"], "n_seen").select(
+        "user_id", "event_type", "n", "sum_q"
     )
 
 
@@ -795,14 +482,12 @@ def stream_tws_session_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     machinery itself, not just the arithmetic. Sessions whose
     deadline the watermark never reaches stay open and are absent
     from BOTH sides."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
     gap_us = SESS_GAP_MS * 1000
+
+    def session_row(key, kind, s) -> Row:
+        return Row(
+            user_id=key[0], kind=kind, start_us=s[0], end_us=s[1], n=s[2], sum_q=s[3]
+        )
 
     class Sessionizer(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -812,16 +497,7 @@ def stream_tws_session_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
             self._handle = handle
 
         def handleInputRows(self, key, rows, timerValues):
-            evs: list[tuple[int, int, int]] = []  # (us, event_id, q)
-            for pdf in rows:
-                evs.extend(
-                    zip(
-                        pdf["us"].astype(int),
-                        pdf["event_id"].astype(int),
-                        pdf["q"].astype(int),
-                    )
-                )
-            evs.sort()
+            evs = sorted((r.us, r.event_id, r.q) for r in rows)
             cur = tuple(self._open.get()) if self._open.exists() else None
             closed = []
             for us, _eid, q in evs:
@@ -838,71 +514,79 @@ def stream_tws_session_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
             for t in self._handle.listTimers():
                 self._handle.deleteTimer(t)
             self._handle.registerTimer(cur[1] // 1000 + SESS_GAP_MS)
-            if closed:
-                yield pd.DataFrame(
-                    {
-                        "user_id": [key[0]] * len(closed),
-                        "kind": ["batch"] * len(closed),
-                        "start_us": [c[0] for c in closed],
-                        "end_us": [c[1] for c in closed],
-                        "n": [c[2] for c in closed],
-                        "sum_q": [c[3] for c in closed],
-                    }
-                )
+            for s in closed:
+                yield session_row(key, "batch", s)
 
         def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
             if self._open.exists():
                 s = tuple(self._open.get())
                 self._open.clear()
-                yield pd.DataFrame(
-                    {
-                        "user_id": [key[0]],
-                        "kind": ["timer"],
-                        "start_us": [s[0]],
-                        "end_us": [s[1]],
-                        "n": [s[2]],
-                        "sum_q": [s[3]],
-                    }
-                )
+                yield session_row(key, "timer", s)
 
-        def close(self) -> None:
-            pass
-
-    with _tws_session(spark):
-        ev = (
-            _stream_events(spark, sf_dir)
-            .withWatermark("ts", f"{SESS_WM_DELAY_MS} milliseconds")
-            .select(
-                "user_id",
-                "event_id",
-                F.expr("unix_micros(ts)").alias("us"),
-                F.expr(
-                    SQL_QUANT_VALUE
-                ).alias("q"),
-                "ts",
-            )
+    ev = (
+        _stream_events(spark, sf_dir)
+        .withWatermark("ts", f"{SESS_WM_DELAY_MS} milliseconds")
+        .select(
+            "user_id",
+            "event_id",
+            F.expr("unix_micros(ts)").alias("us"),
+            F.expr(SQL_QUANT_VALUE).alias("q"),
+            "ts",
         )
-        out = ev.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=Sessionizer(),
-            outputStructType="user_id bigint, kind string, start_us bigint,"
-            " end_us bigint, n bigint, sum_q bigint",
-            outputMode="Append",
-            timeMode="EventTime",
-        )
-        sunk = _run_to_memory(out, mode="append")
-    return sunk
+    )
+    return _tws_run(
+        ev, ["user_id"], Sessionizer(),
+        "user_id bigint, kind string, start_us bigint, end_us bigint,"
+        " n bigint, sum_q bigint",
+        "Append",
+        time_mode="EventTime",
+    )
 
 
-def _committed_manifests(man_dir: str) -> list[str]:
-    """Only `<id>.json` entries are COMMITS. The writer's atomic
-    os.replace goes through `<id>.json.<pid>.tmp` siblings in the same
-    directory — a crash-leftover or concurrent writer's tmp file is
-    complete-looking JSON, so an unfiltered listdir would count an
-    UNcommitted batch as committed and break the exactly-once claim
-    (round-12 review)."""
-    import os
+class _CommitLog:
+    """Exactly-once commits of foreachBatch batches under `man_dir`.
 
-    return [m for m in os.listdir(man_dir) if m.endswith(".json")]
+    Batch <id> is committed iff `<man_dir>/<id>.json` exists; the file
+    holds the batch's entry ({"batch_id": <id>, "path": ..., ...}). A
+    commit writes a `<id>.json.<pid>.tmp` sibling and os.replace-s it
+    into place — the atomic commit point: either the entry exists or
+    it doesn't. Only `<id>.json` names count as commits: a crash-left
+    or concurrent writer's tmp file is complete-looking JSON, and
+    counting it would read an uncommitted batch as committed."""
+
+    def __init__(self, man_dir: str) -> None:
+        os.makedirs(man_dir, exist_ok=True)
+        self.man_dir = man_dir
+
+    def _path(self, batch_id: int) -> str:
+        return os.path.join(self.man_dir, f"{batch_id}.json")
+
+    def has(self, batch_id: int) -> bool:
+        return os.path.exists(self._path(batch_id))
+
+    def commit(self, batch_id: int, **entry) -> None:
+        """Commit batch_id's entry unless it is already committed (a
+        replayed batch is a no-op)."""
+        if self.has(batch_id):
+            return
+        tmp = f"{self._path(batch_id)}.{os.getpid()}.tmp"
+        with open(tmp, "w") as f:
+            json.dump({"batch_id": batch_id, **entry}, f)
+        os.replace(tmp, self._path(batch_id))
+
+    def entries(self) -> list[dict]:
+        """Every committed entry, by batch id."""
+        out = []
+        for m in os.listdir(self.man_dir):
+            if m.endswith(".json"):
+                with open(os.path.join(self.man_dir, m)) as f:
+                    out.append(json.load(f))
+        return sorted(out, key=lambda e: e["batch_id"])
+
+    def latest(self) -> dict | None:
+        """The entry with the highest batch id, None before any commit."""
+        entries = self.entries()
+        return entries[-1] if entries else None
 
 
 def stream_exactly_once_manifest_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -912,10 +596,10 @@ def stream_exactly_once_manifest_sink(spark: SparkSession, sf_dir: str) -> DataF
     without a transactional table format:
 
       1. foreachBatch writes the batch to `data/batch=<id>/`,
-      2. then COMMITS by atomically creating `manifest/<id>` —
-         os.replace of a tmp file: either the manifest exists
-         (committed) or it doesn't; a crash between 1 and 2 leaves
-         orphan data files that readers never see,
+      2. then COMMITS by atomically creating `manifest/<id>.json`
+         (_CommitLog): either the manifest exists (committed) or it
+         doesn't; a crash between 1 and 2 leaves orphan data files
+         that readers never see,
       3. readers list the MANIFEST (not the data dir) and read only
          committed batches.
 
@@ -927,35 +611,22 @@ def stream_exactly_once_manifest_sink(spark: SparkSession, sf_dir: str) -> DataF
     aggregate are unchanged — and the aggregate hash-matching the
     events oracle certifies it (a duplicated batch would double its
     rows)."""
-    import json
-    import os
-
-    # per-process scratch (r9: missed the r8 scratch_dir migration —
-    # the fixed sf-tagged root's rmtree below would nuke another live
-    # session's in-flight committed batches). scratch_dir returns a
-    # FRESH empty dir each call, which is also the old rmtree's job:
-    # the certified artifact is this execution. The exactly-once
-    # semantics under test are WITHIN-run (batch-0 replay), so no
-    # cross-run-stable root is needed.
+    # scratch_dir: a fresh, empty dir private to this process, so a
+    # concurrent session's in-flight batches are never touched. The
+    # exactly-once semantics under test are within one run (batch-0
+    # replay), so no cross-run root is needed.
     from ocdb_server_spark.scratch import scratch_dir
 
     root = scratch_dir("eo_sink", sf_dir)
     data_dir = os.path.join(root, "data")
-    man_dir = os.path.join(root, "manifest")
-    os.makedirs(man_dir, exist_ok=True)
+    log = _CommitLog(os.path.join(root, "manifest"))
 
     def commit_batch(batch_df, batch_id: int) -> None:
-        man_path = os.path.join(man_dir, f"{batch_id}.json")
-        if os.path.exists(man_path):
+        if log.has(batch_id):
             return  # already committed: replayed batch is a no-op
         path = os.path.join(data_dir, f"batch={batch_id}")
-        (
-            batch_df.write.mode("overwrite").parquet(path)
-        )
-        tmp = f"{man_path}.{os.getpid()}.tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id, "path": path}, f)
-        os.replace(tmp, man_path)  # the atomic commit point
+        batch_df.write.mode("overwrite").parquet(path)
+        log.commit(batch_id, path=path)
 
     ev = _stream_events(spark, sf_dir).select(
         "event_id",
@@ -963,39 +634,27 @@ def stream_exactly_once_manifest_sink(spark: SparkSession, sf_dir: str) -> DataF
         "event_type",
         F.expr(SQL_QUANT_VALUE).alias("q"),
     )
-    q = (
+    _await(
         ev.writeStream.foreachBatch(commit_batch)
-        .option(
-            "checkpointLocation", os.path.join(root, "ckpt")
-        )
+        .option("checkpointLocation", os.path.join(root, "ckpt"))
         .trigger(availableNow=True)
-        .start()
+        .start(),
+        "stream_exactly_once_sink",
     )
-    try:
-        _await(q, "stream_exactly_once_sink")
-    finally:
-        if q.isActive:
-            q.stop()
 
-    manifests = sorted(_committed_manifests(man_dir))
-    # explicit raises, not assert: these ARE the op's certification
-    # ("exercised IN the op, not just claimed") and must survive
-    # python -O (round-13 review)
-    if not manifests:
+    # explicit raises, not assert: these checks ARE the op's
+    # certification and must survive python -O
+    committed = log.entries()
+    if not committed:
         raise RuntimeError("stream committed no batches")
     # REPLAY batch 0 with the same data — must be a no-op
-    batch0 = json.load(open(os.path.join(man_dir, manifests[0])))
-    replay_df = spark.read.parquet(batch0["path"])
-    commit_batch(replay_df, batch0["batch_id"])
-    after = sorted(_committed_manifests(man_dir))
-    if after != manifests:
+    batch0 = committed[0]
+    commit_batch(spark.read.parquet(batch0["path"]), batch0["batch_id"])
+    if log.entries() != committed:
         raise RuntimeError("replay must not create a new commit")
 
-    paths = [
-        json.load(open(os.path.join(man_dir, m)))["path"] for m in after
-    ]
-    committed = spark.read.parquet(*paths)
-    return committed.groupBy("event_type").agg(
+    out = spark.read.parquet(*[e["path"] for e in committed])
+    return out.groupBy("event_type").agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("q").cast("bigint").alias("sum_q"),
         F.max("event_id").cast("bigint").alias("max_event_id"),
@@ -1012,7 +671,7 @@ def stream_cdc_apply_changes(
     batches handled. op74 upgraded from latest-value upsert to full
     last-writer-wins/delete/insert MERGE semantics; op264's batch
     apply_changes is the oracle twin (same end state over the same
-    feed), op234's atomic-manifest commit is the replay armor.
+    feed), op234's commit log is the replay armor.
 
     The moving parts, per micro-batch (functions/cdc.py holds the
     merge semantics; this function only sequences them):
@@ -1022,17 +681,17 @@ def stream_cdc_apply_changes(
          timestamps across files, so later batches carry changes
          OLDER than ones already applied) and streamed back with
          maxFilesPerTrigger=1 → N real micro-batches;
-      2. foreachBatch SKIPS if the batch's manifest marker exists
+      2. foreachBatch SKIPS if the batch is already committed
          (Spark's driver-retry replay → no-op), else reads the store
          generation the LAST COMMITTED batch published, merges with
          apply_changes_incremental (seq-watermark guard: a stale
          change loses to the store's applied watermark, so batch
          ORDER doesn't matter — each key converges to its global
          max-seq change), writes ``store/gen=<batch_id>``, and
-         COMMITS by atomically os.replace-ing the marker;
+         COMMITS its manifest entry (_CommitLog);
       3. after the stream drains, the LAST batch is replayed with its
          own data (what a retrying driver does) — must commit nothing;
-      4. readers resolve the max committed marker and finish_store()
+      4. readers resolve the max committed entry and finish_store()
          projects tombstones/bookkeeping back to the public
          (key, payload, status, n_changes) contract.
 
@@ -1042,9 +701,6 @@ def stream_cdc_apply_changes(
     every commit atomic-readable (the lakehouse-format simulation
     family's streaming member — op148/op168/op228/op255/op264).
     """
-    import json
-    import os
-
     from ocdb_server_spark.functions.cdc import (
         apply_changes_incremental,
         finish_store,
@@ -1055,8 +711,7 @@ def stream_cdc_apply_changes(
     root = scratch_dir("cdc_stream", sf_dir)
     feed_dir = os.path.join(root, "feed")
     store_dir = os.path.join(root, "store")
-    man_dir = os.path.join(root, "manifest")
-    os.makedirs(man_dir, exist_ok=True)
+    log = _CommitLog(os.path.join(root, "manifest"))
 
     key, seq, payload = "user_id", ["ts", "event_id"], ["balance"]
 
@@ -1090,19 +745,8 @@ def stream_cdc_apply_changes(
         cdc_base_snapshot(spark, sf_dir), key, seq, seq_types
     ).write.mode("overwrite").parquet(seed_path)
 
-    def _latest_committed() -> tuple[int, str]:
-        """(max committed batch_id, its store path); (-1, seed) if none.
-        Batch ids are monotone, so the max marker IS the newest store."""
-        best, path = -1, seed_path
-        for m in _committed_manifests(man_dir):
-            ent = json.load(open(os.path.join(man_dir, m)))
-            if ent["batch_id"] > best:
-                best, path = ent["batch_id"], ent["path"]
-        return best, path
-
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        man_path = os.path.join(man_dir, f"{batch_id}.json")
-        if os.path.exists(man_path):
+        if log.has(batch_id):
             return  # already committed: replayed batch is a no-op
         # land the raw batch first (op234's data/commit split): the
         # merge then reads a stable batch copy, and the post-stream
@@ -1110,55 +754,43 @@ def stream_cdc_apply_changes(
         # file→batch assignment is not ours to reconstruct
         raw_path = os.path.join(root, "raw", f"batch={batch_id}")
         batch_df.write.mode("overwrite").parquet(raw_path)
-        _, cur_path = _latest_committed()
-        store = spark.read.parquet(cur_path)
+        # batch ids are monotone, so the latest commit IS the newest store
+        latest = log.latest()
+        store = spark.read.parquet(latest["path"] if latest else seed_path)
         out = apply_changes_incremental(
             store, spark.read.parquet(raw_path),
             key=key, seq=seq, payload=payload,
         )
         gen_path = os.path.join(store_dir, f"gen={batch_id}")
         out.write.mode("overwrite").parquet(gen_path)
-        tmp = f"{man_path}.{os.getpid()}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {"batch_id": batch_id, "path": gen_path, "raw": raw_path}, f
-            )
-        os.replace(tmp, man_path)  # the atomic commit point
+        log.commit(batch_id, path=gen_path, raw=raw_path)
 
-    q = (
+    _await(
         spark.readStream.schema(feed_schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(feed_dir)
         .writeStream.foreachBatch(commit_batch)
         .option("checkpointLocation", os.path.join(root, "ckpt"))
         .trigger(availableNow=True)
-        .start()
+        .start(),
+        "stream_cdc_apply_changes",
     )
-    try:
-        _await(q, "stream_cdc_apply_changes")
-    finally:
-        if q.isActive:
-            q.stop()
 
-    committed = sorted(_committed_manifests(man_dir))
     # explicit raises, not assert: the replay armor IS the op's
-    # certification and must survive python -O (round-13 review)
+    # certification and must survive python -O
+    committed = log.entries()
     if len(committed) != n_feed_files:
         raise RuntimeError(
-            f"expected {n_feed_files} committed batches, got {committed}"
+            f"expected {n_feed_files} committed batches, got "
+            f"{[e['batch_id'] for e in committed]}"
         )
     # REPLAY the last batch with its own data (the raw copy its commit
-    # landed) — must commit nothing and leave the store pointer
+    # landed) — must commit nothing and so leave the store pointer
     # untouched (op234's certification, here protecting a MUTABLE
     # store from double application).
-    last_id, last_path = _latest_committed()
-    replay_feed = spark.read.parquet(
-        os.path.join(root, "raw", f"batch={last_id}")
-    )
-    commit_batch(replay_feed, last_id)
-    if sorted(_committed_manifests(man_dir)) != committed:
+    last = committed[-1]
+    commit_batch(spark.read.parquet(last["raw"]), last["batch_id"])
+    if log.entries() != committed:
         raise RuntimeError("replay must not create a new commit")
-    if _latest_committed() != (last_id, last_path):
-        raise RuntimeError("replay must not move the store pointer")
 
-    return finish_store(spark.read.parquet(last_path), key, seq)
+    return finish_store(spark.read.parquet(last["path"]), key, seq)

@@ -210,9 +210,9 @@ def main() -> None:
 
 if __name__ == "__main__":
     main()
-    # Exit hard: transformWithStateInPandas ops leave non-daemon state
-    # server threads behind, and a plain return would hang the process
-    # after all output is written.
+    # Exit hard: the transformWithState ops' state server can leave
+    # non-daemon threads behind, and a plain return would then hang the
+    # process after all output is written.
     sys.stdout.flush()
     sys.stderr.flush()
     os._exit(0)

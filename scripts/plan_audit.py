@@ -6,7 +6,7 @@ parquet scans are visible) and summarize the executed plan:
 
 - scans        : # parquet FileScans
 - exch         : # shuffle Exchanges (hashpartitioning / SinglePartition /
-                 rangepartitioning)
+                 rangepartitioning / RoundRobinPartitioning)
 - bcast        : # BroadcastExchanges (small sides shipped, not shuffled)
 - wscg         : # WholeStageCodegen spans (JVM-compiled pipelines)
 - win          : # Window operators
@@ -37,7 +37,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-_EXCH = re.compile(r"Exchange (hash|range|Single)")
+_EXCH = re.compile(r"Exchange (hash|range|Single|RoundRobin)")
 # one aggregate node line of executedPlan().toString():
 #   HashAggregate(keys=[k#1], functions=[partial_count(1), ...], output=[...])
 _AGG_NODE = re.compile(
@@ -183,19 +183,16 @@ def main() -> None:
     print()
     print("## Cost-floor notes (measured, not plan-shape)")
     print()
-    print("- **op218_stream_tws_topk** (slowest registry op, 12.8 s in the")
-    print("  r8 op_costs sweep) decomposed r9 at sf0.01: **~8 s is the")
-    print("  ONE-TIME cold TWS init** the first transformWithStateInPandas")
-    print("  query in a session pays (Python state-server handshake +")
-    print("  RocksDB provider classloading + stateful-worker spin-up) —")
-    print("  run 1 = 10.7 s, runs 2+ = **2.8 s** steady-state, of which")
-    print("  2.6 s is the availableNow micro-batch machinery (checkpoint +")
-    print("  offset log + state commit), not the top-k compute. State-")
-    print("  partition count is NOT the lever (16 -> 8 saved 0.2 s, 8 -> 4")
-    print("  nothing). In the driver sweep the cold init lands on whichever")
-    print("  TWS op runs first (op206/op208/op218/op219 share it), so")
-    print("  op218's per-op cost reads high when it draws the cold slot.")
-    print("  At production scale both terms amortize: the init is per-")
+    print("- **transformWithState ops** (op206, op208, op218, op219,")
+    print("  op226): the first TWS query in a session pays a **one-time")
+    print("  cold init** (Python state-server handshake + RocksDB provider")
+    print("  classloading + stateful-worker spin-up), ~8 s of op218's")
+    print("  10.7 s first run at sf0.01; its later runs took **2.8 s**, of")
+    print("  which 2.6 s is the availableNow micro-batch machinery")
+    print("  (checkpoint + offset log + state commit), not the top-k")
+    print("  compute. In a sweep the cold init lands on whichever TWS op")
+    print("  runs first, so that op's per-op cost reads high. At")
+    print("  production scale both terms amortize: the init is per-")
     print("  session, the micro-batch floor per-trigger.")
     print()
     print("## Eager-side shapes (not visible in the returned plan)")
@@ -220,10 +217,9 @@ def main() -> None:
 
 if __name__ == "__main__":
     main()
-    # Exit hard: once the registry includes transformWithStateInPandas
-    # ops, their state-server leaves non-daemon threads behind and a
-    # plain return hangs the process after all output is written
-    # (observed twice this round). Everything is flushed by now.
+    # Exit hard: the transformWithState ops' state server can leave
+    # non-daemon threads behind, and a plain return would then hang the
+    # process after all output is written. Everything is flushed by now.
     import sys
 
     sys.stdout.flush()

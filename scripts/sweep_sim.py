@@ -153,10 +153,9 @@ def main() -> None:
 
 if __name__ == "__main__":
     main()
-    # Exit hard: once the registry includes transformWithStateInPandas
-    # ops, their state-server leaves non-daemon threads behind and a
-    # plain return hangs the process after all output is written
-    # (observed twice this round). Everything is flushed by now.
+    # Exit hard: the transformWithState ops' state server can leave
+    # non-daemon threads behind, and a plain return would then hang the
+    # process after all output is written. Everything is flushed by now.
     import sys
 
     sys.stdout.flush()

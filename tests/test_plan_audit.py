@@ -52,6 +52,25 @@ FlatMapGroupsInArrow [event_type#3], _holt(event_type#3, t#46L, y#57L)#58, [even
 """
 
 
+# three keyed shuffles over two round-robin repartition(n) shuffles
+ROUND_ROBIN_SHUFFLES = """\
+HashAggregate(keys=[lang#4], functions=[count(1)], output=[lang#4, n#9L])
++- Exchange hashpartitioning(lang#4, 8), ENSURE_REQUIREMENTS, [plan_id=50]
+   +- HashAggregate(keys=[lang#4], functions=[partial_count(1)], output=[lang#4, count#8L])
+      +- SortMergeJoin [doc_id#1L], [doc_id#5L], Inner
+         :- Exchange hashpartitioning(doc_id#1L, 8), ENSURE_REQUIREMENTS, [plan_id=45]
+         :  +- Exchange RoundRobinPartitioning(8), REPARTITION_BY_NUM, [plan_id=44]
+         :     +- InMemoryTableScan [doc_id#1L, lang#4]
+         +- Exchange hashpartitioning(doc_id#5L, 8), ENSURE_REQUIREMENTS, [plan_id=47]
+            +- Exchange RoundRobinPartitioning(8), REPARTITION_BY_NUM, [plan_id=46]
+               +- InMemoryTableScan [doc_id#5L]
+"""
+
+
+def test_round_robin_exchanges_count_as_shuffles():
+    assert flags(ROUND_ROBIN_SHUFFLES) == ["5-shuffles"]
+
+
 def test_python_nodes_include_grouped_arrow_stages():
     assert py_nodes(GROUPED_ARROW_STAGE) == 2
     assert py_nodes(KEYED_SKETCH) == 0

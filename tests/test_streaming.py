@@ -2,7 +2,10 @@
 
 The oracle gate checks op69–op74's *batch-equivalent* DataFrames; these
 tests prove the same logic runs as real streaming queries (readStream →
-availableNow → memory sink) and produces identical results.
+availableNow → memory sink) and produces identical results. The
+streaming twins of op69–op74 live here; the registered streaming ops
+(stream joins, transformWithState, the exactly-once sink) run their
+queries in ``ocdb_server_spark.streaming.jobs``.
 """
 
 from __future__ import annotations
@@ -15,6 +18,28 @@ from ocdb_server_spark.registry import load_all
 from ocdb_server_spark.streaming import jobs
 
 OPS = load_all()
+
+
+def stream_tumbling(spark, sf_dir):
+    """op69 as a streaming query: watermark + 1h tumbling windows."""
+    from ocdb_server_spark.operators._helpers import dsum
+
+    ev = jobs._stream_events(spark, sf_dir)
+    agg = (
+        ev.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour"), "event_type")
+        # sum_value included: the batch twin certifies it, and decimal
+        # partial sums being order-independent ACROSS MICRO-BATCHES is
+        # the one dimension batch certification can't cover
+        .agg(F.count("*").alias("n"), dsum("value", 18, 6).alias("sum_value"))
+        .select(
+            F.col("window.start").alias("window_start"),
+            "event_type",
+            "n",
+            "sum_value",
+        )
+    )
+    return jobs._run_to_memory(agg, mode="complete")
 
 
 def stream_sliding(spark, sf_dir):
@@ -53,17 +78,81 @@ def stream_dedup(spark, sf_dir):
     return jobs._run_to_memory(dd.select("event_id", "user_id"), mode="append")
 
 
+def stream_upsert_state(spark, sf_dir, store_dir, n_buckets=16):
+    """op74 as a streaming query: foreachBatch MERGE into a
+    bucket-partitioned parquet keyed store under `store_dir` — a real
+    file-backed sink, fully distributed (no driver-side state, no
+    collect of data rows). Returns the final store.
+
+    MERGE mechanics per micro-batch:
+      1. reduce the batch to latest-per-user (max of (ts, event_id,
+         value) structs — same tie-break as op74's batch twin);
+      2. bucket = pmod(xxhash64(user_id), n_buckets) — the store is
+         partitioned by it, so the merge reads ONLY the buckets the
+         batch touches and dynamic partition overwrite rewrites only
+         those directories;
+      3. union store-side affected buckets with the batch, keep the
+         max struct per user, localCheckpoint (so the overwrite never
+         reads the files it is replacing), write."""
+    path = store_dir + "/state"
+    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+
+    def upsert(batch_df, epoch_id):
+        latest = (
+            batch_df.groupBy("user_id")
+            .agg(F.max(F.struct("ts", "event_id", "value")).alias("m"))
+            .select(
+                "user_id",
+                F.col("m.ts").alias("last_ts"),
+                F.col("m.event_id").alias("last_event_id"),
+                F.col("m.value").alias("last_value"),
+            )
+            .withColumn("bucket", F.pmod(F.xxhash64("user_id"), F.lit(n_buckets)))
+        )
+        # "first batch" means the store does not exist: probe that
+        # through the Hadoop FileSystem API, never infer it from a
+        # failed read (a transient read error would then rewrite every
+        # touched bucket from the batch alone, losing stored users)
+        sc = spark.sparkContext
+        jpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+        fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
+        if fs.exists(jpath):
+            touched = [
+                r["bucket"] for r in latest.select("bucket").distinct().collect()
+            ]  # ≤ n_buckets partition VALUES — metadata, not data
+            cur = spark.read.parquet(path).filter(F.col("bucket").isin(touched))
+            merged = cur.unionByName(latest)
+        else:
+            merged = latest
+        out = (
+            merged.groupBy("user_id", "bucket")
+            .agg(F.max(F.struct("last_ts", "last_event_id", "last_value")).alias("m"))
+            .select("user_id", "m.last_ts", "m.last_event_id", "m.last_value", "bucket")
+            # break the read->overwrite file dependency before rewriting
+            .localCheckpoint(eager=True)
+        )
+        out.write.mode("overwrite").partitionBy("bucket").parquet(path)
+
+    # conf set inside the restoring try: the schema read and start()
+    # can throw, and dynamic overwrite must not leak into later writes
+    try:
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        ev = jobs._stream_events(spark, sf_dir)
+        q = ev.writeStream.foreachBatch(upsert).trigger(availableNow=True).start()
+        jobs._await(q, "stream_upsert_state")
+    finally:
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    return spark.read.parquet(path)
+
+
 def _rows(df, cols):
     out = [tuple(r[c] for c in cols) for r in df.select(*cols).collect()]
     return sorted(out, key=lambda t: tuple(str(x) for x in t))
 
 
 def test_stream_tumbling_matches_batch(spark, sf_dir):
-    streamed = jobs.stream_tumbling(spark, sf_dir)
+    streamed = stream_tumbling(spark, sf_dir)
     batch = OPS["op69_stream_tumbling"].fn(spark, sf_dir)
-    # sum_value included (round-13 review): decimal partial sums being
-    # order-independent ACROSS MICRO-BATCHES is the one dimension the
-    # batch certification can't cover
     cols = ["window_start", "event_type", "n", "sum_value"]
     assert _rows(streamed, cols) == _rows(batch, cols)
 
@@ -173,7 +262,7 @@ def test_stream_dedup_matches_batch(spark, sf_dir):
 
 
 def test_stream_upsert_end_state_matches_batch(spark, sf_dir, tmp_path):
-    store = jobs.stream_upsert_state(spark, sf_dir, store_dir=str(tmp_path / "st"))
+    store = stream_upsert_state(spark, sf_dir, str(tmp_path / "st"))
     state = {
         r["user_id"]: (r["last_ts"], r["last_value"]) for r in store.collect()
     }
@@ -187,38 +276,6 @@ def test_stream_upsert_end_state_matches_batch(spark, sf_dir, tmp_path):
         if state[u][0] != expected[u][0] or abs(state[u][1] - expected[u][1]) > 1e-9
     }
     assert not mism, f"{len(mism)} users diverge; e.g. {sorted(mism)[:3]}"
-
-
-def test_stream_upsert_default_store_is_local_file_qualified(
-    spark, sf_dir, monkeypatch
-):
-    """Round-14 ADVICE: the DEFAULT store path comes from scratch_dir —
-    a LOCAL path created/reaped through os.* — but a scheme-less string
-    resolves against fs.defaultFS, so on a remote-defaultFS deployment
-    the existence probe, the writes, and scratch.py's reaping would
-    split across filesystems (the probe then declares every batch
-    'first' — the silent-overwrite loss mode). The default must be
-    file://-qualified and the store must land on the local scratch."""
-    import os
-
-    from ocdb_server_spark import scratch
-
-    seen = {}
-    real = scratch.scratch_dir
-
-    def spy(tag, sf):
-        d = real(tag, sf)
-        seen["dir"] = d
-        return d
-
-    monkeypatch.setattr(scratch, "scratch_dir", spy)
-    store = jobs.stream_upsert_state(spark, sf_dir)
-    assert store.count() > 0
-    # the store's files really are on the LOCAL filesystem under the
-    # scratch dir the spy observed
-    assert os.path.isdir(os.path.join(seen["dir"], "state")), (
-        "default upsert store not written to the local scratch dir"
-    )
 
 
 @pytest.mark.parametrize("op", ["op70_stream_sliding"])
@@ -237,9 +294,10 @@ def test_checkpointed_ingest_resumes_exactly_once(spark, sf_dir, tmp_path):
     """Run the resumable ingest, drop MORE files into the source, run
     it AGAIN with the same checkpoint: the second run must pick up only
     the new files — every event_id lands in the sink exactly once.
-    (Kill-and-rerun is the crash-recovery contract of the checkpoint.)"""
+    (Kill-and-rerun is the crash-recovery contract of the checkpoint:
+    the checkpoint's source offsets make re-runs exactly-once over
+    input files with no bookkeeping table.)"""
     from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.streaming.jobs import stream_ingest_resumable
 
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
@@ -250,12 +308,25 @@ def test_checkpointed_ingest_resumes_exactly_once(spark, sf_dir, tmp_path):
     first.write.mode("append").parquet(src)
     schema = spark.read.parquet(src).schema
 
-    stream_ingest_resumable(spark, src, ckpt, out, schema=schema)
+    def ingest():
+        jobs._await(
+            spark.readStream.schema(schema)
+            .parquet(src)
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start(),
+            "resumable ingest",
+        )
+
+    ingest()
     n1 = spark.read.parquet(out).count()
     assert n1 == first.count()
 
     second.write.mode("append").parquet(src)
-    stream_ingest_resumable(spark, src, ckpt, out, schema=schema)
+    ingest()
 
     got = spark.read.parquet(out)
     assert got.count() == ev.count()  # nothing lost...
@@ -280,7 +351,7 @@ def test_stream_stream_join_matches_batch(spark, sf_dir):
 
 
 def test_stream_tws_user_stats_matches_batch(spark, sf_dir):
-    """op206 (hash-certified TWS): the real transformWithStateInPandas
+    """op206 (hash-certified TWS): the real transformWithState
     pipeline's final per-user stats must equal the batch aggregate
     bit-for-bit — possible because state math is all int64 (value
     quantized JVM-side before entering Python state)."""
@@ -377,6 +448,34 @@ def test_stream_tws_topk_matches_batch_window(spark, sf_dir):
     assert max(per_user.values()) <= 3
 
 
+def test_stream_tws_mapstate_matches_batch(spark, sf_dir):
+    """op219: the MapState processor's final per-(user, event_type)
+    (n, sum_q) must equal the batch groupBy exactly (int64 map-value
+    algebra over JVM-quantized inputs)."""
+    pytest.importorskip(
+        "google.protobuf.descriptor",
+        reason="TWS state-server protocol needs protobuf (real or vendored)",
+    )
+    from ocdb_server_spark.io import load_table
+    from ocdb_server_spark.streaming.jobs import stream_tws_mapstate_type_stats
+
+    streamed = stream_tws_mapstate_type_stats(spark, sf_dir)
+    batch = (
+        load_table(spark, sf_dir, "events")
+        .groupBy("user_id", "event_type")
+        .agg(
+            F.count("*").alias("n"),
+            F.sum(
+                F.expr("cast(cast(value as decimal(18,6)) * 1000000 as bigint)")
+            ).cast("bigint").alias("sum_q"),
+        )
+    )
+    cols = ["user_id", "event_type", "n", "sum_q"]
+    s = sorted(tuple(r[c] for c in cols) for r in streamed.collect())
+    b = sorted(tuple(r[c] for c in cols) for r in batch.collect())
+    assert s == b
+
+
 def test_stream_tws_session_timers_fire_and_leave_open(spark, sf_dir):
     """op226: both close paths must actually run — gap splits emit
     kind='batch', watermark-passed finals emit kind='timer' from
@@ -467,3 +566,55 @@ def test_exactly_once_sink_ignores_uncommitted_orphans(spark, sf_dir):
     committed = spark.read.parquet(*paths)
     assert committed.count() == total
     assert committed.filter("event_type = 'orphan'").count() == 0
+
+
+def test_final_emission_keeps_each_keys_last_emission(spark):
+    """The Update-mode cut the TWS ops share: per key, all rows of the
+    emission with the highest counter — several rows for a key whose
+    emissions carry many rows (op218's ranked list), the one row of a
+    key that emitted once."""
+    from ocdb_server_spark.streaming.jobs import _final_emission
+
+    sunk = spark.createDataFrame(
+        [
+            (1, 2, 1, 50), (1, 2, 2, 40),                # user 1, 1st emission
+            (1, 5, 1, 90), (1, 5, 2, 50), (1, 5, 3, 40),  # user 1, last
+            (2, 1, 1, 7),                                 # user 2, only
+            (3, 3, 1, 9), (3, 4, 1, 9),                   # user 3: last wins
+        ],
+        "user_id bigint, n_seen bigint, rank int, q bigint",
+    )
+    got = _final_emission(sunk, ["user_id"], "n_seen").select(
+        "user_id", "n_seen", "rank", "q"
+    )
+    assert sorted(map(tuple, got.collect())) == [
+        (1, 5, 1, 90), (1, 5, 2, 50), (1, 5, 3, 40),
+        (2, 1, 1, 7),
+        (3, 4, 1, 9),
+    ]
+
+
+def test_commit_log_commits_once_and_lists_only_commits(tmp_path):
+    """op234's and op265's commit log: a second commit of one batch id
+    is a no-op, a `<id>.json.<pid>.tmp` sibling (a crashed or
+    concurrent writer's) is never a commit, and the latest entry is
+    the highest batch id — numerically, not by file name."""
+    import json
+    import os
+
+    from ocdb_server_spark.streaming.jobs import _CommitLog
+
+    man_dir = str(tmp_path / "manifest")
+    log = _CommitLog(man_dir)
+    assert log.entries() == [] and log.latest() is None
+    log.commit(2, path="p2")
+    log.commit(2, path="replayed")
+    assert log.entries() == [{"batch_id": 2, "path": "p2"}]
+    with open(os.path.join(man_dir, f"7.json.{os.getpid()}.tmp"), "w") as f:
+        json.dump({"batch_id": 7, "path": "uncommitted"}, f)
+    assert not log.has(7)
+    assert [e["batch_id"] for e in log.entries()] == [2]
+    log.commit(10, path="p10", raw="r10")
+    log.commit(9, path="p9")
+    assert [e["batch_id"] for e in log.entries()] == [2, 9, 10]
+    assert log.latest() == {"batch_id": 10, "path": "p10", "raw": "r10"}
