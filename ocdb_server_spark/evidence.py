@@ -10,9 +10,10 @@ A green row only certifies the checker and the plan it ran against.
 ``oracle_fp.json`` (the fingerprint book) records, per op, the
 fingerprint of its checker (``fp``: the oracle SQL, or the golden
 snapshot entry for a ROWS-only op), the fingerprint of its registered
-plan source (``src_fp``, see ``registry.Op``) and the round from which
-that pair is live (``since_round``). A green row older than
-``since_round`` certified something else and does not count.
+plan (``src_fp``: the op's source and every package definition it
+reaches) and the round from which that pair is live
+(``since_round``). A green row older than ``since_round`` certified
+something else and does not count.
 
 Reading never writes: ``certified_rounds`` heals a stale or malformed
 book in memory. ``python -m ocdb_server_spark.evidence`` is the one
@@ -22,6 +23,8 @@ while the committed book is stale.
 
 from __future__ import annotations
 
+import ast
+import functools
 import hashlib
 import json
 import os
@@ -31,7 +34,8 @@ from collections.abc import Iterator, Mapping
 
 from ocdb_server_spark.registry import Op, load_all
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = os.path.dirname(os.path.abspath(__file__))
+ROOT = os.path.dirname(PKG)
 BOOK = os.path.join("ocdb_server_spark", "oracle_fp.json")
 COSTS = os.path.join("ocdb_server_spark", "op_costs.json")
 
@@ -113,6 +117,155 @@ def _rows_snapshot_fps(root: str) -> dict[str, str] | None:
     }
 
 
+def _walk(node: ast.AST) -> Iterator[ast.AST]:
+    """Every node under `node`, skipping decorators."""
+    todo = [node]
+    while todo:
+        n = todo.pop()
+        yield n
+        skip = getattr(n, "decorator_list", ())
+        todo.extend(c for c in ast.iter_child_nodes(n) if c not in skip)
+
+
+def _bind_imports(st: ast.Import | ast.ImportFrom, pkg: str, into: dict) -> None:
+    """Record the package-internal names an import statement binds, as
+    {name: dotted target}; imports from outside the package are dropped."""
+    if isinstance(st, ast.Import):
+        for a in st.names:
+            if a.name.split(".")[0] == pkg:
+                into[a.asname or pkg] = a.name if a.asname else pkg
+    elif st.level == 0 and (st.module or "").split(".")[0] == pkg:
+        for a in st.names:
+            into[a.asname or a.name] = f"{st.module}.{a.name}"
+
+
+class _Source:
+    """The package source under `pkg`: each module is parsed once, on
+    first use, and each definition's text and references are memoized."""
+
+    def __init__(self, pkg: str):
+        self.pkg, self.name = pkg, os.path.basename(pkg)
+        self._mods: dict[str, tuple | None] = {}
+        self._defs: dict[tuple[str, str], tuple[str, set]] = {}
+        self._fps: dict[tuple[str, str], str] = {}
+
+    def module(self, mod: str) -> tuple | None:
+        """(lines, {name: [binding statements]}, {name: import target})
+        of package module `mod`, or None when it is not one."""
+        if mod not in self._mods:
+            parts = mod.split(".")
+            base = os.path.join(self.pkg, *parts[1:])
+            paths = [p for p in (base + ".py", os.path.join(base, "__init__.py"))
+                     if parts[0] == self.name and os.path.isfile(p)]
+            self._mods[mod] = self._parse(paths[0]) if paths else None
+        return self._mods[mod]
+
+    def _parse(self, path: str) -> tuple:
+        with open(path) as f:
+            text = f.read()
+        binds: dict[str, list[ast.stmt]] = {}
+        imports: dict[str, str] = {}
+        for st in ast.parse(text).body:
+            if isinstance(st, (ast.Import, ast.ImportFrom)):
+                _bind_imports(st, self.name, imports)
+            elif isinstance(st, (ast.FunctionDef, ast.ClassDef)):
+                binds.setdefault(st.name, []).append(st)
+            elif isinstance(st, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+                for t in getattr(st, "targets", None) or [st.target]:
+                    for n in ast.walk(t):
+                        if isinstance(n, ast.Name):
+                            binds.setdefault(n.id, []).append(st)
+        return text.splitlines(keepends=True), binds, imports
+
+    def resolve(self, dotted: str) -> tuple[str, str] | None:
+        """The package definition a dotted name such as
+        ``ocdb_server_spark.io.load_table.__doc__`` refers to, following
+        re-exports; None for a bare module or a name outside the package."""
+        parts = dotted.split(".")
+        for i in range(len(parts) - 1, 0, -1):
+            m = self.module(".".join(parts[:i]))
+            if m is not None:
+                mod, name = ".".join(parts[:i]), parts[i]
+                if name in m[1]:
+                    return mod, name
+                if name in m[2]:
+                    return self.resolve(".".join([m[2][name], *parts[i + 1:]]))
+                return None
+        return None
+
+    def definition(self, node: tuple[str, str]) -> tuple[str, set]:
+        """(source text, referenced package definitions) of `node`."""
+        if node not in self._defs:
+            mod, name = node
+            lines, binds, imports = self.module(mod)
+            text, scope, refs = "", dict(imports), []
+            for st in binds[name]:
+                start = min([st.lineno] + [d.lineno for d in getattr(st, "decorator_list", ())])
+                text += "".join(lines[start - 1:st.end_lineno])
+                for n in _walk(st):
+                    if isinstance(n, (ast.Import, ast.ImportFrom)):
+                        _bind_imports(n, self.name, scope)  # function-local imports
+                    elif isinstance(n, (ast.Name, ast.Attribute)):
+                        refs.append(n)
+            out = set()
+            for n in refs:
+                chain = []
+                while isinstance(n, ast.Attribute):
+                    chain.append(n.attr)
+                    n = n.value
+                if not isinstance(n, ast.Name) or isinstance(n.ctx, ast.Store):
+                    continue
+                if n.id in scope:
+                    target = self.resolve(".".join([scope[n.id], *reversed(chain)]))
+                else:
+                    target = (mod, n.id) if n.id in binds else None
+                if target is not None:
+                    out.add(target)
+            self._defs[node] = (text, out)
+        return self._defs[node]
+
+    def fingerprint(self, mod: str, name: str) -> str:
+        """sha256[:16] of the sorted texts of every definition reachable
+        from `mod`.`name`; "" when it is not a package-level definition."""
+        key = (mod, name)
+        if key not in self._fps:
+            m = self.module(mod)
+            seen = {key} if m is not None and name in m[1] else set()
+            todo = list(seen)
+            while todo:
+                for nxt in self.definition(todo.pop())[1] - seen:
+                    seen.add(nxt)
+                    todo.append(nxt)
+            texts = sorted(self.definition(n)[0] for n in seen)
+            self._fps[key] = (
+                hashlib.sha256("\0".join(texts).encode()).hexdigest()[:16]
+                if texts else ""
+            )
+        return self._fps[key]
+
+
+@functools.cache
+def _source(pkg: str) -> _Source:
+    return _Source(pkg)
+
+
+def src_fp(op: Op, pkg: str = PKG) -> str:
+    """Fingerprint of `op`'s registered plan: its own definition, with
+    its ``@register(…)`` line, plus the transitive closure of the
+    package-level functions, classes and constants it names, read from
+    the package source under `pkg`.
+
+    A name counts when it is a module global, an attribute of a package
+    module (``io.load_table``) or a function-local import from the
+    package. The walk stops at modules outside the package and skips
+    names inside decorators: the oracle has its own fp, and following
+    ``register`` would put registry.py in every closure. Segments are
+    hashed in text order, so moving a definition verbatim keeps the
+    fingerprint. "" for an op defined outside the package or nested in
+    a function. Computed on first use and memoized for the process."""
+    return _source(pkg).fingerprint(op.fn.__module__, op.fn.__qualname__)
+
+
 def _load_fp_book(root: str) -> dict[str, dict]:
     try:
         with open(os.path.join(root, BOOK)) as f:
@@ -135,11 +288,10 @@ def heal_fp_book(
     since_round that is not an int — a hand-edit or merge mangle must
     demote and heal, never crash).
 
-    src_fp covers the op function's source plus any helpers it declared
-    via register(deps=...). An edit inside an undeclared helper is not
-    seen: declare the helper, or bump since_round by hand in the same
-    commit. Comment and docstring edits bump too: one safe-side re-check
-    beats parsing intent."""
+    src_fp covers every package definition the op reaches (see
+    ``src_fp``), so an edit to a shared helper re-fronts every op that
+    reaches it. Comment and docstring edits bump too: one safe-side
+    re-check beats parsing intent."""
     book = _load_fp_book(root)
     rows_fps = _rows_snapshot_fps(root)
     for key, op in ops.items():
@@ -152,18 +304,14 @@ def heal_fp_book(
             # no green row to protect) or no snapshot file on disk:
             # nothing to fingerprint, keep any on-disk entry as-is.
             continue
-        ent = book.get(key)
+        ent, src = book.get(key), src_fp(op)
         if (
             not isinstance(ent, dict)
             or ent.get("fp") != fp
             or not isinstance(ent.get("since_round"), int)
-            or (op.src_fp and ent.get("src_fp") != op.src_fp)
+            or (src and ent.get("src_fp") != src)
         ):
-            book[key] = {
-                "fp": fp,
-                "since_round": latest + 1,
-                "src_fp": op.src_fp,
-            }
+            book[key] = {"fp": fp, "since_round": latest + 1, "src_fp": src}
     return book
 
 

@@ -948,9 +948,6 @@ def minhash_neardup_pairs(
 @register(
     "op79_minhash_neardup",
     oracle=None,  # ROWS: LSH banding is approximate
-    # the plan lives in the kernel (round-12 deps rule, applied to the
-    # dedup family in round 14): a signature/banding rewrite re-fronts
-    deps=(minhash_neardup_pairs,),
 )
 def op79_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH candidate pairs over the documents table (see
@@ -1023,7 +1020,6 @@ def simhash_signatures(
 @register(
     "op88_simhash_neardup",
     oracle=None,  # ROWS: xxhash64 has no DuckDB equiv
-    deps=(simhash_signatures,),  # the plan lives in the kernel
 )
 def op88_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-duplicate pairs: 64-bit signatures, pigeonhole
@@ -1201,11 +1197,7 @@ def ngram_jaccard_pairs(
     )
 
 
-@register(
-    "op89_ngram_jaccard",
-    oracle=_OP89_SQL,
-    deps=(ngram_jaccard_pairs, ngram_jaccard_pairs_ctes),
-)
+@register("op89_ngram_jaccard", oracle=_OP89_SQL)
 def op89_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-3-gram Jaccard similarity for same-source doc pairs with
     J ≥ 0.1 — exact set-overlap near-dup scoring (see
@@ -1274,7 +1266,6 @@ def lsh_neardup_pairs(
 @register(
     "op90_embedding_neardup_lsh",
     oracle=None,  # ROWS: LSH is approximate
-    deps=(lsh_neardup_pairs,),  # the plan lives in the kernel
 )
 def op90_embedding_neardup_lsh(
     spark: SparkSession, sf_dir: str, plant: bool | None = None
@@ -1363,7 +1354,6 @@ def op90_gate_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "op94_doc_fingerprint",
     oracle=None,  # ROWS: xxhash64 not in DuckDB
-    deps=(winnow_fingerprints,),  # the plan lives in the kernel
 )
 def op94_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprints per document (rolling 5-gram hash, window

@@ -19,17 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ocdb_server_spark.io import load_table
-from ocdb_server_spark.plans.expr_compiler import compile_expr
 from ocdb_server_spark.registry import register
-from ocdb_server_spark.search import (
-    DatasetQuery,
-    DatasetQueryResult,
-    SearchColumns,
-    _keyset_after,
-    _members,
-    _predicate,
-    find_datasets,
-)
+from ocdb_server_spark.search import DatasetQuery, SearchColumns, find_datasets
 
 
 @register(
@@ -243,23 +234,7 @@ LIMIT 50
 """
 
 
-@register(
-    "op267_find_datasets_geojson",
-    oracle=_OP267_SQL,
-    # the registered plan IS the serving surface: the request compiler,
-    # the predicate composer, the cursor builder, the page+geojson
-    # assembly and the total_count read all live in search.py /
-    # plans.expr_compiler — a rewrite there must re-front this op
-    # exactly like an oracle edit.
-    deps=(
-        find_datasets,
-        DatasetQueryResult,
-        _predicate,
-        _members,
-        _keyset_after,
-        compile_expr,
-    ),
-)
+@register("op267_find_datasets_geojson", oracle=_OP267_SQL)
 def op267_find_datasets_geojson(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GET /datasets?geojson=true, end to end (ref: find_datasets [U]
     attaching per-dataset lon/lat points — SURVEY.md §3.1 step 7):

@@ -24,7 +24,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ocdb_server_spark.functions import arrow_rows as _arrow_rows
 from ocdb_server_spark.functions.arrow_rows import record_batch, row_schema
 from ocdb_server_spark.io import load_table
 from ocdb_server_spark.registry import register
@@ -201,7 +200,6 @@ def _holt(et: str, ys: list[int], ts: list[int]) -> tuple | None:
 @register(
     "op231_holt_forecast",
     oracle=_op231_sql(),
-    deps=(_daily_series, _series_stage, _arrow_rows, _forecast_ddl, _f2, _holt),
 )
 def op231_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HOLT LINEAR (double-exponential) forecasting of daily event
@@ -308,8 +306,6 @@ def _hw_additive(et: str, ys: list[int], ts: list[int]) -> tuple:
 @register(
     "op235_holt_winters_seasonal",
     oracle=_op235_sql(),
-    deps=(_daily_series, _series_stage, _arrow_rows, _forecast_ddl, _f2,
-          _seasonal_init, _hw_additive),
 )
 def op235_holt_winters_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SEASONAL Holt-Winters (additive, weekly m=7, α=β=γ=1/2) —
@@ -374,7 +370,7 @@ FROM w WHERE n = {_SLOPE_W}
 """
 
 
-@register("op247_rolling_slope", oracle=_OP247_SQL, deps=(_daily_series,))
+@register("op247_rolling_slope", oracle=_OP247_SQL)
 def op247_rolling_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLING OLS SLOPE: per-series trailing-7-day least-squares
     trend of daily event volume — the "is this growing and how fast"
@@ -481,8 +477,6 @@ def _holt_damped(et: str, ys: list[int], ts: list[int]) -> tuple | None:
 @register(
     "op253_holt_damped",
     oracle=_op253_sql(),
-    deps=(_daily_series, _series_stage, _arrow_rows, _forecast_ddl, _f2,
-          _holt_damped),
 )
 def op253_holt_damped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DAMPED-TREND Holt forecasting of daily event volumes per
@@ -608,8 +602,6 @@ def _hw_multiplicative(et: str, ys: list[int], ts: list[int]) -> tuple:
 @register(
     "op254_holt_winters_multiplicative",
     oracle=_op254_sql(),
-    deps=(_daily_series, _series_stage, _arrow_rows, _forecast_ddl, _f2,
-          _seasonal_init, _hw_multiplicative),
 )
 def op254_holt_winters_multiplicative(
     spark: SparkSession, sf_dir: str
@@ -748,8 +740,6 @@ def _hw_damped_multiplicative(et: str, ys: list[int], ts: list[int]) -> tuple:
 @register(
     "op257_holt_winters_damped_multiplicative",
     oracle=_op257_sql(),
-    deps=(_daily_series, _series_stage, _arrow_rows, _forecast_ddl, _f2,
-          _seasonal_init, _hw_damped_multiplicative),
 )
 def op257_holt_winters_damped_multiplicative(
     spark: SparkSession, sf_dir: str
@@ -889,9 +879,7 @@ def _croston(k: int, ys: list[int], ts: list[int]) -> tuple | None:
     return (k, nd, z, p, z * 1000 // p, z * 3000 // (4 * p))
 
 
-@register(
-    "op259_croston_sba", oracle=_OP259_SQL, deps=(_series_stage, _arrow_rows, _croston)
-)
+@register("op259_croston_sba", oracle=_OP259_SQL)
 def op259_croston_sba(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CROSTON / SBA intermittent-demand forecasting — the forecasting
     family's sparse-series member: op231/op253/op254/op257 smooth EVERY

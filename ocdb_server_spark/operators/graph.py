@@ -403,11 +403,7 @@ def _adjacency_fits_broadcast(
     return 2 * edges.count() * 8 <= threshold
 
 
-@register(
-    "op220_triangle_count",
-    oracle=_OP220_SQL,
-    deps=(_triangle_counts, _adjacency_fits_broadcast),
-)
+@register("op220_triangle_count", oracle=_OP220_SQL)
 def op220_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node TRIANGLE COUNTS over the supplier co-supply graph
     (suppliers sharing ≥1 part) — the clustering-coefficient /
@@ -740,13 +736,7 @@ FROM comp GROUP BY component HAVING COUNT(*) > 1
 """
 
 
-@register(
-    "op96_dedup_components",
-    oracle=_OP96_SQL,
-    # both kernels the plan lives in: the candidate-pair generator and
-    # the iterative min-label CC (round-14 helper audit)
-    deps=(connected_components, ngram_jaccard_pairs),
-)
+@register("op96_dedup_components", oracle=_OP96_SQL)
 def op96_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clusters over documents: exact 3-gram-Jaccard ≥ 0.5
     candidate pairs (ngram_jaccard_pairs, cross-source) → connected

@@ -23,13 +23,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from ocdb_server_spark.functions.cdc import (
-    apply_changes,
-    apply_changes_incremental,
-    collapse_feed,
-    finish_store,
-    seed_store,
-)
+from ocdb_server_spark.functions.cdc import apply_changes
 from ocdb_server_spark.io import load_table
 from ocdb_server_spark.registry import register
 from ocdb_server_spark.scratch import scratch_dir
@@ -1351,11 +1345,7 @@ WHERE last.op IS NULL OR last.op <> 'D'
 """
 
 
-@register(
-    "op264_cdc_apply_changes",
-    oracle=_OP264_SQL,
-    deps=(apply_changes, collapse_feed, cdc_changes_feed, cdc_base_snapshot),
-)
+@register("op264_cdc_apply_changes", oracle=_OP264_SQL)
 def op264_cdc_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Apply a CDC change feed to a base snapshot — the MERGE INTO /
     APPLY CHANGES semantics of a lakehouse upsert sink, batch-shaped
@@ -1401,19 +1391,7 @@ def op264_cdc_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "op265_stream_cdc_apply_changes",
-    oracle=_OP264_SQL,
-    deps=(
-        stream_cdc_apply_changes,
-        apply_changes_incremental,
-        collapse_feed,
-        seed_store,
-        finish_store,
-        cdc_changes_feed,
-        cdc_base_snapshot,
-    ),
-)
+@register("op265_stream_cdc_apply_changes", oracle=_OP264_SQL)
 def op265_stream_cdc_apply_changes(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:

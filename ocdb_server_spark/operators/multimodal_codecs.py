@@ -18,6 +18,10 @@ generate stage and a decode stage run as chained mapInArrow stages in
 the same task — payload bytes live and die inside one task (never
 shuffled); only fixed-width feature rows continue. Each op supplies
 only its per-asset kernels.
+
+Each op's fingerprint (evidence.src_fp) reaches the codec functions
+its kernels call, so a parser rewrite re-fronts the op in the driver
+sweep exactly as an oracle edit does.
 """
 
 from __future__ import annotations
@@ -25,20 +29,8 @@ from __future__ import annotations
 import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
-from ocdb_server_spark.functions import arrow_rows as _arrow_rows
 from ocdb_server_spark.functions.arrow_rows import map_rows
 from ocdb_server_spark.registry import register
-
-# Codec KERNELS declared as register deps: each op's certification is
-# built on these parsers, so a kernel rewrite must re-front the op in
-# the driver sweep exactly as an oracle edit does. Whole modules are
-# declared — any edit to the kernel file demotes every op built on it
-# (deps fold inspect.getsource, which accepts modules).
-from ocdb_server_spark.sources import codecs as _codecs_kernel
-from ocdb_server_spark.sources import flac as _flac_kernel
-from ocdb_server_spark.sources import gif as _gif_kernel
-from ocdb_server_spark.sources import jpeg as _jpeg_kernel
-from ocdb_server_spark.sources import png as _png_kernel
 from ocdb_server_spark.sources.codecs import (
     decode_bmp,
     decode_wav,
@@ -131,13 +123,7 @@ def _wav_features(aid: int, payload: bytes) -> list[tuple]:
              int(np.sum(s64 * s64)), int(np.max(np.abs(s64))))]
 
 
-@register(
-    "op195_wav_decode_features",
-    oracle=_OP195_SQL,
-    # plan + certification live in the shared frame, the kernels and
-    # the WAV codec
-    deps=(_codec_frame, _arrow_rows, _wav_asset, _wav_features, _codecs_kernel),
-)
+@register("op195_wav_decode_features", oracle=_OP195_SQL)
 def op195_wav_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio decode, for real: 200 standards-conformant mono PCM16 WAV
     files (samples from a closed-form integer formula) are encoded and
@@ -206,11 +192,7 @@ def _bmp_stats(aid: int, payload: bytes) -> list[tuple]:
     return [(aid, w, h, int(sums[0]), int(sums[1]), int(sums[2]))]
 
 
-@register(
-    "op196_bmp_decode_stats",
-    oracle=_OP196_SQL,
-    deps=(_codec_frame, _arrow_rows, _bmp_asset, _bmp_stats, _codecs_kernel),
-)
+@register("op196_bmp_decode_stats", oracle=_OP196_SQL)
 def op196_bmp_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image decode, for real: 60 conformant 24-bit BMPs (pixel values
     from a closed-form integer formula; widths chosen to exercise the
@@ -257,11 +239,7 @@ def _dominant_freq(aid: int, payload: bytes) -> list[tuple]:
     return [(aid, n, bin_, bin_ * rate / n)]
 
 
-@register(
-    "op197_audio_dominant_freq",
-    oracle=_OP197_SQL,
-    deps=(_codec_frame, _arrow_rows, _sine_asset, _dominant_freq, _codecs_kernel),
-)
+@register("op197_audio_dominant_freq", oracle=_OP197_SQL)
 def op197_audio_dominant_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSP feature extraction, certified: pure sine tones planted
     EXACTLY on FFT bins (bin 3..81 of a 1024-sample frame) are
@@ -331,11 +309,7 @@ def _bmp_resize_stats(aid: int, payload: bytes) -> list[tuple]:
     return [(aid, ow, oh, int(sums[0]), int(sums[1]), int(sums[2]))]
 
 
-@register(
-    "op198_bmp_resize",
-    oracle=_OP198_SQL,
-    deps=(_codec_frame, _arrow_rows, _bmp_asset, _bmp_resize_stats, _codecs_kernel),
-)
+@register("op198_bmp_resize", oracle=_OP198_SQL)
 def op198_bmp_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image RESIZE, for real: the decoded BMPs downscale 2× by
     integer-exact box averaging (sum of each 2×2 block, floor-div 4 —
@@ -395,11 +369,7 @@ def _loudest_frames(aid: int, payload: bytes) -> list[tuple]:
             for rnk, j in enumerate(order[:_FR_TOPK], start=1)]
 
 
-@register(
-    "op199_audio_loudest_frames",
-    oracle=_OP199_SQL,
-    deps=(_codec_frame, _arrow_rows, _wav_asset, _loudest_frames, _codecs_kernel),
-)
+@register("op199_audio_loudest_frames", oracle=_OP199_SQL)
 def op199_audio_loudest_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio FRAME-SAMPLING, for real: decoded PCM splits into
     32-sample frames and the 3 loudest frames per asset are reported
@@ -440,12 +410,7 @@ FROM wav w JOIN bmp b ON w.asset_id = b.asset_id
 """
 
 
-@register(
-    "op200_multimodal_fuse",
-    oracle=_OP200_SQL,
-    deps=(_codec_frame, _arrow_rows, _wav_asset, _wav_features, _bmp_asset, _bmp_stats,
-          _codecs_kernel),
-)
+@register("op200_multimodal_fuse", oracle=_OP200_SQL)
 def op200_multimodal_fuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-modal fusion: decoded AUDIO features join decoded IMAGE
     features on asset_id — the end-to-end multimodal pipeline (two
@@ -532,7 +497,6 @@ FROM dcs d JOIN acs a ON d.i = a.i
 @register(
     "op202_jpeg_decode_stats",
     oracle=_op202_sql(),
-    deps=(_codec_frame, _arrow_rows, _jpeg_ac_asset, _jpeg_coef_stats, _jpeg_kernel),
 )
 def op202_jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COMPRESSED-format decode, for real: 80 baseline JPEGs are built
@@ -595,12 +559,7 @@ _GRAY_STATS_DDL = (
 )
 
 
-@register(
-    "op203_jpeg_pixel_decode",
-    oracle=_OP203_SQL,
-    deps=(_codec_frame, _arrow_rows, _jpeg_dc_asset, _jpeg_pixel_stats, _gray_stats,
-          _jpeg_kernel),
-)
+@register("op203_jpeg_pixel_decode", oracle=_OP203_SQL)
 def op203_jpeg_pixel_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JPEG PIXEL path, hash-certified: DC-only baseline JPEGs decode
     to exactly-known flat blocks — a dequantized DC of 16·qdc yields
@@ -654,11 +613,7 @@ FROM px GROUP BY i
 """
 
 
-@register(
-    "op205_png_decode_stats",
-    oracle=_OP205_SQL,
-    deps=(_codec_frame, _arrow_rows, _png_asset, _png_stats, _gray_stats, _png_kernel),
-)
+@register("op205_png_decode_stats", oracle=_OP205_SQL)
 def op205_png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PNG decode, for real and LOSSLESS: 60 grayscale PNGs (pixels
     from a closed-form formula, per-row filter types cycling through
@@ -721,11 +676,7 @@ FROM px GROUP BY i
 """
 
 
-@register(
-    "op222_gif_decode_stats",
-    oracle=_OP222_SQL,
-    deps=(_codec_frame, _arrow_rows, _gif_asset, _gif_stats, _gray_stats, _gif_kernel),
-)
+@register("op222_gif_decode_stats", oracle=_OP222_SQL)
 def op222_gif_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GIF decode for real — the THIRD compressed image format and the
     remaining classic compression family: LZW with variable-width
@@ -819,13 +770,7 @@ def _flac_features(aid: int, payload: bytes) -> list[tuple]:
              int(np.max(np.abs(s64))), int(s64[0]), int(s64[-1]))]
 
 
-@register(
-    "op251_flac_decode_features",
-    oracle=_OP251_SQL,
-    # certification rides the FLAC kernel: a rewrite of the parser
-    # re-fronts this op
-    deps=(_codec_frame, _arrow_rows, _flac_asset, _flac_features, _flac_kernel),
-)
+@register("op251_flac_decode_features", oracle=_OP251_SQL)
 def op251_flac_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FLAC audio decode, for real — compressed lossless audio:
     120 conformant 16-bit FLAC streams (90 mono + 30 STEREO,
@@ -923,12 +868,7 @@ def _op104_decode(aid: int, modality: str, mime: str,
     raise ValueError(f"undecodable mime {mime!r}")
 
 
-@register(
-    "op104_multimodal_decode",
-    oracle=_OP104_SQL,
-    deps=(_codec_frame, _arrow_rows, _op104_asset, _op104_decode, _flac_kernel,
-          _png_kernel),
-)
+@register("op104_multimodal_decode", oracle=_OP104_SQL)
 def op104_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal binary-column pipeline end-to-end, on REAL codecs:
     ONE asset table carries mixed modalities in a single opaque
@@ -1000,11 +940,7 @@ def _sampled_frames(aid: int, payload: bytes) -> list[tuple]:
              int(sum(px.astype(np.int64).sum() for _w, _h, px in kept)))]
 
 
-@register(
-    "op130_multimodal_frame_sample",
-    oracle=_OP130_SQL,
-    deps=(_codec_frame, _arrow_rows, _anim_gif_asset, _sampled_frames, _gif_kernel),
-)
+@register("op130_multimodal_frame_sample", oracle=_OP130_SQL)
 def op130_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video-style frame sampling on a REAL container: 24 multi-frame
     animated GIF89a streams (sources/gif.py

@@ -21,22 +21,13 @@ from collections.abc import Iterator
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ocdb_server_spark.functions import arrow_rows as _arrow_rows
 from ocdb_server_spark.functions.arrow_rows import map_partitions, map_rows
 from ocdb_server_spark.io import load_table
 from ocdb_server_spark.registry import register
 from ocdb_server_spark.scratch import scratch_dir
 
-# Codec kernels declared as register deps: each op is certified through
-# the parsers it runs (op03/op204/op258 through SeaBASS, op252/op258
-# through Avro OCF, op260 through BGZF, op261 through seekable zstd),
-# so a kernel rewrite re-fronts those ops in the driver sweep exactly
-# like an oracle edit. Deps are shallow by design, so the shared
-# line-batching kernel under BGZF and zstd is declared explicitly.
 from ocdb_server_spark.sources import avro_ocf as _avro_kernel
 from ocdb_server_spark.sources import bgzf as _bgzf_kernel
-from ocdb_server_spark.sources import linebatch as _linebatch_kernel
-from ocdb_server_spark.sources import seabass as _seabass_kernel
 from ocdb_server_spark.sources import zstd_seekable as _zstd_kernel
 
 
@@ -87,11 +78,7 @@ FROM (VALUES
 """
 
 
-@register(
-    "op03_source_csv_ingest",
-    oracle=_OP03_SQL,
-    deps=(_seabass_kernel,),
-)
+@register("op03_source_csv_ingest", oracle=_OP03_SQL)
 def op03_source_csv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SeaBASS-style delimited ingest: header-driven delimiter, missing
     token → NULL, typed records (ref: SbFileReader.read [U]).
@@ -383,11 +370,7 @@ GROUP BY o.dataset_id, p.pgroup, o.field
 """
 
 
-@register(
-    "op204_records_long_format",
-    oracle=_OP204_SQL,
-    deps=(seabass_fixture_corpus, _seabass_kernel),
-)
+@register("op204_records_long_format", oracle=_OP204_SQL)
 def op204_records_long_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's ACTUAL storage model, end to end (round-5
     verdict item 5; SURVEY §1.3/§7.2): three heterogeneous
@@ -464,11 +447,7 @@ def _docs_lang_agg(back: DataFrame) -> DataFrame:
     )
 
 
-@register(
-    "op207_gzip_jsonl_ingest",
-    oracle=_DOCS_LANG_AGG_SQL,
-    deps=(_docs_lang_agg,),
-)
+@register("op207_gzip_jsonl_ingest", oracle=_DOCS_LANG_AGG_SQL)
 def op207_gzip_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compressed text ingest, end to end: documents are exported as
     GZIP-COMPRESSED JSON-LINES (the de-facto interchange format of
@@ -508,11 +487,7 @@ def op207_gzip_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------- op256: SPLITTABLE compressed text ingest
 
 
-@register(
-    "op256_bzip2_splittable_ingest",
-    oracle=_DOCS_LANG_AGG_SQL,
-    deps=(_docs_lang_agg,),
-)
+@register("op256_bzip2_splittable_ingest", oracle=_DOCS_LANG_AGG_SQL)
 def op256_bzip2_splittable_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPLITTABLE compressed text interchange — op207's documented
     gzip trade closed (round-7 verdict "missing" item 4): the same
@@ -828,15 +803,7 @@ def read_archive_lang_agg(spark: SparkSession, paths: list[str], archive) -> Dat
     return _docs_lang_agg(back)
 
 
-_ARCHIVE_DEPS = (_docs_lang_agg, _publish, _docs_jsonl, export_docs_archive,
-                 read_archive_lang_agg, _arrow_rows, _linebatch_kernel)
-
-
-@register(
-    "op260_bgzf_splittable_gzip",
-    oracle=_DOCS_LANG_AGG_SQL,
-    deps=(*_ARCHIVE_DEPS, BgzfArchive, _bgzf_kernel),
-)
+@register("op260_bgzf_splittable_gzip", oracle=_DOCS_LANG_AGG_SQL)
 def op260_bgzf_splittable_gzip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPLITTABLE GZIP, completing the op207/op256 story for gzip
     itself: the documents table exported as ONE BGZF file
@@ -878,11 +845,7 @@ def op260_bgzf_splittable_gzip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_archive_lang_agg(spark, [path], BgzfArchive)
 
 
-@register(
-    "op261_zstd_seekable_ingest",
-    oracle=_DOCS_LANG_AGG_SQL,
-    deps=(*_ARCHIVE_DEPS, ZstdArchive, _zstd_kernel),
-)
+@register("op261_zstd_seekable_ingest", oracle=_DOCS_LANG_AGG_SQL)
 def op261_zstd_seekable_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPLITTABLE ZSTD — op260's path for the codec large corpora
     actually ship: the documents table exported as seekable zstd
@@ -1160,12 +1123,7 @@ def _avro_read_parts(content: bytes) -> list[tuple]:
     ]
 
 
-@register(
-    "op252_avro_roundtrip",
-    oracle=_OP252_SQL,
-    deps=(_avro_write_parts, _avro_read_parts, _publish, _arrow_rows,
-          _avro_kernel),
-)
+@register("op252_avro_roundtrip", oracle=_OP252_SQL)
 def op252_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AVRO Object Container File round-trip with SCHEMA EVOLUTION, in
     pure Python: documents is exported executor-side as one OCF file
@@ -1302,12 +1260,7 @@ def _obs_avro_read(content: bytes) -> list[tuple]:
     ]
 
 
-@register(
-    "op258_avro_records_sink",
-    oracle=_OP258_SQL,
-    deps=(_obs_avro_write, _obs_avro_read, _publish, _arrow_rows,
-          seabass_fixture_corpus, _avro_kernel, _seabass_kernel),
-)
+@register("op258_avro_records_sink", oracle=_OP258_SQL)
 def op258_avro_records_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OCF Avro SINK pairing for the open-schema records table — the
     op204 ↔ op252 gap named in SURVEY §7.8 (the writer existed, only

@@ -262,7 +262,6 @@ def pq_topk(
 @register(
     "op180_pq_ann_knn",
     oracle=None,  # ROWS: PQ codes are approximate
-    deps=(pq_topk,),  # the plan lives in the kernel (round-12 deps rule)
 )
 def op180_pq_ann_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ-ADC approximate top-10 cosine neighbors of vec_id=0 over the
@@ -350,8 +349,8 @@ def bm25_scored_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     query over every document containing ≥1 query term — op183's
     kernel, SHARED with op263's lexical leg (round-12 review: the
     floor(x·1e6+0.5) quantization discipline must live in one place).
-    Both callers declare this via register(deps=...) so a rewrite
-    here re-fronts both for re-certification. Plan shape: see
+    Both callers reach it, so a rewrite here re-fronts both for
+    re-certification (evidence.src_fp). Plan shape: see
     op183's docstring — the explode is pruned to the query-term
     subset BEFORE the tf shuffle, df/stats broadcast back."""
     d = load_table(spark, sf_dir, "documents").select(
@@ -386,7 +385,7 @@ def bm25_scored_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("op183_bm25_topk", oracle=_OP183_SQL, deps=(bm25_scored_docs,))
+@register("op183_bm25_topk", oracle=_OP183_SQL)
 def op183_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-20 for a fixed multi-term query over documents — the
     ranked-retrieval scoring the reference's search surface implies
@@ -403,9 +402,8 @@ def op183_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row broadcasts, and top-k plans as TakeOrderedAndProject.
     Per-term scores quantize floor(x·1e6+0.5)→int64 pre-sum
     (op165's discipline) so the 3-term addition is order-free and
-    cross-engine exact. Scoring kernel extracted to bm25_scored_docs
-    in round 12 (shared with op263's lexical leg; declared as a dep
-    so kernel rewrites re-front both ops)."""
+    cross-engine exact. The scorer is bm25_scored_docs, shared with
+    op263's lexical leg."""
     return (
         bm25_scored_docs(spark, sf_dir)
         .orderBy(F.col("score").desc(), "doc_id")
@@ -676,11 +674,7 @@ LIMIT {_RRF_TOPK}
 """
 
 
-@register(
-    "op263_rrf_hybrid_topk",
-    oracle=_OP263_SQL,
-    deps=(bm25_scored_docs,),
-)
+@register("op263_rrf_hybrid_topk", oracle=_OP263_SQL)
 def op263_rrf_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval: BM25 lexical ranking (op183's scorer, same
     terms/quantization) ⊕ dense cosine ranking (op80's scorer, same
@@ -794,7 +788,6 @@ def op263_rrf_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "op266_rrf_hybrid_serving",
     oracle=None,  # ROWS: the dense leg is PQ-approximate by design
-    deps=(bm25_scored_docs, pq_topk),
 )
 def op266_rrf_hybrid_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     """op263's RRF hybrid retrieval with the dense leg SERVED from
@@ -1311,10 +1304,6 @@ def _ivf_k_for(sf_dir: str) -> int:
 @register(
     "op95_sim_ivf_knn",
     oracle=None,  # ROWS: IVF probe is approximate
-    # the plan lives in the kernel (round-12 deps rule); _ivf_k_for
-    # shapes the probe set and was the one undeclared call (round-14
-    # helper audit)
-    deps=(ivf_topk, _ivf_k_for),
 )
 def op95_sim_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-10 cosine neighbors of the vec_id=0 query

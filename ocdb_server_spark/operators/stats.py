@@ -2455,7 +2455,7 @@ FROM h
 """
 
 
-@register("op98_train_shard_assign", oracle=_OP98_SQL, deps=(shard_assign,))
+@register("op98_train_shard_assign", oracle=_OP98_SQL)
 def op98_train_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic training-data shuffle + sharding: every doc gets a
     stable (shard, pos) from the md5 of its id — reproducible across

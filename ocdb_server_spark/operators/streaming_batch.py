@@ -28,11 +28,7 @@ from ocdb_server_spark.streaming.jobs import (
     SESS_GAP_MS,
     SESS_WM_DELAY_MS,
     SQL_QUANT_VALUE,
-    _stream_events,
-    _stream_source,
     stream_exactly_once_manifest_sink,
-    stream_static_join,
-    stream_stream_join,
     stream_tws_centroid_maintenance,
     stream_tws_mapstate_type_stats,
     stream_tws_session_timers,
@@ -210,7 +206,6 @@ def op74_stream_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFr
 
 @register(
     "op127_stream_static_join",
-    deps=(stream_static_join, _stream_events, _stream_source),
     oracle=f"""
     SELECT c_mktsegment, event_type,
            CAST(COUNT(*) AS BIGINT) AS n,
@@ -243,7 +238,6 @@ def op127_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "op146_stream_stream_join",
-    deps=(stream_stream_join, _stream_events, _stream_source),
     oracle="""
     SELECT v.user_id,
            v.event_id AS view_id,
@@ -303,7 +297,6 @@ def op146_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "op206_stream_tws_user_stats",
-    deps=(stream_tws_user_stats, _stream_events, _stream_source, SQL_QUANT_VALUE),
     oracle=f"""
     SELECT user_id,
            CAST(COUNT(*) AS BIGINT) AS n_events,
@@ -337,7 +330,6 @@ def op206_stream_tws_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "op208_stream_centroid_maintenance",
-    deps=(stream_tws_centroid_maintenance, _stream_source),
     oracle="""
     WITH z AS (
       SELECT label,
@@ -372,7 +364,6 @@ def op208_stream_centroid_maintenance(spark: SparkSession, sf_dir: str) -> DataF
 
 @register(
     "op218_stream_tws_topk",
-    deps=(stream_tws_topk_liststate, _stream_events, _stream_source, SQL_QUANT_VALUE),
     oracle=f"""
     WITH q AS (
       SELECT user_id, event_id,
@@ -406,7 +397,6 @@ def op218_stream_tws_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "op219_stream_tws_mapstate",
-    deps=(stream_tws_mapstate_type_stats, _stream_events, _stream_source, SQL_QUANT_VALUE),
     oracle=f"""
     SELECT user_id, event_type,
            CAST(COUNT(*) AS BIGINT) AS n,
@@ -472,7 +462,6 @@ WHERE s.grp < l.lg OR (s.end_us // 1000 + {SESS_GAP_MS}) <= wm.wm_ms
 @register(
     "op226_stream_session_timers",
     oracle=_op226_sql(),
-    deps=(stream_tws_session_timers, _stream_events, _stream_source, SQL_QUANT_VALUE),
 )
 def op226_stream_session_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time sessionization with TIMER-driven close — the last
@@ -492,7 +481,6 @@ def op226_stream_session_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "op234_stream_exactly_once_sink",
-    deps=(stream_exactly_once_manifest_sink, _stream_events, _stream_source, SQL_QUANT_VALUE),
     oracle=f"""
     SELECT event_type,
            CAST(COUNT(*) AS BIGINT) AS n,

@@ -1854,7 +1854,7 @@ FROM f
 """
 
 
-@register("op92_quality_score", oracle=_OP92_SQL, deps=(quality_cols,))
+@register("op92_quality_score", oracle=_OP92_SQL)
 def op92_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document quality scoring from shape features: length, average
     word length (chars net of single-space separators), stopword ratio,
@@ -1929,11 +1929,7 @@ FROM h
 """
 
 
-@register(
-    "op105_corpus_clean_pipeline",
-    oracle=_OP105_SQL,
-    deps=(quality_cols, shard_assign),
-)
+@register("op105_corpus_clean_pipeline", oracle=_OP105_SQL)
 def op105_corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The end-to-end training-corpus cleaning pipeline as ONE lazy
     plan: quality-score → threshold filter → exact dedup → deterministic

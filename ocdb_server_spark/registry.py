@@ -12,6 +12,7 @@ weaker rows-only check (SURVEY.md §2, "ROWS" legend).
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -22,17 +23,13 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 @dataclass(frozen=True)
 class Op:
+    """A registered operator. Its plan fingerprint is
+    ``evidence.src_fp(op)``, derived from the source on demand."""
+
     name: str
     fn: QueryFn
     oracle: str | None  # DuckDB SQL, or None → rows-only check
     doc: str = ""
-    # sha256[:16] of inspect.getsource(fn) (plus declared deps) at
-    # registration — the REGISTERED PLAN's fingerprint. Any edit to the
-    # op's source re-fronts it in the driver sweep even when its oracle
-    # or snapshot is unchanged (see evidence.heal_fp_book). ""
-    # when the source is unavailable (REPL-defined fn) — such ops keep
-    # checker-only tracking.
-    src_fp: str = ""
 
 
 REGISTRY: dict[str, Op] = {}
@@ -71,48 +68,13 @@ def release_pool() -> int:
     return n
 
 
-def register(
-    name: str,
-    oracle: str | None = None,
-    deps: tuple = (),
-) -> Callable[[QueryFn], QueryFn]:
-    """Register an operator implementation under a stable SURVEY.md §2 key.
-
-    deps: helper functions/classes the registered plan lives in. The op
-    body is often a thin wrapper around a shared helper (op264's
-    apply_changes, op95's IVF builders), so each dep's source is folded
-    into src_fp and editing the helper demotes every op that declared
-    it. Opt-in and shallow by design: a dep's own
-    callees are NOT traversed (transitive hashing would demote whole
-    modules on any edit); helpers not declared anywhere still need
-    the op261-style hand-bump when rewritten — declare them instead.
-    """
+def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
+    """Register an operator implementation under a stable SURVEY.md §2
+    key, with its DuckDB oracle SQL (None → rows-only check)."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate operator key: {name}")
-
-        import functools
-        import hashlib
-        import inspect
-
-        try:
-            # The UNWRAPPED fn: its source segment (decorator line
-            # included) IS the registered plan. linecache makes the
-            # per-op getsource calls one file read per module.
-            src = inspect.getsource(fn)
-        except (OSError, TypeError):
-            src = ""  # fn source unavailable — checker-only tracking
-        if src:
-            # deps fold in best-effort: ONE unhashable dep (a C
-            # extension, a builtin) must not zero the whole op's
-            # fingerprint, which would disable plan-rewrite demotion
-            for dep in deps:
-                try:
-                    src += inspect.getsource(dep)
-                except (OSError, TypeError):
-                    src += f"\x00<unhashable dep {getattr(dep, '__name__', dep)!r}>"
-        src_fp = hashlib.sha256(src.encode()).hexdigest()[:16] if src else ""
 
         @functools.wraps(fn)
         def wrapped(
@@ -129,7 +91,6 @@ def register(
             fn=wrapped,
             oracle=oracle,
             doc=fn.__doc__ or "",
-            src_fp=src_fp,
         )
         return wrapped
 

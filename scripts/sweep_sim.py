@@ -50,10 +50,12 @@ def main() -> None:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
 
     t_start = time.perf_counter()
-    # Bare session: exactly what the driver builds (no engine confs).
+    # Bare session: exactly what the driver builds (no engine confs),
+    # on the box's cores (SPARK_GRAFT_CPUS, as get_spark reads it).
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = (
         SparkSession.builder.appName("sweep_sim")
-        .master("local[32]")
+        .master(f"local[{cpus}]")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

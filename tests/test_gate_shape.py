@@ -160,10 +160,10 @@ def test_sweep_order_demotes_oracle_upgraded_ops(tmp_path):
 
 
 def test_sweep_order_demotes_rewritten_oracles(tmp_path):
-    """Round-9 ADVICE rule 2: an op whose SQL oracle TEXT changed after
-    its latest SQL-green row is uncertified until the new text's hash
-    gate runs. oracle_fp.json records {fp, since_round}; a green row
-    with round < since_round certified a DIFFERENT oracle. Also pins
+    """An op whose SQL oracle TEXT changed after its latest SQL-green
+    row is uncertified until the new text's hash gate runs.
+    oracle_fp.json records {fp, since_round}; a green row with
+    round < since_round certified a DIFFERENT oracle. Also pins
     the self-maintenance path: a book whose fp no longer matches the
     registered oracle is refreshed in-place (since_round = latest
     recorded round + 1) before the demotion check."""
@@ -172,6 +172,7 @@ def test_sweep_order_demotes_rewritten_oracles(tmp_path):
     from ocdb_server_spark.evidence import (
         _oracle_fp,
         certified_rounds,
+        src_fp,
         sweep_order,
         write_fp_book,
     )
@@ -189,7 +190,7 @@ def test_sweep_order_demotes_rewritten_oracles(tmp_path):
     fpdir = tmp_path / "ocdb_server_spark"
     fpdir.mkdir()
     cur_fp = _oracle_fp(REGISTRY[sql_op].oracle)
-    cur_src = REGISTRY[sql_op].src_fp
+    cur_src = src_fp(REGISTRY[sql_op])
 
     # Case 1: book says the current text went live AFTER the green row
     # → demoted to the front.
@@ -233,9 +234,9 @@ def test_sweep_order_demotes_rewritten_oracles(tmp_path):
 
 
 def test_sweep_order_demotes_rewritten_rows_snapshots(tmp_path):
-    """Round-10 verdict item 4: a ROWS-only op's checker is its golden
-    snapshot entry (tests/rows_snapshot_sf0.001.json). Rewriting that
-    entry must re-front the op exactly as a rewritten SQL oracle does
+    """A ROWS-only op's checker is its golden snapshot entry
+    (tests/rows_snapshot_sf0.001.json). Rewriting that entry must
+    re-front the op exactly as a rewritten SQL oracle does
     — its old rows-green gated a DIFFERENT snapshot. Mirrors
     test_sweep_order_demotes_rewritten_oracles with the snapshot file
     as the fingerprinted text."""
@@ -243,6 +244,7 @@ def test_sweep_order_demotes_rewritten_rows_snapshots(tmp_path):
 
     from ocdb_server_spark.evidence import (
         certified_rounds,
+        src_fp,
         sweep_order,
         write_fp_book,
     )
@@ -278,7 +280,7 @@ def test_sweep_order_demotes_rewritten_rows_snapshots(tmp_path):
 
     # Case 1: book fp matches the snapshot, green postdates since_round
     # → stays certified.
-    cur_src = ops[rows_op].src_fp
+    cur_src = src_fp(ops[rows_op])
     (fpdir / "oracle_fp.json").write_text(json.dumps(
         {rows_op: {"fp": cur_fp, "since_round": 2, "src_fp": cur_src}}
     ))
@@ -333,18 +335,18 @@ def test_output_schema_is_canonicalizer_safe(name, spark, sf_dir):
 
 
 def test_sweep_order_demotes_rewritten_plan_source(tmp_path):
-    """A PLAN rewrite under an unchanged checker (op261's
-    parallel-writer precedent) must re-front the op without a
-    hand-bumped since_round. Each entry carries src_fp = hash of the op
-    function's source at registration. Pins: (1) an entry whose src_fp
-    no longer matches the registered plan demotes to the front and
-    heals with since_round = latest+1, no hand-bump; (2) a matching
-    src_fp is a no-op."""
+    """A PLAN rewrite under an unchanged checker must re-front the op
+    without a hand-bumped since_round. Each entry carries src_fp, the
+    hash of the op's reachable source (evidence.src_fp). Pins: (1) an
+    entry whose src_fp no longer matches the registered plan demotes
+    to the front and heals with since_round = latest+1, no hand-bump;
+    (2) a matching src_fp is a no-op."""
     import json
 
     from ocdb_server_spark.evidence import (
         _oracle_fp,
         certified_rounds,
+        src_fp,
         sweep_order,
         write_fp_book,
     )
@@ -352,7 +354,7 @@ def test_sweep_order_demotes_rewritten_plan_source(tmp_path):
 
     ops = load_all()
     sql_op = "op17_agg_groupby"
-    assert REGISTRY[sql_op].src_fp, "registration must fingerprint the source"
+    assert src_fp(REGISTRY[sql_op]), "the op's source must fingerprint"
     green_sql = {
         "rows_match": True, "schema_match": True, "hash_match": True,
         "spark_rows": 5, "oracle_rows": 5, "err": None,
@@ -363,7 +365,7 @@ def test_sweep_order_demotes_rewritten_plan_source(tmp_path):
     fpdir = tmp_path / "ocdb_server_spark"
     fpdir.mkdir()
     cur_fp = _oracle_fp(REGISTRY[sql_op].oracle)
-    cur_src = REGISTRY[sql_op].src_fp
+    cur_src = src_fp(REGISTRY[sql_op])
 
     # Case 1: the registered plan was rewritten (src_fp differs) under
     # an UNCHANGED oracle — the green row certified a different plan:
@@ -391,53 +393,89 @@ def test_sweep_order_demotes_rewritten_plan_source(tmp_path):
     assert kept[sql_op]["since_round"] == 2
 
 
-def test_register_deps_fold_into_src_fp():
-    """register(deps=...) must fold each declared helper's source into
-    the op's src_fp (round-12 review: the op body is often a thin
-    wrapper — a plan rewrite inside an undeclared helper was the
-    fingerprint rule's blind spot). Pins: declaring a dep changes the
-    fingerprint vs the bare registration, different deps give
-    different fingerprints, and the op264/op263 registrations
-    actually declare their kernels."""
-    import hashlib
-    import inspect
+def _fps_after(tmp_path, edit):
+    """{op: src_fp} over a copy of the package under `tmp_path`, after
+    `edit(package_dir)` changes the copy. The repository is never edited."""
+    import shutil
 
-    from ocdb_server_spark.functions.cdc import apply_changes, collapse_feed
-    from ocdb_server_spark.operators.lakehouse import (
-        cdc_base_snapshot,
-        cdc_changes_feed,
-        op264_cdc_apply_changes,
-    )
-    from ocdb_server_spark.registry import REGISTRY, load_all
+    from ocdb_server_spark.evidence import PKG, src_fp
 
-    load_all()
-    # the live registration folds the declared kernels: recompute the
-    # expected hash from the unwrapped fn + its declared deps
-    fn = inspect.unwrap(op264_cdc_apply_changes)
-    src = inspect.getsource(fn)
-    src += inspect.getsource(apply_changes)
-    src += inspect.getsource(collapse_feed)
-    src += inspect.getsource(cdc_changes_feed)
-    src += inspect.getsource(cdc_base_snapshot)
-    expected = hashlib.sha256(src.encode()).hexdigest()[:16]
-    assert REGISTRY["op264_cdc_apply_changes"].src_fp == expected
-    # and WITHOUT the deps the fingerprint differs — so a helper edit
-    # is guaranteed to move the registered fingerprint
-    bare = hashlib.sha256(
-        inspect.getsource(fn).encode()
-    ).hexdigest()[:16]
-    assert bare != expected
+    pkg = tmp_path / "ocdb_server_spark"
+    shutil.copytree(PKG, pkg, ignore=shutil.ignore_patterns("__pycache__"))
+    edit(pkg)
+    return {name: src_fp(op, str(pkg)) for name, op in OPS.items()}
 
-    from ocdb_server_spark.operators.similarity import (
-        bm25_scored_docs,
-        op183_bm25_topk,
-    )
 
-    fn183 = inspect.unwrap(op183_bm25_topk)
-    exp183 = hashlib.sha256(
-        (inspect.getsource(fn183) + inspect.getsource(bm25_scored_docs)).encode()
-    ).hexdigest()[:16]
-    assert REGISTRY["op183_bm25_topk"].src_fp == exp183
+def _add_statement(module: str, func: str):
+    """An edit that appends a statement to the body of `module`'s
+    top-level function `func`."""
+    import ast
+
+    def edit(pkg):
+        path = pkg / module
+        lines = path.read_text().splitlines(keepends=True)
+        (fn,) = (
+            st for st in ast.parse("".join(lines)).body
+            if isinstance(st, ast.FunctionDef) and st.name == func
+        )
+        indent = " " * fn.body[0].col_offset
+        lines.insert(fn.end_lineno, f"{indent}assert True\n")
+        path.write_text("".join(lines))
+
+    return edit
+
+
+@pytest.mark.parametrize("module, func, must_move", [
+    # the shared transformWithState driver under every TWS stream op
+    ("streaming/jobs.py", "_tws_run", {
+        "op206_stream_tws_user_stats", "op208_stream_centroid_maintenance",
+        "op218_stream_tws_topk", "op219_stream_tws_mapstate",
+        "op226_stream_session_timers",
+    }),
+    # the BGZF block reader, reached through BgzfArchive
+    ("sources/bgzf.py", "read_block", {"op260_bgzf_splittable_gzip"}),
+    # a helper no op reaches
+    ("functions/vector.py", "normalize", set()),
+    # names inside decorators are not followed: @register reaches no op
+    ("registry.py", "register", set()),
+])
+def test_helper_edit_moves_the_ops_that_reach_it(
+    tmp_path, module, func, must_move
+):
+    from ocdb_server_spark.evidence import src_fp
+
+    after = _fps_after(tmp_path, _add_statement(module, func))
+    moved = {name for name, op in OPS.items() if after[name] != src_fp(op)}
+    assert moved == must_move
+
+
+def test_moving_a_definition_verbatim_keeps_src_fp(tmp_path):
+    """Segments hash in text order, not by module: a definition moved
+    verbatim into another module keeps every op's fingerprint."""
+    import ast
+
+    def move_tws_run(pkg):
+        jobs = pkg / "streaming" / "jobs.py"
+        lines = jobs.read_text().splitlines(keepends=True)
+        (fn,) = (
+            st for st in ast.parse("".join(lines)).body
+            if isinstance(st, ast.FunctionDef) and st.name == "_tws_run"
+        )
+        assert not fn.decorator_list
+        seg = lines[fn.lineno - 1:fn.end_lineno]
+        del lines[fn.lineno - 1:fn.end_lineno]
+        lines.append("from ocdb_server_spark.streaming.tws import _tws_run\n")
+        jobs.write_text("".join(lines))
+        names = sorted({n.id for n in ast.walk(fn) if isinstance(n, ast.Name)})
+        (pkg / "streaming" / "tws.py").write_text("".join(
+            [f"from ocdb_server_spark.streaming.jobs import {n}\n" for n in names]
+            + ["\n\n"] + seg
+        ))
+
+    from ocdb_server_spark.evidence import src_fp
+
+    moved = _fps_after(tmp_path, move_tws_run)
+    assert moved == {name: src_fp(op) for name, op in OPS.items()}
 
 
 def test_backup_correctness_files_are_skipped(tmp_path):
@@ -486,28 +524,11 @@ def test_sweep_order_survives_malformed_op_costs(tmp_path):
     assert set(ordered) == {"op_a", "op_b"}
 
 
-def test_unhashable_dep_does_not_zero_plan_fingerprint():
-    """Round-13 review: one source-less dep (builtin/C extension) used
-    to zero the op's src_fp, silently disabling plan-rewrite demotion
-    for the whole op."""
-    from ocdb_server_spark.registry import REGISTRY, register
-
-    name = "op_test_unhashable_dep"
-    try:
-        @register(name, oracle=None, deps=(len,))  # len: no source
-        def op_test_unhashable_dep(spark, sf_dir):  # pragma: no cover
-            raise NotImplementedError
-
-        assert REGISTRY[name].src_fp != ""
-    finally:
-        REGISTRY.pop(name, None)
-
-
 # Runs load_all() in a fresh interpreter with open() and os.replace()
-# refusing writes under the repository root, and reports which files
-# were opened.
+# refusing writes under the repository root and inspect.getsource()
+# raising, and reports which files were opened.
 _NO_WRITE_PROBE = r"""
-import builtins, io, json, os, sys
+import builtins, inspect, io, json, os, sys
 
 root = os.path.realpath(sys.argv[1])
 opened = []
@@ -532,8 +553,13 @@ def guarded_replace(src, dst, *args, **kwargs):
     return real_replace(src, dst, *args, **kwargs)
 
 
+def no_getsource(obj):
+    raise AssertionError(f"load_all() read the source of {obj!r}")
+
+
 builtins.open = io.open = guarded_open
 os.replace = guarded_replace
+inspect.getsource = no_getsource
 
 from ocdb_server_spark.registry import load_all
 
@@ -543,8 +569,9 @@ print(json.dumps({"ops": sorted(ops), "opened": opened}))
 
 
 def test_load_all_writes_nothing():
-    """load_all() only registers: it writes no file under the repository
-    and reads no driver evidence (CORRECTNESS_r*.json) or cost book."""
+    """load_all() only registers: it writes no file under the repository,
+    reads no driver evidence (CORRECTNESS_r*.json) or cost book, and
+    hashes no source (fingerprints are computed by evidence.src_fp)."""
     import json
     import os
     import subprocess
