@@ -2,34 +2,46 @@
 (op96) and the canonicalization built on them (op221), PageRank (op186),
 BFS reachability (op213) and per-node triangle counts (op220).
 
+Small graphs run in one task. When the graph's vertex set provably fits
+the session's broadcast budget (``_graph_budget``), op220 and
+op96/op221 compute their result in one ``arrow_rows.map_partitions``
+task over the whole edge list, with the kernels of
+``functions/graph_kernels.py``: triangles as the dense product A·A∘A,
+components as a union-find. Larger graphs take the distributed
+algorithms below, which give the same rows.
+
 Connected components turn pair lists (op79 MinHash, op88 SimHash, op90
 LSH) into dedup decisions: every document gets a canonical cluster id
-(the min doc_id of its component). Algorithm: iterative min-label
-propagation (cf. the HashToMin / "large-star small-star" family,
-Kiveris et al. '14): each vertex starts labeled with itself; every
-iteration each vertex takes the min label among itself and its
-neighbors; stop when no label changed. Iterations = O(graph diameter);
-near-dup graphs are unions of small cliques, so 2–3 iterations in
-practice, bounded at `max_iter` with a convergence check. Each
-iteration is one join (labels ⋈ edges) + one groupBy(min), all
-shuffles on vertex id; labels are checkpointed each round so the plan
+(the min doc_id of its component). The distributed algorithm is
+iterative min-label propagation (cf. the HashToMin / "large-star
+small-star" family, Kiveris et al. '14): each vertex starts labeled
+with itself; every iteration each vertex takes the min label among
+itself and its neighbors; stop when no label changed. Iterations =
+O(graph diameter); near-dup graphs are unions of small cliques, so 2–3
+iterations in practice, bounded at `max_iter` with a convergence check.
+Each iteration is one join (labels ⋈ edges) + one groupBy(min), all
+shuffles on vertex id; labels are checkpointed each iteration so the plan
 does not grow with the iterations.
 
 PageRank keeps its recurrence in exact int64 fixed point, so the
 engine's iterations are bit-identical to the unrolled oracle CTEs;
 BFS re-expresses DuckDB's WITH RECURSIVE as a bounded join loop.
 
-Package rules: DataFrame/Catalyst only, Python only inside
-Arrow-batched pandas kernels (mapInPandas / applyInPandas), shuffles carry ids and counters
-(never payload text), cross-engine floats quantized to int64 before
-any sum or round(6)-stabilized, and outputs canonicalizer-safe
-(scalars only, no DECIMAL — tests/test_gate_shape.py).
+Package rules: DataFrame/Catalyst only, Python only inside Arrow
+kernels, shuffles carry ids and counters (never payload text),
+cross-engine floats quantized to int64 before any sum or
+round(6)-stabilized, and outputs canonicalizer-safe (scalars only, no
+DECIMAL — tests/test_gate_shape.py).
 """
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ocdb_server_spark.functions import graph_kernels
+from ocdb_server_spark.functions.arrow_rows import map_partitions
 from ocdb_server_spark.functions.iterate import iterate_to_fixpoint
 from ocdb_server_spark.io import load_table
 from ocdb_server_spark.operators.dedup import (
@@ -336,6 +348,16 @@ def _parse_size_bytes(s: str) -> int:
     return int(float(s))
 
 
+def _graph_budget(spark: SparkSession) -> int:
+    """Bytes a guarded graph path may hold in one task or one broadcast:
+    the session's autoBroadcastJoinThreshold, the scale-adaptive knob
+    the planner's own broadcast decisions use; 0 when it is disabled
+    (-1 or 0), which sends every guarded op to its shuffle path."""
+    return max(0, _parse_size_bytes(
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    ))
+
+
 def _triangle_counts(edges: DataFrame, broadcast_adj: bool) -> DataFrame:
     """Edge-iterator per-node triangle counts over an undirected edge
     list (s1 < s2, deduplicated): build adjacency lists once, count
@@ -344,8 +366,8 @@ def _triangle_counts(edges: DataFrame, broadcast_adj: bool) -> DataFrame:
     relation attaches to the edge probe — broadcast (edge side never
     shuffles, intersect stage inherits the cached edge layout) vs the
     planner's shuffle join (same algebra, O(Σ d) arrays shuffled once;
-    the guarded fallback for graphs whose adjacency outgrows the
-    broadcast budget — r18-verdict item 2)."""
+    the fallback for graphs whose adjacency outgrows the broadcast
+    budget)."""
     adj = (
         edges.select(F.col("s1").alias("s"), F.col("s2").alias("n"))
         .unionAll(edges.select(F.col("s2").alias("s"), F.col("s1").alias("n")))
@@ -375,32 +397,41 @@ def _triangle_counts(edges: DataFrame, broadcast_adj: bool) -> DataFrame:
     )
 
 
-def _adjacency_fits_broadcast(
-    spark: SparkSession, sf_dir: str, edges: DataFrame
-) -> bool:
-    """Size guard for op220's forced adjacency broadcast (r18-verdict
-    item 2 — an unguarded F.broadcast OOMs on a hub-heavy graph at
-    scale). Budget = the session's autoBroadcastJoinThreshold, the
-    same scale-adaptive knob the planner's own decisions use.
-
-    Tier 1 (no extra job on the data): worst-case adjacency payload is
-    bounded by the supplier dimension — the projection graph's node
-    set — at n² neighbor int64s (complete graph). When even that fits,
-    broadcast without counting anything. Tier 2 (only reached at
-    scales where tier 1's bound overflows): exact payload from the
-    already-persisted edge frame — each edge contributes its two
-    endpoints' adjacency entries exactly once, so payload ≈ 2·|E|·8
-    bytes (+ per-node row overhead, subsumed by the ×2 headroom the
-    byte estimate leaves vs Spark's actual broadcast cap)."""
-    threshold = _parse_size_bytes(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
+def _dense_triangle_counts(edges: DataFrame, max_nodes: int) -> DataFrame:
+    """``_triangle_counts``' rows from one Arrow task over the whole
+    edge list (``graph_kernels.triangle_counts``), for graphs of at most
+    ``max_nodes`` nodes."""
+    key = edges.schema["s1"].dataType.simpleString()
+    return map_partitions(
+        edges.repartition(1),
+        functools.partial(graph_kernels.triangle_counts, max_nodes=max_nodes),
+        f"s_suppkey {key}, n_triangles bigint",
+        "triangle_counts",
     )
-    if threshold <= 0:
+
+
+def _adjacency_fits_broadcast(
+    spark: SparkSession, sf_dir: str, edges: DataFrame,
+    n_nodes: int | None = None,
+) -> bool:
+    """Size guard for the edge-iterator's adjacency broadcast: an
+    unguarded F.broadcast OOMs on a hub-heavy graph at scale. The
+    relation is sized with its hash-map row overhead
+    (``graph_kernels.adjacency_bytes``) against ``_graph_budget``.
+
+    Tier 1 (no job on the edges): the supplier dimension bounds the
+    co-supply graph's node set, so n rows of n−1 neighbors bound the
+    relation. Tier 2 (only where tier 1 overflows): the exact relation,
+    2·|E| neighbor entries over at most n rows, counted on the
+    persisted edge frame. ``n_nodes`` is the supplier count when the
+    caller already took it."""
+    budget = _graph_budget(spark)
+    if budget == 0:
         return False
-    n_nodes = load_table(spark, sf_dir, "supplier").count()
-    if n_nodes * n_nodes * 8 <= threshold:
+    n = load_table(spark, sf_dir, "supplier").count() if n_nodes is None else n_nodes
+    if graph_kernels.adjacency_bytes(n, n * (n - 1)) <= budget:
         return True
-    return 2 * edges.count() * 8 <= threshold
+    return graph_kernels.adjacency_bytes(n, 2 * edges.count()) <= budget
 
 
 @register("op220_triangle_count", oracle=_OP220_SQL)
@@ -408,40 +439,36 @@ def op220_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node TRIANGLE COUNTS over the supplier co-supply graph
     (suppliers sharing ≥1 part) — the clustering-coefficient /
     community-density primitive, and a third graph-algorithm family
-    beside op186's fixpoint and op213's traversal.
+    beside op186's fixpoint and op213's traversal. Nodes in no
+    triangle do not appear, as in the oracle's enumeration.
 
-    Algorithm (REWRITTEN round 18, optimization guide §1.2/§2.3 —
-    change the distributed algorithm before tuning anything): the
-    EDGE-ITERATOR form. Per undirected edge (u,v) the number of
-    triangles through it is |N(u) ∩ N(v)|; per-node counts follow as
-    n_tri(v) = Σ_{edges e incident to v} t(e) / 2, because each
-    triangle containing v is seen by exactly its two v-incident
-    edges. Adjacency lists are built once (groupBy node,
-    collect_list), each edge joins the two endpoint lists, and the
-    intersection count is a single JVM ``array_intersect`` — no
-    Python boundary, and NO materialized wedge rows. Nodes in no
-    triangle never appear (sum 0 filtered), matching the
-    enumeration's output exactly; DIV 2 stays in integer arithmetic.
+    Two algorithms, one guard. The supplier dimension bounds the node
+    set, so one count sizes both.
 
-    Rounds 12–17 used the oriented 3-way self-join (e1(a,b)⋈e2(b,c)
-    closed by e3(a,c)) — exact, but it MATERIALIZES AND SHUFFLES one
-    row per wedge. Measured round 17 (BASELINE 17j): ~30 suppliers/
-    part saturates the bipartite projection to the COMPLETE K_1000
-    graph at sf0.1 (499,500 edges = C(1000,2), DuckDB-verified), so
-    the wedge join emitted all C(1000,3) ≈ 166M rows: 44.5 s noop
-    (r18 sweep). The edge-iterator does the same Θ(Σ d(v)²) element
-    work as in-memory array intersections inside codegen instead of
-    166M shuffled rows — measured r18: 5.1 s sweep-best / 3.5 s
-    steady-state after JIT warm (8.8×), bit-identical result at
-    sf0.001/0.01/0.1 (plans/r18/op220_*.txt). At 100 TB the
-    shuffle payload is O(Σ d(v)) adjacency ints instead of O(Σ d²)
-    wedge rows; the residual risk is a hub node's adjacency array,
-    and the production bound for dense projections is unchanged —
-    cap/sample hub parts BEFORE projecting (op192's df-cap pattern);
-    no triangle algorithm beats a dense input's Θ(Σ d²) element
-    work. Exact integer counts — nothing to quantize; the oracle is
-    the original enumeration algebra in DuckDB, which round 18's
-    hash-equivalence run re-certified against this form."""
+    - Dense, when ``graph_kernels.triangle_kernel_fits`` the supplier
+      count in ``_graph_budget``: one Arrow task over the edge list
+      computes n_tri = (A·A∘A)·1 / 2 with a float64 matmul, exact
+      while n² < 2⁵³ (Azad, Buluç & Gilbert, IPDPSW 2015, count
+      triangles as masked A·A; tiling A is their path to scale).
+      Projections saturate fast: ~30 suppliers per part make the
+      sf0.1 graph the complete K_1000, whose 10⁹-flop product takes
+      ~0.3 s on one core.
+    - Edge-iterator otherwise. Per undirected edge (u,v) the triangles
+      through it number |N(u) ∩ N(v)|, and n_tri(v) = Σ_{e ∋ v} t(e) / 2
+      because each triangle through v is seen by its two v-incident
+      edges. Adjacency lists are built once, each edge joins its two
+      endpoint lists and counts with a JVM ``array_intersect``: no
+      Python, no materialized wedge rows (the oriented 3-way self-join
+      emits all C(1000,3) ≈ 166M wedges on K_1000). The adjacency
+      broadcasts when ``_adjacency_fits_broadcast``, else it attaches
+      by shuffle join; tests/test_small_graphs.py pins all three paths
+      value-identical.
+
+    No triangle algorithm beats a dense input's Θ(Σ d²) element work;
+    the production bound for dense projections is to cap hub parts
+    before projecting (op192's df-cap pattern). Exact integer counts —
+    nothing to quantize; the oracle is the enumeration algebra in
+    DuckDB."""
     li = load_table(spark, sf_dir, "lineitem")
     pairs = li.select("l_partkey", "l_suppkey").distinct()
     a = pairs.alias("a")
@@ -457,35 +484,21 @@ def op220_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    # referenced 3× below (adjacency build ×2 + the edge probe):
-    # persist so the projection+distinct runs once (op186's rule).
-    # The repartition sizes the intersect stage — the Θ(Σ d²)
-    # element-work stage — to the session's core count (the broadcast
-    # join below preserves the stream side's partitioning, so the
-    # cached layout IS that stage's task count; at 8 interactive
-    # shuffle partitions the stage left 3/4 of local[32] idle —
-    # measured 9.2 s vs 3.5 s interleaved).
+    budget = _graph_budget(spark)
+    n = load_table(spark, sf_dir, "supplier").count() if budget else 0
+    if budget and graph_kernels.triangle_kernel_fits(n, budget):
+        return _dense_triangle_counts(edges, max_nodes=n)
+    # referenced 3× by the edge-iterator (adjacency build ×2 + the edge
+    # probe): persist so the projection+distinct runs once. The
+    # repartition sizes the intersect stage, the Θ(Σ d²) element work,
+    # to the core count: the broadcast join keeps the stream side's
+    # partitioning, so the cached layout is that stage's task count.
     edges = pool_persist(
         edges.repartition(spark.sparkContext.defaultParallelism)
     )
-    # undirected adjacency lists; sort_array for a deterministic
-    # layout (content is a set — intersection is order-insensitive).
-    # Broadcast WHEN IT FITS: the adjacency side is node-dimension-
-    # sized (O(Σ d) total payload — each neighbor list ships ONCE per
-    # node, never per edge) and the hint both keeps the big edge side
-    # un-shuffled and lets the intersect stage inherit the cached
-    # edge layout. r18 forced the hint unconditionally — an OOM on a
-    # hub-heavy graph whose adjacency outgrows the broadcast budget;
-    # the guard (r18-verdict item 2) sizes it against the session's
-    # autoBroadcastJoinThreshold (worst-case node² bound first — free
-    # at bench scale — exact 2·|E|·8 from the persisted edge frame
-    # only when that overflows) and falls back to the planner's
-    # shuffle join, which keeps the same algebra (the shuffle then
-    # carries O(Σ d) arrays once). Both paths are value-identical —
-    # pinned by tests/test_plans.py (broadcast shape at bench scale)
-    # and the synthetic hub-graph fallback test.
     return _triangle_counts(
-        edges, broadcast_adj=_adjacency_fits_broadcast(spark, sf_dir, edges)
+        edges,
+        broadcast_adj=_adjacency_fits_broadcast(spark, sf_dir, edges, n_nodes=n),
     )
 
 
@@ -508,41 +521,36 @@ def connected_components(
     reachable. Vertices only appear if they occur in an edge.
 
     The loop runs through functions.iterate.iterate_to_fixpoint (the
-    general unbounded-recursion surface, round-10 verdict "what's
-    missing" item): per-iteration localCheckpoint, a keyed LIMIT-1
-    convergence probe (join on id, compare only `component` — cheaper
-    than the generic exceptAll probe because the id column prunes),
-    loud ValueError on max_iter exhaustion, and optional per-iteration
-    telemetry ({iteration, changed, seconds}) for convergence
-    observability at scale.
+    general unbounded-recursion surface): per-iteration
+    localCheckpoint, a keyed LIMIT-1 convergence probe (join on id,
+    compare only `component` — cheaper than the generic exceptAll
+    probe because the id column prunes), loud ValueError on max_iter
+    exhaustion, and optional per-iteration telemetry ({iteration,
+    changed, seconds}) for convergence observability at scale.
 
     reliable=True switches BOTH the loop state and the loop-invariant
     edge frame to directory-backed checkpoint() (requires
     sc.setCheckpointDir on shared storage): an executor death
     mid-loop then recomputes nothing and the job completes with the
     identical result, where the default executor-resident
-    localCheckpoint blocks would be unrecoverable (both behaviors
-    fault-injection-measured — scripts/cluster_faultkill.py /
-    BASELINE.md Round 11f). Default stays local: op96's driver-gate
-    runs are single-JVM, where reliable's per-iteration write+read
-    buys nothing."""
+    localCheckpoint blocks would be unrecoverable (both behaviors are
+    fault-injection-measured by scripts/cluster_faultkill.py). Default
+    stays local: in one JVM, reliable's per-iteration write+read buys
+    nothing."""
     from ocdb_server_spark.functions.iterate import _truncate_lineage
 
     sym = _truncate_lineage(
         edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .unionByName(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
         .distinct(),
-        # Materialize ONCE (round-10 review): the edge frame is joined
-        # every iteration AND feeds the initial labels — without this,
-        # each iteration's checkpoint action re-derives the whole
-        # upstream pair pipeline (for op96/op221 that is the 5-shuffle
-        # ngram-Jaccard plan), so 2-3 iterations ran it 3-4 times. Same
-        # "self-join would evaluate the aggregation twice" economics
-        # op88 solves with a persist; checkpointing keeps the helper
-        # self-contained (no cache pool needed, blocks GC with the df).
-        # Durability must MATCH the loop's: a localCheckpointed
-        # invariant dies with its executor no matter how the loop
-        # state is protected.
+        # Materialized once: the edge frame is joined every iteration
+        # AND feeds the initial labels, so without this each
+        # iteration's checkpoint action re-derives the whole upstream
+        # pair pipeline (for op96/op221 the 5-shuffle ngram-Jaccard
+        # plan). Checkpointing keeps the helper self-contained (no
+        # cache pool needed, blocks GC with the df). Durability must
+        # match the loop's: a localCheckpointed invariant dies with its
+        # executor no matter how the loop state is protected.
         reliable,
     )
     labels0 = (
@@ -574,12 +582,11 @@ def connected_components(
             .count()
         )
 
-    # Exhaustion raises (iterate_to_fixpoint's contract): exiting on
-    # range end would mean the labels are NOT a fixpoint — op96/op221
-    # would emit split clusters with non-canonical ids, silently wrong
-    # at no-oracle bench scales (round-10 review). A graph of diameter
-    # > max_iter is real on chain-shaped near-dup corpora; the caller
-    # raises max_iter.
+    # Exhaustion raises (iterate_to_fixpoint's contract): labels taken
+    # at range end are not a fixpoint, so op96/op221 would emit split
+    # clusters with non-canonical ids. A graph of diameter > max_iter
+    # is real on chain-shaped near-dup corpora; the caller raises
+    # max_iter.
     return iterate_to_fixpoint(
         labels0,
         step,
@@ -591,6 +598,29 @@ def connected_components(
     )
 
 
+def _doc_components(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """(id, component) over the (doc_a, doc_b) near-dup pairs of
+    ``docs``, component = the min doc_id reachable; only docs in a pair
+    appear. op96 and op221 both label through here.
+
+    Every vertex is a doc_id, so the docs count bounds the vertex set.
+    When a union-find over that many ids fits ``_graph_budget``, one
+    Arrow task streams the pair list through
+    ``graph_kernels.min_label_components``. Otherwise the distributed
+    ``connected_components`` computes the same labels."""
+    edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    budget = _graph_budget(docs.sparkSession)
+    if budget and graph_kernels.union_find_bytes(docs.count()) <= budget:
+        key = edges.schema["src"].dataType.simpleString()
+        return map_partitions(
+            edges.repartition(1),
+            graph_kernels.min_label_components,
+            f"id {key}, component {key}",
+            "min_label_components",
+        )
+    return connected_components(edges)
+
+
 # --------------------------------------------------------------------------
 # op221: near-dup canonicalization — LSH pairs → components → keep-best
 # --------------------------------------------------------------------------
@@ -600,47 +630,40 @@ def neardup_canonicalize(docs: DataFrame) -> DataFrame:
     """Full dedup DECISION pipeline over a documents frame: exact
     3-gram-Jaccard ≥ 0.5 candidate pairs (dedup.ngram_jaccard_pairs,
     cross-source — see _EXACT_NEARDUP_THRESHOLD's rationale) →
-    connected components (connected_components) → one KEPT doc per
-    duplicate cluster
-    (longest text wins, doc_id tiebreak — the RefinedWeb keep-best
-    rule). Returns one row per cluster: (component, n_members,
-    keep_doc_id, kept_n_chars, dropped_docs, dropped_chars)."""
+    connected components (_doc_components) → one KEPT doc per
+    duplicate cluster (longest text wins, doc_id tiebreak — the
+    RefinedWeb keep-best rule). Returns one row per cluster:
+    (component, n_members, keep_doc_id, kept_n_chars, dropped_docs,
+    dropped_chars)."""
     from pyspark.sql import Window
 
     pairs = ngram_jaccard_pairs(
         docs, threshold=_EXACT_NEARDUP_THRESHOLD, same_source=False
     )
-    labels = connected_components(
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    )
+    labels = _doc_components(docs, pairs)
     members = labels.join(
         docs.select("doc_id", "n_chars"), labels.id == docs.doc_id
     ).select("component", "doc_id", "n_chars")
-    w = Window.partitionBy("component").orderBy(
-        F.desc("n_chars"), F.asc("doc_id")
-    )
-    ranked = members.withColumn("rn", F.row_number().over(w))
-    kept = ranked.filter("rn = 1").select(
+    # one pass over members: the keep-best rank and the cluster totals
+    # share one window partitioning, so the labels are computed once
+    cluster = Window.partitionBy("component")
+    ranked = members.select(
         "component",
+        "doc_id",
+        "n_chars",
+        F.row_number()
+        .over(cluster.orderBy(F.desc("n_chars"), F.asc("doc_id")))
+        .alias("rn"),
+        F.count("*").over(cluster).cast("bigint").alias("n_members"),
+        F.sum("n_chars").over(cluster).cast("bigint").alias("total_chars"),
+    )
+    return ranked.filter("rn = 1").select(
+        "component",
+        "n_members",
         F.col("doc_id").alias("keep_doc_id"),
         F.col("n_chars").alias("kept_n_chars"),
-    )
-    stats = members.groupBy("component").agg(
-        F.count("*").cast("bigint").alias("n_members"),
-        F.sum("n_chars").cast("bigint").alias("total_chars"),
-    )
-    return (
-        stats.join(kept, "component")
-        .select(
-            "component",
-            "n_members",
-            "keep_doc_id",
-            "kept_n_chars",
-            (F.col("n_members") - 1).cast("bigint").alias("dropped_docs"),
-            (F.col("total_chars") - F.col("kept_n_chars"))
-            .cast("bigint")
-            .alias("dropped_chars"),
-        )
+        (F.col("n_members") - 1).cast("bigint").alias("dropped_docs"),
+        (F.col("total_chars") - F.col("n_chars")).cast("bigint").alias("dropped_chars"),
     )
 
 
@@ -709,19 +732,17 @@ def op221_neardup_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     the keep-best-quality rule, composed into 'which doc survives
     each duplicate cluster and how much is dropped'.
 
-    Graduated from ROWS to a SQL oracle in round 9 (round-8 verdict
-    item 5) by switching the edge relation from op79's xxhash LSH
-    bands to the exact 3-gram-Jaccard ≥ 0.5 relation both engines
-    compute (components.py rationale) — the DuckDB oracle restates
-    the whole decision: recursive min-reachable-id components, the
-    keep-longest window, and the drop accounting. The behavioral
-    planted-cluster gate (test_pipeline_r6) still applies; the
-    LSH→CC approximate composition keeps its own gate in
-    test_components.py.
+    The edge relation is the exact 3-gram-Jaccard ≥ 0.5 relation both
+    engines compute, so the DuckDB oracle restates the whole decision:
+    recursive min-reachable-id components, the keep-longest window,
+    and the drop accounting. The planted-cluster gate
+    (tests/test_pipeline_r6.py) still applies; the LSH→CC approximate
+    composition keeps its own gate in tests/test_components.py.
 
-    Scale: every stage is the already-audited scale path — the
-    gram-blocked pair join with the max-df cap (op89's annotated
-    5-shuffle plan), min-label propagation with localCheckpoint, one
+    Scale: the gram-blocked pair join with the max-df cap (op89's
+    annotated 5-shuffle plan), components in one task while the
+    union-find over the documents fits the budget and by min-label
+    propagation with localCheckpoint beyond it (_doc_components), one
     keyed window per cluster. The composition adds no new shuffle
     class."""
     return neardup_canonicalize(load_table(spark, sf_dir, "documents"))
@@ -740,49 +761,41 @@ FROM comp GROUP BY component HAVING COUNT(*) > 1
 def op96_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clusters over documents: exact 3-gram-Jaccard ≥ 0.5
     candidate pairs (ngram_jaccard_pairs, cross-source) → connected
-    components → per-cluster size and canonical (min) doc_id,
-    returning only non-trivial clusters. The keep-one-survivor dedup
-    decision is `filter(doc_id == component)` on the same frame.
+    components (_doc_components) → per-cluster size and canonical (min)
+    doc_id, returning only non-trivial clusters. The keep-one-survivor
+    dedup decision is `filter(doc_id == component)` on the same frame.
 
-    Graduated from ROWS to a SQL oracle in round 9 (round-8 verdict
-    item 5): the edge relation is the EXACT near-dup graph — the
-    deterministic, ANSI-expressible relation MinHash-LSH (op79)
-    approximates — so DuckDB's WITH RECURSIVE min-reachable-id
-    fixpoint hash-certifies the iterative min-label CC end to end.
-    The LSH→CC composition (the approximate 100 TB candidate path)
-    keeps its planted-cluster behavioral gates in
-    tests/test_components.py.
+    The edge relation is the EXACT near-dup graph — the deterministic,
+    ANSI-expressible relation MinHash-LSH (op79) approximates — so
+    DuckDB's WITH RECURSIVE min-reachable-id fixpoint hash-certifies
+    the labels end to end. The LSH→CC composition (the approximate
+    100 TB candidate path) keeps its planted-cluster behavioral gates
+    in tests/test_components.py.
 
-    Transport note: this op's many-tiny-exchanges fixpoint — the
-    shape naively expected to suffer most on a real shuffle service —
-    was FASTER on a 2-executor standalone cluster than local[16] in
-    every measured config at 10x and 30x data (0.70-0.95x; BASELINE
-    Round 11b-11e): its exchanges carry ~zero bytes and its stages
-    are few and coarse, so none of the measured cluster cost terms
-    apply, while two half-size JVMs GC better than one big one.
+    Components run in one Arrow task while the union-find over the
+    documents fits the budget, and as the min-label fixpoint beyond
+    it. The fixpoint's exchanges carry ~zero bytes and its stages are
+    few and coarse, so a real shuffle service adds little to it
+    (BASELINE.md measures a 2-executor standalone cluster against
+    local[16]).
 
-    DURABILITY AT EXECUTOR SCALE: the registered plan keeps the FAST
-    default (`reliable=False` → localCheckpoint), which is correct in
-    one JVM — but localCheckpoint blocks die with their executor and,
-    lineage truncated, CANNOT be recomputed: an executor loss mid-loop
-    FAILS the job loudly (measured: scripts/cluster_faultkill.py; it
-    never ships a wrong fixpoint). Production fixpoints on a real
-    multi-executor cluster should call
-    ``connected_components(edges, reliable=True)`` after
-    ``sc.setCheckpointDir(<HDFS/S3 path>)`` — directory-backed
-    checkpoints survive executor loss with byte-identical results
-    (fault-injection-verified, BASELINE.md Round 11f), superseded
-    generations are GC'd per iteration (functions/iterate.py
-    _ReliableCkptGC), at the cost of one state write+read per
-    iteration."""
+    Durability at executor scale: the fixpoint keeps the fast default
+    (`reliable=False` → localCheckpoint), which is correct in one JVM,
+    but localCheckpoint blocks die with their executor and, lineage
+    truncated, cannot be recomputed: an executor loss mid-loop fails
+    the job loudly (scripts/cluster_faultkill.py); it never ships a
+    wrong fixpoint. Production fixpoints on a multi-executor cluster
+    call ``connected_components(edges, reliable=True)`` after
+    ``sc.setCheckpointDir(<HDFS/S3 path>)``: directory-backed
+    checkpoints survive executor loss with byte-identical results, and
+    superseded generations are GC'd per iteration
+    (functions/iterate.py _ReliableCkptGC), at the cost of one state
+    write+read per iteration."""
+    docs = load_table(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"),
-        threshold=_EXACT_NEARDUP_THRESHOLD,
-        same_source=False,
+        docs, threshold=_EXACT_NEARDUP_THRESHOLD, same_source=False
     )
-    comp = connected_components(
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    )
+    comp = _doc_components(docs, pairs)
     # members is surfaced as a sorted comma-joined string, not
     # array<bigint>: the observable surface must stay scalar-typed so
     # row hashing / canonicalization works downstream (same

@@ -219,11 +219,9 @@ def op127_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer dimension (user_id = c_custkey), aggregated per
     (segment, event_type). In Structured Streaming this is the
     canonical stream⋈static pattern — the dimension broadcasts into
-    every micro-batch with no state store involved (streamed for real
-    in tests/test_streaming.py via streaming/jobs.stream_static_join).
-    Batch equivalent: broadcast hash join + one partial+final agg;
-    value sums in exact decimal (order-independent across
-    micro-batches AND partitions)."""
+    every micro-batch with no state store involved. Batch equivalent:
+    broadcast hash join + one partial+final agg; value sums in exact
+    decimal (order-independent across micro-batches AND partitions)."""
     ev = _events(spark, sf_dir)
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     return (
@@ -256,10 +254,7 @@ def op146_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join, batch-equivalent: every (view,
     purchase) pair of the same user with the purchase inside the hour
     after the view — attribution joins, THE canonical stream-stream
-    workload. Real streaming twin (two watermarked readStream sides,
-    inner interval join, append mode):
-    `streaming.jobs.stream_stream_join`, proven row-identical in
-    tests/test_streaming.py.
+    workload.
 
     Scale notes: as a stream, state is bounded by the watermark × the
     1 h join window per side (Spark evicts rows once the other side's

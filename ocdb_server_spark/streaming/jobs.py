@@ -1,13 +1,13 @@
 """Structured Streaming jobs: the registered ops that run a real stream.
 
-The stream joins (op127, op146), the transformWithState ops (op206,
-op208, op218, op219, op226), the exactly-once sink (op234) and the
-streaming CDC apply (op265) run their streaming query here —
-``readStream`` file source → transformation → sink, driven to
-completion with ``Trigger.AvailableNow`` — and return its result.
-op69–op74 register batch-equivalent DataFrames
-(``operators/streaming_batch.py``); their streaming twins live in
-``tests/test_streaming.py``, which checks each against its batch op.
+The transformWithState ops (op206, op208, op218, op219, op226), the
+exactly-once sink (op234) and the streaming CDC apply (op265) run their
+streaming query here — ``readStream`` file source → transformation →
+sink, driven to completion with ``Trigger.AvailableNow`` — and return
+its result. op69–op74 and the stream joins (op127, op146) register
+batch-equivalent DataFrames (``operators/streaming_batch.py``); their
+streaming twins live in ``tests/test_streaming.py``, which checks each
+against its batch op.
 
 Shared pieces: one file-stream source (``_stream_source``), one
 memory-sink run (``_run_to_memory``), one transformWithState stage on
@@ -209,65 +209,6 @@ def _final_emission(sunk: DataFrame, keys: list[str], counter: str) -> DataFrame
     (op218 and op219 emit several rows per key)."""
     last = F.max(counter).over(W.partitionBy(*keys))
     return sunk.withColumn("_last", last).filter(F.col(counter) == F.col("_last"))
-
-
-def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """op127 as a streaming query: the event stream enriched by the
-    STATIC customer dimension (stream⋈static broadcast join — no state
-    store) and aggregated per (segment, event_type)."""
-    ev = _stream_events(spark, sf_dir)
-    c = (
-        spark.read.parquet(table_path(sf_dir, "customer"))
-        .select("c_custkey", "c_mktsegment")
-    )
-    from ocdb_server_spark.operators._helpers import dsum
-
-    agg = (
-        ev.join(F.broadcast(c), ev.user_id == c.c_custkey)
-        .groupBy("c_mktsegment", "event_type")
-        # sum_value: exact decimal partial sums being order-independent
-        # across micro-batches is the claim the batch twin can't certify
-        .agg(F.count("*").alias("n"), dsum("value", 18, 6).alias("sum_value"))
-    )
-    return _run_to_memory(agg, mode="complete")
-
-
-def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """op146 as a REAL stream-stream join: both sides are watermarked
-    file streams; Spark buffers each side in the state store and evicts
-    a row once the opposite watermark passes its join bound (view rows
-    live ≤ watermark + 1 h) — the only way an unbounded attribution
-    join stays finite-state. Inner join + append mode emits each
-    matched pair exactly once."""
-    ev = _stream_events(spark, sf_dir)
-    v = (
-        ev.filter(F.col("event_type") == "view")
-        .select("user_id", F.col("event_id").alias("view_id"), F.col("ts").alias("view_ts"))
-        .withWatermark("view_ts", "30 days")
-    )
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", "30 days")
-    )
-    joined = v.join(
-        p,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("view_ts"))
-        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 1 HOUR")),
-    ).select(
-        "user_id",
-        "view_id",
-        "purchase_id",
-        (F.unix_micros("purchase_ts") - F.unix_micros("view_ts")).alias("delay_us"),
-        "purchase_value",
-    )
-    return _run_to_memory(joined, mode="append")
 
 
 def stream_tws_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -150,7 +150,9 @@ def main() -> None:
         "op213_bfs_reachability": "4 unrolled BFS hops over the COLD plan — each hop's frontier⋈edges + anti-join repeats the lineage textually; at runtime every frontier is persist()ed (the op's recomputation guard), so executed work is one edges-join + anti-join per hop",
         "op216_bpe_train": "3 unrolled merge rounds, each a vocab-sized pair agg + 1-row argmax broadcast — corpus rows shuffle once into the word-frequency table; everything after is ~|vocab| rows",
         "op217_bpe_apply": "op216's 3 unrolled rounds + the vocab-cost broadcast join back to the corpus — same vocab-sized economics",
-        "op220_triangle_count": "edge-iterator (r18): broadcast-adjacency array_intersect per edge over the persist()ed edge cache; cold plan repeats the projection textually under each cache reference, executed plan reads InMemoryRelation",
+        "op220_triangle_count": "co-supply projection (pair self-join + distinct) into ONE MapInArrow task over Exchange SinglePartition computing A·A∘A while the supplier count fits the broadcast budget; beyond it, the edge-iterator: broadcast-adjacency array_intersect per edge over the persist()ed edge cache",
+        "op96_dedup_components": "the gram-blocked pair pipeline (op89's shuffles, persist()ed capped grams) into ONE MapInArrow union-find task over Exchange SinglePartition while the documents fit the broadcast budget; beyond it, the checkpointed min-label fixpoint",
+        "op221_neardup_canonicalize": "op96's pair pipeline and one-task union-find (fixpoint beyond the budget), then one window partitioning per cluster for the keep-best rank and the cluster totals",
         "op231_holt_forecast": "spine fill (distinct types × day range broadcast) + counts agg + one grouped Arrow stage keyed on event_type; the recurrence runs inside the per-series task",
         "op235_holt_winters_seasonal": "op231's spine/counts shape and grouped Arrow stage, with the 9-int vector state inside the per-series task",
         "op237_theta_set_ops": "two per-slice distinct+bottom-k cuts feed k-row set math — every shuffle after the cuts carries <=2k signature rows plus the one exact-truth distinct agg the op emits alongside",

@@ -738,14 +738,19 @@ def test_kmeans_centroids_broadcast_not_shuffled(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_triangle_edges_cached_and_no_cartesian(spark, sf_dir):
-    """op220: the 3× referenced edge frame reads the persisted cache
-    (one projection+distinct execution), no join degenerates into a
-    cartesian product, and — since the round-18 edge-iterator rewrite
-    — the per-edge count is an in-JVM array_intersect over BROADCAST
-    adjacency lists: no wedge row is ever materialized (the old
-    oriented 3-way self-join emitted one row per 2-path, 166M at
-    sf0.1's K_1000 projection)."""
+def test_triangle_edges_cached_and_no_cartesian(spark, sf_dir, monkeypatch):
+    """op220's edge-iterator, the path for graphs too large for one
+    task (forced here by refusing the dense guard, since any budget
+    small enough to refuse it at test scale also stops the planner from
+    broadcasting): the 3× referenced edge frame reads the persisted
+    cache (one projection+distinct execution), no join degenerates
+    into a cartesian product, and the per-edge count is an in-JVM
+    array_intersect over BROADCAST adjacency lists: no wedge row is
+    ever materialized (the oriented 3-way self-join emits one row per
+    2-path, 166M at sf0.1's K_1000 projection)."""
+    from ocdb_server_spark.functions import graph_kernels
+
+    monkeypatch.setattr(graph_kernels, "triangle_kernel_fits", lambda n, budget: False)
     plan = _plan(OPS["op220_triangle_count"].fn(spark, sf_dir))
     assert "InMemoryTableScan" in plan, plan[:800]
     assert "CartesianProduct" not in plan
@@ -754,6 +759,24 @@ def test_triangle_edges_cached_and_no_cartesian(spark, sf_dir):
     # by a join (the only exchanges are the edge build + final agg)
     assert plan.count("BroadcastHashJoin") >= 2, plan[:800]
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["op220_triangle_count", "op96_dedup_components", "op221_neardup_canonicalize"],
+)
+def test_small_graph_runs_in_one_arrow_task(spark, sf_dir, name):
+    """At test scale the graph fits the budget: the triangle counts or
+    the components come from exactly one MapInArrow task, fed by an
+    Exchange SinglePartition, and no fixpoint or edge-iterator join
+    remains."""
+    plan = _plan(OPS[name].fn(spark, sf_dir))
+    lines = plan.splitlines()
+    arrow = [i for i, line in enumerate(lines) if "MapInArrow" in line]
+    assert len(arrow) == 1, plan
+    assert "Exchange SinglePartition" in lines[arrow[0] + 1], plan
+    assert "array_intersect" not in plan
+    assert "Scan ExistingRDD" not in plan  # no checkpointed fixpoint state
 
 
 def test_bfs_no_per_hop_anti_join(spark, sf_dir):

@@ -3,9 +3,10 @@
 The oracle gate checks op69–op74's *batch-equivalent* DataFrames; these
 tests prove the same logic runs as real streaming queries (readStream →
 availableNow → memory sink) and produces identical results. The
-streaming twins of op69–op74 live here; the registered streaming ops
-(stream joins, transformWithState, the exactly-once sink) run their
-queries in ``ocdb_server_spark.streaming.jobs``.
+streaming twins of op69–op74 and of the stream joins (op127, op146)
+live here; the registered streaming ops (transformWithState, the
+exactly-once sink, the CDC apply) run their queries in
+``ocdb_server_spark.streaming.jobs``.
 """
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from ocdb_server_spark.io import table_path
 from ocdb_server_spark.registry import load_all
 from ocdb_server_spark.streaming import jobs
 
@@ -145,6 +147,66 @@ def stream_upsert_state(spark, sf_dir, store_dir, n_buckets=16):
     return spark.read.parquet(path)
 
 
+def stream_static_join(spark, sf_dir):
+    """op127 streamed for real: the event stream enriched by the
+    STATIC customer dimension (stream⋈static broadcast join — no state
+    store) and aggregated per (segment, event_type)."""
+    from ocdb_server_spark.operators._helpers import dsum
+
+    ev = jobs._stream_events(spark, sf_dir)
+    c = (
+        spark.read.parquet(table_path(sf_dir, "customer"))
+        .select("c_custkey", "c_mktsegment")
+    )
+    agg = (
+        ev.join(F.broadcast(c), ev.user_id == c.c_custkey)
+        .groupBy("c_mktsegment", "event_type")
+        # sum_value: exact decimal partial sums being order-independent
+        # across micro-batches is the claim the batch twin can't certify
+        .agg(F.count("*").alias("n"), dsum("value", 18, 6).alias("sum_value"))
+    )
+    return jobs._run_to_memory(agg, mode="complete")
+
+
+def stream_stream_join(spark, sf_dir):
+    """op146 as a REAL stream-stream join: both sides are watermarked
+    file streams; Spark buffers each side in the state store and evicts
+    a row once the opposite watermark passes its join bound (view rows
+    live ≤ watermark + 1 h) — the only way an unbounded attribution
+    join stays finite-state. Inner join + append mode emits each
+    matched pair exactly once; the test below proves it row-identical
+    to op146's batch plan."""
+    ev = jobs._stream_events(spark, sf_dir)
+    v = (
+        ev.filter(F.col("event_type") == "view")
+        .select("user_id", F.col("event_id").alias("view_id"), F.col("ts").alias("view_ts"))
+        .withWatermark("view_ts", "30 days")
+    )
+    p = (
+        ev.filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("user_id").alias("p_user_id"),
+            F.col("event_id").alias("purchase_id"),
+            F.col("ts").alias("purchase_ts"),
+            F.col("value").alias("purchase_value"),
+        )
+        .withWatermark("purchase_ts", "30 days")
+    )
+    joined = v.join(
+        p,
+        (F.col("user_id") == F.col("p_user_id"))
+        & (F.col("purchase_ts") >= F.col("view_ts"))
+        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 1 HOUR")),
+    ).select(
+        "user_id",
+        "view_id",
+        "purchase_id",
+        (F.unix_micros("purchase_ts") - F.unix_micros("view_ts")).alias("delay_us"),
+        "purchase_value",
+    )
+    return jobs._run_to_memory(joined, mode="append")
+
+
 def _rows(df, cols):
     out = [tuple(r[c] for c in cols) for r in df.select(*cols).collect()]
     return sorted(out, key=lambda t: tuple(str(x) for x in t))
@@ -176,8 +238,6 @@ def test_stream_events_reads_directory_layout(spark, sf_dir, tmp_path):
     # rebuild the same sf_dir with events as a 2-part DIRECTORY
     dir_sf = str(tmp_path / "sfdir")
     os.makedirs(dir_sf)
-    from ocdb_server_spark.io import table_path
-
     spark.read.parquet(table_path(sf_dir, "events")).repartition(2).write.parquet(
         os.path.join(dir_sf, "events.parquet")
     )
@@ -334,7 +394,7 @@ def test_checkpointed_ingest_resumes_exactly_once(spark, sf_dir, tmp_path):
 
 
 def test_stream_static_join_matches_batch(spark, sf_dir):
-    streamed = jobs.stream_static_join(spark, sf_dir)
+    streamed = stream_static_join(spark, sf_dir)
     batch = OPS["op127_stream_static_join"].fn(spark, sf_dir)
     cols = ["c_mktsegment", "event_type", "n", "sum_value"]
     assert _rows(streamed, cols) == _rows(batch, cols)
@@ -343,9 +403,7 @@ def test_stream_static_join_matches_batch(spark, sf_dir):
 def test_stream_stream_join_matches_batch(spark, sf_dir):
     """op146: the real watermarked stream-stream join must emit exactly
     the batch-equivalent pair set."""
-    from ocdb_server_spark.streaming import jobs
-
-    got = jobs.stream_stream_join(spark, sf_dir)
+    got = stream_stream_join(spark, sf_dir)
     want = load_all()["op146_stream_stream_join"].fn(spark, sf_dir)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
