@@ -27,11 +27,15 @@ any sum or round(6)-stabilized, and outputs canonicalizer-safe
 
 from __future__ import annotations
 
+import functools
 import os
 import random
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+from pyspark.sql.types import IntegralType
 
+from ocdb_server_spark.functions import graph_kernels
+from ocdb_server_spark.functions.arrow_rows import map_partitions, task_budget
 from ocdb_server_spark.functions.text import let_once, tokens, winnow_fingerprints
 from ocdb_server_spark.functions.vector import cosine as _cosine, dot as _dot
 from ocdb_server_spark.io import load_table
@@ -1120,23 +1124,75 @@ SELECT doc_a, doc_b, jaccard FROM pairs
 """
 
 
+def text_size(d: DataFrame) -> tuple[int, int]:
+    """(rows, characters of ``text``) of ``d``, in one aggregate job:
+    what ``ngram_jaccard_pairs``' one-task guard needs, and a bound on
+    the doc_ids that op96/op221's union-find holds."""
+    n_rows, n_chars = d.agg(F.count(F.lit(1)), F.sum(F.length("text"))).first()
+    return n_rows, n_chars or 0
+
+
 def ngram_jaccard_pairs(
-    d: DataFrame, threshold: float = 0.1, same_source: bool = True
+    d: DataFrame,
+    threshold: float = 0.1,
+    same_source: bool = True,
+    size: tuple[int, int] | None = None,
 ) -> DataFrame:
     """(doc_a, doc_b, jaccard) for doc pairs whose word-3-gram Jaccard
     ≥ threshold — the EXACT set-overlap near-dup relation (what
-    MinHash-LSH approximates). The gram join is blocked two ways: by
-    the gram itself (only docs sharing a gram ever meet) and by the
-    max-df cap (grams in > 50 docs are dropped — the stop-gram guard
-    that keeps the join linear-ish at corpus scale). Threshold applied
-    to the 6dp-rounded value so both engines keep identical row sets.
-    `same_source` restricts candidate pairs to one source (op89's
-    within-crawl scoring); op96/op221 pass False — dedup's whole point
-    is catching the same text across crawls (and their crafted test
-    frames carry no source column at all, so it is only touched when
-    the restriction asks for it)."""
+    MinHash-LSH approximates). Grams in more than
+    ``graph_kernels.NEARDUP_MAX_DF`` (50) docs are dropped (the max-df
+    cap, the stop-gram guard that keeps the gram join linear-ish at
+    corpus scale). Threshold applied to the 6dp-rounded
+    value so both engines keep identical row sets. `same_source`
+    restricts candidate pairs to one source (op89's within-crawl
+    scoring); op96/op221 pass False — dedup's whole point is catching
+    the same text across crawls (and their crafted test frames carry
+    no source column at all, so it is only touched when the
+    restriction asks for it).
+
+    Two plans count the shared grams, with the same multiset semantics
+    (every row of a doc_id contributes its grams) and the same
+    tokenizer, ``functions.text.tokens`` in the JVM:
+
+    - One task, when the corpus' ``size`` (rows, text characters;
+      ``text_size`` takes it when not given) fits
+      ``graph_kernels.neardup_kernel_bytes`` within
+      ``arrow_rows.task_budget`` and doc_id is an integer: the token
+      rows go to ``graph_kernels.ngram_pair_counts``, the inverted-index
+      probe.
+    - Relational otherwise: the gram join is blocked by the gram itself
+      (only docs sharing a gram ever meet) and by the max-df cap.
+
+    Either way the JVM computes the rounded Jaccard from the counts and
+    applies the threshold, so both plans return bit-identical rows."""
     id_cols = ["doc_id", "source"] if same_source else ["doc_id"]
     w = d.select(*id_cols, tokens(F.col("text")).alias("w"))
+    budget = task_budget(d.sparkSession)
+    id_type = d.schema["doc_id"].dataType
+    if budget and isinstance(id_type, IntegralType):
+        n_rows, n_chars = size or text_size(d)
+        if graph_kernels.neardup_kernel_bytes(n_rows, n_chars) <= budget:
+            key = id_type.simpleString()
+            counts = map_partitions(
+                w.coalesce(1),
+                functools.partial(
+                    graph_kernels.ngram_pair_counts,
+                    threshold=threshold, same_source=same_source,
+                ),
+                f"doc_a {key}, doc_b {key}, n_shared bigint, n_a bigint, n_b bigint",
+                "ngram_pair_counts",
+            )
+            return _jaccard_at_least(counts, threshold)
+    return _jaccard_at_least(_shared_gram_counts(w, id_cols, same_source), threshold)
+
+
+def _shared_gram_counts(
+    w: DataFrame, id_cols: list[str], same_source: bool
+) -> DataFrame:
+    """``graph_kernels.ngram_pair_counts``' (doc_a, doc_b, n_shared,
+    n_a, n_b) rows, unfiltered, as a relational plan over the token
+    rows ``w``."""
     tri = F.array_distinct(
         F.filter(
             F.zip_with(
@@ -1153,22 +1209,21 @@ def ngram_jaccard_pairs(
         )
     )
     grams = w.select(*id_cols, F.explode(tri).alias("gram"))
-    # max-df cap via partial-agged countDistinct + semi join: the old
-    # per-gram window collect_set(doc_id) funneled EVERY doc_id of the
-    # hottest stop-grams into one window partition and materialized
-    # the full set per row-group before discarding it — the exact skew
-    # the cap exists to guard against (round-13 review). countDistinct
-    # gets map-side partials; the semi join never builds a set.
+    # max-df cap via partial-agged countDistinct + semi join: a per-gram
+    # window collect_set(doc_id) would funnel every doc_id of the
+    # hottest stop-grams into one window partition and materialize the
+    # set before discarding it, the very skew the cap guards against.
+    # countDistinct gets map-side partials; the semi join builds no set.
     allowed = (
         grams.groupBy("gram")
         .agg(F.countDistinct("doc_id").alias("df"))
-        .filter(F.col("df") <= 50)
+        .filter(F.col("df") <= graph_kernels.NEARDUP_MAX_DF)
         .select("gram")
     )
     # persisted: the self-join (a/b) plus the two size joins reference
-    # this frame four times per action — unpersisted, the gram explode
-    # and the df agg re-evaluate each time (op88's documented trap,
-    # round-13 review); the registry pool releases it at the next op.
+    # this frame four times per action; unpersisted, the gram explode
+    # and the df agg would re-evaluate each time. The registry pool
+    # releases it at the next op.
     capped = pool_persist(grams.join(allowed, "gram", "left_semi"))
     sizes = capped.groupBy("doc_id").agg(F.count("*").alias("n"))
     a, b = capped.alias("a"), capped.alias("b")
@@ -1184,16 +1239,27 @@ def ngram_jaccard_pairs(
     )
     sa = sizes.alias("sa")
     sb = sizes.alias("sb")
-    jac = F.round(
-        F.col("n_shared").cast("double")
-        / (F.col("sa.n") + F.col("sb.n") - F.col("n_shared")),
-        6,
-    )
     return (
         shared.join(F.broadcast(sa), F.col("doc_a") == F.col("sa.doc_id"))
         .join(F.broadcast(sb), F.col("doc_b") == F.col("sb.doc_id"))
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+        .select(
+            "doc_a", "doc_b", "n_shared",
+            F.col("sa.n").alias("n_a"), F.col("sb.n").alias("n_b"),
+        )
+    )
+
+
+def _jaccard_at_least(counts: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard) of the (doc_a, doc_b, n_shared, n_a,
+    n_b) ``counts`` whose Jaccard, rounded to 6 digits, is ≥
+    ``threshold``."""
+    jac = F.round(
+        F.col("n_shared").cast("double")
+        / (F.col("n_a") + F.col("n_b") - F.col("n_shared")),
+        6,
+    )
+    return counts.select("doc_a", "doc_b", jac.alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
     )
 
 

@@ -2,13 +2,14 @@
 (op96) and the canonicalization built on them (op221), PageRank (op186),
 BFS reachability (op213) and per-node triangle counts (op220).
 
-Small graphs run in one task. When the graph's vertex set provably fits
-the session's broadcast budget (``_graph_budget``), op220 and
-op96/op221 compute their result in one ``arrow_rows.map_partitions``
-task over the whole edge list, with the kernels of
-``functions/graph_kernels.py``: triangles as the dense product A·A∘A,
-components as a union-find. Larger graphs take the distributed
-algorithms below, which give the same rows.
+Small inputs run in one task. When an op's input provably fits the
+session's task budget (``arrow_rows.task_budget``), op220 counts
+triangles straight from the (part, supplier) incidence rows and
+op96/op221 label components with a union-find, each in one
+``arrow_rows.map_partitions`` task with the kernels of
+``functions/graph_kernels.py``; op96/op221's near-dup pairs come from
+one more task (``dedup.ngram_jaccard_pairs``). Larger inputs take the
+distributed algorithms below, which give the same rows.
 
 Connected components turn pair lists (op79 MinHash, op88 SimHash, op90
 LSH) into dedup decisions: every document gets a canonical cluster id
@@ -41,12 +42,13 @@ import functools
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ocdb_server_spark.functions import graph_kernels
-from ocdb_server_spark.functions.arrow_rows import map_partitions
+from ocdb_server_spark.functions.arrow_rows import map_partitions, task_budget
 from ocdb_server_spark.functions.iterate import iterate_to_fixpoint
 from ocdb_server_spark.io import load_table
 from ocdb_server_spark.operators.dedup import (
     ngram_jaccard_pairs,
     ngram_jaccard_pairs_ctes,
+    text_size,
 )
 from ocdb_server_spark.registry import pool_persist, register
 
@@ -329,35 +331,6 @@ FROM nodes GROUP BY s
 """
 
 
-def _parse_size_bytes(s: str) -> int:
-    """Parse a Spark size conf value ('67108864', '10MB', '1g', '-1')."""
-    s = s.strip().lower()
-    for suf, mult in (
-        ("kb", 1024),
-        ("mb", 1024**2),
-        ("gb", 1024**3),
-        ("tb", 1024**4),
-        ("k", 1024),
-        ("m", 1024**2),
-        ("g", 1024**3),
-        ("t", 1024**4),
-        ("b", 1),
-    ):
-        if s.endswith(suf):
-            return int(float(s[: -len(suf)]) * mult)
-    return int(float(s))
-
-
-def _graph_budget(spark: SparkSession) -> int:
-    """Bytes a guarded graph path may hold in one task or one broadcast:
-    the session's autoBroadcastJoinThreshold, the scale-adaptive knob
-    the planner's own broadcast decisions use; 0 when it is disabled
-    (-1 or 0), which sends every guarded op to its shuffle path."""
-    return max(0, _parse_size_bytes(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    ))
-
-
 def _triangle_counts(edges: DataFrame, broadcast_adj: bool) -> DataFrame:
     """Edge-iterator per-node triangle counts over an undirected edge
     list (s1 < s2, deduplicated): build adjacency lists once, count
@@ -397,16 +370,39 @@ def _triangle_counts(edges: DataFrame, broadcast_adj: bool) -> DataFrame:
     )
 
 
-def _dense_triangle_counts(edges: DataFrame, max_nodes: int) -> DataFrame:
-    """``_triangle_counts``' rows from one Arrow task over the whole
-    edge list (``graph_kernels.triangle_counts``), for graphs of at most
-    ``max_nodes`` nodes."""
-    key = edges.schema["s1"].dataType.simpleString()
+def _incidence_triangle_counts(pairs: DataFrame, max_nodes: int) -> DataFrame:
+    """``_triangle_counts``' rows over the co-supply graph of the
+    (l_partkey, l_suppkey) ``pairs``, from one Arrow task that reads
+    them sorted by part (``graph_kernels.incidence_triangle_counts``),
+    for at most ``max_nodes`` suppliers. A coalesce, not a repartition:
+    the task that finishes ``pairs``' last stage sorts them and runs
+    the kernel, so the rows cross no second exchange."""
+    key = pairs.schema["l_suppkey"].dataType.simpleString()
     return map_partitions(
-        edges.repartition(1),
-        functools.partial(graph_kernels.triangle_counts, max_nodes=max_nodes),
+        pairs.coalesce(1).sortWithinPartitions("l_partkey"),
+        functools.partial(
+            graph_kernels.incidence_triangle_counts, max_nodes=max_nodes
+        ),
         f"s_suppkey {key}, n_triangles bigint",
-        "triangle_counts",
+        "incidence_triangle_counts",
+    )
+
+
+def _co_supply_edges(pairs: DataFrame) -> DataFrame:
+    """The undirected co-supply edges (s1 < s2, each once) of the
+    (l_partkey, l_suppkey) ``pairs``: suppliers that share a part."""
+    a = pairs.alias("a")
+    b = pairs.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.l_partkey") == F.col("b.l_partkey"))
+            & (F.col("a.l_suppkey") < F.col("b.l_suppkey")),
+        )
+        .select(
+            F.col("a.l_suppkey").alias("s1"), F.col("b.l_suppkey").alias("s2")
+        )
+        .distinct()
     )
 
 
@@ -417,7 +413,8 @@ def _adjacency_fits_broadcast(
     """Size guard for the edge-iterator's adjacency broadcast: an
     unguarded F.broadcast OOMs on a hub-heavy graph at scale. The
     relation is sized with its hash-map row overhead
-    (``graph_kernels.adjacency_bytes``) against ``_graph_budget``.
+    (``graph_kernels.adjacency_bytes``) against
+    ``arrow_rows.task_budget``.
 
     Tier 1 (no job on the edges): the supplier dimension bounds the
     co-supply graph's node set, so n rows of n−1 neighbors bound the
@@ -425,7 +422,7 @@ def _adjacency_fits_broadcast(
     2·|E| neighbor entries over at most n rows, counted on the
     persisted edge frame. ``n_nodes`` is the supplier count when the
     caller already took it."""
-    budget = _graph_budget(spark)
+    budget = task_budget(spark)
     if budget == 0:
         return False
     n = load_table(spark, sf_dir, "supplier").count() if n_nodes is None else n_nodes
@@ -446,22 +443,26 @@ def op220_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     set, so one count sizes both.
 
     - Dense, when ``graph_kernels.triangle_kernel_fits`` the supplier
-      count in ``_graph_budget``: one Arrow task over the edge list
-      computes n_tri = (A·A∘A)·1 / 2 with a float64 matmul, exact
-      while n² < 2⁵³ (Azad, Buluç & Gilbert, IPDPSW 2015, count
-      triangles as masked A·A; tiling A is their path to scale).
-      Projections saturate fast: ~30 suppliers per part make the
-      sf0.1 graph the complete K_1000, whose 10⁹-flop product takes
-      ~0.3 s on one core.
-    - Edge-iterator otherwise. Per undirected edge (u,v) the triangles
-      through it number |N(u) ∩ N(v)|, and n_tri(v) = Σ_{e ∋ v} t(e) / 2
-      because each triangle through v is seen by its two v-incident
-      edges. Adjacency lists are built once, each edge joins its two
-      endpoint lists and counts with a JVM ``array_intersect``: no
-      Python, no materialized wedge rows (the oriented 3-way self-join
-      emits all C(1000,3) ≈ 166M wedges on K_1000). The adjacency
-      broadcasts when ``_adjacency_fits_broadcast``, else it attaches
-      by shuffle join; tests/test_small_graphs.py pins all three paths
+      count in ``arrow_rows.task_budget``: one Arrow task reads the
+      distinct (part, supplier) rows sorted by part, sets A[S×S] = 1
+      for each part's supplier set S and computes
+      n_tri = (A·A∘A)·1 / 2 with a float64 matmul, exact while
+      n² < 2⁵³ (Azad, Buluç & Gilbert, IPDPSW 2015, count triangles
+      as masked A·A; tiling A is their path to scale). No co-supply
+      edge is ever built: the projection's self-join would emit
+      Σ |S|² rows, ~18M at sf0.1, where ~30 suppliers per part make
+      the graph the complete K_1000 (a 10⁹-flop product, ~0.3 s on
+      one core).
+    - Edge-iterator otherwise, over the projected co-supply edges. Per
+      undirected edge (u,v) the triangles through it number
+      |N(u) ∩ N(v)|, and n_tri(v) = Σ_{e ∋ v} t(e) / 2 because each
+      triangle through v is seen by its two v-incident edges.
+      Adjacency lists are built once, each edge joins its two endpoint
+      lists and counts with a JVM ``array_intersect``: no Python, no
+      materialized wedge rows (the oriented 3-way self-join emits all
+      C(1000,3) ≈ 166M wedges on K_1000). The adjacency broadcasts
+      when ``_adjacency_fits_broadcast``, else it attaches by shuffle
+      join; tests/test_small_graphs.py pins all three paths
       value-identical.
 
     No triangle algorithm beats a dense input's Θ(Σ d²) element work;
@@ -471,30 +472,17 @@ def op220_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB."""
     li = load_table(spark, sf_dir, "lineitem")
     pairs = li.select("l_partkey", "l_suppkey").distinct()
-    a = pairs.alias("a")
-    b = pairs.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_partkey") == F.col("b.l_partkey"))
-            & (F.col("a.l_suppkey") < F.col("b.l_suppkey")),
-        )
-        .select(
-            F.col("a.l_suppkey").alias("s1"), F.col("b.l_suppkey").alias("s2")
-        )
-        .distinct()
-    )
-    budget = _graph_budget(spark)
+    budget = task_budget(spark)
     n = load_table(spark, sf_dir, "supplier").count() if budget else 0
     if budget and graph_kernels.triangle_kernel_fits(n, budget):
-        return _dense_triangle_counts(edges, max_nodes=n)
+        return _incidence_triangle_counts(pairs, max_nodes=n)
     # referenced 3× by the edge-iterator (adjacency build ×2 + the edge
     # probe): persist so the projection+distinct runs once. The
     # repartition sizes the intersect stage, the Θ(Σ d²) element work,
     # to the core count: the broadcast join keeps the stream side's
     # partitioning, so the cached layout is that stage's task count.
     edges = pool_persist(
-        edges.repartition(spark.sparkContext.defaultParallelism)
+        _co_supply_edges(pairs).repartition(spark.sparkContext.defaultParallelism)
     )
     return _triangle_counts(
         edges,
@@ -598,19 +586,20 @@ def connected_components(
     )
 
 
-def _doc_components(docs: DataFrame, pairs: DataFrame) -> DataFrame:
-    """(id, component) over the (doc_a, doc_b) near-dup pairs of
-    ``docs``, component = the min doc_id reachable; only docs in a pair
-    appear. op96 and op221 both label through here.
+def _doc_components(pairs: DataFrame, n_docs: int | None) -> DataFrame:
+    """(id, component) over the (doc_a, doc_b) near-dup ``pairs``,
+    component = the min doc_id reachable; only docs in a pair appear.
 
-    Every vertex is a doc_id, so the docs count bounds the vertex set.
-    When a union-find over that many ids fits ``_graph_budget``, one
+    Every vertex is a doc_id, so ``n_docs``, the row count of the
+    documents the pairs come from, bounds the vertex set. When a
+    union-find over that many ids fits ``arrow_rows.task_budget``, one
     Arrow task streams the pair list through
-    ``graph_kernels.min_label_components``. Otherwise the distributed
-    ``connected_components`` computes the same labels."""
+    ``graph_kernels.min_label_components``. Otherwise (or when
+    ``n_docs`` is None) the distributed ``connected_components``
+    computes the same labels."""
     edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    budget = _graph_budget(docs.sparkSession)
-    if budget and graph_kernels.union_find_bytes(docs.count()) <= budget:
+    budget = task_budget(pairs.sparkSession)
+    if budget and n_docs is not None and graph_kernels.union_find_bytes(n_docs) <= budget:
         key = edges.schema["src"].dataType.simpleString()
         return map_partitions(
             edges.repartition(1),
@@ -619,6 +608,20 @@ def _doc_components(docs: DataFrame, pairs: DataFrame) -> DataFrame:
             "min_label_components",
         )
     return connected_components(edges)
+
+
+def _neardup_components(docs: DataFrame) -> DataFrame:
+    """(id, component) over the exact 3-gram-Jaccard ≥ 0.5 pairs of
+    ``docs`` (``dedup.ngram_jaccard_pairs``, cross-source — see
+    _EXACT_NEARDUP_THRESHOLD's rationale), labelled by
+    ``_doc_components``. op96 and op221 both label through here. One
+    aggregate job (``dedup.text_size``) sizes both one-task guards; a
+    disabled budget skips it."""
+    size = text_size(docs) if task_budget(docs.sparkSession) else None
+    pairs = ngram_jaccard_pairs(
+        docs, threshold=_EXACT_NEARDUP_THRESHOLD, same_source=False, size=size
+    )
+    return _doc_components(pairs, n_docs=size[0] if size else None)
 
 
 # --------------------------------------------------------------------------
@@ -637,10 +640,7 @@ def neardup_canonicalize(docs: DataFrame) -> DataFrame:
     dropped_chars)."""
     from pyspark.sql import Window
 
-    pairs = ngram_jaccard_pairs(
-        docs, threshold=_EXACT_NEARDUP_THRESHOLD, same_source=False
-    )
-    labels = _doc_components(docs, pairs)
+    labels = _neardup_components(docs)
     members = labels.join(
         docs.select("doc_id", "n_chars"), labels.id == docs.doc_id
     ).select("component", "doc_id", "n_chars")
@@ -739,12 +739,11 @@ def op221_neardup_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_pipeline_r6.py) still applies; the LSH→CC approximate
     composition keeps its own gate in tests/test_components.py.
 
-    Scale: the gram-blocked pair join with the max-df cap (op89's
-    annotated 5-shuffle plan), components in one task while the
-    union-find over the documents fits the budget and by min-label
-    propagation with localCheckpoint beyond it (_doc_components), one
-    keyed window per cluster. The composition adds no new shuffle
-    class."""
+    Scale: while the corpus fits the task budget, the pairs and the
+    components each come from one Arrow task (_neardup_components);
+    beyond it, the gram-blocked pair join with the max-df cap and
+    min-label propagation with localCheckpoint. Then one keyed window
+    per cluster. The composition adds no new shuffle class."""
     return neardup_canonicalize(load_table(spark, sf_dir, "documents"))
 
 
@@ -772,9 +771,9 @@ def op96_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB candidate path) keeps its planted-cluster behavioral gates
     in tests/test_components.py.
 
-    Components run in one Arrow task while the union-find over the
-    documents fits the budget, and as the min-label fixpoint beyond
-    it. The fixpoint's exchanges carry ~zero bytes and its stages are
+    While the corpus fits the task budget, the pairs and the
+    components each come from one Arrow task (_neardup_components);
+    beyond it, the gram-blocked pair join and the min-label fixpoint. The fixpoint's exchanges carry ~zero bytes and its stages are
     few and coarse, so a real shuffle service adds little to it
     (BASELINE.md measures a 2-executor standalone cluster against
     local[16]).
@@ -791,11 +790,7 @@ def op96_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     superseded generations are GC'd per iteration
     (functions/iterate.py _ReliableCkptGC), at the cost of one state
     write+read per iteration."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(
-        docs, threshold=_EXACT_NEARDUP_THRESHOLD, same_source=False
-    )
-    comp = _doc_components(docs, pairs)
+    comp = _neardup_components(load_table(spark, sf_dir, "documents"))
     # members is surfaced as a sorted comma-joined string, not
     # array<bigint>: the observable surface must stay scalar-typed so
     # row hashing / canonicalization works downstream (same

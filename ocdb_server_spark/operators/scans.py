@@ -21,7 +21,7 @@ from collections.abc import Iterator
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ocdb_server_spark.functions.arrow_rows import map_partitions, map_rows
+from ocdb_server_spark.functions.arrow_rows import batch_rows, map_partitions, map_rows
 from ocdb_server_spark.io import load_table
 from ocdb_server_spark.registry import register
 from ocdb_server_spark.scratch import scratch_dir
@@ -762,10 +762,12 @@ def export_docs_archive(
     )
     docs = docs.coalesce(1) if partitions == 1 else docs.repartition(partitions)
 
-    def write(rows):
+    def write(batches):
         pid = TaskContext.get().partitionId()
         path = os.path.join(out_dir, f"part-{pid:05d}{archive.suffix}")
-        return [(path, _publish(path, lambda f: archive.write(_docs_jsonl(rows), f)))]
+        return [(path, _publish(
+            path, lambda f: archive.write(_docs_jsonl(batch_rows(batches)), f)
+        ))]
 
     manifest = map_partitions(
         docs, write, "path string, n_blocks long", f"{archive.__name__}_write"
@@ -1080,7 +1082,7 @@ def _avro_write_parts(out_dir: str):
     not, with the codec alternating per partition so every run
     exercises both the null and the deflate block path."""
 
-    def write(rows):
+    def write(batches):
         pid = TaskContext.get().partitionId()
         docs = [
             {
@@ -1092,7 +1094,7 @@ def _avro_write_parts(out_dir: str):
                 "attrs": {"n2": 2 * nch + 1},
                 "maybe_score": None if did % 5 == 0 else 2 * nch,
             }
-            for did, text, lang, source, nch in rows
+            for did, text, lang, source, nch in batch_rows(batches)
         ]
         codec = "deflate" if pid % 2 else "null"
         path = os.path.join(out_dir, f"part-{pid:05d}.avro")
@@ -1236,10 +1238,10 @@ def _obs_avro_write(out_dir: str):
     8-row blocks, the codec alternating per partition; an empty
     partition writes no file, not an empty OCF."""
 
-    def write(rows):
+    def write(batches):
         obs = [
             {"dataset_id": ds, "field": field, "value": float(value)}
-            for ds, field, value in rows
+            for ds, field, value in batch_rows(batches)
         ]
         if not obs:
             return []

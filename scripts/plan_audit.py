@@ -124,7 +124,7 @@ def main() -> None:
     # semantics (not a planning accident).
     expected = {
         "op05_sink_parquet_roundtrip": "orderBy on the <=4-row per-partition count result",
-        "op89_ngram_jaccard": "documented gram-blocked join pipeline (each shuffle carries grams/ids, never text)",
+        "op89_ngram_jaccard": "ONE MapInArrow pair-count task over the token rows while the corpus fits the task budget; beyond it, the gram-blocked join pipeline (each shuffle carries grams/ids, never text)",
         "op120_tfidf_terms": "tf + df + N + top-k window; df/N sides are tiny and broadcast after their aggs",
         "op19_agg_count_distinct": "three exact COUNT(DISTINCT) over different columns IS the op; Catalyst's standard multi-distinct Expand",
         "op26_agg_percentile_exact": "exact per-key percentile IS the op: one buffer per return flag (3 keys)",
@@ -150,9 +150,9 @@ def main() -> None:
         "op213_bfs_reachability": "4 unrolled BFS hops over the COLD plan — each hop's frontier⋈edges + anti-join repeats the lineage textually; at runtime every frontier is persist()ed (the op's recomputation guard), so executed work is one edges-join + anti-join per hop",
         "op216_bpe_train": "3 unrolled merge rounds, each a vocab-sized pair agg + 1-row argmax broadcast — corpus rows shuffle once into the word-frequency table; everything after is ~|vocab| rows",
         "op217_bpe_apply": "op216's 3 unrolled rounds + the vocab-cost broadcast join back to the corpus — same vocab-sized economics",
-        "op220_triangle_count": "co-supply projection (pair self-join + distinct) into ONE MapInArrow task over Exchange SinglePartition computing A·A∘A while the supplier count fits the broadcast budget; beyond it, the edge-iterator: broadcast-adjacency array_intersect per edge over the persist()ed edge cache",
-        "op96_dedup_components": "the gram-blocked pair pipeline (op89's shuffles, persist()ed capped grams) into ONE MapInArrow union-find task over Exchange SinglePartition while the documents fit the broadcast budget; beyond it, the checkpointed min-label fixpoint",
-        "op221_neardup_canonicalize": "op96's pair pipeline and one-task union-find (fixpoint beyond the budget), then one window partitioning per cluster for the keep-best rank and the cluster totals",
+        "op220_triangle_count": "distinct (part, supplier) rows coalesced and sorted into ONE MapInArrow task computing A·A∘A while the supplier count fits the task budget; beyond it, the co-supply projection (pair self-join + distinct) and the edge-iterator: broadcast-adjacency array_intersect per edge over the persist()ed edge cache",
+        "op96_dedup_components": "op89's one-task pair count into ONE MapInArrow union-find task over Exchange SinglePartition while the corpus fits the task budget; beyond it, the gram-blocked pair pipeline (persist()ed capped grams) and the checkpointed min-label fixpoint",
+        "op221_neardup_canonicalize": "op96's one-task pair count and union-find (relational pairs and fixpoint beyond the budget), then one window partitioning per cluster for the keep-best rank and the cluster totals",
         "op231_holt_forecast": "spine fill (distinct types × day range broadcast) + counts agg + one grouped Arrow stage keyed on event_type; the recurrence runs inside the per-series task",
         "op235_holt_winters_seasonal": "op231's spine/counts shape and grouped Arrow stage, with the 9-int vector state inside the per-series task",
         "op237_theta_set_ops": "two per-slice distinct+bottom-k cuts feed k-row set math — every shuffle after the cuts carries <=2k signature rows plus the one exact-truth distinct agg the op emits alongside",

@@ -1188,7 +1188,9 @@ def test_triangle_broadcast_guard_tiers(spark, sf_dir):
         assert graph._adjacency_fits_broadcast(spark, sf_dir, edges) is False
     finally:
         spark.conf.set(key, saved)
-    assert graph._parse_size_bytes("10MB") == 10 * 1024**2
-    assert graph._parse_size_bytes("64m") == 64 * 1024**2
-    assert graph._parse_size_bytes("67108864") == 67108864
-    assert graph._parse_size_bytes("1g") == 1024**3
+    from ocdb_server_spark.functions.arrow_rows import parse_size_bytes
+
+    assert parse_size_bytes("10MB") == 10 * 1024**2
+    assert parse_size_bytes("64m") == 64 * 1024**2
+    assert parse_size_bytes("67108864") == 67108864
+    assert parse_size_bytes("1g") == 1024**3

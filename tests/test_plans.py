@@ -763,20 +763,51 @@ def test_triangle_edges_cached_and_no_cartesian(spark, sf_dir, monkeypatch):
 
 @pytest.mark.parametrize(
     "name",
-    ["op220_triangle_count", "op96_dedup_components", "op221_neardup_canonicalize"],
+    [
+        "op220_triangle_count",
+        "op89_ngram_jaccard",
+        "op96_dedup_components",
+        "op221_neardup_canonicalize",
+    ],
 )
 def test_small_graph_runs_in_one_arrow_task(spark, sf_dir, name):
-    """At test scale the graph fits the budget: the triangle counts or
-    the components come from exactly one MapInArrow task, fed by an
-    Exchange SinglePartition, and no fixpoint or edge-iterator join
-    remains."""
+    """At test scale every input fits the task budget, so each kernel
+    is one MapInArrow task and none of the relational plans it stands
+    in for remains: no co-supply self-join or edge-iterator
+    intersect, no gram rows (explode) or gram self-join, no
+    checkpointed fixpoint state.
+
+    - op220: one MapInArrow fed by the distinct (part, supplier) rows,
+      coalesced into the task of their final aggregate and sorted by
+      part; no join and no second exchange.
+    - op89: one MapInArrow over the token rows; no join, no exchange.
+    - op96/op221: the pair count over the token rows, then the
+      union-find over an Exchange SinglePartition."""
     plan = _plan(OPS[name].fn(spark, sf_dir))
     lines = plan.splitlines()
     arrow = [i for i, line in enumerate(lines) if "MapInArrow" in line]
-    assert len(arrow) == 1, plan
-    assert "Exchange SinglePartition" in lines[arrow[0] + 1], plan
     assert "array_intersect" not in plan
+    assert "explode" not in plan
     assert "Scan ExistingRDD" not in plan  # no checkpointed fixpoint state
+    if name == "op220_triangle_count":
+        assert len(arrow) == 1, plan
+        below = lines[arrow[0] + 1 : arrow[0] + 4]
+        assert "Sort [l_partkey" in below[0], plan
+        assert "Coalesce 1" in below[1], plan
+        assert "HashAggregate(keys=[l_partkey" in below[2], plan
+        assert "Join" not in plan and "SinglePartition" not in plan, plan
+        return
+    kernels = [
+        k for i in arrow for k in ("ngram_pair_counts", "min_label_components")
+        if k in lines[i]
+    ]
+    if name == "op89_ngram_jaccard":
+        assert kernels == ["ngram_pair_counts"], plan
+        assert "Join" not in plan and "Exchange" not in plan, plan
+        return
+    assert kernels == ["min_label_components", "ngram_pair_counts"], plan
+    assert "Exchange SinglePartition" in lines[arrow[0] + 1], plan
+    assert "SortMergeJoin" not in plan, plan
 
 
 def test_bfs_no_per_hop_anti_join(spark, sf_dir):
