@@ -37,32 +37,6 @@ def token_hits(toks: Column, words: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(lits, t)))
 
 
-def simhash64(toks: Column) -> Column:
-    """64-bit SimHash (Charikar '02) of a token array, as one JVM
-    expression: per-token xxhash64, then for each bit position the
-    ±1 votes are summed and the sign becomes the signature bit.
-
-    Per-row compute is O(tokens × 64) long ops inside codegen; no
-    shuffle, no Python. Near-dup candidate pairing over the signature
-    is op88's job (chunk banding + bit_count verify)."""
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-
-    def _vote(i: int):
-        # factory closure: PySpark derives HOF arity from the lambda
-        # signature, so the merge lambda must take exactly (acc, h)
-        def merge(acc, h):
-            bit = F.shiftrightunsigned(h, i).bitwiseAND(F.lit(1))
-            return acc + F.when(bit == 1, 1).otherwise(-1)
-
-        return merge
-
-    out = F.lit(0).cast("long")
-    for i in range(64):
-        votes = F.aggregate(hashes, F.lit(0).cast("long"), _vote(i))
-        out = out + F.shiftleft(F.when(votes > 0, 1).otherwise(0).cast("long"), i)
-    return out
-
-
 def let_once(val: Column, body) -> Column:
     """Let-binding for expression trees: evaluate ``val`` ONCE and
     hand it to ``body`` as a lambda variable. Spark has no expression-

@@ -79,23 +79,3 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     if isinstance(a, str) and isinstance(b, str):
         return F.expr(f"{_dot_sql(a, b)} / ({_l2_sql(a)} * {_l2_sql(b)})")
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-def normalize(a: Column | str, norm: Column | None = None) -> Column:
-    """L2-normalize to array<double>.
-
-    Pass ``norm`` (a precomputed L2-norm column — withColumn it first,
-    the way io.load_embeddings_normed stores ``nrm`` beside the
-    vectors) to keep the work O(d) per row. Without it the norm
-    aggregate is embedded INSIDE the transform lambda and Spark
-    re-evaluates it per element — O(d²), the HOF-lambda-invariant trap
-    this codebase measured at 25 s vs 0.7 s in winnow_fingerprints
-    (round-12 review). The fallback is kept for small-d convenience
-    only."""
-    if norm is not None:
-        col = F.expr(a) if isinstance(a, str) else a
-        return F.transform(col, lambda x: x.cast("double") / norm)
-    if isinstance(a, str):
-        return F.expr(f"transform({a}, x -> cast(x as double) / {_l2_sql(a)})")
-    n = l2_norm(a)
-    return F.transform(a, lambda x: x.cast("double") / n)

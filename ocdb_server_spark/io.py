@@ -14,7 +14,11 @@ here so a partitioned layout is a one-file change.
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
+
+from ocdb_server_spark.session import STANCE, Stance, adopt
 
 TABLES = (
     "region",
@@ -48,114 +52,29 @@ _CACHE: dict[tuple[str, str], DataFrame] = {}
 # ONLY: a warm cache already freezes the visible table state, so
 # re-running the 1-row capture job per plan build would re-read the
 # same frozen rows — caching the captured value is observationally
-# identical and saves a full Spark job per build (~0.1 s, the largest
-# single line in plan_build_sec's round-6 creep). Cold sessions still
-# re-fetch per build, preserving the contract's re-read semantics.
+# identical and saves a full Spark job (~0.1 s) per build. Cold
+# sessions still re-fetch per build, preserving the contract's re-read
+# semantics.
 _PARAM_CACHE: dict[tuple[str, str], object] = {}
 
-# Temp-view registration memo (per live SparkSession): load_tables used
-# to re-issue createOrReplaceTempView on every call (~6 py4j round
-# trips per star-join build); re-registering the same (view, sf_dir)
-# binding is a no-op, so skip it. Invalidated whenever the cache state
-# changes (warm_cache/clear_cache), because load_table's return — and
-# therefore what the view must bind to — changes with it.
-import weakref
-
+# Temp-view registration memo (per live SparkSession): re-registering
+# the same (view, sf_dir) binding is a no-op costing ~6 py4j round
+# trips per star-join build, so load_tables skips it. Invalidated
+# whenever the cache state changes (warm_cache/clear_cache), because
+# load_table's return — and therefore what the view must bind to —
+# changes with it.
 _VIEW_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict[str, str]]" = (
     weakref.WeakKeyDictionary()
 )
 
-
-# Sessions already inspected (or explicitly exempted) by
-# _tune_bare_session: tuning is a one-time decision per session, and
-# the per-call conf.get was a py4j round trip on EVERY load_table —
-# including warm cache hits (round-12 review). session.get_spark
-# registers its sessions here so a deliberately-configured session is
-# never value-sniffed at all (a configured 200 used to be
-# indistinguishable from the stock default and got clobbered).
-_TUNED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
-
-# Sessions whose timezone stance WE control: built by session.get_spark
-# (which pins UTC itself) or sniffed-bare and pinned by
-# _tune_bare_session. An EXTERNAL session that configured its own
-# shuffle/timezone lands in _TUNED without joining either set — the
-# events read must not flip ITS timezone out from under it
-# (round-13 review).
-_OWN: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
-_BARE: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
-
-# Sessions already warned, once per session per WARNING KIND — the
-# two warnings are different facts about different states (we pinned
-# UTC over your JVM default / we left your explicit non-UTC alone and
-# the oracle will diverge), so one shared set let the first suppress
-# the second on the same session (round-14 review).
-_TZ_PIN_WARNED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
-_TZ_SKIP_WARNED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
-
-# Zone IDs equivalent to UTC for oracle parity — shared by the
-# JVM-default and explicit-conf branches below so the two can never
-# drift apart again (session review: the round-15 ADVICE fix copied
-# the tuple into the second branch; one list, one edit point).
+# Zone IDs equivalent to UTC for oracle parity.
 _UTC_ALIASES = ("UTC", "Etc/UTC", "GMT")
-
-
-def mark_session_configured(spark: SparkSession) -> None:
-    """Exempt a session from bare-session tuning: it picked its own
-    shuffle/AQE/timezone stance (session.get_spark calls this)."""
-    _TUNED.add(spark)
-    _OWN.add(spark)
-
-
-def _tune_bare_session(spark: SparkSession) -> None:
-    """The driver harness hands us ITS OWN bare session. On such a
-    session every shuffle runs at the 200-partition default, and this
-    testdata's single-row-group files give 1-task scans — so each query
-    pays seconds of empty-task scheduling, which is what cut the
-    round-1 correctness sweep off at 50/113 queries. If the session
-    still has the stock default, drop shuffle parallelism to 8 (plenty
-    for sf≤0.1 row counts) and let AQE coalesce further. A session that
-    was explicitly configured (ours sets 32 in session.py) is left
-    alone. Runtime-settable confs only — same pattern as nanosAsLong."""
-    if spark in _TUNED:
-        return
-    try:
-        tuned_bare = False
-        if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
-            # Only the never-configured case: our own sessions
-            # (session.py) pick shuffle partitions AND an AQE stance per
-            # profile — the interactive profile deliberately disables
-            # AQE, so don't override a configured session's choice
-            # (get_spark sessions are exempted via _TUNED before this
-            # sniff ever runs; an EXTERNAL session that deliberately
-            # chose exactly 200 remains indistinguishable from the
-            # stock default — documented residual).
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            spark.conf.set("spark.sql.adaptive.enabled", "true")
-            spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-            # The oracle computes in naive/UTC time: EVERY timestamp
-            # literal comparison (op209's orders filter, not just the
-            # events path) needs the session zone pinned, or a bare
-            # session in a non-UTC container flips boundary rows
-            # (round-12 review — the defensive pin lived only on the
-            # events load path).
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
-            tuned_bare = True
-        if tuned_bare:
-            _BARE.add(spark)
-    except Exception:
-        pass  # never let a conf quirk break a read
-    finally:
-        # membership must stick even when the probe raised: otherwise
-        # EVERY later load_table — warm hits included — re-pays the
-        # failing py4j round trip the set exists to remove
-        # (round-13 review)
-        _TUNED.add(spark)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}")
-    _tune_bare_session(spark)
+    stance = adopt(spark)
     cached = _CACHE.get((sf_dir, name))
     if cached is not None:
         # Serve the warm frame only to ITS OWN session: a frame bound
@@ -170,87 +89,68 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 return cached
         except Exception:
             pass  # dead session object — treat as a miss
-    if name == "events":
-        # events.parquet is TIMESTAMP(NANOS), which Spark 4 rejects by
-        # default. session.py sets this at build time, but the driver
-        # harness may hand us ITS OWN bare session — the conf is
-        # runtime-settable, so set it defensively before the read
-        # (without it the read CRASHES, so this one is unconditional).
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # The NTZ→LTZ cast in _normalize_events (and every later
-        # date_trunc/unix_micros) is session-timezone-dependent; the
-        # DuckDB oracle computes in naive/UTC time. "Timezone stance is
-        # ours" is decided from the TIMEZONE CONF ITSELF, not inferred
-        # from the shuffle sniff (round-14 ADVICE: an external session
-        # that configured shuffle — so skipped bare tuning — but left
-        # the timezone UNSET silently lost the pin that used to apply
-        # unconditionally, breaking oracle parity for every timestamp
-        # op on that session):
-        #   - _OWN sessions pinned UTC at build; re-pin is a no-op.
-        #   - an UNSET spark.sql.session.timeZone means the session is
-        #     running on the JVM default nobody chose — pin UTC.
-        #   - an EXPLICIT non-UTC setting is a deliberate choice: leave
-        #     it (the caller's own timestamps must not silently shift
-        #     because they read one table through us — round-13
-        #     review), but warn loudly once per session that timestamp
-        #     ops will diverge from the naive/UTC oracle.
-        if spark in _OWN or spark in _BARE:
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
-        else:
-            try:
-                tz = spark.conf.get("spark.sql.session.timeZone", None)
-            except Exception:
-                tz = "UTC"  # conf quirk — never break the read
-            if tz is None:
-                # The pin can still override a DELIBERATE JVM-level
-                # choice (-Duser.timezone / TZ env with the SQL conf
-                # intentionally left to its documented JVM default) —
-                # round-14 review. Oracle parity needs the pin, but it
-                # must not be silent when it actually changes the
-                # effective zone: say so once and name the opt-out
-                # (set the conf explicitly and we leave it alone).
-                try:
-                    jvm_tz = (
-                        spark._jvm.java.util.TimeZone.getDefault().getID()
-                    )
-                except Exception:
-                    jvm_tz = "UTC"
-                if jvm_tz not in _UTC_ALIASES and (
-                    spark not in _TZ_PIN_WARNED
-                ):
-                    import warnings
-
-                    warnings.warn(
-                        f"events load pins spark.sql.session.timeZone to "
-                        f"UTC for oracle parity, overriding the JVM "
-                        f"default {jvm_tz!r}; set the conf explicitly to "
-                        f"keep a non-UTC zone",
-                        stacklevel=2,
-                    )
-                    _TZ_PIN_WARNED.add(spark)
-                spark.conf.set("spark.sql.session.timeZone", "UTC")
-            elif (
-                # same UTC-equivalence whitelist as the jvm_tz branch
-                # above: an explicit 'Etc/UTC'/'GMT' causes no oracle
-                # divergence, so warning on it was a false alarm the
-                # JVM-default path already avoided (round-15 ADVICE)
-                tz not in _UTC_ALIASES
-                and spark not in _TZ_SKIP_WARNED
-            ):
-                import warnings
-
-                warnings.warn(
-                    f"events loaded on a session with explicit "
-                    f"spark.sql.session.timeZone={tz!r}; timestamp "
-                    f"operators assume UTC and will diverge from the "
-                    f"naive/UTC oracle on this session",
-                    stacklevel=2,
-                )
-                _TZ_SKIP_WARNED.add(spark)
+    if name == "events" and stance.kind == "external":
+        _events_stance(spark, stance)
     df = spark.read.parquet(table_path(sf_dir, name))
     if name == "events":
         df = _normalize_events(df)
     return df
+
+
+def _events_stance(spark: SparkSession, stance: Stance) -> None:
+    """The confs an events read needs, on a session whose caller chose
+    its own stance (own and bare sessions hold them since adopt).
+
+    nanosAsLong is set always: without it the read fails. The
+    NTZ→LTZ cast in _normalize_events and every later date_trunc or
+    unix_micros depend on the session zone, and the oracle computes in
+    naive/UTC time:
+    - an UNSET zone runs on a JVM default nobody chose: pin UTC, and
+      warn once per session when that changes the effective zone
+      (setting the conf explicitly opts out);
+    - an EXPLICIT zone is the caller's choice, which their own
+      timestamps depend on: leave it, and warn once per session when it
+      is not UTC-equivalent, since timestamp ops then diverge from the
+      oracle."""
+    nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.set(nanos, STANCE[nanos])
+    try:
+        tz = spark.conf.get("spark.sql.session.timeZone", None)
+    except Exception:
+        tz = "UTC"  # conf quirk — never break the read
+    if tz is None:
+        try:
+            jvm_tz = spark._jvm.java.util.TimeZone.getDefault().getID()
+        except Exception:
+            jvm_tz = "UTC"
+        if jvm_tz not in _UTC_ALIASES:
+            _warn_once(
+                stance,
+                "pin",
+                f"events load pins spark.sql.session.timeZone to UTC for "
+                f"oracle parity, overriding the JVM default {jvm_tz!r}; set "
+                f"the conf explicitly to keep a non-UTC zone",
+            )
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+    elif tz not in _UTC_ALIASES:
+        _warn_once(
+            stance,
+            "skip",
+            f"events loaded on a session with explicit "
+            f"spark.sql.session.timeZone={tz!r}; timestamp operators "
+            f"assume UTC and will diverge from the naive/UTC oracle on "
+            f"this session",
+        )
+
+
+def _warn_once(stance: Stance, kind: str, message: str) -> None:
+    """Warn at load_table's caller, once per session and kind: the two
+    kinds are different facts, so one must not silence the other."""
+    if kind not in stance.warned:
+        import warnings
+
+        warnings.warn(message, stacklevel=4)
+        stance.warned.add(kind)
 
 
 # Tables whose operators do heavy per-row work (shingling, hashing,
@@ -266,30 +166,24 @@ def warm_cache(
     """Cache the given tables in memory, repartitioned for parallelism
     by row count, and serve them from load_table until clear_cache().
 
-    The sizing was RE-DERIVED round 9 under the fresh-instance
-    protocol (the old 10k-rows/slice [8, cores] clamp was tuned with
-    repeat-mode timings, which hide the map-stage wave each fresh
-    execution actually pays), then SMOOTHED round 10 (round-9 ADVICE —
-    the 20k-row special case was a 1→4 step at an unmeasured boundary):
+    Sizing is one curve, ~18k rows/slice clamped to [1, 4×cores],
+    measured under fresh-instance timings (repeat-mode timings hide
+    the map-stage wave each fresh execution pays):
 
-    - one curve: ~18k rows/slice clamped to [1, 4×cores]. Tiny dims
-      (<18k rows) land on ONE slice — their dominant consumption is
-      the build side of a BroadcastExchange, and each broadcast build
-      is a JOB over the cached slices; an 8-slice 25-row nation makes
-      that job an 8-task wave of nothing (interleaved at sf0.1: op39's
-      five broadcast builds, 150 → 136 ms). Bigger tables grow
-      smoothly: interleaved ABAB sweeps at sf0.1 found the per-table
-      optima (lineitem 600k: 24 ≈ 32-33 > 16; orders 150k: 8 > 6 >
-      15; events 100k: 4-5 > 10), and the formula lands each inside
-      its measured plateau — identical values at every measured size;
-      only the never-measured 20k-72k gap changed (e.g. 30k rows:
-      1 slice, was 4). Old vs new r9 formula, 3 interleaved rounds,
-      best-of-7 per query: comparable-5 532 → 464 ms, 7-query total
-      803 → 722 ms, NO query regressed. The cap scales with cores,
-      not a constant: an absolute cap tuned at sf0.1 would throttle
-      a 60M-row stress table to 24 giant slices (the "would this
-      hold at 100×?" trap); 4×cores keeps slices memory-bounded
-      while allowing a few task waves on big inputs.
+    - Tiny dims (<18k rows) land on ONE slice — their dominant
+      consumption is the build side of a BroadcastExchange, and each
+      broadcast build is a JOB over the cached slices; an 8-slice
+      25-row nation makes that job an 8-task wave of nothing
+      (interleaved at sf0.1: op39's five broadcast builds, 150 →
+      136 ms).
+    - Bigger tables grow smoothly: interleaved ABAB sweeps at sf0.1
+      found the per-table optima (lineitem 600k: 24 ≈ 32-33 > 16;
+      orders 150k: 8 > 6 > 15; events 100k: 4-5 > 10), and the curve
+      lands each inside its measured plateau.
+    - The cap scales with cores, not a constant: an absolute cap tuned
+      at sf0.1 would throttle a 60M-row stress table to 24 giant
+      slices; 4×cores keeps slices memory-bounded while allowing a few
+      task waves on big inputs.
 
     Compute-heavy text/vector tables keep their 16-slice floor (the
     per-row work dominates scheduling there)."""
@@ -297,12 +191,10 @@ def warm_cache(
     for name in names:
         # Re-warming without clear_cache() must not leak: the frame
         # being replaced stays persisted forever once its only handle
-        # is overwritten (round-12 review). Unpersist it, and — only
-        # when the table being replaced is 'embeddings' — the derived
-        # normed-embeddings entry built on that generation (itself
-        # cached — unpersist, don't just forget it). Re-warming an
-        # unrelated table must NOT discard the still-valid normed
-        # cache (round-12 ADVICE: that forced a surprise rebuild).
+        # is overwritten. Unpersist it, and — only when the table being
+        # replaced is 'embeddings' — the derived normed-embeddings entry
+        # built on that generation (itself cached). Re-warming an
+        # unrelated table keeps the still-valid normed cache.
         stale_keys = [(sf_dir, name)]
         if name == "embeddings":
             stale_keys.append((sf_dir, "__embeddings_normed__"))
@@ -315,13 +207,8 @@ def warm_cache(
                     pass  # stopped session — nothing to free
         df = load_table(spark, sf_dir, name)
         n = df.count()
-        # One smooth curve, ~18k rows/slice clamped to [1, 4×cores]
-        # (round-9 ADVICE: the old `n<=20k → 1 else max(4, …)` form
-        # was a 1→4 step discontinuity at an unmeasured boundary).
-        # Same values at every measured point: tiny dims (<18k) → 1
-        # slice (broadcast builds stop paying multi-task waves),
-        # events 100k → 5, orders 150k → 8, lineitem 600k → 33 —
-        # all inside their r9 interleaved-ABAB plateaus.
+        # tiny dims (<18k) → 1 slice, events 100k → 5, orders 150k →
+        # 8, lineitem 600k → 33 (see the docstring)
         p = min(4 * cores, max(1, n // 18_000))
         if name in _COMPUTE_HEAVY:
             p = max(p, min(cores, 16))
@@ -332,9 +219,8 @@ def warm_cache(
     # cache state changed: registered views must rebind to the warm
     # frames on the next load_tables. Captured parameters are
     # embeddings-derived (__query_vec_N__), so they are stale only
-    # when embeddings itself re-warmed — dropping them on an unrelated
-    # re-warm forced a pointless 1-row head() job on the next plan
-    # build (round-13 review, the normed-cache ADVICE fix's sibling).
+    # when embeddings itself re-warmed; keeping them otherwise saves a
+    # 1-row head() job on the next plan build.
     _VIEW_MEMO.clear()
     if "embeddings" in names:
         _PARAM_CACHE.clear()
@@ -342,10 +228,10 @@ def warm_cache(
 
 def clear_cache() -> None:
     """Unpersist and forget every cached frame. Exception-safe per
-    entry (round-12 review): if the owning session was stopped,
-    unpersist raises — the cache MUST still empty, or the next
-    session would be served frames bound to a dead SparkContext
-    (same guard registry.release_pool carries)."""
+    entry: if the owning session was stopped, unpersist raises — the
+    cache MUST still empty, or the next session would be served frames
+    bound to a dead SparkContext (same guard registry.release_pool
+    carries)."""
     for df in _CACHE.values():
         try:
             df.unpersist()
@@ -357,11 +243,9 @@ def clear_cache() -> None:
 
 
 def _owns_warm(spark: SparkSession, sf_dir: str) -> bool:
-    """Does THIS session own the warm embeddings entry? The invariant
-    (warm presence + live-session identity + exception-as-miss) lives
-    once — it used to be copy-pasted in query_vector and
-    load_embeddings_normed, where a future fix to one copy would
-    silently miss the other (round-13 review)."""
+    """Does THIS session own the warm embeddings entry? Warm presence,
+    live-session identity and exception-as-miss, shared by query_vector
+    and load_embeddings_normed."""
     warm = _CACHE.get((sf_dir, "embeddings"))
     try:
         return warm is not None and warm.sparkSession is spark
@@ -382,9 +266,9 @@ def query_vector(
     ent = _PARAM_CACHE.get(key)
     if ent is not None:
         owner_ref, cached_vec = ent  # type: ignore[misc]
-        # Session guard (round-12 review): parameters captured under a
-        # PREVIOUS session's warm cache must not serve a new session
-        # over possibly-regenerated data — same rule _CACHE enforces.
+        # Parameters captured under a PREVIOUS session's warm cache
+        # must not serve a new session over possibly-regenerated data —
+        # same rule _CACHE enforces.
         if owner_ref() is spark:
             # a COPY: the cached list must not alias the caller's
             # (in-place normalization would corrupt every later serve)
@@ -436,8 +320,8 @@ def load_embeddings_normed(spark: SparkSession, sf_dir: str) -> DataFrame:
             pass  # dead session object — treat as a miss
     en = load_table(spark, sf_dir, "embeddings").withColumn("nrm", F.expr(_NORM_SQL))
     # Materialize-and-store only when THIS session owns the warm
-    # embeddings entry (round-12 review): presence alone also matched
-    # a dead/foreign session's entry, making an unwarmed session pay a
+    # embeddings entry: presence alone also matches a dead/foreign
+    # session's entry, which would make an unwarmed session pay a
     # surprise cache+count job AND overwrite another owner's normed
     # handle (a storage leak — the displaced frame stays persisted
     # with no handle left to unpersist it).
@@ -455,20 +339,19 @@ def load_embeddings_normed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _normalize_events(df: DataFrame) -> DataFrame:
-    """Normalize events.ts to TIMESTAMP (LTZ) regardless of how the
-    driver generated the file that round:
+    """Normalize events.ts to TIMESTAMP (LTZ) for either layout the
+    test-data generator writes:
 
-    - TIMESTAMP(NANOS) layout (rounds 1-2): Spark 4 reads it as a
-      nanos-since-epoch long (spark.sql.legacy.parquet.nanosAsLong).
-      Truncate to µs with INTEGER division (a double division would
-      lose precision at 1e18 magnitudes) — same truncation DuckDB
-      applies casting TIMESTAMP_NS → TIMESTAMP, so the oracle agrees.
-    - TIMESTAMP(MICROS, isAdjustedToUTC=false) layout (observed round
-      3): Spark's inferTimestampNTZ maps it to TIMESTAMP_NTZ; cast to
-      LTZ (session tz is UTC on every session we build AND on this
-      container's bare sessions, so the cast is value-identical) —
-      functions like unix_micros require LTZ, and round 1's gate
-      proved LTZ output hash-matches the naive DuckDB oracle."""
+    - TIMESTAMP(NANOS): Spark 4 reads it as a nanos-since-epoch long
+      (spark.sql.legacy.parquet.nanosAsLong). Truncate to µs with
+      INTEGER division (a double division would lose precision at 1e18
+      magnitudes) — same truncation DuckDB applies casting
+      TIMESTAMP_NS → TIMESTAMP, so the oracle agrees.
+    - TIMESTAMP(MICROS, isAdjustedToUTC=false): Spark's
+      inferTimestampNTZ maps it to TIMESTAMP_NTZ; cast to LTZ (the
+      session zone is UTC on own and adopted sessions, so the cast is
+      value-identical) — functions like unix_micros require LTZ, and
+      LTZ output hash-matches the naive DuckDB oracle."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, TimestampNTZType
 

@@ -100,57 +100,6 @@ def op116_contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def editdist_verify_pairs(
-    docs: DataFrame, pairs: DataFrame, threshold: float = 0.7
-) -> DataFrame:
-    """op132's Levenshtein verify stage, decoupled from its shape-block
-    candidate generator — the 100 TB COMPOSITION path (BASELINE.md
-    17g/18c): `pairs` (columns id_a < id_b) comes from a corpus-stable
-    signature generator (op79 MinHash banding / op88 SimHash chunks,
-    exactly as the op96/op221 dedup pipeline sources its candidates),
-    the texts join back by doc_id, and the same edit-distance +
-    relative-threshold predicate as op132 decides. Output schema is
-    op132's (id_a, id_b, edit_dist, edit_ratio).
-
-    Scale shape: two hash joins of a small pair set against the
-    documents table on its key (candidates from signatures are
-    O(near-dups), not O(n²)), then a per-row Levenshtein — no
-    self-join, no value-shape blocking, bucket sizes corpus-stable.
-
-    Relation to op132, measured round 18 (BASELINE.md 18a) and pinned
-    by tests/test_components.py: in the near-dup regime
-    (edit_ratio ≤ 0.3) this path STRICTLY DOMINATES the shape block —
-    it recovers every regime pair op132 finds with identical
-    (edit_dist, edit_ratio) values, and finds the near-dups the
-    equality block structurally misses (a single-token edit usually
-    changes the word count or the n_chars/10 bucket, so at sf0.1 the
-    shape block sees 1 of the corpus's 256 true near-dup pairs; this
-    path sees all 256). The shape block's 0.6–0.7 tail — same-shape,
-    token-wise unrelated texts — is a threshold artifact this path
-    does not (and should not) reproduce."""
-    d = docs.select("doc_id", "text")
-    j = pairs.select("id_a", "id_b").join(
-        d.select(F.col("doc_id").alias("id_a"), F.col("text").alias("text_a")),
-        "id_a",
-    ).join(
-        d.select(F.col("doc_id").alias("id_b"), F.col("text").alias("text_b")),
-        "id_b",
-    )
-    lev = F.levenshtein(F.col("text_a"), F.col("text_b"))
-    ratio = lev.cast("double") / F.greatest(
-        F.length(F.col("text_a")), F.length(F.col("text_b"))
-    )
-    return (
-        j.select(
-            "id_a",
-            "id_b",
-            lev.cast("bigint").alias("edit_dist"),
-            ratio.alias("edit_ratio"),
-        )
-        .filter(F.col("edit_ratio") <= threshold)
-    )
-
-
 _OP132_SQL = """
 WITH d AS (
   SELECT doc_id, lang, text,
@@ -198,9 +147,8 @@ def op132_editdist_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     small-scale convenience that keeps the op self-contained and
     ANSI-mirrorable.
 
-    COMPOSITION SCOPE (measured round 18, BASELINE.md 18a; the
-    composed stage itself is `editdist_verify_pairs`, pinned by
-    tests/test_components.py): the claim above holds for the NEAR-DUP
+    COMPOSITION SCOPE (BASELINE.md 18a; the composed stage is pinned
+    by tests/test_components.py): the claim above holds for the NEAR-DUP
     REGIME, not for this op's full loose-threshold output — and there
     composition doesn't just match the shape block, it strictly
     dominates it. At sf0.1 the shape block emits 2051 pairs of which
@@ -980,21 +928,21 @@ def simhash_signatures(
     """Distributed SimHash: explode tokens, hash, then ONE hash-agg
     computing all 64 bit votes as codegen'd conditional sums (the
     same map-side-partial shape as op79's minhash agg). Semantically
-    identical to functions/text.simhash64 — parity-tested — but the
+    identical to the one-expression SimHash reference in
+    tests/test_pipeline_ext.py — parity-tested — but the
     per-token work runs inside whole-stage codegen instead of Spark's
     interpreted higher-order-function evaluator (64 interpreted
     aggregate passes per row measured 3.5 s at sf0.1; this is ~0.5 s).
     Docs with no tokens produce no signature row.
 
     The 64 vote aggregates and the 64-term signature fold are built
-    as JVM-parsed expression STRINGS (op39/op79's flattening rule,
-    applied round 18): the Column-API loop issued ~650 py4j round
-    trips per plan build — op88's build measured 1.3 s, vs 0.76 s
-    flattened — for a bit-identical Catalyst plan (same
-    conditional-sum aggregates, same left-associated shiftleft sum;
-    parity re-asserted against functions/text.simhash64 at
-    sf0.001/0.01: 0 mismatches). The residual build cost is JVM
-    analysis of the 64-wide aggregate itself (a single
+    as JVM-parsed expression STRINGS (op39/op79's flattening rule):
+    the Column-API loop issued ~650 py4j round trips per plan build —
+    op88's build measured 1.3 s, vs 0.76 s flattened — for a
+    bit-identical Catalyst plan (same conditional-sum aggregates, same
+    left-associated shiftleft sum; parity checked against the
+    reference at sf0.001/0.01: 0 mismatches). The residual build cost
+    is JVM analysis of the 64-wide aggregate itself (a single
     array-of-sums aggregate measured only 0.68 s build and a slower
     execution — rejected)."""
     toks = df.select(
@@ -1132,6 +1080,18 @@ def text_size(d: DataFrame) -> tuple[int, int]:
     return n_rows, n_chars or 0
 
 
+def pairs_in_one_task(d: DataFrame, size: tuple[int, int] | None = None) -> bool:
+    """Does ``ngram_jaccard_pairs`` count ``d``'s pairs in one Arrow
+    task? Yes when doc_id is an integer and the corpus' ``size`` (rows,
+    text characters; ``text_size`` takes it when not given) fits
+    ``graph_kernels.neardup_kernel_bytes`` within
+    ``arrow_rows.task_budget``. Its pairs then sit in one partition."""
+    budget = task_budget(d.sparkSession)
+    if not budget or not isinstance(d.schema["doc_id"].dataType, IntegralType):
+        return False
+    return graph_kernels.neardup_kernel_bytes(*(size or text_size(d))) <= budget
+
+
 def ngram_jaccard_pairs(
     d: DataFrame,
     threshold: float = 0.1,
@@ -1155,12 +1115,8 @@ def ngram_jaccard_pairs(
     (every row of a doc_id contributes its grams) and the same
     tokenizer, ``functions.text.tokens`` in the JVM:
 
-    - One task, when the corpus' ``size`` (rows, text characters;
-      ``text_size`` takes it when not given) fits
-      ``graph_kernels.neardup_kernel_bytes`` within
-      ``arrow_rows.task_budget`` and doc_id is an integer: the token
-      rows go to ``graph_kernels.ngram_pair_counts``, the inverted-index
-      probe.
+    - One task, when ``pairs_in_one_task``: the token rows go to
+      ``graph_kernels.ngram_pair_counts``, the inverted-index probe.
     - Relational otherwise: the gram join is blocked by the gram itself
       (only docs sharing a gram ever meet) and by the max-df cap.
 
@@ -1168,22 +1124,18 @@ def ngram_jaccard_pairs(
     applies the threshold, so both plans return bit-identical rows."""
     id_cols = ["doc_id", "source"] if same_source else ["doc_id"]
     w = d.select(*id_cols, tokens(F.col("text")).alias("w"))
-    budget = task_budget(d.sparkSession)
-    id_type = d.schema["doc_id"].dataType
-    if budget and isinstance(id_type, IntegralType):
-        n_rows, n_chars = size or text_size(d)
-        if graph_kernels.neardup_kernel_bytes(n_rows, n_chars) <= budget:
-            key = id_type.simpleString()
-            counts = map_partitions(
-                w.coalesce(1),
-                functools.partial(
-                    graph_kernels.ngram_pair_counts,
-                    threshold=threshold, same_source=same_source,
-                ),
-                f"doc_a {key}, doc_b {key}, n_shared bigint, n_a bigint, n_b bigint",
-                "ngram_pair_counts",
-            )
-            return _jaccard_at_least(counts, threshold)
+    if pairs_in_one_task(d, size):
+        key = d.schema["doc_id"].dataType.simpleString()
+        counts = map_partitions(
+            w.coalesce(1),
+            functools.partial(
+                graph_kernels.ngram_pair_counts,
+                threshold=threshold, same_source=same_source,
+            ),
+            f"doc_a {key}, doc_b {key}, n_shared bigint, n_a bigint, n_b bigint",
+            "ngram_pair_counts",
+        )
+        return _jaccard_at_least(counts, threshold)
     return _jaccard_at_least(_shared_gram_counts(w, id_cols, same_source), threshold)
 
 

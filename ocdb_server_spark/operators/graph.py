@@ -48,6 +48,7 @@ from ocdb_server_spark.io import load_table
 from ocdb_server_spark.operators.dedup import (
     ngram_jaccard_pairs,
     ngram_jaccard_pairs_ctes,
+    pairs_in_one_task,
     text_size,
 )
 from ocdb_server_spark.registry import pool_persist, register
@@ -586,7 +587,9 @@ def connected_components(
     )
 
 
-def _doc_components(pairs: DataFrame, n_docs: int | None) -> DataFrame:
+def _doc_components(
+    pairs: DataFrame, n_docs: int | None, one_partition: bool = False
+) -> DataFrame:
     """(id, component) over the (doc_a, doc_b) near-dup ``pairs``,
     component = the min doc_id reachable; only docs in a pair appear.
 
@@ -596,13 +599,18 @@ def _doc_components(pairs: DataFrame, n_docs: int | None) -> DataFrame:
     Arrow task streams the pair list through
     ``graph_kernels.min_label_components``. Otherwise (or when
     ``n_docs`` is None) the distributed ``connected_components``
-    computes the same labels."""
+    computes the same labels.
+
+    ``one_partition`` says the pairs already sit in one partition (they
+    were counted in one task): the union-find then runs in that task,
+    with no exchange. Other pairs reach it through one exchange, so the
+    stage that computes them keeps its parallelism."""
     edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     budget = task_budget(pairs.sparkSession)
     if budget and n_docs is not None and graph_kernels.union_find_bytes(n_docs) <= budget:
         key = edges.schema["src"].dataType.simpleString()
         return map_partitions(
-            edges.repartition(1),
+            edges.coalesce(1) if one_partition else edges.repartition(1),
             graph_kernels.min_label_components,
             f"id {key}, component {key}",
             "min_label_components",
@@ -621,7 +629,11 @@ def _neardup_components(docs: DataFrame) -> DataFrame:
     pairs = ngram_jaccard_pairs(
         docs, threshold=_EXACT_NEARDUP_THRESHOLD, same_source=False, size=size
     )
-    return _doc_components(pairs, n_docs=size[0] if size else None)
+    return _doc_components(
+        pairs,
+        n_docs=size[0] if size else None,
+        one_partition=pairs_in_one_task(docs, size),
+    )
 
 
 # --------------------------------------------------------------------------

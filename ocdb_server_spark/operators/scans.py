@@ -1156,7 +1156,7 @@ def op252_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelizes across files; a production writer streams blocks
     instead of buffering the partition. The tiny ≤8-row manifest
     collect() forces the write before the read plan is returned —
-    bounded, same class as sinks.py:38."""
+    bounded."""
     # Per-process dir (concurrent sessions must not unlink files
     # another session's lazy binaryFile plan is about to read) with
     # dead-PID reaping so repeated runs don't accumulate table copies

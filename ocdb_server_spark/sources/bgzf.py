@@ -90,11 +90,6 @@ def iter_bgzf_members(lines):
     yield BGZF_EOF
 
 
-def write_bgzf(lines) -> bytes:
-    """Whole-buffer convenience over iter_bgzf_members (tests)."""
-    return b"".join(iter_bgzf_members(lines))
-
-
 def walk_blocks(path: str) -> list[tuple[int, int]]:
     """Block manifest [(offset, length), ...] for a BGZF file, built
     from the in-band BSIZE fields ALONE: seek to each member, read

@@ -13,7 +13,7 @@ Scope (exactly what op202/op203 exercise and tests interop-prove):
 - the ENCODER is a known-coefficient writer: it takes already-
   quantized coefficients in zigzag order (the op generates them from
   closed-form formulas so the DuckDB oracle can recompute features
-  without seeing a byte) — plus fdct_quantize for lossy round-trips;
+  without seeing a byte);
 - the DECODER is a real baseline parser: marker walk, canonical
   Huffman table build from BITS/HUFFVAL, bit-reader with 0xFF00
   stuffing, DC differential + AC run/size/EOB/ZRL entropy decode,
@@ -310,21 +310,6 @@ _A = np.array(
 def idct2d(block: np.ndarray) -> np.ndarray:
     """8x8 inverse DCT (float64 in, float64 out, no level shift)."""
     return _A.T @ np.asarray(block, dtype=np.float64) @ _A
-
-
-def fdct_quantize(pixels: np.ndarray) -> np.ndarray:
-    """Forward path for round-trip tests: (h, w) uint8 -> quantized
-    zigzag coefficients (n_blocks, 64), raster block order."""
-    p = np.asarray(pixels, dtype=np.float64) - 128.0
-    h, w = p.shape
-    out = []
-    for by in range(h // 8):
-        for bx in range(w // 8):
-            blk = p[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8]
-            coef = _A @ blk @ _A.T  # forward DCT (orthonormal transpose)
-            q = np.rint(coef / QTABLE.reshape(8, 8)).astype(np.int64).ravel()
-            out.append(q[ZIGZAG])  # natural -> zigzag: zz[k] = nat[ZIGZAG[k]]
-    return np.stack(out)
 
 
 def decode_jpeg_gray(payload: bytes) -> tuple[int, int, np.ndarray, np.ndarray]:

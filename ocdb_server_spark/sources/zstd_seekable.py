@@ -64,9 +64,9 @@ def iter_seekable_zstd(lines):
     """Yield (frame_bytes, decompressed_size) for an iterable of str
     records, streaming — one ≤48 KiB batch in memory, flushed at LINE
     boundaries (the shared sources/linebatch.py kernel: ONE copy of
-    the record-alignment guarantee for both transports, round-12
-    review). The seek-table frame is NOT yielded; write_seekable_zstd
-    / the writer task appends it once all frames are out."""
+    the record-alignment guarantee for both transports). The
+    seek-table frame is NOT yielded; the writer task appends it once
+    all frames are out."""
     from ocdb_server_spark.sources.linebatch import batch_lines
 
     codec = _codec()
@@ -79,16 +79,6 @@ def seek_table_frame(sizes: list[tuple[int, int]]) -> bytes:
     body = b"".join(struct.pack("<II", c, u) for c, u in sizes)
     body += struct.pack("<IBI", len(sizes), 0, _SEEKABLE_MAGIC)
     return struct.pack("<II", _SKIPPABLE_MAGIC, len(body)) + body
-
-
-def write_seekable_zstd(lines) -> bytes:
-    """Whole-buffer convenience over iter_seekable_zstd (tests)."""
-    frames: list[bytes] = []
-    sizes: list[tuple[int, int]] = []
-    for frame, usize in iter_seekable_zstd(lines):
-        frames.append(frame)
-        sizes.append((len(frame), usize))
-    return b"".join(frames) + seek_table_frame(sizes)
 
 
 def read_seek_table(path: str) -> list[tuple[int, int, int]]:

@@ -76,10 +76,10 @@ def _stream_source(spark: SparkSession, sf_dir: str, name: str):
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # load_table applies the session confs the events read needs
-    # (nanosAsLong, without which the legacy layout crashes the schema
-    # probe, plus the UTC pin and bare-session tuning), so a session
-    # whose first op is a streaming one gets them too. The returned
+    # load_table gives the session the confs the events read needs
+    # (session.adopt: nanosAsLong, without which the legacy layout
+    # crashes the schema probe, and the UTC pin), so a session whose
+    # first op is a streaming one gets them too. The returned
     # frame is discarded: the stream source needs the RAW file schema,
     # which load_table's normalization rewrites.
     from ocdb_server_spark.io import load_table

@@ -83,8 +83,7 @@ def validate(df: DataFrame, rules: list[Rule]) -> DataFrame:
     `issues`/`status` are OUTPUT names: an input frame already
     carrying either would be silently clobbered (e.g. a submission's
     business `status` from the reference workflow), so that is a loud
-    error at the boundary (round-13 review, the sinks.py guard
-    pattern)."""
+    error at the boundary."""
     clash = {"issues", "status"} & set(df.columns)
     if clash:
         raise ValueError(

@@ -151,7 +151,7 @@ def main() -> None:
         "op216_bpe_train": "3 unrolled merge rounds, each a vocab-sized pair agg + 1-row argmax broadcast — corpus rows shuffle once into the word-frequency table; everything after is ~|vocab| rows",
         "op217_bpe_apply": "op216's 3 unrolled rounds + the vocab-cost broadcast join back to the corpus — same vocab-sized economics",
         "op220_triangle_count": "distinct (part, supplier) rows coalesced and sorted into ONE MapInArrow task computing A·A∘A while the supplier count fits the task budget; beyond it, the co-supply projection (pair self-join + distinct) and the edge-iterator: broadcast-adjacency array_intersect per edge over the persist()ed edge cache",
-        "op96_dedup_components": "op89's one-task pair count into ONE MapInArrow union-find task over Exchange SinglePartition while the corpus fits the task budget; beyond it, the gram-blocked pair pipeline (persist()ed capped grams) and the checkpointed min-label fixpoint",
+        "op96_dedup_components": "op89's one-task pair count and ONE MapInArrow union-find, chained in one task with no exchange, while the corpus fits the task budget; beyond it, the gram-blocked pair pipeline (persist()ed capped grams) and the checkpointed min-label fixpoint",
         "op221_neardup_canonicalize": "op96's one-task pair count and union-find (relational pairs and fixpoint beyond the budget), then one window partitioning per cluster for the keep-best rank and the cluster totals",
         "op231_holt_forecast": "spine fill (distinct types × day range broadcast) + counts agg + one grouped Arrow stage keyed on event_type; the recurrence runs inside the per-series task",
         "op235_holt_winters_seasonal": "op231's spine/counts shape and grouped Arrow stage, with the 9-int vector state inside the per-series task",

@@ -1,20 +1,24 @@
 #!/usr/bin/env python
 """Simulate the driver's correctness sweep to measure budget fit.
 
-Round 1's sweep certified only 50/113 operators before running out of
-wall-clock (VERDICT.md "What's wrong" #1). This script reproduces the
-sweep's conditions as closely as we can observe them:
+The correctness sweep certifies operators inside a wall-clock budget
+(VERDICT.md "What's wrong" #1). This script reproduces the sweep's
+conditions as closely as we can observe them:
 
-- a BARE SparkSession (stock confs; load_table's _tune_bare_session is
-  expected to drop shuffle partitions 200 -> 8 and enable AQE),
+- a BARE SparkSession (stock confs; its first load_table adopts the
+  engine's stance through session.adopt: 8 shuffle partitions, AQE,
+  UTC, and Python workers from the engine daemon),
 - sf0.01 testdata,
 - every `queries()` entry executed via .toPandas(),
 - every `oracle_sql()` entry executed in DuckDB via .arrow(),
 - a pandas sort-by-all-columns canonicalization pass (the step whose
   cost/crashes showed up in CORRECTNESS_r01.json tracebacks).
 
-Prints per-op wall seconds (slowest first) and the total, so slow
-outliers can be fixed before the real gate runs.
+Prints per-op wall seconds (slowest first) and the totals, so slow
+outliers can be fixed before the real gate runs. Beside the totals it
+prints the sum over the Python-stage ops (the ops whose row in
+SCALE_AUDIT.md counts a Python-eval node) and the box's cores and
+loadavg at start and end, so a record says whether the box was loaded.
 
 Usage: python scripts/sweep_sim.py [sf_dir] [--dump-costs]
 
@@ -44,6 +48,28 @@ def canon(pdf):
     return pdf.sort_values(by=cols, kind="mergesort").reset_index(drop=True)
 
 
+def _load(cpus: int) -> str:
+    one, five, fifteen = os.getloadavg()
+    return (f"cores={os.cpu_count()} master=local[{cpus}] "
+            f"loadavg={one:.2f}/{five:.2f}/{fifteen:.2f}")
+
+
+def _python_stage_ops() -> set[str]:
+    """Ops whose SCALE_AUDIT.md row has a Python-eval node (pyudf > 0)."""
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "SCALE_AUDIT.md",
+    )
+    ops = set()
+    with open(path) as f:
+        for line in f:
+            cells = [c.strip() for c in line.split("|")]
+            if len(cells) > 7 and cells[1].startswith("op") and cells[7].isdigit():
+                if int(cells[7]) > 0:
+                    ops.add(cells[1])
+    return ops
+
+
 def main() -> None:
     argv = [a for a in sys.argv[1:] if a != "--dump-costs"]
     dump_costs = "--dump-costs" in sys.argv[1:]
@@ -53,6 +79,7 @@ def main() -> None:
     # Bare session: exactly what the driver builds (no engine confs),
     # on the box's cores (SPARK_GRAFT_CPUS, as get_spark reads it).
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    load_start = _load(cpus)
     spark = (
         SparkSession.builder.appName("sweep_sim")
         .master(f"local[{cpus}]")
@@ -76,11 +103,12 @@ def main() -> None:
         )
     t_setup = time.perf_counter() - t_start
 
-    # Warm-up: the FIRST timed op used to absorb the session's one-time
-    # costs (py4j bring-up, bare-session tuning, parquet footer cache) —
-    # the r14 dump recorded op03 at 4.6 s vs ~1 s warmed, which skews
-    # the cheapest-first ordering the dump exists to feed. One throwaway
-    # scan amortizes that before any measurement starts.
+    # Warm-up: without it the FIRST timed op absorbs the session's
+    # one-time costs (py4j bring-up, parquet footer cache; 4.6 s vs ~1 s
+    # warmed for op03), which skews the cheapest-first ordering the dump
+    # feeds. One throwaway scan amortizes that before any measurement
+    # starts; it does not go through load_table, so the first op still
+    # adopts the session.
     try:
         spark.read.parquet(f"{sf_dir}/nation.parquet").count()
     except Exception:
@@ -111,11 +139,11 @@ def main() -> None:
     if dump_costs:
         import json
 
-        # Guardrails (round-3 ADVICE): costs drive the registry's
-        # sweep order, which assumes sf0.01 wall seconds. Refuse to
-        # overwrite with timings measured at another scale factor, and
-        # never record a failed op's (possibly near-zero) timing —
-        # keep its previous measurement if one exists.
+        # Guardrails: costs drive the registry's sweep order, which
+        # assumes sf0.01 wall seconds. Refuse to overwrite with timings
+        # measured at another scale factor, and never record a failed
+        # op's (possibly near-zero) timing — keep its previous
+        # measurement if one exists.
         if os.path.basename(sf_dir.rstrip("/")) != "sf0.01":
             print(f"refusing --dump-costs: sf_dir {sf_dir!r} is not sf0.01 "
                   "(sweep-order costs must be sf0.01 wall seconds)")
@@ -140,8 +168,14 @@ def main() -> None:
             print(f"wrote {path} ({len(failures)} failed ops kept stale/absent)")
 
     total = sum(timings.values())
+    py_ops = _python_stage_ops() & set(timings)
+    print(f"load start: {load_start}")
+    print(f"load end:   {_load(cpus)}")
     print(f"setup: {t_setup:.1f}s  queries: {total:.1f}s  "
-          f"grand: {t_setup + total:.1f}s  n={len(timings)}")
+          f"grand: {t_setup + total:.1f}s  n={len(timings)}  "
+          f"errors={len(failures)}")
+    print(f"python-stage ops: {sum(timings[k] for k in py_ops):.1f}s  "
+          f"n={len(py_ops)}")
     for name, sec in sorted(timings.items(), key=lambda kv: -kv[1]):
         print(f"{sec:8.2f}s  {name}")
     if failures:

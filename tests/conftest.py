@@ -16,7 +16,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="ocdb_tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark(app_name="ocdb_tests", master="local[8]")
     s.sparkContext.setLogLevel("WARN")
     yield s
 

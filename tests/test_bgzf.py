@@ -20,10 +20,15 @@ import pytest
 
 from ocdb_server_spark.sources.bgzf import (
     BGZF_EOF,
+    iter_bgzf_members,
     read_block,
     walk_blocks,
-    write_bgzf,
 )
+
+
+def write_bgzf(lines) -> bytes:
+    """A whole BGZF file in memory, as op260's writer task streams it."""
+    return b"".join(iter_bgzf_members(lines))
 
 
 def _corpus(n=4000):

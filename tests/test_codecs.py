@@ -110,14 +110,29 @@ def test_bmp_top_down_variant():
 # ------------------------------------------------------------------ JPEG
 
 from ocdb_server_spark.sources.jpeg import (  # noqa: E402
+    _A,
     QTABLE,
     QTABLE_ZZ,
     ZIGZAG,
     decode_jpeg_gray,
     encode_jpeg_gray,
-    fdct_quantize,
     idct2d,
 )
+
+
+def fdct_quantize(pixels: np.ndarray) -> np.ndarray:
+    """Forward path for lossy round-trips: (h, w) uint8 -> quantized
+    zigzag coefficients (n_blocks, 64), raster block order."""
+    p = np.asarray(pixels, dtype=np.float64) - 128.0
+    h, w = p.shape
+    out = []
+    for by in range(h // 8):
+        for bx in range(w // 8):
+            blk = p[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8]
+            coef = _A @ blk @ _A.T  # forward DCT (orthonormal transpose)
+            q = np.rint(coef / QTABLE.reshape(8, 8)).astype(np.int64).ravel()
+            out.append(q[ZIGZAG])  # natural -> zigzag: zz[k] = nat[ZIGZAG[k]]
+    return np.stack(out)
 
 
 def _rand_coeffs(n_blocks, seed, dc_range=80, n_ac=6, ac_range=9):

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ocdb_server_spark.operators.graph import connected_components
 from ocdb_server_spark.registry import load_all
@@ -224,14 +224,61 @@ SELECT id, MIN(r) FROM reach GROUP BY id
 # ---------------------------------------------------------------------------
 
 
+def editdist_verify_pairs(
+    docs: DataFrame, pairs: DataFrame, threshold: float = 0.7
+) -> DataFrame:
+    """op132's Levenshtein verify stage, decoupled from its shape-block
+    candidate generator — the 100 TB COMPOSITION path (BASELINE.md
+    17g/18c): `pairs` (columns id_a < id_b) comes from a corpus-stable
+    signature generator (op79 MinHash banding / op88 SimHash chunks,
+    exactly as the op96/op221 dedup pipeline sources its candidates),
+    the texts join back by doc_id, and the same edit-distance +
+    relative-threshold predicate as op132 decides. Output schema is
+    op132's (id_a, id_b, edit_dist, edit_ratio).
+
+    Scale shape: two hash joins of a small pair set against the
+    documents table on its key (candidates from signatures are
+    O(near-dups), not O(n²)), then a per-row Levenshtein — no
+    self-join, no value-shape blocking, bucket sizes corpus-stable.
+
+    Relation to op132 (BASELINE.md 18a), pinned below: in the near-dup
+    regime (edit_ratio ≤ 0.3) this path STRICTLY DOMINATES the shape block —
+    it recovers every regime pair op132 finds with identical
+    (edit_dist, edit_ratio) values, and finds the near-dups the
+    equality block structurally misses (a single-token edit usually
+    changes the word count or the n_chars/10 bucket, so at sf0.1 the
+    shape block sees 1 of the corpus's 256 true near-dup pairs; this
+    path sees all 256). The shape block's 0.6–0.7 tail — same-shape,
+    token-wise unrelated texts — is a threshold artifact this path
+    does not (and should not) reproduce."""
+    d = docs.select("doc_id", "text")
+    j = pairs.select("id_a", "id_b").join(
+        d.select(F.col("doc_id").alias("id_a"), F.col("text").alias("text_a")),
+        "id_a",
+    ).join(
+        d.select(F.col("doc_id").alias("id_b"), F.col("text").alias("text_b")),
+        "id_b",
+    )
+    lev = F.levenshtein(F.col("text_a"), F.col("text_b"))
+    ratio = lev.cast("double") / F.greatest(
+        F.length(F.col("text_a")), F.length(F.col("text_b"))
+    )
+    return (
+        j.select(
+            "id_a",
+            "id_b",
+            lev.cast("bigint").alias("edit_dist"),
+            ratio.alias("edit_ratio"),
+        )
+        .filter(F.col("edit_ratio") <= threshold)
+    )
+
+
 def _composed_neardups(spark, sf_dir, docs):
     """The measured 100 TB path for edit-distance near-dup detection:
     op79 MinHash ∪ op88 SimHash candidates → op132's Levenshtein
     verify stage (editdist_verify_pairs)."""
-    from ocdb_server_spark.operators.dedup import (
-        editdist_verify_pairs,
-        minhash_neardup_pairs,
-    )
+    from ocdb_server_spark.operators.dedup import minhash_neardup_pairs
 
     mh = minhash_neardup_pairs(docs).selectExpr(
         "doc_a AS id_a", "doc_b AS id_b"

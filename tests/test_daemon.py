@@ -138,7 +138,7 @@ import json, sys
 sys.path.insert(0, {PACKAGE_ROOT!r})
 from ocdb_server_spark.registry import REGISTRY, load_all
 from ocdb_server_spark.session import get_spark
-spark = get_spark(master="local[2]", shuffle_partitions=2)
+spark = get_spark(master="local[2]")
 spark.sparkContext.setLogLevel("ERROR")
 load_all()
 df = REGISTRY["op195_wav_decode_features"].fn(spark, {sf_dir!r})

@@ -435,7 +435,7 @@ def _add_statement(module: str, func: str):
     # the BGZF block reader, reached through BgzfArchive
     ("sources/bgzf.py", "read_block", {"op260_bgzf_splittable_gzip"}),
     # a helper no op reaches
-    ("functions/vector.py", "normalize", set()),
+    ("validation.py", "validate", set()),
     # names inside decorators are not followed: @register reaches no op
     ("registry.py", "register", set()),
 ])

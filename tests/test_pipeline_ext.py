@@ -6,12 +6,37 @@ from __future__ import annotations
 
 import pytest
 
-from pyspark.sql import functions as F
+from pyspark.sql import Column, functions as F
 
-from ocdb_server_spark.functions.text import simhash64, tokens, winnow_fingerprints
+from ocdb_server_spark.functions.text import tokens, winnow_fingerprints
 from ocdb_server_spark.registry import load_all
 
 OPS = load_all()
+
+
+def simhash64(toks: Column) -> Column:
+    """64-bit SimHash (Charikar '02) of a token array, as one JVM
+    expression: per-token xxhash64, then for each bit position the
+    ±1 votes are summed and the sign becomes the signature bit.
+
+    The reference that op88's explode+agg signature path must match
+    bit for bit."""
+    hashes = F.transform(toks, lambda t: F.xxhash64(t))
+
+    def _vote(i: int):
+        # factory closure: PySpark derives HOF arity from the lambda
+        # signature, so the merge lambda must take exactly (acc, h)
+        def merge(acc, h):
+            bit = F.shiftrightunsigned(h, i).bitwiseAND(F.lit(1))
+            return acc + F.when(bit == 1, 1).otherwise(-1)
+
+        return merge
+
+    out = F.lit(0).cast("long")
+    for i in range(64):
+        votes = F.aggregate(hashes, F.lit(0).cast("long"), _vote(i))
+        out = out + F.shiftleft(F.when(votes > 0, 1).otherwise(0).cast("long"), i)
+    return out
 
 
 # ------------------------------------------------------------- SimHash
@@ -47,7 +72,7 @@ def test_simhash_identical_and_near(crafted_docs):
 
 def test_simhash_agg_matches_expression(crafted_docs):
     """op88's codegen explode+agg signature path must be bit-identical
-    to the reference expression in functions/text.simhash64."""
+    to the reference expression simhash64 above."""
     from ocdb_server_spark.operators.dedup import simhash_signatures
 
     via_agg = {

@@ -782,7 +782,8 @@ def test_small_graph_runs_in_one_arrow_task(spark, sf_dir, name):
       part; no join and no second exchange.
     - op89: one MapInArrow over the token rows; no join, no exchange.
     - op96/op221: the pair count over the token rows, then the
-      union-find over an Exchange SinglePartition."""
+      union-find in the same task: its input is coalesced, not
+      exchanged."""
     plan = _plan(OPS[name].fn(spark, sf_dir))
     lines = plan.splitlines()
     arrow = [i for i, line in enumerate(lines) if "MapInArrow" in line]
@@ -806,7 +807,8 @@ def test_small_graph_runs_in_one_arrow_task(spark, sf_dir, name):
         assert "Join" not in plan and "Exchange" not in plan, plan
         return
     assert kernels == ["min_label_components", "ngram_pair_counts"], plan
-    assert "Exchange SinglePartition" in lines[arrow[0] + 1], plan
+    assert "Coalesce 1" in lines[arrow[0] + 1], plan
+    assert "SinglePartition" not in plan, plan
     assert "SortMergeJoin" not in plan, plan
 
 

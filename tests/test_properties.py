@@ -159,18 +159,6 @@ def test_cosine_properties_batched(spark):
         assert r["aa"] == pytest.approx(1.0, abs=1e-12)      # self-similarity
 
 
-def test_normalize_unit_norm_batched(spark):
-    from pyspark.sql import functions as F
-
-    from ocdb_server_spark.functions.vector import l2_norm_d, normalize
-
-    rng = np.random.default_rng(7)
-    vecs = [(i, rng.standard_normal(32).tolist()) for i in range(100)]
-    df = spark.createDataFrame(vecs, "id int, v array<double>")
-    out = df.select(l2_norm_d(normalize(F.col("v"))).alias("n")).collect()
-    assert all(r["n"] == pytest.approx(1.0, abs=1e-9) for r in out)
-
-
 # ------------------------------------------- CDC merge (round 13)
 
 

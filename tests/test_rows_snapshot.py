@@ -120,7 +120,7 @@ def test_rows_op_matches_snapshot(name, spark):
 def _regenerate() -> None:
     from ocdb_server_spark.session import get_spark
 
-    spark = get_spark(app_name="rows_snapshot", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(app_name="rows_snapshot", master="local[8]")
     spark.sparkContext.setLogLevel("ERROR")
     snap = {name: _fingerprint(QUERIES[name](spark, SF_DIR)) for name in ROWS_OPS}
     with open(SNAPSHOT, "w") as f:

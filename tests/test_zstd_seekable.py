@@ -20,11 +20,22 @@ import struct
 import pytest
 
 from ocdb_server_spark.sources.zstd_seekable import (
+    iter_seekable_zstd,
     read_frame,
     read_seek_table,
     seek_table_frame,
-    write_seekable_zstd,
 )
+
+
+def write_seekable_zstd(lines) -> bytes:
+    """A whole seekable-zstd file in memory: the frames, then the seek
+    table, as op261's writer task streams them."""
+    frames: list[bytes] = []
+    sizes: list[tuple[int, int]] = []
+    for frame, usize in iter_seekable_zstd(lines):
+        frames.append(frame)
+        sizes.append((len(frame), usize))
+    return b"".join(frames) + seek_table_frame(sizes)
 
 
 def _corpus(n=4000):
@@ -309,8 +320,9 @@ def test_property_roundtrip_any_unicode_corpus(lines):
     from ocdb_server_spark.sources.zstd_seekable import (
         read_frame as rf,
         read_seek_table as rst,
-        write_seekable_zstd as wsz,
     )
+
+    wsz = write_seekable_zstd
 
     blob = wsz(lines)
     raw = "".join(x + "\n" for x in lines).encode()
@@ -334,10 +346,9 @@ def test_property_any_truncation_raises(lines, seed):
     manifest and never a foreign exception type."""
     import tempfile
 
-    from ocdb_server_spark.sources.zstd_seekable import (
-        read_seek_table as rst,
-        write_seekable_zstd as wsz,
-    )
+    from ocdb_server_spark.sources.zstd_seekable import read_seek_table as rst
+
+    wsz = write_seekable_zstd
 
     blob = wsz(lines)
     cut = seed % (len(blob) - 1) + 1  # 1 .. len-1
