@@ -49,8 +49,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     explicitly enabled. The library/registry default is the faithful
     corpus-only answer; the gate is the one consumer that opts into the
     fixture, so its ROWS row certifies near-dup recovery. Semantics are
-    documented in the op90 docstring; an explicit
-    SPARK_GRAFT_OP90_PLANT env setting wins in either direction."""
+    documented in the op90 docstring."""
     from ocdb_server_spark.operators.dedup import op90_gate_planted
 
     q = {name: op.fn for name, op in _ops().items()}

@@ -14,11 +14,9 @@ here so a partitioned layout is a one-file change.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession
 
-from ocdb_server_spark.session import STANCE, Stance, adopt
+from ocdb_server_spark.session import _STANCES, STANCE, Stance, adopt
 
 TABLES = (
     "region",
@@ -38,35 +36,6 @@ def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir}/{name}.parquet"
 
 
-# Hot-table cache (opt-in via warm_cache; used by bench.py). The
-# driver's testdata writes ONE row group per file, so file splits
-# cannot parallelize the scan — every query starts with a single task
-# no matter how many cores exist. Production parquet has row groups
-# sized to spark.sql.files.maxPartitionBytes and doesn't have this
-# problem; the warm cache restores that parallelism (repartition to
-# the core count) and keeps the hot working set in memory, matching
-# how BASELINE.md measured DuckDB (warm views, best of 3).
-_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-# Captured plan-time parameters (op80's eager-capture contract), WARM
-# ONLY: a warm cache already freezes the visible table state, so
-# re-running the 1-row capture job per plan build would re-read the
-# same frozen rows — caching the captured value is observationally
-# identical and saves a full Spark job (~0.1 s) per build. Cold
-# sessions still re-fetch per build, preserving the contract's re-read
-# semantics.
-_PARAM_CACHE: dict[tuple[str, str], object] = {}
-
-# Temp-view registration memo (per live SparkSession): re-registering
-# the same (view, sf_dir) binding is a no-op costing ~6 py4j round
-# trips per star-join build, so load_tables skips it. Invalidated
-# whenever the cache state changes (warm_cache/clear_cache), because
-# load_table's return — and therefore what the view must bind to —
-# changes with it.
-_VIEW_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict[str, str]]" = (
-    weakref.WeakKeyDictionary()
-)
-
 # Zone IDs equivalent to UTC for oracle parity.
 _UTC_ALIASES = ("UTC", "Etc/UTC", "GMT")
 
@@ -75,20 +44,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}")
     stance = adopt(spark)
-    cached = _CACHE.get((sf_dir, name))
+    cached = stance.warm.get((sf_dir, name))
     if cached is not None:
-        # Serve the warm frame only to ITS OWN session: a frame bound
-        # to a stopped/previous session would fail on first use, and
-        # createOrReplaceTempView on it would register into the OLD
-        # session's catalog. A process that stops its session and
-        # builds a new one without clear_cache() gets a cold read
-        # here; the old session's cache entries stay intact for their
-        # owner.
-        try:
-            if cached.sparkSession is spark:
-                return cached
-        except Exception:
-            pass  # dead session object — treat as a miss
+        return cached
     if name == "events" and stance.kind == "external":
         _events_stance(spark, stance)
     df = spark.read.parquet(table_path(sf_dir, name))
@@ -164,7 +122,15 @@ def warm_cache(
     names: tuple[str, ...] = TABLES,
 ) -> None:
     """Cache the given tables in memory, repartitioned for parallelism
-    by row count, and serve them from load_table until clear_cache().
+    by row count, and serve them to this session's load_table until
+    clear_cache().
+
+    The testdata writes ONE row group per file, so file splits cannot
+    parallelize a cold scan: every query starts with a single task
+    however many cores exist. Production parquet has row groups sized
+    to spark.sql.files.maxPartitionBytes; the warm cache restores that
+    parallelism and keeps the hot working set in memory, as BASELINE.md
+    measured DuckDB (warm views, best of 3).
 
     Sizing is one curve, ~18k rows/slice clamped to [1, 4×cores],
     measured under fresh-instance timings (repeat-mode timings hide
@@ -187,6 +153,7 @@ def warm_cache(
 
     Compute-heavy text/vector tables keep their 16-slice floor (the
     per-row work dominates scheduling there)."""
+    stance = adopt(spark)
     cores = spark.sparkContext.defaultParallelism
     for name in names:
         # Re-warming without clear_cache() must not leak: the frame
@@ -195,16 +162,11 @@ def warm_cache(
         # replaced is 'embeddings' — the derived normed-embeddings entry
         # built on that generation (itself cached). Re-warming an
         # unrelated table keeps the still-valid normed cache.
-        stale_keys = [(sf_dir, name)]
-        if name == "embeddings":
-            stale_keys.append((sf_dir, "__embeddings_normed__"))
-        for stale_key in stale_keys:
-            prev = _CACHE.pop(stale_key, None)
+        stale = [name, "__embeddings_normed__"] if name == "embeddings" else [name]
+        for key in stale:
+            prev = stance.warm.pop((sf_dir, key), None)
             if prev is not None:
-                try:
-                    prev.unpersist()
-                except Exception:
-                    pass  # stopped session — nothing to free
+                prev.unpersist()
         df = load_table(spark, sf_dir, name)
         n = df.count()
         # tiny dims (<18k) → 1 slice, events 100k → 5, orders 150k →
@@ -215,77 +177,61 @@ def warm_cache(
         df = df.repartition(int(p))
         df = df.cache()
         df.count()  # materialize now so queries measure compute, not fill
-        _CACHE[(sf_dir, name)] = df
-    # cache state changed: registered views must rebind to the warm
-    # frames on the next load_tables. Captured parameters are
-    # embeddings-derived (__query_vec_N__), so they are stale only
-    # when embeddings itself re-warmed; keeping them otherwise saves a
-    # 1-row head() job on the next plan build.
-    _VIEW_MEMO.clear()
+        stance.warm[(sf_dir, name)] = df
+    # The views of this session must rebind to the warm frames on its
+    # next load_tables; other sessions' views live in their own
+    # catalogs. Captured parameters are embeddings-derived, so they are
+    # stale only when embeddings itself re-warmed.
+    stance.views.clear()
     if "embeddings" in names:
-        _PARAM_CACHE.clear()
+        stance.params.clear()
 
 
 def clear_cache() -> None:
-    """Unpersist and forget every cached frame. Exception-safe per
-    entry: if the owning session was stopped, unpersist raises — the
-    cache MUST still empty, or the next session would be served frames
-    bound to a dead SparkContext (same guard registry.release_pool
-    carries)."""
-    for df in _CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # stopped session — nothing to free
-    _CACHE.clear()
-    _PARAM_CACHE.clear()
-    _VIEW_MEMO.clear()
-
-
-def _owns_warm(spark: SparkSession, sf_dir: str) -> bool:
-    """Does THIS session own the warm embeddings entry? Warm presence,
-    live-session identity and exception-as-miss, shared by query_vector
-    and load_embeddings_normed."""
-    warm = _CACHE.get((sf_dir, "embeddings"))
-    try:
-        return warm is not None and warm.sparkSession is spark
-    except Exception:
-        return False  # dead session object — not an owner
+    """Unpersist and forget every session's warm frames, captured
+    parameters and view bindings. Exception-safe per frame: if its
+    session was stopped, unpersist raises, and the record must still
+    empty (same guard registry.release_pool carries)."""
+    for stance in list(_STANCES.values()):
+        for df in stance.warm.values():
+            try:
+                df.unpersist()
+            except Exception:
+                pass  # stopped session — nothing to free
+        stance.warm.clear()
+        stance.params.clear()
+        stance.views.clear()
 
 
 def query_vector(
     spark: SparkSession, sf_dir: str, vec_id: int = 0
 ) -> list[float] | None:
     """Fetch a query embedding at plan time (op80's bound-parameter
-    capture: a 1-row key lookup). Served from _PARAM_CACHE when the
-    sf_dir's embeddings are warm (see _PARAM_CACHE's consistency
-    argument); otherwise a fresh head() per call."""
+    capture: a 1-row key lookup).
+
+    Over warm embeddings the value is captured once per session: the
+    warm cache already freezes the visible table state, so re-running
+    the capture job (~0.1 s) per plan build would only re-read the same
+    rows. Cold reads fetch it afresh per call, keeping the contract's
+    re-read semantics."""
     from pyspark.sql import functions as F
 
-    key = (sf_dir, f"__query_vec_{vec_id}__")
-    ent = _PARAM_CACHE.get(key)
-    if ent is not None:
-        owner_ref, cached_vec = ent  # type: ignore[misc]
-        # Parameters captured under a PREVIOUS session's warm cache
-        # must not serve a new session over possibly-regenerated data —
-        # same rule _CACHE enforces.
-        if owner_ref() is spark:
-            # a COPY: the cached list must not alias the caller's
-            # (in-place normalization would corrupt every later serve)
-            return None if cached_vec is None else list(cached_vec)
-    row = (
-        load_embeddings_normed(spark, sf_dir)
-        .filter(F.col("vec_id") == vec_id)
-        .select("embedding")
-        .head()
-    )
-    vec = None if row is None else [float(x) for x in row[0]]
-    if _owns_warm(spark, sf_dir):
-        _PARAM_CACHE[key] = (
-            weakref.ref(spark),
-            None if vec is None else list(vec),
+    stance = adopt(spark)
+    key = (sf_dir, vec_id)
+    if key in stance.params:
+        vec = stance.params[key]
+    else:
+        row = (
+            load_embeddings_normed(spark, sf_dir)
+            .filter(F.col("vec_id") == vec_id)
+            .select("embedding")
+            .head()
         )
-    return vec
+        vec = None if row is None else [float(x) for x in row[0]]
+        if (sf_dir, "embeddings") in stance.warm:
+            stance.params[key] = vec
+    # a copy: a caller normalizing in place must not corrupt later serves
+    return None if vec is None else list(vec)
 
 
 # L2 norm as one JVM-parsed expression (see functions/vector.py for the
@@ -303,38 +249,22 @@ def load_embeddings_normed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The norm is query-independent corpus state: at 100 TB it is
     computed once at ingest and stored beside the vectors, not
-    recomputed per lookup. Mirroring that here: when the sf_dir's
-    embeddings are warm (warm_cache ran), the normed projection is
-    cached and materialized once so every kNN serve pays only the dot
-    products; cold paths get the identical plan lazily with no extra
-    action or persistence."""
+    recomputed per lookup. Mirroring that here: when this session's
+    embeddings for sf_dir are warm (warm_cache ran on it), the normed
+    projection is cached and materialized once so every kNN serve pays
+    only the dot products; cold reads get the identical plan lazily
+    with no extra action or persistence."""
     from pyspark.sql import functions as F
 
+    warm = adopt(spark).warm
     key = (sf_dir, "__embeddings_normed__")
-    cached = _CACHE.get(key)
-    if cached is not None:
-        try:
-            if cached.sparkSession is spark:  # same guard as load_table
-                return cached
-        except Exception:
-            pass  # dead session object — treat as a miss
+    if key in warm:
+        return warm[key]
     en = load_table(spark, sf_dir, "embeddings").withColumn("nrm", F.expr(_NORM_SQL))
-    # Materialize-and-store only when THIS session owns the warm
-    # embeddings entry: presence alone also matches a dead/foreign
-    # session's entry, which would make an unwarmed session pay a
-    # surprise cache+count job AND overwrite another owner's normed
-    # handle (a storage leak — the displaced frame stays persisted
-    # with no handle left to unpersist it).
-    if _owns_warm(spark, sf_dir):
-        prev = _CACHE.get(key)
-        if prev is not None:
-            try:
-                prev.unpersist()  # displaced generation: free its blocks
-            except Exception:
-                pass
+    if (sf_dir, "embeddings") in warm:
         en = en.cache()
         en.count()
-        _CACHE[key] = en
+        warm[key] = en
     return en
 
 
@@ -365,15 +295,18 @@ def _normalize_events(df: DataFrame) -> DataFrame:
 def load_tables(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
 ) -> dict[str, DataFrame]:
-    """Load the requested tables and register each as a temp view
-    (memoized per session: re-registering an unchanged (view, sf_dir)
-    binding is pure py4j overhead — see _VIEW_MEMO)."""
-    memo = _VIEW_MEMO.setdefault(spark, {})
+    """Load the requested tables and register each as a temp view.
+
+    A view already bound to sf_dir in this session is not registered
+    again: that costs ~6 py4j round trips per star-join build and
+    changes nothing. warm_cache and clear_cache forget the bindings,
+    since load_table's frame changes with them."""
+    views = adopt(spark).views
     out: dict[str, DataFrame] = {}
     for name in names:
         df = load_table(spark, sf_dir, name)
-        if memo.get(name) != sf_dir:
+        if views.get(name) != sf_dir:
             df.createOrReplaceTempView(name)
-            memo[name] = sf_dir
+            views[name] = sf_dir
         out[name] = df
     return out

@@ -28,7 +28,6 @@ any sum or round(6)-stabilized, and outputs canonicalizer-safe
 from __future__ import annotations
 
 import functools
-import os
 import random
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
@@ -127,13 +126,12 @@ def op132_editdist_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both engines implement the same classical DP, so distances and the
     single IEEE divide are identical.
 
-    SCALE BOUNDARY (measured round 17, BASELINE.md 17f/17g): the
+    SCALE BOUNDARY (measured, BASELINE.md 17f/17g): the
     blocking key's cardinality is value-bounded (1629 blocks at sf0.1
     AND at 30× — DuckDB-verified), so block size grows linearly with
     the corpus and the quadratic verify explodes (candidate pairs
-    ×1102 for ×30 rows; one 30× execution DNF'd at 30 min). An earlier
-    revision of this note proposed tightening the key with a content
-    prefix hash; round 17 MEASURED that idea non-viable at this
+    ×1102 for ×30 rows; one 30× execution DNF'd at 30 min). Tightening
+    the key with a content prefix hash is MEASURED non-viable at this
     threshold — only 1 of the 2051 sf0.1 result pairs shares a 16-char
     prefix (99.95% recall loss), because at edit-ratio ≤ 0.7 matching
     pairs can differ almost anywhere, so NO content-equality block key
@@ -688,8 +686,7 @@ def op194_minhash_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROWS-oracle: signatures are xxhash64-based (no DuckDB twin — same
     rationale as op79).
 
-    NO-CHANGE NOTE (round-10 verdict item 6, measured r11): the rollup
-    path stays the direct per-source min-agg. hybrid_selfjoin_pairs
+    The rollup path is the direct per-source min-agg. hybrid_selfjoin_pairs
     does not apply — this plan has NO bucket self-join (the group key
     is `source`, not an LSH band, and no pair space ever forms); and
     the group distribution is perfectly uniform at every test scale
@@ -697,7 +694,7 @@ def op194_minhash_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     10× the driver gate scale (sf0.1, local[32], 3 interleaved reps):
     direct min/med 0.544/0.721 s vs two-phase salted 0.698/0.717 s —
     the salt's second shuffle buys nothing even before skew is absent,
-    consistent with the round-10 --mode=agg rule (decomposable aggs:
+    consistent with the skew_stress.py --mode=agg rule (decomposable aggs:
     never salt; map-side partials already collapse hot keys)."""
     d = load_table(spark, sf_dir, "documents")
     w = d.select("source", F.expr("split(lower(text), ' ')").alias("w"))
@@ -816,17 +813,16 @@ def minhash_neardup_pairs(
     tests/test_northstar.py).
 
     n_slices: triangle slice count passed through to
-    hybrid_selfjoin_pairs when hot-bucket routing is on (round-10
-    ADVICE — callers sizing for very large buckets want ~|B|/S rows
+    hybrid_selfjoin_pairs when hot-bucket routing is on (callers
+    sizing for very large buckets want ~|B|/S rows
     per reducer cell, so S should grow with the expected bucket
     size). Ignored under the default direct self-join."""
     # Every multi-term expression below is built as ONE SQL string
     # parsed JVM-side in a single F.expr/selectExpr round trip — the
-    # Column-object formulation cost ~1600 py4j round trips (~0.3 s of
-    # plan-build wall, profiled round 4) for the IDENTICAL Catalyst
-    # plan; a second flattening pass (round 7: one-string join
-    # condition, array-packed signature agg) took the build from
-    # ~0.23 s to well under the verdict's 0.2 s per-query line.
+    # Column-object formulation costs ~1600 py4j round trips (~0.3 s of
+    # plan-build wall, profiled) for the IDENTICAL Catalyst plan; the
+    # one-string join condition and the array-packed signature agg
+    # keep the build well under 0.2 s per query (from ~0.23 s).
     #
     # Materialize the token array BEFORE building shingles: referencing
     # the split() expression inside a HOF lambda re-evaluates it per
@@ -907,7 +903,7 @@ def op79_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     an empty result is the correct output; sf0.1 plants 8 duplicate
     texts (FIXTURES.md) which must all surface.
 
-    Hot-bucket scale rule (MEASURED, round 10 — skew_stress.py
+    Hot-bucket scale rule (MEASURED — skew_stress.py
     --mode=bucket, BASELINE.md): buckets under ~10k docs need no
     mitigation (the one-task pair scan is cheaper than any spreading);
     above it, route ONLY the oversized buckets through the blocked
@@ -1028,8 +1024,8 @@ def ngram_jaccard_pairs_ctes(threshold: float, same_source: bool) -> str:
     ngram_jaccard_pairs below — op89's oracle and op96/op221's
     recursive-CC oracles (components.NEARDUP_CC_CTES) all derive from
     it, so the tokenizer / max-df cap / rounding can never silently
-    desynchronize between the three (round-9 review; the same
-    single-fold rule the round-8 review applied to the Spark side).
+    desynchronize between the three (the same single-fold rule the
+    Spark side follows).
     Returns the CTE chain `toks, grams, capped, sizes, shared, pairs`
     where `pairs` has columns (doc_a, doc_b, jaccard); embed after a
     WITH / WITH RECURSIVE."""
@@ -1286,36 +1282,27 @@ def lsh_neardup_pairs(
     oracle=None,  # ROWS: LSH is approximate
 )
 def op90_embedding_neardup_lsh(
-    spark: SparkSession, sf_dir: str, plant: bool | None = None
+    spark: SparkSession, sf_dir: str, plant: bool = False
 ) -> DataFrame:
     """Embedding-cosine near-dup candidates over the embeddings table
     (banded random-hyperplane LSH → exact cosine ≥ 0.8 verify; see
-    lsh_neardup_pairs), augmented with a PLANTED micro-fixture so the
-    driver's ROWS row certifies actual near-dup RECOVERY, not just
-    clean execution (round-16 verdict item 6 — the raw corpus has no
-    pairs above 0.8, max off-diagonal cosine ≈ 0.51 measured, so the
-    op used to pass on 0 rows at gate scale).
+    lsh_neardup_pairs).
 
-    SEMANTICS ADDENDUM (part of op90's contract since r16; default
-    INVERTED round 18 per round-17 ADVICE low; kept in lockstep with
-    the SURVEY §2 row and the rows snapshot): the library/registry
-    default is now the FAITHFUL corpus-only answer — a consumer who
-    has never heard of the env var gets real workload results, never
-    fabricated negative-id rows. The planted recall fixture is opt-in
-    (SPARK_GRAFT_OP90_PLANT=1), and the one surface that opts in
-    EXPLICITLY is the driver gate (`op90_gate_planted`, wired into
-    `__spark_entry__.queries()`), so the driver's ROWS row keeps
-    certifying actual near-dup RECOVERY (round-16 verdict item 6)
-    while the production-facing default stays faithful.
+    The registered op is the faithful corpus-only answer. ``plant=True``
+    adds a PLANTED micro-fixture so a ROWS check certifies near-dup
+    RECOVERY, not just clean execution: the raw corpus has no pairs
+    above 0.8 (max off-diagonal cosine ≈ 0.51 measured), so the op
+    would pass on 0 rows at gate scale. The one caller that plants is
+    the driver gate (`op90_gate_planted`, wired into
+    `__spark_entry__.queries()`); the SURVEY §2 row and the rows
+    snapshot describe the same contract.
 
     Fixture construction: the 4 lowest-vec_id vectors re-enter under
     planted ids -(vec_id)-1 (never collides with the natural
     non-negative ids) as POWER-OF-TWO SCALED copies — ×2 for even
-    source ids, ×0.5 for odd. Recovery of all 4 pairs is guaranteed BY
-    CONSTRUCTION, not empirically (round-16 ADVICE low: the previous
-    +0.02 additive perturbation could in principle flip a hyperplane
-    sign at an untested scale factor): multiplying every component by
-    2^±1 is exact in IEEE float, so every hyperplane dot product of a
+    source ids, ×0.5 for odd. Recovery of all 4 pairs holds BY
+    CONSTRUCTION, not empirically: multiplying every component by 2^±1
+    is exact in IEEE float, so every hyperplane dot product of a
     planted copy is exactly 2^±1 × the source's dot — identical sign,
     identical bucket in every LSH table at ANY corpus size — and
     cosine is exactly 1.0 ≥ 0.8. Expected output: one pair per planted
@@ -1324,15 +1311,7 @@ def op90_embedding_neardup_lsh(
     their sources' cosine (< 0.8) and are filtered. The fixture is
     O(1) rows derived from the corpus itself (TakeOrdered-4 scan) —
     nothing changes at 100 TB; the kernel and its scale shape are
-    untouched.
-
-    ``plant=None`` (the registered default) reads the env var; the
-    driver-gate wrapper passes the decision EXPLICITLY instead of
-    mutating process-global environment around the call (r18-verdict
-    item 7 — the old set/restore dance was correct for today's eager
-    plan build but racy under any concurrent plan construction)."""
-    if plant is None:
-        plant = os.environ.get("SPARK_GRAFT_OP90_PLANT", "0") == "1"
+    untouched."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     if not plant:
         return lsh_neardup_pairs(emb)
@@ -1351,19 +1330,11 @@ def op90_embedding_neardup_lsh(
 
 def op90_gate_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-gate surface for op90 (`__spark_entry__.queries()` maps
-    the op90 key here, NOT to the registered library default): enables
-    the planted recall fixture EXPLICITLY, per round-17 ADVICE low —
-    the gate harness opts in, instead of every production consumer
-    having to opt out. An explicit SPARK_GRAFT_OP90_PLANT already in
-    the environment still wins in either direction (=0 forces the
-    faithful corpus answer even through the gate; this wrapper only
-    supplies the default the gate wants). The decision is threaded as
-    a PARAMETER (r18-verdict item 7) — no process-global env mutation,
-    so concurrent plan builds can never observe a foreign plant
-    state."""
-    env = os.environ.get("SPARK_GRAFT_OP90_PLANT")
-    plant = env == "1" if env is not None else True
-    return op90_embedding_neardup_lsh(spark, sf_dir, plant=plant)
+    the op90 key here, NOT to the registered library default): the
+    registered op with the planted recall fixture. The decision is a
+    parameter, not process-global state, so concurrent plan builds
+    never observe each other's fixture."""
+    return op90_embedding_neardup_lsh(spark, sf_dir, plant=True)
 
 
 # --------------------------------------------------------------- op94
@@ -1380,10 +1351,10 @@ def op94_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     in tests/test_pipeline_ext.py).
 
     The three observables are read out of ONE let-bound evaluation of
-    the fingerprint array (round 19 — three textual references used
-    to evaluate the whole winnow chain three times per row under the
-    interpreted HOF evaluator; with the doubling steps' own bindings
-    this op measured 0.93 s → 0.17 s at sf0.1, values identical)."""
+    the fingerprint array: three textual references would evaluate the
+    whole winnow chain three times per row under the interpreted HOF
+    evaluator (with the doubling steps' own bindings, 0.93 s → 0.17 s
+    at sf0.1, values identical)."""
     d = load_table(spark, sf_dir, "documents")
     fp = winnow_fingerprints(F.col("text"))
     s = let_once(

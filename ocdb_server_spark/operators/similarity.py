@@ -120,8 +120,8 @@ def op145_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: double sums are order-dependent in the last ulp, so
     the centroid is round(6)'d (the op120 ln-guard pattern; ~1e-13
     relative drift vs a 5e-7 rounding boundary). Deliberately NOT
-    decimal-summed: this round verified Spark casts double→decimal
-    ties HALF_UP while DuckDB rounds half-even, so per-element decimal
+    decimal-summed: Spark's double→decimal cast rounds ties HALF_UP
+    (verified) while DuckDB rounds half-even, so per-element decimal
     rounding of dyadic floats would diverge where plain doubles don't.
     Plan at scale: posexplode + hash agg on (label,pos) — 640 groups,
     map-side partials collapse each partition to ≤640 rows before the
@@ -193,8 +193,8 @@ def pq_topk(
 
     codebook=None trains inline (self-contained one-shot mode);
     passing functions.ann_index.get_or_build_pq's persisted artifact
-    makes this pure query — no training aggregation in the plan
-    (round-11 verdict item 4), identical top-k either way (pinned in
+    makes this pure query — no training aggregation in the plan —
+    with identical top-k either way (pinned in
     tests/test_ann_index.py)."""
     nrm = (
         "sqrt(aggregate(transform(embedding,"
@@ -268,12 +268,11 @@ def op180_pq_ann_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     embeddings table — see pq_topk for the index design (8×4-bit
     codes, broadcast codebook, ADC scan, exact re-rank of 100).
 
-    Round 12 (verdict item 4): queries a PERSISTED codebook —
-    get_or_build_pq trains once per (dataset, k) into a keyed parquet
-    artifact; the query plan carries no training aggregation (see
-    functions/ann_index.py). Identical top-k to the inline build
-    (pinned in tests/test_ann_index.py), so the golden ROWS snapshot
-    is unchanged."""
+    Queries a PERSISTED codebook: get_or_build_pq trains once per
+    (dataset, k) into a keyed parquet artifact, and the query plan
+    carries no training aggregation (see functions/ann_index.py).
+    Identical top-k to the inline build (pinned in
+    tests/test_ann_index.py)."""
     from ocdb_server_spark.functions.ann_index import get_or_build_pq
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -347,8 +346,8 @@ LIMIT {_BM25_TOPK}
 def bm25_scored_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, score): the BM25 scorer for the fixed _BM25_TERMS
     query over every document containing ≥1 query term — op183's
-    kernel, SHARED with op263's lexical leg (round-12 review: the
-    floor(x·1e6+0.5) quantization discipline must live in one place).
+    kernel, SHARED with op263's lexical leg (the floor(x·1e6+0.5)
+    quantization discipline must live in one place).
     Both callers reach it, so a rewrite here re-fronts both for
     re-certification (evidence.src_fp). Plan shape: see
     op183's docstring — the explode is pruned to the query-term
@@ -678,7 +677,7 @@ LIMIT {_RRF_TOPK}
 def op263_rrf_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval: BM25 lexical ranking (op183's scorer, same
     terms/quantization) ⊕ dense cosine ranking (op80's scorer, same
-    bound-parameter capture of vec_id=0 and the round-6 observable)
+    bound-parameter capture of vec_id=0 and the same sim observable)
     fused by reciprocal rank — rrf = Σ_legs 1/(60 + rank), depth 50
     per leg, top-20 out. Docs in one leg only contribute one term
     (COALESCE 0 for the missing leg); doc 0 (the query's own doc) is
@@ -688,9 +687,9 @@ def op263_rrf_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only floats crossing engines are 1/(60+r) terms added in a
     fixed written order — bit-identical IEEE on both sides. Each
     leg's ordering is deterministic: the BM25 leg ranks the exact
-    quantized score (ties→doc_id), the dense leg ranks the round-6
-    sim (ties→vec_id) whose full-column cross-engine equality op80
-    established in round 9.
+    quantized score (ties→doc_id), the dense leg ranks op80's sim
+    (ties→vec_id), whose full-column cross-engine equality op80's
+    oracle checks.
 
     100 TB plan shape: each leg cuts to depth with
     orderBy().limit(DEPTH) — TakeOrderedAndProject, per-partition
@@ -900,7 +899,7 @@ def op80_sim_cosine_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-build job — and top-k plans as TakeOrderedAndProject:
     per-partition partial top-10, driver merge, zero shuffles.
 
-    EAGER-CAPTURE CONTRACT (round-5 ADVICE): unlike the package's
+    EAGER-CAPTURE CONTRACT: unlike the package's
     lazy-plan rule (op120/op75), this op deliberately snapshots the
     query vector at BUILD time — a kNN request serves the vector the
     caller asked with, not whatever the row mutates to mid-flight, so
@@ -910,28 +909,26 @@ def op80_sim_cosine_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Float discipline: the aggregate() fold accumulates left-to-right —
     the same sequential IEEE-double order as DuckDB's unnest-ordered
-    SUM and as the literal ``+`` chain it replaces (verified
-    bit-identical on the full corpus when switching round 9) — and the
+    SUM and as a literal ``+`` chain (verified bit-identical on the
+    full corpus) — and the
     Python-side query norm is the same sequential sum, so
     round(sim, 6) keeps hash-matching the oracle.
 
-    Plan-shape history: round 4 flattened the fold into a 64-term
-    literal ``+`` chain because it re-EXECUTED faster — a finding the
-    round-8 bench correction exposed as repeat-protocol bias. Under
-    the honest fresh-instance protocol the 64-term tree costs more in
-    Catalyst analysis than it saves in execution (measured r9 at
-    sf0.1: fresh exec 156 ms chain vs 81 ms fold; per-instance repeat
-    both ≈ the 1-task job floor), so round 9 restored the fold with
-    the query vector as ONE array literal."""
+    Plan shape: the fold with the query vector as ONE array literal,
+    not a 64-term literal ``+`` chain. The chain re-executes faster,
+    but that is repeat-protocol bias: on a fresh instance the 64-term
+    tree costs more in Catalyst analysis than it saves in execution
+    (measured at sf0.1: fresh exec 156 ms chain vs 81 ms fold;
+    per-instance repeat both ≈ the 1-task job floor)."""
     import math
 
     from ocdb_server_spark.io import query_vector
 
     en = load_embeddings_normed(spark, sf_dir)
-    # io.query_vector: same 1-row capture job, but served from the warm
-    # parameter cache when the table state is frozen by warm_cache —
-    # the capture was the largest single line in plan_build_sec
-    # (~0.1 s/build, round-6 verdict item 3)
+    # io.query_vector: the 1-row capture job, served from the session's
+    # captured parameters when warm_cache froze the table state — the
+    # capture is otherwise the largest single line in plan_build_sec
+    # (~0.1 s/build)
     qvec = query_vector(spark, sf_dir, vec_id=0)
     if qvec is None:
         raise ValueError(
@@ -1055,7 +1052,7 @@ def op83_vector_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     The norm is computed ONCE into a column and the transform divides
     by that column — embedding the norm aggregate inside the lambda
     re-evaluates it per element (O(d²)/row, the HOF-lambda-invariant
-    trap; round-12 review). Same values either way — division order
+    trap). Same values either way — division order
     per element is unchanged — so the oracle hash is unaffected."""
     e = load_table(spark, sf_dir, "embeddings").withColumn(
         "nrm", _norm(F.col("embedding"))
@@ -1158,8 +1155,7 @@ def ivf_topk(
     the query path is identical either way). K is an EXPLICIT parameter:
     the classic sizing is K ≈ √n, and a production index build passes it
     from its ingest row count — index metadata it already has — rather
-    than paying a plan-time count() inside the operator (round-4 verdict
-    item on op95). The default 45 = ⌈√2048⌉ is sized to the largest test
+    than paying a plan-time count() inside the operator. The default 45 = ⌈√2048⌉ is sized to the largest test
     corpus (2k vectors at sf0.1); the planted-cluster recall gate runs
     at the same scale. The codebook — K × (cid, vector, norm) — is
     collect_list'd into a SINGLE broadcast row: index metadata, a few MB
@@ -1167,8 +1163,8 @@ def ivf_topk(
 
     Query: every vector computes its nearest centroid by folding over
     the broadcast codebook with JVM higher-order functions — one scan,
-    zero shuffle, no n×K intermediate (the round-3 formulation
-    window-ranked an n×K crossJoin, which shuffled the whole corpus ×K).
+    zero shuffle, no n×K intermediate (window-ranking an n×K crossJoin
+    would shuffle the whole corpus ×K).
     The query row ranks the same codebook for its nprobe (= ⌈K/4⌉)
     nearest lists; exact cosine runs only inside probed lists —
     ~nprobe/K of the corpus — and top-k plans as TakeOrderedAndProject.
@@ -1183,14 +1179,14 @@ def ivf_topk(
     functions.ann_index.get_or_build_ivf's persisted artifact — makes
     this PURE QUERY: the plan's only sources are the corpus scan and
     the broadcast codebook scan, the production build-once/query-many
-    split (round-11 verdict item 4). Identical top-k either way,
+    split. Identical top-k either way,
     pinned in tests/test_ann_index.py."""
     if nprobe is None:
         nprobe = max(1, -(-n_centroids // 4))  # ceil(K/4)
     if codebook is not None and train_iters:
         # A persisted codebook IS the trained artifact — silently
         # skipping the requested refinement would degrade recall with
-        # no signal (round-12 review). Train at build time
+        # no signal. Train at build time
         # (ann_index.build_ivf_index / ivf_seed_codebook+lloyd_refine)
         # and pass the result; the query side never trains.
         raise ValueError(
@@ -1201,7 +1197,7 @@ def ivf_topk(
 
     # the SAME expression ann_index.ivf_seed_codebook persists as
     # cnorm — one source of truth, so query norms can't silently
-    # diverge from the artifact's (round-13 review)
+    # diverge from the artifact's
     with_norm = e.withColumn("en", _norm("embedding"))
     if codebook is None:
         # Deterministic data-seeded codebook: first K vectors in
@@ -1219,8 +1215,8 @@ def ivf_topk(
             # tests/test_pipeline_ext.py).
             codebook = lloyd_refine(with_norm, codebook, train_iters)
     # A missing query id is a CALLER error, not 'no neighbors' — the
-    # silent empty frame was indistinguishable from an empty probe set
-    # (round-13 review; op80 raises for the identical condition). One
+    # silent empty frame would be indistinguishable from an empty probe
+    # set (op80 raises for the identical condition). One
     # pushed-filter limit(1) probe, not an eager count.
     if e.filter(F.col("vec_id") == query_vec_id).limit(1).isEmpty():
         raise ValueError(
@@ -1274,9 +1270,9 @@ def ivf_topk(
 def _ivf_k_for(sf_dir: str) -> int:
     """K ≈ ⌈√n⌉ from the parquet FOOTER row count — the 'index metadata
     the build already has' (docstring contract above): a driver-side
-    footer read, no Spark job, so the round-4 no-eager-count rule
-    holds. Round-5 ADVICE: a fixed default K=45 silently mis-sizes any
-    corpus that isn't the 2k test table; derive it instead. Clamped to
+    footer read, no Spark job, so the no-eager-count rule holds. A
+    fixed default K=45 would silently mis-size any corpus that isn't
+    the 2k test table, so K is derived instead. Clamped to
     [8, 65536]: below 8 probing is pointless, above 64k the broadcast
     codebook would outgrow its few-MB budget (re-shard the index
     instead). Falls back to 45 (⌈√2048⌉, the test-corpus sizing) if the
@@ -1293,7 +1289,7 @@ def _ivf_k_for(sf_dir: str) -> int:
         return max(8, min(65536, math.isqrt(max(n - 1, 0)) + 1))
     except Exception as exc:
         # fall back, but LOUDLY: a silent 45 re-pins the fixed default
-        # this function exists to remove (round-13 review)
+        # this function exists to remove
         warnings.warn(
             f"_ivf_k_for: footer read failed ({exc!r}); falling back to "
             "K=45 — derive K at build time for non-single-file datasets"
@@ -1316,25 +1312,19 @@ def op95_sim_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     unique key (codebook seeding orders by (xxhash64, vec_id);
     nearest-centroid argmax and probe ranking break sim-ties by cid;
     the final top-k orders by (sim DESC, vec_id)) — verified by six
-    identical fingerprints in a row. Snapshot history note (round-6
-    ADVICE): the golden ROWS hash moved 24a9648e→d0755e01 when commit
-    7716f84 switched K from the fixed 45 to footer-derived ⌈√n⌉
-    (sf0.001 embeddings n=500 → K=23 — a different probe set, so a
-    different legitimate approximate answer); the re-pin was absorbed
-    into the next snapshot regeneration (2d3c180) without a note,
-    which looked like silent drift. Rebaselines must be called out in
-    the commit that causes them — see tests/test_rows_snapshot.py.
+    identical fingerprints in a row. K moves the answer: a different K
+    probes a different set, a different legitimate approximate answer,
+    so a change of K re-pins the golden ROWS hash and is called out in
+    the commit that causes it (see tests/test_rows_snapshot.py).
 
-    Round 12 (verdict item 4): the registered plan now QUERIES A
-    PERSISTED INDEX — get_or_build_ivf trains the codebook once per
-    (dataset, K) into a keyed parquet artifact and every later call
-    reuses it, so the query-side plan's sources are the corpus scan +
-    the broadcast codebook scan, with NO training aggregation
-    (build ≫ query, the 100 TB serving shape; see
-    functions/ann_index.py). Results are identical to the old inline
-    build — same seeder, parquet round-trips the nested codebook
-    exactly (pinned in tests/test_ann_index.py), so the golden ROWS
-    snapshot is unchanged."""
+    The registered plan QUERIES A PERSISTED INDEX: get_or_build_ivf
+    trains the codebook once per (dataset, K) into a keyed parquet
+    artifact and every later call reuses it, so the query-side plan's
+    sources are the corpus scan + the broadcast codebook scan, with NO
+    training aggregation (build ≫ query, the 100 TB serving shape; see
+    functions/ann_index.py). Results are identical to the inline build
+    — same seeder, and parquet round-trips the nested codebook exactly
+    (pinned in tests/test_ann_index.py)."""
     from ocdb_server_spark.functions.ann_index import get_or_build_ivf
 
     e = load_table(spark, sf_dir, "embeddings")

@@ -146,8 +146,8 @@ def op87_udtf_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.udtf.register("split_words", SplitWords)
     # register via load_tables, NOT a direct createOrReplaceTempView:
-    # io._VIEW_MEMO tracks which sf_dir each view is bound to, and a
-    # direct rebind here would leave the memo stale (round-7 review)
+    # the session's record tracks which sf_dir each view is bound to,
+    # and a direct rebind here would leave that binding stale
     from ocdb_server_spark.io import load_tables
 
     load_tables(spark, sf_dir, ("part",))

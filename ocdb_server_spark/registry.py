@@ -80,9 +80,9 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
         def wrapped(
             spark: SparkSession, sf_dir: str, *args, **kwargs
         ) -> DataFrame:
-            # pass-through for optional op parameters (op90's `plant`
-            # flag) — the registry contract stays (spark, sf_dir);
-            # extras are the op's own business
+            # pass-through for optional op parameters (op90's `plant`):
+            # the registry contract stays (spark, sf_dir); extras are
+            # the op's own business
             release_pool()
             return fn(spark, sf_dir, *args, **kwargs)
 

@@ -23,7 +23,7 @@ import os
 import weakref
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _DAEMON = "spark.python.daemon.module"
 
@@ -52,10 +52,17 @@ class Stance:
     """What the engine knows of one session. ``kind`` is "own" (built by
     get_spark), "bare" (a stock session adopt moved to the stance) or
     "external" (configured by its caller and left as it is);
-    ``warned`` names the time-zone warnings io raised on it."""
+    ``warned`` names the time-zone warnings io raised on it. ``warm``
+    holds the frames io.warm_cache cached, by (sf_dir, table);
+    ``params`` the query vectors io.query_vector captured over warm
+    embeddings, by (sf_dir, vec_id); ``views`` the sf_dir each temp
+    view is bound to."""
 
     kind: str
     warned: set[str] = field(default_factory=set)
+    warm: dict[tuple[str, str], DataFrame] = field(default_factory=dict)
+    params: dict[tuple[str, int], list[float] | None] = field(default_factory=dict)
+    views: dict[str, str] = field(default_factory=dict)
 
 
 _STANCES: "weakref.WeakKeyDictionary[SparkSession, Stance]" = (
@@ -192,5 +199,6 @@ def get_spark(
     for key, value in conf.items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
-    _STANCES[spark] = Stance("own")
+    # getOrCreate may return a live session: keep its warm frames
+    _STANCES.setdefault(spark, Stance("own")).kind = "own"
     return spark

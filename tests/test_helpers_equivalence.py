@@ -181,27 +181,29 @@ def test_mulmod32_matches_bigint_and_never_overflows(spark, ids):
 
 def test_warm_cache_rewarm_keeps_unrelated_normed_cache(spark, sf_dir):
     """Re-warming a table OTHER than 'embeddings' must not evict the
-    derived normed-embeddings cache (round-12 ADVICE: the old loop
-    dropped it for EVERY name, forcing a surprise rebuild).
+    derived normed-embeddings cache, which would force a surprise
+    rebuild; re-warming 'embeddings' itself drops it.
 
     clear_cache() on exit: plan-shape tests elsewhere in the suite
     assert against COLD loads (test_plans.py's header) — a warm
-    'orders' left behind here flipped their parquet scans to
-    InMemoryTableScan and failed their pruning asserts."""
+    'orders' left behind here flips their parquet scans to
+    InMemoryTableScan and fails their pruning asserts."""
     from ocdb_server_spark import io as io_mod
+    from ocdb_server_spark.session import adopt
 
+    warm = adopt(spark).warm
     try:
         io_mod.warm_cache(spark, sf_dir, names=("embeddings",))
         io_mod.load_embeddings_normed(spark, sf_dir)
         normed_key = (sf_dir, "__embeddings_normed__")
-        assert normed_key in io_mod._CACHE
-        generation = io_mod._CACHE[normed_key]
+        assert normed_key in warm
+        generation = warm[normed_key]
 
         io_mod.warm_cache(spark, sf_dir, names=("orders",))
-        assert io_mod._CACHE.get(normed_key) is generation  # survived
+        assert warm.get(normed_key) is generation  # survived
 
         io_mod.warm_cache(spark, sf_dir, names=("embeddings",))
-        assert io_mod._CACHE.get(normed_key) is None  # correctly dropped
+        assert warm.get(normed_key) is None  # correctly dropped
     finally:
         io_mod.clear_cache()
 

@@ -175,25 +175,20 @@ def test_op90_pairs_are_high_similarity(spark, sf_dir):
         assert r["sim"] >= 0.8
 
 
-def test_op90_driver_path_recovers_planted_fixture(spark, sf_dir, monkeypatch):
-    """Round-16 verdict item 6: the driver corpus has no natural
-    ≥0.8-cosine pairs, so op90's ROWS row used to certify only clean
-    execution on 0 rows. The DRIVER path — `__spark_entry__.queries()`
-    maps op90 to `op90_gate_planted` since round 18 — plants 4 derived
-    near-dups (ids -(k)-1 for the 4 lowest vec_ids k) and must recover
-    EXACTLY those 4 pairs: one per planted vector, nothing else
-    (natural max off-diagonal cosine ≈ 0.51). Round-17 (r16 ADVICE
-    low): all 4 plants are power-of-two scaled copies (×2 even k, ×0.5
-    odd k), so every sim is EXACTLY 1.0 and co-bucketing is exact by
-    IEEE sign invariance — no empirical perturbation recovery left.
-    The gate must also leave the process environment untouched."""
-    import os
-
+def test_op90_driver_path_recovers_planted_fixture(spark, sf_dir):
+    """The driver corpus has no natural ≥0.8-cosine pairs, so a ROWS
+    row over the raw corpus certifies only clean execution on 0 rows.
+    The DRIVER path — `__spark_entry__.queries()` maps op90 to
+    `op90_gate_planted` — plants 4 derived near-dups (ids -(k)-1 for
+    the 4 lowest vec_ids k) and must recover EXACTLY those 4 pairs: one
+    per planted vector, nothing else (natural max off-diagonal cosine
+    ≈ 0.51). All 4 plants are power-of-two scaled copies (×2 even k,
+    ×0.5 odd k), so every sim is EXACTLY 1.0 and co-bucketing is exact
+    by IEEE sign invariance."""
     import __spark_entry__ as entry
 
     from ocdb_server_spark.io import load_table
 
-    monkeypatch.delenv("SPARK_GRAFT_OP90_PLANT", raising=False)
     lows = [
         r["vec_id"]
         for r in load_table(spark, sf_dir, "embeddings")
@@ -207,22 +202,16 @@ def test_op90_driver_path_recovers_planted_fixture(spark, sf_dir, monkeypatch):
             spark, sf_dir
         ).collect()
     }
-    assert "SPARK_GRAFT_OP90_PLANT" not in os.environ  # no env leak
     assert set(got) == {(-k - 1, k) for k in lows}
     for k in lows:
         assert got[(-k - 1, k)] == 1.0  # scaled copy: cosine exactly 1
 
 
-def test_op90_default_is_faithful_corpus_answer(spark, sf_dir, monkeypatch):
-    """Round-17 ADVICE low (default inverted round 18): a consumer who
-    has never heard of SPARK_GRAFT_OP90_PLANT — i.e. the registered
-    library op with NO env set — must get exactly the ungated kernel
+def test_op90_default_is_faithful_corpus_answer(spark, sf_dir):
+    """The registered library op must give exactly the ungated kernel
     answer over the raw embeddings table: at the test SFs that is 0
     pairs (natural max off-diagonal cosine ≈ 0.51), and in particular
-    NO planted negative ids ever appear. An explicit =0 forces the
-    same faithful answer even through the driver gate."""
-    import __spark_entry__ as entry
-
+    NO planted negative ids ever appear."""
     from ocdb_server_spark.io import load_table
     from ocdb_server_spark.operators.dedup import lsh_neardup_pairs
 
@@ -231,13 +220,8 @@ def test_op90_default_is_faithful_corpus_answer(spark, sf_dir, monkeypatch):
     ).collect()
     assert faithful == []  # the raw test corpora have no ≥0.8 pairs
 
-    monkeypatch.delenv("SPARK_GRAFT_OP90_PLANT", raising=False)
     out = OPS["op90_embedding_neardup_lsh"].fn(spark, sf_dir).collect()
-    assert out == []  # library default: no env var, no plant
-
-    monkeypatch.setenv("SPARK_GRAFT_OP90_PLANT", "0")
-    gated = entry.queries()["op90_embedding_neardup_lsh"](spark, sf_dir).collect()
-    assert gated == []  # explicit opt-out wins over the gate default
+    assert out == []  # library default: no plant
 
 
 def test_lsh_recovers_planted_neardups(spark):

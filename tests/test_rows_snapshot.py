@@ -51,9 +51,10 @@ silent drift):
     untested SF); all 4 plants are now power-of-two scaled copies
     (×2 even k, ×0.5 odd k), making co-bucketing exact by IEEE sign
     invariance at ANY scale factor. Hash moves because odd-k sims go
-    0.999801→1.0. Same commit adds the SPARK_GRAFT_OP90_PLANT gate
-    (default on → snapshot path unchanged; =0 gives the faithful
-    corpus-only answer, r16 ADVICE medium). Kernel untouched.
+    0.999801→1.0. Same commit adds an environment switch for the
+    plant (default on → snapshot path unchanged), since removed: the
+    registered op takes `plant=False` and only the driver gate plants.
+    Kernel untouched.
   - round 18 (NO hash change): the harness now executes ops through
     the driver surface — `__spark_entry__.queries()` — instead of the
     raw registry, because that is the surface the driver's ROWS rows

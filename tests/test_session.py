@@ -155,3 +155,50 @@ def test_refused_conf_call_still_reads_the_table(spark, sf_dir, monkeypatch):
         sparkContext = _Refusing()
 
     session._use_engine_daemon(_Session())  # keeps the stock daemon, no raise
+
+
+def test_each_session_sees_only_its_own_warm_state(spark, sf_dir, monkeypatch):
+    """Warm frames, captured query vectors and view bindings belong to
+    the session that made them: a second session on the same context
+    reads cold, is not served the first one's parameters, and keeps
+    its view bindings when the first re-warms; clear_cache empties
+    every session's record."""
+    from ocdb_server_spark import io
+
+    other = spark.newSession()
+    mine, theirs = session.adopt(spark), session.adopt(other)
+    try:
+        io.warm_cache(spark, sf_dir, ("nation", "embeddings"))
+        cold = io.load_table(other, sf_dir, "nation")
+        assert cold.sparkSession is other
+        assert cold is not mine.warm[(sf_dir, "nation")]
+        assert io.load_embeddings_normed(other, sf_dir).sparkSession is other
+        assert theirs.warm == {}
+
+        want = io.query_vector(spark, sf_dir)
+        assert want and mine.params[(sf_dir, 0)] == want
+        mine.params[(sf_dir, 0)] = [9.0]  # only the first session may serve it
+        assert io.query_vector(spark, sf_dir) == [9.0]
+        assert io.query_vector(other, sf_dir) == want
+        assert theirs.params == {}
+
+        io.load_tables(other, sf_dir, ("nation",))
+        registered: list[str] = []
+        real = type(cold).createOrReplaceTempView
+
+        def spy(df, name):
+            registered.append(name)
+            real(df, name)
+
+        monkeypatch.setattr(type(cold), "createOrReplaceTempView", spy)
+        io.warm_cache(spark, sf_dir, ("nation",))
+        io.load_tables(other, sf_dir, ("nation",))
+        assert registered == []
+        assert theirs.views == {"nation": sf_dir}
+
+        io.warm_cache(other, sf_dir, ("region",))
+        assert theirs.warm
+    finally:
+        io.clear_cache()
+    for stance in (mine, theirs):
+        assert stance.warm == {} and stance.params == {}
