@@ -14,9 +14,15 @@ here so a partitioned layout is a one-file change.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+import stat
+from concurrent.futures import ThreadPoolExecutor
 
-from ocdb_server_spark.session import _STANCES, STANCE, Stance, adopt
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+from pyspark.util import inheritable_thread_target
+
+from ocdb_server_spark.session import _STANCES, INFER_CONFS, STANCE, Stance, adopt
 
 TABLES = (
     "region",
@@ -47,12 +53,68 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     cached = stance.warm.get((sf_dir, name))
     if cached is not None:
         return cached
-    if name == "events" and stance.kind == "external":
-        _events_stance(spark, stance)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = _read_raw(spark, stance, sf_dir, name)
     if name == "events":
         df = _normalize_events(df)
     return df
+
+
+def raw_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """A table's schema as its file stores it, before load_table's
+    events normalization: a stream source needs this one."""
+    if name not in TABLES:
+        raise KeyError(f"unknown table {name!r}")
+    return _read_raw(spark, adopt(spark), sf_dir, name).schema
+
+
+def _read_raw(spark: SparkSession, stance: Stance, sf_dir: str, name: str) -> DataFrame:
+    """The table's file read as stored, with the schema this session
+    recorded for it when it holds one."""
+    if name == "events" and stance.kind == "external":
+        _events_stance(spark, stance)
+    path = table_path(sf_dir, name)
+    key = _schema_key(spark, stance, path, name)
+    known = stance.schemas.get(key)
+    if known is not None:
+        return spark.read.schema(known).parquet(path)
+    df = spark.read.parquet(path)
+    if key is not None:
+        stance.schemas[key] = df.schema
+    return df
+
+
+def _schema_key(
+    spark: SparkSession, stance: Stance, path: str, name: str
+) -> tuple | None:
+    """The key of a table's inferred schema in the session's record, or
+    None when the read must infer it afresh.
+
+    Inferring a schema is a 1-task Spark job (~0.12 s); a read given
+    the schema launches none. The record serves a schema only while
+    the file and the confs that shaped it are unchanged: the key holds
+    the file's path, mtime and size, and the INFER_CONFS values. Own
+    and bare sessions keep the values their stance gave them, so the
+    key costs no conf call there. An external session may change them
+    at any time: its events reads, which pay conf calls anyway
+    (_events_stance), read them; its other tables are not recorded.
+    Nor is anything but a plain local file: a directory's mtime does
+    not follow its part files, and a remote path has no os.stat."""
+    if stance.kind != "external":
+        confs = stance.infer
+    elif name == "events":
+        try:
+            confs = tuple(spark.conf.get(k, None) for k in INFER_CONFS)
+        except Exception:
+            return None  # conf quirk: infer, as before the record
+    else:
+        return None
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return (path, st.st_mtime_ns, st.st_size, confs)
 
 
 def _events_stance(spark: SparkSession, stance: Stance) -> None:
@@ -152,9 +214,27 @@ def warm_cache(
       task waves on big inputs.
 
     Compute-heavy text/vector tables keep their 16-slice floor (the
-    per-row work dominates scheduling there)."""
+    per-row work dominates scheduling there).
+
+    The row count that sizes the slices is the sum of the Parquet
+    footers of the files the read lists (driver-side reads, no Spark
+    job); a footer that cannot be read falls back to a count() job.
+
+    Tables fill concurrently on a thread pool of at most
+    defaultParallelism threads. A fill is the schema inference of a
+    table this session has not read, then the cache fill: two small
+    jobs with AQE off (the interactive profile perfbench warms on),
+    more with AQE on, where the repartition and the materializing count
+    run as separate adaptive jobs. Each is mostly scheduling latency on
+    one or a few cores, so one after another they leave most cores
+    idle. The pool's tasks inherit the caller's job group, local
+    properties and tags. Frames being replaced are unpersisted first;
+    the new ones are published only once every table filled. If one
+    fails, the frames already filled are unpersisted and the first
+    error in names order is raised."""
     stance = adopt(spark)
     cores = spark.sparkContext.defaultParallelism
+    names = tuple(dict.fromkeys(names))
     for name in names:
         # Re-warming without clear_cache() must not leak: the frame
         # being replaced stays persisted forever once its only handle
@@ -167,17 +247,28 @@ def warm_cache(
             prev = stance.warm.pop((sf_dir, key), None)
             if prev is not None:
                 prev.unpersist()
-        df = load_table(spark, sf_dir, name)
-        n = df.count()
-        # tiny dims (<18k) → 1 slice, events 100k → 5, orders 150k →
-        # 8, lineitem 600k → 33 (see the docstring)
-        p = min(4 * cores, max(1, n // 18_000))
-        if name in _COMPUTE_HEAVY:
-            p = max(p, min(cores, 16))
-        df = df.repartition(int(p))
-        df = df.cache()
-        df.count()  # materialize now so queries measure compute, not fill
-        stance.warm[(sf_dir, name)] = df
+
+    def inheriting(fn):
+        # One wrap per task, so each task sets its own copy of the
+        # caller's local properties (a running job writes its execution
+        # id there). Without pinned threads the wrapper returns the
+        # session itself, and there is nothing to inherit.
+        wrap = inheritable_thread_target(spark)
+        return fn if wrap is spark else wrap(fn)
+
+    with ThreadPoolExecutor(max(1, min(len(names), cores))) as pool:
+        futures = [
+            pool.submit(inheriting(_fill), spark, sf_dir, name, cores)
+            for name in names
+        ]
+    errors = [f.exception() for f in futures if f.exception() is not None]
+    if errors:
+        for f in futures:
+            if f.exception() is None:
+                f.result().unpersist()
+        raise errors[0]
+    for name, f in zip(names, futures):
+        stance.warm[(sf_dir, name)] = f.result()
     # The views of this session must rebind to the warm frames on its
     # next load_tables; other sessions' views live in their own
     # catalogs. Captured parameters are embeddings-derived, so they are
@@ -185,6 +276,48 @@ def warm_cache(
     stance.views.clear()
     if "embeddings" in names:
         stance.params.clear()
+
+
+def _fill(spark: SparkSession, sf_dir: str, name: str, cores: int) -> DataFrame:
+    """One table read, sliced by its row count, cached and materialized."""
+    df = load_table(spark, sf_dir, name)
+    n = _footer_rows(spark, df)
+    if n is None:
+        n = df.count()
+    # tiny dims (<18k) → 1 slice, events 100k → 5, orders 150k →
+    # 8, lineitem 600k → 33 (see warm_cache)
+    p = min(4 * cores, max(1, n // 18_000))
+    if name in _COMPUTE_HEAVY:
+        p = max(p, min(cores, 16))
+    df = df.repartition(int(p)).cache()
+    try:
+        df.count()  # materialize now so queries measure compute, not fill
+    except BaseException:
+        df.unpersist()
+        raise
+    return df
+
+
+def _footer_rows(spark: SparkSession, df: DataFrame) -> int | None:
+    """The rows of a plain file read, summed from its files' Parquet
+    footers through the Hadoop FileSystem; None when a footer cannot be
+    read."""
+    jvm = spark._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    n = 0
+    try:
+        for f in df.inputFiles():
+            source = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                jvm.org.apache.hadoop.fs.Path(f), conf
+            )
+            reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(source)
+            try:
+                n += reader.getRecordCount()
+            finally:
+                reader.close()
+    except Exception:
+        return None  # unreadable footer: count() reports the error, if any
+    return n
 
 
 def clear_cache() -> None:

@@ -16,13 +16,19 @@ Works with and without AQE: AdaptiveSparkPlan and QueryStage wrappers
 are unwrapped to the final executed physical plan. Driver-side only —
 a few py4j calls per plan node after the action completes; nothing is
 added to the executors' hot path.
+
+``JobGroup`` counts the Spark jobs a block of driver code launches
+(scripts/sweep_sim.py and scripts/plan_audit.py count build jobs with
+it).
 """
 
 from __future__ import annotations
 
+import itertools
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
+from pyspark.sql.streaming import StreamingQueryListener
 
 
 @dataclass(frozen=True)
@@ -173,3 +179,67 @@ def profile(df: DataFrame, materialize: bool = True) -> QueryProfile:
         output_rows=output_rows,
         peak_memory=peak,
     )
+
+
+class JobGroup:
+    """The Spark jobs a block launches, counted through job groups::
+
+        with JobGroup(spark, "op17:build") as g:
+            build()
+        g.jobs  # their ids, once the block has ended
+
+    The block runs under a fresh job group (the name plus a serial).
+    A streaming query sets a group of its own, its run id, on its
+    micro-batch jobs, so a listener notes the run id of every query
+    the block starts. On exit the caller's group comes back, the
+    listener bus is drained so every job started in the block is in
+    the status store, and ``statusTracker().getJobIdsForGroup`` lists
+    the jobs of the block's group and of its queries' runs. That holds
+    however many jobs the session ran before, where a counter walking
+    job ids up from 0 stops at the first id the store evicted."""
+
+    _PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    _serial = itertools.count()
+
+    def __init__(self, spark, name: str) -> None:
+        self._spark = spark
+        self._sc = spark.sparkContext
+        self.name = f"{name}#{next(JobGroup._serial)}"
+        self.jobs: list[int] = []
+
+    def __enter__(self) -> "JobGroup":
+        self._runs = _QueryRuns()
+        self._spark.streams.addListener(self._runs)
+        self._saved = {k: self._sc.getLocalProperty(k) for k in self._PROPS}
+        self._sc.setJobGroup(self.name, self.name)
+        return self
+
+    def __exit__(self, *exc) -> None:
+        for key, value in self._saved.items():
+            self._sc.setLocalProperty(key, value)
+        self._spark.streams.removeListener(self._runs)
+        self._sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = self._sc.statusTracker()
+        self.jobs = sorted(
+            {j for g in [self.name, *self._runs.ids] for j in tracker.getJobIdsForGroup(g)}
+        )
+
+
+class _QueryRuns(StreamingQueryListener):
+    """Run ids of the streaming queries started while registered
+    (onQueryStarted runs before start() returns)."""
+
+    def __init__(self) -> None:
+        self.ids: list[str] = []
+
+    def onQueryStarted(self, event) -> None:
+        self.ids.append(str(event.runId))
+
+    def onQueryProgress(self, event) -> None:
+        pass
+
+    def onQueryIdle(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        pass

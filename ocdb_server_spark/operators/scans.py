@@ -60,7 +60,7 @@ def op02_scan_projection_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame
     return li.filter(F.col("l_quantity") < 5).select("l_orderkey", "l_extendedprice")
 
 
-# Oracle (round-7 verdict item 4, op204's pattern): the fixture's
+# Oracle (op204's pattern): the fixture's
 # records hand-transcribed from the FIXTURE text — independent of the
 # Spark parser, so a parse bug (delimiter, missing-token, field order)
 # breaks the hash. Same decimal literals cast to DOUBLE on both sides
@@ -148,11 +148,10 @@ def op05_sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     computes the same per-flag counts on the original table, so a
     dropped/duplicated partition breaks the hash.
     """
-    # Per-process scratch with dead-PID reaping: the sf tag alone
-    # still left two concurrent sessions at the SAME sf able to
-    # overwrite each other's files between write and lazy re-read —
-    # the exact race scratch_dir was built for, and this op is
-    # hash-gated since r8 (round-8 review finding).
+    # Per-process scratch with dead-PID reaping: an sf-tagged dir
+    # would let two concurrent sessions at the SAME sf overwrite each
+    # other's files between write and lazy re-read — the race
+    # scratch_dir exists for, and this op's result is hash-gated.
     from ocdb_server_spark.scratch import scratch_dir
 
     out = os.path.join(scratch_dir("sink_roundtrip", sf_dir), "data")
@@ -177,7 +176,7 @@ def op05_sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checksum) must equal the same aggregate on the ORIGINAL orders
     # table — one oracle row per format; a lossy roundtrip in any of
     # the three breaks the hash. price_cents covers the DOUBLE column
-    # (round-12 review: the key checksum alone certified nothing about
+    # (the key checksum alone certifies nothing about
     # o_totalprice — the one column that actually exercises text float
     # formatting in CSV/JSON; op209's cents-quantization discipline).
     oracle="""
@@ -209,9 +208,9 @@ def op106_sink_formats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     via explicit schema on read) and columnar pruning, which is why
     parquet stays the serving layout (§7.2).
     """
-    # per-process scratch + dead-PID reaping: hash-gated since r8, so
-    # a same-sf concurrent session must not clobber the files between
-    # write and lazy re-read (round-8 review finding)
+    # per-process scratch + dead-PID reaping: the result is
+    # hash-gated, so a same-sf concurrent session must not clobber the
+    # files between write and lazy re-read
     from ocdb_server_spark.scratch import scratch_dir
 
     base = scratch_dir("fmt_roundtrip", sf_dir)
@@ -272,9 +271,9 @@ def op147_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     at cluster scale the same plan applies to a date-partitioned lake.
 
     The write is part of the operator's semantics (like op05/op106
-    sink round-trips); per-process scratch (r9: migrated off the
-    shared sf-tagged dir — one session's overwrite could delete files
-    another session's lazy read had already planned)."""
+    sink round-trips); per-process scratch, not a shared sf-tagged
+    dir, where one session's overwrite could delete files another
+    session's lazy read had already planned."""
     from ocdb_server_spark.scratch import scratch_dir
 
     out = os.path.join(scratch_dir("part_scan", sf_dir), "t")
@@ -372,8 +371,8 @@ GROUP BY o.dataset_id, p.pgroup, o.field
 
 @register("op204_records_long_format", oracle=_OP204_SQL)
 def op204_records_long_format(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's ACTUAL storage model, end to end (round-5
-    verdict item 5; SURVEY §1.3/§7.2): three heterogeneous
+    """The reference's ACTUAL storage model, end to end (SURVEY
+    §1.3/§7.2): three heterogeneous
     SeaBASS-style files — different `/fields=` sets AND different
     delimiters (comma/space/tab) — ingest through
     sources/seabass.read_seabass_long into ONE long open-schema record
@@ -415,8 +414,8 @@ def op204_records_long_format(spark: SparkSession, sf_dir: str) -> DataFrame:
 # share one certification contract: export documents as JSONL under
 # the codec, re-read, and require the per-lang aggregate to
 # hash-match the oracle computed on the ORIGINAL parquet. The shared
-# schema / aggregate / oracle below are that contract in one place
-# (round-12 deferred cosmetics: the text was triplicated per op).
+# schema / aggregate / oracle below are that contract, written once
+# for all of them.
 
 _DOCS_LANG_AGG_SQL = """
 SELECT lang,
@@ -465,9 +464,9 @@ def op207_gzip_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~256 MB) or choose a splittable codec (bzip2, or zstd+seekable
     frames). The read task count assertion lives in
     tests/test_sinks.py."""
-    # per-process scratch + dead-PID reaping (round-8 review finding:
-    # every hash-gated sink round-trip uses scratch_dir, not a shared
-    # sf-tagged dir a concurrent same-sf session could clobber)
+    # per-process scratch + dead-PID reaping: every hash-gated sink
+    # round-trip uses scratch_dir, not a shared sf-tagged dir a
+    # concurrent same-sf session could clobber
     from ocdb_server_spark.scratch import scratch_dir
 
     out = os.path.join(scratch_dir("gzip_jsonl", sf_dir), "export")
@@ -490,7 +489,7 @@ def op207_gzip_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("op256_bzip2_splittable_ingest", oracle=_DOCS_LANG_AGG_SQL)
 def op256_bzip2_splittable_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPLITTABLE compressed text interchange — op207's documented
-    gzip trade closed (round-7 verdict "missing" item 4): the same
+    gzip trade closed: the same
     JSONL export written as ONE bzip2 file. Hadoop's BZip2Codec is a
     SplittableCompressionCodec — the format is a sequence of
     independently decodable blocks with a 48-bit magic delimiter, so
@@ -510,7 +509,7 @@ def op256_bzip2_splittable_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
     # per-process dir + dead-PID reaping (scratch.scratch_dir): a
     # fixed sf-keyed dir would let a concurrent session overwrite the
     # single .bz2 file between this op's write and the driver's lazy
-    # evaluation of the returned read plan (round-8 review)
+    # evaluation of the returned read plan
     from ocdb_server_spark.scratch import scratch_dir
 
     out = os.path.join(scratch_dir("bz2_jsonl", sf_dir), "export")
@@ -564,7 +563,8 @@ def op209_orc_source_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     the re-read scan skips stripes on the pushed min/max, so the
     round-trip costs two scans of the projected columns, not the
     table."""
-    # per-process scratch + dead-PID reaping (round-8 review finding)
+    # per-process scratch + dead-PID reaping: a concurrent same-sf
+    # session must not clobber the export before the lazy re-read
     from ocdb_server_spark.scratch import scratch_dir
 
     out = os.path.join(scratch_dir("orc_orders", sf_dir), "export")
@@ -635,7 +635,8 @@ def op210_xml_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    # per-process scratch + dead-PID reaping (round-8 review finding)
+    # per-process scratch + dead-PID reaping: a concurrent same-sf
+    # session must not clobber the export before the lazy re-read
     from ocdb_server_spark.scratch import scratch_dir
 
     out = os.path.join(scratch_dir("xml_events", sf_dir), "export")
@@ -895,8 +896,8 @@ def op261_zstd_seekable_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 # 2048 rows / 2 partitions: the sweep cost of this op is ~all Python
-# worker spin-up per partition (11.2 s at 8 parts in round 3 —
-# op_costs.json); the oracle is a closed-form formula, so ANY N proves
+# worker spin-up per partition (11.2 s at 8 parts in the correctness
+# sweep, op_costs.json); the oracle is a closed-form formula, so ANY N proves
 # the connector. 2 partitions still exercises multi-partition planning.
 _SYNTH_ROWS = 2048
 _SYNTH_PARTS = 2

@@ -24,6 +24,7 @@ import weakref
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _DAEMON = "spark.python.daemon.module"
 
@@ -46,6 +47,16 @@ STANCE: dict[str, str] = {
     _DAEMON: "ocdb_server_spark.daemon",
 }
 
+# The confs that change what a Parquet schema inference returns: io
+# keys its per-session record of inferred schemas by their values.
+INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
 
 @dataclass
 class Stance:
@@ -56,13 +67,17 @@ class Stance:
     holds the frames io.warm_cache cached, by (sf_dir, table);
     ``params`` the query vectors io.query_vector captured over warm
     embeddings, by (sf_dir, vec_id); ``views`` the sf_dir each temp
-    view is bound to."""
+    view is bound to. ``infer`` holds the INFER_CONFS values an own or
+    bare session was given (None: Spark's default), and ``schemas`` the
+    raw schemas io inferred on it, by file version and those values."""
 
     kind: str
+    infer: tuple[str | None, ...] = ()
     warned: set[str] = field(default_factory=set)
     warm: dict[tuple[str, str], DataFrame] = field(default_factory=dict)
     params: dict[tuple[str, int], list[float] | None] = field(default_factory=dict)
     views: dict[str, str] = field(default_factory=dict)
+    schemas: dict[tuple, StructType] = field(default_factory=dict)
 
 
 _STANCES: "weakref.WeakKeyDictionary[SparkSession, Stance]" = (
@@ -93,6 +108,7 @@ def adopt(spark: SparkSession) -> Stance:
     except Exception:
         return stance  # never let a conf quirk break a read
     stance.kind = "bare"
+    stance.infer = tuple(STANCE.get(k) for k in INFER_CONFS)
     _use_engine_daemon(spark)
     return stance
 
@@ -199,6 +215,9 @@ def get_spark(
     for key, value in conf.items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
-    # getOrCreate may return a live session: keep its warm frames
-    _STANCES.setdefault(spark, Stance("own")).kind = "own"
+    # getOrCreate may return a live session: keep its warm frames, and
+    # take the inference confs this call applied to it
+    stance = _STANCES.setdefault(spark, Stance("own"))
+    stance.kind = "own"
+    stance.infer = tuple(conf.get(k) for k in INFER_CONFS)
     return spark

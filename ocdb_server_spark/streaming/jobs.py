@@ -32,7 +32,7 @@ from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessorHandle,
 )
 
-from ocdb_server_spark.io import table_path
+from ocdb_server_spark.io import raw_schema, table_path
 
 # Constants certified on both engines: operators/streaming_batch.py's
 # oracle SQL interpolates these same values, so an oracle never
@@ -59,10 +59,12 @@ def _stream_source(spark: SparkSession, sf_dir: str, name: str):
     s3a://, even file:) is invisible to a local filesystem probe,
     which would send every remote directory-layout table down the glob
     branch. The getFileStatus call cannot raise FileNotFoundException
-    in practice: the batch schema probe on the line above already
-    failed loudly if the table is absent."""
+    in practice: the raw schema comes from a batch read of the table
+    on the line above (io.raw_schema: an inference job, or the schema
+    this session already inferred for the same file version, given to
+    the read), and either read fails loudly if the table is absent."""
     path = table_path(sf_dir, name)
-    schema = spark.read.parquet(path).schema
+    schema = raw_schema(spark, sf_dir, name)
     sc = spark.sparkContext
     jpath = sc._jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
@@ -76,15 +78,12 @@ def _stream_source(spark: SparkSession, sf_dir: str, name: str):
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # load_table gives the session the confs the events read needs
-    # (session.adopt: nanosAsLong, without which the legacy layout
-    # crashes the schema probe, and the UTC pin), so a session whose
-    # first op is a streaming one gets them too. The returned
-    # frame is discarded: the stream source needs the RAW file schema,
-    # which load_table's normalization rewrites.
-    from ocdb_server_spark.io import load_table
-
-    load_table(spark, sf_dir, "events")
+    # The stream source reads the RAW file schema, which load_table's
+    # normalization rewrites; the ts normalization is repeated below.
+    # io.raw_schema gives the session the confs an events read needs
+    # as load_table does (session.adopt: nanosAsLong, without which
+    # the legacy layout crashes the schema probe, and the UTC pin), so
+    # a session whose first op is a streaming one gets them too.
     stream = _stream_source(spark, sf_dir, "events")
     ts = (
         F.expr("timestamp_micros(ts div 1000)")
@@ -588,13 +587,15 @@ def stream_exactly_once_manifest_sink(spark: SparkSession, sf_dir: str) -> DataF
     committed = log.entries()
     if not committed:
         raise RuntimeError("stream committed no batches")
-    # REPLAY batch 0 with the same data — must be a no-op
+    # REPLAY batch 0 with the same data — must be a no-op. Batches are
+    # read back with the schema they were written with: inferring it
+    # again is a job per read.
     batch0 = committed[0]
-    commit_batch(spark.read.parquet(batch0["path"]), batch0["batch_id"])
+    commit_batch(spark.read.schema(ev.schema).parquet(batch0["path"]), batch0["batch_id"])
     if log.entries() != committed:
         raise RuntimeError("replay must not create a new commit")
 
-    out = spark.read.parquet(*[e["path"] for e in committed])
+    out = spark.read.schema(ev.schema).parquet(*[e["path"] for e in committed])
     return out.groupBy("event_type").agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("q").cast("bigint").alias("sum_q"),
@@ -680,11 +681,17 @@ def stream_cdc_apply_changes(
     finally:
         feed.unpersist()
 
-    # --- seed generation: the base snapshot as an incremental store
+    # --- seed generation: the base snapshot as an incremental store.
+    # Every file this op writes is read back with the schema it was
+    # written with (the feed's, or the store generation's, by path):
+    # inferring it again is a job per read.
     seed_path = os.path.join(store_dir, "gen=seed")
-    seed_store(
-        cdc_base_snapshot(spark, sf_dir), key, seq, seq_types
-    ).write.mode("overwrite").parquet(seed_path)
+    seed = seed_store(cdc_base_snapshot(spark, sf_dir), key, seq, seq_types)
+    seed.write.mode("overwrite").parquet(seed_path)
+    store_schemas = {seed_path: seed.schema}
+
+    def read_store(path: str) -> DataFrame:
+        return spark.read.schema(store_schemas[path]).parquet(path)
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
         if log.has(batch_id):
@@ -697,13 +704,14 @@ def stream_cdc_apply_changes(
         batch_df.write.mode("overwrite").parquet(raw_path)
         # batch ids are monotone, so the latest commit IS the newest store
         latest = log.latest()
-        store = spark.read.parquet(latest["path"] if latest else seed_path)
+        store = read_store(latest["path"] if latest else seed_path)
         out = apply_changes_incremental(
-            store, spark.read.parquet(raw_path),
+            store, spark.read.schema(feed_schema).parquet(raw_path),
             key=key, seq=seq, payload=payload,
         )
         gen_path = os.path.join(store_dir, f"gen={batch_id}")
         out.write.mode("overwrite").parquet(gen_path)
+        store_schemas[gen_path] = out.schema
         log.commit(batch_id, path=gen_path, raw=raw_path)
 
     _await(
@@ -730,8 +738,8 @@ def stream_cdc_apply_changes(
     # untouched (op234's certification, here protecting a MUTABLE
     # store from double application).
     last = committed[-1]
-    commit_batch(spark.read.parquet(last["raw"]), last["batch_id"])
+    commit_batch(spark.read.schema(feed_schema).parquet(last["raw"]), last["batch_id"])
     if log.entries() != committed:
         raise RuntimeError("replay must not create a new commit")
 
-    return finish_store(spark.read.parquet(last["path"]), key, seq)
+    return finish_store(read_store(last["path"]), key, seq)

@@ -13,6 +13,11 @@ parquet scans are visible) and summarize the executed plan:
 - pyudf        : # Python-eval nodes (Batch/ArrowEvalPython, MapIn* and
                  FlatMapGroupsIn* stages, pandas or Arrow)
 - pushed       : does at least one scan carry PushedFilters beyond []
+- bjobs        : Spark jobs the op launches while it builds, its
+                 streams' micro-batch jobs included (metrics.JobGroup).
+                 An op that does its work eagerly (a fixpoint, a
+                 stream, a sink) shows it here, where the returned
+                 plan's columns read nearly free.
 - flags        : scale-hostile shapes — CartesianProduct, a global Sort
                  that is not a TakeOrderedAndProject, >4 shuffles,
                  keyed-sketch (an aggregate with grouping keys whose
@@ -98,8 +103,9 @@ def flags_cell(found: list[str], note: str | None) -> str:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
-    from ocdb_server_spark.session import get_spark
+    from ocdb_server_spark.metrics import JobGroup
     from ocdb_server_spark.registry import load_all
+    from ocdb_server_spark.session import get_spark
 
     # interactive profile: AQE off so the STATIC plan is visible (AQE
     # wraps everything in AdaptiveSparkPlan before first execution).
@@ -114,11 +120,13 @@ def main() -> None:
     print("re-optimizes these same shapes at runtime). Columns: parquet")
     print("scans, shuffle exchanges, broadcast exchanges, WholeStageCodegen")
     print("spans, window operators, Python-eval nodes, filter pushdown")
-    print("reached a scan, and scale flags (empty = no scale-hostile shape;")
-    print("an op's expected-shape note follows its flags).")
+    print("reached a scan, Spark jobs launched while the op builds (its")
+    print("streams' micro-batch jobs included), and scale flags (empty = no")
+    print("scale-hostile shape; an op's expected-shape note follows its")
+    print("flags).")
     print()
-    print("| op | scans | exch | bcast | wscg | win | pyudf | pushed | flags |")
-    print("|---|---|---|---|---|---|---|---|---|")
+    print("| op | scans | exch | bcast | wscg | win | pyudf | pushed | bjobs | flags |")
+    print("|---|---|---|---|---|---|---|---|---|---|")
 
     # Ops where a nominally-hostile shape is the operator's documented
     # semantics (not a planning accident).
@@ -164,10 +172,11 @@ def main() -> None:
 
     for name in ops:
         try:
-            df = ops[name].fn(spark, sf_dir)
+            with JobGroup(spark, f"audit:{name}") as build:
+                df = ops[name].fn(spark, sf_dir)
             plan = df._jdf.queryExecution().executedPlan().toString()
         except Exception as exc:  # noqa: BLE001
-            print(f"| {name} | - | - | - | - | - | - | - | BUILD ERROR: {type(exc).__name__} |")
+            print(f"| {name} | - | - | - | - | - | - | - | - | BUILD ERROR: {type(exc).__name__} |")
             continue
         scans = plan.count("Scan parquet")
         exch = len(_EXCH.findall(plan))
@@ -179,7 +188,8 @@ def main() -> None:
         found = flags(plan)
         print(
             f"| {name} | {scans} | {exch} | {bcast} | {wscg} | {win} | "
-            f"{pyudf} | {'y' if pushed else '-'} | {flags_cell(found, expected.get(name))} |"
+            f"{pyudf} | {'y' if pushed else '-'} | {len(build.jobs)} | "
+            f"{flags_cell(found, expected.get(name))} |"
         )
 
     print()

@@ -14,13 +14,24 @@ conditions as closely as we can observe them:
 - a pandas sort-by-all-columns canonicalization pass (the step whose
   cost/crashes showed up in CORRECTNESS_r01.json tracebacks).
 
-Prints per-op wall seconds (slowest first) and the totals, so slow
-outliers can be fixed before the real gate runs. Beside the totals it
-prints the sum over the Python-stage ops (the ops whose row in
-SCALE_AUDIT.md counts a Python-eval node) and the box's cores and
+Each op's time splits into four phases: build (the registered
+function, with the Spark jobs it launches eagerly), fetch
+(`toPandas()`), the DuckDB oracle and canon (both canonicalizations
+and the comparison). The Spark phases count their jobs, their
+streams' micro-batch jobs included, each under a job group of its own
+(`metrics.JobGroup`), so the counts hold however many jobs the sweep
+ran before. It prints the totals per phase, then
+the ops slowest first by Spark time (build + fetch), so an op whose
+oracle is the slow part does not pass for a slow engine op. Beside the
+totals it prints the sum over the Python-stage ops (the ops whose row
+in SCALE_AUDIT.md counts a Python-eval node) and the box's cores and
 loadavg at start and end, so a record says whether the box was loaded.
 
-Usage: python scripts/sweep_sim.py [sf_dir] [--dump-costs]
+Usage: python scripts/sweep_sim.py [sf_dir] [--dump-costs] [--json=PATH]
+
+--json=PATH writes the run as one JSON record: the header (load,
+setup, per-phase totals) and per op its phase seconds, build and fetch
+jobs and error, in the Spark-time order of the printed list.
 
 --dump-costs writes the measured per-op seconds to
 ocdb_server_spark/op_costs.json, which evidence.sweep_order uses to
@@ -37,6 +48,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 from pyspark.sql import SparkSession
+
+
+PHASES = ("build", "fetch", "oracle", "canon")
 
 
 def canon(pdf):
@@ -71,8 +85,11 @@ def _python_stage_ops() -> set[str]:
 
 
 def main() -> None:
-    argv = [a for a in sys.argv[1:] if a != "--dump-costs"]
+    argv = [a for a in sys.argv[1:] if not a.startswith("--")]
     dump_costs = "--dump-costs" in sys.argv[1:]
+    json_path = next(
+        (a.split("=", 1)[1] for a in sys.argv[1:] if a.startswith("--json=")), None
+    )
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
 
     t_start = time.perf_counter()
@@ -88,6 +105,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod
+    from ocdb_server_spark.metrics import JobGroup
 
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -116,12 +134,28 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     failures: dict[str, str] = {}
+    records: dict[str, dict] = {}
     for name, fn in queries.items():
+        rec = records[name] = dict.fromkeys(PHASES, 0.0)
+        rec.update(build_jobs=0, fetch_jobs=0)
         t0 = time.perf_counter()
+        phase = "build"
         try:
-            spdf = fn(spark, sf_dir).toPandas()
+            with JobGroup(spark, f"sweep:{name}:build") as g:
+                df = fn(spark, sf_dir)
+            t1 = time.perf_counter()
+            rec["build"], rec["build_jobs"] = t1 - t0, len(g.jobs)
+            phase = "fetch"
+            with JobGroup(spark, f"sweep:{name}:fetch") as g:
+                spdf = df.toPandas()
+            t2 = time.perf_counter()
+            rec["fetch"], rec["fetch_jobs"] = t2 - t1, len(g.jobs)
+            phase = "oracle"
             if name in oracles:
                 dpdf = con.execute(oracles[name]).arrow().to_pandas()
+                t3 = time.perf_counter()
+                rec["oracle"] = t3 - t2
+                phase = "canon"
                 sc, dc = canon(spdf), canon(dpdf)
                 if len(sc) != len(dc):
                     failures[name] = f"rows {len(sc)} vs {len(dc)}"
@@ -131,10 +165,15 @@ def main() -> None:
                     diff = (sc != dc).any(axis=1).sum()
                     failures[name] = f"{diff} differing canon rows"
             else:
+                t3 = time.perf_counter()
+                phase = "canon"
                 canon(spdf)  # rows-only ops still get canonicalized
+            rec["canon"] = time.perf_counter() - t3
         except Exception as exc:  # noqa: BLE001 - report, keep sweeping
-            failures[name] = f"{type(exc).__name__}: {exc}"
+            failures[name] = f"{phase}: {type(exc).__name__}: {exc}"
         timings[name] = time.perf_counter() - t0
+        if name in failures:
+            rec["err"] = failures[name][:300]
 
     if dump_costs:
         import json
@@ -169,15 +208,49 @@ def main() -> None:
 
     total = sum(timings.values())
     py_ops = _python_stage_ops() & set(timings)
+    phase_s = {p: sum(r[p] for r in records.values()) for p in PHASES}
+    jobs = {p: sum(r[f"{p}_jobs"] for r in records.values()) for p in ("build", "fetch")}
+    slow = sorted(records, key=lambda k: -(records[k]["build"] + records[k]["fetch"]))
+    load_end = _load(cpus)
     print(f"load start: {load_start}")
-    print(f"load end:   {_load(cpus)}")
+    print(f"load end:   {load_end}")
     print(f"setup: {t_setup:.1f}s  queries: {total:.1f}s  "
           f"grand: {t_setup + total:.1f}s  n={len(timings)}  "
           f"errors={len(failures)}")
+    print("phases: " + "  ".join(
+        f"{p} {phase_s[p]:.1f}s" + (f" ({jobs[p]} jobs)" if p in jobs else "")
+        for p in PHASES
+    ))
     print(f"python-stage ops: {sum(timings[k] for k in py_ops):.1f}s  "
           f"n={len(py_ops)}")
-    for name, sec in sorted(timings.items(), key=lambda kv: -kv[1]):
-        print(f"{sec:8.2f}s  {name}")
+    print(f"{'spark':>8} {'build':>7} {'fetch':>7} {'oracle':>7} {'canon':>7}"
+          f" {'jobs b/f':>9}  op")
+    for name in slow:
+        r = records[name]
+        print(f"{r['build'] + r['fetch']:7.2f}s {r['build']:7.2f} {r['fetch']:7.2f}"
+              f" {r['oracle']:7.2f} {r['canon']:7.2f}"
+              f" {r['build_jobs']:>4}/{r['fetch_jobs']:<4}  {name}")
+    if json_path:
+        import json
+
+        with open(json_path, "w") as f:
+            json.dump({
+                "sf_dir": sf_dir,
+                "load_start": load_start,
+                "load_end": load_end,
+                "setup_s": round(t_setup, 3),
+                "queries_s": round(total, 3),
+                "errors": len(failures),
+                "phase_s": {p: round(v, 3) for p, v in phase_s.items()},
+                "jobs": jobs,
+                "ops": [
+                    {"op": k, **{
+                        f: round(v, 4) if isinstance(v, float) else v
+                        for f, v in records[k].items()
+                    }}
+                    for k in slow
+                ],
+            }, f, indent=1)
     if failures:
         print("\nFAILURES (driver-sim canon — representational diffs are "
               "expected to be caught by test_oracle, so anything here is real):")
