@@ -202,7 +202,7 @@ def apply_changes(
 # public output contract — seeding a store, applying the batches in
 # ANY split/order, then finishing is certified equivalent to one
 # apply_changes call over the concatenated feed (op265 vs op264's
-# oracle; also pinned directly in tests/test_pipeline_r13.py).
+# oracle; also pinned directly in tests/test_lakehouse.py).
 
 #: reserved bookkeeping column names of the incremental store
 IN_BASE_COL = "__in_base"

@@ -102,7 +102,7 @@ def hybrid_selfjoin_pairs(
     at ~|B|/S rows per side instead of |B| rows in one task.
     Cross-slice cells hold each pair exactly once (orientation forced
     by emitting least/greatest); diagonal cells dedup via id order.
-    Coverage-invariance is pinned in tests/test_northstar.py (set
+    Coverage-invariance is pinned in tests/test_dedup.py (set
     equality vs the direct join, oversized + small buckets, plus a
     threshold=0 all-triangle sweep).
 

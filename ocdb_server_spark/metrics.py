@@ -65,11 +65,11 @@ def _unwrap(p):
     """Strip adaptive-execution wrappers down to the real physical node.
 
     ReusedExchange is deliberately NOT unwrapped into its original's
-    subtree: the reuse node marks data movement that happens ONCE —
-    recursing through the original a second time double-counted
+    subtree: the reuse node marks data movement that happens ONCE, and
+    recursing through the original a second time would double-count
     exchanges, shuffle bytes and scan rows in the totals of a tool
-    whose whole purpose is the plan's arithmetic (round-12 review).
-    The walk records the reuse marker itself and stops there."""
+    whose whole purpose is the plan's arithmetic. The walk records the
+    reuse marker itself and stops there."""
     name = p.nodeName()
     if name == "AdaptiveSparkPlan":
         return _unwrap(p.executedPlan())
@@ -97,50 +97,6 @@ def _walk(p, depth: int, out: list[NodeMetrics]) -> None:
         _walk(children.apply(i), depth + 1, out)
 
 
-def _root_output_rows(nodes: list[NodeMetrics]) -> int:
-    """Output rows of the plan ROOT. Metric-less single-child wrappers
-    (WholeStageCodegen, AdaptiveSparkPlan) pass through to their
-    child; a metric-less MULTI-child node sums its children ONLY when
-    it is a KNOWN concatenating combinator (Union) — the old 'first
-    node with numOutputRows in pre-order' took only the first Union
-    branch and reported roughly half the real output (round-13
-    review), but blanket child-summing is itself only correct for
-    concatenation: any other metric-less multi-child combinator falls
-    back to the first descendant that DID record the metric, as a
-    metric-less leaf root does (round-14 ADVICE — the blanket sum
-    would silently misreport a future non-concatenating node, and a
-    metric-less leaf returned 0 where the pre-order scan found a
-    descendant). `nodes` is the pre-order walk with depths, so child
-    spans are contiguous."""
-
-    def rows_at(i: int) -> int:
-        n = nodes[i]
-        if "numOutputRows" in n.metrics:
-            return n.metrics["numOutputRows"]
-        kids = []
-        j = i + 1
-        while j < len(nodes) and nodes[j].depth > n.depth:
-            if nodes[j].depth == n.depth + 1:
-                kids.append(j)
-            j += 1
-        if len(kids) == 1:
-            return rows_at(kids[0])  # pass-through wrapper
-        if len(kids) > 1 and n.name == "Union":
-            return sum(rows_at(k) for k in kids)  # concatenation
-        # unknown metric-less combinator, or a metric-less leaf root:
-        # first descendant with the metric, pre-order (the node's own
-        # output size is unknowable without combinator semantics —
-        # the nearest recorded metric beats a silently-wrong sum)
-        j = i + 1
-        while j < len(nodes) and nodes[j].depth > n.depth:
-            if "numOutputRows" in nodes[j].metrics:
-                return nodes[j].metrics["numOutputRows"]
-            j += 1
-        return 0
-
-    return rows_at(0) if nodes else 0
-
-
 def profile(df: DataFrame, materialize: bool = True) -> QueryProfile:
     """Execute `df` (collect) and return its measured metrics.
 
@@ -148,15 +104,15 @@ def profile(df: DataFrame, materialize: bool = True) -> QueryProfile:
     the DataFrame's OWN query execution; a write action builds a new
     plan and leaves this one unexecuted. Profile small/aggregated
     frames (or add a limit) — this is a diagnostic tool, not a sink.
+    ``output_rows`` is the number of rows that collect() returned, so
+    it is 0 when ``materialize`` is false.
     """
-    if materialize:
-        df.collect()
+    rows = df.collect() if materialize else []
     nodes: list[NodeMetrics] = []
     _walk(df._jdf.queryExecution().executedPlan(), 0, nodes)
 
     scan_rows = scan_bytes = 0
     shuffle_recs = shuffle_bytes = exchanges = peak = 0
-    output_rows = 0
     for n in nodes:
         if n.name.startswith("Scan"):
             scan_rows += n.metrics.get("numOutputRows", 0)
@@ -168,7 +124,6 @@ def profile(df: DataFrame, materialize: bool = True) -> QueryProfile:
         elif n.name == "InMemoryTableScan":
             scan_rows += n.metrics.get("numOutputRows", 0)
         peak = max(peak, n.metrics.get("peakMemory", 0))
-    output_rows = _root_output_rows(nodes)
     return QueryProfile(
         nodes=nodes,
         scan_rows=scan_rows,
@@ -176,7 +131,7 @@ def profile(df: DataFrame, materialize: bool = True) -> QueryProfile:
         shuffle_records_written=shuffle_recs,
         shuffle_bytes_written=shuffle_bytes,
         num_exchanges=exchanges,
-        output_rows=output_rows,
+        output_rows=len(rows),
         peak_memory=peak,
     )
 

@@ -679,7 +679,7 @@ def op194_minhash_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One explode over shingles feeds the source-level 16-min partial
     agg (shuffle = 16 longs per source); the corpus row then derives
-    PURELY from the source signatures. tests/test_pipeline_r5b.py
+    PURELY from the source signatures. tests/test_dedup.py
     proves the rollup law: corpus-from-sources ≡ corpus-from-shingles,
     and that planted duplicate sources produce identical signatures.
 
@@ -798,7 +798,7 @@ def minhash_neardup_pairs(
     explode bands → groupBy (band_idx, band_hash) → within-bucket pairs
     (a < b) → distinct. The shuffle carries (doc_id, band) rows — n·4
     rows — never the O(n²) pair space. Verified against planted
-    near-dups in tests/test_northstar.py.
+    near-dups in tests/test_dedup.py.
 
     hot_bucket_threshold: None (default) keeps the direct banding
     self-join — the MEASURED right plan when no band bucket exceeds
@@ -810,7 +810,7 @@ def minhash_neardup_pairs(
     28.4×→1.4×) — the production switch for corpora whose template
     pages / boilerplate collapse millions of docs into one band
     bucket. Output is pair-for-pair identical either way (pinned in
-    tests/test_northstar.py).
+    tests/test_dedup.py).
 
     n_slices: triangle slice count passed through to
     hybrid_selfjoin_pairs when hot-bucket routing is on (callers
@@ -925,7 +925,7 @@ def simhash_signatures(
     computing all 64 bit votes as codegen'd conditional sums (the
     same map-side-partial shape as op79's minhash agg). Semantically
     identical to the one-expression SimHash reference in
-    tests/test_pipeline_ext.py — parity-tested — but the
+    tests/test_dedup.py — parity-tested — but the
     per-token work runs inside whole-stage codegen instead of Spark's
     interpreted higher-order-function evaluator (64 interpreted
     aggregate passes per row measured 3.5 s at sf0.1; this is ~0.5 s).
@@ -976,7 +976,7 @@ def op88_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Signatures via the codegen explode+agg path (simhash_signatures);
     the pair shuffle carries (doc_id, chunk) rows. Verified against
-    planted near-dups in tests/test_pipeline_ext.py."""
+    planted near-dups in tests/test_dedup.py."""
     d = load_table(spark, sf_dir, "documents")
     sig = simhash_signatures(d)
     chunks = F.array(
@@ -1348,7 +1348,7 @@ def op94_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprints per document (rolling 5-gram hash, window
     4): the substring-level dedup sketch. Observables: fingerprint
     count + min/max (the set itself is exercised by the locality tests
-    in tests/test_pipeline_ext.py).
+    in tests/test_dedup.py).
 
     The three observables are read out of ONE let-bound evaluation of
     the fingerprint array: three textual references would evaluate the

@@ -249,7 +249,7 @@ def op267_find_datasets_geojson(spark: SparkSession, sf_dir: str) -> DataFrame:
     certifies the result's bytes, not just the filtered row set.
 
     100 TB shape: the expr+bbox predicate compiles into ONE Catalyst
-    conjunction pushed to the parquet scan (test_pipeline_r14 asserts
+    conjunction pushed to the parquet scan (tests/test_search.py asserts
     PushedFilters carries all three columns); total_count is read
     here before the page is fetched, so it is one count() over the
     pushed-predicate scan (a caller that fetches the page first gets

@@ -748,7 +748,7 @@ def op221_neardup_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines compute, so the DuckDB oracle restates the whole decision:
     recursive min-reachable-id components, the keep-longest window,
     and the drop accounting. The planted-cluster gate
-    (tests/test_pipeline_r6.py) still applies; the LSH→CC approximate
+    (tests/test_graph.py) still applies; the LSH→CC approximate
     composition keeps its own gate in tests/test_components.py.
 
     Scale: while the corpus fits the task budget, the pairs and the

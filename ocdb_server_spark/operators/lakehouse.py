@@ -578,7 +578,7 @@ def sorted_export_frame(d: DataFrame) -> DataFrame:
     (lang, doc_id)-sorted, so downstream per-lang scans skip row
     groups via parquet min/max stats (the layout op181 audits). No
     global sort anywhere: N independent per-partition sorts.
-    tests/test_pipeline_r5.py writes the export and proves the files
+    tests/test_lakehouse.py writes the export and proves the files
     really are sorted and shard-pure."""
     return (
         d.select(
@@ -600,7 +600,7 @@ def op179_sorted_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     readers without listing files. The manifest aggregate consumes
     the sorted frame, so the registered plan carries the real
     repartition+sort; the file-level sortedness proof lives in
-    tests/test_pipeline_r5.py (plan assertions can't see files)."""
+    tests/test_lakehouse.py (plan assertions can't see files)."""
     return sorted_export_frame(load_table(spark, sf_dir, "documents")).groupBy(
         "shard"
     ).agg(
@@ -1227,7 +1227,7 @@ def op255_table_log_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     and v3 must be byte-equivalent to v2 (n_live/sum_key/
     sum_price_cents identical) while its layout row proves the
     rewrite actually happened (2 data files, 0 delete files). The
-    crash-window test (tests/test_pipeline_r8.py) additionally stops
+    crash-window test (tests/test_lakehouse.py) additionally stops
     between each data write and its log commit and proves readers
     never see the uncommitted future.
 
@@ -1416,7 +1416,7 @@ def op265_stream_cdc_apply_changes(
       double-apply against the MUTABLE store (worse than op234's
       append-only case: double-applying an append is visible rows,
       double-applying a merge is silently wrong n_changes).
-    - tests/test_pipeline_r13.py pins the semantics kernel directly:
+    - tests/test_lakehouse.py pins the semantics kernel directly:
       incremental-over-shuffled-splits == one-shot apply_changes, a
       duplicated batch commits nothing, tombstones keep deleted keys'
       watermarks alive for later re-inserts.

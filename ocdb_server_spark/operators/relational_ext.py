@@ -1211,7 +1211,7 @@ def op182_bloom_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     not). The optimized+physical plans are forced eagerly inside the
     conf scope (QueryExecution caches them), so the returned frame
     keeps its bloom filter wherever it executes;
-    tests/test_pipeline_r5.py asserts might_contain + bloom_filter_agg
+    tests/test_relational_ext.py asserts might_contain + bloom_filter_agg
     in the plan and that the confs are restored."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     o = (

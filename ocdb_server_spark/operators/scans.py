@@ -969,7 +969,7 @@ def op236_pyds_filter_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     reader and become PARTITION PRUNING — `partitions()` emits only
     chunks overlapping [lo, hi), so the filtered scan schedules 4 of
     8 tasks and never generates the pruned rows (asserted by task
-    count in tests/test_pipeline_r6.py). Unsupported filters are
+    count in tests/test_scans.py). Unsupported filters are
     yielded back per the API's remainder contract, so absorbing can
     narrow but never change results — the oracle applies the SAME
     predicate to the closed-form stream and must hash-match.

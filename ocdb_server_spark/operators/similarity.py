@@ -189,7 +189,7 @@ def pq_topk(
     ingest; here encoding is inlined so the op is self-contained).
 
     ROWS-oracle (approximate by design); recall@10 vs brute force is
-    gated on a planted-cluster fixture in tests/test_pipeline_r5.py.
+    gated on a planted-cluster fixture in tests/test_similarity.py.
 
     codebook=None trains inline (self-contained one-shot mode);
     passing functions.ann_index.get_or_build_pq's persisted artifact
@@ -804,7 +804,7 @@ def op266_rrf_hybrid_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximate, so the dense leg's rank order can differ from op80's
     exact order (the golden snapshot pins determinism — codes,
     centroids and tie-breaks are all deterministic given the fixed
-    testdata). The semantics gates live in tests/test_pipeline_r13.py:
+    testdata). The semantics gates live in tests/test_similarity.py:
     the query plan carries ZERO training aggregation (the codebook
     subtree is an artifact scan, op180's test extended to the fused
     plan) and the fused top-20 keeps high overlap with op263's exact
@@ -1172,7 +1172,7 @@ def ivf_topk(
     the build or the query plan.
 
     Recall: ≥0.9 recall@10 vs brute force (op80) asserted on a
-    planted-cluster fixture in tests/test_pipeline_ext.py.
+    planted-cluster fixture in tests/test_similarity.py.
 
     codebook=None builds the index inline (self-contained one-shot
     mode). Passing a codebook frame — typically
@@ -1212,7 +1212,7 @@ def ivf_topk(
             # Optional k-means training pass (default off so the
             # registered op95's golden snapshot stays byte-stable; the
             # recall uplift is asserted separately in
-            # tests/test_pipeline_ext.py).
+            # tests/test_similarity.py).
             codebook = lloyd_refine(with_norm, codebook, train_iters)
     # A missing query id is a CALLER error, not 'no neighbors' — the
     # silent empty frame would be indistinguishable from an empty probe
@@ -1306,7 +1306,7 @@ def op95_sim_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the embeddings table — see ivf_topk for the index design
     (K=⌈√n⌉ data-seeded broadcast codebook sized from the parquet
     footer row count (_ivf_k_for), map-side list assignment,
-    nprobe-pruned exact search; recall gate in test_pipeline_ext).
+    nprobe-pruned exact search; recall gate in tests/test_similarity.py).
 
     Output is DETERMINISTIC: every tie in the plan is broken by a
     unique key (codebook seeding orders by (xxhash64, vec_id);

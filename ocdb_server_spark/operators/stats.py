@@ -613,7 +613,7 @@ def op166_hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     associative, and mergeable, so any hierarchy level re-aggregates
     from stored sketches instead of raw data (contrast op19 exact /
     op20 approx_count_distinct, which both re-scan). Approximate by
-    design → ROWS-only check; tests/test_pipeline_r4b.py asserts each
+    design → ROWS-only check; tests/test_stats.py asserts each
     estimate within 5% of the exact count."""
     e = load_table(spark, sf_dir, "events")
     per_type = e.groupBy("event_type").agg(
@@ -915,7 +915,7 @@ def op185_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the two-pass shape is the standard heavy-hitters recipe
     (sketch → verify); the sketch pass is the only Python here, one
     dict of ≤32 ints per partition.
-    tests/test_pipeline_r5.py stresses the superset guarantee on a
+    tests/test_stats.py stresses the superset guarantee on a
     500-word Zipf corpus where vocab ≫ counters."""
     d = load_table(spark, sf_dir, "documents")
     words = d.select(F.explode(F.split("text", " ")).alias("word")).filter(
@@ -1036,7 +1036,7 @@ def op201_bottomk_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame
 
     ROWS-oracle: hash-based sampling has no DuckDB twin (op79's
     rationale); determinism + merge algebra + accuracy are pinned in
-    tests/test_pipeline_r5b.py instead."""
+    tests/test_stats.py instead."""
     from pyspark.sql import Window as _W
 
     e = load_table(spark, sf_dir, "events").select(
@@ -1287,7 +1287,7 @@ def op215_cms_pointquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     certifies the point-query path where probes are literals.
 
     Estimate guarantee (est ≥ exact; est ≤ exact + εN w.h.p.) is
-    asserted in tests/test_pipeline_r6.py."""
+    asserted in tests/test_stats.py."""
     docs = load_table(spark, sf_dir, "documents")
     toks = (
         docs.select(F.explode(F.split("text", " ")).alias("word"))

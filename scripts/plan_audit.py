@@ -224,7 +224,7 @@ def main() -> None:
     print("  ONE full-outer SMJ against the store generation, then an")
     print("  atomic manifest commit (functions/cdc.py:")
     print("  apply_changes_incremental; semantics + replay pinned in")
-    print("  tests/test_pipeline_r13.py, plus in-op asserts).")
+    print("  tests/test_lakehouse.py, plus in-op asserts).")
 
 
 if __name__ == "__main__":

@@ -616,3 +616,23 @@ def test_fp_book_is_fresh():
             f"{BOOK} is stale for {stale}; run "
             "`python -m ocdb_server_spark.evidence` and commit the result"
         )
+
+
+def test_modules_are_named_by_family_not_round():
+    """Tests and operators live in modules named for the family they
+    cover, so a change to a family finds its tests in one place. A
+    module named for the round that added it (`_r<N>`, `pipeline_ext`,
+    `northstar`) scatters a family across the history of the repo."""
+    import os
+    import re
+
+    from ocdb_server_spark.evidence import ROOT
+
+    by_round = re.compile(r"_r\d+[a-z]?\.py$|pipeline_ext|northstar")
+    named_by_round = [
+        f"{d}/{name}"
+        for d in ("tests", "ocdb_server_spark/operators")
+        for name in sorted(os.listdir(os.path.join(ROOT, d)))
+        if by_round.search(name)
+    ]
+    assert not named_by_round, named_by_round

@@ -84,42 +84,11 @@ def test_reused_exchange_not_double_counted(spark):
 
 
 def test_output_rows_sums_union_branches(spark):
-    """Round-13 review: a metric-less root (Union) made output_rows
-    report only the FIRST branch's count."""
+    """output_rows counts the rows collect() returned: every Union
+    branch, not only the first."""
     from ocdb_server_spark.metrics import profile
 
     a = spark.range(10)
     b = spark.range(7)
     prof = profile(a.union(b))
     assert prof.output_rows == 17
-
-
-def test_root_output_rows_sums_only_known_concatenators():
-    """Round-14 ADVICE: child-summing is correct ONLY for concatenating
-    combinators (Union). A metric-less multi-child node of any other
-    name falls back to the first descendant that recorded the metric —
-    a silently-wrong sum is worse than a nearest-metric estimate — and
-    a metric-less leaf root reports 0 only when NO descendant exists."""
-    from ocdb_server_spark.metrics import NodeMetrics, _root_output_rows
-
-    rng = lambda rows, depth: NodeMetrics(  # noqa: E731
-        "Range", depth, {"numOutputRows": rows}
-    )
-    # Union still sums its branches
-    assert _root_output_rows(
-        [NodeMetrics("Union", 0, {}), rng(10, 1), rng(7, 1)]
-    ) == 17
-    # an unknown metric-less combinator must NOT sum: nearest metric
-    assert _root_output_rows(
-        [NodeMetrics("FutureZipJoin", 0, {}), rng(10, 1), rng(7, 1)]
-    ) == 10
-    # metric-less single-child wrappers pass through unchanged
-    assert _root_output_rows(
-        [
-            NodeMetrics("WholeStageCodegen (1)", 0, {}),
-            NodeMetrics("Project", 1, {}),
-            rng(5, 2),
-        ]
-    ) == 5
-    # a metric-less LEAF root: nothing to report
-    assert _root_output_rows([NodeMetrics("ReusedExchange", 0, {})]) == 0
