@@ -1172,7 +1172,7 @@ def ivf_topk(
     the build or the query plan.
 
     Recall: ≥0.9 recall@10 vs brute force (op80) asserted on a
-    planted-cluster fixture in tests/test_similarity.py.
+    planted-cluster fixture in tests/test_pipeline_ext.py.
 
     codebook=None builds the index inline (self-contained one-shot
     mode). Passing a codebook frame — typically
@@ -1212,7 +1212,7 @@ def ivf_topk(
             # Optional k-means training pass (default off so the
             # registered op95's golden snapshot stays byte-stable; the
             # recall uplift is asserted separately in
-            # tests/test_similarity.py).
+            # tests/test_pipeline_ext.py).
             codebook = lloyd_refine(with_norm, codebook, train_iters)
     # A missing query id is a CALLER error, not 'no neighbors' — the
     # silent empty frame would be indistinguishable from an empty probe
@@ -1306,7 +1306,7 @@ def op95_sim_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the embeddings table — see ivf_topk for the index design
     (K=⌈√n⌉ data-seeded broadcast codebook sized from the parquet
     footer row count (_ivf_k_for), map-side list assignment,
-    nprobe-pruned exact search; recall gate in tests/test_similarity.py).
+    nprobe-pruned exact search; recall gate in test_pipeline_ext).
 
     Output is DETERMINISTIC: every tie in the plan is broken by a
     unique key (codebook seeding orders by (xxhash64, vec_id);

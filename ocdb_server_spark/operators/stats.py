@@ -613,7 +613,7 @@ def op166_hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     associative, and mergeable, so any hierarchy level re-aggregates
     from stored sketches instead of raw data (contrast op19 exact /
     op20 approx_count_distinct, which both re-scan). Approximate by
-    design → ROWS-only check; tests/test_stats.py asserts each
+    design → ROWS-only check; tests/test_pipeline_r4b.py asserts each
     estimate within 5% of the exact count."""
     e = load_table(spark, sf_dir, "events")
     per_type = e.groupBy("event_type").agg(

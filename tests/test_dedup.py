@@ -1,16 +1,15 @@
 """Behavioral tests for the near-duplicate operators
 (operators/dedup.py) and the bucket routing they share
-(functions/skew.py): MinHash, SimHash, winnowing, LSH, substring spans
-and containment each recover planted duplicates, and the oversized-
-bucket hybrid self-join returns exactly the direct self-join's pairs."""
+(functions/skew.py): MinHash, substring spans and containment each
+recover planted duplicates, and the oversized-bucket hybrid self-join
+returns exactly the direct self-join's pairs."""
 
 from __future__ import annotations
 
 import pytest
 
-from pyspark.sql import Column, functions as F
+from pyspark.sql import functions as F
 
-from ocdb_server_spark.functions.text import tokens, winnow_fingerprints
 from ocdb_server_spark.operators.dedup import minhash_neardup_pairs
 from ocdb_server_spark.registry import load_all
 
@@ -187,312 +186,6 @@ def test_minhash_hybrid_routing_identical(crafted):
         ).collect()
     }
     assert sliced == base
-
-
-def simhash64(toks: Column) -> Column:
-    """64-bit SimHash (Charikar '02) of a token array, as one JVM
-    expression: per-token xxhash64, then for each bit position the
-    ±1 votes are summed and the sign becomes the signature bit.
-
-    The reference that op88's explode+agg signature path must match
-    bit for bit."""
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-
-    def _vote(i: int):
-        # factory closure: PySpark derives HOF arity from the lambda
-        # signature, so the merge lambda must take exactly (acc, h)
-        def merge(acc, h):
-            bit = F.shiftrightunsigned(h, i).bitwiseAND(F.lit(1))
-            return acc + F.when(bit == 1, 1).otherwise(-1)
-
-        return merge
-
-    out = F.lit(0).cast("long")
-    for i in range(64):
-        votes = F.aggregate(hashes, F.lit(0).cast("long"), _vote(i))
-        out = out + F.shiftleft(F.when(votes > 0, 1).otherwise(0).cast("long"), i)
-    return out
-
-
-# ------------------------------------------------------------- SimHash
-
-
-@pytest.fixture(scope="module")
-def crafted_docs(spark):
-    base = "the quick brown fox jumps over the lazy dog near the river bank today"
-    return spark.createDataFrame(
-        [
-            (1, base),
-            (2, base),                                     # exact dup
-            (3, base.replace("today", "tomorrow")),        # near dup
-            (4, "completely different words about spark catalyst shuffles and parquet"),
-        ],
-        "doc_id long, text string",
-    )
-
-
-def test_simhash_identical_and_near(crafted_docs):
-    sigs = {
-        r["doc_id"]: r["sh"]
-        for r in crafted_docs.select(
-            "doc_id", simhash64(tokens(F.col("text"))).alias("sh")
-        ).collect()
-    }
-    assert sigs[1] == sigs[2]  # identical text → identical signature
-    ham = bin(sigs[1] ^ sigs[3]).count("1")
-    ham_far = bin(sigs[1] ^ sigs[4]).count("1")
-    assert ham < ham_far  # near-dup closer than unrelated doc
-    assert ham <= 16
-
-
-def test_simhash_agg_matches_expression(crafted_docs):
-    """op88's codegen explode+agg signature path must be bit-identical
-    to the reference expression simhash64 above."""
-    from ocdb_server_spark.operators.dedup import simhash_signatures
-
-    via_agg = {
-        r["doc_id"]: r["sh"] for r in simhash_signatures(crafted_docs).collect()
-    }
-    via_expr = {
-        r["doc_id"]: r["sh"]
-        for r in crafted_docs.select(
-            "doc_id", simhash64(tokens(F.col("text"))).alias("sh")
-        ).collect()
-    }
-    assert via_agg == via_expr
-
-
-def test_op88_finds_planted_dups(spark, sf_dir):
-    """Exact-duplicate texts in the corpus must surface as hamming-0
-    pairs; all reported pairs obey the threshold and ordering."""
-    out = OPS["op88_simhash_neardup"].fn(spark, sf_dir).collect()
-    from ocdb_server_spark.io import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    dup_groups = (
-        docs.groupBy("text")
-        .agg(F.collect_list("doc_id").alias("ids"))
-        .filter(F.size("ids") > 1)
-        .collect()
-    )
-    expected_pairs = {
-        (min(a, b), max(a, b))
-        for g in dup_groups
-        for i, a in enumerate(g["ids"])
-        for b in g["ids"][i + 1 :]
-    }
-    got_pairs = {(r["doc_a"], r["doc_b"]) for r in out}
-    assert expected_pairs <= got_pairs  # every exact dup found
-    for r in out:
-        assert r["doc_a"] < r["doc_b"]
-        assert 0 <= r["hamming"] <= 3
-
-
-# ------------------------------------------------------- winnowing fp
-
-
-def test_winnow_locality(spark):
-    base = "spark catalyst optimizes declarative query plans into tungsten codegen stages"
-    df = spark.createDataFrame(
-        [(1, base), (2, base), (3, base.replace("tungsten", "titanium"))],
-        "id long, text string",
-    )
-    fps = {
-        r["id"]: set(r["fp"])
-        for r in df.select("id", winnow_fingerprints(F.col("text")).alias("fp")).collect()
-    }
-    assert fps[1] == fps[2]  # deterministic: same text → same set
-    overlap = len(fps[1] & fps[3]) / len(fps[1] | fps[3])
-    assert overlap > 0.5     # one-word edit keeps most fingerprints
-    assert fps[1] != fps[3]  # but the edit is visible
-
-
-def test_winnow_shared_substring_guarantee(spark):
-    """Winnowing guarantee: a shared substring of length ≥ k+w-1 = 8
-    yields at least one shared fingerprint."""
-    a = "xxxxxx shared-run-of-text yyyyyy"
-    b = "qqqqqq shared-run-of-text rrrrrr"
-    df = spark.createDataFrame([(1, a), (2, b)], "id long, text string")
-    fps = {
-        r["id"]: set(r["fp"])
-        for r in df.select("id", winnow_fingerprints(F.col("text")).alias("fp")).collect()
-    }
-    assert fps[1] & fps[2]
-
-
-def test_op94_evaluates_winnow_chain_once_per_row(spark, sf_dir):
-    """op94 reads n_fingerprints, fp_min and fp_max out of ONE
-    let-bound evaluation of the winnow_fingerprints array: the optimized
-    and executed plans carry the gram-hash chain once, and the three
-    struct fields read the lambda variable instead of re-evaluating the
-    chain. An optimizer that inlined the binding (or an op that
-    referenced the array three times) would show three hash chains."""
-    qe = OPS["op94_doc_fingerprint"].fn(spark, sf_dir)._jdf.queryExecution()
-    optimized = qe.optimizedPlan().toString()
-    executed = qe.executedPlan().toString()
-    assert optimized.count("xxhash64(") == 1, optimized
-    assert executed.count("xxhash64(") == 1, executed
-    for field in ("size(lambda ", "array_min(lambda ", "array_max(lambda "):
-        assert field in optimized, f"struct field not read from the binding: {field}"
-
-
-# ------------------------------------------------------------ LSH / IVF
-
-
-def test_op90_pairs_are_high_similarity(spark, sf_dir):
-    # gate surface: the planted pairs must all clear the 0.8 bar
-    from ocdb_server_spark.operators.dedup import op90_gate_planted
-
-    out = op90_gate_planted(spark, sf_dir).collect()
-    assert out  # the gate path is never empty — it recovers the plant
-    for r in out:
-        assert r["id_a"] < r["id_b"]
-        assert r["sim"] >= 0.8
-
-
-def test_op90_driver_path_recovers_planted_fixture(spark, sf_dir):
-    """The driver corpus has no natural ≥0.8-cosine pairs, so a ROWS
-    row over the raw corpus certifies only clean execution on 0 rows.
-    The DRIVER path — `__spark_entry__.queries()` maps op90 to
-    `op90_gate_planted` — plants 4 derived near-dups (ids -(k)-1 for
-    the 4 lowest vec_ids k) and must recover EXACTLY those 4 pairs: one
-    per planted vector, nothing else (natural max off-diagonal cosine
-    ≈ 0.51). All 4 plants are power-of-two scaled copies (×2 even k,
-    ×0.5 odd k), so every sim is EXACTLY 1.0 and co-bucketing is exact
-    by IEEE sign invariance."""
-    import __spark_entry__ as entry
-
-    from ocdb_server_spark.io import load_table
-
-    lows = [
-        r["vec_id"]
-        for r in load_table(spark, sf_dir, "embeddings")
-        .orderBy("vec_id")
-        .limit(4)
-        .collect()
-    ]
-    got = {
-        (r["id_a"], r["id_b"]): r["sim"]
-        for r in entry.queries()["op90_embedding_neardup_lsh"](
-            spark, sf_dir
-        ).collect()
-    }
-    assert set(got) == {(-k - 1, k) for k in lows}
-    for k in lows:
-        assert got[(-k - 1, k)] == 1.0  # scaled copy: cosine exactly 1
-
-
-def test_op90_default_is_faithful_corpus_answer(spark, sf_dir):
-    """The registered library op must give exactly the ungated kernel
-    answer over the raw embeddings table: at the test SFs that is 0
-    pairs (natural max off-diagonal cosine ≈ 0.51), and in particular
-    NO planted negative ids ever appear."""
-    from ocdb_server_spark.io import load_table
-    from ocdb_server_spark.operators.dedup import lsh_neardup_pairs
-
-    faithful = lsh_neardup_pairs(
-        load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    ).collect()
-    assert faithful == []  # the raw test corpora have no ≥0.8 pairs
-
-    out = OPS["op90_embedding_neardup_lsh"].fn(spark, sf_dir).collect()
-    assert out == []  # library default: no plant
-
-
-def test_lsh_recovers_planted_neardups(spark):
-    """Banded LSH must recover planted near-identical vectors (tiny
-    perturbation → cosine ≈ 1) and exclude random pairs."""
-    import numpy as np
-
-    from ocdb_server_spark.operators.dedup import lsh_neardup_pairs
-
-    rng = np.random.default_rng(11)
-    base = rng.standard_normal((20, 64))
-    rows = [(i, base[i].tolist()) for i in range(20)]
-    # plant: 100+i is a tiny perturbation of i, for i in 0..4
-    for i in range(5):
-        rows.append((100 + i, (base[i] + 0.01 * rng.standard_normal(64)).tolist()))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {
-        (r["id_a"], r["id_b"]): r["sim"]
-        for r in lsh_neardup_pairs(df, threshold=0.95).collect()
-    }
-    for i in range(5):
-        assert (i, 100 + i) in got, f"planted near-dup {i} missed"
-        assert got[(i, 100 + i)] > 0.99
-    # random base vectors in 64-d are near-orthogonal — none qualify
-    assert all(a >= 100 or b >= 100 for (a, b) in got)
-
-
-def test_lsh_scaled_copies_recall_is_total(spark):
-    """The by-construction guarantee, pinned at the KERNEL level
-    (op90's driver fixture relies on it): a power-of-two scaled copy
-    (×0.5 / ×2) of ANY vector co-buckets with its source in EVERY LSH
-    table — scaling by 2^±1 is exact in IEEE float, so every
-    hyperplane dot is exactly 2^±1 × the source's dot, same sign,
-    same bucket. Therefore recall over scaled plants must be 100%,
-    for arbitrary vector sets — 3 independent random sets planted in
-    one frame, every (source, ×0.5, ×2) triple's 3 pairs recovered
-    with sim 1.0. A kernel regression that broke sign invariance
-    (different hashing, reordered fold, lossy cast) fails here."""
-    import numpy as np
-
-    from ocdb_server_spark.operators.dedup import lsh_neardup_pairs
-
-    rows = []
-    expected = set()
-    for s, seed in enumerate((3, 17, 99)):
-        rng = np.random.default_rng(seed)
-        base = rng.standard_normal((10, 64)).astype(np.float32)
-        off = 1000 * s
-        for i in range(10):
-            src, half, dbl = off + i, off + 100 + i, off + 200 + i
-            rows.append((src, base[i].tolist()))
-            rows.append((half, (base[i] * np.float32(0.5)).tolist()))
-            rows.append((dbl, (base[i] * np.float32(2.0)).tolist()))
-            expected |= {(src, half), (src, dbl), (half, dbl)}
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = {
-        (r["id_a"], r["id_b"]): r["sim"]
-        for r in lsh_neardup_pairs(df, threshold=0.8).collect()
-    }
-    missed = expected - set(got)
-    assert not missed, f"scaled-copy pairs missed (sign invariance broken): {missed}"
-    for pair in expected:
-        assert got[pair] == 1.0
-
-
-def _prefix_groups(df):
-    from ocdb_server_spark.operators.dedup import op154_prefix_dedup  # noqa: F401
-    # run op154's logic on a crafted frame via the same expressions
-    return (
-        df.filter(F.length("text") >= 64)
-        .select("doc_id", F.md5(F.expr("substr(lower(text), 1, 64)")).alias("h"))
-        .groupBy("h")
-        .agg(F.count("*").alias("n"), F.min("doc_id").alias("keeper"))
-        .filter(F.col("n") > 1)
-    )
-
-
-def test_prefix_dedup_catches_planted_and_skips_short(spark):
-    """Same 64-char prefix + different tails → one group with the min
-    doc_id as keeper; docs shorter than 64 chars never participate
-    (a 3-char doc equal to another 3-char doc is NOT a prefix dup)."""
-    prefix = "x" * 64
-    df = spark.createDataFrame(
-        [
-            (1, prefix + " tail one"),
-            (2, prefix + " a completely different continuation"),
-            (7, prefix.upper() + " case-insensitive too"),  # lower() normalizes
-            (3, "abc"),
-            (4, "abc"),
-        ],
-        "doc_id long, text string",
-    )
-    rows = _prefix_groups(df).collect()
-    assert len(rows) == 1
-    assert rows[0]["n"] == 3
-    assert rows[0]["keeper"] == 1
 
 
 def test_substring_spans_cover_planted_duplicates(spark):

@@ -1,7 +1,7 @@
 """Behavioral tests for the lakehouse operators
 (operators/lakehouse.py) and the CDC merge kernel (functions/cdc.py):
-layout (z-order, Hilbert, compaction, sorted export, skipping),
-snapshot diff and merge-on-read deletes, the op255 table log's crash
+layout (Hilbert, compaction, sorted export, skipping), schema-
+evolving unions and merge-on-read deletes, the op255 table log's crash
 window and snapshot isolation, and CDC apply-changes semantics — batch
 (op264), incremental and streaming (op265)."""
 
@@ -35,116 +35,6 @@ from ocdb_server_spark.operators.lakehouse import (
 from ocdb_server_spark.registry import load_all
 
 OPS = load_all()
-
-
-def test_bucketed_cojoin_matches_plain_join(spark, sf_dir):
-    """The bucketed-table join must return exactly what the plain
-    (shuffle/broadcast) join over the raw tables returns."""
-    from ocdb_server_spark.io import load_table
-
-    got = {
-        (r["o_orderstatus"], r["n_items"], r["sum_qty"])
-        for r in OPS["op159_bucketed_cojoin"].fn(spark, sf_dir).collect()
-    }
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 40)
-    o = load_table(spark, sf_dir, "orders")
-    plain = {
-        (r["o_orderstatus"], r["n_items"], r["sum_qty"])
-        for r in li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count("*").alias("n_items"),
-            F.expr("cast(sum(cast(l_quantity as decimal(18,2))) as double)").alias(
-                "sum_qty"
-            ),
-        )
-        .collect()
-    }
-    assert got == plain
-
-
-# ---------------------------------------------------------------- op161
-
-
-def test_zorder_blocks_partition_the_plane(spark, sf_dir):
-    """Each z-block's bbox must be a small tile of the 256×256 plane
-    (Morton property: a 1024-value z-range spans a 32×32 tile), blocks
-    are disjoint in z, and row counts sum to the full table."""
-    out = OPS["op161_zorder_layout"].fn(spark, sf_dir).collect()
-    li_rows = spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    assert sum(r["n_rows"] for r in out) == li_rows
-    for r in out:
-        # a 10-bit z block = 5 bits x + 5 bits y -> 32×32 tile max
-        assert r["max_x"] - r["min_x"] + 1 <= 32
-        assert r["max_y"] - r["min_y"] + 1 <= 32
-        assert r["bbox_area"] <= 32 * 32
-    assert len({r["z_block"] for r in out}) == len(out)
-
-
-def test_morton_bit_interleave_exact(spark):
-    """Spot-check the Morton code against a Python reference."""
-    from ocdb_server_spark.operators.lakehouse import _morton
-
-    def py_morton(x, y):
-        z = 0
-        for i in range(8):
-            z |= ((x >> i) & 1) << (2 * i)
-            z |= ((y >> i) & 1) << (2 * i + 1)
-        return z
-
-    df = spark.createDataFrame(
-        [(0, 0), (255, 255), (255, 0), (0, 255), (170, 85), (1, 2)], "x long, y long"
-    ).withColumn("z", F.expr(_morton(True, "x", "y")))
-    for r in df.collect():
-        assert r["z"] == py_morton(r["x"], r["y"]), (r["x"], r["y"])
-
-
-# ---------------------------------------------------------------- op168
-
-
-def test_snapshot_diff_planted_all_statuses(spark):
-    import tempfile, os
-
-    rows = [
-        # user 1: value changes after T1 -> changed
-        (1, "2024-01-10 00:00:00", 1, "view", 1.0, "{}"),
-        (2, "2024-01-20 00:00:00", 1, "view", 2.0, "{}"),
-        # user 2: no events after T1, latest state identical -> unchanged
-        (3, "2024-01-11 00:00:00", 2, "click", 5.0, "{}"),
-        # user 3: first event after T1 -> added
-        (4, "2024-01-21 00:00:00", 3, "purchase", 7.0, "{}"),
-        # user 4: same value re-emitted after T1 -> unchanged
-        (5, "2024-01-12 00:00:00", 4, "view", 9.0, "{}"),
-        (6, "2024-01-22 00:00:00", 4, "view", 9.0, "{}"),
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts string, user_id long, event_type string, value double, props string"
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    with tempfile.TemporaryDirectory() as tmp:
-        df.write.parquet(os.path.join(tmp, "events.parquet"))
-        out = {r["user_id"]: r["status"] for r in OPS["op168_snapshot_diff"].fn(spark, tmp).collect()}
-    assert out == {1: "changed", 2: "unchanged", 3: "added", 4: "unchanged"}
-
-
-# ---------------------------------------------------------------- op172
-
-
-def test_dpp_join_reads_only_conversion_partitions(spark, sf_dir):
-    """Result must only contain the two conversion event types, and
-    row counts must match a direct filtered scan."""
-    from ocdb_server_spark.io import load_table
-
-    out = {r["event_type"]: r["n_events"] for r in OPS["op172_dpp_join"].fn(spark, sf_dir).collect()}
-    assert set(out) == {"signup", "purchase"}
-    e = load_table(spark, sf_dir, "events")
-    direct = {
-        r["event_type"]: r["n"]
-        for r in e.filter(F.col("event_type").isin("signup", "purchase"))
-        .groupBy("event_type")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert out == direct
 
 
 def test_compaction_bins_respect_target(spark, sf_dir):

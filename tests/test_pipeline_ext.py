@@ -250,7 +250,7 @@ def test_lsh_recovers_planted_neardups(spark):
 
 
 def test_lsh_scaled_copies_recall_is_total(spark):
-    """The r17 by-construction guarantee, pinned at the KERNEL level
+    """The by-construction guarantee, pinned at the KERNEL level
     (op90's driver fixture relies on it): a power-of-two scaled copy
     (×0.5 / ×2) of ANY vector co-buckets with its source in EVERY LSH
     table — scaling by 2^±1 is exact in IEEE float, so every

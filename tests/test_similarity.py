@@ -1,6 +1,6 @@
 """Behavioral tests for the vector and retrieval operators
 (operators/similarity.py): exact k-NN and pairwise thresholds against
-numpy brute force, IVF and PQ recall on planted clusters, the Gram
+numpy brute force, PQ recall on planted clusters, the Gram
 matrix and k-means against numpy, BM25 pruning, and reciprocal-rank
 fusion (op263, and op266 served from the persisted index)."""
 
@@ -73,93 +73,6 @@ def test_op81_pairs_match_brute_force(spark, sf_dir):
         for r in OPS["op81_sim_pairwise_threshold"].fn(spark, sf_dir).collect()
     }
     assert got == expected
-
-
-def test_op95_ivf_vs_exact_top10(spark, sf_dir):
-    """IVF (K=√n, nprobe=⌈K/4⌉) must return 10 valid neighbors sorted
-    by similarity; its top hit can't beat the exact scan's top hit, and
-    recall@10 vs op80's exact answer should be well above the
-    ~nprobe/K random-probe floor — the testdata embeddings are UNIFORM
-    random (no cluster structure), so high recall is not expected here;
-    the ≥0.9 design-point gate runs on the planted-cluster fixture
-    below."""
-    approx = OPS["op95_sim_ivf_knn"].fn(spark, sf_dir).collect()
-    exact = OPS["op80_sim_cosine_knn"].fn(spark, sf_dir).collect()
-    assert len(approx) == 10
-    sims = [r["sim"] for r in approx]
-    assert sims == sorted(sims, reverse=True)
-    assert sims[0] <= exact[0]["sim"] + 1e-9
-    recall = len({r["vec_id"] for r in approx} & {r["vec_id"] for r in exact}) / 10
-    assert recall >= 0.3
-
-
-def test_ivf_recall_on_planted_clusters(spark):
-    """The IVF design-point gate: on data WITH cluster structure (the
-    regime IVF exists for), recall@10 vs exact brute force must be
-    ≥ 0.9 with the default K=√n codebook and nprobe=⌈K/4⌉.
-
-    Fixture: 20 well-separated clusters × 100 points in 16-dim (unit
-    direction per cluster + small noise), deterministic seed. The
-    query is cluster 0's point #0; its true top-10 are intra-cluster,
-    so recall measures whether √n data-seeded centroids + probe
-    pruning keep the right list(s)."""
-    import numpy as np
-
-    from ocdb_server_spark.operators.similarity import ivf_topk
-
-    rng = np.random.default_rng(7)
-    n_clusters, per, dim = 20, 100, 16
-    centers = rng.normal(size=(n_clusters, dim))
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    pts = np.repeat(centers, per, axis=0) + rng.normal(
-        scale=0.05, size=(n_clusters * per, dim)
-    )
-    rows = [(i, [float(x) for x in pts[i]]) for i in range(len(pts))]
-    e = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-    # exact top-10 by cosine, computed in numpy (independent oracle)
-    v = pts.astype(np.float32).astype(np.float64)  # match float32 storage
-    q = v[0]
-    sims = (v @ q) / (np.linalg.norm(v, axis=1) * np.linalg.norm(q))
-    sims[0] = -np.inf
-    exact = set(np.argsort(-sims)[:10].tolist())
-
-    approx = {r["vec_id"] for r in ivf_topk(e, query_vec_id=0, k=10).collect()}
-    recall = len(exact & approx) / 10
-    assert recall >= 0.9, f"planted-cluster recall@10 = {recall}"
-
-
-def test_ivf_lloyd_training_does_not_hurt_recall(spark):
-    """One Lloyd iteration on the data-seeded codebook (the production
-    training pass, pure DataFrame ops) must keep the planted-cluster
-    recall gate — and typically sharpens the lists: trained centroids
-    sit at cluster means instead of on sampled points."""
-    import numpy as np
-
-    from ocdb_server_spark.operators.similarity import ivf_topk
-
-    rng = np.random.default_rng(7)
-    n_clusters, per, dim = 20, 100, 16
-    centers = rng.normal(size=(n_clusters, dim))
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    pts = np.repeat(centers, per, axis=0) + rng.normal(
-        scale=0.05, size=(n_clusters * per, dim)
-    )
-    rows = [(i, [float(x) for x in pts[i]]) for i in range(len(pts))]
-    e = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-    v = pts.astype(np.float32).astype(np.float64)
-    q = v[0]
-    sims = (v @ q) / (np.linalg.norm(v, axis=1) * np.linalg.norm(q))
-    sims[0] = -np.inf
-    exact = set(np.argsort(-sims)[:10].tolist())
-
-    trained = {
-        r["vec_id"]
-        for r in ivf_topk(e, query_vec_id=0, k=10, train_iters=1).collect()
-    }
-    recall = len(exact & trained) / 10
-    assert recall >= 0.9, f"trained-codebook recall@10 = {recall}"
 
 
 def test_pq_recall_on_planted_clusters(spark):

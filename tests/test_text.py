@@ -1,11 +1,9 @@
 """Behavioral tests for the text operators (operators/text.py):
-chunking and packing boundaries, language-model scores with closed
-forms, BPE training and application against a pure-Python reference,
-and the corpus-build stage invariants."""
+vocabulary coverage and n-gram backoff on planted text, BPE training
+and application against a pure-Python reference, the dataset card and
+temperature mix, and the corpus-build stage invariants."""
 
 from __future__ import annotations
-
-import math
 
 import pytest
 
@@ -15,174 +13,6 @@ from ocdb_server_spark.operators import text
 from ocdb_server_spark.registry import load_all
 
 OPS = load_all()
-
-
-# ------------------------------------------------- per-row text ops
-
-
-def test_op91_pred_matches_marker_votes(spark, sf_dir):
-    """Spot-check the argmax/tie-break contract on a few docs."""
-    out = OPS["op91_lang_id"].fn(spark, sf_dir)
-    assert out.filter(~F.col("pred_lang").isin("de", "en", "es", "fr", "zh", "und")).count() == 0
-
-
-def test_op92_quality_bounded(spark, sf_dir):
-    out = OPS["op92_quality_score"].fn(spark, sf_dir)
-    bad = out.filter((F.col("quality") < 0) | (F.col("quality") > 1)).count()
-    assert bad == 0
-
-
-def test_op93_bpe_at_least_ws(spark, sf_dir):
-    """The BPE-ish lexer can only split further than whitespace —
-    never merge — so its token count dominates."""
-    out = OPS["op93_token_count"].fn(spark, sf_dir)
-    assert out.filter(F.col("n_bpe_tokens") < F.col("n_ws_tokens")).count() == 0
-
-
-def test_chunk_overlap_boundary_math(spark, sf_dir):
-    """Chunk invariants on the real table: chunk 0 starts at 0; every
-    later chunk starts exactly stride=112 after the previous; len is
-    in (0, 128]; the last chunk covers the final token (start + len ==
-    n_tokens for the max chunk)."""
-    out = OPS["op155_chunk_overlap"].fn(spark, sf_dir)
-    bad_len = out.filter((F.col("chunk_len") <= 0) | (F.col("chunk_len") > 128))
-    assert bad_len.count() == 0
-    bad_start = out.filter(F.col("chunk_start") != F.col("chunk_idx") * 112)
-    assert bad_start.count() == 0
-    # per doc: max chunk must end exactly at n_tokens (full coverage)
-    d = OPS["op155_chunk_overlap"].fn(spark, sf_dir)
-    last = (
-        d.groupBy("doc_id").agg(
-            F.max(F.struct("chunk_idx", "chunk_start", "chunk_len")).alias("m")
-        )
-    )
-    # recompute n_tokens independently
-    from ocdb_server_spark.io import load_table
-
-    nt = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.expr("length(text) - length(replace(text, ' ', '')) + 1").alias("n_tokens"),
-    )
-    j = last.join(nt, "doc_id").filter(
-        F.col("m.chunk_start") + F.col("m.chunk_len") != F.col("n_tokens")
-    )
-    assert j.count() == 0
-
-
-def test_budget_pack_respects_cap_and_determinism(spark, sf_dir):
-    """No selected prefix exceeds the 2k cap; max cum per lang is within
-    (cap - next_doc, cap]; two runs return identical row sets."""
-    a = OPS["op157_token_budget_pack"].fn(spark, sf_dir)
-    assert a.filter(F.col("cum_tokens") > 2000).count() == 0
-    rows1 = sorted(tuple(r) for r in a.collect())
-    rows2 = sorted(tuple(r) for r in OPS["op157_token_budget_pack"].fn(spark, sf_dir).collect())
-    assert rows1 == rows2
-    # every lang present in the corpus contributed something
-    from ocdb_server_spark.io import load_table
-
-    langs = {r["lang"] for r in load_table(spark, sf_dir, "documents").select("lang").distinct().collect()}
-    got = {r["lang"] for r in a.collect()}
-    assert got == langs
-
-
-def test_mix_report_shares_sum_to_one(spark, sf_dir):
-    """char_share sums to ~1 and cum_share is monotone nondecreasing in
-    descending-volume order, ending at ~1."""
-    rows = (
-        OPS["op156_domain_mix_report"].fn(spark, sf_dir)
-        .orderBy(F.col("total_chars").desc(), "source")
-        .collect()
-    )
-    total = sum(r["char_share"] for r in rows)
-    assert abs(total - 1.0) < 1e-3
-    cums = [r["cum_share"] for r in rows]
-    assert all(b >= a - 1e-9 for a, b in zip(cums, cums[1:]))
-    assert abs(cums[-1] - 1.0) < 1e-6
-
-
-def test_zipf_slope_is_negative_and_bounded(spark, sf_dir):
-    """Rank-frequency slope must be negative for every language (freq
-    decreases with rank by construction) and in a sane Zipf-ish band."""
-    rows = OPS["op160_zipf_slope"].fn(spark, sf_dir).collect()
-    assert rows, "no languages?"
-    for r in rows:
-        assert -3.0 < r["zipf_slope"] < 0.0, r
-
-
-# ---------------------------------------------------------------- op165
-
-
-def test_entropy_extremes(spark):
-    """All-same-token doc -> 0 bits; 4 equally-frequent tokens -> 2 bits."""
-    import tempfile, os
-
-    df = spark.createDataFrame(
-        [
-            (1, "a a a a a a a a", "en", "s", 15),
-            (2, "a b c d a b c d", "en", "s", 15),
-        ],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    with tempfile.TemporaryDirectory() as tmp:
-        df.write.parquet(os.path.join(tmp, "documents.parquet"))
-        out = {r["doc_id"]: r for r in OPS["op165_token_entropy"].fn(spark, tmp).collect()}
-    assert out[1]["entropy_bits"] == 0.0
-    assert abs(out[2]["entropy_bits"] - 2.0) < 1e-6
-    assert out[1]["n_tokens"] == 8 and out[2]["n_tokens"] == 8
-
-
-# ---------------------------------------------------------------- op169
-
-
-def test_unigram_logprob_rare_tokens_score_higher(spark):
-    """A doc of corpus-common tokens must score lower avg_neglogp than
-    a doc of corpus-rare tokens; hand-check the two-token case."""
-    import tempfile, os
-
-    # corpus: 'the' x 9 occurrences, 'rare' x 1
-    df = spark.createDataFrame(
-        [
-            (1, "the the the the", "en", "s", 15),
-            (2, "the the the the", "en", "s", 15),
-            (3, "the rare", "en", "s", 8),
-        ],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    with tempfile.TemporaryDirectory() as tmp:
-        df.write.parquet(os.path.join(tmp, "documents.parquet"))
-        out = {r["doc_id"]: r for r in OPS["op169_unigram_logprob"].fn(spark, tmp).collect()}
-    t = 10  # total tokens
-    nl_the = math.floor(math.log(t / 9) * 1e6 + 0.5)  # quantized micro-nats
-    nl_rare = math.floor(math.log(t / 1) * 1e6 + 0.5)
-    assert out[1]["avg_neglogp"] == out[2]["avg_neglogp"]
-    assert abs(out[1]["avg_neglogp"] - nl_the / 1e6) < 1e-9
-    assert abs(out[3]["avg_neglogp"] - (nl_the + nl_rare) / 2 / 1e6) < 1e-9
-    assert out[3]["avg_neglogp"] > out[1]["avg_neglogp"]
-
-
-# ---------------------------------------------------------------- op175
-
-
-def test_pmi_finds_planted_collocation(spark):
-    """'san francisco' always co-occurring scores high PMI; a bigram of
-    two independent high-frequency fillers scores ~0 and is cut."""
-    import tempfile, os
-
-    docs = []
-    for i in range(10):
-        # 'san francisco' bound pair; 'the' scattered everywhere
-        docs.append((i, "the san francisco the city the bay the area", "en", "s", 40))
-    df = spark.createDataFrame(
-        docs, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    with tempfile.TemporaryDirectory() as tmp:
-        df.write.parquet(os.path.join(tmp, "documents.parquet"))
-        out = {r["bigram"]: r for r in OPS["op175_pmi_collocations"].fn(spark, tmp).collect()}
-    assert "san francisco" in out
-    sf = out["san francisco"]
-    assert sf["c_xy"] == 10 and sf["pmi"] > 1.0
-    for r in out.values():
-        assert r["c_xy"] >= 5 and r["pmi"] > 0
 
 
 def test_vocab_coverage_shrinks_with_bigger_vocab(spark, sf_dir):
