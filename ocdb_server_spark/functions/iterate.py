@@ -59,8 +59,7 @@ def _truncate_lineage(df: DataFrame, reliable: bool) -> DataFrame:
       memory/disk with the lineage cut. Fastest, zero external
       storage, the right call in one JVM — but an executor death
       destroys blocks that, lineage gone, CANNOT be recomputed: the
-      job fails (measured, scripts/cluster_faultkill.py). Fine where
-      the retry story is "re-run the job".
+      job fails. Fine where the retry story is "re-run the job".
     - reliable: `checkpoint(eager=True)` — blocks are WRITTEN to the
       SparkContext checkpoint directory (shared storage on a real
       cluster: HDFS/S3), so losing any executor mid-loop recomputes
@@ -190,8 +189,7 @@ def iterate_to_fixpoint(
       localCheckpoint (fast, executor-resident — an executor loss
       mid-loop FAILS the job); True uses directory-backed
       checkpoint() so the loop SURVIVES executor loss (see
-      _truncate_lineage; fault-injection-verified in
-      scripts/cluster_faultkill.py).
+      _truncate_lineage).
     - telemetry: optional list; one dict per iteration is appended:
       {"iteration", "changed", "seconds"} — "changed" is whatever the
       probe returned (0/1 for the default probe, a change count only

@@ -925,7 +925,7 @@ def simhash_signatures(
     computing all 64 bit votes as codegen'd conditional sums (the
     same map-side-partial shape as op79's minhash agg). Semantically
     identical to the one-expression SimHash reference in
-    tests/test_pipeline_ext.py — parity-tested — but the
+    tests/test_dedup.py — parity-tested — but the
     per-token work runs inside whole-stage codegen instead of Spark's
     interpreted higher-order-function evaluator (64 interpreted
     aggregate passes per row measured 3.5 s at sf0.1; this is ~0.5 s).
@@ -976,7 +976,7 @@ def op88_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Signatures via the codegen explode+agg path (simhash_signatures);
     the pair shuffle carries (doc_id, chunk) rows. Verified against
-    planted near-dups in tests/test_pipeline_ext.py."""
+    planted near-dups in tests/test_dedup.py."""
     d = load_table(spark, sf_dir, "documents")
     sig = simhash_signatures(d)
     chunks = F.array(
@@ -1348,7 +1348,7 @@ def op94_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprints per document (rolling 5-gram hash, window
     4): the substring-level dedup sketch. Observables: fingerprint
     count + min/max (the set itself is exercised by the locality tests
-    in tests/test_pipeline_ext.py).
+    in tests/test_dedup.py).
 
     The three observables are read out of ONE let-bound evaluation of
     the fingerprint array: three textual references would evaluate the

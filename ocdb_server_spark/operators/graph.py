@@ -522,10 +522,9 @@ def connected_components(
     sc.setCheckpointDir on shared storage): an executor death
     mid-loop then recomputes nothing and the job completes with the
     identical result, where the default executor-resident
-    localCheckpoint blocks would be unrecoverable (both behaviors are
-    fault-injection-measured by scripts/cluster_faultkill.py). Default
-    stays local: in one JVM, reliable's per-iteration write+read buys
-    nothing."""
+    localCheckpoint blocks would be unrecoverable: an executor killed
+    mid-loop fails the job. Default stays local: in one JVM,
+    reliable's per-iteration write+read buys nothing."""
     from ocdb_server_spark.functions.iterate import _truncate_lineage
 
     sym = _truncate_lineage(
@@ -794,9 +793,9 @@ def op96_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`reliable=False` → localCheckpoint), which is correct in one JVM,
     but localCheckpoint blocks die with their executor and, lineage
     truncated, cannot be recomputed: an executor loss mid-loop fails
-    the job loudly (scripts/cluster_faultkill.py); it never ships a
-    wrong fixpoint. Production fixpoints on a multi-executor cluster
-    call ``connected_components(edges, reliable=True)`` after
+    the job loudly; it never ships a wrong fixpoint. Production
+    fixpoints on a multi-executor cluster call
+    ``connected_components(edges, reliable=True)`` after
     ``sc.setCheckpointDir(<HDFS/S3 path>)``: directory-backed
     checkpoints survive executor loss with byte-identical results, and
     superseded generations are GC'd per iteration

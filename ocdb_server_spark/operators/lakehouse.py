@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from ocdb_server_spark.functions.cdc import apply_changes
 from ocdb_server_spark.io import load_table
 from ocdb_server_spark.registry import register
-from ocdb_server_spark.scratch import scratch_dir
+from ocdb_server_spark.scratch import publish, scratch_dir
 from ocdb_server_spark.streaming.jobs import stream_cdc_apply_changes
 
 
@@ -1083,10 +1083,7 @@ def log_commit(
         "delete_files": sorted(delete_files),
     }
     path = os.path.join(log_dir(root), f"v{version}.json")
-    tmp = f"{path}.{os.getpid()}.tmp"
-    with open(tmp, "w") as f:
-        json.dump(entry, f)
-    os.replace(tmp, path)  # the atomic commit point
+    publish(path, lambda f: f.write(json.dumps(entry).encode()))  # the commit point
 
 
 def read_log(root: str, version: int) -> dict:

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ocdb_server_spark.functions.arrow_rows import batch_rows, map_partitions, map_rows
 from ocdb_server_spark.io import load_table
 from ocdb_server_spark.registry import register
-from ocdb_server_spark.scratch import scratch_dir
+from ocdb_server_spark.scratch import publish, scratch_dir
 
 from ocdb_server_spark.sources import avro_ocf as _avro_kernel
 from ocdb_server_spark.sources import bgzf as _bgzf_kernel
@@ -95,12 +95,9 @@ def op03_source_csv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = os.path.join(tempfile.gettempdir(), "ocdb_spark_seabass_fixture")
     os.makedirs(d, exist_ok=True)
     path = os.path.join(d, "fixture.sb")
-    # atomic write (tmp + rename): concurrent sweeps write identical
-    # bytes, but a reader must never see a torn file mid-write
-    tmp_path = f"{path}.{os.getpid()}.tmp"
-    with open(tmp_path, "w") as f:
-        f.write(FIXTURE)
-    os.replace(tmp_path, path)
+    # concurrent sweeps write identical bytes, but a reader must never
+    # see a torn file mid-write
+    publish(path, lambda f: f.write(FIXTURE.encode()))
     return read_seabass(spark, path)
 
 
@@ -331,10 +328,7 @@ def seabass_fixture_corpus(spark: SparkSession) -> DataFrame:
     paths = []
     for ds_id, content in (("ds1", FIXTURE), ("ds2", FIXTURE2), ("ds3", FIXTURE3)):
         path = os.path.join(d, f"{ds_id}.sb")
-        tmp_path = f"{path}.{os.getpid()}.tmp"
-        with open(tmp_path, "w") as f:
-            f.write(content)
-        os.replace(tmp_path, path)  # atomic: same rule as op03
+        publish(path, lambda f: f.write(content.encode()))
         paths.append(path)
     return read_seabass_corpus(spark, paths)
 
@@ -725,19 +719,6 @@ class ZstdArchive:
         return len(sizes)
 
 
-def _publish(path: str, write):
-    """``write(f)`` into a tmp file, then ``os.replace`` it onto ``path``
-    (op03's atomic-publish rule); returns what ``write`` returns. The
-    tmp name carries the PID: a speculative or zombie attempt at the
-    same partition must not interleave bytes with the retry's stream,
-    and the last replace wins whole."""
-    tmp = f"{path}.{os.getpid()}.tmp"
-    with open(tmp, "wb") as f:
-        n = write(f)
-    os.replace(tmp, path)
-    return n
-
-
 def _docs_jsonl(rows: Iterator[tuple]) -> Iterator[str]:
     """The archives' record serialization: one sorted-key JSON object
     per (doc_id, text, lang, n_chars) row."""
@@ -766,7 +747,7 @@ def export_docs_archive(
     def write(batches):
         pid = TaskContext.get().partitionId()
         path = os.path.join(out_dir, f"part-{pid:05d}{archive.suffix}")
-        return [(path, _publish(
+        return [(path, publish(
             path, lambda f: archive.write(_docs_jsonl(batch_rows(batches)), f)
         ))]
 
@@ -1099,7 +1080,7 @@ def _avro_write_parts(out_dir: str):
         ]
         codec = "deflate" if pid % 2 else "null"
         path = os.path.join(out_dir, f"part-{pid:05d}.avro")
-        _publish(path, lambda f: f.write(_avro_kernel.write_ocf(
+        publish(path, lambda f: f.write(_avro_kernel.write_ocf(
             _AVRO_WRITER_SCHEMA, docs, codec=codec, rows_per_block=500)))
         return [(path, len(docs))]
 
@@ -1249,7 +1230,7 @@ def _obs_avro_write(out_dir: str):
         pid = TaskContext.get().partitionId()
         codec = "deflate" if pid % 2 else "null"
         path = os.path.join(out_dir, f"obs-{pid:05d}.avro")
-        _publish(path, lambda f: f.write(_avro_kernel.write_ocf(
+        publish(path, lambda f: f.write(_avro_kernel.write_ocf(
             _OBS_AVRO_SCHEMA, obs, codec=codec, rows_per_block=8)))
         return [(path, len(obs))]
 

@@ -613,7 +613,7 @@ def op166_hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     associative, and mergeable, so any hierarchy level re-aggregates
     from stored sketches instead of raw data (contrast op19 exact /
     op20 approx_count_distinct, which both re-scan). Approximate by
-    design → ROWS-only check; tests/test_pipeline_r4b.py asserts each
+    design → ROWS-only check; tests/test_stats.py asserts each
     estimate within 5% of the exact count."""
     e = load_table(spark, sf_dir, "events")
     per_type = e.groupBy("event_type").agg(
@@ -705,7 +705,7 @@ def _mulmod32(col: str, mult: int, int_div: str) -> str:
     overflow-free under Spark 4's default ANSI mode (and in DuckDB)
     for ANY non-negative int64 col. The naive ``col * mult`` raises
     at runtime once col exceeds ~2⁶³/mult ≈ 4.1e9 — i.e. exactly the
-    100 TB-corpus doc_ids these ops are written for (round-4 advice).
+    100 TB-corpus doc_ids these ops are written for.
     Identity: with a = col mod 2³² = hi·2¹⁶ + lo,
     a·m ≡ lo·m + ((hi·m mod 2³²)·2¹⁶)  (mod 2³²); bounds
     lo·m, hi·m < 2¹⁶·2³² = 2⁴⁸. Bit-identical to the naive product
@@ -1184,20 +1184,8 @@ _CMS_KEY_DUCK = "('0x' || substr(md5(word), 1, 6))::BIGINT"
 _CMS_PROBES = ("spark", "batch", "window", "vector", "the", "nonexistentword")
 
 
-def _cms_mulmod32(col: str, mult: int, int_div: str) -> str:
-    """(col · mult) mod 2³² overflow-free — op174's portable hash."""
-    u32 = 4294967296
-    a = f"(({col}) % {u32})"
-    lo = f"({a} % 65536)"
-    hi = f"({a} {int_div} 65536)"
-    return (
-        f"((({lo} * {mult}) % {u32}"
-        f" + ((({hi} * {mult}) % {u32}) * 65536) % {u32}) % {u32})"
-    )
-
-
 def _cms_bucket(key_expr: str, mult: int, int_div: str) -> str:
-    return f"({_cms_mulmod32(key_expr, mult, int_div)} % {_CMS_W})"
+    return f"({_mulmod32(key_expr, mult, int_div)} % {_CMS_W})"
 
 
 def _cms_py_bucket(word: str, mult: int) -> int:
@@ -1340,7 +1328,7 @@ def _fh_exprs(key_expr: str, int_div: str) -> tuple[str, str]:
     """(bucket, sign) expressions over an integer key — engine-portable:
     bucket from the low bits of the mixed hash, sign from a mid bit
     (bit 16) so bucket and sign are decorrelated."""
-    mixed = _cms_mulmod32(key_expr, _FH_MULT, int_div)
+    mixed = _mulmod32(key_expr, _FH_MULT, int_div)
     bucket = f"({mixed} % {_FH_BUCKETS})"
     sign = f"(CASE WHEN ({mixed} {int_div} 65536) % 2 = 0 THEN 1 ELSE -1 END)"
     return bucket, sign
@@ -1538,7 +1526,7 @@ _NEG_PRIME = 40503  # odd step decorrelated from the Knuth constant
 
 def _op229_sql() -> str:
     ks = ", ".join(str(i) for i in range(_NEG_K))
-    mixed = _cms_mulmod32(f"(d.doc_id * {_NEG_K} + t.i)", 2654435761, "//")
+    mixed = _mulmod32(f"(d.doc_id * {_NEG_K} + t.i)", _KNUTH, "//")
     return f"""
 WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
 cand AS (
@@ -1578,7 +1566,7 @@ def op229_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     n = docs.count()  # scalar corpus size: bounded driver value (like op95's K)
     slots = spark.range(_NEG_K).select(F.col("id").cast("int").alias("i"))
-    mixed = _cms_mulmod32(f"(doc_id * {_NEG_K} + i)", 2654435761, "div")
+    mixed = _mulmod32(f"(doc_id * {_NEG_K} + i)", _KNUTH, "div")
     cand = (
         docs.select("doc_id", "lang")
         .crossJoin(F.broadcast(slots))
@@ -1918,7 +1906,7 @@ _KFOLD = 5
 
 
 def _op239_sql() -> str:
-    fold = f"({_cms_mulmod32('user_id', 2654435761, '//')} % {_KFOLD})"
+    fold = f"({_mulmod32('user_id', _KNUTH, '//')} % {_KFOLD})"
     return f"""
 WITH tagged AS (
   SELECT {fold} AS fold, user_id, event_type, event_id FROM events)
@@ -1948,7 +1936,7 @@ def op239_group_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     disjointness invariant (each user in exactly one fold) is
     asserted in tests."""
     ev = load_table(spark, sf_dir, "events")
-    fold = F.expr(f"({_cms_mulmod32('user_id', 2654435761, 'div')} % {_KFOLD})")
+    fold = F.expr(f"({_mulmod32('user_id', _KNUTH, 'div')} % {_KFOLD})")
     return (
         ev.select(fold.cast("int").alias("fold"), "user_id", "event_id")
         .groupBy("fold")
@@ -2285,7 +2273,7 @@ _MOM_B = 15  # odd bucket count: the median IS the 8th order statistic
 
 
 def _op248_sql() -> str:
-    bucket = f"({_cms_mulmod32('event_id', 2654435761, '//')} % {_MOM_B})"
+    bucket = f"({_mulmod32('event_id', _KNUTH, '//')} % {_MOM_B})"
     return f"""
 WITH q AS (
   SELECT event_type, {bucket} AS bucket,
@@ -2331,7 +2319,7 @@ def op248_median_of_means(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     bucket = F.expr(
-        f"({_cms_mulmod32('event_id', 2654435761, 'div')} % {_MOM_B})"
+        f"({_mulmod32('event_id', _KNUTH, 'div')} % {_MOM_B})"
     )
     q = ev.select(
         "event_type",

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from ocdb_server_spark.functions.text import LANG_MARKERS, STOPWORDS, token_hits, tokens
 from ocdb_server_spark.io import load_table
-from ocdb_server_spark.operators.stats import _SHARD_SQL, _cms_mulmod32, shard_assign
+from ocdb_server_spark.operators.stats import _KNUTH, _SHARD_SQL, _mulmod32, shard_assign
 from ocdb_server_spark.registry import pool_persist, register
 
 
@@ -1619,7 +1619,7 @@ _CB_MIN_CHARS, _CB_MAX_CHARS = 50, 1000
 
 
 def _op250_sql() -> str:
-    split = f"({_cms_mulmod32('doc_id', 2654435761, '//')} % 100)"
+    split = f"({_mulmod32('doc_id', _KNUTH, '//')} % 100)"
     return f"""
 WITH clean AS (
   SELECT doc_id, text, lang
@@ -1676,7 +1676,7 @@ def op250_corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("rn")
     )
     split_expr = F.expr(
-        f"({_cms_mulmod32('doc_id', 2654435761, 'div')} % 100)"
+        f"({_mulmod32('doc_id', _KNUTH, 'div')} % 100)"
     )
     split = dedup.withColumn(
         "split",

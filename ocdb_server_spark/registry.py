@@ -29,7 +29,6 @@ class Op:
     name: str
     fn: QueryFn
     oracle: str | None  # DuckDB SQL, or None → rows-only check
-    doc: str = ""
 
 
 REGISTRY: dict[str, Op] = {}
@@ -86,12 +85,7 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
             release_pool()
             return fn(spark, sf_dir, *args, **kwargs)
 
-        REGISTRY[name] = Op(
-            name=name,
-            fn=wrapped,
-            oracle=oracle,
-            doc=fn.__doc__ or "",
-        )
+        REGISTRY[name] = Op(name=name, fn=wrapped, oracle=oracle)
         return wrapped
 
     return deco

@@ -1,7 +1,7 @@
-"""Per-process scratch directories for sink / round-trip operators.
+"""Per-process scratch directories for sink / round-trip operators,
+and the package's one atomic file publish (`publish`).
 
-Two hazards pull in opposite directions (round-7 ADVICE + round-8
-review):
+Two hazards pull in opposite directions:
 
 - CONCURRENCY: a fixed dir keyed only by the sf tag lets one session
   unlink files another session's lazy plan (binaryFile, json reader)
@@ -144,3 +144,17 @@ def scratch_dir(kind: str, sf_dir: str, fresh: bool = True) -> str:
     except OSError:
         pass
     return mine
+
+
+def publish(path: str, write):
+    """``write(f)`` into ``<path>.<pid>.tmp`` opened in binary mode,
+    then ``os.replace`` it onto ``path``; returns what ``write``
+    returns. A reader sees the old file or the whole new one, never a
+    torn one. The PID in the tmp name keeps concurrent writers (two
+    sweeps, a speculative task and its retry) from interleaving bytes;
+    the last replace wins whole."""
+    tmp = f"{path}.{os.getpid()}.tmp"
+    with open(tmp, "wb") as f:
+        n = write(f)
+    os.replace(tmp, path)
+    return n

@@ -33,6 +33,7 @@ from pyspark.sql.streaming.stateful_processor import (
 )
 
 from ocdb_server_spark.io import raw_schema, table_path
+from ocdb_server_spark.scratch import publish
 
 # Constants certified on both engines: operators/streaming_batch.py's
 # oracle SQL interpolates these same values, so an oracle never
@@ -509,10 +510,8 @@ class _CommitLog:
         replayed batch is a no-op)."""
         if self.has(batch_id):
             return
-        tmp = f"{self._path(batch_id)}.{os.getpid()}.tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id, **entry}, f)
-        os.replace(tmp, self._path(batch_id))
+        body = json.dumps({"batch_id": batch_id, **entry}).encode()
+        publish(self._path(batch_id), lambda f: f.write(body))
 
     def entries(self) -> list[dict]:
         """Every committed entry, by batch id."""

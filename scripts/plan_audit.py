@@ -217,7 +217,7 @@ def main() -> None:
     print("  parallelism is pinned by tests/test_zstd_seekable.py::")
     print("  test_op261_registered_plan_writes_parallel (>=4 files).")
     print()
-    print("- **op265_stream_cdc_apply_changes** (round-13): the table")
+    print("- **op265_stream_cdc_apply_changes**: the table")
     print("  row is the FINAL-STORE read (one parquet scan, shuffle-")
     print("  free) — the merge work runs eagerly inside foreachBatch")
     print("  per micro-batch: ONE key-window over the (tiny) batch +")

@@ -1,5 +1,5 @@
-"""functions/ann_index.py — the persisted ANN index path (round-11
-verdict item 4). Pins the three contract points:
+"""functions/ann_index.py — the persisted ANN index path. Pins the
+three contract points:
 
 1. RESULT PARITY: op95/op180's persisted-codebook query returns
    bit-identical top-k to the inline (train-in-plan) build — the

@@ -214,9 +214,9 @@ def test_parallel_writer_empty_partitions_write_valid_eof_files(
 def test_truncated_member_body_raises_valueerror(tmp_path):
     """A file cut off INSIDE a member (18-byte header intact, body
     missing) must raise the module's documented ValueError taxonomy —
-    not let struct.error leak out of the catalog step (review
-    finding: callers catching ValueError for the catalog-time error
-    path would miss the truncation)."""
+    not let struct.error leak out of the catalog step (callers
+    catching ValueError for the catalog-time error path would miss
+    the truncation)."""
     blob = write_bgzf(_corpus(50))
     path = str(tmp_path / "cut.gz")
     with open(path, "wb") as f:
@@ -229,8 +229,7 @@ def test_corrupt_bsize_below_minimum_raises_valueerror(tmp_path):
     """A zeroed/corrupt BSIZE field (e.g. bsize=1 from a zeroed u16)
     would make the footer seek land BEFORE the header — the module
     must fail in its loud ValueError taxonomy, not raise OSError from
-    f.seek or misread footer bytes out of the header (round-8
-    ADVICE)."""
+    f.seek or misread footer bytes out of the header."""
     blob = bytearray(write_bgzf(_corpus(10)))
     blob[16:18] = b"\x00\x00"  # first member's BSIZE u16 → bsize=1
     path = str(tmp_path / "zeroed_bsize.gz")

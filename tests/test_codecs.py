@@ -724,9 +724,9 @@ def test_avro_zigzag_varint_edges():
 
 
 def test_avro_int32_range_check_and_union_widening():
-    """The reject-loudly contract at the int32 edge (round-8 verdict):
-    in-range boundary values round-trip, one-past-the-edge raises a
-    ValueError from _encode (never a decodable-but-nonconformant
+    """The reject-loudly contract at the int32 edge: in-range boundary
+    values round-trip, one-past-the-edge raises a ValueError from
+    _encode (never a decodable-but-nonconformant
     varint), and a union ["int","long"] WIDENS an int64-range value
     to the long branch instead of binding int and then rejecting."""
     import pytest
@@ -754,8 +754,7 @@ def test_avro_int32_range_check_and_union_widening():
 
 def test_avro_jvm_int32_boundary_interop(spark):
     """JVM DataFileReader reads our int32 boundary values exactly —
-    the spec-strict partner the range check protects (round-8
-    verdict item 4)."""
+    the spec-strict partner the range check protects."""
     import json as _json
     import tempfile as _tf
 
@@ -945,11 +944,11 @@ def test_avro_roundtrip_property(rows, codec, block):
     st.integers(1, 7),
 )
 def test_avro_zero_size_roundtrip_property(rows, codec, block):
-    """Hypothesis over the zero-ENCODED-size shapes the round-14 guard
-    work touched (null fields, arrays/maps of null): every batch must
-    survive the round-trip for both codecs and any block size — the
-    class the r13 bytes×8 guard falsely rejected, and the cumulative
-    allowance must never fire on legal volumes."""
+    """Hypothesis over the zero-ENCODED-size shapes (null fields,
+    arrays/maps of null): every batch must survive the round-trip for
+    both codecs and any block size — a bytes×8 plausibility guard
+    would falsely reject this class, and the cumulative allowance must
+    never fire on legal volumes."""
     schema = {
         "type": "record", "name": "Z", "fields": [
             {"name": "x", "type": "null"},
@@ -964,7 +963,7 @@ def test_avro_zero_size_roundtrip_property(rows, codec, block):
 
 
 def test_avro_resolution_type_mismatch_rejected_and_promotions_applied():
-    """Round-7 review: name-match alone is not resolution -- an
+    """Name-match alone is not resolution -- an
     incompatible reader type must raise, and the spec's promotions
     (int/long->double, string<->bytes) must CONVERT the decoded value."""
     import pytest
@@ -1152,10 +1151,10 @@ def test_avro_validator_rejects_out_of_subset():
 
 
 def test_avro_zero_byte_rows_legal_and_corrupt_count_rejected():
-    """Round-14 ADVICE: items that encode to ZERO bytes are spec-legal
-    (empty-record rows, all-null records, arrays/maps of "null") — the
-    round-13 bytes×8 plausibility guard rejected write_ocf's OWN output
-    for those schemas, breaking the module's round-trip contract. Legal
+    """Items that encode to ZERO bytes are spec-legal (empty-record
+    rows, all-null records, arrays/maps of "null") — a bytes×8
+    plausibility guard would reject write_ocf's OWN output for those
+    schemas, breaking the module's round-trip contract. Legal
     zero-size shapes must round-trip; a corrupt astronomical count must
     still raise before allocating anything."""
     import pytest
@@ -1196,9 +1195,8 @@ def test_avro_zero_byte_rows_legal_and_corrupt_count_rejected():
         read_ocf(bytes(payload))
 
     # corrupt: the budget is CUMULATIVE — K repeated at-budget blocks
-    # must not multiply it K-fold (round-14 review's crafted OOM: each
-    # ~12-byte block claimed 2^20 rows and a per-block cap passed all
-    # of them)
+    # must not multiply it K-fold (a crafted OOM: each ~12-byte block
+    # claims 2^20 rows, and a per-block cap would pass all of them)
     payload = bytearray(write_ocf(empty, []))
     for _ in range(8):
         payload += _zigzag_encode(_ZERO_SIZE_ITEM_BUDGET // 2)
@@ -1207,7 +1205,7 @@ def test_avro_zero_byte_rows_legal_and_corrupt_count_rejected():
     with pytest.raises(ValueError, match="budget"):
         read_ocf(bytes(payload))
 
-    # corrupt: the round-14 review's bytes×8 BYPASS — pad the block
+    # corrupt: a bytes×8 BYPASS — pad the block
     # with junk the zero-size rows never consume, so any count-vs-bytes
     # plausibility gate passes; only advance accounting catches it
     junk = b"\x5a" * 262_144                    # 256 KiB of padding
@@ -1225,12 +1223,12 @@ def test_avro_zero_byte_rows_legal_and_corrupt_count_rejected():
 
 
 def test_avro_deflate_bomb_and_array_zero_advance_rejected():
-    """Round-14 review: (a) an unbounded zlib inflate let a small
-    crafted deflate block allocate ~1032× its size before any row
-    decoded — blocks must stop at the decompressed-size budget; (b) a
-    corrupt array-of-null count must stop at the zero-advance budget
-    even in a STANDALONE decode (no read_ocf frame), and read_ocf's
-    frame must leave later standalone decodes a fresh allowance."""
+    """(a) An unbounded zlib inflate lets a small crafted deflate block
+    allocate ~1032× its size before any row decodes — blocks must stop
+    at the decompressed-size budget; (b) a corrupt array-of-null count
+    must stop at the zero-advance budget even in a STANDALONE decode
+    (no read_ocf frame), and read_ocf's frame must leave later
+    standalone decodes a fresh allowance."""
     import io as _io
     import zlib as _zlib
 
@@ -1269,11 +1267,11 @@ def test_avro_deflate_bomb_and_array_zero_advance_rejected():
 
 
 def test_avro_standalone_decode_allowance_resets_after_rejection():
-    """Round-15 ADVICE: a drained zero-advance allowance from a
-    STANDALONE _decode chain (no read_ocf frame to close it) used to
-    persist on the thread with left=0, so ONE rejected decode
-    spuriously rejected every later LEGAL standalone decode until the
-    next read_ocf. The raise path must hand back a fresh allowance."""
+    """A drained zero-advance allowance from a STANDALONE _decode
+    chain (no read_ocf frame to close it) must not persist on the
+    thread with left=0, or ONE rejected decode spuriously rejects
+    every later LEGAL standalone decode until the next read_ocf. The
+    raise path must hand back a fresh allowance."""
     import io as _io
 
     import pytest
@@ -1291,11 +1289,11 @@ def test_avro_standalone_decode_allowance_resets_after_rejection():
     with pytest.raises(ValueError, match="budget"):
         _decode(arr_of_null, bad)
     # a small LEGAL standalone decode on the same thread must succeed
-    # (pre-fix: left stuck at 0 → first zero-advance item rejected)
+    # (a left stuck at 0 would reject its first zero-advance item)
     ok = _io.BytesIO(_zigzag_encode(3) + _zigzag_encode(0))
     assert _decode(arr_of_null, ok) == [None, None, None]
 
-    # Session review's residual: the allowance must also survive a
+    # The allowance must also survive a
     # NON-budget failure after an exact drain. A block declaring
     # exactly the budget of nulls ticks left to 0 LEGALLY, then the
     # stream truncates before the terminator varint — the raise path
@@ -1309,10 +1307,10 @@ def test_avro_standalone_decode_allowance_resets_after_rejection():
 
 
 def test_avro_standalone_resolver_chain_framed():
-    """Round-16 ADVICE: a standalone resolver read-fn chain (invoked
-    without a read_ocf or _decode frame) that completed SUCCESSFULLY
-    still leaked its lazily-opened, partially-drained zero-advance
-    allowance to the thread — _zs_tick's in-raise reset and the
+    """A standalone resolver read-fn chain (invoked without a read_ocf
+    or _decode frame) that completes SUCCESSFULLY must not leak its
+    lazily-opened, partially-drained zero-advance allowance to the
+    thread — _zs_tick's in-raise reset and the
     _decode frame only cover raise paths and _decode entry points.
     _make_resolver's returned top-level fn now carries the same
     conditional open/close frame as _decode."""
@@ -1331,10 +1329,10 @@ def test_avro_standalone_resolver_chain_framed():
     arr_of_null = {"type": "array", "items": "null"}
     fn = _make_resolver(arr_of_null, arr_of_null)
 
-    # (a) the leak the ADVICE names: a standalone resolver chain that
-    # SUCCEEDS after draining the whole allowance. Pre-fix, left=0
-    # persisted on the thread and the next legal standalone decode was
-    # spuriously rejected at its first zero-advance item.
+    # (a) a standalone resolver chain that SUCCEEDS after draining the
+    # whole allowance. A leaked left=0 would persist on the thread and
+    # reject the next legal standalone decode at its first zero-advance
+    # item.
     drain_all = _io.BytesIO(
         _zigzag_encode(_ZERO_SIZE_ITEM_BUDGET) + _zigzag_encode(0))
     out = fn(drain_all)
@@ -1376,10 +1374,10 @@ def test_avro_standalone_resolver_chain_framed():
 
 
 def test_avro_truncated_deflate_block_rejected():
-    """Round-15 ADVICE: the bounded-inflate path (decompressobj) never
-    checked dec.eof — a deflate stream cut mid-block leaves
-    unconsumed_tail empty and flush() succeeds with PARTIAL output,
-    where the one-shot zlib.decompress it replaced raised. With a
+    """The bounded-inflate path (decompressobj) must check dec.eof — a
+    deflate stream cut mid-block leaves unconsumed_tail empty and
+    flush() succeeds with PARTIAL output, where a one-shot
+    zlib.decompress would raise. With a
     zero-byte-row schema the partial (empty) output then 'decodes' the
     declared count without any error — silent fabricated rows."""
     import zlib as _zlib
@@ -1394,8 +1392,8 @@ def test_avro_truncated_deflate_block_rejected():
     empty = {"type": "record", "name": "E", "fields": []}
     # (a) truncated stream producing ZERO output bytes: deflate of b""
     # is b"\x03\x00"; its 1-byte prefix inflates to b"" with eof unset.
-    # Pre-fix this read "succeeded" with 5 rows minted from a corrupt
-    # block; now it must be loud.
+    # Without the eof check this read "succeeds" with 5 rows minted
+    # from a corrupt block; it must be loud.
     co = _zlib.compressobj(9, _zlib.DEFLATED, -15)
     full = co.compress(b"") + co.flush()
     assert full == b"\x03\x00"
@@ -1427,7 +1425,7 @@ def test_avro_truncated_deflate_block_rejected():
     rows = [{} for _ in range(7)]
     assert read_ocf(write_ocf(empty, rows, codec="deflate")) == rows
 
-    # (d) INTEROP (session review): the Apache Avro Python library and
+    # (d) INTEROP: the Apache Avro Python library and
     # fastavro write deflate blocks as zlib.compress(data)[2:-1] —
     # raw stream plus 3 of the 4 Adler-32 trailer bytes. Such a block
     # leaves eof SET and 3 bytes of unused_data; it must read clean.
@@ -1453,7 +1451,7 @@ def test_avro_truncated_deflate_block_rejected():
 def test_avro_exhaustive_truncation_taxonomy():
     """Every possible cut position in a 2-block deflate OCF, checked
     exhaustively: a cut INSIDE a block (or inside the header) must
-    raise loudly — the round-15 truncated-stream guard plus the
+    raise loudly — the truncated-deflate-stream guard plus the
     existing _read_exact/sync checks — while a cut EXACTLY at a block
     boundary is indistinguishable from a shorter file BY THE FORMAT
     (OCF carries no row-count trailer; every avro reader shares this)
@@ -1492,9 +1490,10 @@ def test_avro_exhaustive_truncation_taxonomy():
     # and the untruncated file still reads in full
     assert read_ocf(base) == rows
     # a cut strictly inside the FIRST block's compressed payload is the
-    # r15 guard's specific case: eof unset -> 'truncated stream' (when
-    # the cut leaves the size varint intact it fails _read_exact first;
-    # both are loud — assert the aggregate property instead of one path)
+    # truncated-stream guard's specific case: eof unset -> 'truncated
+    # stream' (when the cut leaves the size varint intact it fails
+    # _read_exact first; both are loud — assert the aggregate property
+    # instead of one path)
     with pytest.raises(ValueError):
         read_ocf(bytes(base[: header_end + 3]))
 
@@ -1609,7 +1608,7 @@ def test_avro_complex_roundtrip_property(rows, codec):
 
 
 def test_avro_union_int_prefers_exact_branch_over_float():
-    """Round-7 review: an int value must bind to an int/long union
+    """An int value must bind to an int/long union
     branch even when a float/double branch is listed FIRST — binding
     to float32 would silently destroy precision (2^40+1 is not
     float32-representable). Widening still happens when no exact
@@ -1627,7 +1626,7 @@ def test_avro_union_int_prefers_exact_branch_over_float():
 
 
 def test_avro_missing_writer_field_raises():
-    """Round-7 review: defaults are reader-side; a row missing a
+    """Defaults are reader-side; a row missing a
     writer-schema field is a caller bug (typo) and must raise, not
     encode str(None)/false/empty silently."""
     import pytest
@@ -1639,7 +1638,7 @@ def test_avro_missing_writer_field_raises():
 
 
 def test_avro_enum_default_must_be_a_symbol():
-    """Round-7 review: the spec requires an enum's default to be one
+    """The spec requires an enum's default to be one
     of its symbols; a typo'd default would otherwise let resolution
     emit a symbol outside the reader's own enum."""
     import pytest
@@ -1950,8 +1949,8 @@ def test_decoder_truncation_corruption_fuzz():
 
 
 def test_silent_wrong_value_guards():
-    """The four silent-wrong-value holes a review pass found AFTER
-    the exception-type fuzz (which cannot see silent successes):
+    """Four silent-wrong-value holes the exception-type fuzz cannot
+    see (it only sees raises, never silent successes):
     (1) an Avro block whose count varint is corrupted to 0/negative
     must raise, not return zero rows past an intact sync check, and
     a count smaller than the serialized rows must not drop the tail;
@@ -2012,8 +2011,8 @@ def test_silent_wrong_value_guards():
 
 
 def test_bmp_corrupt_data_offset_rejected():
-    """Round-13 review: a corrupt data_offset pointing into the header
-    silently decoded header bytes as pixels."""
+    """A corrupt data_offset pointing into the header or past the
+    buffer must raise, not decode header bytes as pixels."""
     import struct
 
     import numpy as np
@@ -2032,8 +2031,8 @@ def test_bmp_corrupt_data_offset_rejected():
 
 
 def test_flac_blocksize_out_of_range_rejected():
-    """Round-13 review: blocksize > 65535 silently emitted a corrupt
-    stream (16-bit header fields mask); it must reject at entry like
+    """A blocksize outside the 16-bit header field (> 65535, or too
+    small) would emit a corrupt stream; it must reject at entry like
     every other knob."""
     import numpy as np
     import pytest as _pytest
@@ -2048,9 +2047,9 @@ def test_flac_blocksize_out_of_range_rejected():
 
 
 def test_avro_field_type_mismatches_reject_loudly():
-    """Round-13 review: non-union fields silently coerced (bytes(5) →
-    five NULs, int(2.7) → 2, str(anything)); they must reject with the
-    union path's type discipline."""
+    """Non-union fields must not coerce silently (bytes(5) → five
+    NULs, int(2.7) → 2, str(anything)); they reject with the union
+    path's type discipline."""
     import pytest as _pytest
 
     from ocdb_server_spark.sources.avro_ocf import read_ocf, write_ocf

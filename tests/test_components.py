@@ -55,7 +55,7 @@ def test_symmetric_input_irrelevant(spark):
 def test_minhash_lsh_to_components_composition(spark):
     """The APPROXIMATE candidate path — op79's MinHash-LSH bands —
     feeding connected_components: the 100 TB composition that op96's
-    exact-Jaccard certification (r9 graduation) no longer exercises
+    exact-Jaccard certification no longer exercises
     directly. Planted duplicate groups must collapse into single
     min-labeled clusters; the singleton must not appear (vertices
     only exist via edges)."""
@@ -110,14 +110,13 @@ def test_op96_clusters_cover_exact_dups(spark, sf_dir):
 
 
 def test_jaccard_pairs_random_differential_vs_sql_template(spark):
-    """Randomized differential for the r9 single-fold pair relation:
+    """Randomized differential for the single-fold pair relation:
     random small corpora (planted dup groups, shared phrases, unicode,
     short/empty docs) through the Spark helper AND the SQL template,
     both parameterizations (op89's same-source J>=0.1 and op96/op221's
     cross-source J>=0.5) — the pair SETS and 6dp jaccards must match
-    exactly. Guards the template/helper pair against exactly the
-    silent drift the review flagged (one side's tokenizer or df-cap
-    changing without the other)."""
+    exactly. Guards the template/helper pair against silent drift (one
+    side's tokenizer or df-cap changing without the other)."""
     import random
 
     import duckdb
@@ -171,7 +170,7 @@ def test_jaccard_pairs_random_differential_vs_sql_template(spark):
 
 
 def test_connected_components_random_differential_vs_recursive_sql(spark):
-    """Randomized differential for the r9 CC certification: 30 random
+    """Randomized differential for the CC certification: 30 random
     graphs (mixed cliques, chains, isolated edges, duplicate +
     reversed edges) through the iterative min-label loop AND DuckDB's
     WITH RECURSIVE min-reachable-id fixpoint — labels must be
@@ -220,7 +219,7 @@ SELECT id, MIN(r) FROM reach GROUP BY id
 
 
 # ---------------------------------------------------------------------------
-# op132 composition path (round-17 verdict item 4; BASELINE.md 17g/18a)
+# op132 composition path (BASELINE.md 17g/18a)
 # ---------------------------------------------------------------------------
 
 
@@ -301,8 +300,8 @@ def test_op132_composition_recovers_planted_neardups(spark, tmp_path):
       SAME (lang, nw, cb) shape block, so BOTH paths must find it —
       with identical (edit_dist, edit_ratio) values.
     - doc 101 = doc 1 with one word appended: word count changes, so
-      the shape block STRUCTURALLY misses it (the round-18 measured
-      recall asymmetry: 1-vs-256 regime pairs at sf0.1) while the
+      the shape block STRUCTURALLY misses it (the measured recall
+      asymmetry: 1-vs-256 regime pairs at sf0.1) while the
       composed path must still find it."""
     import random
 
@@ -352,7 +351,7 @@ def test_op132_composition_recovers_planted_neardups(spark, tmp_path):
 
 
 def test_op132_composition_dominates_at_gate_scale(spark, sf_dir):
-    """Round-18 measurement (BASELINE.md 18a) asserted on the real
+    """The BASELINE.md 18a measurement, asserted on the real
     corpus: in the near-dup regime (edit_ratio ≤ 0.3) the composed
     path recovers every pair the shape block finds — with identical
     values — and strictly more (28 regime pairs vs 0 at sf0.001,

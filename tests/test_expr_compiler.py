@@ -213,7 +213,7 @@ def _expr_of(q) -> str:
     if isinstance(q, PhraseQuery):
         # quoted, not bare: a corpus-derived token that happens to be
         # an operator word ('not', 'and', 'or') would otherwise parse
-        # as the operator and crash the round-trip (review finding)
+        # as the operator and crash the round-trip
         return f'"{q.text}"'
     if isinstance(q, FieldValueQuery):
         return f"{q.field}:{q.value}"
@@ -346,7 +346,7 @@ def test_differential_semantics_vs_duckdb(spark, sf_dir, duck):
         for i, a in enumerate(asts)
     )
     # session-scoped conftest `duck` fixture already registers the
-    # documents view over sf_dir (review finding: don't duplicate it)
+    # documents view over sf_dir; this test does not duplicate it
     drow = duck.execute(f"SELECT {sel} FROM documents").arrow().to_pandas()
 
     mismatches = [
@@ -367,9 +367,8 @@ def test_differential_semantics_vs_duckdb(spark, sf_dir, duck):
 
 
 def test_fieldless_wildcard_compiles_to_like(spark):
-    """Round-12 review: 'chl*' used to compile to contains('chl*') —
-    a search for the literal character '*'. It must wildcard-match
-    over the default fields."""
+    """'chl*' must wildcard-match over the default fields, not compile
+    to contains('chl*') — a search for the literal character '*'."""
     df = spark.createDataFrame(
         [("chlorophyll data",), ("nothing here",), ("has chl* star",)],
         "name string",
@@ -384,7 +383,7 @@ def test_fieldless_wildcard_compiles_to_like(spark):
 
 
 def test_quoted_value_pins_string_comparison(spark):
-    """Round-12 review: version:"1.10" must compare as the STRING
+    """version:"1.10" must compare as the STRING
     '1.10' — unquoted numeric-looking terms coerce (1.10 == 1.1 as
     doubles), quoting is the escape hatch."""
     df = spark.createDataFrame(
@@ -397,12 +396,12 @@ def test_quoted_value_pins_string_comparison(spark):
     assert bare == {"1.1", "1.10", "1.100"}
 
 
-# ------------------------------------------------- round-13 review fixes
+# ------------------------------- token positions, quoting, NULLs, coercion
 
 
 def test_token_pos_points_at_token_not_whitespace():
-    """Round-13 review: Token.pos recorded the match start BEFORE the
-    whitespace prefix, so error positions pointed at the blank."""
+    """Token.pos records the token's start, not the start of the
+    whitespace before it, so error positions point at the token."""
     toks = tokenize("a )")
     assert [(t.text, t.pos) for t in toks] == [("a", 0), (")", 2)]
     with pytest.raises(QuerySyntaxError, match="at 2"):
@@ -410,9 +409,9 @@ def test_token_pos_points_at_token_not_whitespace():
 
 
 def test_quoted_range_bounds_pin_strings(spark):
-    """Round-13 review: quoted range bounds kept their quote chars and
-    compared against the literal '\"'. They must pin exact string
-    bounds (FieldValueQuery.quoted's contract extended to ranges)."""
+    """Quoted range bounds must not keep their quote chars and compare
+    against the literal '\"'. They pin exact string bounds
+    (FieldValueQuery.quoted's contract extended to ranges)."""
     q = QueryParser.parse('d:["2020-01-03" TO "2020-01-07"]')
     assert q == FieldRangeQuery(
         "d", "2020-01-03", "2020-01-07", lo_quoted=True, hi_quoted=True
@@ -432,9 +431,9 @@ def test_range_bound_must_be_word_or_quoted():
 
 
 def test_not_matches_null_fields(spark):
-    """Round-13 review: the reference compiles NOT to Mongo $not,
-    which MATCHES rows where the field is missing/null; SQL's
-    three-valued ~NULL silently dropped them."""
+    """The reference compiles NOT to Mongo $not, which MATCHES rows
+    where the field is missing/null; SQL's three-valued ~NULL would
+    silently drop them."""
     df = spark.createDataFrame(
         [("en",), ("de",), (None,)], "lang string"
     )
@@ -448,7 +447,7 @@ def test_not_matches_null_fields(spark):
 
 
 def test_fully_unbounded_range_means_field_exists(spark):
-    """Round-13 review: field:[* TO *] is Lucene's 'has a value'
+    """field:[* TO *] is Lucene's 'has a value'
     idiom — it must exclude NULL rows, not compile to lit(True)."""
     df = spark.createDataFrame(
         [(1.5,), (None,), (9.0,)], "depth double"
@@ -458,7 +457,7 @@ def test_fully_unbounded_range_means_field_exists(spark):
 
 
 def test_auto_coercion_is_strictly_numeric(spark):
-    """Round-13 review: Python int()/float() accept '1_000', 'nan',
+    """Python int()/float() accept '1_000', 'nan',
     'inf', 'Infinity' — those spellings must stay STRING literals."""
     df = spark.createDataFrame(
         [("1_000",), ("1000",), ("nan",), ("inf",)], "station string"

@@ -1,7 +1,7 @@
 """Gate-shape self-check: simulate the driver canonicalizer's limits.
 
-Round 1 lost certification credit to two representational (not
-logical) failures:
+Two representational (not logical) failures cost certification
+credit in the driver's first sweep:
 
 - op96/op107 returned array-typed columns → the driver's pandas-based
   canonicalizer crashed with `unhashable type: 'list'` (recorded in
@@ -39,10 +39,10 @@ ALL_OPS = sorted(OPS)
 
 
 def test_row_is_green_predicate():
-    """Sweep-order regression test (round-3 verdict item 1): a row that
-    ERRORED must not count as certified — else a fixed op sorts behind
-    every never-swept op and, under the ~50-entry budget, is never
-    re-checked (op96/op107 sat on stale r1 crash rows for two rounds)."""
+    """Sweep order: a row that ERRORED must not count as certified —
+    else a fixed op sorts behind every never-swept op and, under the
+    ~50-entry budget, is never re-checked and sits on a stale crash
+    row."""
     from ocdb_server_spark.evidence import _row_is_green
 
     green_sql = {
@@ -66,11 +66,11 @@ def test_row_is_green_predicate():
 
 
 def test_sweep_order_fronts_errored_ops(tmp_path):
-    """Sweep-order logic pinned against SYNTHETIC CORRECTNESS fixtures
-    (round-4 verdict item 1: the old version read the repo's LIVE files
-    and self-destructed the moment its stale ops got certified).
+    """Sweep-order logic pinned against SYNTHETIC CORRECTNESS fixtures,
+    not the repo's LIVE files: a test over live files stops testing
+    anything the moment their stale ops get certified.
 
-    Scenario mirrors the round-1-3 history: op_crash's only row is a
+    Scenario: op_crash's only row is a
     canonicalizer crash, op_flip passed early then errored later,
     op_virgin was never swept; op_green and op_rows are certified.
     All three non-green ops must sort before every certified op, and a
@@ -479,9 +479,9 @@ def test_moving_a_definition_verbatim_keeps_src_fp(tmp_path):
 
 
 def test_backup_correctness_files_are_skipped(tmp_path):
-    """Round-13 review: CORRECTNESS_r1_v2.json used to concatenate ALL
-    digits ('1' + '2' → round 12) and override genuine round-12 rows.
-    Only fully-numeric round tails are driver records — anything else
+    """CORRECTNESS_r1_v2.json must not parse as round 12 by
+    concatenating ALL digits ('1' + '2') and override genuine round-12
+    rows. Only fully-numeric round tails are driver records — anything else
     is a backup/rename and must not fold as evidence."""
     import json
 
@@ -622,28 +622,17 @@ def test_modules_are_named_by_family_not_round():
     """Tests and operators live in modules named for the family they
     cover, so a change to a family finds its tests in one place. A
     module named for the round that added it (`_r<N>`, `pipeline_ext`,
-    `northstar`) scatters a family across the history of the repo.
-
-    The three oldest round-named test modules have not moved yet
-    (ROADMAP direction 5); the guard admits only those, and the set
-    only shrinks."""
+    `northstar`) scatters a family across the history of the repo."""
     import os
     import re
 
     from ocdb_server_spark.evidence import ROOT
 
-    not_yet_moved = {
-        "tests/test_pipeline_ext.py",
-        "tests/test_pipeline_r4.py",
-        "tests/test_pipeline_r4b.py",
-    }
     by_round = re.compile(r"_r\d+[a-z]?\.py$|pipeline_ext|northstar")
-    named_by_round = {
+    named_by_round = [
         f"{d}/{name}"
         for d in ("tests", "ocdb_server_spark/operators")
-        for name in os.listdir(os.path.join(ROOT, d))
+        for name in sorted(os.listdir(os.path.join(ROOT, d)))
         if by_round.search(name)
-    }
-    assert named_by_round <= not_yet_moved, sorted(
-        named_by_round - not_yet_moved
-    )
+    ]
+    assert not named_by_round, named_by_round

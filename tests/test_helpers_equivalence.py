@@ -1,4 +1,4 @@
-"""Guards for the dual-path helpers introduced in round 4.
+"""Guards for the dual-path helpers.
 
 The aggregation/vector helpers accept either a column NAME (compiled
 as one JVM-parsed F.expr string — the fast plan-build path) or a
@@ -76,7 +76,7 @@ def test_isum_equals_dsum_on_fixed_point(spark, cents):
 
 
 # ---------------------------------------------------------------------------
-# Cross-engine stability of the round-4b float-quantization discipline:
+# Cross-engine stability of the float-quantization discipline:
 # floor(x * scale + 0.5) -> BIGINT must be bit-identical in Spark SQL
 # (D-suffixed literals) and DuckDB for any finite double. This is the
 # property op162/op164/op165/op169/op171/op175 rely on instead of
@@ -235,9 +235,9 @@ def test_find_datasets_persists_nothing(spark, sf_dir):
 
 
 def test_events_read_respects_external_session_timezone(spark, sf_dir):
-    """Round-13 review: the events read used to flip the session-wide
-    timezone to UTC even on an EXTERNAL session that deliberately chose
-    its own — shifting every later timestamp in that session's own
+    """The events read must not flip the session-wide timezone to UTC
+    on an EXTERNAL session that deliberately chose its own — that
+    would shift every later timestamp in that session's own
     queries. Only sessions whose timezone stance is ours (get_spark or
     sniffed-bare) get the pin."""
     from ocdb_server_spark.io import load_table
@@ -251,7 +251,7 @@ def test_events_read_respects_external_session_timezone(spark, sf_dir):
         _warnings.simplefilter("always")
         load_table(ext, sf_dir, "events").limit(1).collect()
     assert ext.conf.get("spark.sql.session.timeZone") == "America/New_York"
-    # the skipped pin must be LOUD (round-14 ADVICE), and once only
+    # the skipped pin must be LOUD, and once only
     assert any("timeZone" in str(w.message) for w in caught), (
         "no warning for a skipped UTC pin on an explicit non-UTC session"
     )
@@ -268,10 +268,10 @@ def test_events_read_respects_external_session_timezone(spark, sf_dir):
     load_table(bare, sf_dir, "events").limit(1).collect()
     assert bare.conf.get("spark.sql.session.timeZone") == "UTC"
 
-    # Round-14 ADVICE's exact hole: an external session that configured
-    # shuffle (skips bare tuning) but left the timezone UNSET — the
-    # stance is nobody's, so the pin must apply (it used to be lost
-    # because the _BARE membership sniff stood in for the tz sniff).
+    # An external session that configured shuffle (skips bare tuning)
+    # but left the timezone UNSET — the stance is nobody's, so the pin
+    # must apply (the _BARE membership sniff must not stand in for the
+    # tz sniff).
     unset = spark.newSession()
     unset.conf.set("spark.sql.shuffle.partitions", "7")  # configured ≠ bare
     unset.conf.unset("spark.sql.session.timeZone")       # JVM default
@@ -279,10 +279,9 @@ def test_events_read_respects_external_session_timezone(spark, sf_dir):
     load_table(unset, sf_dir, "events").limit(1).collect()
     assert unset.conf.get("spark.sql.session.timeZone") == "UTC"
 
-    # Round-15 ADVICE: an explicit UTC-EQUIVALENT alias (Etc/UTC, GMT)
-    # causes no oracle divergence — the JVM-default branch whitelists
-    # exactly those aliases, so the explicit branch must stay quiet on
-    # them too (it used to fire the divergence warning).
+    # An explicit UTC-EQUIVALENT alias (Etc/UTC, GMT) causes no oracle
+    # divergence — the JVM-default branch whitelists exactly those
+    # aliases, so the explicit branch must stay quiet on them too.
     alias = spark.newSession()
     alias.conf.set("spark.sql.shuffle.partitions", "7")  # configured ≠ bare
     alias.conf.set("spark.sql.session.timeZone", "Etc/UTC")
@@ -297,9 +296,9 @@ def test_events_read_respects_external_session_timezone(spark, sf_dir):
 
 
 def test_upsert_movable_full_rewrite_under_dynamic_session(spark, tmp_path):
-    """Round-13 review: the movable-partitions branch relied on the
-    session's partitionOverwriteMode being static; a session configured
-    dynamic silently kept the vacated partition's stale copy."""
+    """The movable-partitions branch must not rely on the session's
+    partitionOverwriteMode being static: a session configured dynamic
+    must not keep the vacated partition's stale copy."""
     from ocdb_server_spark.sinks import upsert_partitioned
 
     table = str(tmp_path / "movable_dyn")

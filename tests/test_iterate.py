@@ -1,5 +1,5 @@
-"""functions/iterate.py — the general unbounded-recursion surface
-(round-10 verdict "what's missing" item 2). Pins: default any-diff
+"""functions/iterate.py — the general unbounded-recursion surface.
+Pins: default any-diff
 probe convergence, telemetry shape, loud exhaustion, and that
 connected_components through the helper still produces the exact
 min-label fixpoint (with telemetry exposed)."""
@@ -129,10 +129,10 @@ def test_reliable_without_checkpoint_is_a_contract_error(spark):
 
 
 def test_reliable_mode_gcs_superseded_checkpoints(spark, tmp_path):
-    """Round-11 ADVICE: reliable=True used to leave every iteration's
-    checkpoint on shared storage for the app's lifetime (Spark only
-    deletes them on context GC with cleanCheckpoints=true, default
-    false) — state-size × iterations growth at exactly the
+    """reliable=True must not leave every iteration's checkpoint on
+    shared storage for the app's lifetime (Spark only deletes them on
+    context GC with cleanCheckpoints=true, default false) — that is
+    state-size × iterations growth at exactly the
     1000-executor scale the mode exists for. Pins: after a multi-
     iteration reliable fixpoint, the checkpoint dir holds only the
     LIVE generation (+ the caller's loop-invariant checkpoint), and
@@ -201,9 +201,9 @@ def test_gc_failed_listing_attributes_nothing(spark, tmp_path):
 
 
 def test_shrinking_step_iterates_to_true_fixpoint(spark):
-    """Round-12 review: new.exceptAll(old) alone is one-directional —
-    a step that only REMOVES rows left it empty and the loop returned
-    a non-fixpoint after one iteration. The default probe must treat
+    """new.exceptAll(old) alone is one-directional — a step that only
+    REMOVES rows leaves it empty, and the loop would return a
+    non-fixpoint after one iteration. The default probe must treat
     multiset INEQUALITY in either direction as not-converged."""
     from pyspark.sql import functions as F
 

@@ -60,9 +60,9 @@ def test_pivot_single_measured_exchange(spark, sf_dir):
 
 
 def test_reused_exchange_not_double_counted(spark):
-    """Round-12 review: _walk used to follow ReusedExchange into the
-    original's subtree, doubling exchanges/shuffle bytes/scan rows in
-    a tool whose purpose is the plan's arithmetic. A self-join that
+    """_walk must not follow ReusedExchange into the original's
+    subtree: that would double exchanges/shuffle bytes/scan rows in a
+    tool whose purpose is the plan's arithmetic. A self-join that
     reuses one shuffle must profile ONE exchange's movement."""
     from pyspark.sql import functions as F
 

@@ -7,8 +7,8 @@ local stand-in for "how many executors scanned it") and (b) the
 shuffle-partition count (3 vs 8 — the stand-in for cluster width).
 An op that flunks this is silently order-dependent — correct-looking
 at sf0.001 and wrong on a 1000-executor cluster, the exact bug class
-the round-4b float discipline (exact int64 sums, unique window
-tiebreaks) exists to prevent.
+the float discipline (exact int64 sums, unique window tiebreaks)
+exists to prevent.
 
 Representative sample across shapes: hash-dedup (op154), windowed
 budget pack (op157), PSI drift grid (op162), entropy two-level agg
@@ -38,14 +38,13 @@ INVARIANT_OPS = [
     "op174_weighted_sample",
     "op175_pmi_collocations",
     "op176_train_val_split",
-    # round-6 flagships — the argmax/recurrence determinism claims:
+    # the argmax/recurrence determinism claims:
     "op215_cms_pointquery",   # portable-hash sketch counters
     "op216_bpe_train",        # total-order argmax per merge round
     "op224_feature_hashing",  # signed-hash pooling
-    # round-9 graduations — exact-Jaccard edges + iterative min-label
-    # CC must not depend on how the documents table is laid out
-    # (the window df-cap, the pair join, and the label fixpoint are
-    # all keyed aggregations):
+    # exact-Jaccard edges + iterative min-label CC must not depend on
+    # how the documents table is laid out (the window df-cap, the pair
+    # join, and the label fixpoint are all keyed aggregations):
     "op96_dedup_components",
     "op221_neardup_canonicalize",
 ]
@@ -111,7 +110,7 @@ FULL_TABLE_OPS = [
     "op163_equidepth_histogram",
     "op164_time_weighted_avg",
     "op171_rollup_merge",
-    # round-6: integer recurrences and mergeable partials must not
+    # integer recurrences and mergeable partials must not
     # care how the scan was split or how wide the shuffle is
     "op211_gram_matrix",
     "op212_kmeans_lloyd",
@@ -122,29 +121,29 @@ FULL_TABLE_OPS = [
     # the events scan was split or how wide the shuffle runs
     "op235_holt_winters_seasonal",
     "op247_rolling_slope",
-    # round-7: the damped recurrence and the OCF round-trip must be
+    # the damped recurrence and the OCF round-trip must be
     # independent of scan splits and shuffle width (op252 re-shards
     # its export by partition count — the aggregate must not care)
     "op252_avro_roundtrip",
     "op253_holt_damped",
     "op254_holt_winters_multiplicative",
-    # round-8: the damped multiplicative composition inherits both
+    # the damped multiplicative composition inherits both
     # parents' invariance obligations
     "op257_holt_winters_damped_multiplicative",
-    # round-8 late: the Croston state loop must not care how the
+    # the Croston state loop must not care how the
     # orders scan was split, and the BGZF export re-blocks by writer
     # batch — the re-read aggregate must not care about scan layout
     # or shuffle width either
     "op259_croston_sba",
     "op260_bgzf_splittable_gzip",
-    # round-10: the seekable-zstd export re-frames by writer batch —
+    # the seekable-zstd export re-frames by writer batch —
     # the re-read aggregate must not care about scan layout or
     # shuffle width; the ADI/CV² classifier is two keyed aggregations
     # whose integer-exact thresholds must never flip with either
     "op261_zstd_seekable_ingest",
     "op262_demand_classification",
-    # round-12: RRF fuses integer ranks from two totally-ordered legs
-    # (quantized BM25 scores, round-6 sims — both tie-broken by id),
+    # RRF fuses integer ranks from two totally-ordered legs
+    # (quantized BM25 scores, dense-leg sims — both tie-broken by id),
     # and the CDC merge is a keyed window + keyed join: neither may
     # care how any input was split or how wide the shuffle runs
     "op263_rrf_hybrid_topk",

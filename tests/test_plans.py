@@ -115,7 +115,7 @@ def test_knn_is_single_pass_topk(spark, sf_dir):
 def test_tfidf_join_never_broadcasts_vocab(spark, sf_dir):
     """op120: the tf⋈df join key table is VOCAB-sized (10⁷-10⁸ grams on
     a web corpus) — it must plan as a shuffle join on `word`, never a
-    broadcast (round-4 verdict item 3). The only broadcast allowed is
+    broadcast. The only broadcast allowed is
     the 1-row corpus-count frame."""
     plan = _plan(OPS["op120_tfidf_terms"].fn(spark, sf_dir))
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
@@ -450,11 +450,10 @@ def test_boilerplate_shuffle_carries_digests(spark, sf_dir):
 
 
 def test_ivf_assignment_is_map_side(spark, sf_dir):
-    """op95 (round-4 redesign): nearest-list assignment must fold over
+    """op95: nearest-list assignment must fold over
     the broadcast codebook with zero shuffle exchanges and zero window
     operators — the corpus-side plan is scan → broadcast joins →
-    TakeOrderedAndProject. (The round-3 formulation window-ranked an
-    n×K crossJoin; this asserts it never comes back.)"""
+    TakeOrderedAndProject, never a window-ranked n×K crossJoin."""
     plan = _plan(OPS["op95_sim_ivf_knn"].fn(spark, sf_dir))
     assert "Exchange hashpartitioning" not in plan, plan
     assert "Window" not in plan, plan
@@ -813,11 +812,12 @@ def test_small_graph_runs_in_one_arrow_task(spark, sf_dir, name):
 
 
 def test_bfs_no_per_hop_anti_join(spark, sf_dir):
-    """op213 (round-19 rewrite): the loop implements the oracle's own
+    """op213: the loop implements the oracle's own
     walk/min-dist algebra — per hop ONLY frontier⋈edges + distinct;
     the per-hop LeftAnti probe against the growing visited set (and
-    its broadcast build) is gone, replaced by one final MIN(dist)
-    aggregation. 2.55 s → 1.28 s at sf0.1 (interleaved best-of-5)."""
+    its broadcast build) must not appear; one final MIN(dist)
+    aggregation replaces it (2.55 s → 1.28 s at sf0.1, interleaved
+    best-of-5)."""
     plan = _plan(OPS["op213_bfs_reachability"].fn(spark, sf_dir))
     assert "LeftAnti" not in plan, "per-hop anti-join is back"
     assert "CartesianProduct" not in plan
@@ -831,7 +831,7 @@ def test_approx_distinct_no_per_key_sketch(spark, sf_dir):
     """op20: both aggregates run over the distinct key set — the plan
     must NOT contain a partial approx sketch keyed per l_partkey (the
     Catalyst distinct-rewrite shape that built one ~1536-slot HLL
-    buffer per key, 6.2 s at sf0.1; round-18 rewrite)."""
+    buffer per key, 6.2 s at sf0.1)."""
     plan = _plan(OPS["op20_agg_approx_count_distinct"].fn(spark, sf_dir))
     import re as _re
 
@@ -854,8 +854,8 @@ def test_skyline_single_merge_exchange(spark, sf_dir):
 def test_cms_counters_partial_agged(spark, sf_dir):
     """op215: the probed sketch build must show a two-phase
     HashAggregate (partial_count below the exchange — the map-side
-    combine IS the sketch merge) and, since the round-8 plan-time
-    probe fold, NO join at all: one token scan feeds the conditional
+    combine IS the sketch merge) and, with the probes folded at plan
+    time, NO join at all: one token scan feeds the conditional
     counts and a stack() unpivots the single-row result."""
     plan = _plan(OPS["op215_cms_pointquery"].fn(spark, sf_dir))
     assert "partial_count" in plan or "partial count" in plan, plan[:1500]

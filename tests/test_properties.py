@@ -159,7 +159,7 @@ def test_cosine_properties_batched(spark):
         assert r["aa"] == pytest.approx(1.0, abs=1e-12)      # self-similarity
 
 
-# ------------------------------------------- CDC merge (round 13)
+# ------------------------------------------------------------ CDC merge
 
 
 def test_cdc_incremental_random_feed_batched(spark):

@@ -1,8 +1,9 @@
 """Behavioral tests for the relational extensions
 (operators/relational_ext.py) — properties the DuckDB oracle can't
 see: cross-formulation equivalence (argmax vs window, decorrelated
-subquery vs manual join, keyset vs offset pages), reshaping
-round-trips (unpivot∘pivot = identity on the long form), plan shapes (bloom-filter injection, the binned range join),
+subquery vs manual join, salted vs plain join, keyset vs offset
+pages), reshaping round-trips (unpivot∘pivot = identity on the long
+form), plan shapes (bloom-filter injection, the binned range join),
 and pure-Python references (skyline, interval coverage, last-touch
 attribution).
 """
@@ -93,6 +94,78 @@ def test_argmax_equals_window_formulation(spark, sf_dir):
     manual = top.join(bot, "c_mktsegment")
     assert got.exceptAll(manual).count() == 0
     assert manual.exceptAll(got).count() == 0
+
+
+# ---------------------------------------------------------------- op167
+
+
+def test_salted_join_equals_plain_join(spark, sf_dir):
+    """Salting must change the distribution, never the answer."""
+    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    plain = {
+        r["c_mktsegment"]: (r["n"], r["s"])
+        for r in o.join(c, o.o_custkey == c.c_custkey)
+        .groupBy("c_mktsegment")
+        .agg(
+            F.count("*").alias("n"),
+            (F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")) / 100.0).alias("s"),
+        )
+        .collect()
+    }
+    salted = {
+        r["mktsegment"]: (r["n_orders"], r["total_price"])
+        for r in OPS["op167_salted_join"].fn(spark, sf_dir).collect()
+    }
+    assert salted == plain
+
+
+# ---------------------------------------------------------------- op171
+
+
+def test_rollup_merge_matches_direct_aggregation(spark, sf_dir):
+    """Merging daily partials must equal aggregating raw events
+    directly (algebraic-mergeability proof)."""
+    from ocdb_server_spark.io import load_table
+
+    e = load_table(spark, sf_dir, "events")
+    direct = {
+        r["user_id"]: r
+        for r in e.groupBy("user_id")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.min("value").alias("min_value"),
+            F.max("value").alias("max_value"),
+        )
+        .collect()
+    }
+    merged = {r["user_id"]: r for r in OPS["op171_rollup_merge"].fn(spark, sf_dir).collect()}
+    assert set(merged) == set(direct)
+    for u, m in merged.items():
+        d = direct[u]
+        assert m["n_events"] == d["n_events"]
+        assert m["min_value"] == d["min_value"]
+        assert m["max_value"] == d["max_value"]
+        assert m["n_days"] <= m["n_events"]
+
+
+# ---------------------------------------------------------------- op173
+
+
+def test_ri_audit_clean_on_synthetic_and_catches_planted_orphan(spark, sf_dir):
+    """The synthetic star schema is referentially intact (all zeros);
+    a planted orphan lineitem must be counted."""
+    rows = {r["violation"]: r["n_rows"] for r in OPS["op173_ri_audit"].fn(spark, sf_dir).collect()}
+    assert rows == {
+        "lineitem_without_order": 0,
+        "order_without_customer": 0,
+        "lineitem_without_part": 0,
+    }
+    # planted orphan: an order key that does not exist
+    li = spark.createDataFrame([(999999999, 1)], "l_orderkey long, l_partkey long")
+    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    n = li.join(o, li.l_orderkey == o.o_orderkey, "left_anti").count()
+    assert n == 1
 
 
 def test_bloom_filter_is_injected_and_confs_restored(spark, sf_dir):

@@ -1,5 +1,5 @@
 """Golden snapshot for ROWS-only operators (the registry entries with
-no DuckDB oracle — 17 as of round 4). Records row count, column names, and an
+no DuckDB oracle — 17 of them). Records row count, column names, and an
 order-insensitive value hash at sf0.001 so a future refactor that
 silently changes their semantics fails here instead of shipping.
 
@@ -11,20 +11,19 @@ minhash/simhash outputs are deterministic given the fixed testdata —
 salts and planes are hardcoded, not RNG).
 
 REBASELINE LOG — every intended hash change must be recorded here in
-the same commit that regenerates the snapshot (round-6 ADVICE: a
-hash that moves in an unrelated commit is indistinguishable from
-silent drift):
+the same commit that regenerates the snapshot (a hash that moves in
+an unrelated commit is indistinguishable from silent drift):
   - op95_sim_ivf_knn 24a9648e→d0755e01: commit 7716f84 switched the
     IVF codebook size K from fixed 45 to footer-derived ⌈√n⌉ (=23 at
     sf0.001), changing the probe set and hence the approximate
     top-10. Deterministic before and after (all ties key-broken);
     the regeneration was belatedly absorbed into 2d3c180.
   - round 8: op03/op05/op106 REMOVED from the snapshot (no hash
-    change — semantics untouched): they graduated to full SQL oracles
-    (round-7 verdict item 4), so the strict hash gate now covers them
+    change — semantics untouched): they graduated to full SQL
+    oracles, so the strict hash gate now covers them
     and the weaker snapshot check no longer applies.
   - round 9: op96/op221 REMOVED from the snapshot — graduated to SQL
-    oracles (round-8 verdict item 5) WITH an intended semantics
+    oracles WITH an intended semantics
     change: their edge relation moved from op79's xxhash LSH bands to
     the exact 3-gram-Jaccard ≥ 0.5 relation (deterministic, ANSI-
     expressible), so DuckDB WITH RECURSIVE hash-certifies the CC
@@ -42,11 +41,11 @@ silent drift):
     query path now plants 4 derived near-dups (ids -(k)-1 for the 4
     lowest vec_ids; ×2 scaled copies for even k, +0.02 first-component
     perturbations for odd k) so the driver's ROWS row certifies
-    actual recovery instead of clean execution on an empty result
-    (round-16 verdict item 6). Deterministic: fixed hyperplane seed,
+    actual recovery instead of clean execution on an empty result.
+    Deterministic: fixed hyperplane seed,
     fixture derived from the corpus itself. Kernel untouched.
   - round 17: op90_embedding_neardup_lsh 1fd0d36e→2fb86f7f (n_rows
-    stays 4): r16 ADVICE low — the odd-k +0.02 additive perturbation's
+    stays 4): the odd-k +0.02 additive perturbation's
     recovery was empirical (a hyperplane sign could flip at an
     untested SF); all 4 plants are now power-of-two scaled copies
     (×2 even k, ×0.5 odd k), making co-bucketing exact by IEEE sign
@@ -59,11 +58,11 @@ silent drift):
     the driver surface — `__spark_entry__.queries()` — instead of the
     raw registry, because that is the surface the driver's ROWS rows
     certify and the two diverged this round for exactly one key:
-    op90's plant default inverted to faithful-off (r17 ADVICE low)
-    and the recall fixture moved into the gate override
-    (op90_gate_planted). Through queries() the op90 fingerprint is
-    byte-identical to round 17 (same 4 planted pairs); every other
-    entry is the same registry function either way."""
+    op90's plant default inverted to faithful-off and the recall
+    fixture moved into the gate override (op90_gate_planted). Through
+    queries() the op90 fingerprint is byte-identical to round 17
+    (same 4 planted pairs); every other entry is the same registry
+    function either way."""
 
 from __future__ import annotations
 
@@ -85,7 +84,7 @@ SF_DIR = "/root/testdata/sf0.001"
 # everything rows-only is snapshotted.
 ROWS_OPS = sorted(name for name, op in load_all().items() if op.oracle is None)
 
-# The DRIVER surface (round 18): queries() overrides op90 with the
+# The DRIVER surface: queries() overrides op90 with the
 # explicitly-planted gate wrapper; the snapshot certifies what the
 # driver's ROWS rows actually run.
 QUERIES = entry.queries()

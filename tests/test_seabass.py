@@ -114,7 +114,7 @@ def test_long_format_heterogeneous_fields_union(long_frame):
 
 
 def test_find_datasets_pgroup_over_long_records(long_frame):
-    """The round-5 verdict's integration demand: search.find_datasets'
+    """End to end: search.find_datasets'
     product-group resolution (pgroup_map expansion -> IN-list
     predicate) runs against the LONG record table — group binding is
     simply the `field` column, exactly the reference's
@@ -348,9 +348,9 @@ def test_corpus_reader_matches_per_file_union_with_fewer_scans(
 def test_duplicate_fields_rejected_catalog_time(spark, tmp_path):
     """A repeated /fields= name must fail loudly at catalog time with
     the file and offender named — by-name selection downstream would
-    otherwise die mid-job with Spark's AMBIGUOUS_REFERENCE (review
-    finding; duplicate names are a structural misconfiguration, same
-    class as a misaligned fields list)."""
+    otherwise die mid-job with Spark's AMBIGUOUS_REFERENCE (duplicate
+    names are a structural misconfiguration, same class as a
+    misaligned fields list)."""
     p = tmp_path / "dup.sb"
     p.write_text(
         "/begin_header\n/fields=depth,chl,depth\n/delimiter=comma\n"
@@ -362,8 +362,8 @@ def test_duplicate_fields_rejected_catalog_time(spark, tmp_path):
 
 def test_corpus_duplicate_stem_rejected(spark, tmp_path):
     """Two corpus files with the same stem in DIFFERENT directories
-    must not silently pool into one dataset_id (review finding) —
-    loud catalog-time error naming both paths."""
+    must not silently pool into one dataset_id — loud catalog-time
+    error naming both paths."""
     from ocdb_server_spark.sources.seabass import read_seabass_corpus
 
     (tmp_path / "a").mkdir()
@@ -380,7 +380,7 @@ def test_corpus_dataset_id_decodes_special_filenames(spark, tmp_path):
     """input_file_name() percent-encodes the URI ('my station.sb' →
     'my%20station.sb'); dataset_id must come back DECODED, and a
     literal '+' in the stem must survive (url_decode alone would
-    form-decode it to a space — review finding)."""
+    form-decode it to a space)."""
     from ocdb_server_spark.sources.seabass import read_seabass_corpus
 
     p1 = tmp_path / "my station.sb"
@@ -398,7 +398,7 @@ def test_corpus_dataset_id_decodes_special_filenames(spark, tmp_path):
 
 
 def test_ragged_body_row_maps_to_null(spark, tmp_path):
-    """Round-13 review: under Spark 4's default ANSI mode a plain
+    """Under Spark 4's default ANSI mode a plain
     element_at THROWS on a short row, killing the whole ingest — the
     module's taxonomy says one bad cell maps to NULL."""
     from ocdb_server_spark.sources.seabass import read_seabass_raw
@@ -413,8 +413,8 @@ def test_ragged_body_row_maps_to_null(spark, tmp_path):
 
 
 def test_unknown_delimiter_raises(spark, tmp_path):
-    """Round-13 review: an unsupported /delimiter= token used to fall
-    back to comma silently, masking the real misconfiguration."""
+    """An unsupported /delimiter= token must raise, not fall back to
+    comma silently and mask the real misconfiguration."""
     import pytest as _pytest
 
     from ocdb_server_spark.sources.seabass import read_seabass_raw
@@ -428,8 +428,8 @@ def test_unknown_delimiter_raises(spark, tmp_path):
 
 
 def test_corpus_duplicate_path_reads_once(spark, tmp_path):
-    """Round-13 review: the same path listed twice (glob + explicit
-    overlap) passed the stem guard and doubled every record."""
+    """The same path listed twice (glob + explicit overlap) passes the
+    stem guard; it must be read once, not double every record."""
     from ocdb_server_spark.sources.seabass import read_seabass_corpus
 
     p = tmp_path / "dup.sb"

@@ -334,7 +334,7 @@ def test_keyset_cursor_walk_equals_offset_walk(orders):
     """Cursor-paged traversal (after=last sort tuple) must visit
     exactly the rows offset paging visits, in the same total order —
     no dups, no gaps — while each page is a pushed filter + top-k
-    instead of a deep skip-scan (round-5 verdict item 6)."""
+    instead of a deep skip-scan."""
     cols = SearchColumns(
         order_key="o_orderkey", order_by=("o_orderdate", "o_orderkey")
     )
@@ -607,9 +607,9 @@ def test_multicolumn_keyset_walk_covers_filtered_set(orders):
         ("o_totalprice", "o_orderkey"),
     ]
     # reference-set page size = the whole table, NOT a fixed cap: a
-    # hardcoded 10_000 silently truncated `full` when the suite runs
-    # against a larger SPARK_GRAFT_TEST_SF_DIR (review finding), which
-    # would fail the walk==full assert on correct cursor code.
+    # hardcoded 10_000 would silently truncate `full` when the suite
+    # runs against a larger SPARK_GRAFT_TEST_SF_DIR, which would fail
+    # the walk==full assert on correct cursor code.
     table_rows = orders.count()
     for trial in range(6):
         order_by = rng.choice(cols_pool)
@@ -647,9 +647,9 @@ def test_multicolumn_keyset_walk_covers_filtered_set(orders):
 
 
 def test_keyset_cursor_handles_null_sort_keys(spark):
-    """Round-12 review: a cursor tuple containing None used to make
-    the whole keyset predicate NULL (every later page empty), and
-    rows with NULL sort keys were unreachable by any cursor page.
+    """A cursor tuple containing None must not make the whole keyset
+    predicate NULL (every later page empty), and rows with NULL sort
+    keys must be reachable by a cursor page.
     NULLs sort FIRST ascending, so the walk must start inside the
     null group and leave it exactly once — cursor-walk == offset-walk
     over a null-bearing column."""

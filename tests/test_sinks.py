@@ -278,8 +278,8 @@ def test_scratch_dir_isolation_and_reaping(tmp_path, monkeypatch):
     'foreign' name like <prefix>v2_1234 may be a LIVE sibling
     session's dir for a nesting tag ('sf0_001' vs 'sf0_001_v2'), so
     reaping it would recreate the cross-session race this module
-    exists to prevent (round-8 review finding; the previous contract
-    treated non-numeric suffixes as dead litter)."""
+    exists to prevent (so non-numeric suffixes are never treated as
+    dead litter)."""
     import os
 
     from ocdb_server_spark import scratch
@@ -313,7 +313,7 @@ def test_scratch_dir_isolation_and_reaping(tmp_path, monkeypatch):
 
 
 def test_scratch_dir_age_gates_recycled_pid_orphans(tmp_path, monkeypatch):
-    """PID-recycling backstop (round-8 ADVICE): os.kill(pid, 0) says
+    """PID-recycling backstop: os.kill(pid, 0) says
     'alive' for a crashed session's PID that an unrelated process has
     since recycled, so liveness alone would keep that orphaned table
     copy forever. A same-prefix dir owned by a LIVE pid must still be
@@ -335,7 +335,7 @@ def test_scratch_dir_age_gates_recycled_pid_orphans(tmp_path, monkeypatch):
     assert fresh_live.exists(), "fresh live-PID dir must not be reaped"
 
     old = time.time() - scratch._REAP_AGE_S - 60
-    # round-9 ADVICE: the gate is the NEWEST mtime over the root AND
+    # the gate is the NEWEST mtime over the root AND
     # its direct children (ops write into subdirs without touching the
     # root's own mtime) — an old root with a fresh child is a LIVE
     # long-running session's working set, not an orphan
@@ -354,7 +354,7 @@ def test_scratch_dir_age_gates_recycled_pid_orphans(tmp_path, monkeypatch):
 def test_upsert_equal_order_prefers_update(spark, tmp_path):
     """Equal order_col: the UPDATE must win deterministically — an
     idempotent replay or same-timestamp correction must never lose to
-    the stale row on partition evaluation order (round-12 review)."""
+    the stale row on partition evaluation order."""
     table = str(tmp_path / "tie")
     base = spark.createDataFrame(
         [(1, 5, "old", "a")], "id int, version int, val string, part string"
@@ -433,7 +433,7 @@ def test_upsert_failing_collect_does_not_leak_persist(spark, tmp_path):
     """The touched-partition collect itself can raise (missing
     partition_col → AnalysisException); the persisted `updates` frame
     must be unpersisted on that path too, not only after a successful
-    write (round-14 ADVICE — the persist sat outside the try/finally)."""
+    write (the persist sits inside the try/finally)."""
     import pytest as _pytest
 
     table = str(tmp_path / "leak")
@@ -458,7 +458,7 @@ def test_upsert_failing_collect_does_not_leak_persist(spark, tmp_path):
 def test_upsert_reserved_working_columns_raise(spark, tmp_path):
     """An input already carrying _src/_rn would mint duplicate columns
     mid-merge and fail later with AMBIGUOUS_REFERENCE — the boundary
-    must reject it loudly instead (round-12 ADVICE, mirroring
+    must reject it loudly instead (mirroring
     skew.salted_topk_per_key's guard)."""
     import pytest as _pytest
 

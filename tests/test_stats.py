@@ -1,9 +1,9 @@
 """Behavioral tests for the statistics and sketch operators
 (operators/stats.py): properties the DuckDB oracle's hash cannot
 localize, checked against pure-Python or numpy references and planted
-fixtures — sketch error bounds (CMS, theta, Misra-Gries, bottom-k),
-test statistics (KS, chi², AUC, Wilson) and the partition invariants
-of the splitting and sampling ops."""
+fixtures — sketch error bounds (HLL, CMS, theta, Misra-Gries, bottom-k),
+test statistics (PSI, KS, chi², AUC, Wilson) and the partition
+invariants of the splitting and sampling ops."""
 
 from __future__ import annotations
 
@@ -15,6 +15,188 @@ from ocdb_server_spark.operators import stats
 from ocdb_server_spark.registry import load_all
 
 OPS = load_all()
+
+
+def test_op98_shards_balanced_and_stable(spark, sf_dir):
+    """Shard assignment must be reproducible across calls, cover all
+    docs exactly once, and be roughly balanced (md5 is uniform)."""
+    a = OPS["op98_train_shard_assign"].fn(spark, sf_dir).collect()
+    b = OPS["op98_train_shard_assign"].fn(spark, sf_dir).collect()
+    assert sorted(map(tuple, a)) == sorted(map(tuple, b))  # deterministic
+    n = len(a)
+    by_shard: dict[int, list[int]] = {}
+    for r in a:
+        by_shard.setdefault(r["shard"], []).append(r["pos"])
+    assert sum(len(v) for v in by_shard.values()) == n
+    for shard, poss in by_shard.items():
+        assert sorted(poss) == list(range(1, len(poss) + 1))  # dense positions
+        assert len(poss) > n / 8 * 0.5  # no shard under half the fair share
+
+
+# ---------------------------------------------------------------- op162
+
+
+def test_psi_identical_distribution_is_near_zero(spark):
+    """A source with the same length distribution as the corpus scores
+    PSI ≈ 0; a source concentrated in one bin scores high."""
+    rows = []
+    doc = 0
+    # two sources with identical spread + one source all in bin 0
+    for src in ("same_a", "same_b"):
+        for length in (60, 160, 260, 360, 460, 560):
+            for _ in range(5):
+                rows.append((doc, "x", src, length))
+                doc += 1
+    for _ in range(30):
+        rows.append((doc, "x", "spiky", 10))
+        doc += 1
+    df = spark.createDataFrame(
+        [(r[0], r[1], "en", r[2], r[3]) for r in rows],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    import tempfile, os
+
+    with tempfile.TemporaryDirectory() as tmp:
+        df.write.parquet(os.path.join(tmp, "documents.parquet"))
+        out = {
+            r["source"]: r["psi"]
+            for r in OPS["op162_drift_psi"].fn(spark, tmp).collect()
+        }
+    # The corpus is 2/3 spread + 1/3 spiky, so even the spread sources
+    # drift from it — but the single-bin source must drift strictly
+    # more, the two identically-distributed sources must score
+    # identically, and PSI is non-negative by construction.
+    assert out["spiky"] > out["same_a"]
+    assert abs(out["same_a"] - out["same_b"]) < 1e-9  # symmetric by construction
+    assert all(v >= 0 for v in out.values())
+
+
+# ---------------------------------------------------------------- op163
+
+
+def test_equidepth_buckets_are_balanced_and_ordered(spark, sf_dir):
+    out = sorted(
+        OPS["op163_equidepth_histogram"].fn(spark, sf_dir).collect(),
+        key=lambda r: r["bucket"],
+    )
+    assert [r["bucket"] for r in out] == list(range(1, 17))
+    counts = [r["n_rows"] for r in out]
+    assert max(counts) - min(counts) <= 1  # equi-depth to within 1 row
+    # bucket ranges are non-overlapping and increasing
+    for a, b in zip(out, out[1:]):
+        assert a["hi"] <= b["lo"]
+
+
+# ---------------------------------------------------------------- op164
+
+
+def test_time_weighted_avg_planted(spark):
+    """value 10 held for 3s then 20 held for 1s -> TWA 12.5; the final
+    observation's value never enters (weight 0)."""
+    import tempfile, os
+
+    rows = [
+        (1, "2024-01-01 00:00:00", 100, "view", 10.0, "{}"),
+        (2, "2024-01-01 00:00:03", 100, "view", 20.0, "{}"),
+        (3, "2024-01-01 00:00:04", 100, "view", 999.0, "{}"),  # no weight
+    ]
+    df = spark.createDataFrame(
+        rows, "event_id long, ts string, user_id long, event_type string, value double, props string"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    with tempfile.TemporaryDirectory() as tmp:
+        df.write.parquet(os.path.join(tmp, "events.parquet"))
+        out = OPS["op164_time_weighted_avg"].fn(spark, tmp).collect()
+    assert len(out) == 1
+    r = out[0]
+    assert r["n_intervals"] == 2
+    assert r["covered_sec"] == 4
+    assert abs(r["twa_value"] - 12.5) < 1e-9
+
+
+# ---------------------------------------------------------------- op166
+
+
+def test_hll_estimates_within_5pct_of_exact(spark, sf_dir):
+    """op166 is ROWS-only by design — this is its accuracy evidence."""
+    est = {
+        (r["level"], r["key"]): r["approx_users"]
+        for r in OPS["op166_hll_sketch_rollup"].fn(spark, sf_dir).collect()
+    }
+    e = spark.read.parquet(f"{sf_dir}/events.parquet")
+    exact_all = e.select("user_id").distinct().count()
+    exact_typed = {
+        r["event_type"]: r["n"]
+        for r in e.groupBy("event_type")
+        .agg(F.countDistinct("user_id").alias("n"))
+        .collect()
+    }
+    assert abs(est[("all", "*")] - exact_all) <= max(1, 0.05 * exact_all)
+    for t, n in exact_typed.items():
+        assert abs(est[("event_type", t)] - n) <= max(1, 0.05 * n), t
+
+
+# ---------------------------------------------------------------- op170
+
+
+def test_burst_detect_planted(spark):
+    """3 events inside 6h trip the detector; spread-out events don't."""
+    import tempfile, os
+
+    rows = [
+        # user 1: 3 events in 10 minutes -> burst of 3
+        (1, "2024-01-01 00:00:00", 1, "view", 0.0, "{}"),
+        (2, "2024-01-01 00:05:00", 1, "view", 0.0, "{}"),
+        (3, "2024-01-01 00:10:00", 1, "view", 0.0, "{}"),
+        # user 2: 3 events 12h apart -> max burst 2 (6h trailing window)
+        (4, "2024-01-01 00:00:00", 2, "view", 0.0, "{}"),
+        (5, "2024-01-01 06:00:00", 2, "view", 0.0, "{}"),  # exactly 6h -> in frame
+        (6, "2024-01-02 00:00:00", 2, "view", 0.0, "{}"),
+    ]
+    df = spark.createDataFrame(
+        rows, "event_id long, ts string, user_id long, event_type string, value double, props string"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    with tempfile.TemporaryDirectory() as tmp:
+        df.write.parquet(os.path.join(tmp, "events.parquet"))
+        out = {r["user_id"]: r for r in OPS["op170_burst_detect"].fn(spark, tmp).collect()}
+    assert 1 in out and out[1]["max_burst"] == 3 and out[1]["n_burst_events"] == 1
+    assert 2 not in out  # max burst 2 < K=3
+
+
+# ---------------------------------------------------------------- op174
+
+
+def test_weighted_sample_biases_toward_heavy_docs(spark):
+    """A-ES with 10 heavy docs (w=10000) among 200 light ones (w=1):
+    the k=50 sample must contain ALL heavy docs (P(miss) ~ e^-10000/...
+    astronomically small), and be deterministic across runs."""
+    import tempfile, os
+
+    rows = [(i, "x", "en", "s", 10_000 if i < 10 else 1) for i in range(210)]
+    df = spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    )
+    with tempfile.TemporaryDirectory() as tmp:
+        df.write.parquet(os.path.join(tmp, "documents.parquet"))
+        s1 = {r["doc_id"] for r in OPS["op174_weighted_sample"].fn(spark, tmp).collect()}
+        s2 = {r["doc_id"] for r in OPS["op174_weighted_sample"].fn(spark, tmp).collect()}
+    assert s1 == s2  # deterministic
+    assert len(s1) == 50
+    assert set(range(10)) <= s1  # every heavy doc sampled
+
+
+# ---------------------------------------------------------------- op176
+
+
+def test_split_partitions_everything_near_98_1_1(spark, sf_dir):
+    out = {r["split"]: r for r in OPS["op176_train_val_split"].fn(spark, sf_dir).collect()}
+    total_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
+    assert sum(r["n_docs"] for r in out.values()) == total_docs
+    assert set(out) <= {"train", "val", "test"}
+    share = out["train"]["n_docs"] / total_docs
+    assert 0.90 <= share <= 1.0  # 98% nominal, loose at small sf
+    # stable across runs (pure function of doc_id)
+    again = {r["split"]: r["n_docs"] for r in OPS["op176_train_val_split"].fn(spark, sf_dir).collect()}
+    assert again == {k: v["n_docs"] for k, v in out.items()}
 
 
 def test_mg_sketch_superset_guarantee_on_zipf():

@@ -220,12 +220,12 @@ def test_stream_tumbling_matches_batch(spark, sf_dir):
 
 
 def test_stream_events_reads_directory_layout(spark, sf_dir, tmp_path):
-    """Round-17 regression: _stream_events used pathGlobFilter
-    ('events.parquet') unconditionally, which matches LEAF file names —
-    on the production/stress layout where events.parquet is a
-    DIRECTORY of part-files it matched nothing and every TWS op
-    silently streamed 0 rows (caught only by op234's no-batches
-    guard on the 30× dataset). The source must now read BOTH layouts
+    """_stream_events must not apply pathGlobFilter ('events.parquet')
+    unconditionally: it matches LEAF file names, so on the
+    production/stress layout where events.parquet is a DIRECTORY of
+    part-files it matches nothing and every TWS op silently streams 0
+    rows (only op234's no-batches guard would notice, on the 30×
+    dataset). The source must read BOTH layouts
     identically: same rows from the single-file driver layout and
     from a directory-of-part-files copy."""
     import os
@@ -262,13 +262,12 @@ def test_stream_events_reads_directory_layout(spark, sf_dir, tmp_path):
     )
     assert dir_emb.count() == n_emb
 
-    # Round-18 regression (round-17 ADVICE medium): the layout probe
-    # must go through the Hadoop FileSystem API, not os.path.isdir.
-    # A scheme-qualified sf_dir ("file:/..." here, standing in for
-    # hdfs:// / s3a://) is invisible to the local-path probe —
-    # os.path.isdir("file:/tmp/...") is False — so the pre-fix code
-    # took the pathGlobFilter branch on the DIRECTORY layout and
-    # silently streamed 0 rows. The Hadoop probe resolves the scheme
+    # The layout probe must go through the Hadoop FileSystem API, not
+    # os.path.isdir. A scheme-qualified sf_dir ("file:/..." here,
+    # standing in for hdfs:// / s3a://) is invisible to the local-path
+    # probe — os.path.isdir("file:/tmp/...") is False — so a local-path
+    # probe takes the pathGlobFilter branch on the DIRECTORY layout
+    # and silently streams 0 rows. The Hadoop probe resolves the scheme
     # and must return the full row set.
     scheme_sf = f"file:{dir_sf}"
     scheme_ev = jobs._run_to_memory(jobs._stream_events(spark, scheme_sf))

@@ -275,7 +275,7 @@ def test_randomized_rulesets_vs_pandas(spark):
 
 def test_dirty_corpus_submission_sweep(spark, tmp_path):
     """Submission-workflow sweep over a DIRTY corpus — the failure
-    taxonomy the round-8 SeaBASS hardening established, exercised end
+    taxonomy of the SeaBASS reader's hardening, exercised end
     to end: (a) a structurally broken file (misdeclared delimiter)
     REJECTS loudly at plan time and poisons nothing else; (b) files
     with cell-level junk ingest with NULLs and get FLAGGED by the
@@ -321,9 +321,9 @@ def test_dirty_corpus_submission_sweep(spark, tmp_path):
 
 
 def test_validate_empty_rule_list_yields_typed_empty_issues(spark, tmp_path):
-    """Round-13 review: zero rules used to build F.array() of VOID
-    element type — breaking the exists() field extraction and any
-    parquet write of the issues column."""
+    """Zero rules must not build F.array() of VOID element type — that
+    breaks the exists() field extraction and any parquet write of the
+    issues column."""
     from ocdb_server_spark.validation import OK, validate
 
     df = spark.createDataFrame([(1,), (2,)], "x int")
@@ -336,8 +336,8 @@ def test_validate_empty_rule_list_yields_typed_empty_issues(spark, tmp_path):
 
 
 def test_validate_refuses_to_clobber_output_names(spark):
-    """Round-13 review: an input already carrying issues/status (e.g.
-    a submission's business status) was silently overwritten."""
+    """An input already carrying issues/status (e.g. a submission's
+    business status) must raise, not be silently overwritten."""
     import pytest as _pytest
 
     from ocdb_server_spark.validation import validate
